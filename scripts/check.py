@@ -1,9 +1,14 @@
 #!/usr/bin/env python3
 """Local replica of the driver's correctness gate: run graft.Verify output
 against DuckDB oracles and compare row-sets. Usage:
-    python3 scripts/check.py <sfDir> <verifyOutDir> [queryName...]
+    python3 scripts/check.py <sfDir> <verifyOutDir> [queryName...] [--digests FILE]
+
+--digests FILE also writes one line per query with readable Spark output:
+the query name and a SHA-256 over its column names and normalized, sorted
+rows (order-independent). Diffing two such files shows whether a change
+kept every query's output.
 """
-import sys, json, glob, os, math
+import sys, json, glob, os, math, hashlib
 import duckdb
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
@@ -15,9 +20,22 @@ def norm(v):
         return repr(v)
     return repr(v)
 
+def digest(cols, rows):
+    h = hashlib.sha256(repr(cols).encode())
+    for r in rows:
+        h.update(b"\n" + repr(r).encode())
+    return h.hexdigest()
+
 def main():
-    sf_dir, out_dir = sys.argv[1], sys.argv[2]
-    only = set(sys.argv[3:])
+    args = sys.argv[1:]
+    digests_path = None
+    if "--digests" in args:
+        i = args.index("--digests")
+        digests_path = args[i + 1]
+        del args[i:i + 2]
+    sf_dir, out_dir = args[0], args[1]
+    only = set(args[2:])
+    digests = {}
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
@@ -34,11 +52,14 @@ def main():
             got = con.execute(f"SELECT * FROM read_parquet({pq!r})").fetchdf()
         except Exception as e:
             print(f"FAIL {name}: cannot read spark output: {e}"); n_fail += 1; continue
+        gcols = sorted(got.columns)
+        g = sorted(tuple(norm(v) for v in row) for row in got[gcols].itertuples(index=False, name=None))
+        digests[name] = digest(gcols, g)
         try:
             want = con.execute(sql).fetchdf()
         except Exception as e:
             print(f"FAIL {name}: oracle error: {e}"); n_fail += 1; continue
-        gcols, wcols = sorted(got.columns), sorted(want.columns)
+        wcols = sorted(want.columns)
         if gcols != wcols:
             print(f"FAIL {name}: schema {gcols} vs {wcols}"); n_fail += 1; continue
         # dtype families must agree too (the driver's schema_match may check)
@@ -53,7 +74,6 @@ def main():
                 if fam(got[c].dtype) != fam(want[c].dtype)]
         if mism:
             print(f"WARN {name}: dtype families differ: {mism}")
-        g = sorted(tuple(norm(v) for v in row) for row in got[gcols].itertuples(index=False, name=None))
         w = sorted(tuple(norm(v) for v in row) for row in want[wcols].itertuples(index=False, name=None))
         if len(g) != len(w):
             print(f"FAIL {name}: rows {len(g)} vs {len(w)}"); n_fail += 1; continue
@@ -61,6 +81,10 @@ def main():
             diff = [(a, b) for a, b in zip(g, w) if a != b][:3]
             print(f"FAIL {name}: values differ, e.g. {diff}"); n_fail += 1; continue
         print(f"PASS {name} ({len(g)} rows)"); n_pass += 1
+    if digests_path:
+        with open(digests_path, "w") as f:
+            for name in sorted(digests):
+                f.write(f"{name} {digests[name]}\n")
     print(f"== {n_pass} pass / {n_fail} fail ==")
     sys.exit(1 if n_fail else 0)
 

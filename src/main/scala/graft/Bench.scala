@@ -33,6 +33,9 @@ import org.apache.spark.sql.SparkSession
   * tail-capture of the run log still yields a parseable total.
   */
 object Bench {
+  private def warn(what: String, e: Throwable): Unit =
+    System.err.println(s"[bench] $what failed: ${e.getClass.getSimpleName}: ${e.getMessage}")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -69,20 +72,20 @@ object Bench {
     // untimed warmup: JVM/codegen/session startup should not be billed to
     // whichever query happens to run first
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
+    catch { case e: Throwable => warn("entry (warmup)", e) }
 
     // optional args = query-name subset (dev iteration); no args = full set
     val all = SparkEntry.queries.keys.toSeq.sorted
     val names = if (args.nonEmpty) all.filter(args.toSet) else all
     // untimed warm pass: pre-build every stamped substrate store and
     // session-cached frame so no timed pass can bill a one-time build
-    // (see the warm-pass contract in the scaladoc); failures surface in
-    // the timed passes' error accounting, not here
+    // (see the warm-pass contract in the scaladoc); a failure is logged
+    // here and counted in the timed passes' error accounting
     if (sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMPASS", "1") != "0")
       names.foreach { name =>
         try SparkEntry.queries(name)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
+        catch { case e: Throwable => warn(s"$name (warm pass)", e) }
       }
     val timings = scala.collection.mutable.LinkedHashMap[String, Double]()
     val errors = scala.collection.mutable.LinkedHashSet[String]()
@@ -97,8 +100,7 @@ object Bench {
         } catch {
           case e: Throwable =>
             errors += name
-            System.err.println(
-              s"[bench] $name failed (pass $pass): ${e.getClass.getSimpleName}: ${e.getMessage}")
+            warn(s"$name (pass $pass)", e)
         }
       }
     }

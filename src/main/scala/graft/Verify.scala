@@ -31,15 +31,18 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // optional trailing args = query-name subset (dev iteration)
-    SparkEntry.queries
+    val selected = SparkEntry.queries
       .filter { case (name, _) => subset.isEmpty || subset(name) }
-      .foreach { case (name, fn) =>
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    val failures = selected.toSeq.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
+        None
+      } catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some((name, e))
       }
+    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -55,6 +58,19 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // per-query failure manifest beside the oracle map: a failed query is
+    // named here with its cause, not only later as "no spark output";
+    // the exit code stays 0: the per-query outputs are the contract
+    // (SURVEY.md section 7)
+    def str(s: String): String = q(Option(s).getOrElse(""))
+    val failed = failures.map { case (name, e) =>
+      val frame = e.getStackTrace.headOption.map(_.toString).getOrElse("")
+      s"{${q("name")}: ${q(name)}, ${q("exception")}: ${q(e.getClass.getName)}, " +
+        s"${q("message")}: ${str(e.getMessage)}, ${q("frame")}: ${q(frame)}}"
+    }
+    Files.writeString(Paths.get(s"$outDir/failures.json"), failed.mkString("[", ",\n", "]\n"))
+    println(s"[verify] ${selected.size - failures.size}/${selected.size} queries written, " +
+      s"${failures.size} failed${if (failures.isEmpty) "" else ": " + failures.map(_._1).mkString(" ")}")
     spark.stop()
   }
 }

@@ -262,20 +262,20 @@ object VectorFunctions {
 
   /** Register the native functions into an existing session's registry so
     * any SQL/expr can call them, regardless of how the session was built.
-    */
+    * Once per session: a name already registered is skipped, so the
+    * per-query [[graft.Engine.tune]] call neither rebuilds the entries
+    * nor logs a "replaced a previously registered function" WARN. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", (exprs: Seq[Expression]) => FloatVectorDot(exprs.head, exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sqdist", (exprs: Seq[Expression]) => FloatVectorSqDist(exprs.head, exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_md5_60", (exprs: Seq[Expression]) => Md5Long60(exprs.head),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_nfc", (exprs: Seq[Expression]) => NfcNormalize(exprs.head),
-      "built-in")
+    val registry = spark.sessionState.functionRegistry
+    Seq[(String, Seq[Expression] => Expression)](
+      "graft_dot" -> (e => FloatVectorDot(e.head, e(1))),
+      "graft_sqdist" -> (e => FloatVectorSqDist(e.head, e(1))),
+      "graft_md5_60" -> (e => Md5Long60(e.head)),
+      "graft_nfc" -> (e => NfcNormalize(e.head))
+    ).foreach { case (name, build) =>
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, build, "built-in")
+    }
   }
 }
 

@@ -1713,7 +1713,8 @@ object Dedup extends QueryModule {
         // auto-fold policy (VERDICT r15 item 2): member-level fraction
         // (deleted ids over keys rows) — ~1% here, below the 0.1 default
         val folded = graft.sources.IndexStore.autoFoldIfNeeded(
-          s, idxPath, "keys", "doc_id")(foldDedupMask(s, idxPath))
+          s, idxPath, "keys", "doc_id")(
+          graft.sources.IndexStore.foldMasks(s, idxPath, DedupMaskFold))
         graft.sources.IndexStore.writeStamp(s, idxPath, stamp, Map(
           "n_feed_inserts" -> inserts.count().toString,
           "n_feed_deletes" -> del.count().toString,
@@ -1723,23 +1724,26 @@ object Dedup extends QueryModule {
     idxPath
   }
 
-  /** Seq-scoped broadcast anti-join of one mask table on `keyCol`. A
-    * table WITHOUT a `seg` column is the folded physical layout (the
-    * dedup fold collapses seg, unlike the other families) — its rows
-    * are already post-erasure and the masks are gone, so it passes
-    * through untouched — but ONLY with an empty mask: a non-empty mask
-    * against a seg-less layout has no seq to scope to, and passing the
-    * frame through would silently LEAK deleted rows (ADVICE r16). The
-    * check is one limit-1 probe on a checkpointed kilobyte frame, paid
-    * only on the post-fold path. */
-  private def maskOn(df: DataFrame, mask: DataFrame, keyCol: String): DataFrame =
-    if (!df.columns.contains("seg")) {
-      require(mask.isEmpty,
-        s"maskOn: non-empty $keyCol mask against a seg-less (folded) layout " +
-          "would silently leak deleted rows; fold the mask or keep seg")
-      df
-    } else df.join(broadcast(mask), df(keyCol) === mask(keyCol) && df("seg") <= mask("seq"),
-      "left_anti")
+  /** The q234 store's masked LIVE tables, seg kept: digests through
+    * `mask_gone` (tkey), sigs/bands through `mask_reps` (doc_id), keys
+    * through the delete mask `del` (doc_id). Lazy frames over
+    * checkpointed kilobyte masks. */
+  private def dedupLiveTables(s: SparkSession, path: String,
+      del: DataFrame): Seq[(String, DataFrame)] = {
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    def rd(t: String) = graft.sources.IndexStore.read(s, path, t)
+    // absent mask tables on a stamped store = the legal post-fold state
+    // (ADVICE r15): empty masks make every anti-join a no-op
+    def maskTable(t: String, key: StructField) =
+      graft.sources.IndexStore.readTableOrEmpty(s, path, t,
+        StructType(Seq(key, StructField("seq", LongType)))).localCheckpoint()
+    val gone = maskTable("mask_gone", StructField("tkey", StringType))
+    val reps = maskTable("mask_reps", StructField("doc_id", LongType))
+    def masked(t: String, mask: DataFrame, key: String) =
+      t -> graft.sources.IndexStore.maskedRead(rd(t), mask, key, key, "seg")
+    Seq(masked("digests", gone, "tkey"), masked("sigs", reps, "doc_id"),
+      masked("bands", reps, "doc_id"), masked("keys", del, "doc_id"))
+  }
 
   /** The masked LIVE view of the q234 store's four tables (seg dropped —
     * probes are seg-agnostic), plus the raw delete mask so callers audit
@@ -1747,41 +1751,18 @@ object Dedup extends QueryModule {
     * are lazy plans — nothing runs until a caller acts on them). */
   private[graft] def maskedDedupView(s: SparkSession, path: String)
       : (DedupIndex, DataFrame, DataFrame) = {
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    def rd(t: String) = graft.sources.IndexStore.read(s, path, t)
-    // absent mask tables on a stamped store = the legal post-fold state
-    // (ADVICE r15): empty masks make every anti-join a no-op
-    val gone = graft.sources.IndexStore.readTableOrEmpty(s, path, "mask_gone",
-      StructType(Seq(StructField("tkey", StringType), StructField("seq", LongType))))
-      .localCheckpoint()
-    val reps = graft.sources.IndexStore.readTableOrEmpty(s, path, "mask_reps",
-      StructType(Seq(StructField("doc_id", LongType), StructField("seq", LongType))))
-      .localCheckpoint()
     val del = graft.sources.IndexStore.readDeleteMaskOrEmpty(s, path, "doc_id")
       .localCheckpoint()
-    (DedupIndex(
-      maskOn(rd("digests"), gone, "tkey").drop("seg"),
-      maskOn(rd("sigs"), reps, "doc_id").drop("seg"),
-      maskOn(rd("bands"), reps, "doc_id").drop("seg")),
-      maskOn(rd("keys"), del, "doc_id").drop("seg"),
-      del)
+    val t = dedupLiveTables(s, path, del).toMap.map { case (k, df) => k -> df.drop("seg") }
+    (DedupIndex(t("digests"), t("sigs"), t("bands")), t("keys"), del)
   }
 
-  /** Fold the q234 masks into the physical layout and drop them —
-    * MaskFoldSpec pins the result table-equal to q228's physically-
-    * rewritten store. */
-  private[graft] def foldDedupMask(s: SparkSession, path: String): Unit = {
-    val (live, keys, _) = maskedDedupView(s, path)
-    val frames = Seq("digests" -> live.digests, "sigs" -> live.sigs,
-      "bands" -> live.bands, "keys" -> keys).map {
-      case (t, df) => t -> df.localCheckpoint()
-    }
-    graft.sources.IndexStore.inParallel(frames.map { case (t, df) =>
-      () => graft.sources.IndexStore.replaceTable(s, path, t, df)
-    })
-    Seq(graft.sources.IndexStore.DeleteMaskTable, "mask_gone", "mask_reps")
-      .foreach(graft.sources.IndexStore.dropTable(s, path, _))
-  }
+  /** The dedup family's fold — MaskFoldSpec pins the result table-equal
+    * to q228's physically-rewritten store. */
+  private[graft] val DedupMaskFold = graft.sources.IndexStore.MaskFold(
+    Seq(graft.sources.IndexStore.DeleteMaskTable, "mask_gone", "mask_reps"),
+    (s, path) => dedupLiveTables(s, path,
+      graft.sources.IndexStore.readDeleteMaskOrEmpty(s, path, "doc_id").localCheckpoint()))
 
   /** q234: the q131 arrival screen over the mask-synced dedup store —
     * q228's probe with the erasure served through masks. Decisions flow

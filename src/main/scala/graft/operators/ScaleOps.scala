@@ -2562,54 +2562,38 @@ object ScaleOps extends QueryModule {
   // ---- q265: feed sync with O(delta) MASKED deletes for the
   // mix-admission policy store (VERDICT r19 "what's missing" item 2) ----
 
-  /** Seq-scoped broadcast anti-join of one mask table on `keyCol` — the
-    * q234 rule verbatim: a mask row at `seq` hides matching rows of
-    * segments <= seq, so a digest re-ingested by the arrival leg (seg 1)
-    * is immediately visible THROUGH the mask. A seg-less table is the
-    * folded physical layout; it passes through only with an EMPTY mask
-    * (a non-empty mask with no seq to scope to would silently leak
-    * deleted rows — the ADVICE r16 lesson, kept). */
-  private def mixMaskOn(df: DataFrame, mask: DataFrame,
-      keyCol: String): DataFrame =
-    if (!df.columns.contains("seg")) {
-      require(mask.isEmpty,
-        s"mixMaskOn: non-empty $keyCol mask against a seg-less (folded) " +
-          "layout would silently leak deleted rows; fold the mask or keep seg")
-      df
-    } else df.join(broadcast(mask),
-      df(keyCol) <=> mask(keyCol) && df("seg") <= mask("seq"), "left_anti")
-
-  /** The masked LIVE view of the q265 store: (digests, keys, delete
-    * mask) — digests masked by `mask_gone` (dh), keys by the raw delete
-    * mask (doc_id), seg dropped (probes are seg-agnostic). Lazy frames;
-    * the masks are checkpointed kilobytes. */
-  private[graft] def maskedMixAdmView(s: SparkSession, path: String)
-      : (DataFrame, DataFrame, DataFrame) = {
+  /** The q265 store's masked LIVE tables, seg kept: digests through
+    * `mask_gone` (dh), keys through the delete mask `del` (doc_id) — the
+    * q234 rule, so a digest re-ingested by the arrival leg (seg 1) is
+    * visible THROUGH the mask. Lazy frames over checkpointed masks. */
+  private def mixAdmLiveTables(s: SparkSession, path: String,
+      del: DataFrame): Seq[(String, DataFrame)] = {
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     def rd(t: String) = graft.sources.IndexStore.read(s, path, t)
     val gone = graft.sources.IndexStore.readTableOrEmpty(s, path, "mask_gone",
       StructType(Seq(StructField("dh", StringType), StructField("seq", LongType))))
       .localCheckpoint()
-    val del = graft.sources.IndexStore.readDeleteMaskOrEmpty(s, path, "doc_id")
-      .localCheckpoint()
-    (mixMaskOn(rd("digests"), gone, "dh").drop("seg"),
-      mixMaskOn(rd("keys"), del, "doc_id").drop("seg"),
-      del)
+    Seq("digests" -> graft.sources.IndexStore.maskedRead(rd("digests"), gone, "dh", "dh", "seg"),
+      "keys" -> graft.sources.IndexStore.maskedRead(rd("keys"), del, "doc_id", "doc_id", "seg"))
   }
 
-  /** Fold the q265 masks into the physical layout and drop them —
-    * MaskFoldSpec pins the result table-equal to q260's physically-
-    * rewritten store (same feed fixture, same final state). */
-  private[graft] def foldMixAdmMask(s: SparkSession, path: String): Unit = {
-    val (dig, keys, _) = maskedMixAdmView(s, path)
-    val frames = Seq("digests" -> dig.localCheckpoint(),
-      "keys" -> keys.localCheckpoint())
-    graft.sources.IndexStore.inParallel(frames.map { case (t, df) =>
-      () => graft.sources.IndexStore.replaceTable(s, path, t, df)
-    })
-    Seq(graft.sources.IndexStore.DeleteMaskTable, "mask_gone")
-      .foreach(graft.sources.IndexStore.dropTable(s, path, _))
+  /** The masked LIVE view of the q265 store: (digests, keys, delete
+    * mask), seg dropped (probes are seg-agnostic). */
+  private[graft] def maskedMixAdmView(s: SparkSession, path: String)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val del = graft.sources.IndexStore.readDeleteMaskOrEmpty(s, path, "doc_id")
+      .localCheckpoint()
+    val t = mixAdmLiveTables(s, path, del).toMap
+    (t("digests").drop("seg"), t("keys").drop("seg"), del)
   }
+
+  /** The mix-admission family's fold — MaskFoldSpec pins the result
+    * table-equal to q260's physically-rewritten store (same feed
+    * fixture, same final state). */
+  private[graft] val MixAdmMaskFold = graft.sources.IndexStore.MaskFold(
+    Seq(graft.sources.IndexStore.DeleteMaskTable, "mask_gone"),
+    (s, path) => mixAdmLiveTables(s, path,
+      graft.sources.IndexStore.readDeleteMaskOrEmpty(s, path, "doc_id").localCheckpoint()))
 
   /** Build-if-stale the mask-synced mix-admission store:
     * [[mixAdmitSyncStore]]'s lake and feed, but the delete leg lands as
@@ -2724,7 +2708,8 @@ object ScaleOps extends QueryModule {
           () => graft.sources.IndexStore.replaceTable(s, path, "rates",
             ratesFrom(counts2).localCheckpoint())))
         val folded = graft.sources.IndexStore.autoFoldIfNeeded(
-          s, path, "keys", "doc_id")(foldMixAdmMask(s, path))
+          s, path, "keys", "doc_id")(
+          graft.sources.IndexStore.foldMasks(s, path, MixAdmMaskFold))
         graft.sources.IndexStore.writeStamp(s, path, stamp, Map(
           "n_feed_inserts" -> insKeys.count().toString,
           "n_feed_deletes" -> del.count().toString,
@@ -2806,19 +2791,12 @@ object ScaleOps extends QueryModule {
     val counts0 = canonOf(keys0)
       .groupBy(col("source")).agg(sum(col("tk")).as("c"))
       .filter(col("c") > 0L)
-    val wrote = new java.util.concurrent.atomic.AtomicInteger(0)
-    def commit(t: String, df: DataFrame): Unit =
-      if (graft.sources.IndexStore.appendSegmentIfAbsent(
-          s, path, t, "segment", 0L, df))
-        wrote.incrementAndGet(): Unit
-    graft.sources.IndexStore.inParallel(Seq(
-      () => commit("keys", keys0),
-      () => commit("digests", keys0.select(col("dh"))
-        .filter(col("dh").isNotNull).distinct()),
-      () => commit("deletes", keys0.select(col("doc_id")).limit(0)),
-      () => commit("dgone", keys0.select(col("dh")).limit(0)),
-      () => commit("cdelta", counts0)))
-    require(wrote.get == MixAdmStreamTables.size,
+    require(graft.sources.IndexStore.commitSegment(s, path, MixAdmStreamTables, "segment", 0L,
+        Seq("keys" -> keys0,
+          "digests" -> keys0.select(col("dh")).filter(col("dh").isNotNull).distinct(),
+          "deletes" -> keys0.select(col("doc_id")).limit(0),
+          "dgone" -> keys0.select(col("dh")).limit(0),
+          "cdelta" -> counts0)) == MixAdmStreamTables.size,
       s"fresh streaming mixadm store at $path had segments")
     graft.sources.IndexStore.writeStamp(s, path, "mixadmstream-seeded|" +
       graft.sources.IndexStore.sourceStamp(s, Seq(s"$dir/documents.parquet")))
@@ -2905,21 +2883,10 @@ object ScaleOps extends QueryModule {
       Seq("keys" -> insKeys, "digests" -> sd.added, "deletes" -> delC,
         "dgone" -> sd.gone, "cdelta" -> cd)
     }
-    def commitAll(): Int =
-      if (MixAdmStreamTables.forall(t => graft.sources.IndexStore
-            .segmentCommitted(s, path, t, "segment", segId))) 0
-      else {
-        val wrote = new java.util.concurrent.atomic.AtomicInteger(0)
-        graft.sources.IndexStore.inParallel(frames.map { case (t, df) => () =>
-          if (graft.sources.IndexStore.appendSegmentIfAbsent(
-              s, path, t, "segment", segId, df))
-            wrote.incrementAndGet(): Unit
-        })
-        wrote.get
-      }
+    def commitAll(): Int = graft.sources.IndexStore.commitSegment(
+      s, path, MixAdmStreamTables, "segment", segId, frames)
     val first = commitAll()
-    val replay = commitAll()
-    ((first, replay), (ins.count(), del.count()))
+    ((first, commitAll()), (ins.count(), del.count()))
   }
 
   /** Audit column from store meta with a LOUD fallback: the feed-count

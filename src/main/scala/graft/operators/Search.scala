@@ -665,15 +665,10 @@ object Search extends QueryModule {
     if (fs.exists(p)) fs.delete(p, true)
     val base = docs(s, dir).filter(col("doc_id") % 4 =!= 3)
     // the four tables derive from one checkpointed tokenize — their
-    // writes are independent jobs, so overlap them (the q214 refresh
+    // writes are independent jobs, overlapped (the q214 refresh
     // pattern); on a fresh dir all four must report "wrote"
-    val wrote = new java.util.concurrent.atomic.AtomicInteger(0)
-    graft.sources.IndexStore.inParallel(streamTables(base).map {
-      case (t, df) => () =>
-        if (graft.sources.IndexStore.appendSegmentIfAbsent(s, path, t, "segment", 0L, df))
-          wrote.incrementAndGet(): Unit
-    })
-    require(wrote.get == indexTableNames.size,
+    require(graft.sources.IndexStore.commitSegment(s, path, indexTableNames,
+        "segment", 0L, streamTables(base)) == indexTableNames.size,
       s"fresh streaming index at $path had segments")
     graft.sources.IndexStore.writeStamp(s, path,
       "searchstream1|" + fixtureStamp(s, dir))
@@ -694,26 +689,12 @@ object Search extends QueryModule {
   private[graft] def streamIndexCommit(s: SparkSession, path: String,
       segId: Long, batch: DataFrame): (Int, Int) = {
     // frames are built (one tokenize, checkpointed) only if some table
-    // still needs this segment — a fully-committed replay is the marker
-    // stats alone, never a Spark job (the metadata-no-op the exactly-once
-    // contract promises recovering streams)
+    // still needs this segment
     lazy val frames = streamTables(batch)
-    def commitAll(): Int =
-      if (indexTableNames.forall(t => graft.sources.IndexStore
-            .segmentCommitted(s, path, t, "segment", segId))) 0
-      else {
-        // independent per-table writes over the shared checkpointed
-        // tokenize — overlap them like the seed does
-        val wrote = new java.util.concurrent.atomic.AtomicInteger(0)
-        graft.sources.IndexStore.inParallel(frames.map { case (t, df) => () =>
-          if (graft.sources.IndexStore.appendSegmentIfAbsent(s, path, t, "segment", segId, df))
-            wrote.incrementAndGet(): Unit
-        })
-        wrote.get
-      }
+    def commitAll(): Int = graft.sources.IndexStore.commitSegment(
+      s, path, indexTableNames, "segment", segId, frames)
     val first = commitAll()
-    val replay = commitAll()
-    (first, replay)
+    (first, commitAll())
   }
 
   /** The CROSS-TABLE visible segment set of the streamed search store: a
@@ -1188,58 +1169,43 @@ object Search extends QueryModule {
     idxPath
   }
 
-  /** Apply a loaded delete mask to one segment-tagged index table:
-    * broadcast anti-join on the key, scoped to segments at or below the
-    * mask row's seq. */
-  private def applyMask(df: DataFrame, mask: DataFrame): DataFrame =
-    df.join(broadcast(mask),
-      df("doc_id") === mask("doc_id") && df("segment") <= mask("seq"), "left_anti")
-
-  /** The as-of × mask COMPOSITION (VERDICT r15 item 4): a horizon read
-    * of a masked store sees the segments at or below the horizon, masked
-    * ONLY by mask rows already visible there (`mask.seq <= h`) — a
-    * delete drained AFTER the horizon must not reach back into it, just
-    * as a segment committed after it doesn't. Both bounds are pushed
-    * filters: the segment one prunes files (the q214 path), the mask one
-    * trims the kilobyte broadcast before the anti-join. */
+  /** The search family's masked read at horizon `h` — doc-keyed,
+    * segment-scoped, as-of × mask composed (VERDICT r15 item 4). */
   private[graft] def maskedAsOf(df: DataFrame, mask: DataFrame, h: Long): DataFrame =
-    applyMask(df.filter(col("segment") <= h), mask.filter(col("seq") <= h))
+    graft.sources.IndexStore.maskedRead(df, mask, "doc_id", "doc_id", "segment", Some(h))
 
-  /** Fold the delete mask into the physical layout and DROP it — the
-    * compaction step that ends a mask's life (the lake folds its delete
-    * files the same way, q153's compact). One anti-join rewrite per
-    * table + the per-segment dict rebuild from retained postings (the
-    * q222/q227 erasure shape), then the sidecar is removed. After the
-    * fold the store is bit-identical to one whose deletes were applied
-    * physically at feed time — MaskFoldSpec pins that equality against
-    * the q227 store. */
-  private[graft] def foldDeleteMask(s: SparkSession, path: String): Unit =
-    graft.sources.IndexStore.readDeleteMask(s, path).foreach { mask0 =>
-      val mask = mask0.localCheckpoint()
-      def rd(t: String) = graft.sources.IndexStore.read(s, path, t)
-      val post = applyMask(rd("postings"), mask).localCheckpoint()
-      val dict = post.groupBy(col("tok"), col("segment"))
-        .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"),
-          max(col("tf")).as("max_tf"))
-        .select(col("tok"), col("df"), col("cf"), col("max_tf"), col("segment"))
+  /** The search family's fold: every doc-keyed table through the mask,
+    * plus the per-segment dict rebuilt from the retained postings (the
+    * q222/q227 erasure shape). After the fold the store is bit-identical
+    * to one whose deletes were applied physically at feed time —
+    * MaskFoldSpec pins that equality against the q227 store. */
+  private[graft] val SearchMaskFold = graft.sources.IndexStore.MaskFold(
+    Seq(graft.sources.IndexStore.DeleteMaskTable), { (s, path) =>
+      val mask = graft.sources.IndexStore.readDeleteMaskOrEmpty(s, path, "doc_id")
         .localCheckpoint()
-      val dl = applyMask(rd("doclen"), mask).localCheckpoint()
-      val pos = applyMask(rd("positions"), mask).localCheckpoint()
-      val dm = if (graft.sources.IndexStore.tableNames(s, path).contains("docmeta"))
-        Some(applyMask(readDocMeta(s, path), mask).localCheckpoint())
-      else None
-      graft.sources.IndexStore.inParallel(Seq(
-        () => graft.sources.IndexStore.replaceTable(s, path, "postings",
-          post.repartition(col("tok")).sortWithinPartitions(col("tok"), col("doc_id"))),
-        () => graft.sources.IndexStore.replaceTable(s, path, "dict", dict),
-        () => graft.sources.IndexStore.replaceTable(s, path, "doclen", dl),
-        () => graft.sources.IndexStore.replaceTable(s, path, "positions",
-          pos.repartition(col("tok"))
-            .sortWithinPartitions(col("tok"), col("doc_id"), col("pos")))) ++
-        dm.map(d => () => graft.sources.IndexStore.replaceTable(s, path, "docmeta", d)))
-      graft.sources.IndexStore.dropTable(s, path,
-        graft.sources.IndexStore.DeleteMaskTable)
-    }
+      def masked(df: DataFrame) =
+        graft.sources.IndexStore.maskedRead(df, mask, "doc_id", "doc_id", "segment")
+      def rd(t: String) = masked(graft.sources.IndexStore.read(s, path, t))
+      val post = rd("postings").localCheckpoint()
+      Seq(
+        "postings" -> post.repartition(col("tok"))
+          .sortWithinPartitions(col("tok"), col("doc_id")),
+        "dict" -> post.groupBy(col("tok"), col("segment"))
+          .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"),
+            max(col("tf")).as("max_tf"))
+          .select(col("tok"), col("df"), col("cf"), col("max_tf"), col("segment")),
+        "doclen" -> rd("doclen"),
+        "positions" -> rd("positions").repartition(col("tok"))
+          .sortWithinPartitions(col("tok"), col("doc_id"), col("pos"))) ++
+        (if (graft.sources.IndexStore.tableNames(s, path).contains("docmeta"))
+          Seq("docmeta" -> masked(readDocMeta(s, path)))
+        else Nil)
+    })
+
+  /** Fold the delete mask into the physical layout and drop it (the lake
+    * folds its delete files the same way, q153's compact). */
+  private[graft] def foldDeleteMask(s: SparkSession, path: String): Unit =
+    graft.sources.IndexStore.foldMasks(s, path, SearchMaskFold)
 
   /** q231: the q164 probe over the mask-synced store. Masked docs are
     * filtered from CANDIDATES by a broadcast anti-join applied after the
@@ -1262,14 +1228,16 @@ object Search extends QueryModule {
     // physical == live, which is exactly what a folded store serves
     val mask = graft.sources.IndexStore.readDeleteMaskOrEmpty(s, path, "doc_id")
       .localCheckpoint()
-    val live = applyMask(idx.doclen, mask)
+    def masked(df: DataFrame) =
+      graft.sources.IndexStore.maskedRead(df, mask, "doc_id", "doc_id", "segment")
+    val live = masked(idx.doclen)
     val audit = idx.doclen.agg(count(lit(1)).as("n_docs_physical"))
       .crossJoin(live.agg(count(lit(1)).as("n_live")))
       .crossJoin(mask.agg(count(lit(1)).as("n_mask_rows")))
       .withColumn("n_feed_inserts", lit(meta("n_feed_inserts").toLong))
       .withColumn("n_feed_deletes", lit(meta("n_feed_deletes").toLong))
-    val mIdx = SearchIndex(applyMask(idx.postings, mask), idx.doclen,
-      idx.dict, () => applyMask(idx.positions, mask))
+    val mIdx = SearchIndex(masked(idx.postings), idx.doclen,
+      idx.dict, () => masked(idx.positions))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("qid")).orderBy(col("score").desc, col("doc_id"))
     bm25(mIdx, querySet(docs(s, dir)))

@@ -652,8 +652,8 @@ object Similarity extends QueryModule {
         // auto-fold policy (VERDICT r15 item 2): ~1% deleted sits below
         // the 0.1 default, so the mask stays — q232's point
         val folded = graft.sources.IndexStore.autoFoldIfNeeded(
-          s, idxPath, "assign", "vec_id")(
-          foldVecMask(s, idxPath, "assign", Seq("cid", "vec_id")))
+          s, idxPath, "assign", "vec_id")(graft.sources.IndexStore.foldMasks(
+          s, idxPath, vecMaskFold("assign", Seq("cid", "vec_id"))))
         graft.sources.IndexStore.writeStamp(s, idxPath, stamp, Map(
           "m" -> m.toString,
           "n_feed_inserts" -> f.inserts.count().toString,
@@ -664,35 +664,19 @@ object Similarity extends QueryModule {
     idxPath
   }
 
-  /** Apply a `(vec_id, seq)` delete mask to a seg-tagged assign/codes
-    * frame — broadcast anti-join, scoped to rows at or below the mask's
-    * seq (shared by the q232/q233 probes and their folds). */
-  private[graft] def applyVecMask(df: DataFrame, mask: DataFrame): DataFrame =
-    df.join(broadcast(mask),
-      df("vec_id") === mask("vec_id") && df("seg") <= mask("seq"), "left_anti")
-
-  /** As-of × mask composition for the vector family (VERDICT r15 item
-    * 4): the horizon bounds BOTH the rows (`seg <= h`) and the masks
-    * applied (`seq <= h`) — a delete drained after the horizon is not
-    * visible at it. Mirrors [[graft.operators.Search.maskedAsOf]]. */
-  private[graft] def applyVecMaskAsOf(df: DataFrame, mask: DataFrame, h: Long): DataFrame =
-    applyVecMask(df.filter(col("seg") <= h), mask.filter(col("seq") <= h))
-
-  /** Fold the q232 store's mask into the physical layout and drop it —
-    * MaskFoldSpec pins the result bit-equal to q229's physically-
-    * rewritten store. */
-  private[graft] def foldVecMask(s: SparkSession, path: String,
-      tbl: String, sortCols: Seq[String]): Unit =
-    graft.sources.IndexStore.readDeleteMask(s, path).foreach { mask0 =>
-      val mask = mask0.localCheckpoint()
-      val live = applyVecMask(
-        graft.sources.IndexStore.read(s, path, tbl), mask).localCheckpoint()
-      graft.sources.IndexStore.replaceTable(s, path, tbl,
-        live.repartitionByRange(sortCols.map(col): _*)
+  /** The vector family's fold of one seg-tagged table (IVF `assign`, PQ
+    * `codes`), re-laid range-sorted on `sortCols` — MaskFoldSpec pins the
+    * result bit-equal to q229's/q230's physically-rewritten stores. */
+  private[graft] def vecMaskFold(tbl: String, sortCols: Seq[String]) =
+    graft.sources.IndexStore.MaskFold(Seq(graft.sources.IndexStore.DeleteMaskTable),
+      (s, path) => {
+        val mask = graft.sources.IndexStore.readDeleteMaskOrEmpty(s, path, "vec_id")
+          .localCheckpoint()
+        Seq(tbl -> graft.sources.IndexStore.maskedRead(
+            graft.sources.IndexStore.read(s, path, tbl), mask, "vec_id", "vec_id", "seg")
+          .repartitionByRange(sortCols.map(col): _*)
           .sortWithinPartitions(sortCols.map(col): _*))
-      graft.sources.IndexStore.dropTable(s, path,
-        graft.sources.IndexStore.DeleteMaskTable)
-    }
+      })
 
   /** q232: the q184 cluster-cover probe over the mask-synced IVF store.
     * Masked vectors are filtered from CANDIDATES by the broadcast
@@ -711,7 +695,7 @@ object Similarity extends QueryModule {
     // (ADVICE r15): the empty mask makes the anti-join a no-op
     val mask = graft.sources.IndexStore.readDeleteMaskOrEmpty(s, path, "vec_id")
       .localCheckpoint()
-    val live = applyVecMask(assign, mask)
+    val live = graft.sources.IndexStore.maskedRead(assign, mask, "vec_id", "vec_id", "seg")
     val audit = live.agg(count(lit(1)).as("n_vecs"))
       .crossJoin(broadcast(mask.agg(count(lit(1)).as("n_mask_rows"))))
       .withColumn("n_feed_inserts", lit(meta("n_feed_inserts").toLong))
@@ -1876,8 +1860,8 @@ object Similarity extends QueryModule {
         // auto-fold policy (VERDICT r15 item 2); distinct-key fraction,
         // so the M-rows-per-vector codes table reads the same ~1%
         val folded = graft.sources.IndexStore.autoFoldIfNeeded(
-          s, idxPath, "codes", "vec_id")(
-          foldVecMask(s, idxPath, "codes", Seq("vec_id", "j")))
+          s, idxPath, "codes", "vec_id")(graft.sources.IndexStore.foldMasks(
+          s, idxPath, vecMaskFold("codes", Seq("vec_id", "j"))))
         graft.sources.IndexStore.writeStamp(s, idxPath, stamp, Map(
           "mq" -> mq.toString, "m" -> f.m.toString,
           "n_feed_inserts" -> f.inserts.count().toString,
@@ -1905,8 +1889,8 @@ object Similarity extends QueryModule {
     // missing mask on a stamped store = the legal post-fold state
     val mask = graft.sources.IndexStore.readDeleteMaskOrEmpty(s, path, "vec_id")
       .localCheckpoint()
-    val codes = applyVecMask(
-      graft.sources.IndexStore.read(s, path, "codes"), mask)
+    val codes = graft.sources.IndexStore.maskedRead(
+      graft.sources.IndexStore.read(s, path, "codes"), mask, "vec_id", "vec_id", "seg")
     val audit = codes.agg(countDistinct(col("vec_id")).as("n_vecs"))
       .crossJoin(broadcast(mask.agg(count(lit(1)).as("n_mask_rows"))))
       .withColumn("n_feed_inserts", lit(meta("n_feed_inserts").toLong))
@@ -4700,42 +4684,34 @@ object Similarity extends QueryModule {
       StructType(Seq(StructField("src", LongType), StructField("seq", LongType))))
   }
 
-  /** The masked LIVE view of a seg-tagged edges table: rows hide when
-    * their SOURCE is a deleted vector (`deletes` mask — those lists are
+  /** The masked LIVE edges of the q245 store: rows hide when their
+    * SOURCE is a deleted vector (`deletes` mask `del` — those lists are
     * gone with the vector) or a restated source (`mask_stale` — a newer
-    * seg carries the current list), both scoped `seg <= seq` so a
-    * re-appended source's newer rows stay visible (the Iceberg-v2 rule
-    * every family's mask follows). Two broadcast anti-joins over
-    * kilobyte masks. */
-  private[graft] def maskedKnnEdges(edges: DataFrame, deletes: DataFrame,
-      stale: DataFrame): DataFrame = {
-    val d = edges.join(broadcast(deletes),
-      edges("src") === deletes("vec_id") && edges("seg") <= deletes("seq"),
-      "left_anti")
-    d.join(broadcast(stale),
-      d("src") === stale("src") && d("seg") <= stale("seq"), "left_anti")
+    * seg carries the current list), both seq-scoped so a re-appended
+    * source's newer rows stay visible. */
+  private[graft] def knnLiveEdges(s: SparkSession, path: String,
+      del: DataFrame): DataFrame = {
+    val stale = knnStaleMask(s, path).localCheckpoint()
+    graft.sources.IndexStore.maskedRead(
+      graft.sources.IndexStore.maskedRead(graft.sources.IndexStore.read(s, path, "edges"),
+        del, "src", "vec_id", "seg"),
+      stale, "src", "src", "seg")
   }
 
-  /** Fold the q245 store's masks into the physical layout and drop them
-    * — MaskFoldSpec pins the folded edges content equal to q244's
-    * physically-synced store's. Edges keep their seg column (provenance,
-    * like the vector family's fold); assign is re-laid cid-sorted. */
-  private[graft] def foldKnnMask(s: SparkSession, path: String): Unit = {
-    val del = graft.sources.IndexStore.readDeleteMaskOrEmpty(s, path, "vec_id")
-      .localCheckpoint()
-    val stale = knnStaleMask(s, path).localCheckpoint()
-    val edges = maskedKnnEdges(
-      graft.sources.IndexStore.read(s, path, "edges"), del, stale).localCheckpoint()
-    val assign = applyVecMask(
-      graft.sources.IndexStore.read(s, path, "assign"), del).localCheckpoint()
-    graft.sources.IndexStore.replaceTable(s, path, "edges", edges)
-    graft.sources.IndexStore.replaceTable(s, path, "assign",
-      assign.repartitionByRange(col("cid"), col("vec_id"))
-        .sortWithinPartitions(col("cid"), col("vec_id")))
-    graft.sources.IndexStore.dropTable(s, path,
-      graft.sources.IndexStore.DeleteMaskTable)
-    graft.sources.IndexStore.dropTable(s, path, KnnStaleMaskTable)
-  }
+  /** The kNN-graph family's fold — MaskFoldSpec pins the folded edges
+    * content equal to q244's physically-synced store's. Edges keep their
+    * seg column (provenance, like the vector family's fold); assign is
+    * re-laid cid-sorted. */
+  private[graft] val KnnMaskFold = graft.sources.IndexStore.MaskFold(
+    Seq(graft.sources.IndexStore.DeleteMaskTable, KnnStaleMaskTable), { (s, path) =>
+      val del = graft.sources.IndexStore.readDeleteMaskOrEmpty(s, path, "vec_id")
+        .localCheckpoint()
+      Seq("edges" -> knnLiveEdges(s, path, del),
+        "assign" -> graft.sources.IndexStore.maskedRead(
+            graft.sources.IndexStore.read(s, path, "assign"), del, "vec_id", "vec_id", "seg")
+          .repartitionByRange(col("cid"), col("vec_id"))
+          .sortWithinPartitions(col("cid"), col("vec_id")))
+    })
 
   /** Build-if-stale the mask-synced kNN-graph store: the same lake and
     * v1→v3 feed as q244, with every leg's WRITE delta-sized — the
@@ -4788,7 +4764,8 @@ object Similarity extends QueryModule {
         graft.sources.IndexStore.append(s, idxPath, KnnStaleMaskTable,
           affected.withColumn("seq", lit(0L)))
         // masked live membership, pinned BEFORE arrivals append to assign
-        val live = applyVecMask(rd("assign"), del.withColumn("seq", lit(0L)))
+        val live = graft.sources.IndexStore.maskedRead(rd("assign"),
+            del.withColumn("seq", lit(0L)), "vec_id", "vec_id", "seg")
           .select(col("cid"), col("vec_id"), col("embedding"), col("nrm"))
           .localCheckpoint()
         val repaired = cellGraphFor(live,
@@ -4814,9 +4791,8 @@ object Similarity extends QueryModule {
           .localCheckpoint()
         // the post-delete-leg visible lists (seg 0 survivors + seg 1
         // repairs), pinned before the edges table grows again
-        val vis = maskedKnnEdges(rd("edges"),
-            graft.sources.IndexStore.readDeleteMaskOrEmpty(s, idxPath, "vec_id"),
-            knnStaleMask(s, idxPath))
+        val vis = knnLiveEdges(s, idxPath,
+            graft.sources.IndexStore.readDeleteMaskOrEmpty(s, idxPath, "vec_id"))
           .select(col("src"), col("nbr"), col("cosim"), col("rn"))
           .localCheckpoint()
         // a cross-edge ENTERS a survivor's top-3 iff it beats-or-ties the
@@ -4846,7 +4822,8 @@ object Similarity extends QueryModule {
         // the auto-fold policy, same gate as every masked sync: ~1%
         // deleted sits below the 0.1 default, so the masks stay
         val folded = graft.sources.IndexStore.autoFoldIfNeeded(
-          s, idxPath, "assign", "vec_id")(foldKnnMask(s, idxPath))
+          s, idxPath, "assign", "vec_id")(
+          graft.sources.IndexStore.foldMasks(s, idxPath, KnnMaskFold))
         graft.sources.IndexStore.writeStamp(s, idxPath, stamp, Map(
           "m" -> m.toString,
           "n_feed_inserts" -> f.inserts.count().toString,
@@ -4870,9 +4847,7 @@ object Similarity extends QueryModule {
     val meta = graft.sources.IndexStore.readMeta(s, path)
     val delMask = graft.sources.IndexStore.readDeleteMaskOrEmpty(s, path, "vec_id")
       .localCheckpoint()
-    val stale = knnStaleMask(s, path).localCheckpoint()
-    val edges = maskedKnnEdges(
-      graft.sources.IndexStore.read(s, path, "edges"), delMask, stale)
+    val edges = knnLiveEdges(s, path, delMask)
     val m = meta("m").toLong
     val del = table(s, dir, "embeddings")
       .filter(col("vec_id") % 89 === 17 && col("vec_id") % m =!= 0)
@@ -4930,18 +4905,11 @@ object Similarity extends QueryModule {
     val assignSeed = assign0.localCheckpoint()
     val emptyDel = assignSeed.select(col("vec_id")).limit(0)
     val emptyStale = assignSeed.select(col("vec_id").as("src")).limit(0)
-    val wrote = new java.util.concurrent.atomic.AtomicInteger(0)
-    def commit(t: String, df: DataFrame): Unit =
-      if (graft.sources.IndexStore.appendSegmentIfAbsent(s, path, t, "segment", 0L, df))
-        wrote.incrementAndGet(): Unit
-    graft.sources.IndexStore.inParallel(Seq(
-      () => commit("edges", cellGraph(assignSeed)),
-      () => commit("assign", assignSeed
-        .repartitionByRange(col("cid"), col("vec_id"))
-        .sortWithinPartitions(col("cid"), col("vec_id"))),
-      () => commit("deletes", emptyDel),
-      () => commit("stale", emptyStale)))
-    require(wrote.get == KnnStreamTables.size,
+    require(graft.sources.IndexStore.commitSegment(s, path, KnnStreamTables, "segment", 0L,
+        Seq("edges" -> cellGraph(assignSeed),
+          "assign" -> assignSeed.repartitionByRange(col("cid"), col("vec_id"))
+            .sortWithinPartitions(col("cid"), col("vec_id")),
+          "deletes" -> emptyDel, "stale" -> emptyStale)) == KnnStreamTables.size,
       s"fresh streaming graph store at $path had segments")
     // the stored centroid table is the arrivals' coarse-assign target,
     // the same role as in every sync store
@@ -5059,21 +5027,10 @@ object Similarity extends QueryModule {
         "stale" -> affected.unionByName(affected2.select(col("src")))
           .localCheckpoint())
     }
-    def commitAll(): Int =
-      if (KnnStreamTables.forall(t => graft.sources.IndexStore
-            .segmentCommitted(s, path, t, "segment", segId))) 0
-      else {
-        val wrote = new java.util.concurrent.atomic.AtomicInteger(0)
-        graft.sources.IndexStore.inParallel(frames.map { case (t, df) => () =>
-          if (graft.sources.IndexStore.appendSegmentIfAbsent(
-              s, path, t, "segment", segId, df))
-            wrote.incrementAndGet(): Unit
-        })
-        wrote.get
-      }
+    def commitAll(): Int = graft.sources.IndexStore.commitSegment(
+      s, path, KnnStreamTables, "segment", segId, frames)
     val first = commitAll()
-    val replay = commitAll()
-    ((first, replay), (ins.count(), del.count(), nRepaired))
+    ((first, commitAll()), (ins.count(), del.count(), nRepaired))
   }
 
   /** q246's answer frame: q244's rows served THROUGH the ledgered masks

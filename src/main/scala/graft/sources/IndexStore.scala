@@ -180,21 +180,23 @@ object IndexStore {
     * (the tables are independent by construction: localCheckpointed
     * increments or disjoint outputs). Submitting them from a small pool
     * overlaps the fixed costs; Spark's scheduler interleaves the jobs.
-    * Rethrows the first failure after all tasks settle. */
+    * Returns the results in task order; rethrows the first failure after
+    * all tasks settle. */
   private lazy val ioPool = java.util.concurrent.Executors.newFixedThreadPool(4,
     (r: Runnable) => {
       val t = new Thread(r, "graft-index-io")
       t.setDaemon(true)
       t
     })
-  def inParallel(tasks: Seq[() => Unit]): Unit =
-    if (tasks.sizeIs <= 1) tasks.foreach(_.apply())
+  def inParallel[T](tasks: Seq[() => T]): Seq[T] =
+    if (tasks.sizeIs <= 1) tasks.map(_.apply())
     else {
       val futs = tasks.map { t =>
-        ioPool.submit(new java.util.concurrent.Callable[Unit] { def call(): Unit = t() })
+        ioPool.submit(new java.util.concurrent.Callable[T] { def call(): T = t() })
       }
-      val errs = futs.flatMap(f => scala.util.Try(f.get()).failed.toOption)
-      errs.foreach(e => throw e)
+      val got = futs.map(f => scala.util.Try(f.get()))
+      got.flatMap(_.failed.toOption).foreach(e => throw e)
+      got.map(_.get)
     }
 
   /** Build-or-replace the index: write every table + the stamp/meta file
@@ -395,6 +397,20 @@ object IndexStore {
       }
     }
   }
+
+  /** Commit segment `segId` across the `tables` of a multi-table
+    * tagged-segment store: each `frames` entry lands through
+    * [[appendSegmentIfAbsent]], the writes overlapped as independent
+    * jobs. Returns how many tables THIS call wrote. When every table
+    * already carries the segment's marker, `frames` is never built: a
+    * replay is marker stats alone, never a Spark job (the metadata no-op
+    * the exactly-once contract promises recovering streams). */
+  def commitSegment(s: SparkSession, path: String, tables: Seq[String],
+      partCol: String, segId: Long, frames: => Seq[(String, DataFrame)]): Int =
+    if (tables.forall(t => segmentCommitted(s, path, t, partCol, segId))) 0
+    else inParallel(frames.map { case (t, df) =>
+      () => appendSegmentIfAbsent(s, path, t, partCol, segId, df)
+    }).count(identity)
 
   /** One segment's ledger entry: metadata-only (a single marker stat).
     * Lets a replaying writer skip building the segment's frames entirely
@@ -747,6 +763,73 @@ object IndexStore {
     val fire = maskedFraction(s, path, keyTable, keyCol) > t
     if (fire) fold
     fire
+  }
+
+  /** The seq-scoped masked read — the ONE delete-mask rule every masked
+    * family serves, folds and reads as-of through. A row of `df` hides
+    * iff a `mask` row matches its `key` on `maskKey` and the row's
+    * `segCol` is at or below the mask row's `seq`, so a key re-inserted
+    * under a NEWER segment stays visible (the Iceberg-v2 scoping rule,
+    * q151). A `horizon` bounds both sides: rows of later segments and
+    * masks drained after it are invisible, so a delete drained after the
+    * horizon never reaches back into it (as-of × mask, VERDICT r15 item
+    * 4). Both bounds are pushed filters: the segment one prunes files,
+    * the seq one trims the kilobyte broadcast before the anti-join.
+    *
+    * Key equality is null-safe (`<=>`) for every family — the form the
+    * mix-admission family already needed (its digest key `dh` =
+    * md5(text) is null for a null text). Against a mask with no null
+    * keys it hides exactly the rows `===` hides, so one form serves
+    * every family.
+    *
+    * A `df` without `segCol` is a seg-less physical layout: it passes
+    * through only under an EMPTY mask — a non-empty mask has no seq to
+    * scope to there, and passing the rows through would silently leak
+    * deleted rows (ADVICE r16). The check is one limit-1 probe on a
+    * kilobyte frame, paid only on that path. */
+  def maskedRead(df: DataFrame, mask: DataFrame, key: String, maskKey: String,
+      segCol: String, horizon: Option[Long] = None): DataFrame = {
+    import org.apache.spark.sql.functions.{broadcast, col}
+    val m = horizon.fold(mask)(h => mask.filter(col("seq") <= h))
+    if (!df.columns.contains(segCol)) {
+      require(m.isEmpty,
+        s"maskedRead: non-empty $maskKey mask against a seg-less layout " +
+          s"would silently leak deleted rows; fold the mask or keep $segCol")
+      df
+    } else {
+      val rows = horizon.fold(df)(h => df.filter(col(segCol) <= h))
+      rows.join(broadcast(m),
+        rows(key) <=> m(maskKey) && rows(segCol) <= m("seq"), "left_anti")
+    }
+  }
+
+  /** A masked family's fold: the mask tables it drops, and the masked
+    * live frame of every table it rewrites (each family derives its
+    * own — the search dict rebuild, the kNN stale-list mask, the dedup
+    * and mix-admission views). */
+  final case class MaskFold(masks: Seq[String],
+      live: (SparkSession, String) => Seq[(String, DataFrame)])
+
+  /** Fold a masked store's masks into its physical layout and drop them
+    * — the compaction step that ends a mask's life, shared by every
+    * masked family. No-op when none of the mask tables exists (an
+    * already-folded store). Every live frame is pinned BEFORE any swap
+    * (the frames read the very tables the swaps replace), the swaps run
+    * as one parallel block of rename-aside [[replaceTable]]s, and the
+    * masks drop LAST. Crash model: a folded table keeps its segment
+    * column, and re-masking a live frame with the still-present masks
+    * hides nothing, so a fold killed between swaps serves the identical
+    * masked view and the next fold completes it (CrashRecoverySpec pins
+    * this for every family). */
+  def foldMasks(s: SparkSession, path: String, fold: MaskFold): Unit = {
+    val present = tableNames(s, path).toSet
+    if (fold.masks.exists(present)) {
+      val pinned = inParallel(fold.live(s, path).map { case (t, df) =>
+        () => t -> df.localCheckpoint()
+      })
+      inParallel(pinned.map { case (t, df) => () => replaceTable(s, path, t, df) })
+      fold.masks.foreach(dropTable(s, path, _))
+    }
   }
 
   /** Remove one named table of a stored index (e.g. a folded-in delete

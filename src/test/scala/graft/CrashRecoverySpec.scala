@@ -883,4 +883,62 @@ class CrashRecoverySpec extends AnyFunSuite {
     assert(e.getMessage.contains("compaction point"),
       s"as-of below the compaction point must name the refusal: ${e.getMessage}")
   }
+
+  /** Every masked family's fold, with the query that builds its warm
+    * masked store. */
+  private lazy val maskFolds = {
+    import graft.operators.{Dedup, ScaleOps, Search, Similarity}
+    Map(
+      "search" -> ("q231_masked_feed_sync", Search.maskSyncStore _, Search.SearchMaskFold),
+      "vector" -> ("q232_masked_feed_sync_ann", Similarity.ivfMaskSyncStore _,
+        Similarity.vecMaskFold("assign", Seq("cid", "vec_id"))),
+      "pq" -> ("q233_masked_feed_sync_adc", Similarity.pqMaskSyncStore _,
+        Similarity.vecMaskFold("codes", Seq("vec_id", "j"))),
+      "knn" -> ("q245_masked_feed_sync_knn", Similarity.knnMaskSyncStore _,
+        Similarity.KnnMaskFold),
+      "dedup" -> ("q234_masked_feed_sync_screen", Dedup.dedupMaskSyncStore _,
+        Dedup.DedupMaskFold),
+      "mixadm" -> ("q265_masked_mixadm_sync", ScaleOps.mixAdmMaskSyncStore _,
+        ScaleOps.MixAdmMaskFold))
+  }
+
+  for (name <- Seq("search", "vector", "pq", "knn", "dedup", "mixadm"))
+    test(s"mask fold killed between its table swaps ($name): the masked view holds, a re-run completes the fold") {
+      // The fold swaps its tables one rename-aside replaceTable at a time
+      // and drops the masks last. A kill after some swaps leaves folded
+      // tables beside unfolded ones with every mask still present; since
+      // a folded table keeps its segment column, the masks hide nothing
+      // more in it, so the store must serve the identical masked view.
+      import graft.sources.IndexStore
+      Engine.tune(s)
+      val (query, store, fold) = maskFolds(name)
+      SparkEntry.queries(query)(s, TestSpark.sf).collect()
+      val warm = store(s, TestSpark.sf)
+      val path = s"$base/crashfold_$name"
+      IndexStore.copy(s, warm, path)
+      def rows(df: DataFrame): Seq[String] =
+        df.select(df.columns.sorted.toIndexedSeq.map(col): _*).collect().map(_.toString).sorted.toSeq
+      def view(): Map[String, Seq[String]] =
+        fold.live(s, path).map { case (t, df) => t -> rows(df) }.toMap
+      val want = view()
+      assert(fold.masks.exists(IndexStore.tableNames(s, path).contains),
+        "test setup: the warm store must carry masks")
+
+      // the kill: the first half of the swaps landed, the masks never dropped
+      val frames = fold.live(s, path).map { case (t, df) => t -> df.localCheckpoint() }
+      frames.take((frames.size + 1) / 2).foreach { case (t, df) =>
+        IndexStore.replaceTable(s, path, t, df)
+      }
+      assert(view() == want, "a half-folded store must serve the identical masked view")
+
+      // the next fold completes it: masks gone, every table holds the view
+      IndexStore.foldMasks(s, path, fold)
+      fold.masks.foreach(m => assert(!IndexStore.tableNames(s, path).contains(m),
+        s"the completed fold must drop mask table '$m'"))
+      assert(view() == want, "the completed fold must serve the identical view")
+      want.foreach { case (t, w) =>
+        assert(rows(IndexStore.read(s, path, t)) == w,
+          s"folded table '$t' must hold exactly the masked view's rows")
+      }
+    }
 }

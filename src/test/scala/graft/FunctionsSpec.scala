@@ -10,6 +10,26 @@ import org.scalatest.funsuite.AnyFunSuite
 class FunctionsSpec extends AnyFunSuite {
   private lazy val s = TestSpark.spark
 
+  test("Engine.tune registers the SQL functions once per session") {
+    Engine.tune(s)
+    val registry = s.sessionState.functionRegistry
+    val names = Seq("graft_dot", "graft_sqdist", "graft_md5_60", "graft_nfc")
+    def entries = names.map(n => registry.lookupFunction(
+      org.apache.spark.sql.catalyst.FunctionIdentifier(n)))
+    val first = entries
+    assert(first.forall(_.isDefined), s"tune must register all of $names")
+    Engine.tune(s)
+    // every registration stores a fresh ExpressionInfo; none may appear
+    assert(entries.zip(first).forall { case (b, a) => b.get eq a.get },
+      "the second tune must register nothing")
+    import s.implicits._
+    val r = Seq((Array(1.0f, 2.0f), Array(3.0f, 4.0f), "abc")).toDF("a", "b", "t")
+      .selectExpr("graft_dot(a, b)", "graft_sqdist(a, b)", "graft_md5_60(t)",
+        "graft_nfc(t)").collect()(0)
+    assert(r.getDouble(0) == 11.0 && r.getDouble(1) == 8.0)
+    assert(!r.isNullAt(2) && r.getString(3) == "abc")
+  }
+
   test("graft_dot: native expression computes the double dot product") {
     Engine.tune(s)
     import s.implicits._

@@ -34,40 +34,97 @@ class MaskFoldSpec extends AnyFunSuite {
       .orderBy(col("qid"), col("rn")).collect()
   }
 
-  test("folding the mask reproduces the physically-rewritten store bit-for-bit") {
-    // build both warm substrates through their public probes
-    SparkEntry.queries("q231_masked_feed_sync")(s, sf).collect()
-    SparkEntry.queries("q227_feed_synced_search")(s, sf).collect()
-    val maskPath = Search.maskSyncStore(s, sf)
-    val physPath = Search.feedSyncStore(s, sf)
+  /** One masked family for the fold-equality test: the masked probe and
+    * its physically-synced twin (their queries build both warm
+    * substrates), the two store paths, the family's fold, and the tables
+    * compared after the fold — by the given columns, or by the physical
+    * store's columns (every folded table keeps its segment column, which
+    * a physically-rewritten table may not carry). `extra` runs further
+    * checks on (folded, physical). */
+  private case class FoldCase(name: String, title: String, maskedQuery: String,
+      physicalQuery: String,
+      maskedStore: (org.apache.spark.sql.SparkSession, String) => String,
+      physicalStore: (org.apache.spark.sql.SparkSession, String) => String,
+      fold: IndexStore.MaskFold, compare: Seq[(String, Option[Seq[String]])],
+      extra: (String, String) => Unit = (_, _) => ())
+
+  private val foldCases = {
+    import graft.operators.{Dedup, ScaleOps, Similarity}
+    Seq(
+      FoldCase("search",
+        "folding the mask reproduces the physically-rewritten store bit-for-bit",
+        "q231_masked_feed_sync", "q227_feed_synced_search",
+        Search.maskSyncStore, Search.feedSyncStore, Search.SearchMaskFold,
+        Seq("postings", "doclen", "dict", "positions").map(_ -> None),
+        // the probe is bit-equal too (scores included: stats converged)
+        (fold, phys) => assert(top5(fold).sameElements(top5(phys)),
+          "post-fold BM25 top-5 must equal the physically-rewritten store's")),
+      FoldCase("mixadm",
+        "mixadm family: folding the masks reproduces q260's physically-rewritten store",
+        "q265_masked_mixadm_sync", "q260_feed_synced_mixadm",
+        ScaleOps.mixAdmMaskSyncStore, ScaleOps.mixAdmitSyncStore, ScaleOps.MixAdmMaskFold,
+        // the two stores saw the SAME drained feed (shared fixture), so
+        // counts and rates converge too (they telescoped across the legs)
+        Seq("keys", "digests", "counts", "rates").map(_ -> None)),
+      FoldCase("vector",
+        "vector family: folding the mask reproduces q229's physically-rewritten assign",
+        "q232_masked_feed_sync_ann", "q229_feed_synced_ann",
+        Similarity.ivfMaskSyncStore, Similarity.ivfSyncStore,
+        Similarity.vecMaskFold("assign", Seq("cid", "vec_id")),
+        Seq("assign" -> Some(Seq("cid", "vec_id", "embedding", "nrm")))),
+      FoldCase("pq",
+        "pq family: folding the mask reproduces q230's physically-rewritten codes",
+        "q233_masked_feed_sync_adc", "q230_feed_synced_adc",
+        Similarity.pqMaskSyncStore, Similarity.pqSyncStore,
+        Similarity.vecMaskFold("codes", Seq("vec_id", "j")),
+        Seq("codes" -> Some(Seq("vec_id", "j", "code", "d2")))),
+      // seg is provenance on the fold side only — the physical store
+      // collapses legs in place
+      FoldCase("knn",
+        "knn-graph family: folding the masks reproduces q244's physically-synced edges",
+        "q245_masked_feed_sync_knn", "q244_feed_synced_knn",
+        Similarity.knnMaskSyncStore, Similarity.knnSyncStore, Similarity.KnnMaskFold,
+        Seq("edges" -> Some(Seq("src", "nbr", "cosim", "rn")),
+          "assign" -> Some(Seq("cid", "vec_id", "nrm")))),
+      FoldCase("dedup",
+        "dedup family: folding the group-survival masks reproduces q228's rewritten store",
+        "q234_masked_feed_sync_screen", "q228_feed_synced_screen",
+        Dedup.dedupMaskSyncStore, Dedup.dedupSyncStore, Dedup.DedupMaskFold,
+        Seq("digests", "sigs", "bands", "keys").map(_ -> None)))
+  }
+
+  // one table-driven fold check, registered once per family
+  for (c <- foldCases) test(c.title) {
+    SparkEntry.queries(c.maskedQuery)(s, sf).collect()
+    SparkEntry.queries(c.physicalQuery)(s, sf).collect()
+    val maskPath = c.maskedStore(s, sf)
+    val physPath = c.physicalStore(s, sf)
     // fold on a COPY: the shared warm substrate must stay masked for
-    // later q231 probes in this process
+    // later probes in this process
     val fold = maskPath + "_foldspec"
     IndexStore.copy(s, maskPath, fold)
-    Search.foldDeleteMask(s, fold)
+    IndexStore.foldMasks(s, fold, c.fold)
     graft.operators.Similarity.cleanupAtExit(fold)
-    // the sidecar is gone...
+    // every mask table is gone...
     assert(IndexStore.readDeleteMask(s, fold).isEmpty,
-      "fold must drop the delete-mask table")
-    // ...every table's content equals the physically-rewritten store's
-    for (t <- Seq("postings", "doclen", "dict", "positions")) {
-      // compare by NAME: the physical apply's `join(ids, Seq("doc_id"))`
+      s"${c.name}: fold must drop the delete-mask table")
+    c.fold.masks.foreach(m => assert(!IndexStore.tableNames(s, fold).contains(m),
+      s"${c.name}: fold must drop mask table '$m'"))
+    // ...and every compared table equals the physically-rewritten store's
+    for ((t, given) <- c.compare) {
+      // compare by NAME: a physical apply's `join(ids, Seq("doc_id"))`
       // fronts the join key in the stored column order (cosmetic — every
       // reader selects by name); exceptAll is positional
-      val cols = IndexStore.read(s, fold, t).columns.sorted.map(col)
-      val a = IndexStore.read(s, fold, t).select(cols.toIndexedSeq: _*)
-      val b = IndexStore.read(s, physPath, t).select(cols.toIndexedSeq: _*)
+      val cols = given.getOrElse(IndexStore.read(s, physPath, t).columns.sorted.toSeq).map(col)
+      val a = IndexStore.read(s, fold, t).select(cols: _*)
+      val b = IndexStore.read(s, physPath, t).select(cols: _*)
       val onlyA = a.exceptAll(b).limit(5).collect().toSeq
       val onlyB = b.exceptAll(a).limit(5).collect().toSeq
       assert(onlyA.isEmpty && onlyB.isEmpty,
-        s"table '$t' differs between folded-mask and physical-rewrite stores; " +
+        s"${c.name}: table '$t' differs between folded-mask and physical stores; " +
           s"fold-only rows: $onlyA; physical-only rows: $onlyB")
     }
-    // ...and the probe is bit-equal (scores included: stats converged)
-    val got = top5(fold)
-    val want = top5(physPath)
-    assert(got.sameElements(want),
-      "post-fold BM25 top-5 must equal the physically-rewritten store's")
+    c.extra(fold, physPath)
   }
 
   test("mask scoping: a masked doc_id re-inserted in a newer segment stays visible") {
@@ -82,10 +139,7 @@ class MaskFoldSpec extends AnyFunSuite {
     Search.applyFeedToIndex(s, path, seg = 1,
       inserts = Seq((1L, "green fox")).toDF("doc_id", "text"),
       deleteIds = Seq.empty[Long].toDF("doc_id"))
-    val mask = IndexStore.readDeleteMask(s, path).get
-    val post = IndexStore.read(s, path, "postings")
-    val live = post.join(broadcast(mask),
-      post("doc_id") === mask("doc_id") && post("segment") <= mask("seq"), "left_anti")
+    val live = Search.SearchMaskFold.live(s, path).toMap.apply("postings")
     // the seg-0 "red" row is hidden, the seg-1 "green" row of the SAME id is not
     assert(live.filter(col("tok") === "red").isEmpty, "seg-0 rows of a masked id must hide")
     assert(!live.filter(col("tok") === "green" && col("doc_id") === 1L).isEmpty,
@@ -98,124 +152,115 @@ class MaskFoldSpec extends AnyFunSuite {
     assert(!folded.filter(col("tok") === "green").isEmpty)
   }
 
-  test("mixadm family: folding the masks reproduces q260's physically-rewritten store") {
-    import graft.operators.ScaleOps
-    SparkEntry.queries("q265_masked_mixadm_sync")(s, sf).collect()
-    SparkEntry.queries("q260_feed_synced_mixadm")(s, sf).collect()
-    val maskPath = ScaleOps.mixAdmMaskSyncStore(s, sf)
-    val physPath = ScaleOps.mixAdmitSyncStore(s, sf)
-    val fold = maskPath + "_foldspec"
-    IndexStore.copy(s, maskPath, fold)
-    ScaleOps.foldMixAdmMask(s, fold)
-    graft.operators.Similarity.cleanupAtExit(fold)
-    assert(IndexStore.readDeleteMask(s, fold).isEmpty,
-      "fold must drop the delete-mask sidecar")
-    assert(!IndexStore.tableNames(s, fold).contains("mask_gone"),
-      "fold must drop the gone-digest mask")
-    // the two stores saw the SAME drained feed (shared fixture), so every
-    // table must converge: keys/digests (the folded erasure), counts and
-    // rates (they telescoped across the masked legs)
-    for (t <- Seq("keys", "digests", "counts", "rates")) {
-      val cols = IndexStore.read(s, fold, t).columns.sorted.map(col)
-      val a = IndexStore.read(s, fold, t).select(cols.toIndexedSeq: _*)
-      val b = IndexStore.read(s, physPath, t).select(cols.toIndexedSeq: _*)
-      val onlyA = a.exceptAll(b).limit(5).collect().toSeq
-      val onlyB = b.exceptAll(a).limit(5).collect().toSeq
-      assert(onlyA.isEmpty && onlyB.isEmpty,
-        s"table '$t' differs between folded-mask and physical stores; " +
-          s"fold-only: $onlyA; physical-only: $onlyB")
+  /** A hand-built masked store per family, for the scoping and seg-less
+    * checks over every family's own fold frames: every `keyed` table
+    * (table, key column, mask table, mask key) holds keys 1 and 2 at
+    * segment 0 and key 1 re-inserted at segment 1; every mask hides key
+    * 1 at seq 0. String keys read "k1"/"k2". */
+  private case class Tiny(fold: IndexStore.MaskFold, seg: String,
+      tables: Seq[(String, org.apache.spark.sql.DataFrame)],
+      keyed: Seq[(String, String, String, String)],
+      masks: Seq[(String, org.apache.spark.sql.DataFrame)])
+
+  private val tinyNames =
+    Seq("search", "vector", "pq", "knn", "knn stale-list", "dedup", "mixadm")
+
+  private lazy val tiny: Map[String, Tiny] = {
+    import s.implicits._
+    import org.apache.spark.sql.Column
+    import graft.operators.{Dedup, ScaleOps, Similarity}
+    def keyOf(str: Boolean) =
+      if (str) concat(lit("k"), col("k").cast("string")) else col("k")
+    def rows(key: String, seg: String, str: Boolean = false)(extra: (String, Column)*) =
+      Seq((1L, 0L), (2L, 0L), (1L, 1L)).toDF("k", seg)
+        .select((keyOf(str).as(key) +: col(seg) +: extra.map { case (n, c) => c.as(n) }): _*)
+    def mask(key: String, str: Boolean = false) =
+      Seq(1L).toDF("k").select(keyOf(str).as(key), lit(0L).as("seq"))
+    val del = IndexStore.DeleteMaskTable
+    def graph = Seq("edges" -> rows("src", "seg")("nbr" -> lit(9L), "rn" -> lit(1)),
+      "assign" -> rows("vec_id", "seg")("cid" -> lit(0L)))
+    Map(
+      "search" -> Tiny(Search.SearchMaskFold, "segment",
+        Seq("postings" -> rows("doc_id", "segment")("tok" -> lit("t"), "tf" -> lit(1L)),
+          "doclen" -> rows("doc_id", "segment")("dl" -> lit(1L)),
+          "positions" -> rows("doc_id", "segment")("tok" -> lit("t"), "pos" -> lit(0))),
+        Seq("postings", "doclen", "positions").map(t => (t, "doc_id", del, "doc_id")),
+        Seq(del -> mask("doc_id"))),
+      "vector" -> Tiny(Similarity.vecMaskFold("assign", Seq("cid", "vec_id")), "seg",
+        Seq("assign" -> rows("vec_id", "seg")("cid" -> lit(0L))),
+        Seq(("assign", "vec_id", del, "vec_id")), Seq(del -> mask("vec_id"))),
+      "pq" -> Tiny(Similarity.vecMaskFold("codes", Seq("vec_id", "j")), "seg",
+        Seq("codes" -> rows("vec_id", "seg")("j" -> lit(0))),
+        Seq(("codes", "vec_id", del, "vec_id")), Seq(del -> mask("vec_id"))),
+      "knn" -> Tiny(Similarity.KnnMaskFold, "seg", graph,
+        Seq(("edges", "src", del, "vec_id"), ("assign", "vec_id", del, "vec_id")),
+        Seq(del -> mask("vec_id"))),
+      // the graph family's second mask: a restated list hides its old rows
+      "knn stale-list" -> Tiny(Similarity.KnnMaskFold, "seg", graph,
+        Seq(("edges", "src", Similarity.KnnStaleMaskTable, "src")),
+        Seq(Similarity.KnnStaleMaskTable -> mask("src"))),
+      "dedup" -> Tiny(Dedup.DedupMaskFold, "seg",
+        Seq("digests" -> rows("tkey", "seg", str = true)(),
+          "sigs" -> rows("doc_id", "seg")(), "bands" -> rows("doc_id", "seg")(),
+          "keys" -> rows("doc_id", "seg")()),
+        Seq(("digests", "tkey", "mask_gone", "tkey"), ("sigs", "doc_id", "mask_reps", "doc_id"),
+          ("bands", "doc_id", "mask_reps", "doc_id"), ("keys", "doc_id", del, "doc_id")),
+        Seq("mask_gone" -> mask("tkey", str = true), "mask_reps" -> mask("doc_id"),
+          del -> mask("doc_id"))),
+      "mixadm" -> Tiny(ScaleOps.MixAdmMaskFold, "seg",
+        Seq("digests" -> rows("dh", "seg", str = true)(), "keys" -> rows("doc_id", "seg")()),
+        Seq(("digests", "dh", "mask_gone", "dh"), ("keys", "doc_id", del, "doc_id")),
+        Seq("mask_gone" -> mask("dh", str = true), del -> mask("doc_id"))))
+  }
+
+  private def writeTiny(name: String, c: Tiny,
+      tables: Seq[(String, org.apache.spark.sql.DataFrame)]): String = {
+    val path = s"target/tmp/masktiny_${name.replace(' ', '_')}_" +
+      java.util.UUID.randomUUID().toString.take(8)
+    graft.operators.Similarity.cleanupAtExit(path)
+    IndexStore.write(s, path, "tinyspec", tables)
+    c.masks.foreach { case (m, df) => IndexStore.append(s, path, m, df) }
+    path
+  }
+
+  /** (key as string, segment) of every row — the masked key's seg-0 row
+    * must be gone, its seg-1 re-insertion and the unmasked key kept. */
+  private def keyRows(df: org.apache.spark.sql.DataFrame, key: String,
+      seg: String): Set[(String, Long)] =
+    df.select(regexp_replace(col(key).cast("string"), "^k", ""), col(seg)).collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSet
+
+  for (name <- tinyNames)
+    test(s"mask scoping ($name): a masked key re-inserted in a newer segment stays visible") {
+      val c = tiny(name)
+      val path = writeTiny(name, c, c.tables)
+      val live = c.fold.live(s, path).toMap
+      for ((t, key, _, _) <- c.keyed)
+        assert(keyRows(live(t), key, c.seg) == Set("2" -> 0L, "1" -> 1L),
+          s"table '$t' must hide exactly the seg-0 row of the masked key")
+      // ...and the fold preserves exactly that visibility physically
+      IndexStore.foldMasks(s, path, c.fold)
+      c.fold.masks.foreach(m => assert(!IndexStore.tableNames(s, path).contains(m),
+        s"fold must drop mask table '$m'"))
+      for ((t, key, _, _) <- c.keyed)
+        assert(keyRows(IndexStore.read(s, path, t), key, c.seg) == Set("2" -> 0L, "1" -> 1L),
+          s"folded table '$t' must hold exactly the visible rows")
     }
-  }
 
-  test("vector family: folding the mask reproduces q229's physically-rewritten assign") {
-    import graft.operators.Similarity
-    SparkEntry.queries("q232_masked_feed_sync_ann")(s, sf).collect()
-    SparkEntry.queries("q229_feed_synced_ann")(s, sf).collect()
-    val maskPath = Similarity.ivfMaskSyncStore(s, sf)
-    val physPath = Similarity.ivfSyncStore(s, sf)
-    val fold = maskPath + "_foldspec"
-    IndexStore.copy(s, maskPath, fold)
-    Similarity.foldVecMask(s, fold, "assign", Seq("cid", "vec_id"))
-    Similarity.cleanupAtExit(fold)
-    assert(IndexStore.readDeleteMask(s, fold).isEmpty)
-    val cols = Seq("cid", "vec_id", "embedding", "nrm").map(col)
-    val a = IndexStore.read(s, fold, "assign").select(cols.toIndexedSeq: _*)
-    val b = IndexStore.read(s, physPath, "assign").select(cols.toIndexedSeq: _*)
-    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
-      "folded assign must equal the physically-rewritten store's")
-  }
-
-  test("pq family: folding the mask reproduces q230's physically-rewritten codes") {
-    import graft.operators.Similarity
-    SparkEntry.queries("q233_masked_feed_sync_adc")(s, sf).collect()
-    SparkEntry.queries("q230_feed_synced_adc")(s, sf).collect()
-    val maskPath = Similarity.pqMaskSyncStore(s, sf)
-    val physPath = Similarity.pqSyncStore(s, sf)
-    val fold = maskPath + "_foldspec"
-    IndexStore.copy(s, maskPath, fold)
-    Similarity.foldVecMask(s, fold, "codes", Seq("vec_id", "j"))
-    Similarity.cleanupAtExit(fold)
-    assert(IndexStore.readDeleteMask(s, fold).isEmpty)
-    val cols = Seq("vec_id", "j", "code", "d2").map(col)
-    val a = IndexStore.read(s, fold, "codes").select(cols.toIndexedSeq: _*)
-    val b = IndexStore.read(s, physPath, "codes").select(cols.toIndexedSeq: _*)
-    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
-      "folded codes must equal the physically-rewritten store's")
-  }
-
-  test("knn-graph family: folding the masks reproduces q244's physically-synced edges") {
-    import graft.operators.Similarity
-    SparkEntry.queries("q245_masked_feed_sync_knn")(s, sf).collect()
-    SparkEntry.queries("q244_feed_synced_knn")(s, sf).collect()
-    val maskPath = Similarity.knnMaskSyncStore(s, sf)
-    val physPath = Similarity.knnSyncStore(s, sf)
-    val fold = maskPath + "_foldspec"
-    IndexStore.copy(s, maskPath, fold)
-    Similarity.foldKnnMask(s, fold)
-    graft.operators.Similarity.cleanupAtExit(fold)
-    assert(IndexStore.readDeleteMask(s, fold).isEmpty,
-      "fold must drop the delete-mask sidecar")
-    assert(Similarity.knnStaleMask(s, fold).isEmpty,
-      "fold must drop the stale-list mask")
-    // the folded edges equal the physical sync's (seg is provenance on
-    // the fold side only — the physical store collapses legs in place)
-    val cols = Seq("src", "nbr", "cosim", "rn").map(col)
-    val a = IndexStore.read(s, fold, "edges").select(cols.toIndexedSeq: _*)
-    val b = IndexStore.read(s, physPath, "edges").select(cols.toIndexedSeq: _*)
-    val onlyA = a.exceptAll(b).limit(5).collect().toSeq
-    val onlyB = b.exceptAll(a).limit(5).collect().toSeq
-    assert(onlyA.isEmpty && onlyB.isEmpty,
-      s"folded edges must equal the physically-synced store's; " +
-        s"fold-only: $onlyA; physical-only: $onlyB")
-    // membership too: folded assign equals the physical store's
-    val mcols = Seq("cid", "vec_id", "nrm").map(col)
-    val ma = IndexStore.read(s, fold, "assign").select(mcols.toIndexedSeq: _*)
-    val mb = IndexStore.read(s, physPath, "assign").select(mcols.toIndexedSeq: _*)
-    assert(ma.exceptAll(mb).isEmpty && mb.exceptAll(ma).isEmpty,
-      "folded assign must equal the physically-synced store's")
-  }
-
-  test("dedup family: folding the group-survival masks reproduces q228's rewritten store") {
-    import graft.operators.Dedup
-    SparkEntry.queries("q234_masked_feed_sync_screen")(s, sf).collect()
-    SparkEntry.queries("q228_feed_synced_screen")(s, sf).collect()
-    val maskPath = Dedup.dedupMaskSyncStore(s, sf)
-    val physPath = Dedup.dedupSyncStore(s, sf)
-    val fold = maskPath + "_foldspec"
-    IndexStore.copy(s, maskPath, fold)
-    Dedup.foldDedupMask(s, fold)
-    graft.operators.Similarity.cleanupAtExit(fold)
-    assert(IndexStore.readDeleteMask(s, fold).isEmpty)
-    for (t <- Seq("digests", "sigs", "bands", "keys")) {
-      val cols = IndexStore.read(s, physPath, t).columns.sorted.map(col)
-      val a = IndexStore.read(s, fold, t).select(cols.toIndexedSeq: _*)
-      val b = IndexStore.read(s, physPath, t).select(cols.toIndexedSeq: _*)
-      val onlyA = a.exceptAll(b).limit(5).collect().toSeq
-      val onlyB = b.exceptAll(a).limit(5).collect().toSeq
-      assert(onlyA.isEmpty && onlyB.isEmpty,
-        s"dedup table '$t' differs after fold; fold-only: $onlyA; physical-only: $onlyB")
+  for (name <- tinyNames)
+    test(s"seg-less guard ($name): a non-empty mask against a layout without the segment column throws") {
+      val c = tiny(name)
+      val path = writeTiny(name, c, c.tables.map { case (t, df) => t -> df.drop(c.seg) })
+      val e = intercept[IllegalArgumentException](c.fold.live(s, path))
+      assert(e.getMessage.contains("seg-less"),
+        s"the refusal must name the seg-less layout, got: ${e.getMessage}")
+      // an EMPTY mask passes the seg-less rows through untouched
+      for ((t, key, m, mkey) <- c.keyed) {
+        val empty = IndexStore.read(s, path, m).limit(0)
+        assert(IndexStore.maskedRead(IndexStore.read(s, path, t), empty, key, mkey, c.seg)
+          .count() == 3L, s"an empty mask must pass seg-less table '$t' through")
+      }
     }
-  }
 
   test("an ADDITIVE schema-evolved feed batch is carried into docmeta, v1 tables untouched") {
     import s.implicits._
@@ -360,7 +405,7 @@ class MaskFoldSpec extends AnyFunSuite {
       .toDF("cid", "vec_id", "seg")
     val mask = Seq((1L, 0L), (2L, 1L)).toDF("vec_id", "seq")
     def visible(h: Long): Set[Long] =
-      Similarity.applyVecMaskAsOf(assign, mask, h)
+      IndexStore.maskedRead(assign, mask, "vec_id", "vec_id", "seg", Some(h))
         .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(visible(0L) == Set(2L),
       "at h=0 the seq-1 mask must not reach back: vec 2 visible")
