@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Engine._
 import graft.{GQuery, QueryModule}
+import graft.sources.IndexStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1087,11 +1088,11 @@ object Dedup extends QueryModule {
     incrementalScreen(index.digests, index.sigs, index.bands, batch)
 
   /** Persist a frozen index as parquet tables (`digests`/`sigs`/`bands`)
-    * at `path` via [[graft.sources.IndexStore]]. `stamp` fingerprints the
+    * at `path` via [[IndexStore]]. `stamp` fingerprints the
     * source corpus so [[loadIndex]] callers can validate freshness with
     * filesystem metadata alone. */
   def persistIndex(index: DedupIndex, path: String, stamp: String = "manual"): Unit =
-    graft.sources.IndexStore.write(index.digests.sparkSession, path, stamp,
+    IndexStore.write(index.digests.sparkSession, path, stamp,
       Seq("digests" -> index.digests, "sigs" -> index.sigs, "bands" -> index.bands))
 
   /** Load a persisted index. Reads ONLY the stored signature tables —
@@ -1100,9 +1101,9 @@ object Dedup extends QueryModule {
     * opens, not a corpus rescan. */
   def loadIndex(s: SparkSession, path: String): DedupIndex =
     DedupIndex(
-      graft.sources.IndexStore.read(s, path, "digests"),
-      graft.sources.IndexStore.read(s, path, "sigs"),
-      graft.sources.IndexStore.read(s, path, "bands"))
+      IndexStore.read(s, path, "digests"),
+      IndexStore.read(s, path, "sigs"),
+      IndexStore.read(s, path, "bands"))
 
   /** Refresh a persisted index with the docs an ingest loop just ACCEPTED:
     * their digests, rep signatures, and band rows are APPENDED, so the
@@ -1130,10 +1131,10 @@ object Dedup extends QueryModule {
     val bands = capBuckets(bandRows(sigs), Seq("band", "bk"), BandCap)
     // the three appends are independent checkpointed frames — overlap
     // their fixed job costs
-    graft.sources.IndexStore.inParallel(Seq(
-      () => graft.sources.IndexStore.append(s, path, "digests", digests),
-      () => graft.sources.IndexStore.append(s, path, "sigs", sigs),
-      () => graft.sources.IndexStore.append(s, path, "bands", bands)))
+    IndexStore.inParallel(Seq(
+      () => IndexStore.append(s, path, "digests", digests),
+      () => IndexStore.append(s, path, "sigs", sigs),
+      () => IndexStore.append(s, path, "bands", bands)))
     // the increment, checkpointed: a loop that just refreshed can compose
     // (already-cached base) ∪ (this increment) instead of re-opening the
     // store — identical content to a post-refresh load
@@ -1161,8 +1162,8 @@ object Dedup extends QueryModule {
     // materialize first, exactly as screenLoop freezes decisions
     val digests = idx.digests.distinct().localCheckpoint()
     val sigsC = sigs.localCheckpoint()
-    val stamp = graft.sources.IndexStore.readStamp(s, path).getOrElse("manual")
-    graft.sources.IndexStore.write(s, path, stamp, Seq(
+    val stamp = IndexStore.readStamp(s, path).getOrElse("manual")
+    IndexStore.write(s, path, stamp, Seq(
       "digests" -> digests,
       "sigs" -> sigsC,
       "bands" -> capBuckets(bandRows(sigsC), Seq("band", "bk"), BandCap)))
@@ -1183,24 +1184,24 @@ object Dedup extends QueryModule {
     * accordingly past ~10^9 digests. `headroom` over-provisions capacity
     * so [[refreshBloom]] appends keep the realized fpp near nominal;
     * rebuild (or [[compactIndex]]-style maintenance) once a loop outgrows
-    * it. Replaced atomically; a [[graft.sources.IndexStore.write]] full
+    * it. Replaced atomically; a [[IndexStore.write]] full
     * rebuild of the index drops the sidecar with the dir, so a stale
     * bloom cannot outlive the digests it summarizes. */
   def persistBloom(s: SparkSession, path: String, fpp: Double = 0.01,
                    headroom: Long = 4L): Long =
-    graft.sources.IndexStore.writeBloom(s, path,
-      graft.sources.IndexStore.read(s, path, "digests").select("tkey"), fpp, headroom)
+    IndexStore.writeBloom(s, path,
+      IndexStore.read(s, path, "digests").select("tkey"), fpp, headroom)
 
   /** Refresh the sidecar alongside [[refreshIndex]]: one blob covering
     * the accepted docs' digests is APPENDED; per-refresh cost is the
     * accepted digests' own pass. */
   def refreshBloom(s: SparkSession, path: String, accepted: DataFrame): Unit =
-    graft.sources.IndexStore.appendBloom(s, path,
+    IndexStore.appendBloom(s, path,
       accepted.select(md5(col("text")).as("tkey")).distinct())
 
   /** Load the sidecar (all blobs OR-merged). */
   def loadBloom(s: SparkSession, path: String): org.apache.spark.util.sketch.BloomFilter =
-    graft.sources.IndexStore.loadBloom(s, path)
+    IndexStore.loadBloom(s, path)
 
   /** [[screenBatch(index:graft\.operators\.DedupIndex,batch:org\.apache\.spark\.sql\.DataFrame)*]]
     * with the bloom sidecar's negative fast path on the exact tier.
@@ -1250,20 +1251,20 @@ object Dedup extends QueryModule {
     val path = fixtureIndexPath(dir)
     synchronized {
       val stamp = "v3|" +
-        graft.sources.IndexStore.sourceStamp(s, Seq(s"$dir/documents.parquet"))
-      if (!graft.sources.IndexStore.isCurrent(s, path, stamp)) {
+        IndexStore.sourceStamp(s, Seq(s"$dir/documents.parquet"))
+      if (!IndexStore.isCurrent(s, path, stamp)) {
         val corpus = augmentedDocs(s, dir).filter(col("doc_id") < 100000L)
         val idx = buildIndex(corpus)
         val keys = corpus.select(md5(col("text")).as("tkey"), col("doc_id"))
-        graft.sources.IndexStore.write(s, path, stamp, Seq(
+        IndexStore.write(s, path, stamp, Seq(
           "digests" -> idx.digests, "sigs" -> idx.sigs,
           "bands" -> idx.bands, "keys" -> keys))
       }
     }
     DedupIndex(
-      sessionCached(s, s"incD:$dir")(graft.sources.IndexStore.read(s, path, "digests")),
-      sessionCached(s, s"incS:$dir")(graft.sources.IndexStore.read(s, path, "sigs")),
-      sessionCached(s, s"incB:$dir")(graft.sources.IndexStore.read(s, path, "bands")))
+      sessionCached(s, s"incD:$dir")(IndexStore.read(s, path, "digests")),
+      sessionCached(s, s"incS:$dir")(IndexStore.read(s, path, "sigs")),
+      sessionCached(s, s"incB:$dir")(IndexStore.read(s, path, "bands")))
   }
 
   /** Screen one arriving batch against the persisted frozen index — the
@@ -1372,16 +1373,16 @@ object Dedup extends QueryModule {
     val src = fixtureIndexPath(dir)
     val path = src + "_takedown_" + graft.operators.Similarity.processTag
     val stamp = "takedown1|v3|" +
-      graft.sources.IndexStore.sourceStamp(s, Seq(s"$dir/documents.parquet"))
+      IndexStore.sourceStamp(s, Seq(s"$dir/documents.parquet"))
     synchronized {
-      if (!graft.sources.IndexStore.isCurrent(s, path, stamp)) {
-        def rd(t: String) = graft.sources.IndexStore.read(s, src, t)
+      if (!IndexStore.isCurrent(s, path, stamp)) {
+        def rd(t: String) = IndexStore.read(s, src, t)
         val wk = augmentedDocs(s, dir)
           .filter(col("doc_id") < 100000L && col("doc_id") % 97 === 13)
           .select(md5(col("text")).as("tkey")).distinct().localCheckpoint()
         val erased = rd("keys").join(broadcast(wk), "tkey")
           .select(col("doc_id")).distinct().localCheckpoint()
-        graft.sources.IndexStore.write(s, path, stamp, Seq(
+        IndexStore.write(s, path, stamp, Seq(
           "digests" -> rd("digests").join(broadcast(wk), Seq("tkey"), "left_anti"),
           "sigs" -> rd("sigs").join(broadcast(erased), Seq("doc_id"), "left_anti"),
           "bands" -> rd("bands").join(broadcast(erased), Seq("doc_id"), "left_anti"),
@@ -1417,7 +1418,7 @@ object Dedup extends QueryModule {
         persistBloom(s, path): Unit
     }
     def rd(t: String) =
-      sessionCached(s, s"tkd$t:$dir")(graft.sources.IndexStore.read(s, path, t))
+      sessionCached(s, s"tkd$t:$dir")(IndexStore.read(s, path, t))
     val idx = DedupIndex(rd("digests"), rd("sigs"), rd("bands"))
     val all = augmentedDocs(s, dir)
     val resub = all.filter(col("doc_id") < 100000L && col("doc_id") % 97 === 13)
@@ -1502,8 +1503,8 @@ object Dedup extends QueryModule {
   def feedSyncedScreen(s: SparkSession, dir: String): DataFrame = {
     tune(s)
     val idxPath = dedupSyncStore(s, dir)
-    val meta = graft.sources.IndexStore.readMeta(s, idxPath)
-    def rd(t: String) = graft.sources.IndexStore.read(s, idxPath, t)
+    val meta = IndexStore.readMeta(s, idxPath)
+    def rd(t: String) = IndexStore.read(s, idxPath, t)
     // PROBE: the q131 arrival batch against the synced index
     val synced = DedupIndex(rd("digests"), rd("sigs"), rd("bands"))
     val newB = augmentedDocs(s, dir).filter(col("doc_id") >= 100000L)
@@ -1555,18 +1556,18 @@ object Dedup extends QueryModule {
       graft.operators.Similarity.processTag + "_" +
       dir.replaceAll("[^A-Za-z0-9.]+", "_")
     val stamp = "dedupsync2|" +
-      graft.sources.IndexStore.sourceStamp(s, Seq(s"$dir/documents.parquet"))
+      IndexStore.sourceStamp(s, Seq(s"$dir/documents.parquet"))
     synchronized {
-      if (!graft.sources.IndexStore.isCurrent(s, idxPath, stamp)) {
+      if (!IndexStore.isCurrent(s, idxPath, stamp)) {
         val f = corpusFeedFixture(s, dir, "dedupsync")
         val idx0 = buildIndex(f.base)
-        graft.sources.IndexStore.write(s, idxPath, "dedupsync-building", Seq(
+        IndexStore.write(s, idxPath, "dedupsync-building", Seq(
           "digests" -> idx0.digests, "sigs" -> idx0.sigs, "bands" -> idx0.bands,
           "keys" -> f.base.select(md5(col("text")).as("tkey"), col("doc_id"))))
         graft.operators.Similarity.cleanupAtExit(idxPath)
         val inserts = f.inserts
         val del = f.del
-        def rd(t: String) = graft.sources.IndexStore.read(s, idxPath, t)
+        def rd(t: String) = IndexStore.read(s, idxPath, t)
         // DELETE leg: group survival from the member-level keys. The
         // surviving-holder set is computed ONCE (review catch: it is both
         // the survival evidence and the replacement keys table)
@@ -1582,20 +1583,20 @@ object Dedup extends QueryModule {
         val dig2 = rd("digests").join(gone, Seq("tkey"), "left_anti").localCheckpoint()
         val sig2 = rd("sigs").join(erasedReps, Seq("doc_id"), "left_anti").localCheckpoint()
         val band2 = rd("bands").join(erasedReps, Seq("doc_id"), "left_anti").localCheckpoint()
-        graft.sources.IndexStore.inParallel(Seq(
-          () => graft.sources.IndexStore.replaceTable(s, idxPath, "digests", dig2),
-          () => graft.sources.IndexStore.replaceTable(s, idxPath, "sigs", sig2),
-          () => graft.sources.IndexStore.replaceTable(s, idxPath, "bands", band2),
-          () => graft.sources.IndexStore.replaceTable(s, idxPath, "keys", kept)))
+        IndexStore.inParallel(Seq(
+          () => IndexStore.replaceTable(s, idxPath, "digests", dig2),
+          () => IndexStore.replaceTable(s, idxPath, "sigs", sig2),
+          () => IndexStore.replaceTable(s, idxPath, "bands", band2),
+          () => IndexStore.replaceTable(s, idxPath, "keys", kept)))
         // INSERT leg: the refresh shape — the arrivals' own signatures append
         val add = buildIndex(inserts)
-        graft.sources.IndexStore.inParallel(Seq(
-          () => graft.sources.IndexStore.append(s, idxPath, "digests", add.digests),
-          () => graft.sources.IndexStore.append(s, idxPath, "sigs", add.sigs),
-          () => graft.sources.IndexStore.append(s, idxPath, "bands", add.bands),
-          () => graft.sources.IndexStore.append(s, idxPath, "keys",
+        IndexStore.inParallel(Seq(
+          () => IndexStore.append(s, idxPath, "digests", add.digests),
+          () => IndexStore.append(s, idxPath, "sigs", add.sigs),
+          () => IndexStore.append(s, idxPath, "bands", add.bands),
+          () => IndexStore.append(s, idxPath, "keys",
             inserts.select(md5(col("text")).as("tkey"), col("doc_id")))))
-        graft.sources.IndexStore.writeStamp(s, idxPath, stamp, Map(
+        IndexStore.writeStamp(s, idxPath, stamp, Map(
           "n_feed_inserts" -> inserts.count().toString,
           "n_feed_deletes" -> del.count().toString))
       }
@@ -1672,13 +1673,13 @@ object Dedup extends QueryModule {
       graft.operators.Similarity.processTag + "_" +
       dir.replaceAll("[^A-Za-z0-9.]+", "_")
     val stamp = "dedupmasksync1|" +
-      graft.sources.IndexStore.sourceStamp(s, Seq(s"$dir/documents.parquet"))
+      IndexStore.sourceStamp(s, Seq(s"$dir/documents.parquet"))
     synchronized {
-      if (!graft.sources.IndexStore.isCurrent(s, idxPath, stamp)) {
+      if (!IndexStore.isCurrent(s, idxPath, stamp)) {
         val f = corpusFeedFixture(s, dir, "dedupmasksync")
         val idx0 = buildIndex(f.base)
         def seg0(df: DataFrame) = df.withColumn("seg", lit(0L))
-        graft.sources.IndexStore.write(s, idxPath, "dedupmasksync-building", Seq(
+        IndexStore.write(s, idxPath, "dedupmasksync-building", Seq(
           "digests" -> seg0(idx0.digests), "sigs" -> seg0(idx0.sigs),
           "bands" -> seg0(idx0.bands),
           "keys" -> seg0(f.base.select(md5(col("text")).as("tkey"), col("doc_id")))))
@@ -1687,7 +1688,7 @@ object Dedup extends QueryModule {
         val del = f.del
         // group survival, computed ONCE (the q228 decision) — result
         // stored as masks, nothing rewritten
-        val keys = graft.sources.IndexStore.read(s, idxPath, "keys")
+        val keys = IndexStore.read(s, idxPath, "keys")
         val affected = keys.join(del, "doc_id").select(col("tkey")).distinct()
         val survivors = keys.join(del, Seq("doc_id"), "left_anti")
           .select(col("tkey")).distinct()
@@ -1695,27 +1696,27 @@ object Dedup extends QueryModule {
         val erasedReps = keys.groupBy(col("tkey"))
           .agg(min(col("doc_id")).as("doc_id"))
           .join(broadcast(gone), "tkey").select(col("doc_id")).localCheckpoint()
-        graft.sources.IndexStore.appendDeleteMask(s, idxPath,
+        IndexStore.appendDeleteMask(s, idxPath,
           del.withColumn("seq", lit(0L)))
-        graft.sources.IndexStore.append(s, idxPath, "mask_gone",
+        IndexStore.append(s, idxPath, "mask_gone",
           gone.withColumn("seq", lit(0L)))
-        graft.sources.IndexStore.append(s, idxPath, "mask_reps",
+        IndexStore.append(s, idxPath, "mask_reps",
           erasedReps.withColumn("seq", lit(0L)))
         // INSERT leg: the refresh shape, tagged seg 1
         val add = buildIndex(inserts)
         def seg1(df: DataFrame) = df.withColumn("seg", lit(1L))
-        graft.sources.IndexStore.inParallel(Seq(
-          () => graft.sources.IndexStore.append(s, idxPath, "digests", seg1(add.digests)),
-          () => graft.sources.IndexStore.append(s, idxPath, "sigs", seg1(add.sigs)),
-          () => graft.sources.IndexStore.append(s, idxPath, "bands", seg1(add.bands)),
-          () => graft.sources.IndexStore.append(s, idxPath, "keys",
+        IndexStore.inParallel(Seq(
+          () => IndexStore.append(s, idxPath, "digests", seg1(add.digests)),
+          () => IndexStore.append(s, idxPath, "sigs", seg1(add.sigs)),
+          () => IndexStore.append(s, idxPath, "bands", seg1(add.bands)),
+          () => IndexStore.append(s, idxPath, "keys",
             seg1(inserts.select(md5(col("text")).as("tkey"), col("doc_id"))))))
         // auto-fold policy (VERDICT r15 item 2): member-level fraction
         // (deleted ids over keys rows) — ~1% here, below the 0.1 default
-        val folded = graft.sources.IndexStore.autoFoldIfNeeded(
+        val folded = IndexStore.autoFoldIfNeeded(
           s, idxPath, "keys", "doc_id")(
-          graft.sources.IndexStore.foldMasks(s, idxPath, DedupMaskFold))
-        graft.sources.IndexStore.writeStamp(s, idxPath, stamp, Map(
+          IndexStore.foldMasks(s, idxPath, DedupMaskFold))
+        IndexStore.writeStamp(s, idxPath, stamp, Map(
           "n_feed_inserts" -> inserts.count().toString,
           "n_feed_deletes" -> del.count().toString,
           "auto_folded" -> folded.toString))
@@ -1731,16 +1732,16 @@ object Dedup extends QueryModule {
   private def dedupLiveTables(s: SparkSession, path: String,
       del: DataFrame): Seq[(String, DataFrame)] = {
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    def rd(t: String) = graft.sources.IndexStore.read(s, path, t)
+    def rd(t: String) = IndexStore.read(s, path, t)
     // absent mask tables on a stamped store = the legal post-fold state
     // (ADVICE r15): empty masks make every anti-join a no-op
     def maskTable(t: String, key: StructField) =
-      graft.sources.IndexStore.readTableOrEmpty(s, path, t,
+      IndexStore.readTableOrEmpty(s, path, t,
         StructType(Seq(key, StructField("seq", LongType)))).localCheckpoint()
     val gone = maskTable("mask_gone", StructField("tkey", StringType))
     val reps = maskTable("mask_reps", StructField("doc_id", LongType))
     def masked(t: String, mask: DataFrame, key: String) =
-      t -> graft.sources.IndexStore.maskedRead(rd(t), mask, key, key, "seg")
+      t -> IndexStore.maskedRead(rd(t), mask, key, key, "seg")
     Seq(masked("digests", gone, "tkey"), masked("sigs", reps, "doc_id"),
       masked("bands", reps, "doc_id"), masked("keys", del, "doc_id"))
   }
@@ -1751,7 +1752,7 @@ object Dedup extends QueryModule {
     * are lazy plans — nothing runs until a caller acts on them). */
   private[graft] def maskedDedupView(s: SparkSession, path: String)
       : (DedupIndex, DataFrame, DataFrame) = {
-    val del = graft.sources.IndexStore.readDeleteMaskOrEmpty(s, path, "doc_id")
+    val del = IndexStore.readDeleteMaskOrEmpty(s, path, "doc_id")
       .localCheckpoint()
     val t = dedupLiveTables(s, path, del).toMap.map { case (k, df) => k -> df.drop("seg") }
     (DedupIndex(t("digests"), t("sigs"), t("bands")), t("keys"), del)
@@ -1759,10 +1760,10 @@ object Dedup extends QueryModule {
 
   /** The dedup family's fold — MaskFoldSpec pins the result table-equal
     * to q228's physically-rewritten store. */
-  private[graft] val DedupMaskFold = graft.sources.IndexStore.MaskFold(
-    Seq(graft.sources.IndexStore.DeleteMaskTable, "mask_gone", "mask_reps"),
+  private[graft] val DedupMaskFold = IndexStore.MaskFold(
+    Seq(IndexStore.DeleteMaskTable, "mask_gone", "mask_reps"),
     (s, path) => dedupLiveTables(s, path,
-      graft.sources.IndexStore.readDeleteMaskOrEmpty(s, path, "doc_id").localCheckpoint()))
+      IndexStore.readDeleteMaskOrEmpty(s, path, "doc_id").localCheckpoint()))
 
   /** q234: the q131 arrival screen over the mask-synced dedup store —
     * q228's probe with the erasure served through masks. Decisions flow
@@ -1774,7 +1775,7 @@ object Dedup extends QueryModule {
   def maskedFeedSyncedScreen(s: SparkSession, dir: String): DataFrame = {
     tune(s)
     val path = dedupMaskSyncStore(s, dir)
-    val meta = graft.sources.IndexStore.readMeta(s, path)
+    val meta = IndexStore.readMeta(s, path)
     val (synced, _, del) = maskedDedupView(s, path)
     val newB = augmentedDocs(s, dir).filter(col("doc_id") >= 100000L)
     val audit = synced.digests
@@ -1842,7 +1843,7 @@ object Dedup extends QueryModule {
     * The loop MUTATES its index, so it cannot share q131's frozen
     * fixture index: batch 1 screens against the (session-cached,
     * content-identical) fixture index, which is then BRANCHED — a pure
-    * file copy via [[graft.sources.IndexStore.copy]], no recompute — to
+    * file copy via [[IndexStore.copy]], no recompute — to
     * a loop-private path that the refresh appends to. Cost posture per
     * batch is q131's: the batch's own signatures plus equi-joins; the
     * refresh appends the accepted reps' already-computed signature rows
@@ -1886,18 +1887,18 @@ object Dedup extends QueryModule {
       graft.operators.Similarity.processTag + "_" +
       dir.replaceAll("[^A-Za-z0-9.]+", "_")
     val stamp = "screenloop1|" +
-      graft.sources.IndexStore.sourceStamp(s, Seq(s"$dir/documents.parquet"))
+      IndexStore.sourceStamp(s, Seq(s"$dir/documents.parquet"))
     synchronized {
-      if (!graft.sources.IndexStore.isCurrent(s, path, stamp)) {
+      if (!IndexStore.isCurrent(s, path, stamp)) {
         val b1 = augmentedDocs(s, dir)
           .filter(col("doc_id") >= 100000L && col("doc_id") < 200000L)
         val d1 = screenBatch(s, dir, b1).localCheckpoint()
-        graft.sources.IndexStore.copy(s, fixtureIndexPath(dir), path)
+        IndexStore.copy(s, fixtureIndexPath(dir), path)
         graft.operators.Similarity.cleanupAtExit(path)
         val accepted1 = b1.join(
           d1.filter(col("decision") === "accept").select(col("doc_id")), "doc_id")
         refreshIndex(s, path, accepted1)
-        graft.sources.IndexStore.writeStamp(s, path, stamp)
+        IndexStore.writeStamp(s, path, stamp)
       }
     }
     path
@@ -1909,9 +1910,9 @@ object Dedup extends QueryModule {
   private def sessionCachedLoopIndex(s: SparkSession, dir: String,
       path: String): DedupIndex =
     DedupIndex(
-      sessionCached(s, s"loopD:$dir")(graft.sources.IndexStore.read(s, path, "digests")),
-      sessionCached(s, s"loopS:$dir")(graft.sources.IndexStore.read(s, path, "sigs")),
-      sessionCached(s, s"loopB:$dir")(graft.sources.IndexStore.read(s, path, "bands")))
+      sessionCached(s, s"loopD:$dir")(IndexStore.read(s, path, "digests")),
+      sessionCached(s, s"loopS:$dir")(IndexStore.read(s, path, "sigs")),
+      sessionCached(s, s"loopB:$dir")(IndexStore.read(s, path, "bands")))
 
   private val screenLoopSql = {
     val sim = (0 until 16).map(j => s"CASE WHEN a.m$j = b.m$j THEN 1 ELSE 0 END").mkString(" + ")
@@ -2004,8 +2005,8 @@ object Dedup extends QueryModule {
       .filter(col("doc_id") >= 100000L && col("doc_id") < 200000L)
     synchronized {
       val stamp = "dsq1|" +
-        graft.sources.IndexStore.sourceStamp(s, Seq(s"$dir/documents.parquet"))
-      if (!graft.sources.IndexStore.isCurrent(s, path, stamp)) {
+        IndexStore.sourceStamp(s, Seq(s"$dir/documents.parquet"))
+      if (!IndexStore.isCurrent(s, path, stamp)) {
         val idx = corpusIndex(s, dir)
         // batch 1's decisions, frozen before anything derives from them
         val d1 = screenBatch(idx, b1).localCheckpoint()
@@ -2013,24 +2014,24 @@ object Dedup extends QueryModule {
           d1.filter(col("decision") === "accept").select(col("doc_id")), "doc_id")
         val add = buildIndex(accepted1.localCheckpoint())
         val sigs1 = add.sigs.localCheckpoint()
-        graft.sources.IndexStore.write(s, path, stamp + "|building", Seq(
+        IndexStore.write(s, path, stamp + "|building", Seq(
           "digests" -> idx.digests.withColumn("seg", lit(0)),
           "sigs" -> idx.sigs.withColumn("seg", lit(0)),
           "bands" -> idx.bands.withColumn("seg", lit(0))))
-        graft.sources.IndexStore.inParallel(Seq(
-          () => graft.sources.IndexStore.append(s, path, "digests",
+        IndexStore.inParallel(Seq(
+          () => IndexStore.append(s, path, "digests",
             add.digests.withColumn("seg", lit(1))),
-          () => graft.sources.IndexStore.append(s, path, "sigs",
+          () => IndexStore.append(s, path, "sigs",
             sigs1.withColumn("seg", lit(1))),
-          () => graft.sources.IndexStore.append(s, path, "bands",
+          () => IndexStore.append(s, path, "bands",
             capBuckets(bandRows(sigs1), Seq("band", "bk"), BandCap)
               .withColumn("seg", lit(1)))))
-        graft.sources.IndexStore.writeStamp(s, path, stamp)
+        IndexStore.writeStamp(s, path, stamp)
       }
     }
     val b2 = b1.select((col("doc_id") + 300000L).as("doc_id"), col("text"), col("lang"))
     def at(h: Int): DedupIndex = {
-      def rd(t: String) = graft.sources.IndexStore.read(s, path, t)
+      def rd(t: String) = IndexStore.read(s, path, t)
         .filter(col("seg") <= h).drop("seg")
       DedupIndex(rd("digests"), rd("sigs"), rd("bands"))
     }

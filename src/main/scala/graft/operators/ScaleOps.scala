@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Engine._
 import graft.{GQuery, QueryModule}
+import graft.sources.IndexStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -625,8 +626,8 @@ object ScaleOps extends QueryModule {
     tune(s)
     val path = "target/graft_index/hll_" + dir.replaceAll("[^A-Za-z0-9.]+", "_")
     synchronized {
-      val stamp = graft.sources.IndexStore.sourceStamp(s, Seq(s"$dir/orders.parquet"))
-      if (!graft.sources.IndexStore.isCurrent(s, path, stamp))
+      val stamp = IndexStore.sourceStamp(s, Seq(s"$dir/orders.parquet"))
+      if (!IndexStore.isCurrent(s, path, stamp))
         graft.sources.SketchStore.build(
           table(s, dir, "orders").select(col("o_custkey").as("k"),
             date_format(col("o_orderdate"), "yyyy-MM").as("scope")),
@@ -2185,9 +2186,9 @@ object ScaleOps extends QueryModule {
   private[graft] def mixAdmitStore(s: SparkSession, dir: String): String = {
     val path = "target/graft_index/mixadm_" + dir.replaceAll("[^A-Za-z0-9.]+", "_")
     val stamp = "mixadm2|" +
-      graft.sources.IndexStore.sourceStamp(s, Seq(s"$dir/documents.parquet"))
+      IndexStore.sourceStamp(s, Seq(s"$dir/documents.parquet"))
     synchronized {
-      if (!graft.sources.IndexStore.isCurrent(s, path, stamp)) {
+      if (!IndexStore.isCurrent(s, path, stamp)) {
         // the probes inject arrivals at +100000/+200000 (ADVICE r19):
         // assert the headroom once per stamped build, not per probe
         graft.Engine.assertIdHeadroom(
@@ -2200,7 +2201,7 @@ object ScaleOps extends QueryModule {
         // a NULL text has no digest in either engine (md5(NULL) = NULL;
         // COUNT(DISTINCT) and IN-probes skip it) — keep the stored set
         // NULL-free so the q236 manifest count matches its oracle
-        graft.sources.IndexStore.write(s, path, stamp, Seq(
+        IndexStore.write(s, path, stamp, Seq(
           "digests" -> marked.select(col("dh"))
             .filter(col("dh").isNotNull).distinct(),
           "rates" -> rates))
@@ -2226,8 +2227,8 @@ object ScaleOps extends QueryModule {
   private[graft] def mixAdmitBatchAt(s: SparkSession, store: String,
       batch: DataFrame): DataFrame =
     mixAdmitBatchOn(
-      graft.sources.IndexStore.read(s, store, "digests"),
-      graft.sources.IndexStore.read(s, store, "rates"), batch)
+      IndexStore.read(s, store, "digests"),
+      IndexStore.read(s, store, "rates"), batch)
 
   /** The probe over explicit (digests, rates) FRAMES — the one decision
     * body behind every policy representation: the frozen store (q258),
@@ -2334,8 +2335,8 @@ object ScaleOps extends QueryModule {
     * interrupted apply now fails the next `isCurrent` and rebuilds. */
   private[graft] def applyMixAdmFeed(s: SparkSession, path: String,
       inserts: DataFrame, delKeys: DataFrame): Unit = {
-    graft.sources.IndexStore.writeStamp(s, path, "mixadmsync-applying")
-    def rd(t: String) = graft.sources.IndexStore.read(s, path, t)
+    IndexStore.writeStamp(s, path, "mixadmsync-applying")
+    def rd(t: String) = IndexStore.read(s, path, t)
     val del = broadcast(delKeys.select(col("doc_id")).localCheckpoint())
     val insKeys = digestKeys(inserts).localCheckpoint()
     val keysT = rd("keys")
@@ -2369,11 +2370,11 @@ object ScaleOps extends QueryModule {
       .groupBy(col("source")).agg(sum(col("c")).as("c"))
       .filter(col("c") > 0L).localCheckpoint()
     val rates2 = ratesFrom(counts2).localCheckpoint()
-    graft.sources.IndexStore.inParallel(Seq(
-      () => graft.sources.IndexStore.replaceTable(s, path, "keys", keys2),
-      () => graft.sources.IndexStore.replaceTable(s, path, "digests", dig2),
-      () => graft.sources.IndexStore.replaceTable(s, path, "counts", counts2),
-      () => graft.sources.IndexStore.replaceTable(s, path, "rates", rates2)))
+    IndexStore.inParallel(Seq(
+      () => IndexStore.replaceTable(s, path, "keys", keys2),
+      () => IndexStore.replaceTable(s, path, "digests", dig2),
+      () => IndexStore.replaceTable(s, path, "counts", counts2),
+      () => IndexStore.replaceTable(s, path, "rates", rates2)))
   }
 
   /** Build-if-stale the FEED-SYNCED mix-admission policy store (q260's
@@ -2429,9 +2430,9 @@ object ScaleOps extends QueryModule {
       graft.operators.Similarity.processTag + "_" +
       dir.replaceAll("[^A-Za-z0-9.]+", "_")
     val stamp = "mixadmsync1|" +
-      graft.sources.IndexStore.sourceStamp(s, Seq(s"$dir/documents.parquet"))
+      IndexStore.sourceStamp(s, Seq(s"$dir/documents.parquet"))
     synchronized {
-      if (!graft.sources.IndexStore.isCurrent(s, path, stamp)) {
+      if (!IndexStore.isCurrent(s, path, stamp)) {
         val f = mixAdmFeedFixture(s, dir, "mixadmsync")
         // v1 store: member keys, NULL-free digest set, canonical counts,
         // rates — all from the lake state the feed windows against
@@ -2439,7 +2440,7 @@ object ScaleOps extends QueryModule {
         val counts0 = canonOf(keys0)
           .groupBy(col("source")).agg(sum(col("tk")).as("c"))
           .filter(col("c") > 0L)
-        graft.sources.IndexStore.write(s, path, "mixadmsync-building", Seq(
+        IndexStore.write(s, path, "mixadmsync-building", Seq(
           "keys" -> keys0,
           "digests" -> keys0.select(col("dh"))
             .filter(col("dh").isNotNull).distinct(),
@@ -2447,7 +2448,7 @@ object ScaleOps extends QueryModule {
           "rates" -> ratesFrom(counts0)))
         graft.operators.Similarity.cleanupAtExit(path)
         applyMixAdmFeed(s, path, f.inserts, f.delKeys)
-        graft.sources.IndexStore.writeStamp(s, path, stamp, Map(
+        IndexStore.writeStamp(s, path, stamp, Map(
           "n_feed_inserts" -> f.inserts.count().toString,
           "n_feed_deletes" -> f.delKeys.count().toString))
       }
@@ -2477,14 +2478,14 @@ object ScaleOps extends QueryModule {
   def feedSyncedMixAdmission(s: SparkSession, dir: String): DataFrame = {
     tune(s)
     val store = mixAdmitSyncStore(s, dir)
-    val meta = graft.sources.IndexStore.readMeta(s, store)
+    val meta = IndexStore.readMeta(s, store)
     // count(*), not countDistinct: the digest table is distinct BY
     // CONSTRUCTION (the build writes .distinct(); the apply removes gone
     // digests and appends only absent ones, and a feed replay appends
     // nothing — spec'd) — so the structural equality holds without a
     // digest-wide distinct shuffle, keeping the audit's shuffle at
     // partial-count bytes instead of linear in index size
-    val audit = graft.sources.IndexStore.read(s, store, "digests")
+    val audit = IndexStore.read(s, store, "digests")
       .agg(count(lit(1)).as("n_digests"))
       .withColumn("n_feed_inserts", lit(meta("n_feed_inserts").toLong))
       .withColumn("n_feed_deletes", lit(meta("n_feed_deletes").toLong))
@@ -2569,19 +2570,19 @@ object ScaleOps extends QueryModule {
   private def mixAdmLiveTables(s: SparkSession, path: String,
       del: DataFrame): Seq[(String, DataFrame)] = {
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    def rd(t: String) = graft.sources.IndexStore.read(s, path, t)
-    val gone = graft.sources.IndexStore.readTableOrEmpty(s, path, "mask_gone",
+    def rd(t: String) = IndexStore.read(s, path, t)
+    val gone = IndexStore.readTableOrEmpty(s, path, "mask_gone",
       StructType(Seq(StructField("dh", StringType), StructField("seq", LongType))))
       .localCheckpoint()
-    Seq("digests" -> graft.sources.IndexStore.maskedRead(rd("digests"), gone, "dh", "dh", "seg"),
-      "keys" -> graft.sources.IndexStore.maskedRead(rd("keys"), del, "doc_id", "doc_id", "seg"))
+    Seq("digests" -> IndexStore.maskedRead(rd("digests"), gone, "dh", "dh", "seg"),
+      "keys" -> IndexStore.maskedRead(rd("keys"), del, "doc_id", "doc_id", "seg"))
   }
 
   /** The masked LIVE view of the q265 store: (digests, keys, delete
     * mask), seg dropped (probes are seg-agnostic). */
   private[graft] def maskedMixAdmView(s: SparkSession, path: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    val del = graft.sources.IndexStore.readDeleteMaskOrEmpty(s, path, "doc_id")
+    val del = IndexStore.readDeleteMaskOrEmpty(s, path, "doc_id")
       .localCheckpoint()
     val t = mixAdmLiveTables(s, path, del).toMap
     (t("digests").drop("seg"), t("keys").drop("seg"), del)
@@ -2590,10 +2591,10 @@ object ScaleOps extends QueryModule {
   /** The mix-admission family's fold — MaskFoldSpec pins the result
     * table-equal to q260's physically-rewritten store (same feed
     * fixture, same final state). */
-  private[graft] val MixAdmMaskFold = graft.sources.IndexStore.MaskFold(
-    Seq(graft.sources.IndexStore.DeleteMaskTable, "mask_gone"),
+  private[graft] val MixAdmMaskFold = IndexStore.MaskFold(
+    Seq(IndexStore.DeleteMaskTable, "mask_gone"),
     (s, path) => mixAdmLiveTables(s, path,
-      graft.sources.IndexStore.readDeleteMaskOrEmpty(s, path, "doc_id").localCheckpoint()))
+      IndexStore.readDeleteMaskOrEmpty(s, path, "doc_id").localCheckpoint()))
 
   /** Build-if-stale the mask-synced mix-admission store:
     * [[mixAdmitSyncStore]]'s lake and feed, but the delete leg lands as
@@ -2660,16 +2661,16 @@ object ScaleOps extends QueryModule {
       graft.operators.Similarity.processTag + "_" +
       dir.replaceAll("[^A-Za-z0-9.]+", "_")
     val stamp = "mixadmmasksync1|" +
-      graft.sources.IndexStore.sourceStamp(s, Seq(s"$dir/documents.parquet"))
+      IndexStore.sourceStamp(s, Seq(s"$dir/documents.parquet"))
     synchronized {
-      if (!graft.sources.IndexStore.isCurrent(s, path, stamp)) {
+      if (!IndexStore.isCurrent(s, path, stamp)) {
         val f = mixAdmFeedFixture(s, dir, "mixadmmasksync")
         val keys0 = digestKeys(f.base).localCheckpoint()
         val counts0 = canonOf(keys0)
           .groupBy(col("source")).agg(sum(col("tk")).as("c"))
           .filter(col("c") > 0L).localCheckpoint()
         def seg0(df: DataFrame) = df.withColumn("seg", lit(0L))
-        graft.sources.IndexStore.write(s, path, "mixadmmasksync-building", Seq(
+        IndexStore.write(s, path, "mixadmmasksync-building", Seq(
           "keys" -> seg0(keys0),
           "digests" -> seg0(keys0.select(col("dh"))
             .filter(col("dh").isNotNull).distinct()),
@@ -2682,9 +2683,9 @@ object ScaleOps extends QueryModule {
         // once against v1 keys, stored as masks (survivalDelta with an
         // empty arrival side — pure deletes can only ERASE digests)
         val dLeg = survivalDelta(keys0, del, insKeys.limit(0))
-        graft.sources.IndexStore.appendDeleteMask(s, path,
+        IndexStore.appendDeleteMask(s, path,
           del.withColumn("seq", lit(0L)))
-        graft.sources.IndexStore.append(s, path, "mask_gone",
+        IndexStore.append(s, path, "mask_gone",
           dLeg.gone.withColumn("seq", lit(0L)))
         // ---- insert leg against the POST-DELETE view: arrival holders
         // append; digests absent post-delete re-append at seg 1
@@ -2701,16 +2702,16 @@ object ScaleOps extends QueryModule {
           .unionByName(iLeg.newCanon.groupBy(col("source")).agg(sum(col("tk")).as("c")))
           .groupBy(col("source")).agg(sum(col("c")).as("c"))
           .filter(col("c") > 0L).localCheckpoint()
-        graft.sources.IndexStore.inParallel(Seq(
-          () => graft.sources.IndexStore.append(s, path, "keys", seg1(insKeys)),
-          () => graft.sources.IndexStore.append(s, path, "digests", seg1(iLeg.added)),
-          () => graft.sources.IndexStore.replaceTable(s, path, "counts", counts2),
-          () => graft.sources.IndexStore.replaceTable(s, path, "rates",
+        IndexStore.inParallel(Seq(
+          () => IndexStore.append(s, path, "keys", seg1(insKeys)),
+          () => IndexStore.append(s, path, "digests", seg1(iLeg.added)),
+          () => IndexStore.replaceTable(s, path, "counts", counts2),
+          () => IndexStore.replaceTable(s, path, "rates",
             ratesFrom(counts2).localCheckpoint())))
-        val folded = graft.sources.IndexStore.autoFoldIfNeeded(
+        val folded = IndexStore.autoFoldIfNeeded(
           s, path, "keys", "doc_id")(
-          graft.sources.IndexStore.foldMasks(s, path, MixAdmMaskFold))
-        graft.sources.IndexStore.writeStamp(s, path, stamp, Map(
+          IndexStore.foldMasks(s, path, MixAdmMaskFold))
+        IndexStore.writeStamp(s, path, stamp, Map(
           "n_feed_inserts" -> insKeys.count().toString,
           "n_feed_deletes" -> del.count().toString,
           "auto_folded" -> folded.toString))
@@ -2731,9 +2732,9 @@ object ScaleOps extends QueryModule {
   def maskedMixAdmission(s: SparkSession, dir: String): DataFrame = {
     tune(s)
     val path = mixAdmMaskSyncStore(s, dir)
-    val meta = graft.sources.IndexStore.readMeta(s, path)
+    val meta = IndexStore.readMeta(s, path)
     val (dig, _, del) = maskedMixAdmView(s, path)
-    val rates = graft.sources.IndexStore.read(s, path, "rates")
+    val rates = IndexStore.read(s, path, "rates")
     // count(*) is q260's audit contract (the view is duplicate-free by
     // construction: the base is distinct, seg-1 appends only digests
     // absent from the post-delete view, masks only remove)
@@ -2791,15 +2792,15 @@ object ScaleOps extends QueryModule {
     val counts0 = canonOf(keys0)
       .groupBy(col("source")).agg(sum(col("tk")).as("c"))
       .filter(col("c") > 0L)
-    require(graft.sources.IndexStore.commitSegment(s, path, MixAdmStreamTables, "segment", 0L,
+    require(IndexStore.commitSegment(s, path, MixAdmStreamTables, "segment", 0L,
         Seq("keys" -> keys0,
           "digests" -> keys0.select(col("dh")).filter(col("dh").isNotNull).distinct(),
           "deletes" -> keys0.select(col("doc_id")).limit(0),
           "dgone" -> keys0.select(col("dh")).limit(0),
           "cdelta" -> counts0)) == MixAdmStreamTables.size,
       s"fresh streaming mixadm store at $path had segments")
-    graft.sources.IndexStore.writeStamp(s, path, "mixadmstream-seeded|" +
-      graft.sources.IndexStore.sourceStamp(s, Seq(s"$dir/documents.parquet")))
+    IndexStore.writeStamp(s, path, "mixadmstream-seeded|" +
+      IndexStore.sourceStamp(s, Seq(s"$dir/documents.parquet")))
     graft.operators.Similarity.cleanupAtExit(path)
     (path, mixAdmBatchesOf(f))
   }
@@ -2821,7 +2822,7 @@ object ScaleOps extends QueryModule {
 
   /** The cross-table visible segment set of the streaming policy store. */
   private[graft] def mixAdmStreamVisible(s: SparkSession, path: String): Seq[Long] =
-    graft.sources.IndexStore.commonCommittedSegments(
+    IndexStore.commonCommittedSegments(
       s, path, MixAdmStreamTables, "segment")
 
   /** The masked LIVE view over an explicit visible segment set:
@@ -2832,7 +2833,7 @@ object ScaleOps extends QueryModule {
   private[graft] def mixAdmStreamView(s: SparkSession, path: String,
       vis: Seq[Long]): (DataFrame, DataFrame) = {
     def rd(t: String) =
-      graft.sources.IndexStore.readSegments(s, path, t, "segment", vis)
+      IndexStore.readSegments(s, path, t, "segment", vis)
     val del = rd("deletes").localCheckpoint()
     val dg = rd("dgone").localCheckpoint()
     val k0 = rd("keys")
@@ -2883,7 +2884,7 @@ object ScaleOps extends QueryModule {
       Seq("keys" -> insKeys, "digests" -> sd.added, "deletes" -> delC,
         "dgone" -> sd.gone, "cdelta" -> cd)
     }
-    def commitAll(): Int = graft.sources.IndexStore.commitSegment(
+    def commitAll(): Int = IndexStore.commitSegment(
       s, path, MixAdmStreamTables, "segment", segId, frames)
     val first = commitAll()
     ((first, commitAll()), (ins.count(), del.count()))
@@ -2904,10 +2905,10 @@ object ScaleOps extends QueryModule {
     * structural audit plus the observed replay flag. */
   private[graft] def mixAdmStreamResult(s: SparkSession, dir: String,
       path: String, replayNoop: Boolean): DataFrame = {
-    val meta = graft.sources.IndexStore.readMeta(s, path)
+    val meta = IndexStore.readMeta(s, path)
     val vis = mixAdmStreamVisible(s, path)
     val (_, dig) = mixAdmStreamView(s, path, vis)
-    val counts = graft.sources.IndexStore
+    val counts = IndexStore
       .readSegments(s, path, "cdelta", "segment", vis)
       .groupBy(col("source")).agg(sum(col("c")).as("c"))
       .filter(col("c") > 0L)
@@ -2942,7 +2943,7 @@ object ScaleOps extends QueryModule {
   /** The compaction point recorded by [[compactMixAdmStream]] — horizons
     * below it are forfeited; absent key = every horizon servable. */
   private[graft] def mixAdmCompactedThrough(s: SparkSession, path: String): Long =
-    graft.sources.IndexStore.readMeta(s, path)
+    IndexStore.readMeta(s, path)
       .get("compacted_through").map(_.toLong).getOrElse(Long.MinValue)
 
   /** q269's answer frame: the SAME policy probe at two horizons of the
@@ -2967,7 +2968,7 @@ object ScaleOps extends QueryModule {
           s"at $path — folded history is not servable")
       val vis = mixAdmStreamVisible(s, path).filter(_ <= h)
       val (_, dig) = mixAdmStreamView(s, path, vis)
-      val counts = graft.sources.IndexStore
+      val counts = IndexStore
         .readSegments(s, path, "cdelta", "segment", vis)
         .groupBy(col("source")).agg(sum(col("c")).as("c"))
         .filter(col("c") > 0L)
@@ -3009,34 +3010,34 @@ object ScaleOps extends QueryModule {
     val (keys, dig) = mixAdmStreamView(s, path, vis)
     val foldedKeys = keys.localCheckpoint()
     val foldedDig = dig.localCheckpoint()
-    val foldedCounts = graft.sources.IndexStore
+    val foldedCounts = IndexStore
       .readSegments(s, path, "cdelta", "segment", vis)
       .groupBy(col("source")).agg(sum(col("c")).as("c"))
       .localCheckpoint()
     def emptyOf(t: String, cols: Seq[String]): DataFrame =
-      graft.sources.IndexStore.readSegments(s, path, t, "segment", vis)
+      IndexStore.readSegments(s, path, t, "segment", vis)
         .select(cols.map(col): _*).limit(0).localCheckpoint()
-    graft.sources.IndexStore.inParallel(Seq(
-      () => graft.sources.IndexStore.compactSegmentLedger(s, path, "keys",
+    IndexStore.inParallel(Seq(
+      () => IndexStore.compactSegmentLedger(s, path, "keys",
         "segment", sortCols = Seq("doc_id"), rangeCols = Seq("doc_id"),
         onlySegs = Some(vis), foldInto = Some(foldedKeys),
         intoSeg = Some(into)),
-      () => graft.sources.IndexStore.compactSegmentLedger(s, path, "digests",
+      () => IndexStore.compactSegmentLedger(s, path, "digests",
         "segment", sortCols = Seq("dh"), rangeCols = Seq("dh"),
         onlySegs = Some(vis), foldInto = Some(foldedDig),
         intoSeg = Some(into)),
-      () => graft.sources.IndexStore.compactSegmentLedger(s, path, "cdelta",
+      () => IndexStore.compactSegmentLedger(s, path, "cdelta",
         "segment", sortCols = Seq("source"), rangeCols = Seq("source"),
         onlySegs = Some(vis), foldInto = Some(foldedCounts),
         intoSeg = Some(into))))
     if (masksToo)
-      graft.sources.IndexStore.inParallel(Seq(
-        () => graft.sources.IndexStore.compactSegmentLedger(s, path, "deletes",
+      IndexStore.inParallel(Seq(
+        () => IndexStore.compactSegmentLedger(s, path, "deletes",
           "segment", sortCols = Seq("doc_id"), rangeCols = Seq("doc_id"),
           onlySegs = Some(vis),
           foldInto = Some(emptyOf("deletes", Seq("doc_id"))),
           intoSeg = Some(into)),
-        () => graft.sources.IndexStore.compactSegmentLedger(s, path, "dgone",
+        () => IndexStore.compactSegmentLedger(s, path, "dgone",
           "segment", sortCols = Seq("dh"), rangeCols = Seq("dh"),
           onlySegs = Some(vis),
           foldInto = Some(emptyOf("dgone", Seq("dh"))),
@@ -3054,10 +3055,10 @@ object ScaleOps extends QueryModule {
     * fold), `masks_folded` (both mask tables serve zero visible rows). */
   private[graft] def mixAdmStreamCompactResult(s: SparkSession, dir: String,
       path: String, replayNoop: Boolean): DataFrame = {
-    val meta = graft.sources.IndexStore.readMeta(s, path)
+    val meta = IndexStore.readMeta(s, path)
     val vis = mixAdmStreamVisible(s, path)
     val (_, dig) = mixAdmStreamView(s, path, vis)
-    val counts = graft.sources.IndexStore
+    val counts = IndexStore
       .readSegments(s, path, "cdelta", "segment", vis)
       .groupBy(col("source")).agg(sum(col("c")).as("c"))
       .filter(col("c") > 0L)
@@ -3070,7 +3071,7 @@ object ScaleOps extends QueryModule {
         fs.listStatus(st.getPath).exists(_.getPath.getName.endsWith(".parquet"))
     }.toLong
     val nMaskRows = Seq("deletes", "dgone").map(t =>
-      graft.sources.IndexStore.readSegments(s, path, t, "segment", vis)
+      IndexStore.readSegments(s, path, t, "segment", vis)
         .count()).sum
     val audit = dig.agg(count(lit(1)).as("n_digests"))
       .withColumn("n_feed_inserts", lit(metaLong(meta, "n_feed_inserts")))

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Engine._
 import graft.{GQuery, QueryModule}
+import graft.sources.IndexStore
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -20,7 +21,7 @@ import org.apache.spark.sql.functions._
   * the scan never touches postings of other terms; the dictionary (one row
   * per term) broadcasts.
   *
-  * Index persistence rides [[graft.sources.IndexStore]] (stamp-validated
+  * Index persistence rides [[IndexStore]] (stamp-validated
   * guarded swap, same consistency model as the dedup/vector screening
   * indexes): build once from the corpus, every retrieval query thereafter is
   * index-only — a restart costs three parquet opens, not a corpus rescan.
@@ -105,7 +106,7 @@ object Search extends QueryModule {
   def persistIndex(s: SparkSession, path: String, stamp: String,
                    d: DataFrame): Unit = {
     val (post, dl, dict) = segmentTables(d, segment = 0)
-    graft.sources.IndexStore.write(s, path, stamp, Seq(
+    IndexStore.write(s, path, stamp, Seq(
       "postings" -> post.repartition(col("tok")).sortWithinPartitions(col("tok"), col("doc_id")),
       "positions" -> posToks(spread(d)).withColumn("segment", lit(0))
         .repartition(col("tok")).sortWithinPartitions(col("tok"), col("doc_id"), col("pos")),
@@ -121,7 +122,7 @@ object Search extends QueryModule {
     * corpus fingerprint. */
   private[graft] def fixtureStamp(s: SparkSession, dir: String): String =
     FORMAT + "|" +
-      graft.sources.IndexStore.sourceStamp(s, Seq(s"$dir/documents.parquet"))
+      IndexStore.sourceStamp(s, Seq(s"$dir/documents.parquet"))
 
   /** Build-if-stale, then serve the stored tables (session-cached reads —
     * the store is the source of truth, the cache only saves re-opens). */
@@ -129,7 +130,7 @@ object Search extends QueryModule {
     val path = fixtureIndexPath(dir)
     synchronized {
       val stamp = fixtureStamp(s, dir)
-      if (!graft.sources.IndexStore.isCurrent(s, path, stamp))
+      if (!IndexStore.isCurrent(s, path, stamp))
         persistIndex(s, path, stamp, docs(s, dir))
     }
     loadIndex(s, path, cacheKey = Some(s"search:$dir"))
@@ -140,7 +141,7 @@ object Search extends QueryModule {
   def loadIndex(s: SparkSession, path: String,
                 cacheKey: Option[String] = None): SearchIndex = {
     def rd(t: String) = {
-      def b = graft.sources.IndexStore.read(s, path, t)
+      def b = IndexStore.read(s, path, t)
       cacheKey.fold(b)(k => graft.SessionCache.cached(s, s"$k:$t")(b))
     }
     SearchIndex(rd("postings"), rd("doclen"), rd("dict"), () => rd("positions"))
@@ -354,7 +355,7 @@ object Search extends QueryModule {
 
   /** q166: segment-based incremental refresh, audited end-to-end. Builds a
     * base index over 3/4 of the corpus (segment 0), APPENDS the remaining
-    * quarter as segment 1 ([[graft.sources.IndexStore.append]] — existing
+    * quarter as segment 1 ([[IndexStore.append]] — existing
     * segment files untouched), then answers the q163 dictionary audit from
     * the merged per-segment rows. The oracle recomputes the stats from the
     * FULL corpus: what is verified is that segment-merge reads (SUM over
@@ -384,9 +385,9 @@ object Search extends QueryModule {
     val path = s"target/tmp/search_${tag}_${pid}_$sane"
     synchronized {
       val stamp = fixtureStamp(s, dir) + "|base75"
-      if (!graft.sources.IndexStore.isCurrent(s, basePath, stamp))
+      if (!IndexStore.isCurrent(s, basePath, stamp))
         persistIndex(s, basePath, stamp, base)
-      graft.sources.IndexStore.copy(s, basePath, path)
+      IndexStore.copy(s, basePath, path)
       val (post0, _, _) = segmentTables(batch, segment = 1)
       // checkpoint the increment's postings once: dl/dict derive from it,
       // so the tokenize+group pipeline runs once, not three times — then
@@ -397,15 +398,15 @@ object Search extends QueryModule {
       val dict = post.groupBy(col("tok"))
         .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"),
           max(col("tf")).as("max_tf")).withColumn("segment", lit(1))
-      graft.sources.IndexStore.inParallel(Seq(
-        () => graft.sources.IndexStore.append(s, path, "postings",
+      IndexStore.inParallel(Seq(
+        () => IndexStore.append(s, path, "postings",
           post.repartition(col("tok")).sortWithinPartitions(col("tok"), col("doc_id"))),
-        () => graft.sources.IndexStore.append(s, path, "doclen", dl),
-        () => graft.sources.IndexStore.append(s, path, "dict", dict),
+        () => IndexStore.append(s, path, "doclen", dl),
+        () => IndexStore.append(s, path, "dict", dict),
         // the positional table refreshes the same way (disjoint doc sets
         // append cleanly), segment-tagged like the BM25 tables, so phrase
         // probes on a refreshed branch stay complete AND horizon-capable
-        () => graft.sources.IndexStore.append(s, path, "positions",
+        () => IndexStore.append(s, path, "positions",
           posToks(spread(batch)).withColumn("segment", lit(1))
             .repartition(col("tok")).sortWithinPartitions(col("tok"), col("doc_id"), col("pos")))))
     }
@@ -550,22 +551,22 @@ object Search extends QueryModule {
     * table — its CONTENT is already complete and needs no recompute.
     */
   def compactSearchIndex(s: SparkSession, path: String): Unit = {
-    val stamp = graft.sources.IndexStore.readStamp(s, path).getOrElse("manual")
-    val meta = graft.sources.IndexStore.readMeta(s, path)
+    val stamp = IndexStore.readStamp(s, path).getOrElse("manual")
+    val meta = IndexStore.readMeta(s, path)
     // the three materializations are independent reads of distinct stored
     // tables — overlap their job costs (each is a small fixed-overhead job)
     var post, posn, dl: DataFrame = null
-    graft.sources.IndexStore.inParallel(Seq(
-      () => post = graft.sources.IndexStore.read(s, path, "postings")
+    IndexStore.inParallel(Seq(
+      () => post = IndexStore.read(s, path, "postings")
         .withColumn("segment", lit(0)).localCheckpoint(),
-      () => posn = graft.sources.IndexStore.read(s, path, "positions")
+      () => posn = IndexStore.read(s, path, "positions")
         .withColumn("segment", lit(0)).localCheckpoint(),
-      () => dl = graft.sources.IndexStore.read(s, path, "doclen")
+      () => dl = IndexStore.read(s, path, "doclen")
         .withColumn("segment", lit(0)).localCheckpoint()))
     val dict = post.groupBy(col("tok"))
       .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"), max(col("tf")).as("max_tf"))
       .withColumn("segment", lit(0))
-    graft.sources.IndexStore.write(s, path, stamp, Seq(
+    IndexStore.write(s, path, stamp, Seq(
       "postings" -> post.repartition(col("tok")).sortWithinPartitions(col("tok"), col("doc_id")),
       "positions" -> posn
         .repartition(col("tok")).sortWithinPartitions(col("tok"), col("doc_id"), col("pos")),
@@ -667,10 +668,10 @@ object Search extends QueryModule {
     // the four tables derive from one checkpointed tokenize — their
     // writes are independent jobs, overlapped (the q214 refresh
     // pattern); on a fresh dir all four must report "wrote"
-    require(graft.sources.IndexStore.commitSegment(s, path, indexTableNames,
+    require(IndexStore.commitSegment(s, path, indexTableNames,
         "segment", 0L, streamTables(base)) == indexTableNames.size,
       s"fresh streaming index at $path had segments")
-    graft.sources.IndexStore.writeStamp(s, path,
+    IndexStore.writeStamp(s, path,
       "searchstream1|" + fixtureStamp(s, dir))
     graft.operators.Similarity.cleanupAtExit(path)
     path
@@ -691,7 +692,7 @@ object Search extends QueryModule {
     // frames are built (one tokenize, checkpointed) only if some table
     // still needs this segment
     lazy val frames = streamTables(batch)
-    def commitAll(): Int = graft.sources.IndexStore.commitSegment(
+    def commitAll(): Int = IndexStore.commitSegment(
       s, path, indexTableNames, "segment", segId, frames)
     val first = commitAll()
     (first, commitAll())
@@ -701,7 +702,7 @@ object Search extends QueryModule {
     * segment is readable iff committed in EVERY table (no torn
     * multi-table view survives a crash between two tables' commits). */
   private[graft] def streamVisibleSegments(s: SparkSession, path: String): Seq[Long] =
-    graft.sources.IndexStore.commonCommittedSegments(
+    IndexStore.commonCommittedSegments(
       s, path, indexTableNames, "segment")
 
   /** The streamed store's four tables loaded over an EXPLICIT visible
@@ -710,7 +711,7 @@ object Search extends QueryModule {
   private def streamIndexAt(s: SparkSession, path: String,
       vis: Seq[Long]): SearchIndex = {
     def rd(t: String) =
-      graft.sources.IndexStore.readSegments(s, path, t, "segment", vis)
+      IndexStore.readSegments(s, path, t, "segment", vis)
     SearchIndex(rd("postings"), rd("doclen"), rd("dict"), () => rd("positions"))
   }
 
@@ -731,7 +732,7 @@ object Search extends QueryModule {
   private[graft] def streamSearchResult(s: SparkSession, dir: String,
       path: String, replayNoop: Boolean): DataFrame = {
     val vis = streamVisibleSegments(s, path)
-    val nseg = graft.sources.IndexStore
+    val nseg = IndexStore
       .readSegments(s, path, "postings", "segment", vis)
       .agg(countDistinct(col("segment")).as("n_segments"))
     streamTopK(s, dir, path, vis)
@@ -846,13 +847,13 @@ object Search extends QueryModule {
       graft.operators.Similarity.processTag
     val stamp = "takedown1|" + fixtureStamp(s, dir)
     synchronized {
-      if (!graft.sources.IndexStore.isCurrent(s, path, stamp)) {
+      if (!IndexStore.isCurrent(s, path, stamp)) {
         val post = idx.postings.filter(takedownKeep).localCheckpoint()
         val dict = post.groupBy(col("tok"), col("segment"))
           .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"),
             max(col("tf")).as("max_tf"))
           .select(col("tok"), col("df"), col("cf"), col("max_tf"), col("segment"))
-        graft.sources.IndexStore.write(s, path, stamp, Seq(
+        IndexStore.write(s, path, stamp, Seq(
           "postings" -> post.repartition(col("tok"))
             .sortWithinPartitions(col("tok"), col("doc_id")),
           "doclen" -> idx.doclen.filter(takedownKeep),
@@ -942,8 +943,8 @@ object Search extends QueryModule {
         "must carry doc_id:bigint and text:string; a key or type change needs " +
         "an explicit index-layout version, not a silent cast")
     val extras = inserts.columns.filterNot(Set("doc_id", "text")).toSeq
-    def rd(t: String) = graft.sources.IndexStore.read(s, path, t)
-    def hasDocMeta = graft.sources.IndexStore.tableNames(s, path).contains("docmeta")
+    def rd(t: String) = IndexStore.read(s, path, t)
+    def hasDocMeta = IndexStore.tableNames(s, path).contains("docmeta")
     if (!deleteIds.isEmpty) {
       val ids = broadcast(deleteIds.select(col("doc_id")).localCheckpoint())
       val post = rd("postings").join(ids, Seq("doc_id"), "left_anti").localCheckpoint()
@@ -959,29 +960,29 @@ object Search extends QueryModule {
       val dm = if (hasDocMeta)
         Some(readDocMeta(s, path).join(ids, Seq("doc_id"), "left_anti").localCheckpoint())
       else None
-      graft.sources.IndexStore.inParallel(Seq(
-        () => graft.sources.IndexStore.replaceTable(s, path, "postings",
+      IndexStore.inParallel(Seq(
+        () => IndexStore.replaceTable(s, path, "postings",
           post.repartition(col("tok")).sortWithinPartitions(col("tok"), col("doc_id"))),
-        () => graft.sources.IndexStore.replaceTable(s, path, "dict", dict),
-        () => graft.sources.IndexStore.replaceTable(s, path, "doclen", dl),
-        () => graft.sources.IndexStore.replaceTable(s, path, "positions",
+        () => IndexStore.replaceTable(s, path, "dict", dict),
+        () => IndexStore.replaceTable(s, path, "doclen", dl),
+        () => IndexStore.replaceTable(s, path, "positions",
           pos.repartition(col("tok"))
             .sortWithinPartitions(col("tok"), col("doc_id"), col("pos")))) ++
-        dm.map(d => () => graft.sources.IndexStore.replaceTable(s, path, "docmeta", d)))
+        dm.map(d => () => IndexStore.replaceTable(s, path, "docmeta", d)))
     }
     if (!inserts.isEmpty) {
       val core = inserts.select(col("doc_id"), col("text"))
       val (post0, dl, dict) = segmentTables(core, seg)
       val post = post0.localCheckpoint()
-      graft.sources.IndexStore.inParallel(Seq(
-        () => graft.sources.IndexStore.append(s, path, "postings",
+      IndexStore.inParallel(Seq(
+        () => IndexStore.append(s, path, "postings",
           post.repartition(col("tok")).sortWithinPartitions(col("tok"), col("doc_id"))),
-        () => graft.sources.IndexStore.append(s, path, "doclen", dl),
-        () => graft.sources.IndexStore.append(s, path, "dict", dict),
-        () => graft.sources.IndexStore.append(s, path, "positions",
+        () => IndexStore.append(s, path, "doclen", dl),
+        () => IndexStore.append(s, path, "dict", dict),
+        () => IndexStore.append(s, path, "positions",
           posToks(spread(core)).withColumn("segment", lit(seg))
             .repartition(col("tok")).sortWithinPartitions(col("tok"), col("doc_id"), col("pos")))) ++
-        (if (extras.nonEmpty) Seq(() => graft.sources.IndexStore.append(s, path, "docmeta",
+        (if (extras.nonEmpty) Seq(() => IndexStore.append(s, path, "docmeta",
           inserts.select((Seq(col("doc_id")) ++ extras.map(col)
             :+ lit(seg).cast("int").as("segment")).toIndexedSeq: _*)))
          else Seq.empty))
@@ -1019,7 +1020,7 @@ object Search extends QueryModule {
   def feedSyncedSearch(s: SparkSession, dir: String): DataFrame = {
     tune(s)
     val path = feedSyncStore(s, dir)
-    val meta = graft.sources.IndexStore.readMeta(s, path)
+    val meta = IndexStore.readMeta(s, path)
     val idx = loadIndex(s, path)
     val erased = col("doc_id") % 97 === 13 && col("doc_id") < 500000L
     val traces = Seq(idx.postings, idx.doclen, idx.positions)
@@ -1052,12 +1053,12 @@ object Search extends QueryModule {
       dir.replaceAll("[^A-Za-z0-9.]+", "_")
     val stamp = "feedsync2|" + fixtureStamp(s, dir)
     synchronized {
-      if (!graft.sources.IndexStore.isCurrent(s, idxPath, stamp)) {
+      if (!IndexStore.isCurrent(s, idxPath, stamp)) {
         val f = docFeedFixture(s, dir, "feedsync")
         persistIndex(s, idxPath, "feedsync-building", f.base)
         graft.operators.Similarity.cleanupAtExit(idxPath)
         applyFeedToIndex(s, idxPath, seg = 1, f.inserts, f.deleteIds)
-        graft.sources.IndexStore.writeStamp(s, idxPath, stamp, Map(
+        IndexStore.writeStamp(s, idxPath, stamp, Map(
           "n_feed_inserts" -> f.inserts.count().toString,
           "n_feed_deletes" -> f.deleteIds.count().toString))
       }
@@ -1125,7 +1126,7 @@ object Search extends QueryModule {
 
   /** Build-if-stale the mask-synced search store: the same lake and the
     * same v1→v3 change feed as q227, but the delete leg lands as the
-    * [[graft.sources.IndexStore.DeleteMaskTable]] sidecar — a kilobyte
+    * [[IndexStore.DeleteMaskTable]] sidecar — a kilobyte
     * `(doc_id, seq)` row-set — instead of q227's four-table physical
     * rewrite. That makes the RECURRING feed apply O(delta) end-to-end:
     * the insert leg was always delta-sized (one new segment, the q166
@@ -1145,12 +1146,12 @@ object Search extends QueryModule {
       dir.replaceAll("[^A-Za-z0-9.]+", "_")
     val stamp = "masksync1|" + fixtureStamp(s, dir)
     synchronized {
-      if (!graft.sources.IndexStore.isCurrent(s, idxPath, stamp)) {
+      if (!IndexStore.isCurrent(s, idxPath, stamp)) {
         val f = docFeedFixture(s, dir, "masksync")
         persistIndex(s, idxPath, "masksync-building", f.base)
         graft.operators.Similarity.cleanupAtExit(idxPath)
         // MASKED delete leg: O(delta) bytes — the rewrite q227 pays is gone
-        graft.sources.IndexStore.appendDeleteMask(s, idxPath,
+        IndexStore.appendDeleteMask(s, idxPath,
           f.deleteIds.withColumn("seq", lit(0L)))
         // insert leg: identical to q227's (deletes first, then the new segment)
         applyFeedToIndex(s, idxPath, seg = 1, f.inserts, f.deleteIds.limit(0))
@@ -1158,9 +1159,9 @@ object Search extends QueryModule {
         // ~1% deleted fraction sits below the 0.1 default, so the mask
         // STAYS here (q231's pre-fold semantics are the point); q237
         // exercises the fired path under a deployment-tightened knob
-        val folded = graft.sources.IndexStore.autoFoldIfNeeded(
+        val folded = IndexStore.autoFoldIfNeeded(
           s, idxPath, "doclen", "doc_id")(foldDeleteMask(s, idxPath))
-        graft.sources.IndexStore.writeStamp(s, idxPath, stamp, Map(
+        IndexStore.writeStamp(s, idxPath, stamp, Map(
           "n_feed_inserts" -> f.inserts.count().toString,
           "n_feed_deletes" -> f.deleteIds.count().toString,
           "auto_folded" -> folded.toString))
@@ -1172,20 +1173,20 @@ object Search extends QueryModule {
   /** The search family's masked read at horizon `h` — doc-keyed,
     * segment-scoped, as-of × mask composed (VERDICT r15 item 4). */
   private[graft] def maskedAsOf(df: DataFrame, mask: DataFrame, h: Long): DataFrame =
-    graft.sources.IndexStore.maskedRead(df, mask, "doc_id", "doc_id", "segment", Some(h))
+    IndexStore.maskedRead(df, mask, "doc_id", "doc_id", "segment", Some(h))
 
   /** The search family's fold: every doc-keyed table through the mask,
     * plus the per-segment dict rebuilt from the retained postings (the
     * q222/q227 erasure shape). After the fold the store is bit-identical
     * to one whose deletes were applied physically at feed time —
     * MaskFoldSpec pins that equality against the q227 store. */
-  private[graft] val SearchMaskFold = graft.sources.IndexStore.MaskFold(
-    Seq(graft.sources.IndexStore.DeleteMaskTable), { (s, path) =>
-      val mask = graft.sources.IndexStore.readDeleteMaskOrEmpty(s, path, "doc_id")
+  private[graft] val SearchMaskFold = IndexStore.MaskFold(
+    Seq(IndexStore.DeleteMaskTable), { (s, path) =>
+      val mask = IndexStore.readDeleteMaskOrEmpty(s, path, "doc_id")
         .localCheckpoint()
       def masked(df: DataFrame) =
-        graft.sources.IndexStore.maskedRead(df, mask, "doc_id", "doc_id", "segment")
-      def rd(t: String) = masked(graft.sources.IndexStore.read(s, path, t))
+        IndexStore.maskedRead(df, mask, "doc_id", "doc_id", "segment")
+      def rd(t: String) = masked(IndexStore.read(s, path, t))
       val post = rd("postings").localCheckpoint()
       Seq(
         "postings" -> post.repartition(col("tok"))
@@ -1197,7 +1198,7 @@ object Search extends QueryModule {
         "doclen" -> rd("doclen"),
         "positions" -> rd("positions").repartition(col("tok"))
           .sortWithinPartitions(col("tok"), col("doc_id"), col("pos"))) ++
-        (if (graft.sources.IndexStore.tableNames(s, path).contains("docmeta"))
+        (if (IndexStore.tableNames(s, path).contains("docmeta"))
           Seq("docmeta" -> masked(readDocMeta(s, path)))
         else Nil)
     })
@@ -1205,7 +1206,7 @@ object Search extends QueryModule {
   /** Fold the delete mask into the physical layout and drop it (the lake
     * folds its delete files the same way, q153's compact). */
   private[graft] def foldDeleteMask(s: SparkSession, path: String): Unit =
-    graft.sources.IndexStore.foldMasks(s, path, SearchMaskFold)
+    IndexStore.foldMasks(s, path, SearchMaskFold)
 
   /** q231: the q164 probe over the mask-synced store. Masked docs are
     * filtered from CANDIDATES by a broadcast anti-join applied after the
@@ -1221,15 +1222,15 @@ object Search extends QueryModule {
   def maskedFeedSync(s: SparkSession, dir: String): DataFrame = {
     tune(s)
     val path = maskSyncStore(s, dir)
-    val meta = graft.sources.IndexStore.readMeta(s, path)
+    val meta = IndexStore.readMeta(s, path)
     val idx = loadIndex(s, path)
     // a stamped store WITHOUT a mask is the legal post-fold state
     // (ADVICE r15): degrade to the empty mask — the anti-join no-ops and
     // physical == live, which is exactly what a folded store serves
-    val mask = graft.sources.IndexStore.readDeleteMaskOrEmpty(s, path, "doc_id")
+    val mask = IndexStore.readDeleteMaskOrEmpty(s, path, "doc_id")
       .localCheckpoint()
     def masked(df: DataFrame) =
-      graft.sources.IndexStore.maskedRead(df, mask, "doc_id", "doc_id", "segment")
+      IndexStore.maskedRead(df, mask, "doc_id", "doc_id", "segment")
     val live = masked(idx.doclen)
     val audit = idx.doclen.agg(count(lit(1)).as("n_docs_physical"))
       .crossJoin(live.agg(count(lit(1)).as("n_live")))
@@ -1291,21 +1292,21 @@ object Search extends QueryModule {
       dir.replaceAll("[^A-Za-z0-9.]+", "_")
     val stamp = "autofold1|" + fixtureStamp(s, dir)
     synchronized {
-      if (!graft.sources.IndexStore.isCurrent(s, idxPath, stamp)) {
+      if (!IndexStore.isCurrent(s, idxPath, stamp)) {
         val f = docFeedFixture(s, dir, "autofold")
         persistIndex(s, idxPath, "autofold-building", f.base)
         graft.operators.Similarity.cleanupAtExit(idxPath)
-        graft.sources.IndexStore.appendDeleteMask(s, idxPath,
+        IndexStore.appendDeleteMask(s, idxPath,
           f.deleteIds.withColumn("seq", lit(0L)))
         applyFeedToIndex(s, idxPath, seg = 1, f.inserts, f.deleteIds.limit(0))
         // the tightened threshold is a parameter of THIS build, not a
         // session mutation: a conf set/restore window would be observed
         // by any concurrently-building masked store in the same session
         // and spuriously fold its mask (ADVICE r16)
-        val folded = graft.sources.IndexStore.autoFoldIfNeeded(
+        val folded = IndexStore.autoFoldIfNeeded(
           s, idxPath, "doclen", "doc_id", threshold = Some(0.005))(
           foldDeleteMask(s, idxPath))
-        graft.sources.IndexStore.writeStamp(s, idxPath, stamp, Map(
+        IndexStore.writeStamp(s, idxPath, stamp, Map(
           "n_feed_inserts" -> f.inserts.count().toString,
           "n_feed_deletes" -> f.deleteIds.count().toString,
           "auto_folded" -> folded.toString))
@@ -1327,9 +1328,9 @@ object Search extends QueryModule {
   def autoFoldFeedSync(s: SparkSession, dir: String): DataFrame = {
     tune(s)
     val path = autoFoldSyncStore(s, dir)
-    val meta = graft.sources.IndexStore.readMeta(s, path)
+    val meta = IndexStore.readMeta(s, path)
     val idx = loadIndex(s, path)
-    val mask = graft.sources.IndexStore.readDeleteMaskOrEmpty(s, path, "doc_id")
+    val mask = IndexStore.readDeleteMaskOrEmpty(s, path, "doc_id")
       .localCheckpoint()
     val audit = idx.doclen.agg(count(lit(1)).as("n_docs"))
       .crossJoin(broadcast(mask.agg(count(lit(1)).as("n_mask_rows"))))
@@ -1388,12 +1389,12 @@ object Search extends QueryModule {
       dir.replaceAll("[^A-Za-z0-9.]+", "_")
     val stamp = "evolvedsync1|" + fixtureStamp(s, dir)
     synchronized {
-      if (!graft.sources.IndexStore.isCurrent(s, idxPath, stamp)) {
+      if (!IndexStore.isCurrent(s, idxPath, stamp)) {
         val f = docFeedFixture(s, dir, "evolvedsync")
         persistIndex(s, idxPath, "evolvedsync-building", f.base)
         graft.operators.Similarity.cleanupAtExit(idxPath)
         applyFeedToIndex(s, idxPath, seg = 1, f.insertsEvolved, f.deleteIds)
-        graft.sources.IndexStore.writeStamp(s, idxPath, stamp, Map(
+        IndexStore.writeStamp(s, idxPath, stamp, Map(
           "n_feed_inserts" -> f.inserts.count().toString,
           "n_feed_deletes" -> f.deleteIds.count().toString))
       }
@@ -1439,7 +1440,7 @@ object Search extends QueryModule {
 
   /** q235: the introspection read every production index deployment runs
     * before trusting a store — one row per stored table with its row
-    * count, enumerated from [[graft.sources.IndexStore.tableNames]] (the
+    * count, enumerated from [[IndexStore.tableNames]] (the
     * store's own directory listing, so a table the build forgot or a
     * stray extra table changes the ROW SET, not just a count). What
     * makes this a correctness gate rather than a debug print: every
@@ -1454,8 +1455,8 @@ object Search extends QueryModule {
     tune(s)
     searchIndex(s, dir) // build-if-stale; the manifest reads the STORE
     val path = fixtureIndexPath(dir)
-    graft.sources.IndexStore.tableNames(s, path)
-      .map(t => graft.sources.IndexStore.read(s, path, t)
+    IndexStore.tableNames(s, path)
+      .map(t => IndexStore.read(s, path, t)
         .agg(count(lit(1)).as("n_rows"))
         .select(lit(t).as("tbl"), col("n_rows")))
       .reduce(_ unionByName _)

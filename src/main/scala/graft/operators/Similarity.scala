@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Engine._
 import graft.{GQuery, QueryModule}
+import graft.sources.IndexStore
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -272,10 +273,10 @@ object Similarity extends QueryModule {
   private[graft] def corpusIvfIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val path = fixtureIvfIndexPath(dir)
     synchronized {
-      val stamp = graft.sources.IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
-      if (!graft.sources.IndexStore.isCurrent(s, path, stamp)) {
+      val stamp = IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
+      if (!IndexStore.isCurrent(s, path, stamp)) {
         val (cents, assign, m) = buildIvfIndex(table(s, dir, "embeddings"))
-        graft.sources.IndexStore.write(s, path, stamp, Seq(
+        IndexStore.write(s, path, stamp, Seq(
           "centroids" -> cents,
           "assign" -> assign.repartitionByRange(col("cid"), col("vec_id"))
             .sortWithinPartitions(col("cid"), col("vec_id"))),
@@ -283,8 +284,8 @@ object Similarity extends QueryModule {
       }
     }
     (graft.SessionCache.cached(s, s"sim:ivfc:$dir")(
-        graft.sources.IndexStore.read(s, path, "centroids")),
-      graft.sources.IndexStore.read(s, path, "assign"))
+        IndexStore.read(s, path, "centroids")),
+      IndexStore.read(s, path, "assign"))
   }
 
   /** q184: [[ivfAnn]] served FROM the persisted index — the corpus is
@@ -349,20 +350,20 @@ object Similarity extends QueryModule {
     val src = fixtureIvfIndexPath(dir)
     val path = src + "_takedown_" + processTag
     val stamp = "takedown1|" +
-      graft.sources.IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
+      IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
     synchronized {
-      if (!graft.sources.IndexStore.isCurrent(s, path, stamp)) {
-        val m = graft.sources.IndexStore.readMeta(s, src)("m").toLong
+      if (!IndexStore.isCurrent(s, path, stamp)) {
+        val m = IndexStore.readMeta(s, src)("m").toLong
         val req = table(s, dir, "embeddings")
           .filter(col("vec_id") % 89 === 17 && col("vec_id") % m =!= 0)
           .select(col("vec_id")).localCheckpoint()
-        val cents = graft.sources.IndexStore.read(s, src, "centroids")
+        val cents = IndexStore.read(s, src, "centroids")
         require(cents.join(req, cents("cid") === req("vec_id")).isEmpty,
           "IVF takedown request hits a centroid seed: erasing it requires " +
             "a cell re-seed (index rebuild), not an assign-row erasure")
-        val assign2 = graft.sources.IndexStore.read(s, src, "assign")
+        val assign2 = IndexStore.read(s, src, "assign")
           .join(broadcast(req), Seq("vec_id"), "left_anti")
-        graft.sources.IndexStore.write(s, path, stamp, Seq(
+        IndexStore.write(s, path, stamp, Seq(
           "centroids" -> cents,
           "assign" -> assign2.repartitionByRange(col("cid"), col("vec_id"))
             .sortWithinPartitions(col("cid"), col("vec_id"))),
@@ -383,9 +384,9 @@ object Similarity extends QueryModule {
   def vectorTakedown(s: SparkSession, dir: String): DataFrame = {
     tune(s)
     val path = takedownIvfBranch(s, dir)
-    val m = graft.sources.IndexStore.readMeta(s, path)("m").toLong
+    val m = IndexStore.readMeta(s, path)("m").toLong
     val assign = graft.SessionCache.cached(s, s"sim:tkda:$dir")(
-      graft.sources.IndexStore.read(s, path, "assign"))
+      IndexStore.read(s, path, "assign"))
     val erased = col("vec_id") % 89 === 17 && col("vec_id") % m =!= 0
     val audit = assign.agg(count(lit(1)).as("n_vecs"),
       sum(when(erased, 1L).otherwise(0L)).as("removed_traces"))
@@ -472,7 +473,7 @@ object Similarity extends QueryModule {
     * the same shape as the q215 streaming refresh). */
   private def coarseAssignArrivals(s: SparkSession, idxPath: String,
       inserts: DataFrame): DataFrame = {
-    val cb = graft.sources.IndexStore.read(s, idxPath, "centroids")
+    val cb = IndexStore.read(s, idxPath, "centroids")
       .select(col("cid"), col("embedding").as("qemb"), col("nc"))
     val acos = withNorm(inserts).withColumnRenamed("embedding", "vemb")
       .join(broadcast(cb))
@@ -504,10 +505,10 @@ object Similarity extends QueryModule {
   def feedSyncedAnn(s: SparkSession, dir: String): DataFrame = {
     tune(s)
     val path = ivfSyncStore(s, dir)
-    val meta = graft.sources.IndexStore.readMeta(s, path)
+    val meta = IndexStore.readMeta(s, path)
     val m = meta("m").toLong
     // PROBE: the q184 cluster-cover top-3 over the synced membership
-    val assign = graft.sources.IndexStore.read(s, path, "assign")
+    val assign = IndexStore.read(s, path, "assign")
     val erased = col("vec_id") % 89 === 17 &&
       col("vec_id") % m =!= 0 && col("vec_id") < 500000L
     val audit = assign.agg(count(lit(1)).as("n_vecs"),
@@ -527,26 +528,26 @@ object Similarity extends QueryModule {
     val idxPath = "target/tmp/ivf_sync_" + processTag + "_" +
       dir.replaceAll("[^A-Za-z0-9.]+", "_")
     val stamp = "vecsync2|" +
-      graft.sources.IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
+      IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
     synchronized {
-      if (!graft.sources.IndexStore.isCurrent(s, idxPath, stamp)) {
+      if (!IndexStore.isCurrent(s, idxPath, stamp)) {
         val f = embeddingFeedFixture(s, dir, "vecsync")
         val (cents0, assign0, m) = buildIvfIndex(f.base)
-        graft.sources.IndexStore.write(s, idxPath, "vecsync-building", Seq(
+        IndexStore.write(s, idxPath, "vecsync-building", Seq(
           "centroids" -> cents0,
           "assign" -> assign0.repartitionByRange(col("cid"), col("vec_id"))
             .sortWithinPartitions(col("cid"), col("vec_id"))))
         cleanupAtExit(idxPath)
         // DELETE leg: one anti-join over assign (q224), sort discipline kept
-        val kept = graft.sources.IndexStore.read(s, idxPath, "assign")
+        val kept = IndexStore.read(s, idxPath, "assign")
           .join(broadcast(f.del), Seq("vec_id"), "left_anti").localCheckpoint()
-        graft.sources.IndexStore.replaceTable(s, idxPath, "assign",
+        IndexStore.replaceTable(s, idxPath, "assign",
           kept.repartitionByRange(col("cid"), col("vec_id"))
             .sortWithinPartitions(col("cid"), col("vec_id")))
         // INSERT leg: coarse-assign the arrivals against the STORED centroids
-        graft.sources.IndexStore.append(s, idxPath, "assign",
+        IndexStore.append(s, idxPath, "assign",
           coarseAssignArrivals(s, idxPath, f.inserts))
-        graft.sources.IndexStore.writeStamp(s, idxPath, stamp, Map(
+        IndexStore.writeStamp(s, idxPath, stamp, Map(
           "m" -> m.toString,
           "n_feed_inserts" -> f.inserts.count().toString,
           "n_feed_deletes" -> f.del.count().toString))
@@ -632,29 +633,29 @@ object Similarity extends QueryModule {
     val idxPath = "target/tmp/ivf_msync_" + processTag + "_" +
       dir.replaceAll("[^A-Za-z0-9.]+", "_")
     val stamp = "vecmasksync1|" +
-      graft.sources.IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
+      IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
     synchronized {
-      if (!graft.sources.IndexStore.isCurrent(s, idxPath, stamp)) {
+      if (!IndexStore.isCurrent(s, idxPath, stamp)) {
         val f = embeddingFeedFixture(s, dir, "vecmasksync")
         val (cents0, assign0, m) = buildIvfIndex(f.base)
-        graft.sources.IndexStore.write(s, idxPath, "vecmasksync-building", Seq(
+        IndexStore.write(s, idxPath, "vecmasksync-building", Seq(
           "centroids" -> cents0,
           "assign" -> assign0.withColumn("seg", lit(0L))
             .repartitionByRange(col("cid"), col("vec_id"))
             .sortWithinPartitions(col("cid"), col("vec_id"))))
         cleanupAtExit(idxPath)
         // MASKED delete leg: O(delta) bytes — q229's rewrite is gone
-        graft.sources.IndexStore.appendDeleteMask(s, idxPath,
+        IndexStore.appendDeleteMask(s, idxPath,
           f.del.withColumn("seq", lit(0L)))
         // INSERT leg: coarse-assign against the STORED centroids, seg 1
-        graft.sources.IndexStore.append(s, idxPath, "assign",
+        IndexStore.append(s, idxPath, "assign",
           coarseAssignArrivals(s, idxPath, f.inserts).withColumn("seg", lit(1L)))
         // auto-fold policy (VERDICT r15 item 2): ~1% deleted sits below
         // the 0.1 default, so the mask stays — q232's point
-        val folded = graft.sources.IndexStore.autoFoldIfNeeded(
-          s, idxPath, "assign", "vec_id")(graft.sources.IndexStore.foldMasks(
+        val folded = IndexStore.autoFoldIfNeeded(
+          s, idxPath, "assign", "vec_id")(IndexStore.foldMasks(
           s, idxPath, vecMaskFold("assign", Seq("cid", "vec_id"))))
-        graft.sources.IndexStore.writeStamp(s, idxPath, stamp, Map(
+        IndexStore.writeStamp(s, idxPath, stamp, Map(
           "m" -> m.toString,
           "n_feed_inserts" -> f.inserts.count().toString,
           "n_feed_deletes" -> f.del.count().toString,
@@ -668,12 +669,12 @@ object Similarity extends QueryModule {
     * `codes`), re-laid range-sorted on `sortCols` — MaskFoldSpec pins the
     * result bit-equal to q229's/q230's physically-rewritten stores. */
   private[graft] def vecMaskFold(tbl: String, sortCols: Seq[String]) =
-    graft.sources.IndexStore.MaskFold(Seq(graft.sources.IndexStore.DeleteMaskTable),
+    IndexStore.MaskFold(Seq(IndexStore.DeleteMaskTable),
       (s, path) => {
-        val mask = graft.sources.IndexStore.readDeleteMaskOrEmpty(s, path, "vec_id")
+        val mask = IndexStore.readDeleteMaskOrEmpty(s, path, "vec_id")
           .localCheckpoint()
-        Seq(tbl -> graft.sources.IndexStore.maskedRead(
-            graft.sources.IndexStore.read(s, path, tbl), mask, "vec_id", "vec_id", "seg")
+        Seq(tbl -> IndexStore.maskedRead(
+            IndexStore.read(s, path, tbl), mask, "vec_id", "vec_id", "seg")
           .repartitionByRange(sortCols.map(col): _*)
           .sortWithinPartitions(sortCols.map(col): _*))
       })
@@ -689,13 +690,13 @@ object Similarity extends QueryModule {
   def maskedFeedSyncedAnn(s: SparkSession, dir: String): DataFrame = {
     tune(s)
     val path = ivfMaskSyncStore(s, dir)
-    val meta = graft.sources.IndexStore.readMeta(s, path)
-    val assign = graft.sources.IndexStore.read(s, path, "assign")
+    val meta = IndexStore.readMeta(s, path)
+    val assign = IndexStore.read(s, path, "assign")
     // missing mask on a stamped store = the legal post-fold state
     // (ADVICE r15): the empty mask makes the anti-join a no-op
-    val mask = graft.sources.IndexStore.readDeleteMaskOrEmpty(s, path, "vec_id")
+    val mask = IndexStore.readDeleteMaskOrEmpty(s, path, "vec_id")
       .localCheckpoint()
-    val live = graft.sources.IndexStore.maskedRead(assign, mask, "vec_id", "vec_id", "seg")
+    val live = IndexStore.maskedRead(assign, mask, "vec_id", "vec_id", "seg")
     val audit = live.agg(count(lit(1)).as("n_vecs"))
       .crossJoin(broadcast(mask.agg(count(lit(1)).as("n_mask_rows"))))
       .withColumn("n_feed_inserts", lit(meta("n_feed_inserts").toLong))
@@ -1145,13 +1146,13 @@ object Similarity extends QueryModule {
     val path = refinedIvfIndexPath(dir)
     synchronized {
       val stamp = "ivfr1|lloyd1|" +
-        graft.sources.IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
-      if (!graft.sources.IndexStore.isCurrent(s, path, stamp)) {
+        IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
+      if (!IndexStore.isCurrent(s, path, stamp)) {
         val corpus = table(s, dir, "embeddings")
         val e = withNorm(corpus.select(col("vec_id"), col("embedding")))
         val m = math.ceil(math.sqrt(corpus.count().toDouble)).toLong.max(1L)
         val (cents1, assign1) = lloydStep(e, m)
-        graft.sources.IndexStore.write(s, path, stamp, Seq(
+        IndexStore.write(s, path, stamp, Seq(
           "centroids" -> cents1
             .select(col("cid"), col("qemb").as("embedding"), col("nc")),
           "assign" -> assign1
@@ -1163,8 +1164,8 @@ object Similarity extends QueryModule {
       }
     }
     (graft.SessionCache.cached(s, s"sim:ivfrc:$dir")(
-        graft.sources.IndexStore.read(s, path, "centroids")),
-      graft.sources.IndexStore.read(s, path, "assign"))
+        IndexStore.read(s, path, "centroids")),
+      IndexStore.read(s, path, "assign"))
   }
 
   /** q267: the ANN quality gate (q188's comparison) run over BOTH
@@ -1438,15 +1439,15 @@ object Similarity extends QueryModule {
       // training depth is part of the stored content — fold it into the
       // stamp so a depth change invalidates codebooks AND codes
       val stamp = s"lloyd$PqLloydSteps|" +
-        graft.sources.IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
-      if (!graft.sources.IndexStore.isCurrent(s, path, stamp)) {
+        IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
+      if (!IndexStore.isCurrent(s, path, stamp)) {
         val (_, assign) = corpusIvfIndex(s, dir)
         val corpus = table(s, dir, "embeddings")
         val (_, cb1, mq) = pqCodebooks(corpus)
         val cbm = cb1.localCheckpoint(true) // trained once, read by encode + queries
         val codes = pqEncodeAgainst(corpus, cbm)
         val withCid = codes.join(assign.select(col("vec_id"), col("cid")), Seq("vec_id"))
-        graft.sources.IndexStore.write(s, path, stamp, Seq(
+        IndexStore.write(s, path, stamp, Seq(
           "codebooks" -> cbm,
           "codes" -> withCid.repartitionByRange(col("cid"), col("vec_id"))
             .sortWithinPartitions(col("cid"), col("vec_id"), col("j"))),
@@ -1455,8 +1456,8 @@ object Similarity extends QueryModule {
       }
     }
     (graft.SessionCache.cached(s, s"sim:pqcb:$dir")(
-        graft.sources.IndexStore.read(s, path, "codebooks")),
-      graft.sources.IndexStore.read(s, path, "codes"))
+        IndexStore.read(s, path, "codebooks")),
+      IndexStore.read(s, path, "codes"))
   }
 
   /** q198: the corpus's PQ encoding, served from the persisted index —
@@ -1610,21 +1611,21 @@ object Similarity extends QueryModule {
     val src = fixturePqIndexPath(dir)
     val path = src + "_takedown_" + processTag
     val stamp = s"takedown1|lloyd$PqLloydSteps|" +
-      graft.sources.IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
+      IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
     synchronized {
-      if (!graft.sources.IndexStore.isCurrent(s, path, stamp)) {
-        val m = graft.sources.IndexStore
+      if (!IndexStore.isCurrent(s, path, stamp)) {
+        val m = IndexStore
           .readMeta(s, fixtureIvfIndexPath(dir))("m").toLong
         val req = table(s, dir, "embeddings")
           .filter(col("vec_id") % 89 === 17 && col("vec_id") % m =!= 0)
           .select(col("vec_id")).localCheckpoint()
-        val codes2 = graft.sources.IndexStore.read(s, src, "codes")
+        val codes2 = IndexStore.read(s, src, "codes")
           .join(broadcast(req), Seq("vec_id"), "left_anti")
-        graft.sources.IndexStore.write(s, path, stamp, Seq(
-          "codebooks" -> graft.sources.IndexStore.read(s, src, "codebooks"),
+        IndexStore.write(s, path, stamp, Seq(
+          "codebooks" -> IndexStore.read(s, src, "codebooks"),
           "codes" -> codes2.repartitionByRange(col("cid"), col("vec_id"))
             .sortWithinPartitions(col("cid"), col("vec_id"), col("j"))),
-          Map("mq" -> graft.sources.IndexStore.readMeta(s, src)("mq")))
+          Map("mq" -> IndexStore.readMeta(s, src)("mq")))
         cleanupAtExit(path)
       }
     }
@@ -1642,10 +1643,10 @@ object Similarity extends QueryModule {
     tune(s)
     val path = takedownPqBranch(s, dir)
     val cb = graft.SessionCache.cached(s, s"sim:tkpqcb:$dir")(
-      graft.sources.IndexStore.read(s, path, "codebooks"))
+      IndexStore.read(s, path, "codebooks"))
     val codes = graft.SessionCache.cached(s, s"sim:tkpqc:$dir")(
-      graft.sources.IndexStore.read(s, path, "codes"))
-    val m = graft.sources.IndexStore
+      IndexStore.read(s, path, "codes"))
+    val m = IndexStore
       .readMeta(s, fixtureIvfIndexPath(dir))("m").toLong
     val erased = col("vec_id") % 89 === 17 && col("vec_id") % m =!= 0
     val audit = codes.agg(countDistinct(col("vec_id")).as("n_vecs"),
@@ -1710,9 +1711,9 @@ object Similarity extends QueryModule {
     val idxPath = "target/tmp/pq_sync_" + processTag + "_" +
       dir.replaceAll("[^A-Za-z0-9.]+", "_")
     val stamp = s"pqsync1|lloyd$PqLloydSteps|" +
-      graft.sources.IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
+      IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
     synchronized {
-      if (!graft.sources.IndexStore.isCurrent(s, idxPath, stamp)) {
+      if (!IndexStore.isCurrent(s, idxPath, stamp)) {
         // the same erasure slice as q224/q226/q229 (the shared fixture):
         // one takedown request provably leaves every serving structure,
         // and the IVF-centroid seed exclusion keeps the slice identical
@@ -1721,23 +1722,23 @@ object Similarity extends QueryModule {
         val (_, cb1, mq) = pqCodebooks(f.base)
         val cbm = cb1.localCheckpoint(true)
         // staging stamp: validates as CURRENT only after the feed apply
-        graft.sources.IndexStore.write(s, idxPath, "pqsync-building", Seq(
+        IndexStore.write(s, idxPath, "pqsync-building", Seq(
           "codebooks" -> cbm,
           "codes" -> pqEncodeAgainst(f.base, cbm)
             .repartitionByRange(col("vec_id"))
             .sortWithinPartitions(col("vec_id"), col("j"))))
         cleanupAtExit(idxPath)
         // DELETE leg: one broadcast anti-join over the codes (q226)
-        val kept = graft.sources.IndexStore.read(s, idxPath, "codes")
+        val kept = IndexStore.read(s, idxPath, "codes")
           .join(broadcast(f.del), Seq("vec_id"), "left_anti").localCheckpoint()
-        graft.sources.IndexStore.replaceTable(s, idxPath, "codes",
+        IndexStore.replaceTable(s, idxPath, "codes",
           kept.repartitionByRange(col("vec_id"))
             .sortWithinPartitions(col("vec_id"), col("j")))
         // INSERT leg: encode the arrivals against the STORED codebooks
-        graft.sources.IndexStore.append(s, idxPath, "codes",
+        IndexStore.append(s, idxPath, "codes",
           pqEncodeAgainst(f.inserts,
-            graft.sources.IndexStore.read(s, idxPath, "codebooks")))
-        graft.sources.IndexStore.writeStamp(s, idxPath, stamp, Map(
+            IndexStore.read(s, idxPath, "codebooks")))
+        IndexStore.writeStamp(s, idxPath, stamp, Map(
           "mq" -> mq.toString, "m" -> f.m.toString,
           "n_feed_inserts" -> f.inserts.count().toString,
           "n_feed_deletes" -> f.del.count().toString))
@@ -1760,11 +1761,11 @@ object Similarity extends QueryModule {
   def feedSyncedAdc(s: SparkSession, dir: String): DataFrame = {
     tune(s)
     val path = pqSyncStore(s, dir)
-    val meta = graft.sources.IndexStore.readMeta(s, path)
+    val meta = IndexStore.readMeta(s, path)
     val m = meta("m").toLong
     val cb = graft.SessionCache.cached(s, s"sim:pqsynccb:$dir")(
-      graft.sources.IndexStore.read(s, path, "codebooks"))
-    val codes = graft.sources.IndexStore.read(s, path, "codes")
+      IndexStore.read(s, path, "codebooks"))
+    val codes = IndexStore.read(s, path, "codes")
     val erased = col("vec_id") % 89 === 17 &&
       col("vec_id") % m =!= 0 && col("vec_id") < 500000L
     val audit = codes.agg(countDistinct(col("vec_id")).as("n_vecs"),
@@ -1837,32 +1838,32 @@ object Similarity extends QueryModule {
     val idxPath = "target/tmp/pq_msync_" + processTag + "_" +
       dir.replaceAll("[^A-Za-z0-9.]+", "_")
     val stamp = s"pqmasksync1|lloyd$PqLloydSteps|" +
-      graft.sources.IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
+      IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
     synchronized {
-      if (!graft.sources.IndexStore.isCurrent(s, idxPath, stamp)) {
+      if (!IndexStore.isCurrent(s, idxPath, stamp)) {
         val f = embeddingFeedFixture(s, dir, "pqmasksync")
         val (_, cb1, mq) = pqCodebooks(f.base)
         val cbm = cb1.localCheckpoint(true)
-        graft.sources.IndexStore.write(s, idxPath, "pqmasksync-building", Seq(
+        IndexStore.write(s, idxPath, "pqmasksync-building", Seq(
           "codebooks" -> cbm,
           "codes" -> pqEncodeAgainst(f.base, cbm).withColumn("seg", lit(0L))
             .repartitionByRange(col("vec_id"))
             .sortWithinPartitions(col("vec_id"), col("j"))))
         cleanupAtExit(idxPath)
         // MASKED delete leg: O(delta) bytes — q230's codes rewrite is gone
-        graft.sources.IndexStore.appendDeleteMask(s, idxPath,
+        IndexStore.appendDeleteMask(s, idxPath,
           f.del.withColumn("seq", lit(0L)))
         // INSERT leg: encode against the STORED codebooks, seg 1
-        graft.sources.IndexStore.append(s, idxPath, "codes",
+        IndexStore.append(s, idxPath, "codes",
           pqEncodeAgainst(f.inserts,
-            graft.sources.IndexStore.read(s, idxPath, "codebooks"))
+            IndexStore.read(s, idxPath, "codebooks"))
             .withColumn("seg", lit(1L)))
         // auto-fold policy (VERDICT r15 item 2); distinct-key fraction,
         // so the M-rows-per-vector codes table reads the same ~1%
-        val folded = graft.sources.IndexStore.autoFoldIfNeeded(
-          s, idxPath, "codes", "vec_id")(graft.sources.IndexStore.foldMasks(
+        val folded = IndexStore.autoFoldIfNeeded(
+          s, idxPath, "codes", "vec_id")(IndexStore.foldMasks(
           s, idxPath, vecMaskFold("codes", Seq("vec_id", "j"))))
-        graft.sources.IndexStore.writeStamp(s, idxPath, stamp, Map(
+        IndexStore.writeStamp(s, idxPath, stamp, Map(
           "mq" -> mq.toString, "m" -> f.m.toString,
           "n_feed_inserts" -> f.inserts.count().toString,
           "n_feed_deletes" -> f.del.count().toString,
@@ -1883,14 +1884,14 @@ object Similarity extends QueryModule {
   def maskedFeedSyncedAdc(s: SparkSession, dir: String): DataFrame = {
     tune(s)
     val path = pqMaskSyncStore(s, dir)
-    val meta = graft.sources.IndexStore.readMeta(s, path)
+    val meta = IndexStore.readMeta(s, path)
     val cb = graft.SessionCache.cached(s, s"sim:pqmsynccb:$dir")(
-      graft.sources.IndexStore.read(s, path, "codebooks"))
+      IndexStore.read(s, path, "codebooks"))
     // missing mask on a stamped store = the legal post-fold state
-    val mask = graft.sources.IndexStore.readDeleteMaskOrEmpty(s, path, "vec_id")
+    val mask = IndexStore.readDeleteMaskOrEmpty(s, path, "vec_id")
       .localCheckpoint()
-    val codes = graft.sources.IndexStore.maskedRead(
-      graft.sources.IndexStore.read(s, path, "codes"), mask, "vec_id", "vec_id", "seg")
+    val codes = IndexStore.maskedRead(
+      IndexStore.read(s, path, "codes"), mask, "vec_id", "vec_id", "seg")
     val audit = codes.agg(countDistinct(col("vec_id")).as("n_vecs"))
       .crossJoin(broadcast(mask.agg(count(lit(1)).as("n_mask_rows"))))
       .withColumn("n_feed_inserts", lit(meta("n_feed_inserts").toLong))
@@ -2176,7 +2177,7 @@ object Similarity extends QueryModule {
     tune(s)
     val path = compactedSeqBranch(s, ensureSeqPq(s, dir), "codes",
       Seq("cid", "vec_id", "j"))
-    val nseg = graft.sources.IndexStore.read(s, path, "codes")
+    val nseg = IndexStore.read(s, path, "codes")
       .agg(countDistinct(col("seg")).as("n_segments"))
     seqPqProbe(s, path, dir).crossJoin(broadcast(nseg))
   }
@@ -2187,11 +2188,11 @@ object Similarity extends QueryModule {
     val path = seqPqPath(dir)
     synchronized {
       val stamp = s"pqseq1|lloyd$PqLloydSteps|" +
-        graft.sources.IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
-      if (!graft.sources.IndexStore.isCurrent(s, path, stamp)) {
+        IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
+      if (!IndexStore.isCurrent(s, path, stamp)) {
         val (cb, codes) = corpusPqIndex(s, dir)
         val (cents, _) = corpusIvfIndex(s, dir)
-        graft.sources.IndexStore.write(s, path, stamp + "|building", Seq(
+        IndexStore.write(s, path, stamp + "|building", Seq(
           "codes" -> codes
             .select(col("cid"), col("vec_id"), col("j"), col("code"), col("d2"),
               lit(0).as("seg"))
@@ -2200,13 +2201,13 @@ object Similarity extends QueryModule {
         seqArrivalBatches(s, dir).foreach { case (segId, b) =>
           val acid = coarseAssign(cents, b).select(col("vec_id"), col("cid"))
           val bcodes = pqEncodeAgainst(b, cb).join(acid, Seq("vec_id"))
-          graft.sources.IndexStore.append(s, path, "codes",
+          IndexStore.append(s, path, "codes",
             bcodes.select(col("cid"), col("vec_id"), col("j"), col("code"),
                 col("d2"), lit(segId).as("seg"))
               .repartitionByRange(col("cid"), col("vec_id"))
               .sortWithinPartitions(col("cid"), col("vec_id"), col("j")))
         }
-        graft.sources.IndexStore.writeStamp(s, path, stamp)
+        IndexStore.writeStamp(s, path, stamp)
       }
     }
     path
@@ -2216,7 +2217,7 @@ object Similarity extends QueryModule {
     * full store, q212 compacted branch): base multiples of 35 scored
     * against the probed clusters' code bytes, top-3 with segment. */
   private def seqPqProbe(s: SparkSession, path: String, dir: String): DataFrame = {
-    val codes2 = graft.sources.IndexStore.read(s, path, "codes")
+    val codes2 = IndexStore.read(s, path, "codes")
     val (cents, _) = corpusIvfIndex(s, dir)
     val (cb, _) = corpusPqIndex(s, dir)
     val probes0 = table(s, dir, "embeddings")
@@ -2506,8 +2507,8 @@ object Similarity extends QueryModule {
     val path = refreshedIvfPath(dir)
     synchronized {
       val stamp = "r1|" +
-        graft.sources.IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
-      if (!graft.sources.IndexStore.isCurrent(s, path, stamp)) {
+        IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
+      if (!IndexStore.isCurrent(s, path, stamp)) {
         val (cents, assign) = corpusIvfIndex(s, dir)
         val batch = withNorm(syntheticVecBatch(s, dir))
         val acos = batch.withColumnRenamed("embedding", "vemb")
@@ -2519,12 +2520,12 @@ object Similarity extends QueryModule {
           .select(col("cid"), col("vec_id"), col("vemb").as("embedding"), col("nrm"))
         val merged = assign.select(col("cid"), col("vec_id"), col("embedding"), col("nrm"))
           .unionByName(bAssign)
-        graft.sources.IndexStore.write(s, path, stamp, Seq(
+        IndexStore.write(s, path, stamp, Seq(
           "assign" -> merged.repartitionByRange(col("cid"), col("vec_id"))
             .sortWithinPartitions(col("cid"), col("vec_id"))))
       }
     }
-    val assign2 = graft.sources.IndexStore.read(s, path, "assign")
+    val assign2 = IndexStore.read(s, path, "assign")
     val qa = assign2.filter(col("vec_id") >= 100000L && col("vec_id") < 100016L)
       .select(col("vec_id").as("qid"), col("cid"),
         col("embedding").as("qemb"), col("nrm").as("nq"))
@@ -2664,10 +2665,10 @@ object Similarity extends QueryModule {
     val path = seqIvfPath(dir)
     synchronized {
       val stamp = "seq2|" +
-        graft.sources.IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
-      if (!graft.sources.IndexStore.isCurrent(s, path, stamp)) {
+        IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
+      if (!IndexStore.isCurrent(s, path, stamp)) {
         val (cents, assign) = corpusIvfIndex(s, dir)
-        graft.sources.IndexStore.write(s, path, stamp + "|building", Seq(
+        IndexStore.write(s, path, stamp + "|building", Seq(
           "assign" -> assign
             .select(col("cid"), col("vec_id"), col("embedding"), col("nrm"),
               lit(0).as("seg"))
@@ -2677,11 +2678,11 @@ object Similarity extends QueryModule {
           val bAssign = coarseAssign(cents, b)
             .select(col("cid"), col("vec_id"), col("vemb").as("embedding"),
               col("nrm"), lit(segId).as("seg"))
-          graft.sources.IndexStore.append(s, path, "assign",
+          IndexStore.append(s, path, "assign",
             bAssign.repartitionByRange(col("cid"), col("vec_id"))
               .sortWithinPartitions(col("cid"), col("vec_id")))
         }
-        graft.sources.IndexStore.writeStamp(s, path, stamp)
+        IndexStore.writeStamp(s, path, stamp)
       }
     }
     path
@@ -2695,7 +2696,7 @@ object Similarity extends QueryModule {
 
   /** Fresh-seed the q215 streaming store, PARTITION-DIR-FIRST: the seed
     * corpus assignment lands as committed segment directory `seg=0` via
-    * [[graft.sources.IndexStore.appendSegmentIfAbsent]] — the SAME commit
+    * [[IndexStore.appendSegmentIfAbsent]] — the SAME commit
     * path every later micro-batch uses — so the store is hive-partitioned
     * from its first byte and can never mix flat files with partition dirs
     * under one table root (the layout hazard ADVICE r13 flagged). Stamp
@@ -2709,14 +2710,14 @@ object Similarity extends QueryModule {
       p.toUri, s.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) fs.delete(p, true)
     val (_, assign) = corpusIvfIndex(s, dir)
-    val committed = graft.sources.IndexStore.appendSegmentIfAbsent(s, path,
+    val committed = IndexStore.appendSegmentIfAbsent(s, path,
       "assign", "seg", 0L,
       assign.select(col("cid"), col("vec_id"), col("embedding"), col("nrm"))
         .repartitionByRange(col("cid"), col("vec_id"))
         .sortWithinPartitions(col("cid"), col("vec_id")))
     require(committed, s"fresh streaming store at $path already had seg=0")
-    graft.sources.IndexStore.writeStamp(s, path, "seqstream1|" +
-      graft.sources.IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet")))
+    IndexStore.writeStamp(s, path, "seqstream1|" +
+      IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet")))
     cleanupAtExit(path)
     path
   }
@@ -2737,22 +2738,22 @@ object Similarity extends QueryModule {
       .select(col("cid"), col("vec_id"), col("vemb").as("embedding"), col("nrm"))
       .repartitionByRange(col("cid"), col("vec_id"))
       .sortWithinPartitions(col("cid"), col("vec_id"))
-    val first = graft.sources.IndexStore.appendSegmentIfAbsent(
+    val first = IndexStore.appendSegmentIfAbsent(
       s, path, "assign", "seg", segId, rows)
-    val replay = graft.sources.IndexStore.appendSegmentIfAbsent(
+    val replay = IndexStore.appendSegmentIfAbsent(
       s, path, "assign", "seg", segId, rows)
     (first, replay)
   }
 
   /** q215's answer frame, read back MARKER-GATED
-    * ([[graft.sources.IndexStore.readCommitted]] — uncommitted partial
+    * ([[IndexStore.readCommitted]] — uncommitted partial
     * segments are invisible, their files never opened): q195's exact
     * probe over the streamed store, plus the two audit columns the
     * oracle pins — n_segments counted FROM the store (3 = seed + one
     * per micro-batch) and the replay flag the rig observed. */
   private[graft] def seqIvfStreamResult(s: SparkSession, path: String,
       replayNoop: Boolean): DataFrame = {
-    val assign = graft.sources.IndexStore.readCommitted(s, path, "assign", "seg")
+    val assign = IndexStore.readCommitted(s, path, "assign", "seg")
     val nseg = assign.agg(countDistinct(col("seg")).as("n_segments"))
     seqIvfProbeOn(assign, maxSeg = 2)
       .crossJoin(broadcast(nseg))
@@ -2771,7 +2772,7 @@ object Similarity extends QueryModule {
 
   /** q218's answer frame: the SAME probe at two horizons of the STREAMED
     * store, the as-of leg read through
-    * [[graft.sources.IndexStore.readCommittedAsOf]] — the horizon bounds
+    * [[IndexStore.readCommittedAsOf]] — the horizon bounds
     * the explicit partition-dir path list, so segment 2's directory is
     * never listed into the as-of scan's file index (planning-time
     * directory skipping, the 100 TB shape of `seg <= h`), while the full
@@ -2784,9 +2785,9 @@ object Similarity extends QueryModule {
       seqIvfProbeOn(df, maxSeg = 2)
         .select(lit(name).as("horizon"), col("qid"), col("vid"),
           col("seg"), col("cosim"), col("rn"))
-    leg(graft.sources.IndexStore.readCommitted(s, path, "assign", "seg"), "full")
+    leg(IndexStore.readCommitted(s, path, "assign", "seg"), "full")
       .unionByName(leg(
-        graft.sources.IndexStore.readCommittedAsOf(s, path, "assign", "seg", 1L),
+        IndexStore.readCommittedAsOf(s, path, "assign", "seg", 1L),
         "asof1"))
   }
 
@@ -2795,10 +2796,10 @@ object Similarity extends QueryModule {
     * pre-batch-2 horizon, q210). The horizon filter is applied only when
     * it bites, so the full probe's plan is unchanged. */
   private[graft] def seqIvfProbe(s: SparkSession, path: String, maxSeg: Int): DataFrame =
-    seqIvfProbeOn(graft.sources.IndexStore.read(s, path, "assign"), maxSeg)
+    seqIvfProbeOn(IndexStore.read(s, path, "assign"), maxSeg)
 
   /** The same probe over an ALREADY-OPENED assign frame — the q215
-    * streaming store reads through [[graft.sources.IndexStore.readCommitted]]
+    * streaming store reads through [[IndexStore.readCommitted]]
     * (marker-gated partition dirs), the flat stores through a plain read;
     * the probe math is one definition either way. Requires columns
     * (cid, vec_id, embedding, nrm, seg); `seg` is normalized to INT (a
@@ -2858,7 +2859,7 @@ object Similarity extends QueryModule {
     * than the retention window are no longer served.
     *
     * SCOPE: flat-layout stores only. A PARTITION-DIR store (the q215
-    * streaming layout, [[graft.sources.IndexStore.appendSegmentIfAbsent]])
+    * streaming layout, [[IndexStore.appendSegmentIfAbsent]])
     * is refused outright — a read-and-rewrite would flatten its
     * partition directories and drop the `_COMMITTED` markers, silently
     * breaking the exactly-once replay contract a recovering stream
@@ -2869,26 +2870,26 @@ object Similarity extends QueryModule {
     */
   def compactSeqSegments(s: SparkSession, path: String, tbl: String,
       sortCols: Seq[String], rangeCols: Seq[String] = Seq("cid", "vec_id")): Unit = {
-    graft.sources.IndexStore.tableNames(s, path).foreach { t =>
-      require(!graft.sources.IndexStore.isPartitionedTable(s, path, t),
+    IndexStore.tableNames(s, path).foreach { t =>
+      require(!IndexStore.isPartitionedTable(s, path, t),
         s"compactSeqSegments: table '$t' at $path is partition-dir layout " +
           "(streaming tagged-segment store); flat rewrite would drop its " +
           "partition dirs and _COMMITTED markers")
     }
-    val stamp = graft.sources.IndexStore.readStamp(s, path).getOrElse("manual")
-    val meta = graft.sources.IndexStore.readMeta(s, path)
+    val stamp = IndexStore.readStamp(s, path).getOrElse("manual")
+    val meta = IndexStore.readMeta(s, path)
     // localCheckpoint first: the rewrite reads the very files it replaces
-    val rows = graft.sources.IndexStore.read(s, path, tbl)
+    val rows = IndexStore.read(s, path, tbl)
       .withColumn("seg", lit(0)).localCheckpoint()
     // IndexStore.write replaces the WHOLE store directory, so every OTHER
     // table must ride along byte-equivalent or compaction would silently
     // drop it (ADVICE r12) — enumerate the stored tables and pass the
     // untouched ones through (localCheckpointed: the rewrite deletes the
     // very files they'd otherwise lazily read)
-    val others = graft.sources.IndexStore.tableNames(s, path)
+    val others = IndexStore.tableNames(s, path)
       .filterNot(_ == tbl)
-      .map(t => t -> graft.sources.IndexStore.read(s, path, t).localCheckpoint())
-    graft.sources.IndexStore.write(s, path, stamp, (
+      .map(t => t -> IndexStore.read(s, path, t).localCheckpoint())
+    IndexStore.write(s, path, stamp, (
       tbl -> rows.repartitionByRange(rangeCols.map(col): _*)
         .sortWithinPartitions(sortCols.map(col): _*)) +: others, meta)
   }
@@ -2941,10 +2942,10 @@ object Similarity extends QueryModule {
       sortCols: Seq[String]): String = {
     val path = seqCptBranchPath(src)
     synchronized {
-      val stamp = graft.sources.IndexStore.readStamp(s, src).getOrElse(
+      val stamp = IndexStore.readStamp(s, src).getOrElse(
         throw new IllegalStateException(s"sequential store at $src has no stamp"))
-      if (!graft.sources.IndexStore.isCurrent(s, path, stamp))
-        graft.sources.IndexStore.copy(s, src, path)
+      if (!IndexStore.isCurrent(s, path, stamp))
+        IndexStore.copy(s, src, path)
       compactSeqSegments(s, path, tbl, sortCols)
       cleanupAtExit(path)
     }
@@ -2966,7 +2967,7 @@ object Similarity extends QueryModule {
     tune(s)
     val path = compactedSeqBranch(s, ensureSeqIvf(s, dir), "assign",
       Seq("cid", "vec_id"))
-    val nseg = graft.sources.IndexStore.read(s, path, "assign")
+    val nseg = IndexStore.read(s, path, "assign")
       .agg(countDistinct(col("seg")).as("n_segments"))
     seqIvfProbe(s, path, maxSeg = 2).crossJoin(broadcast(nseg))
   }
@@ -3216,7 +3217,7 @@ object Similarity extends QueryModule {
     * vector), near duplicates (band collision with a corpus rep verified
     * at cosine >= 0.8, q78's production threshold), or accepted. The
     * index — corpus byte-digest set, rep norms, band rows — is PERSISTED
-    * as parquet signature tables ([[graft.sources.IndexStore]]) and
+    * as parquet signature tables ([[IndexStore]]) and
     * loaded thereafter, so "corpus never re-bucketed" holds across
     * process restarts, not just across queries; per-batch cost is the
     * batch's own signatures plus two equi-joins.
@@ -3310,20 +3311,20 @@ object Similarity extends QueryModule {
     * input shrinks to bloom hits with decisions untouched. */
   def persistVecBloom(s: SparkSession, path: String, fpp: Double = 0.01,
                       headroom: Long = 4L): Long =
-    graft.sources.IndexStore.writeBloom(s, path,
-      graft.sources.IndexStore.read(s, path, "digests").select(vecBloomKey),
+    IndexStore.writeBloom(s, path,
+      IndexStore.read(s, path, "digests").select(vecBloomKey),
       fpp, headroom)
 
   /** Refresh the sidecar alongside [[refreshVecIndex]] with the accepted
     * vectors' digests. */
   def refreshVecBloom(s: SparkSession, path: String, accepted: DataFrame): Unit =
-    graft.sources.IndexStore.appendBloom(s, path,
+    IndexStore.appendBloom(s, path,
       accepted.select(xxhash64(col("embedding")).as("k1"), hash(col("embedding")).as("k2"))
         .distinct().select(vecBloomKey))
 
   /** Load the sidecar (all blobs OR-merged). */
   def loadVecBloom(s: SparkSession, path: String): org.apache.spark.util.sketch.BloomFilter =
-    graft.sources.IndexStore.loadBloom(s, path)
+    IndexStore.loadBloom(s, path)
 
   /** [[screenVecBatch(index:graft\.operators\.VecIndex,batch:org\.apache\.spark\.sql\.DataFrame,bloom:Option[org\.apache\.spark\.broadcast\.Broadcast[org\.apache\.spark\.util\.sketch\.BloomFilter]])*]]
     * with the sidecar's negative fast path on the exact tier. */
@@ -3335,20 +3336,20 @@ object Similarity extends QueryModule {
   }
 
   /** Persist a vector index (tables `digests`/`reps`/`bands`, bit width
-    * in the store metadata) via [[graft.sources.IndexStore]]. */
+    * in the store metadata) via [[IndexStore]]. */
   def persistVecIndex(index: VecIndex, path: String, stamp: String = "manual"): Unit =
-    graft.sources.IndexStore.write(index.reps.sparkSession, path, stamp,
+    IndexStore.write(index.reps.sparkSession, path, stamp,
       Seq("digests" -> index.digests, "reps" -> index.reps, "bands" -> index.bands),
       Map("bits" -> index.bits.toString))
 
   /** Load a persisted vector index — three parquet opens plus the stored
     * bit width; the corpus itself is never touched. */
   def loadVecIndex(s: SparkSession, path: String): VecIndex = {
-    val meta = graft.sources.IndexStore.readMeta(s, path)
+    val meta = IndexStore.readMeta(s, path)
     VecIndex(
-      graft.sources.IndexStore.read(s, path, "digests"),
-      graft.sources.IndexStore.read(s, path, "reps"),
-      graft.sources.IndexStore.read(s, path, "bands"),
+      IndexStore.read(s, path, "digests"),
+      IndexStore.read(s, path, "reps"),
+      IndexStore.read(s, path, "bands"),
       meta.getOrElse("bits",
         throw new IllegalStateException(s"vec index at $path has no bits meta")).toInt)
   }
@@ -3358,7 +3359,7 @@ object Similarity extends QueryModule {
     * increment — it is an index property, and probing with a different
     * width would silently miss every stored bucket. */
   def refreshVecIndex(s: SparkSession, path: String, accepted: DataFrame): VecIndex = {
-    val bits = graft.sources.IndexStore.readMeta(s, path)
+    val bits = IndexStore.readMeta(s, path)
       .getOrElse("bits",
         throw new IllegalStateException(s"vec index at $path has no bits meta")).toInt
     // checkpoint the increment once: the three appends would otherwise
@@ -3376,10 +3377,10 @@ object Similarity extends QueryModule {
       .select(col("vec_id"), col("band"), col("bucket"))
     // independent appends (all off checkpointed frames) — overlap their
     // fixed job costs
-    graft.sources.IndexStore.inParallel(Seq(
-      () => graft.sources.IndexStore.append(s, path, "digests", digests),
-      () => graft.sources.IndexStore.append(s, path, "reps", reps),
-      () => graft.sources.IndexStore.append(s, path, "bands", bands)))
+    IndexStore.inParallel(Seq(
+      () => IndexStore.append(s, path, "digests", digests),
+      () => IndexStore.append(s, path, "reps", reps),
+      () => IndexStore.append(s, path, "bands", bands)))
     // the increment, checkpointed: a loop that just refreshed can compose
     // (already-cached base) ∪ (this increment) instead of re-opening the
     // store — identical content to a post-refresh load
@@ -3401,8 +3402,8 @@ object Similarity extends QueryModule {
     val idx = loadVecIndex(s, path)
     val digests = idx.digests.distinct().localCheckpoint()
     val reps = idx.reps.dropDuplicates("vec_id").localCheckpoint()
-    val stamp = graft.sources.IndexStore.readStamp(s, path).getOrElse("manual")
-    graft.sources.IndexStore.write(s, path, stamp, Seq(
+    val stamp = IndexStore.readStamp(s, path).getOrElse("manual")
+    IndexStore.write(s, path, stamp, Seq(
       "digests" -> digests,
       "reps" -> reps,
       "bands" -> signBands(reps, idx.bits).select(col("vec_id"), col("band"), col("bucket"))),
@@ -3416,20 +3417,20 @@ object Similarity extends QueryModule {
   private def corpusVecIndex(s: SparkSession, dir: String): VecIndex = {
     val path = fixtureVecIndexPath(dir)
     synchronized {
-      val stamp = graft.sources.IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
-      if (!graft.sources.IndexStore.isCurrent(s, path, stamp))
+      val stamp = IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
+      if (!IndexStore.isCurrent(s, path, stamp))
         persistVecIndex(
           buildVecIndex(table(s, dir, "embeddings").select(col("vec_id"), col("embedding"))),
           path, stamp)
     }
     VecIndex(
       graft.SessionCache.cached(s, s"sim:idxdig:$dir")(
-        graft.sources.IndexStore.read(s, path, "digests")),
+        IndexStore.read(s, path, "digests")),
       graft.SessionCache.cached(s, s"sim:idxreps:$dir")(
-        graft.sources.IndexStore.read(s, path, "reps")),
+        IndexStore.read(s, path, "reps")),
       graft.SessionCache.cached(s, s"sim:idxbands:$dir")(
-        graft.sources.IndexStore.read(s, path, "bands")),
-      graft.sources.IndexStore.readMeta(s, path)
+        IndexStore.read(s, path, "bands")),
+      IndexStore.readMeta(s, path)
         .getOrElse("bits",
           throw new IllegalStateException(s"vec index at $path has no bits meta")).toInt)
   }
@@ -3516,20 +3517,20 @@ object Similarity extends QueryModule {
     val path = "target/tmp/vidx_loop_" + processTag + "_" +
       dir.replaceAll("[^A-Za-z0-9.]+", "_")
     val stamp = "vecloop1|" +
-      graft.sources.IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
+      IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
     synchronized {
-      if (!graft.sources.IndexStore.isCurrent(s, path, stamp)) {
+      if (!IndexStore.isCurrent(s, path, stamp)) {
         val b1 = syntheticVecBatch(s, dir)
         val d1 = screenVecBatch(s, dir, b1).localCheckpoint()
-        graft.sources.IndexStore.copy(s, fixtureVecIndexPath(dir), path)
+        IndexStore.copy(s, fixtureVecIndexPath(dir), path)
         cleanupAtExit(path)
         // the copied stamp carries the `bits` meta — an index property
         // probes must reuse; carry it through the loop's own stamp
-        val meta = graft.sources.IndexStore.readMeta(s, path)
+        val meta = IndexStore.readMeta(s, path)
         val accepted1 = b1.join(
           d1.filter(col("decision") === "accept").select(col("vec_id")), "vec_id")
         refreshVecIndex(s, path, accepted1)
-        graft.sources.IndexStore.writeStamp(s, path, stamp, meta)
+        IndexStore.writeStamp(s, path, stamp, meta)
       }
     }
     path
@@ -3945,11 +3946,11 @@ object Similarity extends QueryModule {
     // digests + per-source rates, re-derived from the raw corpus)
     val knng2Path = knnGraphNp2Store(s, dir)
     val mixadmPath = graft.operators.ScaleOps.mixAdmitStore(s, dir)
-    val optional = Set("bloom", graft.sources.IndexStore.DeleteMaskTable,
+    val optional = Set("bloom", IndexStore.DeleteMaskTable,
       "mask_gone", "mask_reps", "mask_stale")
     def rows(family: String, path: String): Seq[DataFrame] =
-      graft.sources.IndexStore.tableNames(s, path).filterNot(optional)
-        .map(t => graft.sources.IndexStore.read(s, path, t)
+      IndexStore.tableNames(s, path).filterNot(optional)
+        .map(t => IndexStore.read(s, path, t)
           .agg(count(lit(1)).as("n_rows"))
           .select(lit(family).as("family"), lit(t).as("tbl"), col("n_rows")))
     (rows("dedup", dedupPath) ++
@@ -4327,10 +4328,10 @@ object Similarity extends QueryModule {
     // served by) the default path
     val np = s.conf.getOption("spark.graft.knn.nprobe").getOrElse("1")
     val stamp = s"knng1|np$np|" +
-      graft.sources.IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
+      IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
     synchronized {
-      if (!graft.sources.IndexStore.isCurrent(s, path, stamp))
-        graft.sources.IndexStore.write(s, path, stamp,
+      if (!IndexStore.isCurrent(s, path, stamp))
+        IndexStore.write(s, path, stamp,
           Seq("edges" -> knnGraphFrame(s, dir)))
     }
     path
@@ -4359,14 +4360,14 @@ object Similarity extends QueryModule {
       "default graph; a widened (spark.graft.knn.nprobe>1) graph must be " +
       "rebuilt from the filtered corpus instead")
     val stamp = s"knngtd1|np$np|" +
-      graft.sources.IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
+      IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
     synchronized {
-      if (!graft.sources.IndexStore.isCurrent(s, path, stamp)) {
-        graft.sources.IndexStore.copy(s, src, path)
+      if (!IndexStore.isCurrent(s, path, stamp)) {
+        IndexStore.copy(s, src, path)
         cleanupAtExit(path)
         val del = table(s, dir, "embeddings")
           .filter(col("vec_id") % 89 === 17).select(col("vec_id")).localCheckpoint()
-        val edges = graft.sources.IndexStore.read(s, path, "edges")
+        val edges = IndexStore.read(s, path, "edges")
         val delSrc = del.select(col("vec_id").as("src"))
         val delNbr = del.select(col("vec_id").as("nbr"))
         // rows whose SOURCE survives; of those, the sources that lost a
@@ -4389,8 +4390,8 @@ object Similarity extends QueryModule {
         // pin the repaired rows before the swap reads-vs-writes the table
         val repaired = keep.select(col("src"), col("nbr"), col("cosim"), col("rn"))
           .unionByName(recomputed).localCheckpoint()
-        graft.sources.IndexStore.replaceTable(s, path, "edges", repaired)
-        graft.sources.IndexStore.writeStamp(s, path, stamp, Map(
+        IndexStore.replaceTable(s, path, "edges", repaired)
+        IndexStore.writeStamp(s, path, stamp, Map(
           "n_del" -> del.count().toString,
           "n_repaired" -> affected.count().toString))
       }
@@ -4410,8 +4411,8 @@ object Similarity extends QueryModule {
   def knnTakedown(s: SparkSession, dir: String): DataFrame = {
     tune(s)
     val path = knnTakedownBranch(s, dir)
-    val meta = graft.sources.IndexStore.readMeta(s, path)
-    val edges = graft.sources.IndexStore.read(s, path, "edges")
+    val meta = IndexStore.readMeta(s, path)
+    val edges = IndexStore.read(s, path, "edges")
     val del = table(s, dir, "embeddings")
       .filter(col("vec_id") % 89 === 17).select(col("vec_id")).localCheckpoint()
     val traces = edges.join(broadcast(del.select(col("vec_id").as("src"))), Seq("src"))
@@ -4466,7 +4467,7 @@ object Similarity extends QueryModule {
     * The O(delta + affected) claim is about re-SCORING compute (who
     * recomputes dot products against whom); the table-swap WRITE is one
     * O(edges) rewrite per sync — both legs fold into a single
-    * [[graft.sources.IndexStore.replaceTable]] (ADVICE r16; edges are
+    * [[IndexStore.replaceTable]] (ADVICE r16; edges are
     * top-k-bounded ≤ 3N rows of ids+scores, never embedding bytes). The
     * delta-byte write path is the masked sibling q245. The final stamp
     * is written only after both legs; a crash mid-sync rebuilds. The
@@ -4478,23 +4479,23 @@ object Similarity extends QueryModule {
     val idxPath = "target/tmp/knn_sync_" + processTag + "_" +
       dir.replaceAll("[^A-Za-z0-9.]+", "_")
     val stamp = "knnsync1|" +
-      graft.sources.IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
+      IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
     synchronized {
-      if (!graft.sources.IndexStore.isCurrent(s, idxPath, stamp)) {
+      if (!IndexStore.isCurrent(s, idxPath, stamp)) {
         val f = embeddingFeedFixture(s, dir, "knnsync")
         val (cents0, assign0, m) = buildIvfIndex(f.base)
-        graft.sources.IndexStore.write(s, idxPath, "knnsync-building", Seq(
+        IndexStore.write(s, idxPath, "knnsync-building", Seq(
           "edges" -> cellGraph(assign0),
           "centroids" -> cents0,
           "assign" -> assign0.repartitionByRange(col("cid"), col("vec_id"))
             .sortWithinPartitions(col("cid"), col("vec_id"))))
         cleanupAtExit(idxPath)
-        def rd(t: String) = graft.sources.IndexStore.read(s, idxPath, t)
+        def rd(t: String) = IndexStore.read(s, idxPath, t)
         // DELETE leg: membership anti-join + the q243 O(affected) repair
         val del = f.del.localCheckpoint()
         val kept = rd("assign")
           .join(broadcast(del), Seq("vec_id"), "left_anti").localCheckpoint()
-        graft.sources.IndexStore.replaceTable(s, idxPath, "assign",
+        IndexStore.replaceTable(s, idxPath, "assign",
           kept.repartitionByRange(col("cid"), col("vec_id"))
             .sortWithinPartitions(col("cid"), col("vec_id")))
         val edges0 = rd("edges")
@@ -4532,11 +4533,11 @@ object Similarity extends QueryModule {
         val arrivalEdges = cellGraphFor(withArrivals,
           withArrivals.join(broadcast(aa.select(col("vec_id"))),
             Seq("vec_id"), "left_semi"))
-        graft.sources.IndexStore.replaceTable(s, idxPath, "edges",
+        IndexStore.replaceTable(s, idxPath, "edges",
           merged.select(col("src"), col("nbr"), col("cosim"), col("rn"))
             .unionByName(arrivalEdges).localCheckpoint())
-        graft.sources.IndexStore.append(s, idxPath, "assign", aa)
-        graft.sources.IndexStore.writeStamp(s, idxPath, stamp, Map(
+        IndexStore.append(s, idxPath, "assign", aa)
+        IndexStore.writeStamp(s, idxPath, stamp, Map(
           "m" -> m.toString,
           "n_feed_inserts" -> f.inserts.count().toString,
           "n_feed_deletes" -> del.count().toString,
@@ -4574,8 +4575,8 @@ object Similarity extends QueryModule {
   def feedSyncedKnn(s: SparkSession, dir: String): DataFrame = {
     tune(s)
     val path = knnSyncStore(s, dir)
-    val meta = graft.sources.IndexStore.readMeta(s, path)
-    val edges = graft.sources.IndexStore.read(s, path, "edges")
+    val meta = IndexStore.readMeta(s, path)
+    val edges = IndexStore.read(s, path, "edges")
     val m = meta("m").toLong
     val del = table(s, dir, "embeddings")
       .filter(col("vec_id") % 89 === 17 && col("vec_id") % m =!= 0)
@@ -4680,7 +4681,7 @@ object Similarity extends QueryModule {
 
   private[graft] def knnStaleMask(s: SparkSession, path: String): DataFrame = {
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    graft.sources.IndexStore.readTableOrEmpty(s, path, KnnStaleMaskTable,
+    IndexStore.readTableOrEmpty(s, path, KnnStaleMaskTable,
       StructType(Seq(StructField("src", LongType), StructField("seq", LongType))))
   }
 
@@ -4692,8 +4693,8 @@ object Similarity extends QueryModule {
   private[graft] def knnLiveEdges(s: SparkSession, path: String,
       del: DataFrame): DataFrame = {
     val stale = knnStaleMask(s, path).localCheckpoint()
-    graft.sources.IndexStore.maskedRead(
-      graft.sources.IndexStore.maskedRead(graft.sources.IndexStore.read(s, path, "edges"),
+    IndexStore.maskedRead(
+      IndexStore.maskedRead(IndexStore.read(s, path, "edges"),
         del, "src", "vec_id", "seg"),
       stale, "src", "src", "seg")
   }
@@ -4702,13 +4703,13 @@ object Similarity extends QueryModule {
     * content equal to q244's physically-synced store's. Edges keep their
     * seg column (provenance, like the vector family's fold); assign is
     * re-laid cid-sorted. */
-  private[graft] val KnnMaskFold = graft.sources.IndexStore.MaskFold(
-    Seq(graft.sources.IndexStore.DeleteMaskTable, KnnStaleMaskTable), { (s, path) =>
-      val del = graft.sources.IndexStore.readDeleteMaskOrEmpty(s, path, "vec_id")
+  private[graft] val KnnMaskFold = IndexStore.MaskFold(
+    Seq(IndexStore.DeleteMaskTable, KnnStaleMaskTable), { (s, path) =>
+      val del = IndexStore.readDeleteMaskOrEmpty(s, path, "vec_id")
         .localCheckpoint()
       Seq("edges" -> knnLiveEdges(s, path, del),
-        "assign" -> graft.sources.IndexStore.maskedRead(
-            graft.sources.IndexStore.read(s, path, "assign"), del, "vec_id", "vec_id", "seg")
+        "assign" -> IndexStore.maskedRead(
+            IndexStore.read(s, path, "assign"), del, "vec_id", "vec_id", "seg")
           .repartitionByRange(col("cid"), col("vec_id"))
           .sortWithinPartitions(col("cid"), col("vec_id")))
     })
@@ -4739,43 +4740,43 @@ object Similarity extends QueryModule {
     val idxPath = "target/tmp/knn_msync_" + processTag + "_" +
       dir.replaceAll("[^A-Za-z0-9.]+", "_")
     val stamp = "knnmasksync1|" +
-      graft.sources.IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
+      IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
     synchronized {
-      if (!graft.sources.IndexStore.isCurrent(s, idxPath, stamp)) {
+      if (!IndexStore.isCurrent(s, idxPath, stamp)) {
         val f = embeddingFeedFixture(s, dir, "knnmasksync")
         val (cents0, assign0, m) = buildIvfIndex(f.base)
-        graft.sources.IndexStore.write(s, idxPath, "knnmasksync-building", Seq(
+        IndexStore.write(s, idxPath, "knnmasksync-building", Seq(
           "centroids" -> cents0,
           "assign" -> assign0.withColumn("seg", lit(0L))
             .repartitionByRange(col("cid"), col("vec_id"))
             .sortWithinPartitions(col("cid"), col("vec_id")),
           "edges" -> cellGraph(assign0).withColumn("seg", lit(0L))))
         cleanupAtExit(idxPath)
-        def rd(t: String) = graft.sources.IndexStore.read(s, idxPath, t)
+        def rd(t: String) = IndexStore.read(s, idxPath, t)
         // ---- DELETE leg: O(delta) mask bytes + O(affected) appended rows
         val del = f.del.localCheckpoint()
-        graft.sources.IndexStore.appendDeleteMask(s, idxPath,
+        IndexStore.appendDeleteMask(s, idxPath,
           del.withColumn("seq", lit(0L)))
         val edges0 = rd("edges")
         val affected = edges0
           .join(broadcast(del.select(col("vec_id").as("src"))), Seq("src"), "left_anti")
           .join(broadcast(del.select(col("vec_id").as("nbr"))), Seq("nbr"), "left_semi")
           .select(col("src")).distinct().localCheckpoint()
-        graft.sources.IndexStore.append(s, idxPath, KnnStaleMaskTable,
+        IndexStore.append(s, idxPath, KnnStaleMaskTable,
           affected.withColumn("seq", lit(0L)))
         // masked live membership, pinned BEFORE arrivals append to assign
-        val live = graft.sources.IndexStore.maskedRead(rd("assign"),
+        val live = IndexStore.maskedRead(rd("assign"),
             del.withColumn("seq", lit(0L)), "vec_id", "vec_id", "seg")
           .select(col("cid"), col("vec_id"), col("embedding"), col("nrm"))
           .localCheckpoint()
         val repaired = cellGraphFor(live,
           live.join(broadcast(affected.select(col("src").as("vec_id"))),
             Seq("vec_id"), "left_semi"))
-        graft.sources.IndexStore.append(s, idxPath, "edges",
+        IndexStore.append(s, idxPath, "edges",
           repaired.withColumn("seg", lit(1L)).localCheckpoint())
         // ---- INSERT leg: appends + the entering-edge restatements
         val aa = coarseAssignArrivals(s, idxPath, f.inserts).localCheckpoint()
-        graft.sources.IndexStore.append(s, idxPath, "assign",
+        IndexStore.append(s, idxPath, "assign",
           aa.withColumn("seg", lit(2L)))
         val withArrivals = live.unionByName(aa)
         val arrivalEdges = cellGraphFor(withArrivals,
@@ -4792,7 +4793,7 @@ object Similarity extends QueryModule {
         // the post-delete-leg visible lists (seg 0 survivors + seg 1
         // repairs), pinned before the edges table grows again
         val vis = knnLiveEdges(s, idxPath,
-            graft.sources.IndexStore.readDeleteMaskOrEmpty(s, idxPath, "vec_id"))
+            IndexStore.readDeleteMaskOrEmpty(s, idxPath, "vec_id"))
           .select(col("src"), col("nbr"), col("cosim"), col("rn"))
           .localCheckpoint()
         // a cross-edge ENTERS a survivor's top-3 iff it beats-or-ties the
@@ -4806,7 +4807,7 @@ object Similarity extends QueryModule {
           .filter(col("n_edges").isNull || col("n_edges") < 3 ||
             col("cosim") >= col("cosim3"))
           .select(col("src")).distinct().localCheckpoint()
-        graft.sources.IndexStore.append(s, idxPath, KnnStaleMaskTable,
+        IndexStore.append(s, idxPath, KnnStaleMaskTable,
           affected2.withColumn("seq", lit(1L)))
         val w = Window.partitionBy(col("src"))
           .orderBy(col("cosim").desc, col("nbr"))
@@ -4816,15 +4817,15 @@ object Similarity extends QueryModule {
             .select(col("src"), col("nbr"), col("cosim")))
           .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
           .select(col("src"), col("nbr"), col("cosim"), col("rn"))
-        graft.sources.IndexStore.append(s, idxPath, "edges",
+        IndexStore.append(s, idxPath, "edges",
           restated.unionByName(arrivalEdges)
             .withColumn("seg", lit(2L)).localCheckpoint())
         // the auto-fold policy, same gate as every masked sync: ~1%
         // deleted sits below the 0.1 default, so the masks stay
-        val folded = graft.sources.IndexStore.autoFoldIfNeeded(
+        val folded = IndexStore.autoFoldIfNeeded(
           s, idxPath, "assign", "vec_id")(
-          graft.sources.IndexStore.foldMasks(s, idxPath, KnnMaskFold))
-        graft.sources.IndexStore.writeStamp(s, idxPath, stamp, Map(
+          IndexStore.foldMasks(s, idxPath, KnnMaskFold))
+        IndexStore.writeStamp(s, idxPath, stamp, Map(
           "m" -> m.toString,
           "n_feed_inserts" -> f.inserts.count().toString,
           "n_feed_deletes" -> del.count().toString,
@@ -4844,8 +4845,8 @@ object Similarity extends QueryModule {
   def maskedFeedSyncedKnn(s: SparkSession, dir: String): DataFrame = {
     tune(s)
     val path = knnMaskSyncStore(s, dir)
-    val meta = graft.sources.IndexStore.readMeta(s, path)
-    val delMask = graft.sources.IndexStore.readDeleteMaskOrEmpty(s, path, "vec_id")
+    val meta = IndexStore.readMeta(s, path)
+    val delMask = IndexStore.readDeleteMaskOrEmpty(s, path, "vec_id")
       .localCheckpoint()
     val edges = knnLiveEdges(s, path, delMask)
     val m = meta("m").toLong
@@ -4905,7 +4906,7 @@ object Similarity extends QueryModule {
     val assignSeed = assign0.localCheckpoint()
     val emptyDel = assignSeed.select(col("vec_id")).limit(0)
     val emptyStale = assignSeed.select(col("vec_id").as("src")).limit(0)
-    require(graft.sources.IndexStore.commitSegment(s, path, KnnStreamTables, "segment", 0L,
+    require(IndexStore.commitSegment(s, path, KnnStreamTables, "segment", 0L,
         Seq("edges" -> cellGraph(assignSeed),
           "assign" -> assignSeed.repartitionByRange(col("cid"), col("vec_id"))
             .sortWithinPartitions(col("cid"), col("vec_id")),
@@ -4913,10 +4914,10 @@ object Similarity extends QueryModule {
       s"fresh streaming graph store at $path had segments")
     // the stored centroid table is the arrivals' coarse-assign target,
     // the same role as in every sync store
-    graft.sources.IndexStore.replaceTable(s, path, "centroids",
+    IndexStore.replaceTable(s, path, "centroids",
       cents0.localCheckpoint())
-    graft.sources.IndexStore.writeStamp(s, path, "knnstream-seeded|" +
-      graft.sources.IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet")),
+    IndexStore.writeStamp(s, path, "knnstream-seeded|" +
+      IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet")),
       Map("m" -> m.toString))
     cleanupAtExit(path)
     (path, m)
@@ -4924,7 +4925,7 @@ object Similarity extends QueryModule {
 
   /** The cross-table visible segment set of the streaming graph store. */
   private[graft] def knnStreamVisible(s: SparkSession, path: String): Seq[Long] =
-    graft.sources.IndexStore.commonCommittedSegments(
+    IndexStore.commonCommittedSegments(
       s, path, KnnStreamTables, "segment")
 
   /** The masked LIVE view over an explicit visible segment set:
@@ -4934,7 +4935,7 @@ object Similarity extends QueryModule {
   private[graft] def knnStreamView(s: SparkSession, path: String,
       vis: Seq[Long]): (DataFrame, DataFrame) = {
     def rd(t: String) =
-      graft.sources.IndexStore.readSegments(s, path, t, "segment", vis)
+      IndexStore.readSegments(s, path, t, "segment", vis)
     val del = rd("deletes").localCheckpoint()
     val stale = rd("stale").localCheckpoint()
     val e0 = rd("edges")
@@ -5027,7 +5028,7 @@ object Similarity extends QueryModule {
         "stale" -> affected.unionByName(affected2.select(col("src")))
           .localCheckpoint())
     }
-    def commitAll(): Int = graft.sources.IndexStore.commitSegment(
+    def commitAll(): Int = IndexStore.commitSegment(
       s, path, KnnStreamTables, "segment", segId, frames)
     val first = commitAll()
     ((first, commitAll()), (ins.count(), del.count(), nRepaired))
@@ -5038,7 +5039,7 @@ object Similarity extends QueryModule {
     * observed replay flag. */
   private[graft] def knnStreamResult(s: SparkSession, dir: String, path: String,
       replayNoop: Boolean): DataFrame = {
-    val meta = graft.sources.IndexStore.readMeta(s, path)
+    val meta = IndexStore.readMeta(s, path)
     val vis = knnStreamVisible(s, path)
     val (edges0, _) = knnStreamView(s, path, vis)
     val edges = edges0.select(col("src"), col("nbr"), col("cosim"), col("rn"))
@@ -5098,7 +5099,7 @@ object Similarity extends QueryModule {
     * below it are forfeited. Absent key (a never-compacted store) means
     * every horizon is servable. */
   private[graft] def knnStreamCompactedThrough(s: SparkSession, path: String): Long =
-    graft.sources.IndexStore.readMeta(s, path)
+    IndexStore.readMeta(s, path)
       .get("compacted_through").map(_.toLong).getOrElse(Long.MinValue)
 
   // ---- q249: ledger-aware MASK-FOLDING compaction of the streamed
@@ -5134,12 +5135,12 @@ object Similarity extends QueryModule {
     val foldedEdges = edges
       .select(col("src"), col("nbr"), col("cosim"), col("rn")).localCheckpoint()
     val foldedAssign = members.localCheckpoint()
-    graft.sources.IndexStore.inParallel(Seq(
-      () => graft.sources.IndexStore.compactSegmentLedger(s, path, "edges",
+    IndexStore.inParallel(Seq(
+      () => IndexStore.compactSegmentLedger(s, path, "edges",
         "segment", sortCols = Seq("src", "rn"), rangeCols = Seq("src"),
         onlySegs = Some(vis), foldInto = Some(foldedEdges),
         intoSeg = Some(into)),
-      () => graft.sources.IndexStore.compactSegmentLedger(s, path, "assign",
+      () => IndexStore.compactSegmentLedger(s, path, "assign",
         "segment", sortCols = Seq("cid", "vec_id"),
         rangeCols = Seq("cid", "vec_id"), onlySegs = Some(vis),
         foldInto = Some(foldedAssign), intoSeg = Some(into))))
@@ -5147,18 +5148,18 @@ object Similarity extends QueryModule {
     // masks still raw) — CrashRecoverySpec's hook; production always
     // completes, and an interrupted run re-enters idempotently
     if (masksToo)
-      graft.sources.IndexStore.inParallel(Seq(
-        () => graft.sources.IndexStore.compactSegmentLedger(s, path, "deletes",
+      IndexStore.inParallel(Seq(
+        () => IndexStore.compactSegmentLedger(s, path, "deletes",
           "segment", sortCols = Seq("vec_id"), rangeCols = Seq("vec_id"),
           onlySegs = Some(vis),
-          foldInto = Some(graft.sources.IndexStore
+          foldInto = Some(IndexStore
             .readSegments(s, path, "deletes", "segment", vis)
             .drop("segment").limit(0).localCheckpoint()),
           intoSeg = Some(into)),
-        () => graft.sources.IndexStore.compactSegmentLedger(s, path, "stale",
+        () => IndexStore.compactSegmentLedger(s, path, "stale",
           "segment", sortCols = Seq("src"), rangeCols = Seq("src"),
           onlySegs = Some(vis),
-          foldInto = Some(graft.sources.IndexStore
+          foldInto = Some(IndexStore
             .readSegments(s, path, "stale", "segment", vis)
             .drop("segment").limit(0).localCheckpoint()),
           intoSeg = Some(into))))
@@ -5188,7 +5189,7 @@ object Similarity extends QueryModule {
         fs.listStatus(st.getPath).exists(_.getPath.getName.endsWith(".parquet"))
     }.toLong
     val nMaskRows = Seq("deletes", "stale").map(t =>
-      graft.sources.IndexStore.readSegments(s, path, t, "segment", vis).count()).sum
+      IndexStore.readSegments(s, path, t, "segment", vis).count()).sum
     val audit = s.range(1).select(
       lit(replayNoop).as("replay_after_compact"),
       lit(nDataSegs).as("n_data_segments"),
@@ -5380,7 +5381,7 @@ object Similarity extends QueryModule {
     // the widened edges, served from the PERSISTED np2 branch store
     // (stamp-guarded: warm calls and restarts read the edges table, only
     // an embeddings change re-runs q247's build path)
-    val edges = graft.sources.IndexStore
+    val edges = IndexStore
       .read(s, knnGraphNp2Store(s, dir), "edges")
       .select(col("src"), col("nbr"))
     graphAnnServeAt(s, dir, 4, 2, edges)
@@ -5501,10 +5502,10 @@ object Similarity extends QueryModule {
   private[graft] def knnGraphNp2Store(s: SparkSession, dir: String): String = {
     val path = "target/graft_index/knng2_" + dir.replaceAll("[^A-Za-z0-9.]+", "_")
     val stamp = "knng2_1|np2|" +
-      graft.sources.IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
+      IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
     synchronized {
-      if (!graft.sources.IndexStore.isCurrent(s, path, stamp))
-        graft.sources.IndexStore.write(s, path, stamp,
+      if (!IndexStore.isCurrent(s, path, stamp))
+        IndexStore.write(s, path, stamp,
           Seq("edges" -> knnGraphFrameNp(s, dir, 2)))
     }
     path
@@ -5679,11 +5680,11 @@ object Similarity extends QueryModule {
   private[graft] def knnGraphRefinedNp2Store(s: SparkSession, dir: String): String = {
     val path = "target/graft_index/knngr2_" + dir.replaceAll("[^A-Za-z0-9.]+", "_")
     val stamp = "knngr2_1|np2|ivfr1|lloyd1|" +
-      graft.sources.IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
+      IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
     synchronized {
-      if (!graft.sources.IndexStore.isCurrent(s, path, stamp)) {
+      if (!IndexStore.isCurrent(s, path, stamp)) {
         val (rc, ra) = corpusRefinedIvfIndex(s, dir)
-        graft.sources.IndexStore.write(s, path, stamp,
+        IndexStore.write(s, path, stamp,
           Seq("edges" -> knnGraphFrameNpOn(rc, ra, 2)))
       }
     }
@@ -5703,7 +5704,7 @@ object Similarity extends QueryModule {
     * builds; serving reads the edges table only. */
   def refinedGraphAnnServe(s: SparkSession, dir: String): DataFrame = {
     tune(s)
-    val edges = graft.sources.IndexStore
+    val edges = IndexStore
       .read(s, knnGraphRefinedNp2Store(s, dir), "edges")
       .select(col("src"), col("nbr"))
     graphAnnServeAt(s, dir, 4, 2, edges, quantizer = "refined")

@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.Engine._
 import graft.{GQuery, QueryModule}
+import graft.sources.IndexStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, Trigger}
@@ -1001,7 +1002,7 @@ object StreamOps extends QueryModule {
       compact: (SparkSession, String) => Map[String, String])
 
   private def sourceStamp(file: String)(s: SparkSession, dir: String): String =
-    graft.sources.IndexStore.sourceStamp(s, Seq(s"$dir/$file"))
+    IndexStore.sourceStamp(s, Seq(s"$dir/$file"))
 
   private val IvfStream = {
     import graft.operators.Similarity
@@ -1013,7 +1014,7 @@ object StreamOps extends QueryModule {
         ((if (first) 1 else 0, if (replay) 1 else 0), Map.empty)
       },
       (s, cpath) => {
-        graft.sources.IndexStore.compactSegmentLedger(s, cpath, "assign", "seg",
+        IndexStore.compactSegmentLedger(s, cpath, "assign", "seg",
           sortCols = Seq("cid", "vec_id"), rangeCols = Seq("cid", "vec_id"))
         Map.empty
       })
@@ -1030,9 +1031,9 @@ object StreamOps extends QueryModule {
         // segment committed here but torn in a sibling table must stay its
         // own (invisible) segment, not fold into the visible rows
         val vis = Search.streamVisibleSegments(s, cpath)
-        graft.sources.IndexStore.inParallel(Search.indexTableNames.map { t => () =>
+        IndexStore.inParallel(Search.indexTableNames.map { t => () =>
           val cols = Search.streamCompactCols(t)
-          graft.sources.IndexStore.compactSegmentLedger(s, cpath, t, "segment",
+          IndexStore.compactSegmentLedger(s, cpath, t, "segment",
             sortCols = cols, rangeCols = cols, onlySegs = Some(vis))
         })
         Map.empty
@@ -1081,8 +1082,8 @@ object StreamOps extends QueryModule {
     synchronized {
       val path = f.path(dir)
       val stamp = s"${f.name}stream-done|" + f.fingerprint(s, dir)
-      if (graft.sources.IndexStore.isCurrent(s, path, stamp))
-        (path, graft.sources.IndexStore.readMeta(s, path)("replay_noop").toBoolean)
+      if (IndexStore.isCurrent(s, path, stamp))
+        (path, IndexStore.readMeta(s, path)("replay_noop").toBoolean)
       else {
         val batches = f.batches(s, dir)
         // the key must not collide with the screening streams' own
@@ -1120,7 +1121,7 @@ object StreamOps extends QueryModule {
         val clean = got.sizeIs == batches.size &&
           got.forall { case ((first, replay), _) => first == f.tables && replay == 0 }
         val counts = got.flatMap(_._2).groupMapReduce(_._1)(_._2)(_ + _)
-        if (clean) graft.sources.IndexStore.writeStamp(s, path, stamp,
+        if (clean) IndexStore.writeStamp(s, path, stamp,
           seedMeta ++ counts.map { case (k, v) => k -> v.toString } +
             ("replay_noop" -> "true"))
         (path, clean)
@@ -1141,19 +1142,19 @@ object StreamOps extends QueryModule {
       val (path, clean) = drained(s, f, dir)
       val cpath = path + "_compacted"
       val stamp = s"${f.name}stream-compacted|" + f.fingerprint(s, dir)
-      if (graft.sources.IndexStore.isCurrent(s, cpath, stamp))
-        (cpath, graft.sources.IndexStore.readMeta(s, cpath)("replay_after_compact").toBoolean)
+      if (IndexStore.isCurrent(s, cpath, stamp))
+        (cpath, IndexStore.readMeta(s, cpath)("replay_after_compact").toBoolean)
       else {
         require(clean, "pre-compaction stream must commit exactly once")
-        graft.sources.IndexStore.copy(s, path, cpath)
+        IndexStore.copy(s, path, cpath)
         graft.operators.Similarity.cleanupAtExit(cpath)
         val meta = f.compact(s, cpath)
         val replays = f.batches(s, dir).map { case (segId, b) =>
           f.commit(s, dir, cpath, segId.toLong, b)._1
         }
         val stillNoop = replays.forall(_ == ((0, 0)))
-        if (stillNoop) graft.sources.IndexStore.writeStamp(s, cpath, stamp,
-          graft.sources.IndexStore.readMeta(s, cpath) ++ meta +
+        if (stillNoop) IndexStore.writeStamp(s, cpath, stamp,
+          IndexStore.readMeta(s, cpath) ++ meta +
             ("replay_after_compact" -> "true"))
         (cpath, stillNoop)
       }
@@ -1164,7 +1165,7 @@ object StreamOps extends QueryModule {
     * micro-batch coarse-assigns its vectors against the STORED centroids
     * (O(batch); the corpus is never rescanned) and commits them into the
     * partition-dir store as an exactly-once tagged segment
-    * ([[graft.sources.IndexStore.appendSegmentIfAbsent]]). Each commit is
+    * ([[IndexStore.appendSegmentIfAbsent]]). Each commit is
     * DELIBERATELY replayed — the retry a recovering stream performs after
     * a crash between sink write and checkpoint advance — and a correct
     * ledger makes every replay a metadata no-op. The answer is q195's
@@ -1194,7 +1195,7 @@ object StreamOps extends QueryModule {
     * partition-dir refusal names as missing, landed end-to-end. Run the
     * full q215 stream (seed + two exactly-once segment commits), then
     * compact the store through
-    * [[graft.sources.IndexStore.compactSegmentLedger]]: all committed
+    * [[IndexStore.compactSegmentLedger]]: all committed
     * rows collapse into fresh cid-range-sorted files under `seg=0` while
     * every pre-compaction segment keeps a TOMBSTONE commit marker — the
     * ledger survives the rewrite. The proof is in the answer frame: the
@@ -1219,7 +1220,7 @@ object StreamOps extends QueryModule {
     * to the store the stream writes. After the full q215 run (seed + two
     * exactly-once segment commits), the same probe set is answered at
     * horizon full and horizon 1; the as-of leg reads through
-    * [[graft.sources.IndexStore.readCommittedAsOf]], whose horizon bounds
+    * [[IndexStore.readCommittedAsOf]], whose horizon bounds
     * the explicit partition-dir path list — segment 2's directory is
     * never listed into the scan's file index. That is the partition-dir
     * layout's payoff over the flat store's row-group min/max pruning
@@ -1399,7 +1400,7 @@ object StreamOps extends QueryModule {
     * store — q217's maintenance op carried to the store whose commit
     * unit spans four tables. After the full q219 stream, every table
     * compacts independently through
-    * [[graft.sources.IndexStore.compactSegmentLedger]] (committed rows
+    * [[IndexStore.compactSegmentLedger]] (committed rows
     * collapse into fresh term-sorted files under `segment=0`, every
     * pre-compaction segment keeps a TOMBSTONE commit marker); the four
     * rewrites are independent single-table swaps run in parallel, and a
