@@ -8,7 +8,7 @@ the query name and a SHA-256 over its column names and normalized, sorted
 rows (order-independent). Diffing two such files shows whether a change
 kept every query's output.
 """
-import sys, json, glob, os, math, hashlib
+import sys, json, glob, os, math, hashlib, tempfile
 import duckdb
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
@@ -36,7 +36,11 @@ def main():
     sf_dir, out_dir = args[0], args[1]
     only = set(args[2:])
     digests = {}
-    con = duckdb.connect()
+    # an in-memory database cannot spill without a temp directory; with
+    # one, large oracles (q268 at sf0.1) spill instead of running out of
+    # memory
+    spill = tempfile.TemporaryDirectory(prefix="check_spill_")
+    con = duckdb.connect(config={"temp_directory": spill.name})
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     oracles = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
@@ -86,6 +90,8 @@ def main():
             for name in sorted(digests):
                 f.write(f"{name} {digests[name]}\n")
     print(f"== {n_pass} pass / {n_fail} fail ==")
+    con.close()
+    spill.cleanup()
     sys.exit(1 if n_fail else 0)
 
 if __name__ == "__main__":

@@ -628,7 +628,8 @@ object ScaleRung {
     // after it in this process is untrustworthy, so later rows carry a
     // `post_fatal` marker instead of passing as normal rows (ADVICE r14);
     // the bounded-heap experiment that EXPECTS the memory-provider OOM
-    // runs isolated in a child JVM (graft.StateHeapRig), never here
+    // runs isolated in a small-heap child JVM (PLANS.md "Round-15: the
+    // bounded-heap half of the RocksDB decision"), never here
     var sawFatal = false
     for ((dir, tag) <- stateTags; provider <- Seq("memory", "rocksdb");
          name <- if (args.isEmpty) stateCompared else Nil) {

@@ -639,8 +639,8 @@ object Dedup extends QueryModule {
     *    fed whichever frame is smaller (stars or raw edges); the driver
     *    only ever sees per-round convergence counts.
     *
-    * All numbers MEASURED ([[graft.CcBench]], local[32], min-of-2 unless
-    * noted; round 8). Chains (E ~ V, the sparse adversary — contraction
+    * All numbers MEASURED (local[32], min-of-2 unless noted; round 8 —
+    * PLANS.md "CC crossover — MEASURED"). Chains (E ~ V, the sparse adversary — contraction
     * cannot shrink them): union-find / iterative / two-level seconds were
     * 60/59/65 at 20M, 125/254/129 at 40M (1 run), 227/651/285 at 80M
     * (1 run). Dense ring components (512 nodes x degree 128, E = 128V —
@@ -753,8 +753,8 @@ object Dedup extends QueryModule {
     }.toDF("n", "m")
   }
 
-  /** Contraction + single-partition finish as one unit — the shape
-    * [[graft.CcBench]] times against the other tiers. */
+  /** Contraction + single-partition finish as one unit — the two-level
+    * tier PLANS.md "CC crossover — MEASURED" times against the others. */
   private[graft] def ccTwoLevel(raw: DataFrame): DataFrame =
     ccSinglePartition(contractStars(raw))
 
@@ -1218,7 +1218,7 @@ object Dedup extends QueryModule {
     * target/ so it survives JVM restarts (the durability the session
     * cache alone cannot give). */
   private[graft] def fixtureIndexPath(dir: String): String =
-    "target/graft_index/dedup_" + dir.replaceAll("[^A-Za-z0-9.]+", "_")
+    "target/graft_index/dedup_" + IndexStore.dirTag(dir)
 
   /** The frozen corpus index of the registered rig, PERSISTED: built once
     * from the fixture corpus (docs < 100000) into [[fixtureIndexPath]],
@@ -1249,17 +1249,15 @@ object Dedup extends QueryModule {
 
   private def corpusIndex(s: SparkSession, dir: String): DedupIndex = {
     val path = fixtureIndexPath(dir)
-    synchronized {
-      val stamp = "v3|" +
-        IndexStore.sourceStamp(s, Seq(s"$dir/documents.parquet"))
-      if (!IndexStore.isCurrent(s, path, stamp)) {
-        val corpus = augmentedDocs(s, dir).filter(col("doc_id") < 100000L)
-        val idx = buildIndex(corpus)
-        val keys = corpus.select(md5(col("text")).as("tkey"), col("doc_id"))
-        IndexStore.write(s, path, stamp, Seq(
-          "digests" -> idx.digests, "sigs" -> idx.sigs,
-          "bands" -> idx.bands, "keys" -> keys))
-      }
+    val stamp = "v3|" +
+      IndexStore.sourceStamp(s, Seq(s"$dir/documents.parquet"))
+    IndexStore.stamped(s, path, stamp) {
+      val corpus = augmentedDocs(s, dir).filter(col("doc_id") < 100000L)
+      val idx = buildIndex(corpus)
+      val keys = corpus.select(md5(col("text")).as("tkey"), col("doc_id"))
+      IndexStore.write(s, path, stamp, Seq(
+        "digests" -> idx.digests, "sigs" -> idx.sigs,
+        "bands" -> idx.bands, "keys" -> keys))
     }
     DedupIndex(
       sessionCached(s, s"incD:$dir")(IndexStore.read(s, path, "digests")),
@@ -1367,29 +1365,31 @@ object Dedup extends QueryModule {
     *    but the erased works would otherwise keep paying the probe join
     *    forever; deletion-incapable sketches rebuild, they don't filter.
     * The result provably equals the index built from the filtered
-    * corpus, which is what q223's oracle recomputes from raw text. */
+    * corpus, which is what q223's oracle recomputes from raw text. The
+    * branch is process-unique, so the store lands under a staging stamp
+    * and the real stamp goes last, after the bloom: a kill anywhere in
+    * between leaves a branch that fails its stamp and rebuilds, never a
+    * stamp-current branch without its sidecar. */
   private[graft] def takedownDedupBranch(s: SparkSession, dir: String): String = {
     corpusIndex(s, dir)
     val src = fixtureIndexPath(dir)
-    val path = src + "_takedown_" + graft.operators.Similarity.processTag
+    val path = IndexStore.workPath(src + "_takedown")
     val stamp = "takedown1|v3|" +
       IndexStore.sourceStamp(s, Seq(s"$dir/documents.parquet"))
-    synchronized {
-      if (!IndexStore.isCurrent(s, path, stamp)) {
-        def rd(t: String) = IndexStore.read(s, src, t)
-        val wk = augmentedDocs(s, dir)
-          .filter(col("doc_id") < 100000L && col("doc_id") % 97 === 13)
-          .select(md5(col("text")).as("tkey")).distinct().localCheckpoint()
-        val erased = rd("keys").join(broadcast(wk), "tkey")
-          .select(col("doc_id")).distinct().localCheckpoint()
-        IndexStore.write(s, path, stamp, Seq(
-          "digests" -> rd("digests").join(broadcast(wk), Seq("tkey"), "left_anti"),
-          "sigs" -> rd("sigs").join(broadcast(erased), Seq("doc_id"), "left_anti"),
-          "bands" -> rd("bands").join(broadcast(erased), Seq("doc_id"), "left_anti"),
-          "keys" -> rd("keys").join(broadcast(wk), Seq("tkey"), "left_anti")))
-        persistBloom(s, path): Unit
-        graft.operators.Similarity.cleanupAtExit(path)
-      }
+    IndexStore.stamped(s, path, stamp) {
+      def rd(t: String) = IndexStore.read(s, src, t)
+      val wk = augmentedDocs(s, dir)
+        .filter(col("doc_id") < 100000L && col("doc_id") % 97 === 13)
+        .select(md5(col("text")).as("tkey")).distinct().localCheckpoint()
+      val erased = rd("keys").join(broadcast(wk), "tkey")
+        .select(col("doc_id")).distinct().localCheckpoint()
+      IndexStore.write(s, path, "takedown-building", Seq(
+        "digests" -> rd("digests").join(broadcast(wk), Seq("tkey"), "left_anti"),
+        "sigs" -> rd("sigs").join(broadcast(erased), Seq("doc_id"), "left_anti"),
+        "bands" -> rd("bands").join(broadcast(erased), Seq("doc_id"), "left_anti"),
+        "keys" -> rd("keys").join(broadcast(wk), Seq("tkey"), "left_anti")))
+      persistBloom(s, path): Unit
+      IndexStore.writeStamp(s, path, stamp)
     }
     path
   }
@@ -1407,16 +1407,6 @@ object Dedup extends QueryModule {
   def dedupTakedown(s: SparkSession, dir: String): DataFrame = {
     tune(s)
     val path = takedownDedupBranch(s, dir)
-    synchronized {
-      // the bloom lands AFTER the stamped store swap, so a crash between
-      // the two leaves a stamp-current branch with no sidecar — heal at
-      // load like bloomScreen does, instead of failing until the corpus
-      // stamp changes
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(new org.apache.hadoop.fs.Path(path, "bloom")))
-        persistBloom(s, path): Unit
-    }
     def rd(t: String) =
       sessionCached(s, s"tkd$t:$dir")(IndexStore.read(s, path, t))
     val idx = DedupIndex(rd("digests"), rd("sigs"), rd("bands"))
@@ -1552,54 +1542,49 @@ object Dedup extends QueryModule {
   }
 
   private[graft] def dedupSyncStore(s: SparkSession, dir: String): String = {
-    val idxPath = "target/tmp/dedup_sync_" +
-      graft.operators.Similarity.processTag + "_" +
-      dir.replaceAll("[^A-Za-z0-9.]+", "_")
+    val idxPath = IndexStore.workPath("target/tmp/dedup_sync_" + IndexStore.dirTag(dir))
     val stamp = "dedupsync2|" +
       IndexStore.sourceStamp(s, Seq(s"$dir/documents.parquet"))
-    synchronized {
-      if (!IndexStore.isCurrent(s, idxPath, stamp)) {
-        val f = corpusFeedFixture(s, dir, "dedupsync")
-        val idx0 = buildIndex(f.base)
-        IndexStore.write(s, idxPath, "dedupsync-building", Seq(
-          "digests" -> idx0.digests, "sigs" -> idx0.sigs, "bands" -> idx0.bands,
-          "keys" -> f.base.select(md5(col("text")).as("tkey"), col("doc_id"))))
-        graft.operators.Similarity.cleanupAtExit(idxPath)
-        val inserts = f.inserts
-        val del = f.del
-        def rd(t: String) = IndexStore.read(s, idxPath, t)
-        // DELETE leg: group survival from the member-level keys. The
-        // surviving-holder set is computed ONCE (review catch: it is both
-        // the survival evidence and the replacement keys table)
-        val keys = rd("keys")
-        val affected = keys.join(del, "doc_id").select(col("tkey")).distinct()
-        val kept = keys.join(del, Seq("doc_id"), "left_anti").localCheckpoint()
-        val gone = broadcast(
-          affected.join(kept.select(col("tkey")).distinct(), Seq("tkey"), "left_anti")
-            .localCheckpoint())
-        val erasedReps = broadcast(keys.groupBy(col("tkey"))
-          .agg(min(col("doc_id")).as("doc_id"))
-          .join(gone, "tkey").select(col("doc_id")).localCheckpoint())
-        val dig2 = rd("digests").join(gone, Seq("tkey"), "left_anti").localCheckpoint()
-        val sig2 = rd("sigs").join(erasedReps, Seq("doc_id"), "left_anti").localCheckpoint()
-        val band2 = rd("bands").join(erasedReps, Seq("doc_id"), "left_anti").localCheckpoint()
-        IndexStore.inParallel(Seq(
-          () => IndexStore.replaceTable(s, idxPath, "digests", dig2),
-          () => IndexStore.replaceTable(s, idxPath, "sigs", sig2),
-          () => IndexStore.replaceTable(s, idxPath, "bands", band2),
-          () => IndexStore.replaceTable(s, idxPath, "keys", kept)))
-        // INSERT leg: the refresh shape — the arrivals' own signatures append
-        val add = buildIndex(inserts)
-        IndexStore.inParallel(Seq(
-          () => IndexStore.append(s, idxPath, "digests", add.digests),
-          () => IndexStore.append(s, idxPath, "sigs", add.sigs),
-          () => IndexStore.append(s, idxPath, "bands", add.bands),
-          () => IndexStore.append(s, idxPath, "keys",
-            inserts.select(md5(col("text")).as("tkey"), col("doc_id")))))
-        IndexStore.writeStamp(s, idxPath, stamp, Map(
-          "n_feed_inserts" -> inserts.count().toString,
-          "n_feed_deletes" -> del.count().toString))
-      }
+    IndexStore.stamped(s, idxPath, stamp) {
+      val f = corpusFeedFixture(s, dir, "dedupsync")
+      val idx0 = buildIndex(f.base)
+      IndexStore.write(s, idxPath, "dedupsync-building", Seq(
+        "digests" -> idx0.digests, "sigs" -> idx0.sigs, "bands" -> idx0.bands,
+        "keys" -> f.base.select(md5(col("text")).as("tkey"), col("doc_id"))))
+      val inserts = f.inserts
+      val del = f.del
+      def rd(t: String) = IndexStore.read(s, idxPath, t)
+      // DELETE leg: group survival from the member-level keys. The
+      // surviving-holder set is computed ONCE (review catch: it is both
+      // the survival evidence and the replacement keys table)
+      val keys = rd("keys")
+      val affected = keys.join(del, "doc_id").select(col("tkey")).distinct()
+      val kept = keys.join(del, Seq("doc_id"), "left_anti").localCheckpoint()
+      val gone = broadcast(
+        affected.join(kept.select(col("tkey")).distinct(), Seq("tkey"), "left_anti")
+          .localCheckpoint())
+      val erasedReps = broadcast(keys.groupBy(col("tkey"))
+        .agg(min(col("doc_id")).as("doc_id"))
+        .join(gone, "tkey").select(col("doc_id")).localCheckpoint())
+      val dig2 = rd("digests").join(gone, Seq("tkey"), "left_anti").localCheckpoint()
+      val sig2 = rd("sigs").join(erasedReps, Seq("doc_id"), "left_anti").localCheckpoint()
+      val band2 = rd("bands").join(erasedReps, Seq("doc_id"), "left_anti").localCheckpoint()
+      IndexStore.inParallel(Seq(
+        () => IndexStore.replaceTable(s, idxPath, "digests", dig2),
+        () => IndexStore.replaceTable(s, idxPath, "sigs", sig2),
+        () => IndexStore.replaceTable(s, idxPath, "bands", band2),
+        () => IndexStore.replaceTable(s, idxPath, "keys", kept)))
+      // INSERT leg: the refresh shape — the arrivals' own signatures append
+      val add = buildIndex(inserts)
+      IndexStore.inParallel(Seq(
+        () => IndexStore.append(s, idxPath, "digests", add.digests),
+        () => IndexStore.append(s, idxPath, "sigs", add.sigs),
+        () => IndexStore.append(s, idxPath, "bands", add.bands),
+        () => IndexStore.append(s, idxPath, "keys",
+          inserts.select(md5(col("text")).as("tkey"), col("doc_id")))))
+      IndexStore.writeStamp(s, idxPath, stamp, Map(
+        "n_feed_inserts" -> inserts.count().toString,
+        "n_feed_deletes" -> del.count().toString))
     }
     idxPath
   }
@@ -1669,58 +1654,53 @@ object Dedup extends QueryModule {
     * %97=13 and %31=2 exist, so a deleted text can return under a fresh
     * id in the same window). */
   private[graft] def dedupMaskSyncStore(s: SparkSession, dir: String): String = {
-    val idxPath = "target/tmp/dedup_msync_" +
-      graft.operators.Similarity.processTag + "_" +
-      dir.replaceAll("[^A-Za-z0-9.]+", "_")
+    val idxPath = IndexStore.workPath("target/tmp/dedup_msync_" + IndexStore.dirTag(dir))
     val stamp = "dedupmasksync1|" +
       IndexStore.sourceStamp(s, Seq(s"$dir/documents.parquet"))
-    synchronized {
-      if (!IndexStore.isCurrent(s, idxPath, stamp)) {
-        val f = corpusFeedFixture(s, dir, "dedupmasksync")
-        val idx0 = buildIndex(f.base)
-        def seg0(df: DataFrame) = df.withColumn("seg", lit(0L))
-        IndexStore.write(s, idxPath, "dedupmasksync-building", Seq(
-          "digests" -> seg0(idx0.digests), "sigs" -> seg0(idx0.sigs),
-          "bands" -> seg0(idx0.bands),
-          "keys" -> seg0(f.base.select(md5(col("text")).as("tkey"), col("doc_id")))))
-        graft.operators.Similarity.cleanupAtExit(idxPath)
-        val inserts = f.inserts
-        val del = f.del
-        // group survival, computed ONCE (the q228 decision) — result
-        // stored as masks, nothing rewritten
-        val keys = IndexStore.read(s, idxPath, "keys")
-        val affected = keys.join(del, "doc_id").select(col("tkey")).distinct()
-        val survivors = keys.join(del, Seq("doc_id"), "left_anti")
-          .select(col("tkey")).distinct()
-        val gone = affected.join(survivors, Seq("tkey"), "left_anti").localCheckpoint()
-        val erasedReps = keys.groupBy(col("tkey"))
-          .agg(min(col("doc_id")).as("doc_id"))
-          .join(broadcast(gone), "tkey").select(col("doc_id")).localCheckpoint()
-        IndexStore.appendDeleteMask(s, idxPath,
-          del.withColumn("seq", lit(0L)))
-        IndexStore.append(s, idxPath, "mask_gone",
-          gone.withColumn("seq", lit(0L)))
-        IndexStore.append(s, idxPath, "mask_reps",
-          erasedReps.withColumn("seq", lit(0L)))
-        // INSERT leg: the refresh shape, tagged seg 1
-        val add = buildIndex(inserts)
-        def seg1(df: DataFrame) = df.withColumn("seg", lit(1L))
-        IndexStore.inParallel(Seq(
-          () => IndexStore.append(s, idxPath, "digests", seg1(add.digests)),
-          () => IndexStore.append(s, idxPath, "sigs", seg1(add.sigs)),
-          () => IndexStore.append(s, idxPath, "bands", seg1(add.bands)),
-          () => IndexStore.append(s, idxPath, "keys",
-            seg1(inserts.select(md5(col("text")).as("tkey"), col("doc_id"))))))
-        // auto-fold policy (VERDICT r15 item 2): member-level fraction
-        // (deleted ids over keys rows) — ~1% here, below the 0.1 default
-        val folded = IndexStore.autoFoldIfNeeded(
-          s, idxPath, "keys", "doc_id")(
-          IndexStore.foldMasks(s, idxPath, DedupMaskFold))
-        IndexStore.writeStamp(s, idxPath, stamp, Map(
-          "n_feed_inserts" -> inserts.count().toString,
-          "n_feed_deletes" -> del.count().toString,
-          "auto_folded" -> folded.toString))
-      }
+    IndexStore.stamped(s, idxPath, stamp) {
+      val f = corpusFeedFixture(s, dir, "dedupmasksync")
+      val idx0 = buildIndex(f.base)
+      def seg0(df: DataFrame) = df.withColumn("seg", lit(0L))
+      IndexStore.write(s, idxPath, "dedupmasksync-building", Seq(
+        "digests" -> seg0(idx0.digests), "sigs" -> seg0(idx0.sigs),
+        "bands" -> seg0(idx0.bands),
+        "keys" -> seg0(f.base.select(md5(col("text")).as("tkey"), col("doc_id")))))
+      val inserts = f.inserts
+      val del = f.del
+      // group survival, computed ONCE (the q228 decision) — result
+      // stored as masks, nothing rewritten
+      val keys = IndexStore.read(s, idxPath, "keys")
+      val affected = keys.join(del, "doc_id").select(col("tkey")).distinct()
+      val survivors = keys.join(del, Seq("doc_id"), "left_anti")
+        .select(col("tkey")).distinct()
+      val gone = affected.join(survivors, Seq("tkey"), "left_anti").localCheckpoint()
+      val erasedReps = keys.groupBy(col("tkey"))
+        .agg(min(col("doc_id")).as("doc_id"))
+        .join(broadcast(gone), "tkey").select(col("doc_id")).localCheckpoint()
+      IndexStore.appendDeleteMask(s, idxPath,
+        del.withColumn("seq", lit(0L)))
+      IndexStore.append(s, idxPath, "mask_gone",
+        gone.withColumn("seq", lit(0L)))
+      IndexStore.append(s, idxPath, "mask_reps",
+        erasedReps.withColumn("seq", lit(0L)))
+      // INSERT leg: the refresh shape, tagged seg 1
+      val add = buildIndex(inserts)
+      def seg1(df: DataFrame) = df.withColumn("seg", lit(1L))
+      IndexStore.inParallel(Seq(
+        () => IndexStore.append(s, idxPath, "digests", seg1(add.digests)),
+        () => IndexStore.append(s, idxPath, "sigs", seg1(add.sigs)),
+        () => IndexStore.append(s, idxPath, "bands", seg1(add.bands)),
+        () => IndexStore.append(s, idxPath, "keys",
+          seg1(inserts.select(md5(col("text")).as("tkey"), col("doc_id"))))))
+      // auto-fold policy (VERDICT r15 item 2): member-level fraction
+      // (deleted ids over keys rows) — ~1% here, below the 0.1 default
+      val folded = IndexStore.autoFoldIfNeeded(
+        s, idxPath, "keys", "doc_id")(
+        IndexStore.foldMasks(s, idxPath, DedupMaskFold))
+      IndexStore.writeStamp(s, idxPath, stamp, Map(
+        "n_feed_inserts" -> inserts.count().toString,
+        "n_feed_deletes" -> del.count().toString,
+        "auto_folded" -> folded.toString))
     }
     idxPath
   }
@@ -1807,11 +1787,8 @@ object Dedup extends QueryModule {
     tune(s)
     val idx = corpusIndex(s, dir) // ensures the persisted index is current
     val path = fixtureIndexPath(dir)
-    synchronized {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(new org.apache.hadoop.fs.Path(path, "bloom")))
-        persistBloom(s, path)
+    IndexStore.withPathLock(path) {
+      if (!IndexStore.tableNames(s, path).contains("bloom")) persistBloom(s, path)
     }
     val newB = augmentedDocs(s, dir).filter(col("doc_id") >= 100000L)
     val fast = screenBatchBloom(idx, loadBloom(s, path), newB)
@@ -1883,23 +1860,18 @@ object Dedup extends QueryModule {
     * duplicates of themselves). */
   private[graft] def screenLoopBranch(s: SparkSession, dir: String): String = {
     corpusIndex(s, dir)
-    val path = "target/tmp/idx_loop_" +
-      graft.operators.Similarity.processTag + "_" +
-      dir.replaceAll("[^A-Za-z0-9.]+", "_")
+    val path = IndexStore.workPath("target/tmp/idx_loop_" + IndexStore.dirTag(dir))
     val stamp = "screenloop1|" +
       IndexStore.sourceStamp(s, Seq(s"$dir/documents.parquet"))
-    synchronized {
-      if (!IndexStore.isCurrent(s, path, stamp)) {
-        val b1 = augmentedDocs(s, dir)
-          .filter(col("doc_id") >= 100000L && col("doc_id") < 200000L)
-        val d1 = screenBatch(s, dir, b1).localCheckpoint()
-        IndexStore.copy(s, fixtureIndexPath(dir), path)
-        graft.operators.Similarity.cleanupAtExit(path)
-        val accepted1 = b1.join(
-          d1.filter(col("decision") === "accept").select(col("doc_id")), "doc_id")
-        refreshIndex(s, path, accepted1)
-        IndexStore.writeStamp(s, path, stamp)
-      }
+    IndexStore.stamped(s, path, stamp) {
+      val b1 = augmentedDocs(s, dir)
+        .filter(col("doc_id") >= 100000L && col("doc_id") < 200000L)
+      val d1 = screenBatch(s, dir, b1).localCheckpoint()
+      IndexStore.copy(s, fixtureIndexPath(dir), path)
+      val accepted1 = b1.join(
+        d1.filter(col("decision") === "accept").select(col("doc_id")), "doc_id")
+      refreshIndex(s, path, accepted1)
+      IndexStore.writeStamp(s, path, stamp)
     }
     path
   }
@@ -1979,7 +1951,7 @@ object Dedup extends QueryModule {
   }
 
   private[graft] def seqDedupPath(dir: String): String =
-    "target/graft_index/dedupsq_" + dir.replaceAll("[^A-Za-z0-9.]+", "_")
+    "target/graft_index/dedupsq_" + IndexStore.dirTag(dir)
 
   /** q213: as-of screening over a SEGMENT-TAGGED dedup store — the q210
     * audit story ("reproduce yesterday's decision") for the MinHash
@@ -2003,31 +1975,29 @@ object Dedup extends QueryModule {
     val path = seqDedupPath(dir)
     val b1 = augmentedDocs(s, dir)
       .filter(col("doc_id") >= 100000L && col("doc_id") < 200000L)
-    synchronized {
-      val stamp = "dsq1|" +
-        IndexStore.sourceStamp(s, Seq(s"$dir/documents.parquet"))
-      if (!IndexStore.isCurrent(s, path, stamp)) {
-        val idx = corpusIndex(s, dir)
-        // batch 1's decisions, frozen before anything derives from them
-        val d1 = screenBatch(idx, b1).localCheckpoint()
-        val accepted1 = b1.join(
-          d1.filter(col("decision") === "accept").select(col("doc_id")), "doc_id")
-        val add = buildIndex(accepted1.localCheckpoint())
-        val sigs1 = add.sigs.localCheckpoint()
-        IndexStore.write(s, path, stamp + "|building", Seq(
-          "digests" -> idx.digests.withColumn("seg", lit(0)),
-          "sigs" -> idx.sigs.withColumn("seg", lit(0)),
-          "bands" -> idx.bands.withColumn("seg", lit(0))))
-        IndexStore.inParallel(Seq(
-          () => IndexStore.append(s, path, "digests",
-            add.digests.withColumn("seg", lit(1))),
-          () => IndexStore.append(s, path, "sigs",
-            sigs1.withColumn("seg", lit(1))),
-          () => IndexStore.append(s, path, "bands",
-            capBuckets(bandRows(sigs1), Seq("band", "bk"), BandCap)
-              .withColumn("seg", lit(1)))))
-        IndexStore.writeStamp(s, path, stamp)
-      }
+    val stamp = "dsq1|" +
+      IndexStore.sourceStamp(s, Seq(s"$dir/documents.parquet"))
+    IndexStore.stamped(s, path, stamp) {
+      val idx = corpusIndex(s, dir)
+      // batch 1's decisions, frozen before anything derives from them
+      val d1 = screenBatch(idx, b1).localCheckpoint()
+      val accepted1 = b1.join(
+        d1.filter(col("decision") === "accept").select(col("doc_id")), "doc_id")
+      val add = buildIndex(accepted1.localCheckpoint())
+      val sigs1 = add.sigs.localCheckpoint()
+      IndexStore.write(s, path, stamp + "|building", Seq(
+        "digests" -> idx.digests.withColumn("seg", lit(0)),
+        "sigs" -> idx.sigs.withColumn("seg", lit(0)),
+        "bands" -> idx.bands.withColumn("seg", lit(0))))
+      IndexStore.inParallel(Seq(
+        () => IndexStore.append(s, path, "digests",
+          add.digests.withColumn("seg", lit(1))),
+        () => IndexStore.append(s, path, "sigs",
+          sigs1.withColumn("seg", lit(1))),
+        () => IndexStore.append(s, path, "bands",
+          capBuckets(bandRows(sigs1), Seq("band", "bk"), BandCap)
+            .withColumn("seg", lit(1)))))
+      IndexStore.writeStamp(s, path, stamp)
     }
     val b2 = b1.select((col("doc_id") + 300000L).as("doc_id"), col("text"), col("lang"))
     def at(h: Int): DedupIndex = {

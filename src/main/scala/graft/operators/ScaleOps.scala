@@ -624,14 +624,13 @@ object ScaleOps extends QueryModule {
     */
   def sketchStore(s: SparkSession, dir: String): DataFrame = {
     tune(s)
-    val path = "target/graft_index/hll_" + dir.replaceAll("[^A-Za-z0-9.]+", "_")
-    synchronized {
-      val stamp = IndexStore.sourceStamp(s, Seq(s"$dir/orders.parquet"))
-      if (!IndexStore.isCurrent(s, path, stamp))
-        graft.sources.SketchStore.build(
-          table(s, dir, "orders").select(col("o_custkey").as("k"),
-            date_format(col("o_orderdate"), "yyyy-MM").as("scope")),
-          path, "scope", "k", stamp)
+    val path = "target/graft_index/hll_" + IndexStore.dirTag(dir)
+    val stamp = IndexStore.sourceStamp(s, Seq(s"$dir/orders.parquet"))
+    IndexStore.stamped(s, path, stamp) {
+      graft.sources.SketchStore.build(
+        table(s, dir, "orders").select(col("o_custkey").as("k"),
+          date_format(col("o_orderdate"), "yyyy-MM").as("scope")),
+        path, "scope", "k", stamp)
     }
     graft.sources.SketchStore.rollup(s, path)
   }
@@ -737,7 +736,7 @@ object ScaleOps extends QueryModule {
   }
 
   private def zLakePath(dir: String): String =
-    "target/tmp/zlake_" + dir.replaceAll("[^A-Za-z0-9.]+", "_")
+    "target/tmp/zlake_" + IndexStore.dirTag(dir)
 
   /** (Re)writes the q141 z-ordered lake; the layout is a pure function of
     * the data (one part per z-bucket, rows routed by Morton key), so a
@@ -2184,28 +2183,26 @@ object ScaleOps extends QueryModule {
       .select(col("source"), col("rate_ppm"))
 
   private[graft] def mixAdmitStore(s: SparkSession, dir: String): String = {
-    val path = "target/graft_index/mixadm_" + dir.replaceAll("[^A-Za-z0-9.]+", "_")
+    val path = "target/graft_index/mixadm_" + IndexStore.dirTag(dir)
     val stamp = "mixadm2|" +
       IndexStore.sourceStamp(s, Seq(s"$dir/documents.parquet"))
-    synchronized {
-      if (!IndexStore.isCurrent(s, path, stamp)) {
-        // the probes inject arrivals at +100000/+200000 (ADVICE r19):
-        // assert the headroom once per stamped build, not per probe
-        graft.Engine.assertIdHeadroom(
-          table(s, dir, "documents"), "doc_id", 100000L)
-        val marked = markDups(s, dir)
-          .localCheckpoint()
-        val cnts = marked.filter(!col("is_dup"))
-          .groupBy(col("source")).agg(sum(col("tk")).as("c"))
-        val rates = ratesFrom(cnts)
-        // a NULL text has no digest in either engine (md5(NULL) = NULL;
-        // COUNT(DISTINCT) and IN-probes skip it) — keep the stored set
-        // NULL-free so the q236 manifest count matches its oracle
-        IndexStore.write(s, path, stamp, Seq(
-          "digests" -> marked.select(col("dh"))
-            .filter(col("dh").isNotNull).distinct(),
-          "rates" -> rates))
-      }
+    IndexStore.stamped(s, path, stamp) {
+      // the probes inject arrivals at +100000/+200000 (ADVICE r19):
+      // assert the headroom once per stamped build, not per probe
+      graft.Engine.assertIdHeadroom(
+        table(s, dir, "documents"), "doc_id", 100000L)
+      val marked = markDups(s, dir)
+        .localCheckpoint()
+      val cnts = marked.filter(!col("is_dup"))
+        .groupBy(col("source")).agg(sum(col("tk")).as("c"))
+      val rates = ratesFrom(cnts)
+      // a NULL text has no digest in either engine (md5(NULL) = NULL;
+      // COUNT(DISTINCT) and IN-probes skip it) — keep the stored set
+      // NULL-free so the q236 manifest count matches its oracle
+      IndexStore.write(s, path, stamp, Seq(
+        "digests" -> marked.select(col("dh"))
+          .filter(col("dh").isNotNull).distinct(),
+        "rates" -> rates))
     }
     path
   }
@@ -2426,32 +2423,27 @@ object ScaleOps extends QueryModule {
   }
 
   private[graft] def mixAdmitSyncStore(s: SparkSession, dir: String): String = {
-    val path = "target/tmp/mixadm_sync_" +
-      graft.operators.Similarity.processTag + "_" +
-      dir.replaceAll("[^A-Za-z0-9.]+", "_")
+    val path = IndexStore.workPath("target/tmp/mixadm_sync_" + IndexStore.dirTag(dir))
     val stamp = "mixadmsync1|" +
       IndexStore.sourceStamp(s, Seq(s"$dir/documents.parquet"))
-    synchronized {
-      if (!IndexStore.isCurrent(s, path, stamp)) {
-        val f = mixAdmFeedFixture(s, dir, "mixadmsync")
-        // v1 store: member keys, NULL-free digest set, canonical counts,
-        // rates — all from the lake state the feed windows against
-        val keys0 = digestKeys(f.base).localCheckpoint()
-        val counts0 = canonOf(keys0)
-          .groupBy(col("source")).agg(sum(col("tk")).as("c"))
-          .filter(col("c") > 0L)
-        IndexStore.write(s, path, "mixadmsync-building", Seq(
-          "keys" -> keys0,
-          "digests" -> keys0.select(col("dh"))
-            .filter(col("dh").isNotNull).distinct(),
-          "counts" -> counts0,
-          "rates" -> ratesFrom(counts0)))
-        graft.operators.Similarity.cleanupAtExit(path)
-        applyMixAdmFeed(s, path, f.inserts, f.delKeys)
-        IndexStore.writeStamp(s, path, stamp, Map(
-          "n_feed_inserts" -> f.inserts.count().toString,
-          "n_feed_deletes" -> f.delKeys.count().toString))
-      }
+    IndexStore.stamped(s, path, stamp) {
+      val f = mixAdmFeedFixture(s, dir, "mixadmsync")
+      // v1 store: member keys, NULL-free digest set, canonical counts,
+      // rates — all from the lake state the feed windows against
+      val keys0 = digestKeys(f.base).localCheckpoint()
+      val counts0 = canonOf(keys0)
+        .groupBy(col("source")).agg(sum(col("tk")).as("c"))
+        .filter(col("c") > 0L)
+      IndexStore.write(s, path, "mixadmsync-building", Seq(
+        "keys" -> keys0,
+        "digests" -> keys0.select(col("dh"))
+          .filter(col("dh").isNotNull).distinct(),
+        "counts" -> counts0,
+        "rates" -> ratesFrom(counts0)))
+      applyMixAdmFeed(s, path, f.inserts, f.delKeys)
+      IndexStore.writeStamp(s, path, stamp, Map(
+        "n_feed_inserts" -> f.inserts.count().toString,
+        "n_feed_deletes" -> f.delKeys.count().toString))
     }
     path
   }
@@ -2657,65 +2649,60 @@ object ScaleOps extends QueryModule {
   }
 
   private[graft] def mixAdmMaskSyncStore(s: SparkSession, dir: String): String = {
-    val path = "target/tmp/mixadm_msync_" +
-      graft.operators.Similarity.processTag + "_" +
-      dir.replaceAll("[^A-Za-z0-9.]+", "_")
+    val path = IndexStore.workPath("target/tmp/mixadm_msync_" + IndexStore.dirTag(dir))
     val stamp = "mixadmmasksync1|" +
       IndexStore.sourceStamp(s, Seq(s"$dir/documents.parquet"))
-    synchronized {
-      if (!IndexStore.isCurrent(s, path, stamp)) {
-        val f = mixAdmFeedFixture(s, dir, "mixadmmasksync")
-        val keys0 = digestKeys(f.base).localCheckpoint()
-        val counts0 = canonOf(keys0)
-          .groupBy(col("source")).agg(sum(col("tk")).as("c"))
-          .filter(col("c") > 0L).localCheckpoint()
-        def seg0(df: DataFrame) = df.withColumn("seg", lit(0L))
-        IndexStore.write(s, path, "mixadmmasksync-building", Seq(
-          "keys" -> seg0(keys0),
-          "digests" -> seg0(keys0.select(col("dh"))
-            .filter(col("dh").isNotNull).distinct()),
-          "counts" -> counts0,
-          "rates" -> ratesFrom(counts0)))
-        graft.operators.Similarity.cleanupAtExit(path)
-        val del = broadcast(f.delKeys.localCheckpoint())
-        val insKeys = digestKeys(f.inserts).localCheckpoint()
-        // ---- delete leg: the q260 group-survival decision, computed
-        // once against v1 keys, stored as masks (survivalDelta with an
-        // empty arrival side — pure deletes can only ERASE digests)
-        val dLeg = survivalDelta(keys0, del, insKeys.limit(0))
-        IndexStore.appendDeleteMask(s, path,
-          del.withColumn("seq", lit(0L)))
-        IndexStore.append(s, path, "mask_gone",
-          dLeg.gone.withColumn("seq", lit(0L)))
-        // ---- insert leg against the POST-DELETE view: arrival holders
-        // append; digests absent post-delete re-append at seg 1
-        // (survivalDelta with an empty delete side — pure inserts can
-        // only ADD digests)
-        val keys1 = keys0.join(del, Seq("doc_id"), "left_anti")
-        val iLeg = survivalDelta(keys1, del.limit(0), insKeys)
-        def seg1(df: DataFrame) = df.withColumn("seg", lit(1L))
-        // count deltas telescope: (newCd - oldCd) + (newCi - oldCi)
-        val counts2 = counts0
-          .unionByName(dLeg.oldCanon.groupBy(col("source")).agg((-sum(col("tk"))).as("c")))
-          .unionByName(dLeg.newCanon.groupBy(col("source")).agg(sum(col("tk")).as("c")))
-          .unionByName(iLeg.oldCanon.groupBy(col("source")).agg((-sum(col("tk"))).as("c")))
-          .unionByName(iLeg.newCanon.groupBy(col("source")).agg(sum(col("tk")).as("c")))
-          .groupBy(col("source")).agg(sum(col("c")).as("c"))
-          .filter(col("c") > 0L).localCheckpoint()
-        IndexStore.inParallel(Seq(
-          () => IndexStore.append(s, path, "keys", seg1(insKeys)),
-          () => IndexStore.append(s, path, "digests", seg1(iLeg.added)),
-          () => IndexStore.replaceTable(s, path, "counts", counts2),
-          () => IndexStore.replaceTable(s, path, "rates",
-            ratesFrom(counts2).localCheckpoint())))
-        val folded = IndexStore.autoFoldIfNeeded(
-          s, path, "keys", "doc_id")(
-          IndexStore.foldMasks(s, path, MixAdmMaskFold))
-        IndexStore.writeStamp(s, path, stamp, Map(
-          "n_feed_inserts" -> insKeys.count().toString,
-          "n_feed_deletes" -> del.count().toString,
-          "auto_folded" -> folded.toString))
-      }
+    IndexStore.stamped(s, path, stamp) {
+      val f = mixAdmFeedFixture(s, dir, "mixadmmasksync")
+      val keys0 = digestKeys(f.base).localCheckpoint()
+      val counts0 = canonOf(keys0)
+        .groupBy(col("source")).agg(sum(col("tk")).as("c"))
+        .filter(col("c") > 0L).localCheckpoint()
+      def seg0(df: DataFrame) = df.withColumn("seg", lit(0L))
+      IndexStore.write(s, path, "mixadmmasksync-building", Seq(
+        "keys" -> seg0(keys0),
+        "digests" -> seg0(keys0.select(col("dh"))
+          .filter(col("dh").isNotNull).distinct()),
+        "counts" -> counts0,
+        "rates" -> ratesFrom(counts0)))
+      val del = broadcast(f.delKeys.localCheckpoint())
+      val insKeys = digestKeys(f.inserts).localCheckpoint()
+      // ---- delete leg: the q260 group-survival decision, computed
+      // once against v1 keys, stored as masks (survivalDelta with an
+      // empty arrival side — pure deletes can only ERASE digests)
+      val dLeg = survivalDelta(keys0, del, insKeys.limit(0))
+      IndexStore.appendDeleteMask(s, path,
+        del.withColumn("seq", lit(0L)))
+      IndexStore.append(s, path, "mask_gone",
+        dLeg.gone.withColumn("seq", lit(0L)))
+      // ---- insert leg against the POST-DELETE view: arrival holders
+      // append; digests absent post-delete re-append at seg 1
+      // (survivalDelta with an empty delete side — pure inserts can
+      // only ADD digests)
+      val keys1 = keys0.join(del, Seq("doc_id"), "left_anti")
+      val iLeg = survivalDelta(keys1, del.limit(0), insKeys)
+      def seg1(df: DataFrame) = df.withColumn("seg", lit(1L))
+      // count deltas telescope: (newCd - oldCd) + (newCi - oldCi)
+      val counts2 = counts0
+        .unionByName(dLeg.oldCanon.groupBy(col("source")).agg((-sum(col("tk"))).as("c")))
+        .unionByName(dLeg.newCanon.groupBy(col("source")).agg(sum(col("tk")).as("c")))
+        .unionByName(iLeg.oldCanon.groupBy(col("source")).agg((-sum(col("tk"))).as("c")))
+        .unionByName(iLeg.newCanon.groupBy(col("source")).agg(sum(col("tk")).as("c")))
+        .groupBy(col("source")).agg(sum(col("c")).as("c"))
+        .filter(col("c") > 0L).localCheckpoint()
+      IndexStore.inParallel(Seq(
+        () => IndexStore.append(s, path, "keys", seg1(insKeys)),
+        () => IndexStore.append(s, path, "digests", seg1(iLeg.added)),
+        () => IndexStore.replaceTable(s, path, "counts", counts2),
+        () => IndexStore.replaceTable(s, path, "rates",
+          ratesFrom(counts2).localCheckpoint())))
+      val folded = IndexStore.autoFoldIfNeeded(
+        s, path, "keys", "doc_id")(
+        IndexStore.foldMasks(s, path, MixAdmMaskFold))
+      IndexStore.writeStamp(s, path, stamp, Map(
+        "n_feed_inserts" -> insKeys.count().toString,
+        "n_feed_deletes" -> del.count().toString,
+        "auto_folded" -> folded.toString))
     }
     path
   }
@@ -2773,8 +2760,7 @@ object ScaleOps extends QueryModule {
     Seq("keys", "digests", "deletes", "dgone", "cdelta")
 
   private[graft] def mixAdmStreamPath(dir: String): String =
-    "target/tmp/mixadm_stream_" + graft.operators.Similarity.processTag +
-      "_" + dir.replaceAll("[^A-Za-z0-9.]+", "_")
+    IndexStore.workPath("target/tmp/mixadm_stream_" + IndexStore.dirTag(dir))
 
   /** Fresh-seed the streaming policy store from the lake's v1 state and
     * stage the drained feed as two micro-batch slices (deletes, then
@@ -2785,9 +2771,7 @@ object ScaleOps extends QueryModule {
       : (String, Seq[(Int, DataFrame)]) = {
     val f = mixAdmFeedFixture(s, dir, "mixadmstream")
     val path = mixAdmStreamPath(dir)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
+    IndexStore.remove(s, path)
     val keys0 = digestKeys(f.base).localCheckpoint()
     val counts0 = canonOf(keys0)
       .groupBy(col("source")).agg(sum(col("tk")).as("c"))
@@ -2801,7 +2785,6 @@ object ScaleOps extends QueryModule {
       s"fresh streaming mixadm store at $path had segments")
     IndexStore.writeStamp(s, path, "mixadmstream-seeded|" +
       IndexStore.sourceStamp(s, Seq(s"$dir/documents.parquet")))
-    graft.operators.Similarity.cleanupAtExit(path)
     (path, mixAdmBatchesOf(f))
   }
 

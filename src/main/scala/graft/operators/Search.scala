@@ -116,7 +116,7 @@ object Search extends QueryModule {
   }
 
   private[graft] def fixtureIndexPath(dir: String): String =
-    "target/tmp/search_idx_" + dir.replaceAll("[^A-Za-z0-9.]+", "_")
+    "target/tmp/search_idx_" + IndexStore.dirTag(dir)
 
   /** The stamp a current fixture index must carry: layout version +
     * corpus fingerprint. */
@@ -128,10 +128,9 @@ object Search extends QueryModule {
     * the store is the source of truth, the cache only saves re-opens). */
   private[graft] def searchIndex(s: SparkSession, dir: String): SearchIndex = {
     val path = fixtureIndexPath(dir)
-    synchronized {
-      val stamp = fixtureStamp(s, dir)
-      if (!IndexStore.isCurrent(s, path, stamp))
-        persistIndex(s, path, stamp, docs(s, dir))
+    val stamp = fixtureStamp(s, dir)
+    IndexStore.stamped(s, path, stamp) {
+      persistIndex(s, path, stamp, docs(s, dir))
     }
     loadIndex(s, path, cacheKey = Some(s"search:$dir"))
   }
@@ -366,10 +365,11 @@ object Search extends QueryModule {
   /** Branch the shared 3/4-corpus base index (built once per corpus stamp)
     * to a caller-private path and append the remaining quarter as segment 1
     * — the two-segment starting state of the refresh (q166) and compaction
-    * (q178) rigs. Branch paths are PROCESS-unique: the rigs mutate their
-    * index, so two JVMs sharing a working dir (Verify and Bench racing on
-    * target/) must not interleave appends into one directory; the
-    * in-process synchronized covers concurrent queries in one session.
+    * (q178) rigs. Branch paths are process-unique work paths: the rigs
+    * mutate their index, so two JVMs sharing a working dir (Verify and
+    * Bench racing on target/) must not interleave appends into one
+    * directory; the branch's path lock covers concurrent queries in one
+    * session.
     * The immutable BASE index builds once and each invocation BRANCHES it
     * by pure file copy (the q143 pattern) — repeat runs pay file IO, not
     * a recompute.
@@ -378,15 +378,11 @@ object Search extends QueryModule {
     val all = docs(s, dir)
     val base = all.filter(col("doc_id") % 4 =!= 3)
     val batch = all.filter(col("doc_id") % 4 === 3)
-    val pid = java.lang.management.ManagementFactory.getRuntimeMXBean.getName
-      .replaceAll("[^A-Za-z0-9]", "")
-    val sane = dir.replaceAll("[^A-Za-z0-9.]+", "_")
-    val basePath = s"target/tmp/search_loop_base_$sane"
-    val path = s"target/tmp/search_${tag}_${pid}_$sane"
-    synchronized {
-      val stamp = fixtureStamp(s, dir) + "|base75"
-      if (!IndexStore.isCurrent(s, basePath, stamp))
-        persistIndex(s, basePath, stamp, base)
+    val basePath = "target/tmp/search_loop_base_" + IndexStore.dirTag(dir)
+    val path = IndexStore.workPath(s"target/tmp/search_${tag}_" + IndexStore.dirTag(dir))
+    val stamp = fixtureStamp(s, dir) + "|base75"
+    IndexStore.stamped(s, basePath, stamp)(persistIndex(s, basePath, stamp, base))
+    IndexStore.withPathLock(path) {
       IndexStore.copy(s, basePath, path)
       val (post0, _, _) = segmentTables(batch, segment = 1)
       // checkpoint the increment's postings once: dl/dict derive from it,
@@ -584,7 +580,7 @@ object Search extends QueryModule {
   def segmentCompact(s: SparkSession, dir: String): DataFrame = {
     tune(s)
     val path = refreshedBranch(s, dir, "cpt")
-    synchronized { compactSearchIndex(s, path) }
+    IndexStore.withPathLock(path)(compactSearchIndex(s, path))
     val idx = loadIndex(s, path)
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("cf").desc, col("tok"))
@@ -651,8 +647,7 @@ object Search extends QueryModule {
   /** The q219 streaming store's path — process-unique and reaped at JVM
     * exit, like the vector family's streaming store. */
   private[graft] def streamIndexPath(dir: String): String =
-    "target/tmp/search_stream_" + graft.operators.Similarity.processTag +
-      "_" + dir.replaceAll("[^A-Za-z0-9.]+", "_")
+    IndexStore.workPath("target/tmp/search_stream_" + IndexStore.dirTag(dir))
 
   /** Fresh-seed the streaming search index, partition-dir-first: the base
     * corpus (3/4 of docs) lands as committed `segment=0` of all four
@@ -661,9 +656,7 @@ object Search extends QueryModule {
     * validates). */
   private[graft] def seedStreamIndex(s: SparkSession, dir: String): String = {
     val path = streamIndexPath(dir)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
+    IndexStore.remove(s, path)
     val base = docs(s, dir).filter(col("doc_id") % 4 =!= 3)
     // the four tables derive from one checkpointed tokenize — their
     // writes are independent jobs, overlapped (the q214 refresh
@@ -673,7 +666,6 @@ object Search extends QueryModule {
       s"fresh streaming index at $path had segments")
     IndexStore.writeStamp(s, path,
       "searchstream1|" + fixtureStamp(s, dir))
-    graft.operators.Similarity.cleanupAtExit(path)
     path
   }
 
@@ -843,27 +835,23 @@ object Search extends QueryModule {
     * Process-unique branch path, reaped at JVM exit. */
   private[graft] def takedownBranch(s: SparkSession, dir: String): String = {
     val idx = searchIndex(s, dir)
-    val path = fixtureIndexPath(dir) + "_takedown_" +
-      graft.operators.Similarity.processTag
+    val path = IndexStore.workPath(fixtureIndexPath(dir) + "_takedown")
     val stamp = "takedown1|" + fixtureStamp(s, dir)
-    synchronized {
-      if (!IndexStore.isCurrent(s, path, stamp)) {
-        val post = idx.postings.filter(takedownKeep).localCheckpoint()
-        val dict = post.groupBy(col("tok"), col("segment"))
-          .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"),
-            max(col("tf")).as("max_tf"))
-          .select(col("tok"), col("df"), col("cf"), col("max_tf"), col("segment"))
-        IndexStore.write(s, path, stamp, Seq(
-          "postings" -> post.repartition(col("tok"))
-            .sortWithinPartitions(col("tok"), col("doc_id")),
-          "doclen" -> idx.doclen.filter(takedownKeep),
-          "dict" -> dict,
-          "positions" -> idx.positions.filter(takedownKeep)
-            .repartition(col("tok"))
-            .sortWithinPartitions(col("tok"), col("doc_id"), col("pos"))),
-          meta = Map("takedown" -> "doc_id % 25 = 3"))
-        graft.operators.Similarity.cleanupAtExit(path)
-      }
+    IndexStore.stamped(s, path, stamp) {
+      val post = idx.postings.filter(takedownKeep).localCheckpoint()
+      val dict = post.groupBy(col("tok"), col("segment"))
+        .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"),
+          max(col("tf")).as("max_tf"))
+        .select(col("tok"), col("df"), col("cf"), col("max_tf"), col("segment"))
+      IndexStore.write(s, path, stamp, Seq(
+        "postings" -> post.repartition(col("tok"))
+          .sortWithinPartitions(col("tok"), col("doc_id")),
+        "doclen" -> idx.doclen.filter(takedownKeep),
+        "dict" -> dict,
+        "positions" -> idx.positions.filter(takedownKeep)
+          .repartition(col("tok"))
+          .sortWithinPartitions(col("tok"), col("doc_id"), col("pos"))),
+        meta = Map("takedown" -> "doc_id % 25 = 3"))
     }
     path
   }
@@ -1048,20 +1036,15 @@ object Search extends QueryModule {
     * feed's counts land in the store meta so the probe audits them
     * without re-draining the feed. */
   private[graft] def feedSyncStore(s: SparkSession, dir: String): String = {
-    val idxPath = "target/tmp/search_sync_" +
-      graft.operators.Similarity.processTag + "_" +
-      dir.replaceAll("[^A-Za-z0-9.]+", "_")
+    val idxPath = IndexStore.workPath("target/tmp/search_sync_" + IndexStore.dirTag(dir))
     val stamp = "feedsync2|" + fixtureStamp(s, dir)
-    synchronized {
-      if (!IndexStore.isCurrent(s, idxPath, stamp)) {
-        val f = docFeedFixture(s, dir, "feedsync")
-        persistIndex(s, idxPath, "feedsync-building", f.base)
-        graft.operators.Similarity.cleanupAtExit(idxPath)
-        applyFeedToIndex(s, idxPath, seg = 1, f.inserts, f.deleteIds)
-        IndexStore.writeStamp(s, idxPath, stamp, Map(
-          "n_feed_inserts" -> f.inserts.count().toString,
-          "n_feed_deletes" -> f.deleteIds.count().toString))
-      }
+    IndexStore.stamped(s, idxPath, stamp) {
+      val f = docFeedFixture(s, dir, "feedsync")
+      persistIndex(s, idxPath, "feedsync-building", f.base)
+      applyFeedToIndex(s, idxPath, seg = 1, f.inserts, f.deleteIds)
+      IndexStore.writeStamp(s, idxPath, stamp, Map(
+        "n_feed_inserts" -> f.inserts.count().toString,
+        "n_feed_deletes" -> f.deleteIds.count().toString))
     }
     idxPath
   }
@@ -1141,31 +1124,26 @@ object Search extends QueryModule {
     * (q222) deliberately does NOT use this path: erasure must remove
     * bytes, a mask only hides them. */
   private[graft] def maskSyncStore(s: SparkSession, dir: String): String = {
-    val idxPath = "target/tmp/search_msync_" +
-      graft.operators.Similarity.processTag + "_" +
-      dir.replaceAll("[^A-Za-z0-9.]+", "_")
+    val idxPath = IndexStore.workPath("target/tmp/search_msync_" + IndexStore.dirTag(dir))
     val stamp = "masksync1|" + fixtureStamp(s, dir)
-    synchronized {
-      if (!IndexStore.isCurrent(s, idxPath, stamp)) {
-        val f = docFeedFixture(s, dir, "masksync")
-        persistIndex(s, idxPath, "masksync-building", f.base)
-        graft.operators.Similarity.cleanupAtExit(idxPath)
-        // MASKED delete leg: O(delta) bytes — the rewrite q227 pays is gone
-        IndexStore.appendDeleteMask(s, idxPath,
-          f.deleteIds.withColumn("seq", lit(0L)))
-        // insert leg: identical to q227's (deletes first, then the new segment)
-        applyFeedToIndex(s, idxPath, seg = 1, f.inserts, f.deleteIds.limit(0))
-        // auto-fold policy check (VERDICT r15 item 2): the fixture's
-        // ~1% deleted fraction sits below the 0.1 default, so the mask
-        // STAYS here (q231's pre-fold semantics are the point); q237
-        // exercises the fired path under a deployment-tightened knob
-        val folded = IndexStore.autoFoldIfNeeded(
-          s, idxPath, "doclen", "doc_id")(foldDeleteMask(s, idxPath))
-        IndexStore.writeStamp(s, idxPath, stamp, Map(
-          "n_feed_inserts" -> f.inserts.count().toString,
-          "n_feed_deletes" -> f.deleteIds.count().toString,
-          "auto_folded" -> folded.toString))
-      }
+    IndexStore.stamped(s, idxPath, stamp) {
+      val f = docFeedFixture(s, dir, "masksync")
+      persistIndex(s, idxPath, "masksync-building", f.base)
+      // MASKED delete leg: O(delta) bytes — the rewrite q227 pays is gone
+      IndexStore.appendDeleteMask(s, idxPath,
+        f.deleteIds.withColumn("seq", lit(0L)))
+      // insert leg: identical to q227's (deletes first, then the new segment)
+      applyFeedToIndex(s, idxPath, seg = 1, f.inserts, f.deleteIds.limit(0))
+      // auto-fold policy check (VERDICT r15 item 2): the fixture's
+      // ~1% deleted fraction sits below the 0.1 default, so the mask
+      // STAYS here (q231's pre-fold semantics are the point); q237
+      // exercises the fired path under a deployment-tightened knob
+      val folded = IndexStore.autoFoldIfNeeded(
+        s, idxPath, "doclen", "doc_id")(foldDeleteMask(s, idxPath))
+      IndexStore.writeStamp(s, idxPath, stamp, Map(
+        "n_feed_inserts" -> f.inserts.count().toString,
+        "n_feed_deletes" -> f.deleteIds.count().toString,
+        "auto_folded" -> folded.toString))
     }
     idxPath
   }
@@ -1287,30 +1265,25 @@ object Search extends QueryModule {
     * recorded in the stamp meta so the probe audits it without
     * re-deriving the fraction. */
   private[graft] def autoFoldSyncStore(s: SparkSession, dir: String): String = {
-    val idxPath = "target/tmp/search_afold_" +
-      graft.operators.Similarity.processTag + "_" +
-      dir.replaceAll("[^A-Za-z0-9.]+", "_")
+    val idxPath = IndexStore.workPath("target/tmp/search_afold_" + IndexStore.dirTag(dir))
     val stamp = "autofold1|" + fixtureStamp(s, dir)
-    synchronized {
-      if (!IndexStore.isCurrent(s, idxPath, stamp)) {
-        val f = docFeedFixture(s, dir, "autofold")
-        persistIndex(s, idxPath, "autofold-building", f.base)
-        graft.operators.Similarity.cleanupAtExit(idxPath)
-        IndexStore.appendDeleteMask(s, idxPath,
-          f.deleteIds.withColumn("seq", lit(0L)))
-        applyFeedToIndex(s, idxPath, seg = 1, f.inserts, f.deleteIds.limit(0))
-        // the tightened threshold is a parameter of THIS build, not a
-        // session mutation: a conf set/restore window would be observed
-        // by any concurrently-building masked store in the same session
-        // and spuriously fold its mask (ADVICE r16)
-        val folded = IndexStore.autoFoldIfNeeded(
-          s, idxPath, "doclen", "doc_id", threshold = Some(0.005))(
-          foldDeleteMask(s, idxPath))
-        IndexStore.writeStamp(s, idxPath, stamp, Map(
-          "n_feed_inserts" -> f.inserts.count().toString,
-          "n_feed_deletes" -> f.deleteIds.count().toString,
-          "auto_folded" -> folded.toString))
-      }
+    IndexStore.stamped(s, idxPath, stamp) {
+      val f = docFeedFixture(s, dir, "autofold")
+      persistIndex(s, idxPath, "autofold-building", f.base)
+      IndexStore.appendDeleteMask(s, idxPath,
+        f.deleteIds.withColumn("seq", lit(0L)))
+      applyFeedToIndex(s, idxPath, seg = 1, f.inserts, f.deleteIds.limit(0))
+      // the tightened threshold is a parameter of THIS build, not a
+      // session mutation: a conf set/restore window would be observed
+      // by any concurrently-building masked store in the same session
+      // and spuriously fold its mask (ADVICE r16)
+      val folded = IndexStore.autoFoldIfNeeded(
+        s, idxPath, "doclen", "doc_id", threshold = Some(0.005))(
+        foldDeleteMask(s, idxPath))
+      IndexStore.writeStamp(s, idxPath, stamp, Map(
+        "n_feed_inserts" -> f.inserts.count().toString,
+        "n_feed_deletes" -> f.deleteIds.count().toString,
+        "auto_folded" -> folded.toString))
     }
     idxPath
   }
@@ -1384,20 +1357,15 @@ object Search extends QueryModule {
     * schema. Deletes stay physical (the q227 leg) so the carried rows
     * ride through the erasure's docmeta anti-join too on later windows. */
   private[graft] def evolvedSyncStore(s: SparkSession, dir: String): String = {
-    val idxPath = "target/tmp/search_esync_" +
-      graft.operators.Similarity.processTag + "_" +
-      dir.replaceAll("[^A-Za-z0-9.]+", "_")
+    val idxPath = IndexStore.workPath("target/tmp/search_esync_" + IndexStore.dirTag(dir))
     val stamp = "evolvedsync1|" + fixtureStamp(s, dir)
-    synchronized {
-      if (!IndexStore.isCurrent(s, idxPath, stamp)) {
-        val f = docFeedFixture(s, dir, "evolvedsync")
-        persistIndex(s, idxPath, "evolvedsync-building", f.base)
-        graft.operators.Similarity.cleanupAtExit(idxPath)
-        applyFeedToIndex(s, idxPath, seg = 1, f.insertsEvolved, f.deleteIds)
-        IndexStore.writeStamp(s, idxPath, stamp, Map(
-          "n_feed_inserts" -> f.inserts.count().toString,
-          "n_feed_deletes" -> f.deleteIds.count().toString))
-      }
+    IndexStore.stamped(s, idxPath, stamp) {
+      val f = docFeedFixture(s, dir, "evolvedsync")
+      persistIndex(s, idxPath, "evolvedsync-building", f.base)
+      applyFeedToIndex(s, idxPath, seg = 1, f.insertsEvolved, f.deleteIds)
+      IndexStore.writeStamp(s, idxPath, stamp, Map(
+        "n_feed_inserts" -> f.inserts.count().toString,
+        "n_feed_deletes" -> f.deleteIds.count().toString))
     }
     idxPath
   }

@@ -266,22 +266,20 @@ object Similarity extends QueryModule {
   }
 
   private[graft] def fixtureIvfIndexPath(dir: String): String =
-    "target/graft_index/ivf_" + dir.replaceAll("[^A-Za-z0-9.]+", "_")
+    "target/graft_index/ivf_" + IndexStore.dirTag(dir)
 
   /** Build-or-load the fixture IVF index (stamped, session-cached) —
     * the [[corpusVecIndex]] pattern. */
   private[graft] def corpusIvfIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val path = fixtureIvfIndexPath(dir)
-    synchronized {
-      val stamp = IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
-      if (!IndexStore.isCurrent(s, path, stamp)) {
-        val (cents, assign, m) = buildIvfIndex(table(s, dir, "embeddings"))
-        IndexStore.write(s, path, stamp, Seq(
-          "centroids" -> cents,
-          "assign" -> assign.repartitionByRange(col("cid"), col("vec_id"))
-            .sortWithinPartitions(col("cid"), col("vec_id"))),
-          Map("m" -> m.toString))
-      }
+    val stamp = IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
+    IndexStore.stamped(s, path, stamp) {
+      val (cents, assign, m) = buildIvfIndex(table(s, dir, "embeddings"))
+      IndexStore.write(s, path, stamp, Seq(
+        "centroids" -> cents,
+        "assign" -> assign.repartitionByRange(col("cid"), col("vec_id"))
+          .sortWithinPartitions(col("cid"), col("vec_id"))),
+        Map("m" -> m.toString))
     }
     (graft.SessionCache.cached(s, s"sim:ivfc:$dir")(
         IndexStore.read(s, path, "centroids")),
@@ -348,28 +346,25 @@ object Similarity extends QueryModule {
   private[graft] def takedownIvfBranch(s: SparkSession, dir: String): String = {
     corpusIvfIndex(s, dir)
     val src = fixtureIvfIndexPath(dir)
-    val path = src + "_takedown_" + processTag
+    val path = IndexStore.workPath(src + "_takedown")
     val stamp = "takedown1|" +
       IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
-    synchronized {
-      if (!IndexStore.isCurrent(s, path, stamp)) {
-        val m = IndexStore.readMeta(s, src)("m").toLong
-        val req = table(s, dir, "embeddings")
-          .filter(col("vec_id") % 89 === 17 && col("vec_id") % m =!= 0)
-          .select(col("vec_id")).localCheckpoint()
-        val cents = IndexStore.read(s, src, "centroids")
-        require(cents.join(req, cents("cid") === req("vec_id")).isEmpty,
-          "IVF takedown request hits a centroid seed: erasing it requires " +
-            "a cell re-seed (index rebuild), not an assign-row erasure")
-        val assign2 = IndexStore.read(s, src, "assign")
-          .join(broadcast(req), Seq("vec_id"), "left_anti")
-        IndexStore.write(s, path, stamp, Seq(
-          "centroids" -> cents,
-          "assign" -> assign2.repartitionByRange(col("cid"), col("vec_id"))
-            .sortWithinPartitions(col("cid"), col("vec_id"))),
-          Map("m" -> m.toString))
-        cleanupAtExit(path)
-      }
+    IndexStore.stamped(s, path, stamp) {
+      val m = IndexStore.readMeta(s, src)("m").toLong
+      val req = table(s, dir, "embeddings")
+        .filter(col("vec_id") % 89 === 17 && col("vec_id") % m =!= 0)
+        .select(col("vec_id")).localCheckpoint()
+      val cents = IndexStore.read(s, src, "centroids")
+      require(cents.join(req, cents("cid") === req("vec_id")).isEmpty,
+        "IVF takedown request hits a centroid seed: erasing it requires " +
+          "a cell re-seed (index rebuild), not an assign-row erasure")
+      val assign2 = IndexStore.read(s, src, "assign")
+        .join(broadcast(req), Seq("vec_id"), "left_anti")
+      IndexStore.write(s, path, stamp, Seq(
+        "centroids" -> cents,
+        "assign" -> assign2.repartitionByRange(col("cid"), col("vec_id"))
+          .sortWithinPartitions(col("cid"), col("vec_id"))),
+        Map("m" -> m.toString))
     }
     path
   }
@@ -525,33 +520,29 @@ object Similarity extends QueryModule {
     * warm probe. Final stamp written only AFTER the feed apply; the
     * feed counts land in the store meta. */
   private[graft] def ivfSyncStore(s: SparkSession, dir: String): String = {
-    val idxPath = "target/tmp/ivf_sync_" + processTag + "_" +
-      dir.replaceAll("[^A-Za-z0-9.]+", "_")
+    val idxPath = IndexStore.workPath("target/tmp/ivf_sync_" + IndexStore.dirTag(dir))
     val stamp = "vecsync2|" +
       IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
-    synchronized {
-      if (!IndexStore.isCurrent(s, idxPath, stamp)) {
-        val f = embeddingFeedFixture(s, dir, "vecsync")
-        val (cents0, assign0, m) = buildIvfIndex(f.base)
-        IndexStore.write(s, idxPath, "vecsync-building", Seq(
-          "centroids" -> cents0,
-          "assign" -> assign0.repartitionByRange(col("cid"), col("vec_id"))
-            .sortWithinPartitions(col("cid"), col("vec_id"))))
-        cleanupAtExit(idxPath)
-        // DELETE leg: one anti-join over assign (q224), sort discipline kept
-        val kept = IndexStore.read(s, idxPath, "assign")
-          .join(broadcast(f.del), Seq("vec_id"), "left_anti").localCheckpoint()
-        IndexStore.replaceTable(s, idxPath, "assign",
-          kept.repartitionByRange(col("cid"), col("vec_id"))
-            .sortWithinPartitions(col("cid"), col("vec_id")))
-        // INSERT leg: coarse-assign the arrivals against the STORED centroids
-        IndexStore.append(s, idxPath, "assign",
-          coarseAssignArrivals(s, idxPath, f.inserts))
-        IndexStore.writeStamp(s, idxPath, stamp, Map(
-          "m" -> m.toString,
-          "n_feed_inserts" -> f.inserts.count().toString,
-          "n_feed_deletes" -> f.del.count().toString))
-      }
+    IndexStore.stamped(s, idxPath, stamp) {
+      val f = embeddingFeedFixture(s, dir, "vecsync")
+      val (cents0, assign0, m) = buildIvfIndex(f.base)
+      IndexStore.write(s, idxPath, "vecsync-building", Seq(
+        "centroids" -> cents0,
+        "assign" -> assign0.repartitionByRange(col("cid"), col("vec_id"))
+          .sortWithinPartitions(col("cid"), col("vec_id"))))
+      // DELETE leg: one anti-join over assign (q224), sort discipline kept
+      val kept = IndexStore.read(s, idxPath, "assign")
+        .join(broadcast(f.del), Seq("vec_id"), "left_anti").localCheckpoint()
+      IndexStore.replaceTable(s, idxPath, "assign",
+        kept.repartitionByRange(col("cid"), col("vec_id"))
+          .sortWithinPartitions(col("cid"), col("vec_id")))
+      // INSERT leg: coarse-assign the arrivals against the STORED centroids
+      IndexStore.append(s, idxPath, "assign",
+        coarseAssignArrivals(s, idxPath, f.inserts))
+      IndexStore.writeStamp(s, idxPath, stamp, Map(
+        "m" -> m.toString,
+        "n_feed_inserts" -> f.inserts.count().toString,
+        "n_feed_deletes" -> f.del.count().toString))
     }
     idxPath
   }
@@ -630,37 +621,33 @@ object Similarity extends QueryModule {
     * coarse-assign against the STORED centroids (O(batch)); the final
     * stamp lands only after both legs. */
   private[graft] def ivfMaskSyncStore(s: SparkSession, dir: String): String = {
-    val idxPath = "target/tmp/ivf_msync_" + processTag + "_" +
-      dir.replaceAll("[^A-Za-z0-9.]+", "_")
+    val idxPath = IndexStore.workPath("target/tmp/ivf_msync_" + IndexStore.dirTag(dir))
     val stamp = "vecmasksync1|" +
       IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
-    synchronized {
-      if (!IndexStore.isCurrent(s, idxPath, stamp)) {
-        val f = embeddingFeedFixture(s, dir, "vecmasksync")
-        val (cents0, assign0, m) = buildIvfIndex(f.base)
-        IndexStore.write(s, idxPath, "vecmasksync-building", Seq(
-          "centroids" -> cents0,
-          "assign" -> assign0.withColumn("seg", lit(0L))
-            .repartitionByRange(col("cid"), col("vec_id"))
-            .sortWithinPartitions(col("cid"), col("vec_id"))))
-        cleanupAtExit(idxPath)
-        // MASKED delete leg: O(delta) bytes — q229's rewrite is gone
-        IndexStore.appendDeleteMask(s, idxPath,
-          f.del.withColumn("seq", lit(0L)))
-        // INSERT leg: coarse-assign against the STORED centroids, seg 1
-        IndexStore.append(s, idxPath, "assign",
-          coarseAssignArrivals(s, idxPath, f.inserts).withColumn("seg", lit(1L)))
-        // auto-fold policy (VERDICT r15 item 2): ~1% deleted sits below
-        // the 0.1 default, so the mask stays — q232's point
-        val folded = IndexStore.autoFoldIfNeeded(
-          s, idxPath, "assign", "vec_id")(IndexStore.foldMasks(
-          s, idxPath, vecMaskFold("assign", Seq("cid", "vec_id"))))
-        IndexStore.writeStamp(s, idxPath, stamp, Map(
-          "m" -> m.toString,
-          "n_feed_inserts" -> f.inserts.count().toString,
-          "n_feed_deletes" -> f.del.count().toString,
-          "auto_folded" -> folded.toString))
-      }
+    IndexStore.stamped(s, idxPath, stamp) {
+      val f = embeddingFeedFixture(s, dir, "vecmasksync")
+      val (cents0, assign0, m) = buildIvfIndex(f.base)
+      IndexStore.write(s, idxPath, "vecmasksync-building", Seq(
+        "centroids" -> cents0,
+        "assign" -> assign0.withColumn("seg", lit(0L))
+          .repartitionByRange(col("cid"), col("vec_id"))
+          .sortWithinPartitions(col("cid"), col("vec_id"))))
+      // MASKED delete leg: O(delta) bytes — q229's rewrite is gone
+      IndexStore.appendDeleteMask(s, idxPath,
+        f.del.withColumn("seq", lit(0L)))
+      // INSERT leg: coarse-assign against the STORED centroids, seg 1
+      IndexStore.append(s, idxPath, "assign",
+        coarseAssignArrivals(s, idxPath, f.inserts).withColumn("seg", lit(1L)))
+      // auto-fold policy (VERDICT r15 item 2): ~1% deleted sits below
+      // the 0.1 default, so the mask stays — q232's point
+      val folded = IndexStore.autoFoldIfNeeded(
+        s, idxPath, "assign", "vec_id")(IndexStore.foldMasks(
+        s, idxPath, vecMaskFold("assign", Seq("cid", "vec_id"))))
+      IndexStore.writeStamp(s, idxPath, stamp, Map(
+        "m" -> m.toString,
+        "n_feed_inserts" -> f.inserts.count().toString,
+        "n_feed_deletes" -> f.del.count().toString,
+        "auto_folded" -> folded.toString))
     }
     idxPath
   }
@@ -1130,7 +1117,7 @@ object Similarity extends QueryModule {
     // stamp checks invalidate each other — every access ping-ponged a
     // full rebuild and deleted the other store's live files out from
     // under session-cached readers (the r20 inherited test failure)
-    "target/graft_index/ivflloyd_" + dir.replaceAll("[^A-Za-z0-9.]+", "_")
+    "target/graft_index/ivflloyd_" + IndexStore.dirTag(dir)
 
   /** Build-or-load the REFINED fixture IVF index: the modulus seeding
     * pushed through ONE [[lloydStep]] (q185's decimal-exact math,
@@ -1144,24 +1131,22 @@ object Similarity extends QueryModule {
   private[graft] def corpusRefinedIvfIndex(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
     val path = refinedIvfIndexPath(dir)
-    synchronized {
-      val stamp = "ivfr1|lloyd1|" +
-        IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
-      if (!IndexStore.isCurrent(s, path, stamp)) {
-        val corpus = table(s, dir, "embeddings")
-        val e = withNorm(corpus.select(col("vec_id"), col("embedding")))
-        val m = math.ceil(math.sqrt(corpus.count().toDouble)).toLong.max(1L)
-        val (cents1, assign1) = lloydStep(e, m)
-        IndexStore.write(s, path, stamp, Seq(
-          "centroids" -> cents1
-            .select(col("cid"), col("qemb").as("embedding"), col("nc")),
-          "assign" -> assign1
-            .select(col("cid"), col("vec_id"), col("vemb").as("embedding"),
-              col("nrm"))
-            .repartitionByRange(col("cid"), col("vec_id"))
-            .sortWithinPartitions(col("cid"), col("vec_id"))),
-          Map("m" -> m.toString, "lloyd_steps" -> "1"))
-      }
+    val stamp = "ivfr1|lloyd1|" +
+      IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
+    IndexStore.stamped(s, path, stamp) {
+      val corpus = table(s, dir, "embeddings")
+      val e = withNorm(corpus.select(col("vec_id"), col("embedding")))
+      val m = math.ceil(math.sqrt(corpus.count().toDouble)).toLong.max(1L)
+      val (cents1, assign1) = lloydStep(e, m)
+      IndexStore.write(s, path, stamp, Seq(
+        "centroids" -> cents1
+          .select(col("cid"), col("qemb").as("embedding"), col("nc")),
+        "assign" -> assign1
+          .select(col("cid"), col("vec_id"), col("vemb").as("embedding"),
+            col("nrm"))
+          .repartitionByRange(col("cid"), col("vec_id"))
+          .sortWithinPartitions(col("cid"), col("vec_id"))),
+        Map("m" -> m.toString, "lloyd_steps" -> "1"))
     }
     (graft.SessionCache.cached(s, s"sim:ivfrc:$dir")(
         IndexStore.read(s, path, "centroids")),
@@ -1420,7 +1405,7 @@ object Similarity extends QueryModule {
   }
 
   private[graft] def fixturePqIndexPath(dir: String): String =
-    "target/graft_index/pq_" + dir.replaceAll("[^A-Za-z0-9.]+", "_")
+    "target/graft_index/pq_" + IndexStore.dirTag(dir)
 
   /** Build-or-load the persisted fixture PQ index (stamped, atomic swap —
     * the [[corpusIvfIndex]] pattern):
@@ -1435,25 +1420,23 @@ object Similarity extends QueryModule {
     */
   private[graft] def corpusPqIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val path = fixturePqIndexPath(dir)
-    synchronized {
-      // training depth is part of the stored content — fold it into the
-      // stamp so a depth change invalidates codebooks AND codes
-      val stamp = s"lloyd$PqLloydSteps|" +
-        IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
-      if (!IndexStore.isCurrent(s, path, stamp)) {
-        val (_, assign) = corpusIvfIndex(s, dir)
-        val corpus = table(s, dir, "embeddings")
-        val (_, cb1, mq) = pqCodebooks(corpus)
-        val cbm = cb1.localCheckpoint(true) // trained once, read by encode + queries
-        val codes = pqEncodeAgainst(corpus, cbm)
-        val withCid = codes.join(assign.select(col("vec_id"), col("cid")), Seq("vec_id"))
-        IndexStore.write(s, path, stamp, Seq(
-          "codebooks" -> cbm,
-          "codes" -> withCid.repartitionByRange(col("cid"), col("vec_id"))
-            .sortWithinPartitions(col("cid"), col("vec_id"), col("j"))),
-          Map("mq" -> mq.toString))
-        cbm.unpersist()
-      }
+    // training depth is part of the stored content — fold it into the
+    // stamp so a depth change invalidates codebooks AND codes
+    val stamp = s"lloyd$PqLloydSteps|" +
+      IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
+    IndexStore.stamped(s, path, stamp) {
+      val (_, assign) = corpusIvfIndex(s, dir)
+      val corpus = table(s, dir, "embeddings")
+      val (_, cb1, mq) = pqCodebooks(corpus)
+      val cbm = cb1.localCheckpoint(true) // trained once, read by encode + queries
+      val codes = pqEncodeAgainst(corpus, cbm)
+      val withCid = codes.join(assign.select(col("vec_id"), col("cid")), Seq("vec_id"))
+      IndexStore.write(s, path, stamp, Seq(
+        "codebooks" -> cbm,
+        "codes" -> withCid.repartitionByRange(col("cid"), col("vec_id"))
+          .sortWithinPartitions(col("cid"), col("vec_id"), col("j"))),
+        Map("mq" -> mq.toString))
+      cbm.unpersist()
     }
     (graft.SessionCache.cached(s, s"sim:pqcb:$dir")(
         IndexStore.read(s, path, "codebooks")),
@@ -1609,25 +1592,22 @@ object Similarity extends QueryModule {
     corpusPqIndex(s, dir)
     corpusIvfIndex(s, dir)
     val src = fixturePqIndexPath(dir)
-    val path = src + "_takedown_" + processTag
+    val path = IndexStore.workPath(src + "_takedown")
     val stamp = s"takedown1|lloyd$PqLloydSteps|" +
       IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
-    synchronized {
-      if (!IndexStore.isCurrent(s, path, stamp)) {
-        val m = IndexStore
-          .readMeta(s, fixtureIvfIndexPath(dir))("m").toLong
-        val req = table(s, dir, "embeddings")
-          .filter(col("vec_id") % 89 === 17 && col("vec_id") % m =!= 0)
-          .select(col("vec_id")).localCheckpoint()
-        val codes2 = IndexStore.read(s, src, "codes")
-          .join(broadcast(req), Seq("vec_id"), "left_anti")
-        IndexStore.write(s, path, stamp, Seq(
-          "codebooks" -> IndexStore.read(s, src, "codebooks"),
-          "codes" -> codes2.repartitionByRange(col("cid"), col("vec_id"))
-            .sortWithinPartitions(col("cid"), col("vec_id"), col("j"))),
-          Map("mq" -> IndexStore.readMeta(s, src)("mq")))
-        cleanupAtExit(path)
-      }
+    IndexStore.stamped(s, path, stamp) {
+      val m = IndexStore
+        .readMeta(s, fixtureIvfIndexPath(dir))("m").toLong
+      val req = table(s, dir, "embeddings")
+        .filter(col("vec_id") % 89 === 17 && col("vec_id") % m =!= 0)
+        .select(col("vec_id")).localCheckpoint()
+      val codes2 = IndexStore.read(s, src, "codes")
+        .join(broadcast(req), Seq("vec_id"), "left_anti")
+      IndexStore.write(s, path, stamp, Seq(
+        "codebooks" -> IndexStore.read(s, src, "codebooks"),
+        "codes" -> codes2.repartitionByRange(col("cid"), col("vec_id"))
+          .sortWithinPartitions(col("cid"), col("vec_id"), col("j"))),
+        Map("mq" -> IndexStore.readMeta(s, src)("mq")))
     }
     path
   }
@@ -1708,42 +1688,38 @@ object Similarity extends QueryModule {
     * which is what makes the recurring benched cost the WARM probe
     * (the q222 convention VERDICT r14 item 3 prescribes). */
   private[graft] def pqSyncStore(s: SparkSession, dir: String): String = {
-    val idxPath = "target/tmp/pq_sync_" + processTag + "_" +
-      dir.replaceAll("[^A-Za-z0-9.]+", "_")
+    val idxPath = IndexStore.workPath("target/tmp/pq_sync_" + IndexStore.dirTag(dir))
     val stamp = s"pqsync1|lloyd$PqLloydSteps|" +
       IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
-    synchronized {
-      if (!IndexStore.isCurrent(s, idxPath, stamp)) {
-        // the same erasure slice as q224/q226/q229 (the shared fixture):
-        // one takedown request provably leaves every serving structure,
-        // and the IVF-centroid seed exclusion keeps the slice identical
-        // across the families
-        val f = embeddingFeedFixture(s, dir, "pqsync")
-        val (_, cb1, mq) = pqCodebooks(f.base)
-        val cbm = cb1.localCheckpoint(true)
-        // staging stamp: validates as CURRENT only after the feed apply
-        IndexStore.write(s, idxPath, "pqsync-building", Seq(
-          "codebooks" -> cbm,
-          "codes" -> pqEncodeAgainst(f.base, cbm)
-            .repartitionByRange(col("vec_id"))
-            .sortWithinPartitions(col("vec_id"), col("j"))))
-        cleanupAtExit(idxPath)
-        // DELETE leg: one broadcast anti-join over the codes (q226)
-        val kept = IndexStore.read(s, idxPath, "codes")
-          .join(broadcast(f.del), Seq("vec_id"), "left_anti").localCheckpoint()
-        IndexStore.replaceTable(s, idxPath, "codes",
-          kept.repartitionByRange(col("vec_id"))
-            .sortWithinPartitions(col("vec_id"), col("j")))
-        // INSERT leg: encode the arrivals against the STORED codebooks
-        IndexStore.append(s, idxPath, "codes",
-          pqEncodeAgainst(f.inserts,
-            IndexStore.read(s, idxPath, "codebooks")))
-        IndexStore.writeStamp(s, idxPath, stamp, Map(
-          "mq" -> mq.toString, "m" -> f.m.toString,
-          "n_feed_inserts" -> f.inserts.count().toString,
-          "n_feed_deletes" -> f.del.count().toString))
-        cbm.unpersist(): Unit
-      }
+    IndexStore.stamped(s, idxPath, stamp) {
+      // the same erasure slice as q224/q226/q229 (the shared fixture):
+      // one takedown request provably leaves every serving structure,
+      // and the IVF-centroid seed exclusion keeps the slice identical
+      // across the families
+      val f = embeddingFeedFixture(s, dir, "pqsync")
+      val (_, cb1, mq) = pqCodebooks(f.base)
+      val cbm = cb1.localCheckpoint(true)
+      // staging stamp: validates as CURRENT only after the feed apply
+      IndexStore.write(s, idxPath, "pqsync-building", Seq(
+        "codebooks" -> cbm,
+        "codes" -> pqEncodeAgainst(f.base, cbm)
+          .repartitionByRange(col("vec_id"))
+          .sortWithinPartitions(col("vec_id"), col("j"))))
+      // DELETE leg: one broadcast anti-join over the codes (q226)
+      val kept = IndexStore.read(s, idxPath, "codes")
+        .join(broadcast(f.del), Seq("vec_id"), "left_anti").localCheckpoint()
+      IndexStore.replaceTable(s, idxPath, "codes",
+        kept.repartitionByRange(col("vec_id"))
+          .sortWithinPartitions(col("vec_id"), col("j")))
+      // INSERT leg: encode the arrivals against the STORED codebooks
+      IndexStore.append(s, idxPath, "codes",
+        pqEncodeAgainst(f.inserts,
+          IndexStore.read(s, idxPath, "codebooks")))
+      IndexStore.writeStamp(s, idxPath, stamp, Map(
+        "mq" -> mq.toString, "m" -> f.m.toString,
+        "n_feed_inserts" -> f.inserts.count().toString,
+        "n_feed_deletes" -> f.del.count().toString))
+      cbm.unpersist(): Unit
     }
     idxPath
   }
@@ -1835,41 +1811,37 @@ object Similarity extends QueryModule {
     * encode, 1 = arrivals encoded against the STORED codebooks) for the
     * mask's sequence scoping. */
   private[graft] def pqMaskSyncStore(s: SparkSession, dir: String): String = {
-    val idxPath = "target/tmp/pq_msync_" + processTag + "_" +
-      dir.replaceAll("[^A-Za-z0-9.]+", "_")
+    val idxPath = IndexStore.workPath("target/tmp/pq_msync_" + IndexStore.dirTag(dir))
     val stamp = s"pqmasksync1|lloyd$PqLloydSteps|" +
       IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
-    synchronized {
-      if (!IndexStore.isCurrent(s, idxPath, stamp)) {
-        val f = embeddingFeedFixture(s, dir, "pqmasksync")
-        val (_, cb1, mq) = pqCodebooks(f.base)
-        val cbm = cb1.localCheckpoint(true)
-        IndexStore.write(s, idxPath, "pqmasksync-building", Seq(
-          "codebooks" -> cbm,
-          "codes" -> pqEncodeAgainst(f.base, cbm).withColumn("seg", lit(0L))
-            .repartitionByRange(col("vec_id"))
-            .sortWithinPartitions(col("vec_id"), col("j"))))
-        cleanupAtExit(idxPath)
-        // MASKED delete leg: O(delta) bytes — q230's codes rewrite is gone
-        IndexStore.appendDeleteMask(s, idxPath,
-          f.del.withColumn("seq", lit(0L)))
-        // INSERT leg: encode against the STORED codebooks, seg 1
-        IndexStore.append(s, idxPath, "codes",
-          pqEncodeAgainst(f.inserts,
-            IndexStore.read(s, idxPath, "codebooks"))
-            .withColumn("seg", lit(1L)))
-        // auto-fold policy (VERDICT r15 item 2); distinct-key fraction,
-        // so the M-rows-per-vector codes table reads the same ~1%
-        val folded = IndexStore.autoFoldIfNeeded(
-          s, idxPath, "codes", "vec_id")(IndexStore.foldMasks(
-          s, idxPath, vecMaskFold("codes", Seq("vec_id", "j"))))
-        IndexStore.writeStamp(s, idxPath, stamp, Map(
-          "mq" -> mq.toString, "m" -> f.m.toString,
-          "n_feed_inserts" -> f.inserts.count().toString,
-          "n_feed_deletes" -> f.del.count().toString,
-          "auto_folded" -> folded.toString))
-        cbm.unpersist(): Unit
-      }
+    IndexStore.stamped(s, idxPath, stamp) {
+      val f = embeddingFeedFixture(s, dir, "pqmasksync")
+      val (_, cb1, mq) = pqCodebooks(f.base)
+      val cbm = cb1.localCheckpoint(true)
+      IndexStore.write(s, idxPath, "pqmasksync-building", Seq(
+        "codebooks" -> cbm,
+        "codes" -> pqEncodeAgainst(f.base, cbm).withColumn("seg", lit(0L))
+          .repartitionByRange(col("vec_id"))
+          .sortWithinPartitions(col("vec_id"), col("j"))))
+      // MASKED delete leg: O(delta) bytes — q230's codes rewrite is gone
+      IndexStore.appendDeleteMask(s, idxPath,
+        f.del.withColumn("seq", lit(0L)))
+      // INSERT leg: encode against the STORED codebooks, seg 1
+      IndexStore.append(s, idxPath, "codes",
+        pqEncodeAgainst(f.inserts,
+          IndexStore.read(s, idxPath, "codebooks"))
+          .withColumn("seg", lit(1L)))
+      // auto-fold policy (VERDICT r15 item 2); distinct-key fraction,
+      // so the M-rows-per-vector codes table reads the same ~1%
+      val folded = IndexStore.autoFoldIfNeeded(
+        s, idxPath, "codes", "vec_id")(IndexStore.foldMasks(
+        s, idxPath, vecMaskFold("codes", Seq("vec_id", "j"))))
+      IndexStore.writeStamp(s, idxPath, stamp, Map(
+        "mq" -> mq.toString, "m" -> f.m.toString,
+        "n_feed_inserts" -> f.inserts.count().toString,
+        "n_feed_deletes" -> f.del.count().toString,
+        "auto_folded" -> folded.toString))
+      cbm.unpersist(): Unit
     }
     idxPath
   }
@@ -2141,7 +2113,7 @@ object Similarity extends QueryModule {
        |GROUP BY 1""".stripMargin
 
   private[graft] def seqPqPath(dir: String): String =
-    "target/graft_index/pqseq_" + dir.replaceAll("[^A-Za-z0-9.]+", "_")
+    "target/graft_index/pqseq_" + IndexStore.dirTag(dir)
 
   /** q208: SEQUENTIAL PQ refresh — the q195 segment pattern applied to
     * the CODE store, completing ingest symmetry for the PQ family (the
@@ -2186,29 +2158,27 @@ object Similarity extends QueryModule {
     * path. */
   private def ensureSeqPq(s: SparkSession, dir: String): String = {
     val path = seqPqPath(dir)
-    synchronized {
-      val stamp = s"pqseq1|lloyd$PqLloydSteps|" +
-        IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
-      if (!IndexStore.isCurrent(s, path, stamp)) {
-        val (cb, codes) = corpusPqIndex(s, dir)
-        val (cents, _) = corpusIvfIndex(s, dir)
-        IndexStore.write(s, path, stamp + "|building", Seq(
-          "codes" -> codes
-            .select(col("cid"), col("vec_id"), col("j"), col("code"), col("d2"),
-              lit(0).as("seg"))
+    val stamp = s"pqseq1|lloyd$PqLloydSteps|" +
+      IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
+    IndexStore.stamped(s, path, stamp) {
+      val (cb, codes) = corpusPqIndex(s, dir)
+      val (cents, _) = corpusIvfIndex(s, dir)
+      IndexStore.write(s, path, stamp + "|building", Seq(
+        "codes" -> codes
+          .select(col("cid"), col("vec_id"), col("j"), col("code"), col("d2"),
+            lit(0).as("seg"))
+          .repartitionByRange(col("cid"), col("vec_id"))
+          .sortWithinPartitions(col("cid"), col("vec_id"), col("j"))))
+      seqArrivalBatches(s, dir).foreach { case (segId, b) =>
+        val acid = coarseAssign(cents, b).select(col("vec_id"), col("cid"))
+        val bcodes = pqEncodeAgainst(b, cb).join(acid, Seq("vec_id"))
+        IndexStore.append(s, path, "codes",
+          bcodes.select(col("cid"), col("vec_id"), col("j"), col("code"),
+              col("d2"), lit(segId).as("seg"))
             .repartitionByRange(col("cid"), col("vec_id"))
-            .sortWithinPartitions(col("cid"), col("vec_id"), col("j"))))
-        seqArrivalBatches(s, dir).foreach { case (segId, b) =>
-          val acid = coarseAssign(cents, b).select(col("vec_id"), col("cid"))
-          val bcodes = pqEncodeAgainst(b, cb).join(acid, Seq("vec_id"))
-          IndexStore.append(s, path, "codes",
-            bcodes.select(col("cid"), col("vec_id"), col("j"), col("code"),
-                col("d2"), lit(segId).as("seg"))
-              .repartitionByRange(col("cid"), col("vec_id"))
-              .sortWithinPartitions(col("cid"), col("vec_id"), col("j")))
-        }
-        IndexStore.writeStamp(s, path, stamp)
+            .sortWithinPartitions(col("cid"), col("vec_id"), col("j")))
       }
+      IndexStore.writeStamp(s, path, stamp)
     }
     path
   }
@@ -2480,7 +2450,7 @@ object Similarity extends QueryModule {
        |WHERE p.pick <= q.quota""".stripMargin
 
   private[graft] def refreshedIvfPath(dir: String): String =
-    "target/graft_index/ivfr_" + dir.replaceAll("[^A-Za-z0-9.]+", "_")
+    "target/graft_index/ivfr_" + IndexStore.dirTag(dir)
 
   /** q191: incremental IVF refresh — the missing symmetry in the IVF
     * family (dedup q131, vector-LSH q145, search q166 all ingest
@@ -2505,25 +2475,23 @@ object Similarity extends QueryModule {
   def ivfRefresh(s: SparkSession, dir: String): DataFrame = {
     tune(s)
     val path = refreshedIvfPath(dir)
-    synchronized {
-      val stamp = "r1|" +
-        IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
-      if (!IndexStore.isCurrent(s, path, stamp)) {
-        val (cents, assign) = corpusIvfIndex(s, dir)
-        val batch = withNorm(syntheticVecBatch(s, dir))
-        val acos = batch.withColumnRenamed("embedding", "vemb")
-          .join(broadcast(cents.select(col("cid"), col("embedding").as("qemb"), col("nc"))))
-          .withColumn("cosim0", dotExpr / (col("nc") * col("nrm")))
-        val wa = Window.partitionBy(col("vec_id")).orderBy(col("cosim0").desc, col("cid"))
-        val bAssign = acos.withColumn("rn", row_number().over(wa))
-          .filter(col("rn") === 1)
-          .select(col("cid"), col("vec_id"), col("vemb").as("embedding"), col("nrm"))
-        val merged = assign.select(col("cid"), col("vec_id"), col("embedding"), col("nrm"))
-          .unionByName(bAssign)
-        IndexStore.write(s, path, stamp, Seq(
-          "assign" -> merged.repartitionByRange(col("cid"), col("vec_id"))
-            .sortWithinPartitions(col("cid"), col("vec_id"))))
-      }
+    val stamp = "r1|" +
+      IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
+    IndexStore.stamped(s, path, stamp) {
+      val (cents, assign) = corpusIvfIndex(s, dir)
+      val batch = withNorm(syntheticVecBatch(s, dir))
+      val acos = batch.withColumnRenamed("embedding", "vemb")
+        .join(broadcast(cents.select(col("cid"), col("embedding").as("qemb"), col("nc"))))
+        .withColumn("cosim0", dotExpr / (col("nc") * col("nrm")))
+      val wa = Window.partitionBy(col("vec_id")).orderBy(col("cosim0").desc, col("cid"))
+      val bAssign = acos.withColumn("rn", row_number().over(wa))
+        .filter(col("rn") === 1)
+        .select(col("cid"), col("vec_id"), col("vemb").as("embedding"), col("nrm"))
+      val merged = assign.select(col("cid"), col("vec_id"), col("embedding"), col("nrm"))
+        .unionByName(bAssign)
+      IndexStore.write(s, path, stamp, Seq(
+        "assign" -> merged.repartitionByRange(col("cid"), col("vec_id"))
+          .sortWithinPartitions(col("cid"), col("vec_id"))))
     }
     val assign2 = IndexStore.read(s, path, "assign")
     val qa = assign2.filter(col("vec_id") >= 100000L && col("vec_id") < 100016L)
@@ -2593,7 +2561,7 @@ object Similarity extends QueryModule {
       |WHERE rn <= 3""".stripMargin
 
   private[graft] def seqIvfPath(dir: String): String =
-    "target/graft_index/ivfsq_" + dir.replaceAll("[^A-Za-z0-9.]+", "_")
+    "target/graft_index/ivfsq_" + IndexStore.dirTag(dir)
 
   /** q195: SEQUENTIAL incremental IVF refresh — q191 generalized from one
     * arrival batch to a batch SEQUENCE, the q166 segment pattern applied
@@ -2663,27 +2631,25 @@ object Similarity extends QueryModule {
     * path. */
   private def ensureSeqIvf(s: SparkSession, dir: String): String = {
     val path = seqIvfPath(dir)
-    synchronized {
-      val stamp = "seq2|" +
-        IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
-      if (!IndexStore.isCurrent(s, path, stamp)) {
-        val (cents, assign) = corpusIvfIndex(s, dir)
-        IndexStore.write(s, path, stamp + "|building", Seq(
-          "assign" -> assign
-            .select(col("cid"), col("vec_id"), col("embedding"), col("nrm"),
-              lit(0).as("seg"))
-            .repartitionByRange(col("cid"), col("vec_id"))
-            .sortWithinPartitions(col("cid"), col("vec_id"))))
-        seqArrivalBatches(s, dir).foreach { case (segId, b) =>
-          val bAssign = coarseAssign(cents, b)
-            .select(col("cid"), col("vec_id"), col("vemb").as("embedding"),
-              col("nrm"), lit(segId).as("seg"))
-          IndexStore.append(s, path, "assign",
-            bAssign.repartitionByRange(col("cid"), col("vec_id"))
-              .sortWithinPartitions(col("cid"), col("vec_id")))
-        }
-        IndexStore.writeStamp(s, path, stamp)
+    val stamp = "seq2|" +
+      IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
+    IndexStore.stamped(s, path, stamp) {
+      val (cents, assign) = corpusIvfIndex(s, dir)
+      IndexStore.write(s, path, stamp + "|building", Seq(
+        "assign" -> assign
+          .select(col("cid"), col("vec_id"), col("embedding"), col("nrm"),
+            lit(0).as("seg"))
+          .repartitionByRange(col("cid"), col("vec_id"))
+          .sortWithinPartitions(col("cid"), col("vec_id"))))
+      seqArrivalBatches(s, dir).foreach { case (segId, b) =>
+        val bAssign = coarseAssign(cents, b)
+          .select(col("cid"), col("vec_id"), col("vemb").as("embedding"),
+            col("nrm"), lit(segId).as("seg"))
+        IndexStore.append(s, path, "assign",
+          bAssign.repartitionByRange(col("cid"), col("vec_id"))
+            .sortWithinPartitions(col("cid"), col("vec_id")))
       }
+      IndexStore.writeStamp(s, path, stamp)
     }
     path
   }
@@ -2692,7 +2658,7 @@ object Similarity extends QueryModule {
     * it fresh per call, so two JVMs sharing target/ must not interleave
     * on one directory) and reaped at JVM exit. */
   private[graft] def seqIvfStreamPath(dir: String): String =
-    seqIvfPath(dir) + "_stream_" + processTag
+    IndexStore.workPath(seqIvfPath(dir) + "_stream")
 
   /** Fresh-seed the q215 streaming store, PARTITION-DIR-FIRST: the seed
     * corpus assignment lands as committed segment directory `seg=0` via
@@ -2705,10 +2671,7 @@ object Similarity extends QueryModule {
     * the q178 discipline. */
   private[graft] def seedSeqIvfStream(s: SparkSession, dir: String): String = {
     val path = seqIvfStreamPath(dir)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      p.toUri, s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
+    IndexStore.remove(s, path)
     val (_, assign) = corpusIvfIndex(s, dir)
     val committed = IndexStore.appendSegmentIfAbsent(s, path,
       "assign", "seg", 0L,
@@ -2718,7 +2681,6 @@ object Similarity extends QueryModule {
     require(committed, s"fresh streaming store at $path already had seg=0")
     IndexStore.writeStamp(s, path, "seqstream1|" +
       IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet")))
-    cleanupAtExit(path)
     path
   }
 
@@ -2894,60 +2856,29 @@ object Similarity extends QueryModule {
         .sortWithinPartitions(sortCols.map(col): _*)) +: others, meta)
   }
 
-  /** This JVM's sanitized process tag, shared by every process-unique
-    * working path below (branch dirs, the q215 streaming store). */
-  private[graft] lazy val processTag: String =
-    java.lang.management.ManagementFactory.getRuntimeMXBean.getName
-      .replaceAll("[^A-Za-z0-9]", "")
-
   /** The process-unique compaction-branch path for the sequential store
     * at `src` — one definition so the rigs that WRITE the branch and the
     * specs that audit its file layout can never drift apart (ADVICE r13:
     * the spec hardcoded the pre-pid-tag `src + "_cpt"` path and read
     * stale or missing data on a clean checkout). */
   private[graft] def seqCptBranchPath(src: String): String =
-    src + "_cpt_" + processTag
+    IndexStore.workPath(src + "_cpt")
 
-  /** Register a process-unique working directory for end-of-JVM removal —
-    * without it every Verify/Bench run leaves a full store copy per
-    * compacted store under target/ (ADVICE r13 low). Shutdown-hook, not
-    * eager delete: the branch must outlive the query that built it (the
-    * probe reads it lazily), and a FOREIGN pid's live dir must never be
-    * touched (two JVMs legitimately share target/). */
-  private val cleanupDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private lazy val cleanupHook: Unit = {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      cleanupDirs.forEach(d => scala.util.Try(rm(new java.io.File(d))): Unit)
-    }, "graft-workdir-cleanup"))
-  }
-  private[graft] def cleanupAtExit(path: String): Unit = {
-    cleanupHook
-    cleanupDirs.add(path): Unit
-  }
-
-  /** Branch-if-stale the sequential store at `src` to `src_cpt_<pid>` and
-    * compact the branch (every call — compaction cost is what the
-    * registered query measures, the q178 discipline). The primary store
-    * stays intact, segments and all, so q195/q210 keep their horizons.
-    * The branch path is process-unique (the refreshedBranch rule): two
-    * JVMs sharing a working dir (Verify and Bench racing on target/)
-    * must not copy/swap one live _cpt directory while the other probes
-    * it. The branch is reaped at JVM exit. */
+  /** Branch-if-stale the sequential store at `src` to its
+    * [[seqCptBranchPath]] and compact the branch (every call — compaction
+    * cost is what the registered query measures, the q178 discipline).
+    * The primary store stays intact, segments and all, so q195/q210 keep
+    * their horizons. The branch is a [[IndexStore.workPath]]: two JVMs
+    * sharing a working dir (Verify and Bench racing on target/) never
+    * copy/swap one live branch while the other probes it. */
   private def compactedSeqBranch(s: SparkSession, src: String, tbl: String,
       sortCols: Seq[String]): String = {
     val path = seqCptBranchPath(src)
-    synchronized {
-      val stamp = IndexStore.readStamp(s, src).getOrElse(
-        throw new IllegalStateException(s"sequential store at $src has no stamp"))
-      if (!IndexStore.isCurrent(s, path, stamp))
-        IndexStore.copy(s, src, path)
+    val stamp = IndexStore.readStamp(s, src).getOrElse(
+      throw new IllegalStateException(s"sequential store at $src has no stamp"))
+    IndexStore.withPathLock(path) {
+      IndexStore.stamped(s, path, stamp)(IndexStore.copy(s, src, path))
       compactSeqSegments(s, path, tbl, sortCols)
-      cleanupAtExit(path)
     }
     path
   }
@@ -3412,16 +3343,15 @@ object Similarity extends QueryModule {
 
   /** On-disk location of the fixture vector index for `dir`. */
   private[graft] def fixtureVecIndexPath(dir: String): String =
-    "target/graft_index/vec_" + dir.replaceAll("[^A-Za-z0-9.]+", "_")
+    "target/graft_index/vec_" + IndexStore.dirTag(dir)
 
   private def corpusVecIndex(s: SparkSession, dir: String): VecIndex = {
     val path = fixtureVecIndexPath(dir)
-    synchronized {
-      val stamp = IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
-      if (!IndexStore.isCurrent(s, path, stamp))
-        persistVecIndex(
-          buildVecIndex(table(s, dir, "embeddings").select(col("vec_id"), col("embedding"))),
-          path, stamp)
+    val stamp = IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
+    IndexStore.stamped(s, path, stamp) {
+      persistVecIndex(
+        buildVecIndex(table(s, dir, "embeddings").select(col("vec_id"), col("embedding"))),
+        path, stamp)
     }
     VecIndex(
       graft.SessionCache.cached(s, s"sim:idxdig:$dir")(
@@ -3514,24 +3444,20 @@ object Similarity extends QueryModule {
     * frozen before the branch mutates. */
   private[graft] def screenVecLoopBranch(s: SparkSession, dir: String): String = {
     corpusVecIndex(s, dir)
-    val path = "target/tmp/vidx_loop_" + processTag + "_" +
-      dir.replaceAll("[^A-Za-z0-9.]+", "_")
+    val path = IndexStore.workPath("target/tmp/vidx_loop_" + IndexStore.dirTag(dir))
     val stamp = "vecloop1|" +
       IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
-    synchronized {
-      if (!IndexStore.isCurrent(s, path, stamp)) {
-        val b1 = syntheticVecBatch(s, dir)
-        val d1 = screenVecBatch(s, dir, b1).localCheckpoint()
-        IndexStore.copy(s, fixtureVecIndexPath(dir), path)
-        cleanupAtExit(path)
-        // the copied stamp carries the `bits` meta — an index property
-        // probes must reuse; carry it through the loop's own stamp
-        val meta = IndexStore.readMeta(s, path)
-        val accepted1 = b1.join(
-          d1.filter(col("decision") === "accept").select(col("vec_id")), "vec_id")
-        refreshVecIndex(s, path, accepted1)
-        IndexStore.writeStamp(s, path, stamp, meta)
-      }
+    IndexStore.stamped(s, path, stamp) {
+      val b1 = syntheticVecBatch(s, dir)
+      val d1 = screenVecBatch(s, dir, b1).localCheckpoint()
+      IndexStore.copy(s, fixtureVecIndexPath(dir), path)
+      // the copied stamp carries the `bits` meta — an index property
+      // probes must reuse; carry it through the loop's own stamp
+      val meta = IndexStore.readMeta(s, path)
+      val accepted1 = b1.join(
+        d1.filter(col("decision") === "accept").select(col("vec_id")), "vec_id")
+      refreshVecIndex(s, path, accepted1)
+      IndexStore.writeStamp(s, path, stamp, meta)
     }
     path
   }
@@ -3700,11 +3626,8 @@ object Similarity extends QueryModule {
     tune(s)
     val idx = corpusVecIndex(s, dir)
     val path = fixtureVecIndexPath(dir)
-    synchronized {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(new org.apache.hadoop.fs.Path(path, "bloom")))
-        persistVecBloom(s, path)
+    IndexStore.withPathLock(path) {
+      if (!IndexStore.tableNames(s, path).contains("bloom")) persistVecBloom(s, path)
     }
     val batch = syntheticVecBatch(s, dir)
     val fast = screenVecBatchBloom(idx, loadVecBloom(s, path), batch)
@@ -4059,8 +3982,8 @@ object Similarity extends QueryModule {
   }
 
   /** [[knnGraphFrameNp]] over an explicit (centroids, assignment) pair —
-    * the GraphAnnSweep rig builds refined-quantizer edges through this
-    * without touching any store. */
+    * refined-quantizer edges (PLANS.md "Round-20: the Lloyd-refined
+    * quantizer measured") are built through this. */
   private[graft] def knnGraphFrameNpOn(cents: DataFrame, assign: DataFrame,
       np: Int): DataFrame = {
     val a = assign.select(col("cid"), col("vec_id"), col("embedding"), col("nrm"))
@@ -4314,7 +4237,7 @@ object Similarity extends QueryModule {
   // ---- q243: takedown over the persisted kNN graph (O(affected) repair) ----
 
   private[graft] def knnGraphStorePath(dir: String): String =
-    "target/graft_index/knng_" + dir.replaceAll("[^A-Za-z0-9.]+", "_")
+    "target/graft_index/knng_" + IndexStore.dirTag(dir)
 
   /** Build-if-stale the persisted kNN-graph store — the q239 graph as a
     * serving artifact (one `edges` table, the layout every graph
@@ -4329,10 +4252,9 @@ object Similarity extends QueryModule {
     val np = s.conf.getOption("spark.graft.knn.nprobe").getOrElse("1")
     val stamp = s"knng1|np$np|" +
       IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
-    synchronized {
-      if (!IndexStore.isCurrent(s, path, stamp))
-        IndexStore.write(s, path, stamp,
-          Seq("edges" -> knnGraphFrame(s, dir)))
+    IndexStore.stamped(s, path, stamp) {
+      IndexStore.write(s, path, stamp,
+        Seq("edges" -> knnGraphFrame(s, dir)))
     }
     path
   }
@@ -4351,7 +4273,7 @@ object Similarity extends QueryModule {
     * which is exactly what the oracle pins. */
   private[graft] def knnTakedownBranch(s: SparkSession, dir: String): String = {
     val src = knnGraphStore(s, dir)
-    val path = src + "_takedown_" + processTag
+    val path = IndexStore.workPath(src + "_takedown")
     val np = s.conf.getOption("spark.graft.knn.nprobe").getOrElse("1")
     // the O(affected) repair recomputes against a source's own cell —
     // the default graph's candidate rule. A widened (nprobe>1) graph
@@ -4361,40 +4283,37 @@ object Similarity extends QueryModule {
       "rebuilt from the filtered corpus instead")
     val stamp = s"knngtd1|np$np|" +
       IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
-    synchronized {
-      if (!IndexStore.isCurrent(s, path, stamp)) {
-        IndexStore.copy(s, src, path)
-        cleanupAtExit(path)
-        val del = table(s, dir, "embeddings")
-          .filter(col("vec_id") % 89 === 17).select(col("vec_id")).localCheckpoint()
-        val edges = IndexStore.read(s, path, "edges")
-        val delSrc = del.select(col("vec_id").as("src"))
-        val delNbr = del.select(col("vec_id").as("nbr"))
-        // rows whose SOURCE survives; of those, the sources that lost a
-        // neighbor are the repair set
-        val keepSrc = edges.join(broadcast(delSrc), Seq("src"), "left_anti")
-        val affected = keepSrc.join(broadcast(delNbr), Seq("nbr"), "left_semi")
-          .select(col("src")).distinct().localCheckpoint()
-        val keep = keepSrc.join(broadcast(affected), Seq("src"), "left_anti")
-        // recompute ONLY the affected sources, each against its cell
-        // minus the deleted ids (the stored assignment keeps its
-        // geometry — the q224 centroid trade)
-        val (_, assign) = corpusIvfIndex(s, dir)
-        val live = assign.select(col("cid"), col("vec_id"), col("embedding"), col("nrm"))
-          .join(broadcast(del), Seq("vec_id"), "left_anti")
-        // only the affected sources re-rank, each against its cell minus
-        // the deleted ids — the salted scoped form (per-task pair bound)
-        val recomputed = cellGraphFor(live,
-          live.join(broadcast(affected.select(col("src").as("vec_id"))),
-            Seq("vec_id"), "left_semi"))
-        // pin the repaired rows before the swap reads-vs-writes the table
-        val repaired = keep.select(col("src"), col("nbr"), col("cosim"), col("rn"))
-          .unionByName(recomputed).localCheckpoint()
-        IndexStore.replaceTable(s, path, "edges", repaired)
-        IndexStore.writeStamp(s, path, stamp, Map(
-          "n_del" -> del.count().toString,
-          "n_repaired" -> affected.count().toString))
-      }
+    IndexStore.stamped(s, path, stamp) {
+      IndexStore.copy(s, src, path)
+      val del = table(s, dir, "embeddings")
+        .filter(col("vec_id") % 89 === 17).select(col("vec_id")).localCheckpoint()
+      val edges = IndexStore.read(s, path, "edges")
+      val delSrc = del.select(col("vec_id").as("src"))
+      val delNbr = del.select(col("vec_id").as("nbr"))
+      // rows whose SOURCE survives; of those, the sources that lost a
+      // neighbor are the repair set
+      val keepSrc = edges.join(broadcast(delSrc), Seq("src"), "left_anti")
+      val affected = keepSrc.join(broadcast(delNbr), Seq("nbr"), "left_semi")
+        .select(col("src")).distinct().localCheckpoint()
+      val keep = keepSrc.join(broadcast(affected), Seq("src"), "left_anti")
+      // recompute ONLY the affected sources, each against its cell
+      // minus the deleted ids (the stored assignment keeps its
+      // geometry — the q224 centroid trade)
+      val (_, assign) = corpusIvfIndex(s, dir)
+      val live = assign.select(col("cid"), col("vec_id"), col("embedding"), col("nrm"))
+        .join(broadcast(del), Seq("vec_id"), "left_anti")
+      // only the affected sources re-rank, each against its cell minus
+      // the deleted ids — the salted scoped form (per-task pair bound)
+      val recomputed = cellGraphFor(live,
+        live.join(broadcast(affected.select(col("src").as("vec_id"))),
+          Seq("vec_id"), "left_semi"))
+      // pin the repaired rows before the swap reads-vs-writes the table
+      val repaired = keep.select(col("src"), col("nbr"), col("cosim"), col("rn"))
+        .unionByName(recomputed).localCheckpoint()
+      IndexStore.replaceTable(s, path, "edges", repaired)
+      IndexStore.writeStamp(s, path, stamp, Map(
+        "n_del" -> del.count().toString,
+        "n_repaired" -> affected.count().toString))
     }
     path
   }
@@ -4476,73 +4395,69 @@ object Similarity extends QueryModule {
     * v1 centroids), so a stale rank, an unmerged cross-edge, or a
     * leaked deleted id all hash-mismatch. */
   private[graft] def knnSyncStore(s: SparkSession, dir: String): String = {
-    val idxPath = "target/tmp/knn_sync_" + processTag + "_" +
-      dir.replaceAll("[^A-Za-z0-9.]+", "_")
+    val idxPath = IndexStore.workPath("target/tmp/knn_sync_" + IndexStore.dirTag(dir))
     val stamp = "knnsync1|" +
       IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
-    synchronized {
-      if (!IndexStore.isCurrent(s, idxPath, stamp)) {
-        val f = embeddingFeedFixture(s, dir, "knnsync")
-        val (cents0, assign0, m) = buildIvfIndex(f.base)
-        IndexStore.write(s, idxPath, "knnsync-building", Seq(
-          "edges" -> cellGraph(assign0),
-          "centroids" -> cents0,
-          "assign" -> assign0.repartitionByRange(col("cid"), col("vec_id"))
-            .sortWithinPartitions(col("cid"), col("vec_id"))))
-        cleanupAtExit(idxPath)
-        def rd(t: String) = IndexStore.read(s, idxPath, t)
-        // DELETE leg: membership anti-join + the q243 O(affected) repair
-        val del = f.del.localCheckpoint()
-        val kept = rd("assign")
-          .join(broadcast(del), Seq("vec_id"), "left_anti").localCheckpoint()
-        IndexStore.replaceTable(s, idxPath, "assign",
-          kept.repartitionByRange(col("cid"), col("vec_id"))
-            .sortWithinPartitions(col("cid"), col("vec_id")))
-        val edges0 = rd("edges")
-        val keepSrc = edges0.join(
-          broadcast(del.select(col("vec_id").as("src"))), Seq("src"), "left_anti")
-        val affected = keepSrc.join(
-            broadcast(del.select(col("vec_id").as("nbr"))), Seq("nbr"), "left_semi")
-          .select(col("src")).distinct().localCheckpoint()
-        val keep = keepSrc.join(broadcast(affected), Seq("src"), "left_anti")
-        val survivors = rd("assign")
-        val recomputed = cellGraphFor(survivors,
-          survivors.join(broadcast(affected.select(col("src").as("vec_id"))),
-            Seq("vec_id"), "left_semi"))
-        // the delete leg's result stays a FRAME (checkpointed, not
-        // written): both legs fold into ONE edges rewrite below, halving
-        // the sync's table-swap I/O (ADVICE r16 — the write cost per
-        // sync is one O(edges) rewrite; the O(affected) claim is about
-        // re-SCORING compute, which this does not change)
-        val afterDelete = keep.select(col("src"), col("nbr"), col("cosim"), col("rn"))
-          .unionByName(recomputed).localCheckpoint()
-        // INSERT leg: coarse-assign arrivals, then MERGE
-        val aa = coarseAssignArrivals(s, idxPath, f.inserts).localCheckpoint()
-        val cross = survivors.select(col("cid"), col("vec_id").as("src"),
-            col("embedding").as("qemb"), col("nrm").as("nq"))
-          .join(aa.select(col("cid"), col("vec_id").as("nbr"),
-            col("embedding").as("vemb"), col("nrm").as("nv")), Seq("cid"))
-          .withColumn("cosim0", dotExpr / (col("nq") * col("nv")))
-          .select(col("src"), col("nbr"), round(col("cosim0"), 9).as("cosim"))
-        val w = Window.partitionBy(col("src"))
-          .orderBy(col("cosim").desc, col("nbr"))
-        val merged = afterDelete.select(col("src"), col("nbr"), col("cosim"))
-          .unionByName(cross)
-          .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
-        val withArrivals = survivors.unionByName(aa)
-        val arrivalEdges = cellGraphFor(withArrivals,
-          withArrivals.join(broadcast(aa.select(col("vec_id"))),
-            Seq("vec_id"), "left_semi"))
-        IndexStore.replaceTable(s, idxPath, "edges",
-          merged.select(col("src"), col("nbr"), col("cosim"), col("rn"))
-            .unionByName(arrivalEdges).localCheckpoint())
-        IndexStore.append(s, idxPath, "assign", aa)
-        IndexStore.writeStamp(s, idxPath, stamp, Map(
-          "m" -> m.toString,
-          "n_feed_inserts" -> f.inserts.count().toString,
-          "n_feed_deletes" -> del.count().toString,
-          "n_repaired_del" -> affected.count().toString))
-      }
+    IndexStore.stamped(s, idxPath, stamp) {
+      val f = embeddingFeedFixture(s, dir, "knnsync")
+      val (cents0, assign0, m) = buildIvfIndex(f.base)
+      IndexStore.write(s, idxPath, "knnsync-building", Seq(
+        "edges" -> cellGraph(assign0),
+        "centroids" -> cents0,
+        "assign" -> assign0.repartitionByRange(col("cid"), col("vec_id"))
+          .sortWithinPartitions(col("cid"), col("vec_id"))))
+      def rd(t: String) = IndexStore.read(s, idxPath, t)
+      // DELETE leg: membership anti-join + the q243 O(affected) repair
+      val del = f.del.localCheckpoint()
+      val kept = rd("assign")
+        .join(broadcast(del), Seq("vec_id"), "left_anti").localCheckpoint()
+      IndexStore.replaceTable(s, idxPath, "assign",
+        kept.repartitionByRange(col("cid"), col("vec_id"))
+          .sortWithinPartitions(col("cid"), col("vec_id")))
+      val edges0 = rd("edges")
+      val keepSrc = edges0.join(
+        broadcast(del.select(col("vec_id").as("src"))), Seq("src"), "left_anti")
+      val affected = keepSrc.join(
+          broadcast(del.select(col("vec_id").as("nbr"))), Seq("nbr"), "left_semi")
+        .select(col("src")).distinct().localCheckpoint()
+      val keep = keepSrc.join(broadcast(affected), Seq("src"), "left_anti")
+      val survivors = rd("assign")
+      val recomputed = cellGraphFor(survivors,
+        survivors.join(broadcast(affected.select(col("src").as("vec_id"))),
+          Seq("vec_id"), "left_semi"))
+      // the delete leg's result stays a FRAME (checkpointed, not
+      // written): both legs fold into ONE edges rewrite below, halving
+      // the sync's table-swap I/O (ADVICE r16 — the write cost per
+      // sync is one O(edges) rewrite; the O(affected) claim is about
+      // re-SCORING compute, which this does not change)
+      val afterDelete = keep.select(col("src"), col("nbr"), col("cosim"), col("rn"))
+        .unionByName(recomputed).localCheckpoint()
+      // INSERT leg: coarse-assign arrivals, then MERGE
+      val aa = coarseAssignArrivals(s, idxPath, f.inserts).localCheckpoint()
+      val cross = survivors.select(col("cid"), col("vec_id").as("src"),
+          col("embedding").as("qemb"), col("nrm").as("nq"))
+        .join(aa.select(col("cid"), col("vec_id").as("nbr"),
+          col("embedding").as("vemb"), col("nrm").as("nv")), Seq("cid"))
+        .withColumn("cosim0", dotExpr / (col("nq") * col("nv")))
+        .select(col("src"), col("nbr"), round(col("cosim0"), 9).as("cosim"))
+      val w = Window.partitionBy(col("src"))
+        .orderBy(col("cosim").desc, col("nbr"))
+      val merged = afterDelete.select(col("src"), col("nbr"), col("cosim"))
+        .unionByName(cross)
+        .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
+      val withArrivals = survivors.unionByName(aa)
+      val arrivalEdges = cellGraphFor(withArrivals,
+        withArrivals.join(broadcast(aa.select(col("vec_id"))),
+          Seq("vec_id"), "left_semi"))
+      IndexStore.replaceTable(s, idxPath, "edges",
+        merged.select(col("src"), col("nbr"), col("cosim"), col("rn"))
+          .unionByName(arrivalEdges).localCheckpoint())
+      IndexStore.append(s, idxPath, "assign", aa)
+      IndexStore.writeStamp(s, idxPath, stamp, Map(
+        "m" -> m.toString,
+        "n_feed_inserts" -> f.inserts.count().toString,
+        "n_feed_deletes" -> del.count().toString,
+        "n_repaired_del" -> affected.count().toString))
     }
     idxPath
   }
@@ -4737,102 +4652,98 @@ object Similarity extends QueryModule {
     * auto-fold policy is checked at apply time like every masked sync
     * (the fixture's ~1% deleted fraction stays below the 0.1 default). */
   private[graft] def knnMaskSyncStore(s: SparkSession, dir: String): String = {
-    val idxPath = "target/tmp/knn_msync_" + processTag + "_" +
-      dir.replaceAll("[^A-Za-z0-9.]+", "_")
+    val idxPath = IndexStore.workPath("target/tmp/knn_msync_" + IndexStore.dirTag(dir))
     val stamp = "knnmasksync1|" +
       IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
-    synchronized {
-      if (!IndexStore.isCurrent(s, idxPath, stamp)) {
-        val f = embeddingFeedFixture(s, dir, "knnmasksync")
-        val (cents0, assign0, m) = buildIvfIndex(f.base)
-        IndexStore.write(s, idxPath, "knnmasksync-building", Seq(
-          "centroids" -> cents0,
-          "assign" -> assign0.withColumn("seg", lit(0L))
-            .repartitionByRange(col("cid"), col("vec_id"))
-            .sortWithinPartitions(col("cid"), col("vec_id")),
-          "edges" -> cellGraph(assign0).withColumn("seg", lit(0L))))
-        cleanupAtExit(idxPath)
-        def rd(t: String) = IndexStore.read(s, idxPath, t)
-        // ---- DELETE leg: O(delta) mask bytes + O(affected) appended rows
-        val del = f.del.localCheckpoint()
-        IndexStore.appendDeleteMask(s, idxPath,
-          del.withColumn("seq", lit(0L)))
-        val edges0 = rd("edges")
-        val affected = edges0
-          .join(broadcast(del.select(col("vec_id").as("src"))), Seq("src"), "left_anti")
-          .join(broadcast(del.select(col("vec_id").as("nbr"))), Seq("nbr"), "left_semi")
-          .select(col("src")).distinct().localCheckpoint()
-        IndexStore.append(s, idxPath, KnnStaleMaskTable,
-          affected.withColumn("seq", lit(0L)))
-        // masked live membership, pinned BEFORE arrivals append to assign
-        val live = IndexStore.maskedRead(rd("assign"),
-            del.withColumn("seq", lit(0L)), "vec_id", "vec_id", "seg")
-          .select(col("cid"), col("vec_id"), col("embedding"), col("nrm"))
-          .localCheckpoint()
-        val repaired = cellGraphFor(live,
-          live.join(broadcast(affected.select(col("src").as("vec_id"))),
-            Seq("vec_id"), "left_semi"))
-        IndexStore.append(s, idxPath, "edges",
-          repaired.withColumn("seg", lit(1L)).localCheckpoint())
-        // ---- INSERT leg: appends + the entering-edge restatements
-        val aa = coarseAssignArrivals(s, idxPath, f.inserts).localCheckpoint()
-        IndexStore.append(s, idxPath, "assign",
-          aa.withColumn("seg", lit(2L)))
-        val withArrivals = live.unionByName(aa)
-        val arrivalEdges = cellGraphFor(withArrivals,
-          withArrivals.join(broadcast(aa.select(col("vec_id"))),
-            Seq("vec_id"), "left_semi"))
-        val cross = saltedCellJoin(
-            live.select(col("cid"), col("vec_id").as("src"),
-              col("embedding").as("qemb"), col("nrm").as("nq")),
-            aa.select(col("cid"), col("vec_id").as("nbr"),
-              col("embedding").as("vemb"), col("nrm").as("nv")), "nbr")
-          .withColumn("cosim0", dotExpr / (col("nq") * col("nv")))
-          .select(col("src"), col("nbr"), round(col("cosim0"), 9).as("cosim"))
-          .localCheckpoint()
-        // the post-delete-leg visible lists (seg 0 survivors + seg 1
-        // repairs), pinned before the edges table grows again
-        val vis = knnLiveEdges(s, idxPath,
-            IndexStore.readDeleteMaskOrEmpty(s, idxPath, "vec_id"))
-          .select(col("src"), col("nbr"), col("cosim"), col("rn"))
-          .localCheckpoint()
-        // a cross-edge ENTERS a survivor's top-3 iff it beats-or-ties the
-        // visible third-best (ties on the rounded cosine are resolved by
-        // nbr id, so >= is over-inclusive — harmless: a restated list that
-        // didn't change masks identical rows) or the list has slots free
-        val third = vis.groupBy(col("src")).agg(
-          count(lit(1)).as("n_edges"),
-          max(when(col("rn") === 3, col("cosim"))).as("cosim3"))
-        val affected2 = cross.join(third, Seq("src"), "left")
-          .filter(col("n_edges").isNull || col("n_edges") < 3 ||
-            col("cosim") >= col("cosim3"))
-          .select(col("src")).distinct().localCheckpoint()
-        IndexStore.append(s, idxPath, KnnStaleMaskTable,
-          affected2.withColumn("seq", lit(1L)))
-        val w = Window.partitionBy(col("src"))
-          .orderBy(col("cosim").desc, col("nbr"))
-        val restated = vis.join(broadcast(affected2), Seq("src"), "left_semi")
-          .select(col("src"), col("nbr"), col("cosim"))
-          .unionByName(cross.join(broadcast(affected2), Seq("src"), "left_semi")
-            .select(col("src"), col("nbr"), col("cosim")))
-          .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
-          .select(col("src"), col("nbr"), col("cosim"), col("rn"))
-        IndexStore.append(s, idxPath, "edges",
-          restated.unionByName(arrivalEdges)
-            .withColumn("seg", lit(2L)).localCheckpoint())
-        // the auto-fold policy, same gate as every masked sync: ~1%
-        // deleted sits below the 0.1 default, so the masks stay
-        val folded = IndexStore.autoFoldIfNeeded(
-          s, idxPath, "assign", "vec_id")(
-          IndexStore.foldMasks(s, idxPath, KnnMaskFold))
-        IndexStore.writeStamp(s, idxPath, stamp, Map(
-          "m" -> m.toString,
-          "n_feed_inserts" -> f.inserts.count().toString,
-          "n_feed_deletes" -> del.count().toString,
-          "n_repaired_del" -> affected.count().toString,
-          "n_restated" -> affected2.count().toString,
-          "auto_folded" -> folded.toString))
-      }
+    IndexStore.stamped(s, idxPath, stamp) {
+      val f = embeddingFeedFixture(s, dir, "knnmasksync")
+      val (cents0, assign0, m) = buildIvfIndex(f.base)
+      IndexStore.write(s, idxPath, "knnmasksync-building", Seq(
+        "centroids" -> cents0,
+        "assign" -> assign0.withColumn("seg", lit(0L))
+          .repartitionByRange(col("cid"), col("vec_id"))
+          .sortWithinPartitions(col("cid"), col("vec_id")),
+        "edges" -> cellGraph(assign0).withColumn("seg", lit(0L))))
+      def rd(t: String) = IndexStore.read(s, idxPath, t)
+      // ---- DELETE leg: O(delta) mask bytes + O(affected) appended rows
+      val del = f.del.localCheckpoint()
+      IndexStore.appendDeleteMask(s, idxPath,
+        del.withColumn("seq", lit(0L)))
+      val edges0 = rd("edges")
+      val affected = edges0
+        .join(broadcast(del.select(col("vec_id").as("src"))), Seq("src"), "left_anti")
+        .join(broadcast(del.select(col("vec_id").as("nbr"))), Seq("nbr"), "left_semi")
+        .select(col("src")).distinct().localCheckpoint()
+      IndexStore.append(s, idxPath, KnnStaleMaskTable,
+        affected.withColumn("seq", lit(0L)))
+      // masked live membership, pinned BEFORE arrivals append to assign
+      val live = IndexStore.maskedRead(rd("assign"),
+          del.withColumn("seq", lit(0L)), "vec_id", "vec_id", "seg")
+        .select(col("cid"), col("vec_id"), col("embedding"), col("nrm"))
+        .localCheckpoint()
+      val repaired = cellGraphFor(live,
+        live.join(broadcast(affected.select(col("src").as("vec_id"))),
+          Seq("vec_id"), "left_semi"))
+      IndexStore.append(s, idxPath, "edges",
+        repaired.withColumn("seg", lit(1L)).localCheckpoint())
+      // ---- INSERT leg: appends + the entering-edge restatements
+      val aa = coarseAssignArrivals(s, idxPath, f.inserts).localCheckpoint()
+      IndexStore.append(s, idxPath, "assign",
+        aa.withColumn("seg", lit(2L)))
+      val withArrivals = live.unionByName(aa)
+      val arrivalEdges = cellGraphFor(withArrivals,
+        withArrivals.join(broadcast(aa.select(col("vec_id"))),
+          Seq("vec_id"), "left_semi"))
+      val cross = saltedCellJoin(
+          live.select(col("cid"), col("vec_id").as("src"),
+            col("embedding").as("qemb"), col("nrm").as("nq")),
+          aa.select(col("cid"), col("vec_id").as("nbr"),
+            col("embedding").as("vemb"), col("nrm").as("nv")), "nbr")
+        .withColumn("cosim0", dotExpr / (col("nq") * col("nv")))
+        .select(col("src"), col("nbr"), round(col("cosim0"), 9).as("cosim"))
+        .localCheckpoint()
+      // the post-delete-leg visible lists (seg 0 survivors + seg 1
+      // repairs), pinned before the edges table grows again
+      val vis = knnLiveEdges(s, idxPath,
+          IndexStore.readDeleteMaskOrEmpty(s, idxPath, "vec_id"))
+        .select(col("src"), col("nbr"), col("cosim"), col("rn"))
+        .localCheckpoint()
+      // a cross-edge ENTERS a survivor's top-3 iff it beats-or-ties the
+      // visible third-best (ties on the rounded cosine are resolved by
+      // nbr id, so >= is over-inclusive — harmless: a restated list that
+      // didn't change masks identical rows) or the list has slots free
+      val third = vis.groupBy(col("src")).agg(
+        count(lit(1)).as("n_edges"),
+        max(when(col("rn") === 3, col("cosim"))).as("cosim3"))
+      val affected2 = cross.join(third, Seq("src"), "left")
+        .filter(col("n_edges").isNull || col("n_edges") < 3 ||
+          col("cosim") >= col("cosim3"))
+        .select(col("src")).distinct().localCheckpoint()
+      IndexStore.append(s, idxPath, KnnStaleMaskTable,
+        affected2.withColumn("seq", lit(1L)))
+      val w = Window.partitionBy(col("src"))
+        .orderBy(col("cosim").desc, col("nbr"))
+      val restated = vis.join(broadcast(affected2), Seq("src"), "left_semi")
+        .select(col("src"), col("nbr"), col("cosim"))
+        .unionByName(cross.join(broadcast(affected2), Seq("src"), "left_semi")
+          .select(col("src"), col("nbr"), col("cosim")))
+        .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
+        .select(col("src"), col("nbr"), col("cosim"), col("rn"))
+      IndexStore.append(s, idxPath, "edges",
+        restated.unionByName(arrivalEdges)
+          .withColumn("seg", lit(2L)).localCheckpoint())
+      // the auto-fold policy, same gate as every masked sync: ~1%
+      // deleted sits below the 0.1 default, so the masks stay
+      val folded = IndexStore.autoFoldIfNeeded(
+        s, idxPath, "assign", "vec_id")(
+        IndexStore.foldMasks(s, idxPath, KnnMaskFold))
+      IndexStore.writeStamp(s, idxPath, stamp, Map(
+        "m" -> m.toString,
+        "n_feed_inserts" -> f.inserts.count().toString,
+        "n_feed_deletes" -> del.count().toString,
+        "n_repaired_del" -> affected.count().toString,
+        "n_restated" -> affected2.count().toString,
+        "auto_folded" -> folded.toString))
     }
     idxPath
   }
@@ -4880,8 +4791,7 @@ object Similarity extends QueryModule {
   /** The q246 streaming store's path — process-unique and reaped at JVM
     * exit, like every streaming store. */
   private[graft] def knnStreamPath(dir: String): String =
-    "target/tmp/knn_stream_" + processTag + "_" +
-      dir.replaceAll("[^A-Za-z0-9.]+", "_")
+    IndexStore.workPath("target/tmp/knn_stream_" + IndexStore.dirTag(dir))
 
   /** The q246 store's four ledgered tables. `deletes`/`stale` are the
     * q245 masks as COMMITTED SEGMENTS: a mask row in segment N hides
@@ -4899,9 +4809,7 @@ object Similarity extends QueryModule {
   private[graft] def seedKnnStream(s: SparkSession, dir: String,
       base: DataFrame): (String, Long) = {
     val path = knnStreamPath(dir)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
+    IndexStore.remove(s, path)
     val (cents0, assign0, m) = buildIvfIndex(base)
     val assignSeed = assign0.localCheckpoint()
     val emptyDel = assignSeed.select(col("vec_id")).limit(0)
@@ -4919,7 +4827,6 @@ object Similarity extends QueryModule {
     IndexStore.writeStamp(s, path, "knnstream-seeded|" +
       IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet")),
       Map("m" -> m.toString))
-    cleanupAtExit(path)
     (path, m)
   }
 
@@ -5389,9 +5296,10 @@ object Similarity extends QueryModule {
 
   /** q253's rig with its dials exposed (beam width B, hop count H, any
     * edge frame — wider nprobe graphs come from [[knnGraphFrameNp]]):
-    * the measurement surface behind [[GraphAnnSweep]]'s B/H/nprobe
-    * recall table (VERDICT r18 item 6 — the reported ~0.2 absolute
-    * recall should DRIVE tuning, not just sit in the audit). NOT
+    * the measurement surface behind the B/H/nprobe recall table of
+    * PLANS.md "Round-19: the q253 recall dial measured" (VERDICT r18
+    * item 6 — the reported ~0.2 absolute recall should DRIVE tuning,
+    * not just sit in the audit). NOT
     * registered: the registered q253 pins (B=4, H=2, np2-store edges)
     * and its oracle replays exactly that unrolled search. */
   private[graft] def graphAnnServeAt(s: SparkSession, dir: String,
@@ -5500,13 +5408,12 @@ object Similarity extends QueryModule {
     * [[knnTakedownBranch]], unchanged). A restart therefore costs a
     * stamp check + an edges scan, not a graph build. */
   private[graft] def knnGraphNp2Store(s: SparkSession, dir: String): String = {
-    val path = "target/graft_index/knng2_" + dir.replaceAll("[^A-Za-z0-9.]+", "_")
+    val path = "target/graft_index/knng2_" + IndexStore.dirTag(dir)
     val stamp = "knng2_1|np2|" +
       IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
-    synchronized {
-      if (!IndexStore.isCurrent(s, path, stamp))
-        IndexStore.write(s, path, stamp,
-          Seq("edges" -> knnGraphFrameNp(s, dir, 2)))
+    IndexStore.stamped(s, path, stamp) {
+      IndexStore.write(s, path, stamp,
+        Seq("edges" -> knnGraphFrameNp(s, dir, 2)))
     }
     path
   }
@@ -5678,23 +5585,21 @@ object Similarity extends QueryModule {
     * contract as the np2 branch: read-only for takedown, rebuild on
     * embeddings change. */
   private[graft] def knnGraphRefinedNp2Store(s: SparkSession, dir: String): String = {
-    val path = "target/graft_index/knngr2_" + dir.replaceAll("[^A-Za-z0-9.]+", "_")
+    val path = "target/graft_index/knngr2_" + IndexStore.dirTag(dir)
     val stamp = "knngr2_1|np2|ivfr1|lloyd1|" +
       IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
-    synchronized {
-      if (!IndexStore.isCurrent(s, path, stamp)) {
-        val (rc, ra) = corpusRefinedIvfIndex(s, dir)
-        IndexStore.write(s, path, stamp,
-          Seq("edges" -> knnGraphFrameNpOn(rc, ra, 2)))
-      }
+    IndexStore.stamped(s, path, stamp) {
+      val (rc, ra) = corpusRefinedIvfIndex(s, dir)
+      IndexStore.write(s, path, stamp,
+        Seq("edges" -> knnGraphFrameNpOn(rc, ra, 2)))
     }
     path
   }
 
   /** q268: q253's graph-ANN serving RE-POINTED at the Lloyd-refined
     * generation — the re-pointing the q267 gain licenses, measured
-    * before registration (GraphAnnSweep, PLANS "Round-20: the
-    * Lloyd-refined quantizer measured"): at the registered dials (B=4,
+    * before registration (PLANS.md "Round-20: the Lloyd-refined
+    * quantizer measured"): at the registered dials (B=4,
     * H=2, np2 edges) the refined substrate serves recall@3 0.169 vs the
     * seed generation's 0.134 at sf0.1 — the quantizer was the binding
     * constraint, exactly as the r19 sweep diagnosed. Same query shape,

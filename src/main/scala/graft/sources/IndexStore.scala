@@ -140,6 +140,72 @@ object IndexStore {
     readStampLines(s, path).headOption.contains(stamp)
   }
 
+  /** The build-if-stale gate every stamped store goes through: under a
+    * JVM lock for `path` alone ([[withPathLock]]), heal and check the
+    * stamp through [[isCurrent]] and run `build` only when it is stale.
+    * Two callers of one path build once; builds of different stores
+    * never wait on each other. `build` writes its own stamp, as the
+    * store's crash model requires: a one-step shared store inside
+    * [[write]]'s staged swap (a second JVM racing on the same directory
+    * then never sees a complete store without its stamp, or a stamp
+    * without its store); a multi-step store last, via [[writeStamp]],
+    * after a first step staged under a building stamp. A build that
+    * throws leaves the stamp stale, so the next call rebuilds. */
+  def stamped(s: SparkSession, path: String, stamp: String)(build: => Unit): Unit =
+    withPathLock(path) {
+      if (!isCurrent(s, path, stamp)) build
+    }
+
+  /** This JVM's sanitized process tag: what makes a [[workPath]], and
+    * every staging directory name, unique per process. */
+  private lazy val processTag: String =
+    java.lang.management.ManagementFactory.getRuntimeMXBean.getName
+      .replaceAll("[^A-Za-z0-9]", "")
+
+  /** A process-unique working path, `<base>_<processTag>`, registered for
+    * removal at JVM exit — for every store one process mutates or rebuilds
+    * per run (branches, feed-synced and streaming stores, per-run lakes).
+    * Two JVMs sharing target/ (Verify beside Bench) therefore never
+    * interleave writes into one directory, and no run leaves its copies
+    * behind. Callers pass `target/tmp/<kind>_<dirTag(dir)>`, or a shared
+    * store's path plus a suffix for a branch of it. */
+  def workPath(base: String): String = {
+    val path = s"${base}_$processTag"
+    cleanupAtExit(path)
+    path
+  }
+
+  /** `dir` as one path-safe name component (the fixture-dir part of every
+    * store path). */
+  def dirTag(dir: String): String = dir.replaceAll("[^A-Za-z0-9.]+", "_")
+
+  /** Delete the store at `path`, if there is one — for a work store
+    * rebuilt from scratch on every call. */
+  def remove(s: SparkSession, path: String): Unit = {
+    val p = new Path(path)
+    val fs = fsOf(s, p)
+    if (fs.exists(p)) fs.delete(p, true): Unit
+  }
+
+  /** Register a directory for removal at JVM exit. A shutdown hook, not an
+    * eager delete: a work store must outlive the query that built it (the
+    * probe reads it lazily), and a FOREIGN process's live directory is
+    * never touched (two JVMs legitimately share target/). */
+  private[graft] val cleanupDirs =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  private lazy val cleanupHook: Unit =
+    Runtime.getRuntime.addShutdownHook(new Thread(() => {
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles).foreach(_.foreach(rm))
+        f.delete(): Unit
+      }
+      cleanupDirs.forEach(d => scala.util.Try(rm(new java.io.File(d))): Unit)
+    }, "graft-workdir-cleanup"))
+  private[graft] def cleanupAtExit(path: String): Unit = {
+    cleanupHook
+    cleanupDirs.add(path): Unit
+  }
+
   /** The stored stamp, if any — compaction re-persists under the SAME
     * stamp (the source corpus it fingerprints is unchanged by a layout
     * rewrite). Heals a mid-swap crash like [[isCurrent]]. */
@@ -214,8 +280,7 @@ object IndexStore {
     // tmp name unique per process+attempt: two JVMs building the same
     // index concurrently (e.g. Verify and Bench racing on a shared
     // target/) stage independently instead of corrupting a shared tmp
-    val tag = java.lang.management.ManagementFactory.getRuntimeMXBean.getName
-      .replaceAll("[^A-Za-z0-9]", "") + "_" + System.nanoTime()
+    val tag = s"${processTag}_${System.nanoTime()}"
     val tmp = new Path(live.getParent, s".${live.getName}_building_$tag")
     inParallel(tables.map { case (name, df) =>
       () => df.write.mode("overwrite").parquet(new Path(tmp, name).toString)
@@ -269,8 +334,7 @@ object IndexStore {
     val dst = new Path(to)
     val fs = fsOf(s, src)
     healStoreSwap(s, to)
-    val tag = java.lang.management.ManagementFactory.getRuntimeMXBean.getName
-      .replaceAll("[^A-Za-z0-9]", "") + "_" + System.nanoTime()
+    val tag = s"${processTag}_${System.nanoTime()}"
     val tmp = new Path(dst.getParent, s".${dst.getName}_copying_$tag")
     if (!org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, tmp, false,
         s.sparkContext.hadoopConfiguration)) {
@@ -355,29 +419,28 @@ object IndexStore {
     * two writers in DIFFERENT processes remain excluded by convention
     * and would need distinct partVal spaces, same as two writers of any
     * log. */
-  // per-(store, table, segment) JVM locks: two same-process writers
-  // racing the same segment (the two-streams-one-store case the r14
-  // scaladoc documented but did not enforce) LINEARIZE — the first
-  // writes and commits, the second observes the marker and no-ops.
-  // REFERENCE-COUNTED per exact path (ADVICE r15: the 64-stripe table
-  // could serialize two UNRELATED tables' commits on a hash collision —
-  // a full parquet write held the monitor): each key's entry exists only
-  // while a writer holds or waits on it, so the table is bounded by
-  // CONCURRENT commits, not by how many segments a long-lived process
-  // ever committed, and distinct segments never contend. Cross-process
+  // per-path JVM locks: two same-process callers on one path LINEARIZE
+  // (the [[stamped]] gate builds a store once; two writers racing one
+  // segment: the first writes and commits, the second observes the
+  // marker and no-ops). REFERENCE-COUNTED per exact path (ADVICE r15: the
+  // 64-stripe table could serialize two UNRELATED tables' commits on a
+  // hash collision — a full parquet write held the monitor): each key's
+  // entry exists only while a caller holds or waits on it, so the table
+  // is bounded by CONCURRENT holders, not by how many paths a long-lived
+  // process ever touched, and distinct paths never contend. Cross-process
   // writers remain excluded by convention (a micro-batch owns its
-  // batchId), as documented below.
-  private final class SegLock { var refs = 0 }
-  private val segLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, SegLock]()
-  private def withSegLock[T](key: String)(body: => T): T = {
-    val l = segLocks.compute(key, (_, v) => {
-      val x = if (v == null) new SegLock else v
+  // batchId; a process-unique [[workPath]] owns its directory).
+  private final class PathLock { var refs = 0 }
+  private val pathLocks =
+    new java.util.concurrent.ConcurrentHashMap[String, PathLock]()
+  private[graft] def withPathLock[T](key: String)(body: => T): T = {
+    val l = pathLocks.compute(key, (_, v) => {
+      val x = if (v == null) new PathLock else v
       x.refs += 1
       x
     })
     try l.synchronized(body)
-    finally segLocks.compute(key, (_, v) => {
+    finally pathLocks.compute(key, (_, v) => {
       v.refs -= 1
       if (v.refs == 0) null else v
     }): Unit
@@ -386,7 +449,7 @@ object IndexStore {
   def appendSegmentIfAbsent(s: SparkSession, path: String, table: String,
       partCol: String, partVal: Long, df: DataFrame): Boolean = {
     val seg = new Path(new Path(new Path(path), table), s"$partCol=$partVal")
-    withSegLock(seg.toString) {
+    withPathLock(seg.toString) {
       val fs = fsOf(s, seg)
       val marker = new Path(seg, "_COMMITTED")
       if (fs.exists(marker)) false
@@ -886,8 +949,7 @@ object IndexStore {
     val bak = tableBak(path, table)
     val fs = fsOf(s, live)
     healTableSwap(s, path, table)
-    val tag = java.lang.management.ManagementFactory.getRuntimeMXBean.getName
-      .replaceAll("[^A-Za-z0-9]", "") + "_" + System.nanoTime()
+    val tag = s"${processTag}_${System.nanoTime()}"
     val tmp = new Path(new Path(path), s".${table}_building_$tag")
     df.write.mode("overwrite").parquet(tmp.toString)
     if (!fs.exists(live)) {

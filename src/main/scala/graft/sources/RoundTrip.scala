@@ -320,10 +320,7 @@ object RoundTrip extends QueryModule {
     * versions are a pure function of the data. */
   def snapshotLake(s: SparkSession, dir: String): DataFrame = {
     tune(s)
-    val lake = "target/tmp/snaplake_" + dir.replaceAll("[^A-Za-z0-9.]+", "_")
-    val p = new org.apache.hadoop.fs.Path(lake)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
+    val lake = freshLake(s, "snaplake", dir)
     val cutoff = lit("1998-01-01").cast("date")
     val o = table(s, dir, "orders")
       .select(col("o_orderkey").cast("long").as("okey"),
@@ -351,21 +348,14 @@ object RoundTrip extends QueryModule {
       |       CAST(SUM(okey) AS BIGINT), TRUE
       |FROM o""".stripMargin
 
-  /** A per-run snapshot table dir under target/tmp, wiped so version
-    * numbers are a pure function of the input data. PROCESS-UNIQUE
-    * (review catch): two JVMs sharing target/ (Verify beside Bench) must
-    * not clobber each other's lake between a commit and its read-back —
-    * the same race the IndexStore staging tags close. Reaped at JVM
-    * exit so per-process dirs don't accumulate across runs. Shared by
-    * the feed-sync rigs in Dedup/Search. */
+  /** A per-run snapshot table dir, wiped so version numbers are a pure
+    * function of the input data. An [[IndexStore.workPath]], so two JVMs
+    * sharing target/ (Verify beside Bench) never clobber each other's
+    * lake between a commit and its read-back. Shared by the feed-sync
+    * rigs of every family. */
   private[graft] def freshLake(s: SparkSession, name: String, dir: String): String = {
-    val lake = s"target/tmp/${name}_" +
-      graft.operators.Similarity.processTag + "_" +
-      dir.replaceAll("[^A-Za-z0-9.]+", "_")
-    val p = new org.apache.hadoop.fs.Path(lake)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    graft.operators.Similarity.cleanupAtExit(lake)
+    val lake = IndexStore.workPath(s"target/tmp/${name}_" + IndexStore.dirTag(dir))
+    IndexStore.remove(s, lake)
     lake
   }
 

@@ -1078,9 +1078,9 @@ object StreamOps extends QueryModule {
     * transient false verdict would leave every later call dead in this
     * process; unstamped, the next call re-drives the stream and a
     * transient hiccup self-heals. Returns (store path, clean). */
-  private def drained(s: SparkSession, f: LedgeredStream, dir: String): (String, Boolean) =
-    synchronized {
-      val path = f.path(dir)
+  private def drained(s: SparkSession, f: LedgeredStream, dir: String): (String, Boolean) = {
+    val path = f.path(dir)
+    IndexStore.withPathLock(path) {
       val stamp = s"${f.name}stream-done|" + f.fingerprint(s, dir)
       if (IndexStore.isCurrent(s, path, stamp))
         (path, IndexStore.readMeta(s, path)("replay_noop").toBoolean)
@@ -1127,6 +1127,7 @@ object StreamOps extends QueryModule {
         (path, clean)
       }
     }
+  }
 
   /** A stamped COPY of the family's drained store, compacted once per
     * process: copy, run the family's compaction, then re-commit every
@@ -1136,18 +1137,19 @@ object StreamOps extends QueryModule {
     * in meta. Compacting a copy keeps the shared drained store's
     * uncompacted segments and horizons intact; a crash mid-compact
     * leaves the copy failing this stamp check, and it re-copies.
-    * Returns (copy path, replay-after-compact). */
-  private def compacted(s: SparkSession, f: LedgeredStream, dir: String): (String, Boolean) =
-    synchronized {
-      val (path, clean) = drained(s, f, dir)
-      val cpath = path + "_compacted"
+    * The drained store's path lock covers the copy, so it never races a
+    * re-drain. Returns (copy path, replay-after-compact). */
+  private def compacted(s: SparkSession, f: LedgeredStream, dir: String): (String, Boolean) = {
+    val path = f.path(dir)
+    IndexStore.withPathLock(path) {
+      val (_, clean) = drained(s, f, dir)
+      val cpath = compactedPath(path)
       val stamp = s"${f.name}stream-compacted|" + f.fingerprint(s, dir)
       if (IndexStore.isCurrent(s, cpath, stamp))
         (cpath, IndexStore.readMeta(s, cpath)("replay_after_compact").toBoolean)
       else {
         require(clean, "pre-compaction stream must commit exactly once")
         IndexStore.copy(s, path, cpath)
-        graft.operators.Similarity.cleanupAtExit(cpath)
         val meta = f.compact(s, cpath)
         val replays = f.batches(s, dir).map { case (segId, b) =>
           f.commit(s, dir, cpath, segId.toLong, b)._1
@@ -1159,6 +1161,12 @@ object StreamOps extends QueryModule {
         (cpath, stillNoop)
       }
     }
+  }
+
+  /** Where [[compacted]] keeps the compacted copy of the drained store at
+    * `path`: a process-unique work path beside it. */
+  private[graft] def compactedPath(path: String): String =
+    IndexStore.workPath(path + "_compacted")
 
   /** Streaming sequential index refresh (q215): the q195 batch refresh
     * loop run as a REAL stream — arrival batches land as files, each

@@ -941,4 +941,129 @@ class CrashRecoverySpec extends AnyFunSuite {
           s"folded table '$t' must hold exactly the masked view's rows")
       }
     }
+
+  test("stamped gate: a build that throws before its stamp leaves the store stale, the next call rebuilds") {
+    import graft.sources.IndexStore
+    import s.implicits._
+    val store = s"$base/gate_throw"
+    val e = intercept[IllegalStateException] {
+      IndexStore.stamped(s, store, "g1") {
+        IndexStore.write(s, store, "g1-building", Seq("t" -> (1L to 3L).toDF("id")))
+        throw new IllegalStateException("killed before the stamp")
+      }
+    }
+    assert(e.getMessage == "killed before the stamp")
+    assert(!IndexStore.isCurrent(s, store, "g1"),
+      "a build that died before writing its stamp must not validate")
+    var builds = 0
+    IndexStore.stamped(s, store, "g1") {
+      builds += 1
+      IndexStore.write(s, store, "g1", Seq("t" -> (1L to 5L).toDF("id")))
+    }
+    assert(builds == 1, "the next call must rebuild the stale store")
+    assert(IndexStore.isCurrent(s, store, "g1") && IndexStore.read(s, store, "t").count() == 5L)
+    IndexStore.stamped(s, store, "g1")(builds += 1)
+    assert(builds == 1, "a current store must not rebuild")
+  }
+
+  test("stamped gate: two threads on one path run the build exactly once") {
+    import graft.sources.IndexStore
+    import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
+    val store = s"$base/gate_once"
+    val builds = new java.util.concurrent.atomic.AtomicInteger()
+    val go = new CountDownLatch(1)
+    val pool = Executors.newFixedThreadPool(2)
+    try {
+      val futs = (1 to 2).map(_ => pool.submit(new Runnable {
+        def run(): Unit = {
+          go.await()
+          IndexStore.stamped(s, store, "once") {
+            builds.incrementAndGet()
+            Thread.sleep(200) // hold the gate while the other caller arrives
+            IndexStore.writeStamp(s, store, "once")
+          }
+        }
+      }))
+      go.countDown()
+      futs.foreach(_.get(60, TimeUnit.SECONDS))
+    } finally pool.shutdownNow()
+    assert(builds.get == 1, s"one path must build once, got ${builds.get} builds")
+    assert(IndexStore.isCurrent(s, store, "once"))
+  }
+
+  test("stamped gate: a slow build on one path does not block a build on another") {
+    import graft.sources.IndexStore
+    import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
+    val (a, b) = (s"$base/gate_slow_a", s"$base/gate_slow_b")
+    val inA = new CountDownLatch(1)
+    val releaseA = new CountDownLatch(1)
+    val pool = Executors.newSingleThreadExecutor()
+    try {
+      val slow = pool.submit(new Runnable {
+        def run(): Unit = IndexStore.stamped(s, a, "a") {
+          inA.countDown()
+          releaseA.await(60, TimeUnit.SECONDS)
+          IndexStore.writeStamp(s, a, "a")
+        }
+      })
+      assert(inA.await(60, TimeUnit.SECONDS), "test setup: the slow build must start")
+      // B's build completes while A's is still inside its gate
+      var builtB = false
+      IndexStore.stamped(s, b, "b") {
+        builtB = true
+        IndexStore.writeStamp(s, b, "b")
+      }
+      assert(builtB && IndexStore.isCurrent(s, b, "b"))
+      assert(!slow.isDone, "A's build must still be running: B did not wait on it")
+      releaseA.countDown()
+      slow.get(60, TimeUnit.SECONDS)
+    } finally {
+      releaseA.countDown()
+      pool.shutdownNow()
+    }
+    assert(IndexStore.isCurrent(s, a, "a"))
+  }
+
+  test("workPath is process-unique and registered for removal at JVM exit") {
+    import graft.sources.IndexStore
+    val root = s"$base/work_kind"
+    val path = IndexStore.workPath(root)
+    assert(path.startsWith(root + "_") && path.length > root.length + 1,
+      s"a work path must carry the process tag after its base, got $path")
+    assert(IndexStore.workPath(root) == path, "one base maps to one path per process")
+    assert(IndexStore.cleanupDirs.contains(path), "a work path must be reaped at JVM exit")
+  }
+
+  test("dedup takedown killed between its store swap and its bloom write: the branch fails its stamp, the next call serves it with a bloom") {
+    import graft.operators.Dedup
+    import graft.sources.IndexStore
+    Engine.tune(s)
+    val path = Dedup.takedownDedupBranch(s, TestSpark.sf)
+    val stamp = IndexStore.readStamp(s, path).get
+    val tables = Seq("digests", "sigs", "bands", "keys")
+    // the kill: the erased tables swapped in under the build's staging
+    // stamp, the bloom never written
+    IndexStore.write(s, path, "takedown-building",
+      tables.map(t => t -> IndexStore.read(s, path, t).localCheckpoint()))
+    assert(!IndexStore.tableNames(s, path).contains("bloom"), "test setup: no bloom")
+    assert(!IndexStore.isCurrent(s, path, stamp),
+      "a branch without its bloom must fail its stamp")
+
+    assert(Dedup.takedownDedupBranch(s, TestSpark.sf) == path)
+    assert(IndexStore.isCurrent(s, path, stamp), "the next call must rebuild the branch")
+    assert(IndexStore.tableNames(s, path) == (tables :+ "bloom").sorted)
+    // the stamp lands last: a kill anywhere before it leaves the branch stale
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI("file:///"), s.sparkContext.hadoopConfiguration)
+    val stampTime = fs.getFileStatus(new org.apache.hadoop.fs.Path(path, "_STAMP"))
+      .getModificationTime
+    val bloomTimes = fs.listStatus(new org.apache.hadoop.fs.Path(path, "bloom"))
+      .map(_.getModificationTime)
+    assert(bloomTimes.nonEmpty && bloomTimes.forall(_ <= stampTime),
+      "the stamp must be written after the bloom")
+    val bloom = Dedup.loadBloom(s, path)
+    val digests = IndexStore.read(s, path, "digests").select("tkey").collect().map(_.getString(0))
+    assert(digests.nonEmpty && digests.forall(bloom.mightContainString),
+      "the rebuilt bloom must cover every retained digest")
+  }
 }

@@ -104,7 +104,7 @@ class MaskFoldSpec extends AnyFunSuite {
     val fold = maskPath + "_foldspec"
     IndexStore.copy(s, maskPath, fold)
     IndexStore.foldMasks(s, fold, c.fold)
-    graft.operators.Similarity.cleanupAtExit(fold)
+    graft.sources.IndexStore.cleanupAtExit(fold)
     // every mask table is gone...
     assert(IndexStore.readDeleteMask(s, fold).isEmpty,
       s"${c.name}: fold must drop the delete-mask table")
@@ -130,7 +130,7 @@ class MaskFoldSpec extends AnyFunSuite {
   test("mask scoping: a masked doc_id re-inserted in a newer segment stays visible") {
     import s.implicits._
     val path = s"target/tmp/maskscope_${java.util.UUID.randomUUID().toString.take(8)}"
-    graft.operators.Similarity.cleanupAtExit(path)
+    graft.sources.IndexStore.cleanupAtExit(path)
     // segment 0: docs 1, 2; then doc 1 is deleted (mask seq=0); then a
     // NEW doc 1 arrives in segment 1 (a re-ingestion after delete)
     Search.persistIndex(s, path, "scopespec",
@@ -217,7 +217,7 @@ class MaskFoldSpec extends AnyFunSuite {
       tables: Seq[(String, org.apache.spark.sql.DataFrame)]): String = {
     val path = s"target/tmp/masktiny_${name.replace(' ', '_')}_" +
       java.util.UUID.randomUUID().toString.take(8)
-    graft.operators.Similarity.cleanupAtExit(path)
+    graft.sources.IndexStore.cleanupAtExit(path)
     IndexStore.write(s, path, "tinyspec", tables)
     c.masks.foreach { case (m, df) => IndexStore.append(s, path, m, df) }
     path
@@ -268,7 +268,7 @@ class MaskFoldSpec extends AnyFunSuite {
     // (mergeSchema=true), so the feed apply must too — the extra column
     // lands in the docmeta side table; every v1 table keeps its schema
     val path = s"target/tmp/feedcarry_${java.util.UUID.randomUUID().toString.take(8)}"
-    graft.operators.Similarity.cleanupAtExit(path)
+    graft.sources.IndexStore.cleanupAtExit(path)
     Search.persistIndex(s, path, "carryspec",
       Seq((1L, "red fox")).toDF("doc_id", "text"))
     val evolved = Seq((2L, "blue fox", "en")).toDF("doc_id", "text", "lang")
@@ -301,7 +301,7 @@ class MaskFoldSpec extends AnyFunSuite {
   test("a KEY/TYPE-changed feed batch is still refused loudly, never silently cast") {
     import s.implicits._
     val path = s"target/tmp/feedschema_${java.util.UUID.randomUUID().toString.take(8)}"
-    graft.operators.Similarity.cleanupAtExit(path)
+    graft.sources.IndexStore.cleanupAtExit(path)
     Search.persistIndex(s, path, "schemaspec",
       Seq((1L, "red fox")).toDF("doc_id", "text"))
     // doc_id retyped to string: not evolution, a different feed
@@ -328,7 +328,7 @@ class MaskFoldSpec extends AnyFunSuite {
     val base = s"target/tmp/autofold_${java.util.UUID.randomUUID().toString.take(8)}"
     def mkStore(sfx: String): String = {
       val p = s"${base}_$sfx"
-      graft.operators.Similarity.cleanupAtExit(p)
+      graft.sources.IndexStore.cleanupAtExit(p)
       Search.persistIndex(s, p, "afspec",
         (1L to 10L).map(i => (i, s"fox number $i")).toDF("doc_id", "text"))
       IndexStore.appendDeleteMask(s, p,
@@ -372,7 +372,7 @@ class MaskFoldSpec extends AnyFunSuite {
   test("as-of x mask: a horizon read applies only masks visible at that horizon (search)") {
     import s.implicits._
     val path = s"target/tmp/maskasof_${java.util.UUID.randomUUID().toString.take(8)}"
-    graft.operators.Similarity.cleanupAtExit(path)
+    graft.sources.IndexStore.cleanupAtExit(path)
     // seg 0: docs 1, 2; mask(1, seq=0) lands with the seg-0 view;
     // seg 1: doc 3 arrives; mask(2, seq=1) drains AFTER segment 1
     Search.persistIndex(s, path, "asofspec",

@@ -132,8 +132,8 @@ class StreamingSpec extends AnyFunSuite {
     // Under the warm convention q217 compacts a stamped COPY of the
     // shared streamed store (suffix _compacted), leaving the original
     // uncompacted for q215/q218 — the layout assertions read the copy.
-    val path =
-      graft.operators.Similarity.seqIvfStreamPath(TestSpark.sf) + "_compacted"
+    val path = StreamOps.compactedPath(
+      graft.operators.Similarity.seqIvfStreamPath(TestSpark.sf))
     val tbl = new java.io.File(path, "assign")
     Seq(0, 1, 2).foreach { k =>
       assert(new java.io.File(tbl, s"seg=$k/_COMMITTED").isFile,
@@ -150,7 +150,7 @@ class StreamingSpec extends AnyFunSuite {
     // probes in this process
     val scratch = path + "_growspec"
     graft.sources.IndexStore.copy(s, path, scratch)
-    graft.operators.Similarity.cleanupAtExit(scratch)
+    graft.sources.IndexStore.cleanupAtExit(scratch)
     val b1 = graft.operators.Similarity.seqArrivalBatches(s, TestSpark.sf).head._2
     val (first, replay) =
       graft.operators.Similarity.seqIvfStreamCommit(s, TestSpark.sf, scratch, 3L, b1)
