@@ -81,8 +81,10 @@ object Verify {
         else "org.apache.hadoop.fs.LocalFileSystem")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    Engine.tune(spark)
-    Engine.assertOracleKnobsUnset(spark)
+    try {
+      Engine.tune(spark)
+      Engine.assertOracleKnobsUnset(spark)
+    } catch { case e: Throwable => spark.stop(); throw e }
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
