@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every registered query at SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Each query is forced through a noop DSv2 sink so ALL
@@ -40,32 +39,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // static conf, must be set at session build: the 100-entry default
-      // codegen cache thrashes under the 268-query registry (see
-      // OPTIMIZATION_r20.md); also set for forked JVMs in build.sbt
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // static-ish core conf, set at session build so a deployment that
-      // copies this builder inherits it (VERDICT r20 item 6): below the
-      // 200-partition bypass threshold the bypass-merge writer creates R
-      // files per map task; the sort writer (1 file + index per map task)
-      // is both faster here and the only code path production reducer
-      // counts (>200) ever run. Also in build.sbt javaOptions for the
-      // forked dev/test JVMs.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      // bind file: to the fork-free local fs BEFORE any FileSystem.get
-      // caches the default (the cache keys by scheme+ugi, not conf) —
-      // see graft.sources.NioLocalFileSystem
-      .config("spark.hadoop.fs.file.impl",
-        if (sys.env.getOrElse("SPARK_GRAFT_NIO_LOCALFS", "1") != "0")
-          classOf[graft.sources.NioLocalFileSystem].getName
-        else "org.apache.hadoop.fs.LocalFileSystem")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    Engine.tune(spark)
+    val spark = Engine.session(cpus)
     Engine.assertOracleKnobsUnset(spark)
     spark.sparkContext.setLogLevel("WARN")
 

@@ -135,6 +135,39 @@ object Engine {
     "spark.graft.hybrid.probes",
     "spark.graft.stateStore.provider")
 
+  /** The one local session builder — every main and the test suites run
+    * on it: `local[cpus]` with `cpus` shuffle partitions, the static conf
+    * that only lands at context creation, then [[tune]]. Static conf:
+    *  - a 10000-entry whole-stage-codegen cache: the 100-entry default
+    *    thrashes under the 268-query registry (see OPTIMIZATION_r20.md);
+    *  - the sort shuffle writer at any reducer count
+    *    (`bypassMergeThreshold` 1): below the 200-partition bypass
+    *    threshold the bypass-merge writer creates R files per map task;
+    *    the sort writer (1 file + index per map task) is both faster here
+    *    and the only code path production reducer counts (>200) ever run;
+    *  - `file:` bound to the fork-free local fs BEFORE any FileSystem.get
+    *    caches the default (the cache keys by scheme+ugi, not conf) — see
+    *    [[graft.sources.NioLocalFileSystem]];
+    *  - UTC session time zone, no UI.
+    * build.sbt's javaOptions carry the same static conf for forked JVMs.
+    * A session whose tuning throws is stopped before the error leaves. */
+  def session(cpus: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.codegen.cache.maxEntries", "10000")
+      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
+      .config("spark.hadoop.fs.file.impl",
+        if (sys.env.getOrElse("SPARK_GRAFT_NIO_LOCALFS", "1") != "0")
+          classOf[graft.sources.NioLocalFileSystem].getName
+        else "org.apache.hadoop.fs.LocalFileSystem")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    try tune(spark) catch { case e: Throwable => spark.stop(); throw e }
+    spark
+  }
+
   /** Fails fast if any output-affecting knob is set on this session —
     * called by Verify/Bench before the registered-query loop.
     */

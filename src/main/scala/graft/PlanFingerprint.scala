@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -371,16 +371,10 @@ object PlanFingerprint {
   }
 
   def main(args: Array[String]): Unit = {
-    // MUST mirror TestSpark exactly: fingerprints depend on parallelism
+    // the TestSpark session (4 cpus): fingerprints depend on parallelism
     // (spread() partition counts are invisible to the counts, but
     // auto-broadcast decisions depend on size estimates at the fixture SF)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    Engine.tune(spark)
+    val spark = Engine.session("4")
     spark.sparkContext.setLogLevel("ERROR")
     val sf = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val lines = locked.map { name =>

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 
 /** Dev profiling tool: run one registered query (warm, pass 2) and print
@@ -17,14 +16,7 @@ object StageProfile {
     val sfDir = args(0)
     val names = args.drop(1).toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    Engine.tune(spark)
+    val spark = Engine.session(cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     val lines = java.util.Collections.synchronizedList(new java.util.ArrayList[String]())

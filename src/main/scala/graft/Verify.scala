@@ -61,30 +61,9 @@ object Verify {
   }
 
   private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // static conf, must be set at session build: the 100-entry default
-      // codegen cache thrashes under the 268-query registry (see
-      // OPTIMIZATION_r20.md); also set for forked JVMs in build.sbt
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // sort-based shuffle writer at any reducer count — the production
-      // code path; see Bench.scala for the adjudication (VERDICT r20 item 6)
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      // fork-free file: binding, set at context creation (see Bench.scala
-      // and graft.sources.NioLocalFileSystem)
-      .config("spark.hadoop.fs.file.impl",
-        if (sys.env.getOrElse("SPARK_GRAFT_NIO_LOCALFS", "1") != "0")
-          classOf[graft.sources.NioLocalFileSystem].getName
-        else "org.apache.hadoop.fs.LocalFileSystem")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    try {
-      Engine.tune(spark)
-      Engine.assertOracleKnobsUnset(spark)
-    } catch { case e: Throwable => spark.stop(); throw e }
+    val spark = Engine.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    try Engine.assertOracleKnobsUnset(spark)
+    catch { case e: Throwable => spark.stop(); throw e }
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

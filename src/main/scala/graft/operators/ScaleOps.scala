@@ -2751,13 +2751,20 @@ object ScaleOps extends QueryModule {
 
   /** The q266 store's five ledgered tables. `deletes` masks member keys
     * (doc_id), `dgone` masks digests (dh) — both as COMMITTED SEGMENTS
-    * under the q246 scoping rule (`row.segment < mask.segment`, so a
-    * digest re-ingested by a later batch is visible through the mask);
-    * `cdelta` ledgers the per-source canonical token-count DELTAS, so
-    * the current counts are one |sources|-row sum over visible segments
-    * and the rates re-solve driver-side at read. */
-  private[graft] val MixAdmStreamTables =
-    Seq("keys", "digests", "deletes", "dgone", "cdelta")
+    * under the q246 scoping rule (a mask hides rows of strictly older
+    * segments, so a digest re-ingested by a later batch is visible
+    * through the mask); `cdelta` ledgers the per-source canonical
+    * token-count DELTAS, so the current counts are one |sources|-row sum
+    * over visible segments (its fold at compaction) and the rates
+    * re-solve driver-side at read. */
+  private[graft] val MixAdmStreamLedger = IndexStore.Ledger("segment", Seq(
+      IndexStore.LedgerTable("keys", "doc_id"),
+      IndexStore.LedgerTable("digests", "dh"),
+      IndexStore.LedgerTable("deletes", "doc_id"),
+      IndexStore.LedgerTable("dgone", "dh"),
+      IndexStore.LedgerTable("cdelta", "source")),
+    masks = Seq(("deletes", "keys", "doc_id", "doc_id"), ("dgone", "digests", "dh", "dh")),
+    fold = Map("cdelta" -> (_.groupBy(col("source")).agg(sum(col("c")).as("c")))))
 
   private[graft] def mixAdmStreamPath(dir: String): String =
     IndexStore.workPath("target/tmp/mixadm_stream_" + IndexStore.dirTag(dir))
@@ -2771,18 +2778,15 @@ object ScaleOps extends QueryModule {
       : (String, Seq[(Int, DataFrame)]) = {
     val f = mixAdmFeedFixture(s, dir, "mixadmstream")
     val path = mixAdmStreamPath(dir)
-    IndexStore.remove(s, path)
     val keys0 = digestKeys(f.base).localCheckpoint()
-    val counts0 = canonOf(keys0)
-      .groupBy(col("source")).agg(sum(col("tk")).as("c"))
-      .filter(col("c") > 0L)
-    require(IndexStore.commitSegment(s, path, MixAdmStreamTables, "segment", 0L,
-        Seq("keys" -> keys0,
-          "digests" -> keys0.select(col("dh")).filter(col("dh").isNotNull).distinct(),
-          "deletes" -> keys0.select(col("doc_id")).limit(0),
-          "dgone" -> keys0.select(col("dh")).limit(0),
-          "cdelta" -> counts0)) == MixAdmStreamTables.size,
-      s"fresh streaming mixadm store at $path had segments")
+    MixAdmStreamLedger.seed(s, path)(Seq(
+      "keys" -> keys0,
+      "digests" -> keys0.select(col("dh")).filter(col("dh").isNotNull).distinct(),
+      "deletes" -> keys0.select(col("doc_id")).limit(0),
+      "dgone" -> keys0.select(col("dh")).limit(0),
+      "cdelta" -> canonOf(keys0)
+        .groupBy(col("source")).agg(sum(col("tk")).as("c"))
+        .filter(col("c") > 0L)))
     IndexStore.writeStamp(s, path, "mixadmstream-seeded|" +
       IndexStore.sourceStamp(s, Seq(s"$dir/documents.parquet")))
     (path, mixAdmBatchesOf(f))
@@ -2803,75 +2807,48 @@ object ScaleOps extends QueryModule {
       dir: String): Seq[(Int, DataFrame)] =
     mixAdmBatchesOf(mixAdmFeedFixture(s, dir, "mixadmreplay"))
 
-  /** The cross-table visible segment set of the streaming policy store. */
-  private[graft] def mixAdmStreamVisible(s: SparkSession, path: String): Seq[Long] =
-    IndexStore.commonCommittedSegments(
-      s, path, MixAdmStreamTables, "segment")
-
-  /** The masked LIVE view over an explicit visible segment set:
-    * (member keys, digests). Masks scope `row.segment < mask.segment` —
-    * strictly older, the q246 rule, so a batch's own appends are never
-    * hidden by its own masks and a re-ingested digest in a later
-    * segment serves through the older gone-mask. */
-  private[graft] def mixAdmStreamView(s: SparkSession, path: String,
+  /** The policy state of the streaming store over `vis`: the masked
+    * digest set and the per-source canonical counts summed from the
+    * cdelta ledger. */
+  private def mixAdmStreamState(s: SparkSession, path: String,
       vis: Seq[Long]): (DataFrame, DataFrame) = {
-    def rd(t: String) =
-      IndexStore.readSegments(s, path, t, "segment", vis)
-    val del = rd("deletes").localCheckpoint()
-    val dg = rd("dgone").localCheckpoint()
-    val k0 = rd("keys")
-    val keys = k0.join(broadcast(del),
-        k0("doc_id") === del("doc_id") && k0("segment") < del("segment"),
-        "left_anti")
-      .select(col("doc_id"), col("source"), col("tk"), col("dh"))
-    val d0 = rd("digests")
-    val dig = d0.join(broadcast(dg),
-        d0("dh") <=> dg("dh") && d0("segment") < dg("segment"), "left_anti")
-      .select(col("dh"))
-    (keys, dig)
+    val v = MixAdmStreamLedger.view(s, path, vis)
+    (v("digests"), v("cdelta").groupBy(col("source")).agg(sum(col("c")).as("c"))
+      .filter(col("c") > 0L))
   }
 
-  /** Commit one feed micro-batch as segment `segId` of ALL FIVE tables,
-    * then DELIBERATELY re-commit (the crash-recovery replay). The frames
-    * derive from the visible state of segments < segId — prior committed
-    * segments never change, so a replay recomputes identical frames and
-    * the ledger makes it a metadata no-op. The batch's delete leg is
-    * q260's O(delta) group-survival decision landed as mask segments
-    * (gone digests, raw delete ids); the insert leg appends holders and
-    * the digests absent from the pre-batch view; the canonical count
-    * movement lands as a `cdelta` segment, so counts/rates need no
-    * rewrite anywhere — the stream's recurring write is O(delta) rows
-    * across five segment directories. Returns the written-table counts
-    * of the two passes ((5, 0) for a fresh segment) plus the batch's
-    * (n_inserts, n_deletes) audit. */
+  /** Commit one feed micro-batch as segment `segId` of ALL FIVE tables
+    * and replay it ([[IndexStore.Ledger.commit]]). The frames derive
+    * from the visible state of segments < segId — prior committed
+    * segments never change, so a replay would recompute identical
+    * frames; the ledger makes it a metadata no-op instead. The batch's
+    * delete leg is q260's O(delta) group-survival decision landed as
+    * mask segments (gone digests, raw delete ids); the insert leg
+    * appends holders and the digests absent from the pre-batch view;
+    * the canonical count movement lands as a `cdelta` segment, so
+    * counts/rates need no rewrite anywhere — the stream's recurring
+    * write is O(delta) rows across five segment directories. Returns
+    * the written-table counts of the two passes ((5, 0) for a fresh
+    * segment) plus the batch's n_feed_inserts / n_feed_deletes audit. */
   private[graft] def mixAdmStreamCommit(s: SparkSession, path: String,
-      segId: Long, batch: DataFrame): ((Int, Int), (Long, Long)) = {
-    // raw slices only here — the checkpoints live inside the lazy
-    // frames block, so a replayed batch whose segments are already
-    // committed (the q270 post-compaction path) stays a pure
-    // metadata probe and pins no checkpoint blocks
-    val del = batch.filter(col("change") === "delete")
-      .select(col("doc_id"))
-    val ins = batch.filter(col("change") === "insert")
-      .select(col("doc_id"), col("source"), col("text"))
-    lazy val frames: Seq[(String, DataFrame)] = {
-      val vis = mixAdmStreamVisible(s, path).filter(_ < segId)
-      val (keysV, _) = mixAdmStreamView(s, path, vis)
-      val delC = del.localCheckpoint()
-      val insKeys = digestKeys(ins.localCheckpoint()).localCheckpoint()
-      val sd = survivalDelta(keysV, delC, insKeys)
+      segId: Long, batch: DataFrame): ((Int, Int), Map[String, Long]) =
+    MixAdmStreamLedger.commit(s, path, segId) {
+      val del = batch.filter(col("change") === "delete")
+        .select(col("doc_id")).localCheckpoint()
+      val ins = batch.filter(col("change") === "insert")
+        .select(col("doc_id"), col("source"), col("text")).localCheckpoint()
+      val keysV = MixAdmStreamLedger.view(s, path,
+        MixAdmStreamLedger.visible(s, path).filter(_ < segId))("keys")
+      val insKeys = digestKeys(ins).localCheckpoint()
+      val sd = survivalDelta(keysV, del, insKeys)
       val cd = sd.oldCanon.groupBy(col("source")).agg((-sum(col("tk"))).as("c"))
         .unionByName(sd.newCanon.groupBy(col("source")).agg(sum(col("tk")).as("c")))
         .groupBy(col("source")).agg(sum(col("c")).as("c"))
         .filter(col("c") =!= 0L).localCheckpoint()
-      Seq("keys" -> insKeys, "digests" -> sd.added, "deletes" -> delC,
-        "dgone" -> sd.gone, "cdelta" -> cd)
+      (Seq("keys" -> insKeys, "digests" -> sd.added, "deletes" -> del,
+          "dgone" -> sd.gone, "cdelta" -> cd),
+        Map("n_feed_inserts" -> ins.count(), "n_feed_deletes" -> del.count()))
     }
-    def commitAll(): Int = IndexStore.commitSegment(
-      s, path, MixAdmStreamTables, "segment", segId, frames)
-    val first = commitAll()
-    ((first, commitAll()), (ins.count(), del.count()))
-  }
 
   /** Audit column from store meta with a LOUD fallback: the feed-count
     * meta lands with the done-stamp, which a NON-clean drain never
@@ -2889,12 +2866,7 @@ object ScaleOps extends QueryModule {
   private[graft] def mixAdmStreamResult(s: SparkSession, dir: String,
       path: String, replayNoop: Boolean): DataFrame = {
     val meta = IndexStore.readMeta(s, path)
-    val vis = mixAdmStreamVisible(s, path)
-    val (_, dig) = mixAdmStreamView(s, path, vis)
-    val counts = IndexStore
-      .readSegments(s, path, "cdelta", "segment", vis)
-      .groupBy(col("source")).agg(sum(col("c")).as("c"))
-      .filter(col("c") > 0L)
+    val (dig, counts) = mixAdmStreamState(s, path, MixAdmStreamLedger.visible(s, path))
     val rates = ratesFrom(counts)
     // count(*) is the family's audit contract: segment 0 is distinct by
     // construction and every later segment appends only digests absent
@@ -2923,38 +2895,23 @@ object ScaleOps extends QueryModule {
   // streamed mix-admission store (the q248/q249 symmetry for the sixth
   // family) ----
 
-  /** The compaction point recorded by [[compactMixAdmStream]] — horizons
-    * below it are forfeited; absent key = every horizon servable. */
-  private[graft] def mixAdmCompactedThrough(s: SparkSession, path: String): Long =
-    IndexStore.readMeta(s, path)
-      .get("compacted_through").map(_.toLong).getOrElse(Long.MinValue)
-
   /** q269's answer frame: the SAME policy probe at two horizons of the
     * streamed store — `full` (every committed segment: the current
     * synced policy, q260's decisions) and `asof1` (segments <= 1: the
     * policy as it stood after the takedown batch, before the re-ingests
     * landed — deleted texts' copies already fall through to the lottery
     * at post-delete rates, but re-ingested texts do NOT yet screen out).
-    * The horizon bounds the visible segment set itself (intersected
-    * per-table ledgers filtered to <= h), so segment 2's directories
-    * never enter planning — the q218/q248 directory-pruning shape.
+    * The horizon bounds the visible segment set itself
+    * ([[IndexStore.Ledger.asOf]]), so segment 2's directories never
+    * enter planning — the q218/q248 directory-pruning shape.
     * Counts sum from the cdelta ledger AT the horizon and rates
     * re-solve per leg, so the whole policy (digest set AND rates) is
     * horizon-consistent. A compacted store forfeits horizons below its
     * compaction point — refused loudly, the q248 rule. */
   private[graft] def mixAdmStreamAsOfResult(s: SparkSession, dir: String,
       path: String): DataFrame = {
-    val through = mixAdmCompactedThrough(s, path)
     def leg(h: Long, name: String): DataFrame = {
-      require(h >= through,
-        s"as-of horizon $h is below the store's compaction point $through " +
-          s"at $path — folded history is not servable")
-      val vis = mixAdmStreamVisible(s, path).filter(_ <= h)
-      val (_, dig) = mixAdmStreamView(s, path, vis)
-      val counts = IndexStore
-        .readSegments(s, path, "cdelta", "segment", vis)
-        .groupBy(col("source")).agg(sum(col("c")).as("c"))
-        .filter(col("c") > 0L)
+      val (dig, counts) = mixAdmStreamState(s, path, MixAdmStreamLedger.asOf(s, path, h))
       val nd = dig.agg(count(lit(1)).as("n_digests"))
       mixAdmitSummary(
           mixAdmitBatchOn(dig, ratesFrom(counts), mixArrivalBatch(s, dir)))
@@ -2977,57 +2934,6 @@ object ScaleOps extends QueryModule {
        |SELECT 'asof1' AS horizon, t.* FROM (
        |${mixAdmDecisionSqlOver(mixAdmAsOf1Sql, "")}) t""".stripMargin
 
-  /** Compact all five ledgered tables of the q266 store at `path` over
-    * the joint visible set, FOLDING the masks into the data tables and
-    * the cdelta ledger into its per-source SUM as the rows collapse —
-    * the q249 invariants verbatim: folded rows park under the visible
-    * set's MAX id (raw strictly-older masks can never re-hide them),
-    * data tables compact FIRST and mask tables LAST, so every crash
-    * window between the single-table swaps serves the bit-identical
-    * view (`masksToo = false` stops at the worst window —
-    * CrashRecoverySpec's hook). Returns the compaction point. */
-  private[graft] def compactMixAdmStream(s: SparkSession, path: String,
-      masksToo: Boolean = true): Long = {
-    val vis = mixAdmStreamVisible(s, path)
-    val into = vis.max
-    val (keys, dig) = mixAdmStreamView(s, path, vis)
-    val foldedKeys = keys.localCheckpoint()
-    val foldedDig = dig.localCheckpoint()
-    val foldedCounts = IndexStore
-      .readSegments(s, path, "cdelta", "segment", vis)
-      .groupBy(col("source")).agg(sum(col("c")).as("c"))
-      .localCheckpoint()
-    def emptyOf(t: String, cols: Seq[String]): DataFrame =
-      IndexStore.readSegments(s, path, t, "segment", vis)
-        .select(cols.map(col): _*).limit(0).localCheckpoint()
-    IndexStore.inParallel(Seq(
-      () => IndexStore.compactSegmentLedger(s, path, "keys",
-        "segment", sortCols = Seq("doc_id"), rangeCols = Seq("doc_id"),
-        onlySegs = Some(vis), foldInto = Some(foldedKeys),
-        intoSeg = Some(into)),
-      () => IndexStore.compactSegmentLedger(s, path, "digests",
-        "segment", sortCols = Seq("dh"), rangeCols = Seq("dh"),
-        onlySegs = Some(vis), foldInto = Some(foldedDig),
-        intoSeg = Some(into)),
-      () => IndexStore.compactSegmentLedger(s, path, "cdelta",
-        "segment", sortCols = Seq("source"), rangeCols = Seq("source"),
-        onlySegs = Some(vis), foldInto = Some(foldedCounts),
-        intoSeg = Some(into))))
-    if (masksToo)
-      IndexStore.inParallel(Seq(
-        () => IndexStore.compactSegmentLedger(s, path, "deletes",
-          "segment", sortCols = Seq("doc_id"), rangeCols = Seq("doc_id"),
-          onlySegs = Some(vis),
-          foldInto = Some(emptyOf("deletes", Seq("doc_id"))),
-          intoSeg = Some(into)),
-        () => IndexStore.compactSegmentLedger(s, path, "dgone",
-          "segment", sortCols = Seq("dh"), rangeCols = Seq("dh"),
-          onlySegs = Some(vis),
-          foldInto = Some(emptyOf("dgone", Seq("dh"))),
-          intoSeg = Some(into))))
-    into
-  }
-
   /** q270's answer frame: q266's served decisions read from the
     * COMPACTED store (fold-on-compact must be invisible — the oracle is
     * q260's chain, so a digest the fold lost or leaked, or a count the
@@ -3039,23 +2945,11 @@ object ScaleOps extends QueryModule {
   private[graft] def mixAdmStreamCompactResult(s: SparkSession, dir: String,
       path: String, replayNoop: Boolean): DataFrame = {
     val meta = IndexStore.readMeta(s, path)
-    val vis = mixAdmStreamVisible(s, path)
-    val (_, dig) = mixAdmStreamView(s, path, vis)
-    val counts = IndexStore
-      .readSegments(s, path, "cdelta", "segment", vis)
-      .groupBy(col("source")).agg(sum(col("c")).as("c"))
-      .filter(col("c") > 0L)
-    val hp = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(path), "keys")
-    val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val nDataSegs = fs.listStatus(hp).count { st =>
-      st.isDirectory && st.getPath.getName.startsWith("segment=") &&
-        fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_COMMITTED")) &&
-        fs.listStatus(st.getPath).exists(_.getPath.getName.endsWith(".parquet"))
-    }.toLong
+    val vis = MixAdmStreamLedger.visible(s, path)
+    val (dig, counts) = mixAdmStreamState(s, path, vis)
+    val nDataSegs = MixAdmStreamLedger.dataSegments(s, path, "keys").size.toLong
     val nMaskRows = Seq("deletes", "dgone").map(t =>
-      IndexStore.readSegments(s, path, t, "segment", vis)
-        .count()).sum
+      MixAdmStreamLedger.read(s, path, t, vis).count()).sum
     val audit = dig.agg(count(lit(1)).as("n_digests"))
       .withColumn("n_feed_inserts", lit(metaLong(meta, "n_feed_inserts")))
       .withColumn("n_feed_deletes", lit(metaLong(meta, "n_feed_deletes")))

@@ -605,12 +605,17 @@ object Search extends QueryModule {
 
   // ---- q219: streaming index refresh through the exactly-once ledger ----
 
-  /** The four tables every search-index store carries — one definition
-    * shared by the streaming commit path and its readers, so a table
-    * added later cannot silently escape the cross-table visibility
-    * rule. */
-  private[graft] val indexTableNames =
-    Seq("postings", "doclen", "dict", "positions")
+  /** The streamed search store: the four tables every search index
+    * carries, one definition shared by the streaming commit path and its
+    * readers (a table added later cannot escape the cross-table
+    * visibility rule), each compacted back into the term-sorted layout
+    * [[persistIndex]] writes, so a compacted store's probes stay
+    * min/max-prunable seeks. No masks. */
+  private[graft] val StreamLedger = IndexStore.Ledger("segment", Seq(
+    IndexStore.LedgerTable("postings", "tok", "doc_id"),
+    IndexStore.LedgerTable("doclen", "doc_id"),
+    IndexStore.LedgerTable("dict", "tok"),
+    IndexStore.LedgerTable("positions", "tok", "doc_id", "pos")))
 
   /** The deterministic arrival-doc slices for the streaming refresh rig:
     * the refreshed quarter (doc_id % 4 == 3, the [[refreshedBranch]]
@@ -656,54 +661,32 @@ object Search extends QueryModule {
     * validates). */
   private[graft] def seedStreamIndex(s: SparkSession, dir: String): String = {
     val path = streamIndexPath(dir)
-    IndexStore.remove(s, path)
-    val base = docs(s, dir).filter(col("doc_id") % 4 =!= 3)
     // the four tables derive from one checkpointed tokenize — their
-    // writes are independent jobs, overlapped (the q214 refresh
-    // pattern); on a fresh dir all four must report "wrote"
-    require(IndexStore.commitSegment(s, path, indexTableNames,
-        "segment", 0L, streamTables(base)) == indexTableNames.size,
-      s"fresh streaming index at $path had segments")
+    // writes are independent jobs, overlapped (the q214 refresh pattern)
+    StreamLedger.seed(s, path)(
+      streamTables(docs(s, dir).filter(col("doc_id") % 4 =!= 3)))
     IndexStore.writeStamp(s, path,
       "searchstream1|" + fixtureStamp(s, dir))
     path
   }
 
   /** Commit one arriving doc micro-batch as tagged segment `segId` of
-    * ALL FOUR tables, then DELIBERATELY re-commit every table (the
-    * crash-recovery replay). Returns the WRITTEN-TABLE COUNTS of the two
-    * passes: a correct ledger yields (4, 0) for a fresh segment and
-    * (0, 0) when the segment is already fully committed (the
+    * ALL FOUR tables and replay it ([[IndexStore.Ledger.commit]]): (4, 0)
+    * for a fresh segment, (0, 0) when it is already fully committed (the
     * post-compaction replay q220 pins — tombstone markers must still
     * answer "committed"). A real crash between two tables' first commits
-    * leaves the segment invisible (the cross-table visibility rule
-    * intersects the per-table ledgers) until the replay completes the
+    * leaves the segment invisible until the replay completes the
     * stragglers — at which point it appears atomically. */
   private[graft] def streamIndexCommit(s: SparkSession, path: String,
-      segId: Long, batch: DataFrame): (Int, Int) = {
-    // frames are built (one tokenize, checkpointed) only if some table
-    // still needs this segment
-    lazy val frames = streamTables(batch)
-    def commitAll(): Int = IndexStore.commitSegment(
-      s, path, indexTableNames, "segment", segId, frames)
-    val first = commitAll()
-    (first, commitAll())
-  }
-
-  /** The CROSS-TABLE visible segment set of the streamed search store: a
-    * segment is readable iff committed in EVERY table (no torn
-    * multi-table view survives a crash between two tables' commits). */
-  private[graft] def streamVisibleSegments(s: SparkSession, path: String): Seq[Long] =
-    IndexStore.commonCommittedSegments(
-      s, path, indexTableNames, "segment")
+      segId: Long, batch: DataFrame): ((Int, Int), Map[String, Long]) =
+    StreamLedger.commit(s, path, segId)((streamTables(batch), Map.empty))
 
   /** The streamed store's four tables loaded over an EXPLICIT visible
     * segment set — every reader of the multi-table store goes through
     * this, so the cross-table visibility rule cannot be bypassed. */
   private def streamIndexAt(s: SparkSession, path: String,
       vis: Seq[Long]): SearchIndex = {
-    def rd(t: String) =
-      IndexStore.readSegments(s, path, t, "segment", vis)
+    def rd(t: String) = StreamLedger.read(s, path, t, vis)
     SearchIndex(rd("postings"), rd("doclen"), rd("dict"), () => rd("positions"))
   }
 
@@ -723,9 +706,8 @@ object Search extends QueryModule {
     * compaction) and the rig's replay flag. */
   private[graft] def streamSearchResult(s: SparkSession, dir: String,
       path: String, replayNoop: Boolean): DataFrame = {
-    val vis = streamVisibleSegments(s, path)
-    val nseg = IndexStore
-      .readSegments(s, path, "postings", "segment", vis)
+    val vis = StreamLedger.visible(s, path)
+    val nseg = StreamLedger.read(s, path, "postings", vis)
       .agg(countDistinct(col("segment")).as("n_segments"))
     streamTopK(s, dir, path, vis)
       .crossJoin(broadcast(nseg))
@@ -743,15 +725,6 @@ object Search extends QueryModule {
       "SELECT qid, doc_id, score, rn, CAST(3 AS BIGINT) AS n_segments, " +
         "TRUE AS replay_was_noop FROM (")
   }
-
-  /** Per-table (sort, range) file discipline for the streamed store's
-    * compaction: the same term-sorted layout [[persistIndex]] writes, so
-    * a compacted store's probes stay min/max-prunable seeks. */
-  private[graft] val streamCompactCols: Map[String, Seq[String]] = Map(
-    "postings" -> Seq("tok", "doc_id"),
-    "doclen" -> Seq("doc_id"),
-    "dict" -> Seq("tok"),
-    "positions" -> Seq("tok", "doc_id", "pos"))
 
   /** q220's result: the q164 top-5 from the COMPACTED streamed store,
     * with n_segments audited from the data (must be 1 — every committed
@@ -777,16 +750,14 @@ object Search extends QueryModule {
   /** q221's result: the SAME query set answered at horizon full (all
     * three segments) and horizon 1 (seed + first micro-batch — the index
     * as it stood before batch 2 landed). The horizon bounds the visible
-    * segment set itself (intersected per-table ledgers filtered to
-    * `<= h`), so the pruned segment's directories never enter any
-    * table's file index, and the asof leg's collection statistics
-    * (n_docs/avgdl/df) are exactly the smaller ones the index served
-    * then. */
+    * segment set itself ([[IndexStore.Ledger.asOf]]), so the pruned
+    * segment's directories never enter any table's file index, and the
+    * asof leg's collection statistics (n_docs/avgdl/df) are exactly the
+    * smaller ones the index served then. */
   private[graft] def streamSearchAsOfResult(s: SparkSession, dir: String,
       path: String): DataFrame = {
-    val vis = streamVisibleSegments(s, path)
     def leg(h: Long, name: String): DataFrame =
-      streamTopK(s, dir, path, vis.filter(_ <= h))
+      streamTopK(s, dir, path, StreamLedger.asOf(s, path, h))
         .select(lit(name).as("horizon"), col("qid"), col("doc_id"),
           col("score"), col("rn"))
     leg(Long.MaxValue, "full").unionByName(leg(1L, "asof1"))

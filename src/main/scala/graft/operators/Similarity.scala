@@ -2660,6 +2660,10 @@ object Similarity extends QueryModule {
   private[graft] def seqIvfStreamPath(dir: String): String =
     IndexStore.workPath(seqIvfPath(dir) + "_stream")
 
+  /** The q215 streaming store: one `assign` table, cid-range-sorted. */
+  private[graft] val SeqIvfLedger = IndexStore.Ledger("seg",
+    Seq(IndexStore.LedgerTable("assign", "cid", "vec_id")))
+
   /** Fresh-seed the q215 streaming store, PARTITION-DIR-FIRST: the seed
     * corpus assignment lands as committed segment directory `seg=0` via
     * [[IndexStore.appendSegmentIfAbsent]] — the SAME commit
@@ -2671,51 +2675,40 @@ object Similarity extends QueryModule {
     * the q178 discipline. */
   private[graft] def seedSeqIvfStream(s: SparkSession, dir: String): String = {
     val path = seqIvfStreamPath(dir)
-    IndexStore.remove(s, path)
     val (_, assign) = corpusIvfIndex(s, dir)
-    val committed = IndexStore.appendSegmentIfAbsent(s, path,
-      "assign", "seg", 0L,
+    SeqIvfLedger.seed(s, path)(Seq("assign" ->
       assign.select(col("cid"), col("vec_id"), col("embedding"), col("nrm"))
         .repartitionByRange(col("cid"), col("vec_id"))
-        .sortWithinPartitions(col("cid"), col("vec_id")))
-    require(committed, s"fresh streaming store at $path already had seg=0")
+        .sortWithinPartitions(col("cid"), col("vec_id"))))
     IndexStore.writeStamp(s, path, "seqstream1|" +
       IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet")))
     path
   }
 
   /** Commit one arriving micro-batch into the q215 streaming store as
-    * tagged segment `segId`: coarse-assign against the STORED centroids
-    * (O(batch) — the corpus is never rescanned), land the rows through
-    * the exactly-once ledger, then DELIBERATELY re-commit to exercise
-    * the replay a recovering stream performs after a crash between sink
-    * write and checkpoint advance. Returns (firstCommit, replayCommit) —
-    * a correct ledger yields (true, false): the first call wrote and
-    * markered the segment, the replay saw the marker and touched
-    * nothing. */
+    * tagged segment `segId` — coarse-assigned against the STORED
+    * centroids (O(batch) — the corpus is never rescanned) — and replay
+    * it ([[IndexStore.Ledger.commit]]): (1, 0) for a fresh segment, the
+    * replay a marker-only no-op. */
   private[graft] def seqIvfStreamCommit(s: SparkSession, dir: String, path: String,
-      segId: Long, batch: DataFrame): (Boolean, Boolean) = {
-    val (cents, _) = corpusIvfIndex(s, dir)
-    val rows = coarseAssign(cents, batch)
-      .select(col("cid"), col("vec_id"), col("vemb").as("embedding"), col("nrm"))
-      .repartitionByRange(col("cid"), col("vec_id"))
-      .sortWithinPartitions(col("cid"), col("vec_id"))
-    val first = IndexStore.appendSegmentIfAbsent(
-      s, path, "assign", "seg", segId, rows)
-    val replay = IndexStore.appendSegmentIfAbsent(
-      s, path, "assign", "seg", segId, rows)
-    (first, replay)
-  }
+      segId: Long, batch: DataFrame): ((Int, Int), Map[String, Long]) =
+    SeqIvfLedger.commit(s, path, segId) {
+      val (cents, _) = corpusIvfIndex(s, dir)
+      (Seq("assign" -> coarseAssign(cents, batch)
+        .select(col("cid"), col("vec_id"), col("vemb").as("embedding"), col("nrm"))
+        .repartitionByRange(col("cid"), col("vec_id"))
+        .sortWithinPartitions(col("cid"), col("vec_id"))), Map.empty)
+    }
 
-  /** q215's answer frame, read back MARKER-GATED
-    * ([[IndexStore.readCommitted]] — uncommitted partial
-    * segments are invisible, their files never opened): q195's exact
+  /** q215's answer frame, read back over the committed segment set
+    * (uncommitted partial segments are invisible, their files never
+    * opened): q195's exact
     * probe over the streamed store, plus the two audit columns the
     * oracle pins — n_segments counted FROM the store (3 = seed + one
     * per micro-batch) and the replay flag the rig observed. */
   private[graft] def seqIvfStreamResult(s: SparkSession, path: String,
       replayNoop: Boolean): DataFrame = {
-    val assign = IndexStore.readCommitted(s, path, "assign", "seg")
+    val assign = SeqIvfLedger.read(s, path, "assign", SeqIvfLedger.visible(s, path))
     val nseg = assign.agg(countDistinct(col("seg")).as("n_segments"))
     seqIvfProbeOn(assign, maxSeg = 2)
       .crossJoin(broadcast(nseg))
@@ -2733,24 +2726,21 @@ object Similarity extends QueryModule {
       .withColumnRenamed("replay_was_noop", "replay_after_compact")
 
   /** q218's answer frame: the SAME probe at two horizons of the STREAMED
-    * store, the as-of leg read through
-    * [[IndexStore.readCommittedAsOf]] — the horizon bounds
-    * the explicit partition-dir path list, so segment 2's directory is
-    * never listed into the as-of scan's file index (planning-time
-    * directory skipping, the 100 TB shape of `seg <= h`), while the full
-    * leg reads every committed segment. Both legs share one probe
-    * definition; the q210 fixture property (a segment-2 float-exact 2x
-    * copy at cosine 1 in every probe cluster) guarantees the horizons
-    * differ by construction. */
+    * store, each leg read over [[IndexStore.Ledger.asOf]]'s segment set —
+    * the horizon bounds the explicit partition-dir path list, so segment
+    * 2's directory is never listed into the as-of scan's file index
+    * (planning-time directory skipping, the 100 TB shape of `seg <= h`),
+    * while the full leg reads every committed segment. Both legs share
+    * one probe definition; the q210 fixture property (a segment-2
+    * float-exact 2x copy at cosine 1 in every probe cluster) guarantees
+    * the horizons differ by construction. */
   private[graft] def seqIvfStreamAsOfResult(s: SparkSession, path: String): DataFrame = {
-    def leg(df: DataFrame, name: String): DataFrame =
-      seqIvfProbeOn(df, maxSeg = 2)
+    def leg(h: Long, name: String): DataFrame =
+      seqIvfProbeOn(SeqIvfLedger.read(s, path, "assign", SeqIvfLedger.asOf(s, path, h)),
+          maxSeg = 2)
         .select(lit(name).as("horizon"), col("qid"), col("vid"),
           col("seg"), col("cosim"), col("rn"))
-    leg(IndexStore.readCommitted(s, path, "assign", "seg"), "full")
-      .unionByName(leg(
-        IndexStore.readCommittedAsOf(s, path, "assign", "seg", 1L),
-        "asof1"))
+    leg(Long.MaxValue, "full").unionByName(leg(1L, "asof1"))
   }
 
   /** The q184-style cluster-cover probe over the sequential store,
@@ -4492,19 +4482,7 @@ object Similarity extends QueryModule {
     val path = knnSyncStore(s, dir)
     val meta = IndexStore.readMeta(s, path)
     val edges = IndexStore.read(s, path, "edges")
-    val m = meta("m").toLong
-    val del = table(s, dir, "embeddings")
-      .filter(col("vec_id") % 89 === 17 && col("vec_id") % m =!= 0)
-      .select(col("vec_id")).localCheckpoint()
-    val traces = edges.join(broadcast(del.select(col("vec_id").as("src"))), Seq("src"))
-      .agg(count(lit(1)).as("n"))
-      .unionByName(edges.join(broadcast(del.select(col("vec_id").as("nbr"))), Seq("nbr"))
-        .agg(count(lit(1)).as("n")))
-      .agg(sum(col("n")).as("removed_traces"))
-    val audit = traces
-      .withColumn("n_feed_inserts", lit(meta("n_feed_inserts").toLong))
-      .withColumn("n_feed_deletes", lit(meta("n_feed_deletes").toLong))
-      .withColumn("n_repaired_del", lit(meta("n_repaired_del").toLong))
+    val audit = withKnnFeedCounts(knnErasedTraces(s, dir, edges, meta("m").toLong), meta)
     edges.select(col("src").as("vec_id"), col("nbr"), col("cosim"), col("rn"))
       .crossJoin(broadcast(audit))
   }
@@ -4629,24 +4607,107 @@ object Similarity extends QueryModule {
           .sortWithinPartitions(col("cid"), col("vec_id")))
     })
 
+  /** The two legs of one kNN feed apply over a visible graph state —
+    * `members` (cid, vec_id, embedding, nrm) and their top-3 `lists`
+    * (src, nbr, cosim, rn) — shared by the masked batch sync (q245, which
+    * lands them as seg 1 and seg 2) and the stream (q246, one segment):
+    *  - DELETE leg (the q243 repair, O(affected)): `affected` = surviving
+    *    sources whose list lost a member to `del`; `repaired` = their
+    *    lists re-ranked against the surviving membership.
+    *  - INSERT leg (the q245 entering-edge restatement): `arrivals`
+    *    coarse-assign against the centroids stored at `path`; survivors
+    *    whose top-3 GAINS a cross-edge to an arrival (cosine ≥ their
+    *    post-delete third-best — ties on the rounded cosine resolve by
+    *    nbr id, so >= is over-inclusive, which is harmless: a restated
+    *    list that didn't change masks identical rows — or fewer than 3
+    *    edges) are `restated`; insertion only ADDS candidates, so
+    *    re-windowing (post-delete list ∪ that source's cross-edges) IS
+    *    the updated top-3, and no survivor re-scores its cell.
+    *    `entering` = those lists plus the arrivals' own (ranked against
+    *    survivors ∪ co-arrivals).
+    * The state is pinned here, so a caller may grow the tables it was
+    * read from once this returns. */
+  private final case class KnnLegs(affected: DataFrame, repaired: DataFrame,
+      arrivals: DataFrame, restated: DataFrame, entering: DataFrame)
+
+  private def knnSyncLegs(s: SparkSession, path: String, members: DataFrame,
+      lists: DataFrame, del: DataFrame, ins: DataFrame): KnnLegs = {
+    val vis = lists.select(col("src"), col("nbr"), col("cosim"), col("rn"))
+      .localCheckpoint()
+    val live = members.select(col("cid"), col("vec_id"), col("embedding"), col("nrm"))
+      .join(broadcast(del), Seq("vec_id"), "left_anti").localCheckpoint()
+    val delSrc = broadcast(del.select(col("vec_id").as("src")))
+    val affected = vis.join(delSrc, Seq("src"), "left_anti")
+      .join(broadcast(del.select(col("vec_id").as("nbr"))), Seq("nbr"), "left_semi")
+      .select(col("src")).distinct().localCheckpoint()
+    val repaired = cellGraphFor(live,
+      live.join(broadcast(affected.select(col("src").as("vec_id"))),
+        Seq("vec_id"), "left_semi"))
+    val afterDel = vis.join(delSrc, Seq("src"), "left_anti")
+      .join(broadcast(affected), Seq("src"), "left_anti")
+      .unionByName(repaired)
+    val aa = coarseAssignArrivals(s, path, ins).localCheckpoint()
+    val withArrivals = live.unionByName(aa)
+    val arrivalEdges = cellGraphFor(withArrivals,
+      withArrivals.join(broadcast(aa.select(col("vec_id"))),
+        Seq("vec_id"), "left_semi"))
+    val cross = saltedCellJoin(
+        live.select(col("cid"), col("vec_id").as("src"),
+          col("embedding").as("qemb"), col("nrm").as("nq")),
+        aa.select(col("cid"), col("vec_id").as("nbr"),
+          col("embedding").as("vemb"), col("nrm").as("nv")), "nbr")
+      .withColumn("cosim0", dotExpr / (col("nq") * col("nv")))
+      .select(col("src"), col("nbr"), round(col("cosim0"), 9).as("cosim"))
+      .localCheckpoint()
+    val third = afterDel.groupBy(col("src")).agg(
+      count(lit(1)).as("n_edges"),
+      max(when(col("rn") === 3, col("cosim"))).as("cosim3"))
+    val restated = cross.join(third, Seq("src"), "left")
+      .filter(col("n_edges").isNull || col("n_edges") < 3 ||
+        col("cosim") >= col("cosim3"))
+      .select(col("src")).distinct().localCheckpoint()
+    val w = Window.partitionBy(col("src"))
+      .orderBy(col("cosim").desc, col("nbr"))
+    val lists2 = afterDel.join(broadcast(restated), Seq("src"), "left_semi")
+      .select(col("src"), col("nbr"), col("cosim"))
+      .unionByName(cross.join(broadcast(restated), Seq("src"), "left_semi")
+        .select(col("src"), col("nbr"), col("cosim")))
+      .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
+      .select(col("src"), col("nbr"), col("cosim"), col("rn"))
+    KnnLegs(affected, repaired, aa, restated, lists2.unionByName(arrivalEdges))
+  }
+
+  /** The erased-id audit every served kNN sync carries: edge rows of the
+    * feed's deleted ids on either side (`removed_traces`, must be 0). */
+  private def knnErasedTraces(s: SparkSession, dir: String, edges: DataFrame,
+      m: Long): DataFrame = {
+    val del = table(s, dir, "embeddings")
+      .filter(col("vec_id") % 89 === 17 && col("vec_id") % m =!= 0)
+      .select(col("vec_id")).localCheckpoint()
+    edges.join(broadcast(del.select(col("vec_id").as("src"))), Seq("src"))
+      .agg(count(lit(1)).as("n"))
+      .unionByName(edges.join(broadcast(del.select(col("vec_id").as("nbr"))), Seq("nbr"))
+        .agg(count(lit(1)).as("n")))
+      .agg(sum(col("n")).as("removed_traces"))
+  }
+
+  /** `audit` plus the sync's feed counts from store meta. */
+  private def withKnnFeedCounts(audit: DataFrame, meta: Map[String, String]): DataFrame =
+    Seq("n_feed_inserts", "n_feed_deletes", "n_repaired_del")
+      .foldLeft(audit)((a, k) => a.withColumn(k, lit(meta(k).toLong)))
+
   /** Build-if-stale the mask-synced kNN-graph store: the same lake and
     * v1→v3 feed as q244, with every leg's WRITE delta-sized — the
     * sidecar treatment the other four families got in q231–q234, so the
-    * graph store no longer pays q244's O(edges) rewrite per sync:
+    * graph store no longer pays q244's O(edges) rewrite per sync. Both
+    * legs ([[knnSyncLegs]]) run over the seed state:
     *  - DELETE leg: deleted ids land in the `deletes` mask (O(delta)
-    *    bytes — hides their assign rows and their edge lists); sources
-    *    whose top-3 lost a member land in `mask_stale` (seq 0) and their
-    *    REPAIRED lists append as seg 1 — O(affected) rows appended,
-    *    nothing rewritten.
-    *  - INSERT leg: arrivals coarse-assign against the STORED centroids
-    *    and append (assign seg 2) with their own lists (edges seg 2,
-    *    ranked against cell survivors ∪ co-arrivals); survivors whose
-    *    top-3 GAINS a cross-edge (cosine ≥ their visible third-best, the
-    *    over-inclusive-but-safe gate; fewer than 3 edges always
-    *    qualifies) land in `mask_stale` (seq 1) with their re-windowed
-    *    list appended at seg 2. Insertion only ADDS candidates, so
-    *    re-windowing (visible list ∪ that source's cross-edges) IS the
-    *    updated top-3 — no survivor re-scores its cell.
+    *    bytes — hides their assign rows and their edge lists); affected
+    *    sources land in `mask_stale` (seq 0) and their repaired lists
+    *    append as seg 1 — O(affected) rows appended, nothing rewritten.
+    *  - INSERT leg: arrivals append (assign seg 2) with their own lists;
+    *    restated survivors land in `mask_stale` (seq 1) with their
+    *    re-windowed lists appended at seg 2.
     * The served graph is bit-equal to q244's physically-synced one (the
     * oracle is q244's chain; MaskFoldSpec pins fold ≡ physical), and the
     * auto-fold policy is checked at apply time like every masked sync
@@ -4664,74 +4725,19 @@ object Similarity extends QueryModule {
           .repartitionByRange(col("cid"), col("vec_id"))
           .sortWithinPartitions(col("cid"), col("vec_id")),
         "edges" -> cellGraph(assign0).withColumn("seg", lit(0L))))
-      def rd(t: String) = IndexStore.read(s, idxPath, t)
-      // ---- DELETE leg: O(delta) mask bytes + O(affected) appended rows
       val del = f.del.localCheckpoint()
-      IndexStore.appendDeleteMask(s, idxPath,
-        del.withColumn("seq", lit(0L)))
-      val edges0 = rd("edges")
-      val affected = edges0
-        .join(broadcast(del.select(col("vec_id").as("src"))), Seq("src"), "left_anti")
-        .join(broadcast(del.select(col("vec_id").as("nbr"))), Seq("nbr"), "left_semi")
-        .select(col("src")).distinct().localCheckpoint()
+      val legs = knnSyncLegs(s, idxPath, IndexStore.read(s, idxPath, "assign"),
+        IndexStore.read(s, idxPath, "edges"), del, f.inserts)
+      // ---- DELETE leg: O(delta) mask bytes + O(affected) appended rows
+      IndexStore.appendDeleteMask(s, idxPath, del.withColumn("seq", lit(0L)))
       IndexStore.append(s, idxPath, KnnStaleMaskTable,
-        affected.withColumn("seq", lit(0L)))
-      // masked live membership, pinned BEFORE arrivals append to assign
-      val live = IndexStore.maskedRead(rd("assign"),
-          del.withColumn("seq", lit(0L)), "vec_id", "vec_id", "seg")
-        .select(col("cid"), col("vec_id"), col("embedding"), col("nrm"))
-        .localCheckpoint()
-      val repaired = cellGraphFor(live,
-        live.join(broadcast(affected.select(col("src").as("vec_id"))),
-          Seq("vec_id"), "left_semi"))
-      IndexStore.append(s, idxPath, "edges",
-        repaired.withColumn("seg", lit(1L)).localCheckpoint())
+        legs.affected.withColumn("seq", lit(0L)))
+      IndexStore.append(s, idxPath, "edges", legs.repaired.withColumn("seg", lit(1L)))
       // ---- INSERT leg: appends + the entering-edge restatements
-      val aa = coarseAssignArrivals(s, idxPath, f.inserts).localCheckpoint()
-      IndexStore.append(s, idxPath, "assign",
-        aa.withColumn("seg", lit(2L)))
-      val withArrivals = live.unionByName(aa)
-      val arrivalEdges = cellGraphFor(withArrivals,
-        withArrivals.join(broadcast(aa.select(col("vec_id"))),
-          Seq("vec_id"), "left_semi"))
-      val cross = saltedCellJoin(
-          live.select(col("cid"), col("vec_id").as("src"),
-            col("embedding").as("qemb"), col("nrm").as("nq")),
-          aa.select(col("cid"), col("vec_id").as("nbr"),
-            col("embedding").as("vemb"), col("nrm").as("nv")), "nbr")
-        .withColumn("cosim0", dotExpr / (col("nq") * col("nv")))
-        .select(col("src"), col("nbr"), round(col("cosim0"), 9).as("cosim"))
-        .localCheckpoint()
-      // the post-delete-leg visible lists (seg 0 survivors + seg 1
-      // repairs), pinned before the edges table grows again
-      val vis = knnLiveEdges(s, idxPath,
-          IndexStore.readDeleteMaskOrEmpty(s, idxPath, "vec_id"))
-        .select(col("src"), col("nbr"), col("cosim"), col("rn"))
-        .localCheckpoint()
-      // a cross-edge ENTERS a survivor's top-3 iff it beats-or-ties the
-      // visible third-best (ties on the rounded cosine are resolved by
-      // nbr id, so >= is over-inclusive — harmless: a restated list that
-      // didn't change masks identical rows) or the list has slots free
-      val third = vis.groupBy(col("src")).agg(
-        count(lit(1)).as("n_edges"),
-        max(when(col("rn") === 3, col("cosim"))).as("cosim3"))
-      val affected2 = cross.join(third, Seq("src"), "left")
-        .filter(col("n_edges").isNull || col("n_edges") < 3 ||
-          col("cosim") >= col("cosim3"))
-        .select(col("src")).distinct().localCheckpoint()
+      IndexStore.append(s, idxPath, "assign", legs.arrivals.withColumn("seg", lit(2L)))
       IndexStore.append(s, idxPath, KnnStaleMaskTable,
-        affected2.withColumn("seq", lit(1L)))
-      val w = Window.partitionBy(col("src"))
-        .orderBy(col("cosim").desc, col("nbr"))
-      val restated = vis.join(broadcast(affected2), Seq("src"), "left_semi")
-        .select(col("src"), col("nbr"), col("cosim"))
-        .unionByName(cross.join(broadcast(affected2), Seq("src"), "left_semi")
-          .select(col("src"), col("nbr"), col("cosim")))
-        .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
-        .select(col("src"), col("nbr"), col("cosim"), col("rn"))
-      IndexStore.append(s, idxPath, "edges",
-        restated.unionByName(arrivalEdges)
-          .withColumn("seg", lit(2L)).localCheckpoint())
+        legs.restated.withColumn("seq", lit(1L)))
+      IndexStore.append(s, idxPath, "edges", legs.entering.withColumn("seg", lit(2L)))
       // the auto-fold policy, same gate as every masked sync: ~1%
       // deleted sits below the 0.1 default, so the masks stay
       val folded = IndexStore.autoFoldIfNeeded(
@@ -4741,8 +4747,8 @@ object Similarity extends QueryModule {
         "m" -> m.toString,
         "n_feed_inserts" -> f.inserts.count().toString,
         "n_feed_deletes" -> del.count().toString,
-        "n_repaired_del" -> affected.count().toString,
-        "n_restated" -> affected2.count().toString,
+        "n_repaired_del" -> legs.affected.count().toString,
+        "n_restated" -> legs.restated.count().toString,
         "auto_folded" -> folded.toString))
     }
     idxPath
@@ -4760,20 +4766,9 @@ object Similarity extends QueryModule {
     val delMask = IndexStore.readDeleteMaskOrEmpty(s, path, "vec_id")
       .localCheckpoint()
     val edges = knnLiveEdges(s, path, delMask)
-    val m = meta("m").toLong
-    val del = table(s, dir, "embeddings")
-      .filter(col("vec_id") % 89 === 17 && col("vec_id") % m =!= 0)
-      .select(col("vec_id")).localCheckpoint()
-    val traces = edges.join(broadcast(del.select(col("vec_id").as("src"))), Seq("src"))
-      .agg(count(lit(1)).as("n"))
-      .unionByName(edges.join(broadcast(del.select(col("vec_id").as("nbr"))), Seq("nbr"))
-        .agg(count(lit(1)).as("n")))
-      .agg(sum(col("n")).as("removed_traces"))
-    val audit = traces
-      .crossJoin(broadcast(delMask.agg(count(lit(1)).as("n_mask_rows"))))
-      .withColumn("n_feed_inserts", lit(meta("n_feed_inserts").toLong))
-      .withColumn("n_feed_deletes", lit(meta("n_feed_deletes").toLong))
-      .withColumn("n_repaired_del", lit(meta("n_repaired_del").toLong))
+    val audit = withKnnFeedCounts(
+      knnErasedTraces(s, dir, edges, meta("m").toLong)
+        .crossJoin(broadcast(delMask.agg(count(lit(1)).as("n_mask_rows")))), meta)
     edges.select(col("src").as("vec_id"), col("nbr"), col("cosim"), col("rn"))
       .crossJoin(broadcast(audit))
   }
@@ -4794,12 +4789,19 @@ object Similarity extends QueryModule {
     IndexStore.workPath("target/tmp/knn_stream_" + IndexStore.dirTag(dir))
 
   /** The q246 store's four ledgered tables. `deletes`/`stale` are the
-    * q245 masks as COMMITTED SEGMENTS: a mask row in segment N hides
-    * matching rows of strictly older segments (`row.segment < mask
-    * .segment` — the partition value IS the seq, so the Iceberg scoping
-    * rule needs no extra column), and the cross-table visibility rule
+    * q245 masks as COMMITTED SEGMENTS — a mask row in segment N hides the
+    * matching rows of strictly older segments (the partition value IS the
+    * seq, so the Iceberg scoping rule needs no extra column): `deletes`
+    * hides a deleted vector's edge lists and membership, `stale` a
+    * restated source's superseded list. The cross-table visibility rule
     * makes each micro-batch's masks + appended lists appear atomically. */
-  private[graft] val KnnStreamTables = Seq("edges", "assign", "deletes", "stale")
+  private[graft] val KnnStreamLedger = IndexStore.Ledger("segment", Seq(
+      IndexStore.LedgerTable("edges", Seq("src", "rn"), Seq("src")),
+      IndexStore.LedgerTable("assign", "cid", "vec_id"),
+      IndexStore.LedgerTable("deletes", "vec_id"),
+      IndexStore.LedgerTable("stale", "src")),
+    masks = Seq(("deletes", "edges", "src", "vec_id"), ("stale", "edges", "src", "src"),
+      ("deletes", "assign", "vec_id", "vec_id")))
 
   /** Fresh-seed the streaming graph store: centroids land as a flat
     * table (quantizer geometry, never segmented), and all four ledgered
@@ -4809,17 +4811,14 @@ object Similarity extends QueryModule {
   private[graft] def seedKnnStream(s: SparkSession, dir: String,
       base: DataFrame): (String, Long) = {
     val path = knnStreamPath(dir)
-    IndexStore.remove(s, path)
     val (cents0, assign0, m) = buildIvfIndex(base)
     val assignSeed = assign0.localCheckpoint()
-    val emptyDel = assignSeed.select(col("vec_id")).limit(0)
-    val emptyStale = assignSeed.select(col("vec_id").as("src")).limit(0)
-    require(IndexStore.commitSegment(s, path, KnnStreamTables, "segment", 0L,
-        Seq("edges" -> cellGraph(assignSeed),
-          "assign" -> assignSeed.repartitionByRange(col("cid"), col("vec_id"))
-            .sortWithinPartitions(col("cid"), col("vec_id")),
-          "deletes" -> emptyDel, "stale" -> emptyStale)) == KnnStreamTables.size,
-      s"fresh streaming graph store at $path had segments")
+    KnnStreamLedger.seed(s, path)(Seq(
+      "edges" -> cellGraph(assignSeed),
+      "assign" -> assignSeed.repartitionByRange(col("cid"), col("vec_id"))
+        .sortWithinPartitions(col("cid"), col("vec_id")),
+      "deletes" -> assignSeed.select(col("vec_id")).limit(0),
+      "stale" -> assignSeed.select(col("vec_id").as("src")).limit(0)))
     // the stored centroid table is the arrivals' coarse-assign target,
     // the same role as in every sync store
     IndexStore.replaceTable(s, path, "centroids",
@@ -4830,116 +4829,31 @@ object Similarity extends QueryModule {
     (path, m)
   }
 
-  /** The cross-table visible segment set of the streaming graph store. */
-  private[graft] def knnStreamVisible(s: SparkSession, path: String): Seq[Long] =
-    IndexStore.commonCommittedSegments(
-      s, path, KnnStreamTables, "segment")
-
-  /** The masked LIVE view over an explicit visible segment set:
-    * (edges, membership). Masks scope `row.segment < mask.segment` —
-    * strictly older, so a segment's own appends are never hidden by its
-    * own masks. */
-  private[graft] def knnStreamView(s: SparkSession, path: String,
-      vis: Seq[Long]): (DataFrame, DataFrame) = {
-    def rd(t: String) =
-      IndexStore.readSegments(s, path, t, "segment", vis)
-    val del = rd("deletes").localCheckpoint()
-    val stale = rd("stale").localCheckpoint()
-    val e0 = rd("edges")
-    val e1 = e0.join(broadcast(del),
-      e0("src") === del("vec_id") && e0("segment") < del("segment"), "left_anti")
-    val edges = e1.join(broadcast(stale),
-      e1("src") === stale("src") && e1("segment") < stale("segment"), "left_anti")
-    val a0 = rd("assign")
-    val members = a0.join(broadcast(del),
-        a0("vec_id") === del("vec_id") && a0("segment") < del("segment"), "left_anti")
-      .select(col("cid"), col("vec_id"), col("embedding"), col("nrm"))
-    (edges, members)
-  }
-
-  /** Commit one feed micro-batch as segment `segId` of ALL FOUR tables,
-    * then DELIBERATELY re-commit (the crash-recovery replay). The
-    * frames derive from the visible state of segments < segId — prior
-    * committed segments never change, so a replay recomputes identical
-    * frames and the ledger makes it a metadata no-op: returns the
-    * written-table counts of the two passes ((4, 0) for a fresh
-    * segment) plus the batch's (n_inserts, n_deletes, n_repaired)
-    * audit. Delete rows ride the q243/q245 O(affected) repair; insert
-    * rows the q245 entering-edge restatement — streaming == batch leg
-    * for leg. */
+  /** Commit one feed micro-batch as segment `segId` of ALL FOUR tables
+    * and replay it ([[IndexStore.Ledger.commit]]). The frames are the
+    * [[knnSyncLegs]] over the visible state of segments < segId — prior
+    * committed segments never change, so a replay would recompute
+    * identical frames; the ledger makes it a metadata no-op instead.
+    * Returns the written-table counts of the two passes ((4, 0) for a
+    * fresh segment) plus the batch's n_feed_inserts / n_feed_deletes /
+    * n_repaired_del audit. */
   private[graft] def knnStreamCommit(s: SparkSession, path: String, segId: Long,
-      batch: DataFrame): ((Int, Int), (Long, Long, Long)) = {
-    val del = batch.filter(col("change") === "delete")
-      .select(col("vec_id")).localCheckpoint()
-    val ins = batch.filter(col("change") === "insert")
-      .select(col("vec_id"), col("embedding")).localCheckpoint()
-    // the delete leg's repair size, captured when the frames build (the
-    // first commit always builds them in this rig — the store is
-    // fresh-seeded per process, so no segment pre-exists)
-    var nRepaired = 0L
-    lazy val frames: Seq[(String, DataFrame)] = {
-      val vis = knnStreamVisible(s, path).filter(_ < segId)
-      val (visEdges0, members0) = knnStreamView(s, path, vis)
-      val visEdges = visEdges0
-        .select(col("src"), col("nbr"), col("cosim"), col("rn")).localCheckpoint()
-      // ---- delete leg (the q243 repair, O(affected))
-      val live = members0.join(broadcast(del), Seq("vec_id"), "left_anti")
-        .localCheckpoint()
-      val affected = visEdges
-        .join(broadcast(del.select(col("vec_id").as("src"))), Seq("src"), "left_anti")
-        .join(broadcast(del.select(col("vec_id").as("nbr"))), Seq("nbr"), "left_semi")
-        .select(col("src")).distinct().localCheckpoint()
-      nRepaired = affected.count()
-      val repaired = cellGraphFor(live,
-        live.join(broadcast(affected.select(col("src").as("vec_id"))),
-          Seq("vec_id"), "left_semi"))
-      // the post-delete visible lists this batch's insert leg ranks against
-      val visAfterDel = visEdges
-        .join(broadcast(del.select(col("vec_id").as("src"))), Seq("src"), "left_anti")
-        .join(broadcast(affected), Seq("src"), "left_anti")
-        .unionByName(repaired)
-      // ---- insert leg (the q245 entering-edge restatement)
-      val aa = coarseAssignArrivals(s, path, ins).localCheckpoint()
-      val withArrivals = live.unionByName(aa)
-      val arrivalEdges = cellGraphFor(withArrivals,
-        withArrivals.join(broadcast(aa.select(col("vec_id"))),
-          Seq("vec_id"), "left_semi"))
-      val cross = saltedCellJoin(
-          live.select(col("cid"), col("vec_id").as("src"),
-            col("embedding").as("qemb"), col("nrm").as("nq")),
-          aa.select(col("cid"), col("vec_id").as("nbr"),
-            col("embedding").as("vemb"), col("nrm").as("nv")), "nbr")
-        .withColumn("cosim0", dotExpr / (col("nq") * col("nv")))
-        .select(col("src"), col("nbr"), round(col("cosim0"), 9).as("cosim"))
-        .localCheckpoint()
-      val third = visAfterDel.groupBy(col("src")).agg(
-        count(lit(1)).as("n_edges"),
-        max(when(col("rn") === 3, col("cosim"))).as("cosim3"))
-      val affected2 = cross.join(third, Seq("src"), "left")
-        .filter(col("n_edges").isNull || col("n_edges") < 3 ||
-          col("cosim") >= col("cosim3"))
-        .select(col("src")).distinct().localCheckpoint()
-      val w = Window.partitionBy(col("src"))
-        .orderBy(col("cosim").desc, col("nbr"))
-      val restated = visAfterDel.join(broadcast(affected2), Seq("src"), "left_semi")
-        .select(col("src"), col("nbr"), col("cosim"))
-        .unionByName(cross.join(broadcast(affected2), Seq("src"), "left_semi")
-          .select(col("src"), col("nbr"), col("cosim")))
-        .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
-        .select(col("src"), col("nbr"), col("cosim"), col("rn"))
-      Seq(
-        "edges" -> repaired.unionByName(restated).unionByName(arrivalEdges)
-          .localCheckpoint(),
-        "assign" -> aa,
-        "deletes" -> del,
-        "stale" -> affected.unionByName(affected2.select(col("src")))
-          .localCheckpoint())
+      batch: DataFrame): ((Int, Int), Map[String, Long]) =
+    KnnStreamLedger.commit(s, path, segId) {
+      val del = batch.filter(col("change") === "delete")
+        .select(col("vec_id")).localCheckpoint()
+      val ins = batch.filter(col("change") === "insert")
+        .select(col("vec_id"), col("embedding")).localCheckpoint()
+      val v = KnnStreamLedger.view(s, path,
+        KnnStreamLedger.visible(s, path).filter(_ < segId))
+      val legs = knnSyncLegs(s, path, v("assign"), v("edges"), del, ins)
+      (Seq("edges" -> legs.repaired.unionByName(legs.entering),
+          "assign" -> legs.arrivals,
+          "deletes" -> del,
+          "stale" -> legs.affected.unionByName(legs.restated)),
+        Map("n_feed_inserts" -> ins.count(), "n_feed_deletes" -> del.count(),
+          "n_repaired_del" -> legs.affected.count()))
     }
-    def commitAll(): Int = IndexStore.commitSegment(
-      s, path, KnnStreamTables, "segment", segId, frames)
-    val first = commitAll()
-    ((first, commitAll()), (ins.count(), del.count(), nRepaired))
-  }
 
   /** q246's answer frame: q244's rows served THROUGH the ledgered masks
     * (cross-table visible segments only), with q244's audits plus the
@@ -4947,22 +4861,8 @@ object Similarity extends QueryModule {
   private[graft] def knnStreamResult(s: SparkSession, dir: String, path: String,
       replayNoop: Boolean): DataFrame = {
     val meta = IndexStore.readMeta(s, path)
-    val vis = knnStreamVisible(s, path)
-    val (edges0, _) = knnStreamView(s, path, vis)
-    val edges = edges0.select(col("src"), col("nbr"), col("cosim"), col("rn"))
-    val m = meta("m").toLong
-    val del = table(s, dir, "embeddings")
-      .filter(col("vec_id") % 89 === 17 && col("vec_id") % m =!= 0)
-      .select(col("vec_id")).localCheckpoint()
-    val traces = edges.join(broadcast(del.select(col("vec_id").as("src"))), Seq("src"))
-      .agg(count(lit(1)).as("n"))
-      .unionByName(edges.join(broadcast(del.select(col("vec_id").as("nbr"))), Seq("nbr"))
-        .agg(count(lit(1)).as("n")))
-      .agg(sum(col("n")).as("removed_traces"))
-    val audit = traces
-      .withColumn("n_feed_inserts", lit(meta("n_feed_inserts").toLong))
-      .withColumn("n_feed_deletes", lit(meta("n_feed_deletes").toLong))
-      .withColumn("n_repaired_del", lit(meta("n_repaired_del").toLong))
+    val edges = KnnStreamLedger.view(s, path, KnnStreamLedger.visible(s, path))("edges")
+    val audit = withKnnFeedCounts(knnErasedTraces(s, dir, edges, meta("m").toLong), meta)
       .withColumn("replay_was_noop", lit(replayNoop))
     edges.select(col("src").as("vec_id"), col("nbr"), col("cosim"), col("rn"))
       .crossJoin(broadcast(audit))
@@ -4978,100 +4878,23 @@ object Similarity extends QueryModule {
     * the streamed store — `full` (every committed segment: the current
     * synced graph) and `asof1` (segments ≤ 1: the graph as it stood
     * after the delete batch, before the arrivals landed). The horizon
-    * bounds the visible segment set itself (intersected per-table
-    * ledgers filtered to ≤ h), so segment 2's directories never enter
-    * any table's file index — directory-level pruning, the q218/q221
-    * shape for the fifth family. The asof1 leg is bit-equal to a
-    * rebuild over the filtered base pairs (the q243 repair proof), the
-    * full leg to the q244 rebuild — both pinned by the oracle. */
+    * bounds the visible segment set itself ([[IndexStore.Ledger.asOf]],
+    * which refuses horizons a compaction folded away), so segment 2's
+    * directories never enter any table's file index — directory-level
+    * pruning, the q218/q221 shape for the fifth family. The asof1 leg is
+    * bit-equal to a rebuild over the filtered base pairs (the q243 repair
+    * proof), the full leg to the q244 rebuild — both pinned by the
+    * oracle. */
   private[graft] def knnStreamAsOfResult(s: SparkSession, path: String): DataFrame = {
-    // a compacted store forfeits horizons below its compaction point
-    // (fold-on-compact rewrote those segments' history into the base) —
-    // serving them would silently answer with POST-fold rows; refuse.
-    // One meta read for both legs: the point is a per-store constant.
-    val through = knnStreamCompactedThrough(s, path)
-    def leg(h: Long, name: String): DataFrame = {
-      require(h >= through,
-        s"as-of horizon $h is below the store's compaction point $through " +
-          s"at $path — folded history is not servable")
-      val vis = knnStreamVisible(s, path).filter(_ <= h)
-      val (edges, _) = knnStreamView(s, path, vis)
-      edges.select(lit(name).as("horizon"), col("src").as("vec_id"),
-        col("nbr"), col("cosim"), col("rn"))
-    }
+    def leg(h: Long, name: String): DataFrame =
+      KnnStreamLedger.view(s, path, KnnStreamLedger.asOf(s, path, h))("edges")
+        .select(lit(name).as("horizon"), col("src").as("vec_id"),
+          col("nbr"), col("cosim"), col("rn"))
     leg(Long.MaxValue, "full").unionByName(leg(1L, "asof1"))
   }
 
-  /** The compaction point recorded by [[compactKnnStream]] — horizons
-    * below it are forfeited. Absent key (a never-compacted store) means
-    * every horizon is servable. */
-  private[graft] def knnStreamCompactedThrough(s: SparkSession, path: String): Long =
-    IndexStore.readMeta(s, path)
-      .get("compacted_through").map(_.toLong).getOrElse(Long.MinValue)
-
   // ---- q249: ledger-aware MASK-FOLDING compaction of the streamed
-  // kNN-graph store — q217/q220's maintenance op carried to the one
-  // streamed store that owns segment-scoped mask sidecars ----
-
-  /** Compact all four ledgered tables of the q246 store at `path` over
-    * the joint visible set, FOLDING the masks into the data tables as
-    * the rows collapse (the compaction IS a mask fold — the base segment
-    * afterwards holds exactly the pre-compaction visible view and the
-    * mask tables are empty). Returns the compaction point (max visible
-    * segment id).
-    *
-    * Two invariants make every crash window of this multi-table rewrite
-    * serve the SAME view (each single-table swap is itself atomic):
-    *  - folded rows park under the visible set's MAX id, not its min —
-    *    a not-yet-compacted `stale` mask at segment N would re-hide a
-    *    restated list that the fold collapsed to a segment < N (the mask
-    *    and its restatement were born in the SAME segment; fold-at-max
-    *    keeps every already-applied mask strictly-not-newer than every
-    *    folded row, so raw masks over folded data tables match nothing);
-    *  - data tables compact FIRST, mask tables LAST — the reverse order
-    *    has a window where raw un-folded edges serve with their masks
-    *    already emptied, leaking deleted rows. With this order every
-    *    intermediate state reads bit-identical to the pre-compaction
-    *    view, which CrashRecoverySpec pins at the worst window (data
-    *    folded, masks still raw). */
-  private[graft] def compactKnnStream(s: SparkSession, path: String,
-      masksToo: Boolean = true): Long = {
-    val vis = knnStreamVisible(s, path)
-    val into = vis.max
-    val (edges, members) = knnStreamView(s, path, vis)
-    val foldedEdges = edges
-      .select(col("src"), col("nbr"), col("cosim"), col("rn")).localCheckpoint()
-    val foldedAssign = members.localCheckpoint()
-    IndexStore.inParallel(Seq(
-      () => IndexStore.compactSegmentLedger(s, path, "edges",
-        "segment", sortCols = Seq("src", "rn"), rangeCols = Seq("src"),
-        onlySegs = Some(vis), foldInto = Some(foldedEdges),
-        intoSeg = Some(into)),
-      () => IndexStore.compactSegmentLedger(s, path, "assign",
-        "segment", sortCols = Seq("cid", "vec_id"),
-        rangeCols = Seq("cid", "vec_id"), onlySegs = Some(vis),
-        foldInto = Some(foldedAssign), intoSeg = Some(into))))
-    // masksToo=false stops at the worst crash window (data tables folded,
-    // masks still raw) — CrashRecoverySpec's hook; production always
-    // completes, and an interrupted run re-enters idempotently
-    if (masksToo)
-      IndexStore.inParallel(Seq(
-        () => IndexStore.compactSegmentLedger(s, path, "deletes",
-          "segment", sortCols = Seq("vec_id"), rangeCols = Seq("vec_id"),
-          onlySegs = Some(vis),
-          foldInto = Some(IndexStore
-            .readSegments(s, path, "deletes", "segment", vis)
-            .drop("segment").limit(0).localCheckpoint()),
-          intoSeg = Some(into)),
-        () => IndexStore.compactSegmentLedger(s, path, "stale",
-          "segment", sortCols = Seq("src"), rangeCols = Seq("src"),
-          onlySegs = Some(vis),
-          foldInto = Some(IndexStore
-            .readSegments(s, path, "stale", "segment", vis)
-            .drop("segment").limit(0).localCheckpoint()),
-          intoSeg = Some(into))))
-    into
-  }
+  // kNN-graph store ([[IndexStore.Ledger.compact]]) ----
 
   /** q249's answer frame: q246's served rows read from the COMPACTED
     * store (fold-on-compact must be invisible to the reader — the oracle
@@ -5083,23 +4906,14 @@ object Similarity extends QueryModule {
     * `masks_folded` (both mask tables serve zero visible rows). */
   private[graft] def knnStreamCompactResult(s: SparkSession, path: String,
       replayNoop: Boolean): DataFrame = {
-    val vis = knnStreamVisible(s, path)
-    val (edges0, _) = knnStreamView(s, path, vis)
-    val edges = edges0.select(col("src").as("vec_id"),
+    val vis = KnnStreamLedger.visible(s, path)
+    val edges = KnnStreamLedger.view(s, path, vis)("edges").select(col("src").as("vec_id"),
       col("nbr"), col("cosim"), col("rn"))
-    val hp = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(path), "edges")
-    val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val nDataSegs = fs.listStatus(hp).count { st =>
-      st.isDirectory && st.getPath.getName.startsWith("segment=") &&
-        fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_COMMITTED")) &&
-        fs.listStatus(st.getPath).exists(_.getPath.getName.endsWith(".parquet"))
-    }.toLong
     val nMaskRows = Seq("deletes", "stale").map(t =>
-      IndexStore.readSegments(s, path, t, "segment", vis).count()).sum
+      KnnStreamLedger.read(s, path, t, vis).count()).sum
     val audit = s.range(1).select(
       lit(replayNoop).as("replay_after_compact"),
-      lit(nDataSegs).as("n_data_segments"),
+      lit(KnnStreamLedger.dataSegments(s, path, "edges").size.toLong).as("n_data_segments"),
       lit(nMaskRows == 0L).as("masks_folded"))
     edges.crossJoin(broadcast(audit))
   }

@@ -895,6 +895,144 @@ object IndexStore {
     }
   }
 
+  /** One table of a [[Ledger]] and the file discipline its compaction
+    * re-lays it in: rows range-partitioned on `rangeCols`, sorted within
+    * files on `sortCols`. */
+  final case class LedgerTable(name: String, sortCols: Seq[String], rangeCols: Seq[String])
+  object LedgerTable {
+    def apply(name: String, cols: String*): LedgerTable = LedgerTable(name, cols, cols)
+  }
+
+  /** The meta key [[Ledger.compact]] records its compaction point under. */
+  private val CompactedThrough = "compacted_through"
+
+  /** A STREAMED tagged-segment store, described once: its partition
+    * column, its ledgered tables ([[appendSegmentIfAbsent]] layout), and
+    * its mask rules — each `(mask table, target table, key, mask key)`.
+    * A mask row in segment N hides the target rows of STRICTLY older
+    * segments whose `key` matches its `maskKey`: the partition value is
+    * the mask's seq, applied through [[maskedRead]] as `seq = N - 1`, so
+    * `row < N` is the one masked-read rule every store serves (a batch's
+    * own appends are never hidden by its own masks). `fold` overrides the
+    * folded frame of a data table at compaction (the mix-admission count
+    * ledger folds to its per-source sum). Every streamed serving store —
+    * IVF (q215), search (q219), the kNN graph (q246), mix-admission
+    * (q266) — is one such value; visibility, the masked view, the
+    * exactly-once commit, the fold-on-compact and the as-of guard are
+    * written here once. */
+  final case class Ledger(partCol: String, tables: Seq[LedgerTable],
+      masks: Seq[(String, String, String, String)] = Nil,
+      fold: Map[String, DataFrame => DataFrame] = Map.empty) {
+    val names: Seq[String] = tables.map(_.name)
+    private val maskTables = masks.map(_._1).distinct
+    val dataTables: Seq[String] = names.filterNot(maskTables.contains)
+
+    /** The cross-table committed set: a segment is visible iff committed
+      * in EVERY table, so a crash between two tables' commits leaves it
+      * invisible everywhere until the replay completes it. */
+    def visible(s: SparkSession, path: String): Seq[Long] =
+      commonCommittedSegments(s, path, names, partCol)
+
+    /** One table over an explicit segment set, `partCol` kept. */
+    def read(s: SparkSession, path: String, table: String, vis: Seq[Long]): DataFrame =
+      readSegments(s, path, table, partCol, vis)
+
+    /** Every data table over `vis`, masks applied, `partCol` dropped. The
+      * mask tables are pinned once (kilobytes, broadcast to each target). */
+    def view(s: SparkSession, path: String, vis: Seq[Long]): Map[String, DataFrame] = {
+      import org.apache.spark.sql.functions.col
+      val pinned = maskTables.map(m => m ->
+        read(s, path, m, vis).withColumn("seq", col(partCol) - 1).localCheckpoint()).toMap
+      dataTables.map { t =>
+        t -> masks.filter(_._2 == t).foldLeft(read(s, path, t, vis)) {
+          case (df, (m, _, key, maskKey)) => maskedRead(df, pinned(m), key, maskKey, partCol)
+        }.drop(partCol)
+      }.toMap
+    }
+
+    /** Fresh-seed the store at `path`: remove whatever is there and
+      * commit `frames` as segment 0 of every table. */
+    def seed(s: SparkSession, path: String)(frames: => Seq[(String, DataFrame)]): Unit = {
+      remove(s, path)
+      require(commitSegment(s, path, names, partCol, 0L, frames) == names.size,
+        s"fresh ledgered store at $path had segments")
+    }
+
+    /** Commit segment `segId` through [[commitSegment]], then DELIBERATELY
+      * replay it (the retry a recovering stream performs after a crash
+      * between sink write and checkpoint advance). `build` returns the
+      * segment's frames and its audit counts; it runs only when some table
+      * still lacks the segment, so a replay is marker stats alone — no
+      * Spark job — and reports no counts. Returns the written-table counts
+      * of the two passes ((tables, 0) for a fresh segment, (0, 0) for a
+      * committed one) and the counts. */
+    def commit(s: SparkSession, path: String, segId: Long)(
+        build: => (Seq[(String, DataFrame)], Map[String, Long])): ((Int, Int), Map[String, Long]) = {
+      var counts = Map.empty[String, Long]
+      lazy val frames = { val (f, c) = build; counts = c; f }
+      def once(): Int = commitSegment(s, path, names, partCol, segId, frames)
+      val first = once()
+      ((first, once()), counts)
+    }
+
+    /** Compact every table over the visible set through
+      * [[compactSegmentLedger]], FOLDING the masks into the data tables:
+      * each data table's view (or its `fold` override) is pinned, then the
+      * data tables swap in one parallel block, then the mask tables fold to
+      * empty. The target id is the set's max when the store has masks
+      * (folded rows must never be re-hidden by a strictly-older raw mask)
+      * and its min otherwise (the unmasked layout). With this order every
+      * window between the single-table swaps serves the identical view;
+      * `masksToo = false` stops at the worst one (data folded, masks raw).
+      * The compaction point — the set's max — is recorded in the store's
+      * meta BEFORE the first swap, so [[asOf]] refuses folded history from
+      * the moment it can exist. Returns the point. */
+    def compact(s: SparkSession, path: String, masksToo: Boolean = true): Long = {
+      val vis = visible(s, path)
+      val into = if (masks.isEmpty) vis.min else vis.max
+      val v = view(s, path, vis)
+      val folded = inParallel(dataTables.map { t => () =>
+        t -> fold.get(t).fold(v(t))(_(v(t))).localCheckpoint()
+      }).toMap
+      val stamp = readStamp(s, path)
+      require(stamp.isDefined, s"compact: unstamped ledgered store at $path")
+      writeStamp(s, path, stamp.get,
+        readMeta(s, path) + (CompactedThrough -> vis.max.toString))
+      def compactInto(t: String, rows: DataFrame): Unit = {
+        val lt = tables.find(_.name == t).get
+        compactSegmentLedger(s, path, t, partCol, lt.sortCols, lt.rangeCols,
+          onlySegs = Some(vis), foldInto = Some(rows), intoSeg = Some(into))
+      }
+      inParallel(dataTables.map(t => () => compactInto(t, folded(t))))
+      if (masksToo) inParallel(maskTables.map { t => () =>
+        compactInto(t, read(s, path, t, vis).drop(partCol).limit(0).localCheckpoint())
+      })
+      vis.max
+    }
+
+    /** The visible set as of horizon `h`. A compacted store forfeits the
+      * horizons below its compaction point (fold-on-compact rewrote that
+      * history into the base), so those are refused rather than answered
+      * with post-fold rows. */
+    def asOf(s: SparkSession, path: String, h: Long): Seq[Long] = {
+      val through = readMeta(s, path).get(CompactedThrough).map(_.toLong)
+        .getOrElse(Long.MinValue)
+      require(h >= through,
+        s"as-of horizon $h is below the store's compaction point $through " +
+          s"at $path — folded history is not servable")
+      visible(s, path).filter(_ <= h)
+    }
+
+    /** The committed segments of `table` that hold data files (a
+      * compaction leaves tombstones: marker, no data). */
+    def dataSegments(s: SparkSession, path: String, table: String): Seq[Long] = {
+      val tbl = new Path(new Path(path), table)
+      val fs = fsOf(s, tbl)
+      committedSegments(s, path, table, partCol).filter(v =>
+        fs.listStatus(new Path(tbl, s"$partCol=$v")).exists(_.getPath.getName.endsWith(".parquet")))
+    }
+  }
+
   /** Remove one named table of a stored index (e.g. a folded-in delete
     * mask). Stamp and other tables untouched. */
   def dropTable(s: SparkSession, path: String, table: String): Unit = {

@@ -983,89 +983,57 @@ object StreamOps extends QueryModule {
   // ---- the ledgered serving-store streams (q215-q221, q246-q249,
   // q266-q270): one harness over a four-entry family table ----
 
-  /** One ledgered streaming family. `seed` fresh-seeds the store at
-    * `path(dir)` and returns its stamp meta; `commit(s, dir, path, seg,
-    * batch)` commits one batch as segment `seg`, deliberately replays
-    * it, and returns the (first, replay) written-table counts plus the
-    * batch's audit counts; a clean first commit writes `tables` tables.
-    * `compact` compacts a copy in place and returns its stamp meta. The
-    * family's stamps fingerprint `fingerprint(s, dir)`. */
+  /** One ledgered streaming family: its store's [[IndexStore.Ledger]],
+    * and where it lives. `seed` fresh-seeds the store at `path(dir)` and
+    * returns its stamp meta; `commit(s, dir, path, seg, batch)` commits
+    * one batch as segment `seg` through [[IndexStore.Ledger.commit]]
+    * (deliberately replayed) and returns the (first, replay)
+    * written-table counts plus the batch's audit counts. The family's
+    * stamps fingerprint `fingerprint(s, dir)`. */
   private final case class LedgeredStream(
       name: String,
-      tables: Int,
+      ledger: IndexStore.Ledger,
       path: String => String,
       fingerprint: (SparkSession, String) => String,
       batches: (SparkSession, String) => Seq[(Int, DataFrame)],
       seed: (SparkSession, String) => Map[String, String],
       commit: (SparkSession, String, String, Long, DataFrame) =>
-        ((Int, Int), Map[String, Long]),
-      compact: (SparkSession, String) => Map[String, String])
+        ((Int, Int), Map[String, Long]))
 
   private def sourceStamp(file: String)(s: SparkSession, dir: String): String =
     IndexStore.sourceStamp(s, Seq(s"$dir/$file"))
 
   private val IvfStream = {
     import graft.operators.Similarity
-    LedgeredStream("ivf", 1, Similarity.seqIvfStreamPath,
+    LedgeredStream("ivf", Similarity.SeqIvfLedger, Similarity.seqIvfStreamPath,
       sourceStamp("embeddings.parquet"), Similarity.seqArrivalBatches,
       (s, dir) => { Similarity.seedSeqIvfStream(s, dir); Map.empty },
-      (s, dir, path, seg, b) => {
-        val (first, replay) = Similarity.seqIvfStreamCommit(s, dir, path, seg, b)
-        ((if (first) 1 else 0, if (replay) 1 else 0), Map.empty)
-      },
-      (s, cpath) => {
-        IndexStore.compactSegmentLedger(s, cpath, "assign", "seg",
-          sortCols = Seq("cid", "vec_id"), rangeCols = Seq("cid", "vec_id"))
-        Map.empty
-      })
+      Similarity.seqIvfStreamCommit)
   }
 
   private val SearchStream = {
     import graft.operators.Search
-    LedgeredStream("search", Search.indexTableNames.size, Search.streamIndexPath,
+    LedgeredStream("search", Search.StreamLedger, Search.streamIndexPath,
       Search.fixtureStamp, Search.arrivalDocBatches,
       (s, dir) => { Search.seedStreamIndex(s, dir); Map.empty },
-      (s, _, path, seg, b) => (Search.streamIndexCommit(s, path, seg, b), Map.empty),
-      (s, cpath) => {
-        // compact the JOINT visible set, not each table's own ledger: a
-        // segment committed here but torn in a sibling table must stay its
-        // own (invisible) segment, not fold into the visible rows
-        val vis = Search.streamVisibleSegments(s, cpath)
-        IndexStore.inParallel(Search.indexTableNames.map { t => () =>
-          val cols = Search.streamCompactCols(t)
-          IndexStore.compactSegmentLedger(s, cpath, t, "segment",
-            sortCols = cols, rangeCols = cols, onlySegs = Some(vis))
-        })
-        Map.empty
-      })
+      (s, _, path, seg, b) => Search.streamIndexCommit(s, path, seg, b))
   }
 
   private val KnnStream = {
     import graft.operators.Similarity
-    LedgeredStream("knn", Similarity.KnnStreamTables.size, Similarity.knnStreamPath,
+    LedgeredStream("knn", Similarity.KnnStreamLedger, Similarity.knnStreamPath,
       sourceStamp("embeddings.parquet"), Similarity.knnStreamFeedBatches,
       (s, dir) => Map("m" ->
         Similarity.seedKnnStream(s, dir, table(s, dir, "embeddings"))._2.toString),
-      (s, _, path, seg, b) => {
-        val (flags, (ins, del, repaired)) = Similarity.knnStreamCommit(s, path, seg, b)
-        (flags, Map("n_feed_inserts" -> ins, "n_feed_deletes" -> del,
-          "n_repaired_del" -> repaired))
-      },
-      (s, cpath) => Map("compacted_through" ->
-        Similarity.compactKnnStream(s, cpath).toString))
+      (s, _, path, seg, b) => Similarity.knnStreamCommit(s, path, seg, b))
   }
 
   private val MixAdmStream = {
     import graft.operators.ScaleOps
-    LedgeredStream("mixadm", ScaleOps.MixAdmStreamTables.size, ScaleOps.mixAdmStreamPath,
+    LedgeredStream("mixadm", ScaleOps.MixAdmStreamLedger, ScaleOps.mixAdmStreamPath,
       sourceStamp("documents.parquet"), ScaleOps.seedMixAdmStreamBatches,
       (s, dir) => { ScaleOps.seedMixAdmStream(s, dir); Map.empty },
-      (s, _, path, seg, b) => {
-        val (flags, (ins, del)) = ScaleOps.mixAdmStreamCommit(s, path, seg, b)
-        (flags, Map("n_feed_inserts" -> ins, "n_feed_deletes" -> del))
-      },
-      (s, cpath) => Map("compacted_through" ->
-        ScaleOps.compactMixAdmStream(s, cpath).toString))
+      (s, _, path, seg, b) => ScaleOps.mixAdmStreamCommit(s, path, seg, b))
   }
 
   /** A ledgered family's store, drained once per (process, corpus) under
@@ -1119,7 +1087,7 @@ object StreamOps extends QueryModule {
         import scala.jdk.CollectionConverters._
         val got = flags.asScala.values.toSeq
         val clean = got.sizeIs == batches.size &&
-          got.forall { case ((first, replay), _) => first == f.tables && replay == 0 }
+          got.forall { case ((first, replay), _) => first == f.ledger.names.size && replay == 0 }
         val counts = got.flatMap(_._2).groupMapReduce(_._1)(_._2)(_ + _)
         if (clean) IndexStore.writeStamp(s, path, stamp,
           seedMeta ++ counts.map { case (k, v) => k -> v.toString } +
@@ -1130,11 +1098,11 @@ object StreamOps extends QueryModule {
   }
 
   /** A stamped COPY of the family's drained store, compacted once per
-    * process: copy, run the family's compaction, then re-commit every
-    * feed batch — the recovery retry AFTER compaction, which the
-    * tombstoned ledger must answer "already committed" in every table —
-    * and stamp only a clean run, with the replay-after-compact verdict
-    * in meta. Compacting a copy keeps the shared drained store's
+    * process: copy, run [[IndexStore.Ledger.compact]] (which records the
+    * compaction point in meta), then re-commit every feed batch — the
+    * recovery retry AFTER compaction, which the tombstoned ledger must
+    * answer "already committed" in every table — and stamp only a clean
+    * run, with the replay-after-compact verdict in meta. Compacting a copy keeps the shared drained store's
     * uncompacted segments and horizons intact; a crash mid-compact
     * leaves the copy failing this stamp check, and it re-copies.
     * The drained store's path lock covers the copy, so it never races a
@@ -1150,14 +1118,13 @@ object StreamOps extends QueryModule {
       else {
         require(clean, "pre-compaction stream must commit exactly once")
         IndexStore.copy(s, path, cpath)
-        val meta = f.compact(s, cpath)
+        f.ledger.compact(s, cpath)
         val replays = f.batches(s, dir).map { case (segId, b) =>
           f.commit(s, dir, cpath, segId.toLong, b)._1
         }
         val stillNoop = replays.forall(_ == ((0, 0)))
         if (stillNoop) IndexStore.writeStamp(s, cpath, stamp,
-          IndexStore.readMeta(s, cpath) ++ meta +
-            ("replay_after_compact" -> "true"))
+          IndexStore.readMeta(s, cpath) + ("replay_after_compact" -> "true"))
         (cpath, stillNoop)
       }
     }
@@ -1203,7 +1170,7 @@ object StreamOps extends QueryModule {
     * partition-dir refusal names as missing, landed end-to-end. Run the
     * full q215 stream (seed + two exactly-once segment commits), then
     * compact the store through
-    * [[IndexStore.compactSegmentLedger]]: all committed
+    * [[IndexStore.Ledger.compact]]: all committed
     * rows collapse into fresh cid-range-sorted files under `seg=0` while
     * every pre-compaction segment keeps a TOMBSTONE commit marker — the
     * ledger survives the rewrite. The proof is in the answer frame: the
@@ -1227,8 +1194,8 @@ object StreamOps extends QueryModule {
     * audit replay ("reproduce what yesterday's index returned") carried
     * to the store the stream writes. After the full q215 run (seed + two
     * exactly-once segment commits), the same probe set is answered at
-    * horizon full and horizon 1; the as-of leg reads through
-    * [[IndexStore.readCommittedAsOf]], whose horizon bounds
+    * horizon full and horizon 1; the as-of leg reads over
+    * [[IndexStore.Ledger.asOf]]'s segment set, whose horizon bounds
     * the explicit partition-dir path list — segment 2's directory is
     * never listed into the scan's file index. That is the partition-dir
     * layout's payoff over the flat store's row-group min/max pruning
@@ -1379,7 +1346,7 @@ object StreamOps extends QueryModule {
     * store — q217/q220's maintenance op carried to the fifth family's
     * streamed store, the first whose ledger carries segment-scoped MASK
     * sidecars. Compaction and mask fold are one rewrite
-    * ([[graft.operators.Similarity.compactKnnStream]]): the visible
+    * ([[IndexStore.Ledger.compact]]): the visible
     * masked view collapses into fresh range-sorted files under the
     * visible set's MAX segment id (fold-at-max — under the min, a
     * not-yet-compacted stale mask would re-hide the restated lists it
@@ -1408,7 +1375,7 @@ object StreamOps extends QueryModule {
     * store — q217's maintenance op carried to the store whose commit
     * unit spans four tables. After the full q219 stream, every table
     * compacts independently through
-    * [[IndexStore.compactSegmentLedger]] (committed rows
+    * [[IndexStore.Ledger.compact]] (committed rows
     * collapse into fresh term-sorted files under `segment=0`, every
     * pre-compaction segment keeps a TOMBSTONE commit marker); the four
     * rewrites are independent single-table swaps run in parallel, and a

@@ -603,95 +603,178 @@ class CrashRecoverySpec extends AnyFunSuite {
     assert(graft.sources.IndexStore.isCurrent(s, dst, "copyspec") && !fs.exists(cbak))
   }
 
-  test("kNN stream sync: a segment torn between two tables is invisible, the replay completes it with identical rows") {
-    // VERDICT r16 item 4's crash case: each q246 micro-batch commits
-    // masks + appended lists across FOUR ledgered tables; a crash
-    // between two tables' commits must leave the whole segment
-    // invisible (no half-applied feed is ever served) until the
-    // recovering replay — which re-derives its frames from strictly
-    // OLDER segments, unchanged by the crash — completes the
-    // stragglers with identical rows and the segment appears
-    // atomically.
-    import graft.operators.Similarity
-    Engine.tune(s)
+  /** A ledgered streaming family as the ledger specs drive it: its
+    * store's ledger, a fresh seed (returns the store path), its feed
+    * batches, its commit, and its as-of read. */
+  private case class LedgerCase(ledger: graft.sources.IndexStore.Ledger,
+      seed: () => String, batches: () => Seq[(Int, DataFrame)],
+      commit: (String, Long, DataFrame) => ((Int, Int), Map[String, Long]),
+      asOf: String => DataFrame)
+
+  private lazy val ledgerCases: Map[String, LedgerCase] = {
+    import graft.operators.{ScaleOps, Search, Similarity}
     val sf = TestSpark.sf
-    val (path, _) = Similarity.seedKnnStream(s, sf,
-      Engine.table(s, sf, "embeddings"))
-    val feed = Similarity.knnStreamFeedBatches(s, sf)
-    val delBatch = feed.head._2.localCheckpoint()
-    // commit the delete micro-batch as segment 1 (first=4, replay=0)
-    val ((first, replay), (_, nDel, _)) =
-      Similarity.knnStreamCommit(s, path, 1L, delBatch)
-    assert(first == 4 && replay == 0, s"fresh segment: expected (4,0), got ($first,$replay)")
-    assert(nDel > 0, "the fixture's delete slice must be non-empty")
-    // knnStreamResult reads the audit meta — the rig writes it after a
-    // clean run; stand in for it here (m carried from the seed)
-    graft.sources.IndexStore.writeStamp(s, path, "tornspec",
-      Map("m" -> graft.sources.IndexStore.readMeta(s, path)("m"),
-        "n_feed_inserts" -> "0", "n_feed_deletes" -> nDel.toString,
-        "n_repaired_del" -> "0"))
-    val want = Similarity.knnStreamResult(s, sf, path, replayNoop = true)
-      .collect().map(_.toString).sorted.toSeq
-    // tear the segment: drop ONE table's segment dir (crash between
-    // two tables' first commits)
+    Map(
+      "ivf" -> LedgerCase(Similarity.SeqIvfLedger,
+        () => Similarity.seedSeqIvfStream(s, sf),
+        () => Similarity.seqArrivalBatches(s, sf),
+        Similarity.seqIvfStreamCommit(s, sf, _, _, _),
+        Similarity.seqIvfStreamAsOfResult(s, _)),
+      "search" -> LedgerCase(Search.StreamLedger,
+        () => Search.seedStreamIndex(s, sf),
+        () => Search.arrivalDocBatches(s, sf),
+        Search.streamIndexCommit(s, _, _, _),
+        Search.streamSearchAsOfResult(s, sf, _)),
+      "knn" -> LedgerCase(Similarity.KnnStreamLedger,
+        () => Similarity.seedKnnStream(s, sf, Engine.table(s, sf, "embeddings"))._1,
+        () => Similarity.knnStreamFeedBatches(s, sf),
+        Similarity.knnStreamCommit(s, _, _, _),
+        Similarity.knnStreamAsOfResult(s, _)),
+      "mixadm" -> LedgerCase(ScaleOps.MixAdmStreamLedger,
+        () => ScaleOps.seedMixAdmStream(s, sf)._1,
+        () => ScaleOps.seedMixAdmStreamBatches(s, sf),
+        ScaleOps.mixAdmStreamCommit(s, _, _, _),
+        ScaleOps.mixAdmStreamAsOfResult(s, sf, _)))
+  }
+
+  /** The full served state of a ledgered store: every data table's
+    * masked view over the visible set, folded the way compaction folds
+    * it (mixadm's count ledger as its per-source sum). */
+  private def ledgerRows(l: graft.sources.IndexStore.Ledger, path: String): Seq[String] = {
+    val v = l.view(s, path, l.visible(s, path))
+    l.dataTables.flatMap { t =>
+      l.fold.get(t).fold(v(t))(_(v(t))).collect().map(t + _.toString)
+    }.sorted
+  }
+
+  /** A segment torn between two tables of a ledgered store: each
+    * micro-batch commits across every table, and a crash between two
+    * tables' commits must leave the whole segment invisible (no
+    * half-applied feed is ever served) until the recovering replay —
+    * which re-derives its frames from strictly OLDER segments, unchanged
+    * by the crash — completes the stragglers with identical rows and the
+    * segment appears atomically. */
+  private def tornSegment(family: String, torn: String): Unit = {
+    val c = ledgerCases(family)
+    val l = c.ledger
+    Engine.tune(s)
+    val path = c.seed()
+    val batch = c.batches().head._2.localCheckpoint()
+    val ((first, replay), counts) = c.commit(path, 1L, batch)
+    assert(first == l.names.size && replay == 0,
+      s"fresh segment: expected (${l.names.size},0), got ($first,$replay)")
+    assert(counts.get("n_feed_deletes").forall(_ > 0),
+      "the fixture's delete slice must be non-empty")
+    val want = ledgerRows(l, path)
+    // tear the segment: drop ONE table's segment dir (crash between two
+    // tables' first commits)
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI("file:///"), s.sparkContext.hadoopConfiguration)
-    val tornDir = new org.apache.hadoop.fs.Path(s"$path/stale/segment=1")
-    assert(fs.delete(tornDir, true), "test setup: tear the stale table's segment")
-    // the joint view excludes the torn segment everywhere: the feed is
-    // wholly invisible (pre-delete state serves — deleted ids still
-    // present, no torn half-applied masks)
-    assert(Similarity.knnStreamVisible(s, path) == Seq(0L),
+    val tornDir = new org.apache.hadoop.fs.Path(s"$path/$torn/${l.partCol}=1")
+    assert(fs.delete(tornDir, true), s"test setup: tear the $torn table's segment")
+    assert(l.visible(s, path) == Seq(0L),
       "a torn segment must be invisible in the cross-table view")
-    // the replay completes exactly the straggler table with identical
-    // rows (frames re-derive from segment 0 alone)
-    val ((first2, replay2), _) = Similarity.knnStreamCommit(s, path, 1L, delBatch)
+    val ((first2, replay2), _) = c.commit(path, 1L, batch)
     assert(first2 == 1 && replay2 == 0,
       s"replay must complete only the torn table: expected (1,0), got ($first2,$replay2)")
-    assert(Similarity.knnStreamVisible(s, path) == Seq(0L, 1L),
+    assert(l.visible(s, path) == Seq(0L, 1L),
       "the healed segment must appear atomically")
-    val got = Similarity.knnStreamResult(s, sf, path, replayNoop = true)
-      .collect().map(_.toString).sorted.toSeq
-    assert(got == want,
+    assert(ledgerRows(l, path) == want,
       "the healed view must equal the pre-tear view row-for-row")
   }
 
+  test("kNN stream sync: a segment torn between two tables is invisible, the replay completes it with identical rows") {
+    tornSegment("knn", "stale")
+  }
+
   test("mixadm stream sync: a segment torn between two of the five tables is invisible, the replay completes it with identical rows") {
-    // q266's crash case (the q246 shape carried to the sixth family):
-    // each micro-batch commits key/digest appends + two masks + the
-    // count-delta ledger across FIVE tables; a crash between two
-    // tables' commits must leave the segment invisible everywhere —
-    // no half-applied policy is ever served (a torn cdelta without its
-    // masks would re-solve rates against phantom counts) — until the
-    // replay completes the stragglers from strictly older segments.
-    import graft.operators.ScaleOps
-    Engine.tune(s)
-    val sf = TestSpark.sf
-    val (path, batches) = ScaleOps.seedMixAdmStream(s, sf)
-    val delBatch = batches.head._2.localCheckpoint()
-    val ((first, replay), (_, nDel)) =
-      ScaleOps.mixAdmStreamCommit(s, path, 1L, delBatch)
-    assert(first == 5 && replay == 0, s"fresh segment: expected (5,0), got ($first,$replay)")
-    assert(nDel > 0, "the fixture's delete slice must be non-empty")
-    graft.sources.IndexStore.writeStamp(s, path, "tornspec",
-      Map("n_feed_inserts" -> "0", "n_feed_deletes" -> nDel.toString))
-    val want = ScaleOps.mixAdmStreamResult(s, sf, path, replayNoop = true)
-      .collect().map(_.toString).sorted.toSeq
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI("file:///"), s.sparkContext.hadoopConfiguration)
-    val tornDir = new org.apache.hadoop.fs.Path(s"$path/cdelta/segment=1")
-    assert(fs.delete(tornDir, true), "test setup: tear the cdelta segment")
-    assert(ScaleOps.mixAdmStreamVisible(s, path) == Seq(0L),
-      "a torn segment must be invisible in the cross-table view")
-    val ((first2, replay2), _) = ScaleOps.mixAdmStreamCommit(s, path, 1L, delBatch)
-    assert(first2 == 1 && replay2 == 0,
-      s"replay must complete only the torn table: expected (1,0), got ($first2,$replay2)")
-    assert(ScaleOps.mixAdmStreamVisible(s, path) == Seq(0L, 1L),
-      "the healed segment must appear atomically")
-    val got = ScaleOps.mixAdmStreamResult(s, sf, path, replayNoop = true)
-      .collect().map(_.toString).sorted.toSeq
-    assert(got == want,
-      "the healed view must equal the pre-tear view row-for-row")
+    tornSegment("mixadm", "cdelta")
+  }
+
+  test("search stream refresh: a segment torn between two of the four tables is invisible, the replay completes it with identical rows") {
+    tornSegment("search", "dict")
+  }
+
+  Seq("ivf", "search", "knn", "mixadm").foreach { family =>
+    test(s"ledger replay of a committed segment runs no Spark job ($family)") {
+      // IndexStore.commitSegment's promise: a replay is marker stats
+      // alone. Sentinel jobs bracket the replay so the (asynchronous)
+      // listener bus has delivered every earlier job before counting
+      // starts, and every replay job before counting stops.
+      val c = ledgerCases(family)
+      Engine.tune(s)
+      val path = c.seed()
+      // the raw feed frame, as a stream hands it over: any job the
+      // replay ran on the batch itself would count
+      val batch = c.batches().head._2
+      assert(c.commit(path, 1L, batch)._1 == ((c.ledger.names.size, 0)))
+      val sentinel = "ledger-replay-sentinel"
+      val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          val desc = Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          if (desc.exists(_.startsWith(sentinel))) seen.put(desc.get)
+          else jobs.incrementAndGet(): Unit
+        }
+      }
+      def flush(tag: String): Unit = {
+        s.sparkContext.setJobDescription(s"$sentinel-$tag")
+        try s.range(1).count() finally s.sparkContext.setJobDescription(null)
+        // one action may run several jobs (AQE stages): skip to this tag
+        Iterator.continually(seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+          .find(d => d == null || d == s"$sentinel-$tag")
+          .foreach(d => assert(d != null, "listener bus did not deliver the sentinel job"))
+      }
+      def jobsDuring(body: => Unit): Int = {
+        flush("before")
+        jobs.set(0)
+        body
+        flush("after")
+        jobs.get
+      }
+      s.sparkContext.addSparkListener(listener)
+      try {
+        var replayed: ((Int, Int), Map[String, Long]) = null
+        val n = jobsDuring { replayed = c.commit(path, 1L, batch) }
+        assert(replayed == (((0, 0), Map.empty)),
+          s"replay must write nothing and report no counts, got $replayed")
+        assert(n == 0, s"replay ran $n Spark job(s)")
+        // the control: the same bracket does see a job
+        assert(jobsDuring(s.range(100).repartition(4).count(): Unit) > 0)
+      } finally s.sparkContext.removeSparkListener(listener)
+    }
+  }
+
+  test("ledger view: a mask in segment N hides matching rows of older segments, never of N itself") {
+    import s.implicits._
+    import graft.sources.IndexStore
+    val l = IndexStore.Ledger("segment",
+      Seq(IndexStore.LedgerTable("t", "id"), IndexStore.LedgerTable("m", "mid")),
+      masks = Seq(("m", "t", "id", "mid")))
+    val store = s"$base/ledgerview"
+    l.seed(s, store)(Seq(
+      "t" -> Seq((Option(1L), "a0"), (Option(2L), "b0"), (Option(3L), "c0"), (None, "n0"))
+        .toDF("id", "v"),
+      "m" -> Seq.empty[Option[Long]].toDF("mid")))
+    // segment 1 re-inserts id 1 beside the mask that hides its older row
+    assert(l.commit(s, store, 1L)((Seq(
+      "t" -> Seq((Option(1L), "a1"), (Option(4L), "d1")).toDF("id", "v"),
+      "m" -> Seq(Option(1L)).toDF("mid")), Map.empty))._1 == ((2, 0)))
+    // segment 2 masks id 4 (born in segment 1) and the null key, null-safe
+    assert(l.commit(s, store, 2L)((Seq(
+      "t" -> Seq.empty[(Option[Long], String)].toDF("id", "v"),
+      "m" -> Seq(Option(4L), None).toDF("mid")), Map.empty))._1 == ((2, 0)))
+    val vis = l.visible(s, store)
+    assert(vis == Seq(0L, 1L, 2L))
+    val view = l.view(s, store, vis)("t")
+    assert(!view.columns.contains("segment"), "the view drops the partition column")
+    assert(view.collect().map(_.toString).sorted.toSeq ==
+      Seq("[1,a1]", "[2,b0]", "[3,c0]"),
+      "segment 1's mask hides segment 0's id 1 but not its own; segment 2's hides id 4 and null")
+    // the same rule at horizon 1: segment 2's masks are not yet drained
+    assert(l.view(s, store, l.asOf(s, store, 1L))("t").collect().map(_.toString).sorted.toSeq ==
+      Seq("[1,a1]", "[2,b0]", "[3,c0]", "[4,d1]", "[null,n0]"))
   }
 
   test("replaceTable killed after the swap, before the bak delete: stale bak is dropped, new data serves") {
@@ -713,175 +796,75 @@ class CrashRecoverySpec extends AnyFunSuite {
       "a completed replace leaves no bak behind")
   }
 
-  test("kNN stream compaction: the worst crash window (data folded, masks raw) serves the identical view; fold completes, replays no-op, old horizons refuse") {
-    // q249's crash model. The mask-folding compaction rewrites four
-    // tables one atomic swap at a time; its two invariants — folded
-    // rows park under the visible set's MAX id, data tables before
-    // mask tables — exist exactly so the window between the swaps
-    // serves the bit-identical view. This drives the store to the
-    // worst window and checks, then completes and checks the rest.
-    import graft.operators.Similarity
+  /** The mask-folding compaction's worst crash window. The compaction
+    * rewrites every table one atomic swap at a time; its two invariants
+    * — folded rows park under the visible set's MAX id, data tables
+    * swap before mask tables — exist exactly so the window between the
+    * swaps serves the bit-identical view. `masksToo = false` stops the
+    * compactor at the worst window (data folded, masks raw); the body
+    * checks it, completes the fold and checks the rest. */
+  private def compactionWindow(family: String, dataTable: String): Unit = {
     import graft.sources.IndexStore
+    val c = ledgerCases(family)
+    val l = c.ledger
     Engine.tune(s)
-    val sf = TestSpark.sf
-    val (path, _) = Similarity.seedKnnStream(s, sf,
-      Engine.table(s, sf, "embeddings"))
-    val feed = Similarity.knnStreamFeedBatches(s, sf).map {
-      case (segId, b) => segId -> b.localCheckpoint()
-    }
+    val path = c.seed()
+    val feed = c.batches().map { case (segId, b) => segId -> b.localCheckpoint() }
     feed.foreach { case (segId, b) =>
-      val ((first, replay), _) = Similarity.knnStreamCommit(s, path, segId.toLong, b)
-      assert(first == 4 && replay == 0, s"fresh segment $segId: got ($first,$replay)")
+      val ((first, replay), _) = c.commit(path, segId.toLong, b)
+      assert(first == l.names.size && replay == 0,
+        s"fresh segment $segId: expected (${l.names.size},0), got ($first,$replay)")
     }
-    val vis0 = Similarity.knnStreamVisible(s, path)
+    val vis0 = l.visible(s, path)
     assert(vis0 == Seq(0L, 1L, 2L))
-    def viewRows(): Seq[String] = {
-      val (edges, members) = Similarity.knnStreamView(
-        s, path, Similarity.knnStreamVisible(s, path))
-      (edges.select(col("src"), col("nbr"), col("cosim"), col("rn"))
-        .collect().map("e" + _.toString) ++
-       members.select(col("cid"), col("vec_id")).collect().map("m" + _.toString))
-        .sorted.toSeq
-    }
-    val want = viewRows()
+    val want = ledgerRows(l, path)
 
-    // the worst window: edges+assign folded at segment=2, masks still raw.
-    // Fold-at-max makes the raw masks match nothing (they hide only rows
-    // of STRICTLY older segments), so the view must not change.
-    Similarity.compactKnnStream(s, path, masksToo = false)
-    assert(Similarity.knnStreamVisible(s, path) == vis0,
+    // the worst window: data tables folded at the max id, masks still
+    // raw. Fold-at-max makes the raw masks match nothing (they hide only
+    // rows of STRICTLY older segments), so the view must not change.
+    l.compact(s, path, masksToo = false)
+    assert(l.visible(s, path) == vis0,
       "tombstones must keep every segment committed through the window")
-    assert(viewRows() == want,
+    assert(ledgerRows(l, path) == want,
       "the half-compacted store must serve the bit-identical view")
 
     // recovery completes the fold (re-entering the data phase is
     // idempotent); masks now empty, view still identical
-    assert(Similarity.compactKnnStream(s, path) == 2L)
-    assert(viewRows() == want,
+    assert(l.compact(s, path) == 2L)
+    assert(ledgerRows(l, path) == want,
       "the fully compacted store must serve the bit-identical view")
-    Seq("deletes", "stale").foreach(t =>
-      assert(IndexStore.readSegments(s, path, t, "segment", vis0).count() == 0L,
-        s"mask table $t must compact to empty"))
-    // exactly one data-bearing edges segment remains (segment=2)
-    val fs2 = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI("file:///"), s.sparkContext.hadoopConfiguration)
-    val dataSegs = fs2.listStatus(new org.apache.hadoop.fs.Path(s"$path/edges"))
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("segment="))
-      .filter(st => fs2.listStatus(st.getPath).exists(_.getPath.getName.endsWith(".parquet")))
-      .map(_.getPath.getName).toSeq
-    assert(dataSegs == Seq("segment=2"),
-      s"folded rows must park under the set's MAX id, got $dataSegs")
+    l.names.filterNot(l.dataTables.contains).foreach(t =>
+      assert(l.read(s, path, t, vis0).count() == 0L, s"mask table $t must compact to empty"))
+    assert(l.dataSegments(s, path, dataTable) == Seq(2L),
+      s"folded rows must park under the set's MAX id")
 
     // a recovering stream's replay of both feed batches: metadata no-op
     feed.foreach { case (segId, b) =>
-      val ((first, replay), _) = Similarity.knnStreamCommit(s, path, segId.toLong, b)
+      val ((first, replay), _) = c.commit(path, segId.toLong, b)
       assert(first == 0 && replay == 0,
         s"replay of segment $segId after compaction must write nothing")
     }
 
-    // horizons below the compaction point refuse loudly
-    IndexStore.writeStamp(s, path, "compactspec",
-      IndexStore.readMeta(s, path) ++ Map("compacted_through" -> "2"))
-    val e = intercept[IllegalArgumentException] {
-      Similarity.knnStreamAsOfResult(s, path)
-    }
+    // horizons below the compaction point compact recorded refuse loudly
+    val e = intercept[IllegalArgumentException](c.asOf(path))
     assert(e.getMessage.contains("compaction point"),
       s"as-of below the compaction point must name the refusal: ${e.getMessage}")
 
     // and the forged-ledger hazard: intoSeg outside the compacted set throws
+    val lt = l.tables.find(_.name == dataTable).get
     val e2 = intercept[IllegalArgumentException] {
-      IndexStore.compactSegmentLedger(s, path, "edges", "segment",
-        Seq("src", "rn"), Seq("src"), onlySegs = Some(vis0), intoSeg = Some(99L))
+      IndexStore.compactSegmentLedger(s, path, dataTable, l.partCol,
+        lt.sortCols, lt.rangeCols, onlySegs = Some(vis0), intoSeg = Some(99L))
     }
     assert(e2.getMessage.contains("forge"))
   }
 
+  test("kNN stream compaction: the worst crash window (data folded, masks raw) serves the identical view; fold completes, replays no-op, old horizons refuse") {
+    compactionWindow("knn", "edges")
+  }
+
   test("mixadm stream compaction: the worst crash window (data folded, masks raw) serves the identical policy; fold completes, replays no-op, old horizons refuse") {
-    // q270's crash model — the q249 invariants carried to the sixth
-    // family's FIVE tables: the mask-folding compaction rewrites them
-    // one atomic swap at a time; folded rows park under the visible
-    // set's MAX id and data tables (keys/digests/cdelta) swap before
-    // mask tables (deletes/dgone), so every window between the swaps
-    // serves the bit-identical policy state. masksToo=false stops the
-    // compactor at the worst such window.
-    import graft.operators.ScaleOps
-    import graft.sources.IndexStore
-    Engine.tune(s)
-    val sf = TestSpark.sf
-    val (path, batches) = ScaleOps.seedMixAdmStream(s, sf)
-    val staged = batches.map { case (segId, b) => segId -> b.localCheckpoint() }
-    var nIns = 0L
-    var nDel = 0L
-    staged.foreach { case (segId, b) =>
-      val ((first, replay), (i, d)) =
-        ScaleOps.mixAdmStreamCommit(s, path, segId.toLong, b)
-      assert(first == 5 && replay == 0,
-        s"fresh segment $segId: expected (5,0), got ($first,$replay)")
-      nIns += i; nDel += d
-    }
-    IndexStore.writeStamp(s, path, "compactspec",
-      Map("n_feed_inserts" -> nIns.toString, "n_feed_deletes" -> nDel.toString))
-    val vis0 = ScaleOps.mixAdmStreamVisible(s, path)
-    assert(vis0 == Seq(0L, 1L, 2L))
-    // the full policy state: masked member keys, masked digest set, and
-    // the cdelta ledger's per-source sum (what rates re-solve from)
-    def viewRows(): Seq[String] = {
-      val vis = ScaleOps.mixAdmStreamVisible(s, path)
-      val (keys, dig) = ScaleOps.mixAdmStreamView(s, path, vis)
-      val counts = IndexStore.readSegments(s, path, "cdelta", "segment", vis)
-        .groupBy(col("source")).agg(sum(col("c")).as("c"))
-      (keys.collect().map("k" + _.toString) ++
-       dig.collect().map("d" + _.toString) ++
-       counts.collect().map("c" + _.toString)).sorted.toSeq
-    }
-    val want = viewRows()
-
-    // the worst window: keys/digests/cdelta folded at segment=2, both
-    // mask tables still raw. Fold-at-max makes the raw masks match
-    // nothing (they hide only STRICTLY older segments), so the served
-    // policy must not move.
-    ScaleOps.compactMixAdmStream(s, path, masksToo = false)
-    assert(ScaleOps.mixAdmStreamVisible(s, path) == vis0,
-      "tombstones must keep every segment committed through the window")
-    assert(viewRows() == want,
-      "the half-compacted store must serve the bit-identical policy")
-
-    // recovery completes the fold (re-entering the data phase is
-    // idempotent); masks now empty, policy still identical
-    assert(ScaleOps.compactMixAdmStream(s, path) == 2L)
-    assert(viewRows() == want,
-      "the fully compacted store must serve the bit-identical policy")
-    Seq("deletes", "dgone").foreach(t =>
-      assert(IndexStore.readSegments(s, path, t, "segment", vis0).count() == 0L,
-        s"mask table $t must compact to empty"))
-    // exactly one data-bearing keys segment remains (segment=2)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI("file:///"), s.sparkContext.hadoopConfiguration)
-    val dataSegs = fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/keys"))
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("segment="))
-      .filter(st => fs.listStatus(st.getPath).exists(_.getPath.getName.endsWith(".parquet")))
-      .map(_.getPath.getName).toSeq
-    assert(dataSegs == Seq("segment=2"),
-      s"folded rows must park under the set's MAX id, got $dataSegs")
-
-    // a recovering stream's replay of both feed batches: metadata no-op
-    // across all five tombstoned ledgers
-    staged.foreach { case (segId, b) =>
-      val ((first, replay), _) =
-        ScaleOps.mixAdmStreamCommit(s, path, segId.toLong, b)
-      assert(first == 0 && replay == 0,
-        s"replay of segment $segId after compaction must write nothing")
-    }
-
-    // horizons below the recorded compaction point refuse loudly (the
-    // q269 read's forfeit rule)
-    IndexStore.writeStamp(s, path, "compactspec",
-      IndexStore.readMeta(s, path) ++ Map("compacted_through" -> "2"))
-    val e = intercept[IllegalArgumentException] {
-      ScaleOps.mixAdmStreamAsOfResult(s, sf, path)
-    }
-    assert(e.getMessage.contains("compaction point"),
-      s"as-of below the compaction point must name the refusal: ${e.getMessage}")
+    compactionWindow("mixadm", "keys")
   }
 
   /** Every masked family's fold, with the query that builds its warm

@@ -152,9 +152,9 @@ class StreamingSpec extends AnyFunSuite {
     graft.sources.IndexStore.copy(s, path, scratch)
     graft.sources.IndexStore.cleanupAtExit(scratch)
     val b1 = graft.operators.Similarity.seqArrivalBatches(s, TestSpark.sf).head._2
-    val (first, replay) =
+    val ((first, replay), _) =
       graft.operators.Similarity.seqIvfStreamCommit(s, TestSpark.sf, scratch, 3L, b1)
-    assert(first && !replay, "a new segment must commit exactly-once post-compaction")
+    assert(first == 1 && replay == 0, "a new segment must commit exactly-once post-compaction")
     assert(graft.sources.IndexStore.committedSegments(s, scratch, "assign", "seg")
       == Seq(0L, 1L, 2L, 3L))
   }
@@ -182,12 +182,11 @@ class StreamingSpec extends AnyFunSuite {
     // the pruned segment's directory — planning-time pruning, not a
     // data-plane filter over every file
     val path = graft.operators.Similarity.seqIvfStreamPath(TestSpark.sf)
-    val asofFiles = graft.sources.IndexStore
-      .readCommittedAsOf(s, path, "assign", "seg", 1L).inputFiles
+    val l = graft.operators.Similarity.SeqIvfLedger
+    val asofFiles = l.read(s, path, "assign", l.asOf(s, path, 1L)).inputFiles
     assert(asofFiles.nonEmpty && asofFiles.forall(!_.contains("seg=2")),
       "horizon read must not list seg=2 files")
-    val fullFiles = graft.sources.IndexStore
-      .readCommitted(s, path, "assign", "seg").inputFiles
+    val fullFiles = l.read(s, path, "assign", l.visible(s, path)).inputFiles
     assert(fullFiles.exists(_.contains("seg=2")),
       "full read must still see the streamed segment")
   }

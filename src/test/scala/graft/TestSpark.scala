@@ -5,14 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for all suites (sbt runs suites in one JVM). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    Engine.tune(s)
+    val s = Engine.session("4")
     s.sparkContext.setLogLevel("ERROR")
     s
   }
