@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
+import org.apache.spark.sql.types.{DecimalType, LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Session tuning, fixture table loading, and engine-parity column helpers.
   *
@@ -178,13 +179,93 @@ object Engine {
         "unset them; registered oracles hardcode the defaults")
   }
 
-  /** Load a fixture table. `events.ts` arrives as either LongType
-    * epoch-nanos (legacy TIMESTAMP(NANOS) fixtures under nanosAsLong) or
-    * TIMESTAMP_NTZ (TIMESTAMP(MICROS) fixtures) — derive micros with
-    * [[tsMicros]], never with hardcoded arithmetic.
+  /** A fixture table, `<sfDir>/<name>.parquet`, read through [[parquet]]:
+    * the first read in a session infers its schema (one Spark job), and a
+    * repeat read of the same files — same paths, lengths and modification
+    * times — reuses that schema and starts no job. `events.ts` arrives as
+    * either LongType epoch-nanos (legacy TIMESTAMP(NANOS) fixtures under
+    * nanosAsLong) or TIMESTAMP_NTZ (TIMESTAMP(MICROS) fixtures) — derive
+    * micros with [[tsMicros]], never with hardcoded arithmetic.
     */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, Seq(s"$sfDir/$name.parquet"))
+
+  /** The SQL confs parquet schema inference reads (footer type mapping,
+    * merge, corrupt-file skipping, partition-value typing): part of every
+    * [[parquet]] key, so a session that maps types differently never sees
+    * another's schema. */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.files.ignoreCorruptFiles",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.caseSensitive",
+    "spark.sql.session.timeZone")
+
+  /** A schema as inferred from the file listing `stamp`. */
+  private final case class KnownSchema(schema: StructType, stamp: Seq[(String, Long, Long)])
+
+  private def readKey(s: SparkSession, paths: Seq[String],
+                      options: Map[String, String]): String =
+    (Seq("parquet") ++ paths ++ options.toSeq.sorted.map { case (k, v) => s"$k=$v" } ++
+      inferenceConfs.map(k => s"$k=${s.conf.getOption(k).getOrElse("")}")).mkString("\u0000")
+
+  /** `(path, length, mtime)` of every data file the frame's relation
+    * lists — the listing its scan will read, hidden `_`/`.` files
+    * excluded by Spark itself. */
+  private def listing(df: DataFrame): Option[Seq[(String, Long, Long)]] =
+    df.queryExecution.analyzed.collectFirst {
+      case LogicalRelation(HadoopFsRelation(ix: PartitioningAwareFileIndex, _, _, _, _, _), _, _, _, _) =>
+        ix.allFiles().map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted.toSeq
+    }
+
+  private def remember(s: SparkSession, key: String, df: DataFrame): Unit =
+    listing(df).foreach(st => SessionCache.replace(s, key, KnownSchema(df.schema, st)))
+
+  /** The engine's one batch parquet read. A plain `read.parquet` runs a
+    * schema-inference job before the query starts; this keeps each
+    * inferred schema per (session, ordered paths, `options`, inference
+    * confs) together with the file listing it was inferred from. A repeat
+    * read passes the kept schema to the reader, which still lists the
+    * files but runs no job, and the frame is used only if its own listing
+    * equals the kept one: an appended, removed or rewritten file (a
+    * rename-swapped table included) changes the listing, and the read
+    * falls back to the plain, inferring read, whose schema and listing
+    * replace the entry. Only the schema is kept — never files or a frame —
+    * so every read lists afresh and builds a fresh relation (fresh
+    * exprIds: two reads of one table self-join as two plain reads do). A
+    * missing path, an empty directory or any other failure of the
+    * schema-hinted read also goes through the plain read, so it raises
+    * exactly the error a plain read raises. */
+  def parquet(s: SparkSession, paths: Seq[String],
+              options: Map[String, String] = Map.empty): DataFrame = {
+    val key = readKey(s, paths, options)
+    val hinted = SessionCache.lookup[KnownSchema](s, key).flatMap { k =>
+      scala.util.Try(s.read.schema(k.schema).options(options).parquet(paths: _*)).toOption
+        .filter(df => listing(df).contains(k.stamp))
+    }
+    hinted.getOrElse {
+      val df = s.read.options(options).parquet(paths: _*)
+      remember(s, key, df)
+      df
+    }
+  }
+
+  /** Record `schema` as what inference would give for `paths` — for files
+    * this session has just written from a frame of that schema — so the
+    * next [[parquet]] read of them starts no job. The reader makes the
+    * schema nullable, as inference does; the entry is stamped, like any,
+    * with the listing a read of `paths` sees now. */
+  def seedParquet(s: SparkSession, paths: Seq[String], schema: StructType): Unit =
+    remember(s, readKey(s, paths, Map.empty), s.read.schema(schema).parquet(paths: _*))
+
+  /** The schema [[parquet]] holds for this read, if any (test hook). */
+  private[graft] def knownSchema(s: SparkSession, paths: Seq[String]): Option[StructType] =
+    SessionCache.lookup[KnownSchema](s, readKey(s, paths, Map.empty)).map(_.schema)
 
   /** Epoch-micros from an event-time column, dispatching on the type the
     * parquet reader produced — the engine's ONE place that knows the

@@ -25,7 +25,7 @@ object PqTrainRig {
     spark.sparkContext.setLogLevel("ERROR")
     import graft.operators.Similarity
 
-    val corpus = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val corpus = Engine.table(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding"))
     // exact L2 top-3 of the 16 fixed probes — the recall baseline
     val exact3 = Similarity.l2Knn(spark, sfDir).filter(col("rn") <= 3)

@@ -386,7 +386,7 @@ object ScaleRung {
     val lk = ch.lock()
     try {
       if (java.nio.file.Files.exists(ready)) return
-      val ev = s.read.parquet(s"$srcDir/events.parquet")
+      val ev = Engine.table(s, srcDir, "events")
       val tmp = java.nio.file.Paths.get(state100Dir,
         ".events_build_" + ProcessHandle.current().pid())
       (0 until 100).map { k =>
@@ -457,7 +457,7 @@ object ScaleRung {
     // tokenizes on [a-z0-9]+ and a '_3' suffix would split into a
     // per-copy digit token with corpus-wide document frequency — a
     // stopword-flood artifact the real corpus doesn't have.
-    val docs = s.read.parquet(s"$srcDir/documents.parquet")
+    val docs = Engine.table(s, srcDir, "documents")
     tenX(docs, { (d, k) =>
       if (k == 0) d
       else d.select(
@@ -466,7 +466,7 @@ object ScaleRung {
         col("lang"), col("source"), col("n_chars"))
     }).repartition(8).write.mode("overwrite").parquet(s"$rungDir/documents.parquet")
 
-    val embs = s.read.parquet(s"$srcDir/embeddings.parquet")
+    val embs = Engine.table(s, srcDir, "embeddings")
     tenX(embs, { (e, k) =>
       if (k == 0) e
       else e.select(
@@ -476,7 +476,7 @@ object ScaleRung {
         col("label"))
     }).repartition(8).write.mode("overwrite").parquet(s"$rungDir/embeddings.parquet")
 
-    val orders = s.read.parquet(s"$srcDir/orders.parquet")
+    val orders = Engine.table(s, srcDir, "orders")
     tenX(orders, { (o, k) =>
       if (k == 0) o
       else o.withColumn("o_orderkey", col("o_orderkey") + lit(k * 100000000L))
@@ -487,7 +487,7 @@ object ScaleRung {
     // (same-supplier copies would collapse in the DISTINCT pair step) —
     // customers keep their identity, so hub structure deepens: the
     // realistic "denser graph" experiment rather than 10 disjoint clones.
-    val li = s.read.parquet(s"$srcDir/lineitem.parquet")
+    val li = Engine.table(s, srcDir, "lineitem")
     tenX(li, { (l, k) =>
       if (k == 0) l
       else l.withColumn("l_orderkey", col("l_orderkey") + lit(k * 100000000L))
@@ -503,7 +503,7 @@ object ScaleRung {
     // `.option("pathGlobFilter", "events.parquet").parquet(dir)`, and the
     // glob matches LEAF file names — a directory of part files would
     // match nothing and stream empty.
-    val ev = s.read.parquet(s"$srcDir/events.parquet")
+    val ev = Engine.table(s, srcDir, "events")
     val evTmp = java.nio.file.Paths.get(rungDir, ".events_build")
     tenX(ev, { (e, k) =>
       if (k == 0) e

@@ -16,6 +16,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * long-lived JVM that churns through sessions therefore holds at most
   * `maxSessions` sessions' worth of cached RDD blocks, and the common
   * one-session-per-JVM drivers (Verify, Bench, tests) never evict at all.
+  * Within a session the entries are an access-order LRU too, bounded to
+  * [[maxEntries]]: the parquet read path ([[Engine.parquet]]) keeps one
+  * small entry per distinct read, and a long session must not grow
+  * without limit.
   *
   * Caveat (inherent to Spark, pinned in SessionCacheSpec): the
   * CacheManager is SHARED across sessions of one SparkContext and keyed by
@@ -28,19 +32,29 @@ object SessionCache {
 
   private val maxSessions = 4
 
-  private final case class Entry(value: Any, cleanup: () => Unit)
+  private val maxEntries = 4096
 
-  private type Frames = scala.collection.mutable.Map[String, Entry]
+  private final case class Entry(value: Any, cleanup: () => Unit) {
+    // best-effort: the owning session may already be stopped
+    def drop(): Unit = scala.util.Try(cleanup()): Unit
+  }
+
+  private final class Frames
+      extends java.util.LinkedHashMap[String, Entry](16, 0.75f, /*accessOrder=*/ true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[String, Entry]): Boolean =
+      if (size > maxEntries) { e.getValue.drop(); true } else false
+  }
 
   private val perSession =
     new java.util.LinkedHashMap[SparkSession, Frames](16, 0.75f, /*accessOrder=*/ true) {
       override def removeEldestEntry(e: java.util.Map.Entry[SparkSession, Frames]): Boolean =
         if (size > maxSessions) {
-          // best-effort: the evicted session may already be stopped
-          e.getValue.values.foreach(en => scala.util.Try(en.cleanup()))
+          e.getValue.values.forEach(_.drop())
           true
         } else false
     }
+
+  private def framesOf(s: SparkSession): Frames = perSession.computeIfAbsent(s, _ => new Frames)
 
   /** Get-or-build the frame for (session, key); the frame is `.cache()`d
     * (lazily — first consumer materializes it). Reentrant: `build` may
@@ -57,15 +71,25 @@ object SessionCache {
     */
   def cachedValue[T](s: SparkSession, key: String)(build: => T)(cleanup: T => Unit): T =
     synchronized {
-      perSession
-        .computeIfAbsent(s, _ => scala.collection.mutable.Map.empty)
-        .getOrElseUpdate(key, {
-          val v = build
-          Entry(v, () => cleanup(v))
-        })
-        .value
-        .asInstanceOf[T]
+      val frames = framesOf(s)
+      Option(frames.get(key)).getOrElse {
+        val v = build
+        val en = Entry(v, () => cleanup(v))
+        frames.put(key, en)
+        en
+      }.value.asInstanceOf[T]
     }
+
+  /** The value held for (session, key), if any — unlike [[cachedValue]]
+    * the caller decides what a hit means and writes back with [[replace]]. */
+  def lookup[T](s: SparkSession, key: String): Option[T] =
+    synchronized(Option(framesOf(s).get(key)).map(_.value.asInstanceOf[T]))
+
+  /** Store a plain value (nothing to clean up) for (session, key),
+    * dropping the entry it replaces: one entry per key, whatever the
+    * number of writes. */
+  def replace(s: SparkSession, key: String, value: Any): Unit =
+    synchronized(Option(framesOf(s).put(key, Entry(value, () => ()))).foreach(_.drop()))
 
   /** Number of sessions currently holding cached frames (test hook). */
   private[graft] def sessionCount: Int = synchronized(perSession.size)

@@ -751,7 +751,7 @@ object ScaleOps extends QueryModule {
   def zorderWrite(s: SparkSession, dir: String): DataFrame = {
     tune(s)
     val lakePath = buildZLake(s, dir)
-    val perFile = s.read.parquet(lakePath)
+    val perFile = parquet(s, Seq(lakePath))
       .groupBy(input_file_name().as("fn"), col("zfile"))
       .agg((max("cb") - min("cb") + 1).as("cw"), (max("db") - min("db") + 1).as("dw"))
     perFile.agg(
@@ -813,7 +813,7 @@ object ScaleOps extends QueryModule {
     val hit = lake.filter(inRect)
     val filesRead = lake.groupBy(input_file_name().as("fn")).agg(count(lit(1)))
       .agg(count(lit(1)).as("n_files_read"))
-    val full = s.read.parquet(lakePath).filter(inRect)
+    val full = parquet(s, Seq(lakePath)).filter(inRect)
       .agg(count(lit(1)).as("full_rows"), sum("ck").as("full_sum"))
     hit.agg(count(lit(1)).as("n_rows"), sum("ck").as("sum_ck"),
         min("day").as("min_day"), max("day").as("max_day"))

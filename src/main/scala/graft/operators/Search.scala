@@ -957,9 +957,8 @@ object Search extends QueryModule {
     * columns as null). Kilobyte-to-megabyte table; the merge-footer cost
     * is per-file metadata, never a data scan. */
   private[graft] def readDocMeta(s: SparkSession, path: String): DataFrame =
-    s.read.option("mergeSchema", "true").parquet(
-      new org.apache.hadoop.fs.Path(
-        new org.apache.hadoop.fs.Path(path), "docmeta").toString)
+    parquet(s, Seq(new org.apache.hadoop.fs.Path(
+      new org.apache.hadoop.fs.Path(path), "docmeta").toString), Map("mergeSchema" -> "true"))
 
   /** q227: the capstone composition — the LAKE is the source of truth and
     * the search index FOLLOWS it through the change feed, O(delta):

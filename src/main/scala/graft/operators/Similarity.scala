@@ -2751,7 +2751,7 @@ object Similarity extends QueryModule {
     seqIvfProbeOn(IndexStore.read(s, path, "assign"), maxSeg)
 
   /** The same probe over an ALREADY-OPENED assign frame — the q215
-    * streaming store reads through [[IndexStore.readCommitted]]
+    * streaming store reads through [[IndexStore.readSegments]]
     * (marker-gated partition dirs), the flat stores through a plain read;
     * the probe math is one definition either way. Requires columns
     * (cid, vec_id, embedding, nrm, seg); `seg` is normalized to INT (a

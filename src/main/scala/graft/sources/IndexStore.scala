@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Engine
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -371,7 +372,7 @@ object IndexStore {
   def read(s: SparkSession, path: String, table: String): DataFrame = {
     val t = new Path(new Path(path), table)
     if (!fsOf(s, t).exists(t)) healTableSwap(s, path, table)
-    s.read.parquet(t.toString)
+    Engine.parquet(s, Seq(t.toString))
   }
 
   /** The stored table names: every non-hidden subdirectory (underscore/dot
@@ -500,45 +501,19 @@ object IndexStore {
       .map(_.getPath.getName.stripPrefix(s"$partCol=").toLong).sorted
   }
 
-  /** Read a tagged-segment table RESTRICTED to committed segments — the
-    * only correct reader for a table fed by [[appendSegmentIfAbsent]]
-    * (ADVICE r13). Loads the committed partition directories by explicit
+  /** Read an EXPLICIT committed-segment set of a tagged-segment table —
+    * the only correct reader for a table fed by [[appendSegmentIfAbsent]]
+    * (ADVICE r13). Loads the named partition directories by explicit
     * path (basePath keeps `partCol` as a column), so an uncommitted
     * partial segment's files are never opened — not even for schema
-    * inference, which matters because a crash mid-write can leave a
-    * torn parquet footer that would fail ANY open. */
-  def readCommitted(s: SparkSession, path: String, table: String,
-      partCol: String): DataFrame =
-    readCommittedAsOf(s, path, table, partCol, Long.MaxValue)
-
-  /** [[readCommitted]] bounded by a segment HORIZON — the as-of read for
-    * the partition-dir store. The horizon is applied to the explicit
-    * path list itself, so a pruned segment's directory is never listed
-    * into the scan's file index: stronger than a pushed `partCol <= h`
-    * predicate (which still enumerates every file and prunes per
-    * row-group) and the form directory-level partition pruning takes at
-    * 100 TB — whole segment directories absent from planning. */
-  def readCommittedAsOf(s: SparkSession, path: String, table: String,
-      partCol: String, horizon: Long): DataFrame = {
-    val segs = committedSegments(s, path, table, partCol).filter(_ <= horizon)
-    require(segs.nonEmpty,
-      s"no committed $partCol segments at or below $horizon under $path/$table")
-    // the set came from the ledger one line up — don't re-list it
-    readSegmentsUnchecked(s, new Path(new Path(path), table).toString, partCol, segs)
-  }
-
-  private def readSegmentsUnchecked(s: SparkSession, tbl: String,
-      partCol: String, segs: Seq[Long]): DataFrame =
-    s.read.option("basePath", tbl)
-      .parquet(segs.map(v => s"$tbl/$partCol=$v"): _*)
-
-  /** Read an EXPLICIT committed-segment set of a tagged-segment table —
-    * the primitive under [[readCommitted]]/[[readCommittedAsOf]], public
-    * for multi-table stores whose visibility rule is not a plain prefix
-    * (e.g. "a segment is visible iff committed in EVERY table of the
-    * store" — the cross-table atomicity a multi-table streaming index
-    * needs when a crash can land between two tables' commits). Every
-    * requested segment must carry its marker. */
+    * inference, which matters because a crash mid-write can leave a torn
+    * parquet footer that would fail ANY open — and a segment left out of
+    * `segs` (an as-of horizon) is never listed into the scan's file index.
+    * The set is explicit for multi-table stores whose visibility rule is
+    * not a plain prefix (e.g. "a segment is visible iff committed in
+    * EVERY table of the store" — the cross-table atomicity a multi-table
+    * streaming index needs when a crash can land between two tables'
+    * commits). Every requested segment must carry its marker. */
   def readSegments(s: SparkSession, path: String, table: String,
       partCol: String, segs: Seq[Long]): DataFrame = {
     val tbl = new Path(new Path(path), table).toString
@@ -546,7 +521,7 @@ object IndexStore {
     val committed = committedSegments(s, path, table, partCol).toSet
     val bad = segs.filterNot(committed)
     require(bad.isEmpty, s"readSegments: uncommitted segments $bad under $tbl")
-    readSegmentsUnchecked(s, tbl, partCol, segs)
+    Engine.parquet(s, segs.map(v => s"$tbl/$partCol=$v"), Map("basePath" -> tbl))
   }
 
   /** The CROSS-TABLE visible segment set of a multi-table tagged-segment
@@ -776,7 +751,7 @@ object IndexStore {
     val t = new Path(new Path(path), table)
     val fs = fsOf(s, t)
     if (!fs.exists(t)) healTableSwap(s, path, table)
-    if (fs.exists(t)) s.read.parquet(t.toString)
+    if (fs.exists(t)) Engine.parquet(s, Seq(t.toString))
     else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
   }
 
@@ -1196,7 +1171,7 @@ object SketchStore {
     * with 20% slack (HLL lgK=12 rse ~1.6%, so the bound is a stable data
     * property, not a flaky statistical test). */
   def rollup(s: SparkSession, dir: String): DataFrame = {
-    val m = s.read.parquet(dir)
+    val m = Engine.parquet(s, Seq(dir))
     val months = m.select(col("scope"),
       col("n_exact").as("n_lo"), col("n_exact").as("n_hi"),
       (abs(hll_sketch_estimate(col("sk")) - col("n_exact")) <= col("n_exact") * 0.20)

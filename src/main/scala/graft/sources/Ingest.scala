@@ -137,7 +137,7 @@ object Storage {
     val total = fs.listStatus(path).filter(_.isFile)
       .filterNot(_.getPath.getName.startsWith(".")).map(_.getLen).sum
     val n = math.max(1, math.ceil(total.toDouble / targetBytes).toInt)
-    val df = spark.read.parquet(dir)
+    val df = graft.Engine.parquet(spark, Seq(dir))
     val out =
       if (sortCols.isEmpty) df.repartition(n)
       else df.repartitionByRange(n, sortCols.map(col): _*)
@@ -205,7 +205,7 @@ object Lake {
       val upd = updates.filter(col(partCol) === p).drop(partCol)
       val merged =
         if (fs.exists(live)) {
-          val old = spark.read.parquet(live.toString)
+          val old = graft.Engine.parquet(spark, Seq(live.toString))
           upd.unionByName(
             old.join(upd.select(col(keyCol)), Seq(keyCol), "left_anti"))
         } else upd
@@ -315,7 +315,7 @@ object Lake {
     * on BOTH dims reads a few percent of the files, where a date-linear
     * layout reads every file for any predicate on its second dim. */
   def readZOrdered(spark: SparkSession, dir: String, buckets: Seq[Long]): DataFrame =
-    spark.read.parquet(dir).where(col("zfile").isin(buckets: _*))
+    graft.Engine.parquet(spark, Seq(dir)).where(col("zfile").isin(buckets: _*))
 }
 
 /** Notification gating (C5/S11): the reference proceeds with the upload only

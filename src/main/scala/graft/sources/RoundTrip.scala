@@ -79,7 +79,7 @@ object RoundTrip extends QueryModule {
     o.filter(col("o_orderkey") % 2 === 1)
       .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
       .write.mode("overwrite").parquet(s"$path/gen=new")
-    s.read.option("mergeSchema", "true").parquet(path)
+    parquet(s, Seq(path), Map("mergeSchema" -> "true"))
       .agg(count(lit(1)).as("n_rows"),
            count(col("o_orderpriority")).as("n_with_priority"),
            sum(when(col("o_orderpriority").isNull, 1L).otherwise(0L)).as("n_legacy"),
@@ -129,7 +129,7 @@ object RoundTrip extends QueryModule {
     val o = table(s, dir, "orders")
     val path = tmpDir("part_orders")
     o.write.mode("overwrite").partitionBy("o_orderstatus").parquet(path)
-    s.read.parquet(path)
+    parquet(s, Seq(path))
       .filter(col("o_orderstatus") === "F")
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n"),
@@ -168,7 +168,7 @@ object RoundTrip extends QueryModule {
         .withColumn("o_orderstatus", lit("N")))
     graft.sources.Lake.mergeUpsert(s, path, upd, "o_orderkey", "o_orderpriority")
     graft.sources.Lake.mergeUpsert(s, path, upd, "o_orderkey", "o_orderpriority")
-    s.read.parquet(path)
+    parquet(s, Seq(path))
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n"),
            dsum(col("o_totalprice")).as("sum_price"),
@@ -455,10 +455,8 @@ object RoundTrip extends QueryModule {
     // the manifest-blind physical scan: every part file still on disk
     // under the lake's data root, read directly (sidecar _blooms/_stats
     // dirs are underscore-hidden and skipped by the recursive listing)
-    val residual = s.read
-      .option("recursiveFileLookup", "true")
-      .option("pathGlobFilter", "part-*.parquet")
-      .parquet(s"$lake/data")
+    val residual = parquet(s, Seq(s"$lake/data"),
+        Map("recursiveFileLookup" -> "true", "pathGlobFilter" -> "part-*.parquet"))
       .agg(coalesce(sum(when(col("doc_id") % 97 === 13, 1L).otherwise(0L)), lit(0L))
         .as("erased_bytes_remaining"))
     Snapshots.read(s, lake)

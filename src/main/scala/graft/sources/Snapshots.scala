@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Engine
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, input_file_name, lit, max, min, sum}
@@ -316,7 +317,7 @@ object Snapshots {
                          dels: Seq[(Long, String)],
                          mergeSchema: Boolean = false): DataFrame = {
     def rd(paths: Seq[String]): DataFrame =
-      s.read.option("mergeSchema", mergeSchema).parquet(paths: _*)
+      Engine.parquet(s, paths, Map("mergeSchema" -> mergeSchema.toString))
     if (dels.isEmpty) return rd(data.map(_._2))
     val delSeqs = dels.map(_._1).distinct.sorted
     data.groupBy { case (sf, _) => delSeqs.count(_ > sf) }.toSeq.sortBy(_._1)
@@ -325,7 +326,7 @@ object Snapshots {
         if (k == 0) df
         else {
           val applicable = delSeqs.takeRight(k).toSet
-          val keys = s.read.parquet(dels.filter(d => applicable(d._1)).map(_._2): _*)
+          val keys = Engine.parquet(s, dels.filter(d => applicable(d._1)).map(_._2))
             .dropDuplicates()
           df.join(keys, keys.columns.toSeq, "left_anti")
         }
@@ -376,7 +377,7 @@ object Snapshots {
     if (latest > 0) {
       val dels = deleteEntries(s, dir, latest)
       if (dels.nonEmpty) {
-        val existing = s.read.parquet(dels.head._2).columns.sorted.toSeq
+        val existing = Engine.parquet(s, Seq(dels.head._2)).columns.sorted.toSeq
         require(existing == keyCols.sorted,
           s"equality-delete keys ${keyCols.sorted} differ from the table's pending " +
             s"delete schema $existing; compact to materialize pending deletes first")
@@ -402,11 +403,14 @@ object Snapshots {
     val dataFiles = stageSegment(df, dir, "seg")
     // key values re-read from the staged segment, not df: df may be
     // nondeterministic, and the delete MUST match the rows that landed.
+    // The files were just written from df, so df's schema is what
+    // inference would find: seeded, the re-read starts no job.
+    Engine.seedParquet(s, dataFiles, df.schema)
     // coalesce(1) packs the key set into one kilobyte-scale file — right
     // for merge-batch-sized upserts; a billion-row restatement would
     // shard the delete file by key range instead (several D lines).
     val delFiles = stageSegment(
-      s.read.parquet(dataFiles: _*).select(keys.map(col): _*).dropDuplicates()
+      Engine.parquet(s, dataFiles).select(keys.map(col): _*).dropDuplicates()
         .coalesce(1), dir, "del")
     commitFileList(s, dir, dataFiles, appendBase = true,
       meta = meta + ("upsert" -> "true"), deleteFiles = delFiles)
@@ -559,7 +563,7 @@ object Snapshots {
     * dates/strings/timestamps lexicographically (ISO renderings order
     * correctly). Stats are immutable, like the files they describe. */
   private def writeSegmentStats(s: SparkSession, seg: Path, cols: Seq[String]): Unit = {
-    val back = s.read.parquet(seg.toString)
+    val back = Engine.parquet(s, Seq(seg.toString))
     val schema = back.schema
     def tag(c: String): String = schema(c).dataType match {
       case LongType | IntegerType | ShortType | ByteType => "long"
@@ -624,7 +628,7 @@ object Snapshots {
   private def writeSegmentBlooms(s: SparkSession, seg: Path, cols: Seq[String],
                                  fpp: Double): Unit = {
     import org.apache.spark.util.sketch.BloomFilter
-    val back = s.read.parquet(seg.toString)
+    val back = Engine.parquet(s, Seq(seg.toString))
     // bloom sizing = per-file row count, which every parquet footer already
     // carries — read footers driver-side (O(files) kilobyte reads) instead
     // of paying a full count() pass over the new segment per commit
@@ -668,7 +672,7 @@ object Snapshots {
     }.distinct.flatMap { segDir =>
       val bp = new Path(segDir, "_blooms")
       if (!fsOf(s, bp).exists(bp)) Seq.empty
-      else s.read.parquet(bp.toString)
+      else Engine.parquet(s, Seq(bp.toString))
         .filter(col("c") === colName && col("f").isin(want.toSeq: _*))
         .collect()
         .map(r => r.getString(0) ->
@@ -714,7 +718,7 @@ object Snapshots {
       if (kept.nonEmpty && values.nonEmpty)
         scopedRead(s, dataEntries(s, dir, v).filter(e => keptSet(e._2)),
           deleteEntries(s, dir, v))
-      else s.read.parquet(readManifest(s, dir, v): _*).filter(lit(false))
+      else Engine.parquet(s, readManifest(s, dir, v)).filter(lit(false))
     val dt = base.schema(colName).dataType
     if (values.isEmpty) base
     else base.filter(values.map(x => col(colName) === lit(x).cast(dt)).reduce(_ || _))
@@ -767,7 +771,7 @@ object Snapshots {
       if (kept.nonEmpty)
         scopedRead(s, dataEntries(s, dir, v).filter(e => keptSet(e._2)),
           deleteEntries(s, dir, v))
-      else s.read.parquet(readManifest(s, dir, v): _*).filter(lit(false))
+      else Engine.parquet(s, readManifest(s, dir, v)).filter(lit(false))
     val dt = base.schema(colName).dataType
     base.filter(col(colName) >= lit(lo).cast(dt) &&
                 col(colName) <= lit(hi).cast(dt))
@@ -800,14 +804,14 @@ object Snapshots {
     val added = newEntries.filterNot(e => oldData(e._2))
     val ins =
       if (added.nonEmpty) scopedRead(s, added, deleteEntries(s, dir, toV))
-      else s.read.parquet(newEntries.map(_._2): _*).filter(lit(false))
+      else Engine.parquet(s, newEntries.map(_._2)).filter(lit(false))
     val dataSchema = ins.schema
     val insOut = ins.withColumn("_change_type", lit("insert"))
     val oldDel = deleteEntries(s, dir, fromV).map(_._2).toSet
     val newDel = deleteEntries(s, dir, toV).map(_._2).filterNot(oldDel)
     if (newDel.isEmpty) insOut
     else {
-      val keys = s.read.parquet(newDel: _*).dropDuplicates()
+      val keys = Engine.parquet(s, newDel).dropDuplicates()
       val aligned = keys.select(dataSchema.fields.map { f =>
         (if (keys.columns.contains(f.name)) col(f.name).cast(f.dataType)
          else lit(null).cast(f.dataType)).as(f.name)

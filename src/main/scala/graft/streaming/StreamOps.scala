@@ -92,7 +92,7 @@ object StreamOps extends QueryModule {
   def streamHourly(s: SparkSession, dir: String): DataFrame = {
     tune(s)
     withStatePartitions(s, 8) {
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    val schema = table(s, dir, "events").schema
     val src = s.readStream
       .schema(schema)
       .option("pathGlobFilter", "events.parquet")
@@ -131,7 +131,7 @@ object StreamOps extends QueryModule {
   def streamSessions(s: SparkSession, dir: String): DataFrame = {
     tune(s)
     withStatePartitions(s, 8) {
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
+      val schema = table(s, dir, "events").schema
       val src = s.readStream
         .schema(schema)
         .option("pathGlobFilter", "events.parquet")
@@ -171,7 +171,7 @@ object StreamOps extends QueryModule {
     tune(s)
     import s.implicits._
     withStatePartitions(s, 8) {
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    val schema = table(s, dir, "events").schema
     val src = s.readStream
       .schema(schema)
       .option("pathGlobFilter", "events.parquet")
@@ -235,7 +235,7 @@ object StreamOps extends QueryModule {
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try withStatePartitions(s, 8) {
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
+      val schema = table(s, dir, "events").schema
       val src = s.readStream
         .schema(schema)
         .option("pathGlobFilter", "events.parquet")
@@ -290,7 +290,7 @@ object StreamOps extends QueryModule {
   def streamLate(s: SparkSession, dir: String): DataFrame = {
     tune(s)
     withStatePartitions(s, 8) {
-      val raw = s.read.parquet(s"$dir/events.parquet")
+      val raw = table(s, dir, "events")
       val schema = raw.schema
       // staged files must keep the source schema, so the derived hour
       // column is dropped again before each write
@@ -361,7 +361,7 @@ object StreamOps extends QueryModule {
   def streamMerge(s: SparkSession, dir: String): DataFrame = {
     tune(s)
     withStatePartitions(s, 8) {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = table(s, dir, "events")
         .select(col("event_id"), col("ts"), col("user_id"), col("value"))
       val schema = ev.schema
       val lake = s"$ckBase/merge_lake_${counter.incrementAndGet()}"
@@ -396,7 +396,7 @@ object StreamOps extends QueryModule {
       dropCheckpoint(s"$ckBase/$qname")
       // the staged source is cached across runs; the lake stays on tmpfs
       // until process exit — the returned frame reads it lazily
-      s.read.parquet(lake)
+      parquet(s, Seq(lake))
         .groupBy(col("shard").cast("long").as("shard"))
         .agg(count(lit(1)).as("n_users"),
              dsum(col("value")).as("sum_v"),
@@ -424,7 +424,7 @@ object StreamOps extends QueryModule {
   def streamDedup(s: SparkSession, dir: String): DataFrame = {
     tune(s)
     withStatePartitions(s, 8) {
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    val schema = table(s, dir, "events").schema
     val src = s.readStream
       .schema(schema)
       .option("pathGlobFilter", "events.parquet")
@@ -504,7 +504,7 @@ object StreamOps extends QueryModule {
       val batches = q.recentProgress.count(_.numInputRows > 0)
       require(batches >= 2, s"screen harness needs >= 2 non-empty micro-batches, got $batches")
       dropCheckpoint(s"$ckBase/$qname")
-      graft.operators.Dedup.screenSummary(s.read.parquet(out), newB)
+      graft.operators.Dedup.screenSummary(parquet(s, Seq(out)), newB)
     }
   }
 
@@ -549,7 +549,7 @@ object StreamOps extends QueryModule {
       require(batches >= 2, s"vector screen harness needs >= 2 non-empty micro-batches, got $batches")
       dropCheckpoint(s"$ckBase/$qname")
       graft.operators.Similarity.vecScreenSummary(
-        s.read.parquet(out).select(col("vec_id"), col("decision")))
+        parquet(s, Seq(out)).select(col("vec_id"), col("decision")))
     }
   }
 
@@ -592,7 +592,7 @@ object StreamOps extends QueryModule {
       require(batches >= 2, s"PQ screen harness needs >= 2 non-empty micro-batches, got $batches")
       dropCheckpoint(s"$ckBase/$qname")
       graft.operators.Similarity.pqScreenSummary(
-        s.read.parquet(out).select(col("vec_id"), col("decision")))
+        parquet(s, Seq(out)).select(col("vec_id"), col("decision")))
     }
   }
 
@@ -651,7 +651,7 @@ object StreamOps extends QueryModule {
       val batches = q.recentProgress.count(_.numInputRows > 0)
       require(batches >= 2, s"search harness needs >= 2 non-empty micro-batches, got $batches")
       dropCheckpoint(s"$ckBase/$qname")
-      s.read.parquet(out).select(col("qid"), col("doc_id"), col("score"), col("rn"))
+      parquet(s, Seq(out)).select(col("qid"), col("doc_id"), col("score"), col("rn"))
     }
   }
 
@@ -702,7 +702,7 @@ object StreamOps extends QueryModule {
         s"mix-admission harness needs >= 2 non-empty micro-batches, got $batches")
       dropCheckpoint(s"$ckBase/$qname")
       graft.operators.ScaleOps.mixAdmitSummary(
-        s.read.parquet(out).select(col("doc_id"), col("source"), col("tk"), col("decision")))
+        parquet(s, Seq(out)).select(col("doc_id"), col("source"), col("tk"), col("decision")))
     }
   }
 
@@ -750,7 +750,7 @@ object StreamOps extends QueryModule {
       require(batches >= 2,
         s"classifier harness needs >= 2 non-empty micro-batches, got $batches")
       dropCheckpoint(s"$ckBase/$qname")
-      s.read.parquet(out)
+      parquet(s, Seq(out))
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n_docs"),
           sum(when(col("logit_micro") > 0, 1L).otherwise(0L)).as("n_keep"),
@@ -949,7 +949,7 @@ object StreamOps extends QueryModule {
   def streamIntervalJoin(s: SparkSession, dir: String): DataFrame = {
     tune(s)
     withStatePartitions(s, 8) {
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
+      val schema = table(s, dir, "events").schema
       def side(tpe: String, alias: String) = {
         val st = s.readStream.schema(schema)
           .option("pathGlobFilter", "events.parquet").parquet(dir)

@@ -186,7 +186,8 @@ class CrashRecoverySpec extends AnyFunSuite {
       "PAR1garbage".getBytes)
     assert(IndexStore.committedSegments(s, store, "t", "seg") == Seq(0L, 1L),
       "an unmarkered segment is not committed")
-    val visible = IndexStore.readCommitted(s, store, "t", "seg")
+    val visible = IndexStore.readSegments(s, store, "t", "seg",
+      IndexStore.committedSegments(s, store, "t", "seg"))
     assert(visible.count() == 6L, "reader must see exactly the committed segments")
     assert(visible.select("seg").distinct().collect().map(_.getInt(0)).toSet == Set(0, 1))
 
@@ -195,7 +196,8 @@ class CrashRecoverySpec extends AnyFunSuite {
     assert(IndexStore.appendSegmentIfAbsent(s, store, "t", "seg", 2L, seg(2)))
     assert(!new java.io.File(s"$store/t/seg=2/torn-footer.parquet").exists(),
       "the healed segment must replace the crash partial wholesale")
-    assert(IndexStore.readCommitted(s, store, "t", "seg").count() == 9L)
+    assert(IndexStore.readSegments(s, store, "t", "seg",
+      IndexStore.committedSegments(s, store, "t", "seg")).count() == 9L)
 
     // layout guard: flat segment compaction refuses a partition-dir store
     // rather than flattening it and dropping the markers
@@ -353,7 +355,8 @@ class CrashRecoverySpec extends AnyFunSuite {
       java.nio.file.Paths.get(tmp.getPath, "junk"), "x".getBytes)
     IndexStore.compactSegmentLedger(s, store, "t", "seg", Seq("id"), Seq("id"))
     assert(!tmp.exists(), "stale tmp must be gone after a successful compaction")
-    val cpt = IndexStore.readCommitted(s, store, "t", "seg")
+    val cpt = IndexStore.readSegments(s, store, "t", "seg",
+      IndexStore.committedSegments(s, store, "t", "seg"))
     assert(cpt.count() == 9L, "compaction must keep every committed row")
     assert(cpt.select("seg").distinct().collect().map(_.getInt(0)).toSeq == Seq(0),
       "all rows collapse to seg=0")
@@ -369,7 +372,8 @@ class CrashRecoverySpec extends AnyFunSuite {
     val bak = new java.io.File(s"$store/.t.precompact")
     assert(live.renameTo(bak), "simulated mid-swap crash")
     IndexStore.compactSegmentLedger(s, store, "t", "seg", Seq("id"), Seq("id"))
-    assert(IndexStore.readCommitted(s, store, "t", "seg").count() == 9L,
+    assert(IndexStore.readSegments(s, store, "t", "seg",
+      IndexStore.committedSegments(s, store, "t", "seg")).count() == 9L,
       "recovery must restore the backed-up table, then compact it")
     assert(IndexStore.committedSegments(s, store, "t", "seg") == Seq(0L, 1L, 2L))
 
@@ -380,7 +384,8 @@ class CrashRecoverySpec extends AnyFunSuite {
       java.nio.file.Paths.get(bak.getPath, "junk"), "x".getBytes)
     IndexStore.compactSegmentLedger(s, store, "t", "seg", Seq("id"), Seq("id"))
     assert(!bak.exists(), "stale bak must be dropped")
-    assert(IndexStore.readCommitted(s, store, "t", "seg").count() == 9L)
+    assert(IndexStore.readSegments(s, store, "t", "seg",
+      IndexStore.committedSegments(s, store, "t", "seg")).count() == 9L)
   }
 
   test("writer contention: racing same-segment commits linearize — one writer, no torn mix") {
@@ -412,7 +417,8 @@ class CrashRecoverySpec extends AnyFunSuite {
     futs.foreach(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
     pool.shutdown()
     assert(wins.get == 1, s"exactly one racing writer must win, got ${wins.get}")
-    val rows = IndexStore.readCommitted(s, store, "t", "seg").collect()
+    val rows = IndexStore.readSegments(s, store, "t", "seg",
+      IndexStore.committedSegments(s, store, "t", "seg")).collect()
     assert(rows.length == 5, "the committed segment must be exactly one payload")
     assert(rows.map(_.getString(1)).distinct.length == 1,
       "the stored rows must come from a single writer — no torn mix of files")
@@ -430,7 +436,8 @@ class CrashRecoverySpec extends AnyFunSuite {
     (0 to 2).foreach(v => assert(
       IndexStore.appendSegmentIfAbsent(s, store, "t", "seg", v.toLong, seg(v))))
     IndexStore.writeStamp(s, store, "test")
-    val want = IndexStore.readCommitted(s, store, "t", "seg")
+    val want = IndexStore.readSegments(s, store, "t", "seg",
+      IndexStore.committedSegments(s, store, "t", "seg"))
       .select("id").collect().map(_.getLong(0)).sorted.toSeq
     // a reader loops through the compaction window: every read that
     // SUCCEEDS must return the full committed row-set (compaction
@@ -448,7 +455,8 @@ class CrashRecoverySpec extends AnyFunSuite {
     val reader = new Thread(() => {
       while (!stop.get()) {
         try {
-          val got = IndexStore.readCommitted(s, store, "t", "seg")
+          val got = IndexStore.readSegments(s, store, "t", "seg",
+            IndexStore.committedSegments(s, store, "t", "seg"))
             .select("id").collect().map(_.getLong(0)).sorted.toSeq
           reads.incrementAndGet()
           if (got != want)
@@ -463,7 +471,8 @@ class CrashRecoverySpec extends AnyFunSuite {
     assert(reads.get > 0, "the concurrent reader must have completed at least one read")
     // post-compaction: ledger intact (tombstones answer committed), rows preserved
     assert(IndexStore.committedSegments(s, store, "t", "seg") == Seq(0L, 1L, 2L))
-    val after = IndexStore.readCommitted(s, store, "t", "seg")
+    val after = IndexStore.readSegments(s, store, "t", "seg",
+      IndexStore.committedSegments(s, store, "t", "seg"))
       .select("id").collect().map(_.getLong(0)).sorted.toSeq
     assert(after == want, "compaction must preserve the committed row-set")
   }
