@@ -574,33 +574,6 @@ object Analytics extends QueryModule {
     s"""SELECT rule, n_violations, n_checked, n_violations = 0 AS passed
        |FROM ($dqAuditSql)""".stripMargin
 
-  /** q187: PageRank over the customer↔supplier trade graph — the
-    * link-authority scoring a curation pipeline uses to weight sources
-    * (domain-rank quality priors; the original motivation for the
-    * algorithm, Page et al. 1999). Graph construction and iteration are
-    * both engine-native:
-    *  - nodes: customers (2k) and suppliers (2k+1) in one id space;
-    *    edges: DISTINCT trade pairs from orders ⨝ lineitem, materialized
-    *    in BOTH directions so every node has outdegree ≥ 1 — no dangling
-    *    mass to redistribute, and the per-iteration groupBy(dst) covers
-    *    the whole node set.
-    *  - 3 power iterations, damping 0.85, entirely in 64-bit INTEGER
-    *    femto-units (rank mass 10^15): contribution = r div deg,
-    *    update = (0.15·10^15 div N) + (85·Σcontrib) div 100. Truncating
-    *    integer division is identical in Spark (`div`) and DuckDB (`//`)
-    *    for the non-negative values here, so ranks are bit-identical
-    *    cross-engine — no float summation-order hazard at any
-    *    parallelism (the q121 integer-micro-unit lesson applied to an
-    *    iterative algorithm).
-    *  - per iteration: ONE shuffle (groupBy dst) plus the rank-frame
-    *    join; edges and degrees are computed once and localCheckpointed
-    *    (the iterative-loop contract — cache alone nests the analyzed
-    *    plan). At 100 TB edges would be bucketed by src so the
-    *    rank-join co-locates; the iteration count, not data volume,
-    *    bounds plan depth.
-    * Output: top-20 nodes by rank (ties broken by node id), rank in
-    * femtos — discrete, so the compare is exact.
-    */
   /** The trade graph substrate shared by q187 (PageRank) and q189
     * (TrustRank): the loop-invariant (src, dst, deg) frame plus the degree
     * frame, built once per (session, dir). Checkpoints are LAZY: the
@@ -633,8 +606,6 @@ object Analytics extends QueryModule {
     (edgeDeg, deg)
   }
 
-  /** The full post-iteration rank frame (node, r) — q187's substrate,
-    * exposed for the mass-conservation property test. */
   /** The integer power iteration over a prepared (src, dst, deg) frame —
     * shared by the fixture query and [[pageRankOn]] (the arbitrary-graph
     * entry the differential property test drives). */
@@ -675,6 +646,8 @@ object Analytics extends QueryModule {
     out
   }
 
+  /** The full post-iteration rank frame (node, r) — q187's substrate,
+    * exposed for the mass-conservation property test. */
   private[graft] def pageRankRanks(s: SparkSession, dir: String): DataFrame = {
     tune(s)
     val (edgeDeg, deg) = tradeGraph(s, dir)
@@ -682,6 +655,33 @@ object Analytics extends QueryModule {
     prIterate(edgeDeg, deg, deg.count(), iters = 3)
   }
 
+  /** q187: PageRank over the customer↔supplier trade graph — the
+    * link-authority scoring a curation pipeline uses to weight sources
+    * (domain-rank quality priors; the original motivation for the
+    * algorithm, Page et al. 1999). Graph construction and iteration are
+    * both engine-native:
+    *  - nodes: customers (2k) and suppliers (2k+1) in one id space;
+    *    edges: DISTINCT trade pairs from orders ⨝ lineitem, materialized
+    *    in BOTH directions so every node has outdegree ≥ 1 — no dangling
+    *    mass to redistribute, and the per-iteration groupBy(dst) covers
+    *    the whole node set.
+    *  - 3 power iterations, damping 0.85, entirely in 64-bit INTEGER
+    *    femto-units (rank mass 10^15): contribution = r div deg,
+    *    update = (0.15·10^15 div N) + (85·Σcontrib) div 100. Truncating
+    *    integer division is identical in Spark (`div`) and DuckDB (`//`)
+    *    for the non-negative values here, so ranks are bit-identical
+    *    cross-engine — no float summation-order hazard at any
+    *    parallelism (the q121 integer-micro-unit lesson applied to an
+    *    iterative algorithm).
+    *  - per iteration: ONE shuffle (groupBy dst) plus the rank-frame
+    *    join; edges and degrees are computed once and localCheckpointed
+    *    (the iterative-loop contract — cache alone nests the analyzed
+    *    plan). At 100 TB edges would be bucketed by src so the
+    *    rank-join co-locates; the iteration count, not data volume,
+    *    bounds plan depth.
+    * Output: top-20 nodes by rank (ties broken by node id), rank in
+    * femtos — discrete, so the compare is exact.
+    */
   def pageRank(s: SparkSession, dir: String): DataFrame = {
     val top = pageRankRanks(s, dir).orderBy(col("r").desc, col("node")).limit(20)
     // rn assigned over exactly 20 rows (post-limit, the q167 pattern)

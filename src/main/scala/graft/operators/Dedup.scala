@@ -2,10 +2,19 @@ package graft.operators
 
 import graft.Engine._
 import graft.{GQuery, QueryModule}
-import graft.sources.IndexStore
+import graft.sources.{IndexStore, RoundTrip}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+/** A frozen near-dup screening index: the unique-text digest set
+  * (`tkey`), rep-level MinHash signatures (`doc_id`, `m0..m15`), and
+  * capped LSH band rows (`doc_id`, `band`, `bk`). Build with
+  * [[Dedup.buildIndex]], screen batches with [[Dedup.screenBatch]],
+  * persist/load/refresh via [[Dedup.persistIndex]] /
+  * [[Dedup.loadIndex]] / [[Dedup.refreshIndex]].
+  */
+final case class DedupIndex(digests: DataFrame, sigs: DataFrame, bands: DataFrame)
 
 /** Document deduplication for LLM training-data pipelines: exact dedup,
   * MinHash+LSH near-dup candidates (Broder 1997, "On the resemblance and
@@ -32,15 +41,6 @@ import org.apache.spark.sql.functions._
   * idempotency probe (/root/reference/data_pipeline.py:138-142); this module
   * is the LLM-pipeline extension surface (BASELINE.json north star).
   */
-/** A frozen near-dup screening index: the unique-text digest set
-  * (`tkey`), rep-level MinHash signatures (`doc_id`, `m0..m15`), and
-  * capped LSH band rows (`doc_id`, `band`, `bk`). Build with
-  * [[Dedup.buildIndex]], screen batches with [[Dedup.screenBatch]],
-  * persist/load/refresh via [[Dedup.persistIndex]] /
-  * [[Dedup.loadIndex]] / [[Dedup.refreshIndex]].
-  */
-final case class DedupIndex(digests: DataFrame, sigs: DataFrame, bands: DataFrame)
-
 object Dedup extends QueryModule {
 
   private val P = 2147483647L // 2^31 - 1 (Mersenne prime)
@@ -602,19 +602,6 @@ object Dedup extends QueryModule {
        |WHERE bit_count(xor(a.fp, b.fp)) <= 3""".stripMargin
   }
 
-  /** Near-dup cluster formation: connected components over the SimHash
-    * pair graph (hamming <= 3), then per-cluster canonical selection
-    * (min doc_id) — the step that turns pairwise near-dup hits into "keep
-    * one per family" for corpus curation.
-    *
-    * Algorithm: iterative min-label propagation to fixpoint — each round,
-    * every node takes the min label among itself and its neighbors; rounds
-    * needed = component diameter (near-dup families are shallow). This is
-    * the standard distributed CC shape (GraphX/Pregel run the same
-    * supersteps); data never leaves the executors — the driver only sees
-    * the per-round convergence count. The oracle computes the same
-    * components with a recursive CTE.
-    */
   /** Connected components over an undirected pair list `(da, db)`:
     * returns one row per node with its component label (the minimum
     * reachable node id). Reusable across any near-dup pair source
@@ -850,6 +837,19 @@ object Dedup extends QueryModule {
        |FROM deg GROUP BY k""".stripMargin
   }
 
+  /** Near-dup cluster formation: connected components over the SimHash
+    * pair graph (hamming <= 3), then per-cluster canonical selection
+    * (min doc_id) — the step that turns pairwise near-dup hits into "keep
+    * one per family" for corpus curation.
+    *
+    * Algorithm: iterative min-label propagation to fixpoint — each round,
+    * every node takes the min label among itself and its neighbors; rounds
+    * needed = component diameter (near-dup families are shallow). This is
+    * the standard distributed CC shape (GraphX/Pregel run the same
+    * supersteps); data never leaves the executors — the driver only sees
+    * the per-round convergence count. The oracle computes the same
+    * components with a recursive CTE.
+    */
   def dedupClusters(s: SparkSession, dir: String): DataFrame = {
     tune(s)
     val labels = connectedComponents(simhashPairs(s, dir).select(col("da"), col("db")))
@@ -1220,6 +1220,14 @@ object Dedup extends QueryModule {
   private[graft] def fixtureIndexPath(dir: String): String =
     "target/graft_index/dedup_" + IndexStore.dirTag(dir)
 
+  /** Build-if-stale the fixture screening store and return its path —
+    * the cross-family manifest (q236) enumerates its tables without
+    * needing the loaded frames. */
+  private[graft] def ensureCorpusIndex(s: SparkSession, dir: String): String = {
+    corpusIndex(s, dir)
+    fixtureIndexPath(dir)
+  }
+
   /** The frozen corpus index of the registered rig, PERSISTED: built once
     * from the fixture corpus (docs < 100000) into [[fixtureIndexPath]],
     * validated by a metadata-only source stamp, and LOADED from parquet
@@ -1239,14 +1247,6 @@ object Dedup extends QueryModule {
     * only when its last holder goes, which without this mapping would
     * take an O(corpus) rescan to determine. One staged store swap;
     * pre-v3 stores fail the stamp and rebuild. */
-  /** Build-if-stale the fixture screening store and return its path —
-    * the cross-family manifest (q236) enumerates its tables without
-    * needing the loaded frames. */
-  private[graft] def ensureCorpusIndex(s: SparkSession, dir: String): String = {
-    corpusIndex(s, dir)
-    fixtureIndexPath(dir)
-  }
-
   private def corpusIndex(s: SparkSession, dir: String): DedupIndex = {
     val path = fixtureIndexPath(dir)
     val stamp = "v3|" +
@@ -1500,9 +1500,56 @@ object Dedup extends QueryModule {
     val newB = augmentedDocs(s, dir).filter(col("doc_id") >= 100000L)
     val audit = rd("digests")
       .agg(countDistinct(col("tkey")).as("n_unique_texts"))
-      .withColumn("n_feed_inserts", lit(meta("n_feed_inserts").toLong))
-      .withColumn("n_feed_deletes", lit(meta("n_feed_deletes").toLong))
+      .transform(RoundTrip.withFeedCounts(meta))
     screenSummary(screenBatch(synced, newB), newB).crossJoin(broadcast(audit))
+  }
+
+  /** The dedup corpus lake's feed cycle
+    * ([[RoundTrip.feedCycle]]) behind the q228/q234 sync
+    * stores: v1 is the < 100000 augmented slice; v2 deletes the takedown
+    * works (doc_id % 97 = 13); the arrivals are exact re-ingestions the
+    * text-keyed index tolerates by design. Inserts as `(doc_id, text)`,
+    * the delete ids pinned for broadcast. */
+  private def corpusFeedFixture(s: SparkSession, dir: String,
+      name: String): RoundTrip.Feed = {
+    val f = RoundTrip.feedCycle(s, name, dir,
+      augmentedDocs(s, dir).filter(col("doc_id") < 100000L), "doc_id",
+      col("doc_id") % 97 === 13, col("text"), col("lang"))
+    f.copy(inserts = f.inserts.select(col("doc_id"), col("text")),
+      deletes = broadcast(f.deletes.localCheckpoint()))
+  }
+
+  /** A sync store's four dedup tables over `docs`: the signature index
+    * plus the member-level keys `(tkey, doc_id)` group survival reads,
+    * each through `tag` (the masked store's segment column). */
+  private def syncTables(docs: DataFrame,
+      tag: DataFrame => DataFrame): Seq[(String, DataFrame)] = {
+    val idx = buildIndex(docs)
+    Seq("digests" -> idx.digests, "sigs" -> idx.sigs, "bands" -> idx.bands,
+      "keys" -> docs.select(md5(col("text")).as("tkey"), col("doc_id")))
+      .map { case (t, df) => t -> tag(df) }
+  }
+
+  /** The dedup family's group-survival decision for deleting the member
+    * ids `del` from the member-level `keys` (tkey, doc_id, …): a text is
+    * forgotten only when its LAST holder goes. `kept` = the surviving
+    * holders, `gone` = the texts left with none, `erasedReps` = the rep
+    * (min doc_id) ids of the gone texts, whose signatures and bands go
+    * too. All pinned (`gone`, `erasedReps` broadcast), so a caller may
+    * rewrite the tables they were read from. */
+  private case class GroupSurvival(kept: DataFrame, gone: DataFrame,
+      erasedReps: DataFrame)
+
+  private def groupSurvival(keys: DataFrame, del: DataFrame): GroupSurvival = {
+    val affected = keys.join(del, "doc_id").select(col("tkey")).distinct()
+    val kept = keys.join(del, Seq("doc_id"), "left_anti").localCheckpoint()
+    val gone = broadcast(
+      affected.join(kept.select(col("tkey")).distinct(), Seq("tkey"), "left_anti")
+        .localCheckpoint())
+    val erasedReps = broadcast(keys.groupBy(col("tkey"))
+      .agg(min(col("doc_id")).as("doc_id"))
+      .join(gone, "tkey").select(col("doc_id")).localCheckpoint())
+    GroupSurvival(kept, gone, erasedReps)
   }
 
   /** Build-if-stale the feed-synced dedup store q228 probes — the q222
@@ -1511,80 +1558,30 @@ object Dedup extends QueryModule {
     * apply land ONCE per (process, corpus) behind a stamp check, so the
     * recurring benched cost is the warm screen probe. Final stamp only
     * AFTER the apply (crash mid-sync rebuilds); feed counts in meta. */
-  /** One drained feed cycle over the dedup corpus lake, shared by the
-    * q228 physical and q234 masked sync-store builders (MaskFoldSpec's
-    * fold-equality contract assumes both stores saw the SAME feed):
-    * v1 commits the corpus (the < 100000 augmented slice); v2 deletes
-    * the takedown works (doc_id % 97 = 13); v3 appends the % 31 = 2
-    * texts under fresh ids (exact re-ingestions the text-keyed index
-    * tolerates by design); feed drained once. */
-  private case class CorpusFeed(base: DataFrame, inserts: DataFrame,
-      del: DataFrame)
-
-  private def corpusFeedFixture(s: SparkSession, dir: String,
-      name: String): CorpusFeed = {
-    val lake = graft.sources.RoundTrip.freshLake(s, name, dir)
-    val corpus = augmentedDocs(s, dir).filter(col("doc_id") < 100000L)
-    val v1 = graft.sources.Snapshots.commit(corpus, lake, append = false)
-    val base = graft.sources.Snapshots.read(s, lake, v1)
-    graft.sources.Snapshots.commitDelete(
-      corpus.filter(col("doc_id") % 97 === 13).select("doc_id"), lake)
-    val v3 = graft.sources.Snapshots.commit(
-      corpus.filter(col("doc_id") % 31 === 2)
-        .select((col("doc_id") + 500000L).as("doc_id"), col("text"), col("lang")),
-      lake, append = true)
-    val feed = graft.sources.Snapshots.changes(s, lake, v1, v3).localCheckpoint()
-    CorpusFeed(base,
-      feed.filter(col("_change_type") === "insert")
-        .select(col("doc_id"), col("text")),
-      broadcast(feed.filter(col("_change_type") === "delete")
-        .select(col("doc_id")).localCheckpoint()))
-  }
-
   private[graft] def dedupSyncStore(s: SparkSession, dir: String): String = {
     val idxPath = IndexStore.workPath("target/tmp/dedup_sync_" + IndexStore.dirTag(dir))
     val stamp = "dedupsync2|" +
       IndexStore.sourceStamp(s, Seq(s"$dir/documents.parquet"))
     IndexStore.stamped(s, idxPath, stamp) {
       val f = corpusFeedFixture(s, dir, "dedupsync")
-      val idx0 = buildIndex(f.base)
-      IndexStore.write(s, idxPath, "dedupsync-building", Seq(
-        "digests" -> idx0.digests, "sigs" -> idx0.sigs, "bands" -> idx0.bands,
-        "keys" -> f.base.select(md5(col("text")).as("tkey"), col("doc_id"))))
+      IndexStore.write(s, idxPath, "dedupsync-building", syncTables(f.base, identity))
       val inserts = f.inserts
-      val del = f.del
+      val del = f.deletes
       def rd(t: String) = IndexStore.read(s, idxPath, t)
-      // DELETE leg: group survival from the member-level keys. The
-      // surviving-holder set is computed ONCE (review catch: it is both
-      // the survival evidence and the replacement keys table)
-      val keys = rd("keys")
-      val affected = keys.join(del, "doc_id").select(col("tkey")).distinct()
-      val kept = keys.join(del, Seq("doc_id"), "left_anti").localCheckpoint()
-      val gone = broadcast(
-        affected.join(kept.select(col("tkey")).distinct(), Seq("tkey"), "left_anti")
-          .localCheckpoint())
-      val erasedReps = broadcast(keys.groupBy(col("tkey"))
-        .agg(min(col("doc_id")).as("doc_id"))
-        .join(gone, "tkey").select(col("doc_id")).localCheckpoint())
-      val dig2 = rd("digests").join(gone, Seq("tkey"), "left_anti").localCheckpoint()
-      val sig2 = rd("sigs").join(erasedReps, Seq("doc_id"), "left_anti").localCheckpoint()
-      val band2 = rd("bands").join(erasedReps, Seq("doc_id"), "left_anti").localCheckpoint()
+      // DELETE leg: the group-survival decision, applied by rewrite
+      val g = groupSurvival(rd("keys"), del)
+      val dig2 = rd("digests").join(g.gone, Seq("tkey"), "left_anti").localCheckpoint()
+      val sig2 = rd("sigs").join(g.erasedReps, Seq("doc_id"), "left_anti").localCheckpoint()
+      val band2 = rd("bands").join(g.erasedReps, Seq("doc_id"), "left_anti").localCheckpoint()
       IndexStore.inParallel(Seq(
         () => IndexStore.replaceTable(s, idxPath, "digests", dig2),
         () => IndexStore.replaceTable(s, idxPath, "sigs", sig2),
         () => IndexStore.replaceTable(s, idxPath, "bands", band2),
-        () => IndexStore.replaceTable(s, idxPath, "keys", kept)))
+        () => IndexStore.replaceTable(s, idxPath, "keys", g.kept)))
       // INSERT leg: the refresh shape — the arrivals' own signatures append
-      val add = buildIndex(inserts)
-      IndexStore.inParallel(Seq(
-        () => IndexStore.append(s, idxPath, "digests", add.digests),
-        () => IndexStore.append(s, idxPath, "sigs", add.sigs),
-        () => IndexStore.append(s, idxPath, "bands", add.bands),
-        () => IndexStore.append(s, idxPath, "keys",
-          inserts.select(md5(col("text")).as("tkey"), col("doc_id")))))
-      IndexStore.writeStamp(s, idxPath, stamp, Map(
-        "n_feed_inserts" -> inserts.count().toString,
-        "n_feed_deletes" -> del.count().toString))
+      IndexStore.inParallel(syncTables(inserts, identity).map { case (t, df) =>
+        () => IndexStore.append(s, idxPath, t, df) })
+      IndexStore.writeStamp(s, idxPath, stamp, f.counts)
     }
     idxPath
   }
@@ -1659,48 +1656,28 @@ object Dedup extends QueryModule {
       IndexStore.sourceStamp(s, Seq(s"$dir/documents.parquet"))
     IndexStore.stamped(s, idxPath, stamp) {
       val f = corpusFeedFixture(s, dir, "dedupmasksync")
-      val idx0 = buildIndex(f.base)
-      def seg0(df: DataFrame) = df.withColumn("seg", lit(0L))
-      IndexStore.write(s, idxPath, "dedupmasksync-building", Seq(
-        "digests" -> seg0(idx0.digests), "sigs" -> seg0(idx0.sigs),
-        "bands" -> seg0(idx0.bands),
-        "keys" -> seg0(f.base.select(md5(col("text")).as("tkey"), col("doc_id")))))
+      IndexStore.write(s, idxPath, "dedupmasksync-building",
+        syncTables(f.base, _.withColumn("seg", lit(0L))))
       val inserts = f.inserts
-      val del = f.del
-      // group survival, computed ONCE (the q228 decision) — result
-      // stored as masks, nothing rewritten
-      val keys = IndexStore.read(s, idxPath, "keys")
-      val affected = keys.join(del, "doc_id").select(col("tkey")).distinct()
-      val survivors = keys.join(del, Seq("doc_id"), "left_anti")
-        .select(col("tkey")).distinct()
-      val gone = affected.join(survivors, Seq("tkey"), "left_anti").localCheckpoint()
-      val erasedReps = keys.groupBy(col("tkey"))
-        .agg(min(col("doc_id")).as("doc_id"))
-        .join(broadcast(gone), "tkey").select(col("doc_id")).localCheckpoint()
+      val del = f.deletes
+      // the q228 group-survival decision, stored as masks — nothing
+      // rewritten
+      val g = groupSurvival(IndexStore.read(s, idxPath, "keys"), del)
       IndexStore.appendDeleteMask(s, idxPath,
         del.withColumn("seq", lit(0L)))
       IndexStore.append(s, idxPath, "mask_gone",
-        gone.withColumn("seq", lit(0L)))
+        g.gone.withColumn("seq", lit(0L)))
       IndexStore.append(s, idxPath, "mask_reps",
-        erasedReps.withColumn("seq", lit(0L)))
+        g.erasedReps.withColumn("seq", lit(0L)))
       // INSERT leg: the refresh shape, tagged seg 1
-      val add = buildIndex(inserts)
-      def seg1(df: DataFrame) = df.withColumn("seg", lit(1L))
-      IndexStore.inParallel(Seq(
-        () => IndexStore.append(s, idxPath, "digests", seg1(add.digests)),
-        () => IndexStore.append(s, idxPath, "sigs", seg1(add.sigs)),
-        () => IndexStore.append(s, idxPath, "bands", seg1(add.bands)),
-        () => IndexStore.append(s, idxPath, "keys",
-          seg1(inserts.select(md5(col("text")).as("tkey"), col("doc_id"))))))
+      IndexStore.inParallel(syncTables(inserts, _.withColumn("seg", lit(1L))).map {
+        case (t, df) => () => IndexStore.append(s, idxPath, t, df) })
       // auto-fold policy (VERDICT r15 item 2): member-level fraction
       // (deleted ids over keys rows) — ~1% here, below the 0.1 default
       val folded = IndexStore.autoFoldIfNeeded(
         s, idxPath, "keys", "doc_id")(
         IndexStore.foldMasks(s, idxPath, DedupMaskFold))
-      IndexStore.writeStamp(s, idxPath, stamp, Map(
-        "n_feed_inserts" -> inserts.count().toString,
-        "n_feed_deletes" -> del.count().toString,
-        "auto_folded" -> folded.toString))
+      IndexStore.writeStamp(s, idxPath, stamp, f.counts + ("auto_folded" -> folded.toString))
     }
     idxPath
   }
@@ -1761,8 +1738,7 @@ object Dedup extends QueryModule {
     val audit = synced.digests
       .agg(countDistinct(col("tkey")).as("n_unique_texts"))
       .crossJoin(broadcast(del.agg(count(lit(1)).as("n_mask_rows"))))
-      .withColumn("n_feed_inserts", lit(meta("n_feed_inserts").toLong))
-      .withColumn("n_feed_deletes", lit(meta("n_feed_deletes").toLong))
+      .transform(RoundTrip.withFeedCounts(meta))
     screenSummary(screenBatch(synced, newB), newB).crossJoin(broadcast(audit))
   }
 
@@ -2088,6 +2064,13 @@ object Dedup extends QueryModule {
        |SELECT * FROM sf UNION ALL SELECT * FROM sa""".stripMargin
   }
 
+  /** q125's deterministic hash-bucket split label, checkable per row —
+    * shared by the leakage audit (q132) and its repair (q180). */
+  private def splitOf(c: org.apache.spark.sql.Column) = {
+    val b = pmod(md5Long(concat(lit("split#"), c.cast("string"))), lit(10))
+    when(b < 8, "train").when(b === 8, "val").otherwise("test")
+  }
+
   /** Train/test split leakage: near-dup pairs that CROSS the q125 split
     * boundary — each such pair is an eval-contamination event (a test doc
     * whose near-copy was trained on), the thing dedup-before-split exists
@@ -2101,13 +2084,6 @@ object Dedup extends QueryModule {
     * Split labels are least/greatest-normalized so (train,test) and
     * (test,train) aggregate together.
     */
-  /** q125's deterministic hash-bucket split label, checkable per row —
-    * shared by the leakage audit (q132) and its repair (q180). */
-  private def splitOf(c: org.apache.spark.sql.Column) = {
-    val b = pmod(md5Long(concat(lit("split#"), c.cast("string"))), lit(10))
-    when(b < 8, "train").when(b === 8, "val").otherwise("test")
-  }
-
   def splitLeakage(s: SparkSession, dir: String): DataFrame = {
     tune(s)
     minhashCandidates(s, dir)

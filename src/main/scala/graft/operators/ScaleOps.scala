@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Engine._
 import graft.{GQuery, QueryModule}
-import graft.sources.IndexStore
+import graft.sources.{IndexStore, RoundTrip}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -705,21 +705,6 @@ object ScaleOps extends QueryModule {
        |FROM pf GROUP BY layout""".stripMargin
   }
 
-  /** Z-order lake WRITER, scored on its actual output files — q138 proves
-    * the envelope win on paper; this query produces the layout for real.
-    * Orders rows (key, raw dims, 8-bit buckets) are routed through
-    * [[graft.sources.Lake.writeZOrdered]]: file id = Morton key div 256,
-    * hive-partitioned, one task (hence ONE parquet part) per z-bucket.
-    * The written lake is then read BACK and every physical file — grouped
-    * by `input_file_name()`, not by any logical column — is scored with
-    * q138's exact-integer envelope metric. The oracle computes what the
-    * layout SHOULD score from the same data; matching proves the writer
-    * realized it, and the in-frame boolean pins the one-file-per-bucket
-    * layout contract. Dual-dim coverage lands near q138's z-order number
-    * (~6.5% per dim) — versus 99.9% for the date-linear layout a naive
-    * writer produces — so a predicate on EITHER dim prunes ~15/16 of the
-    * files before opening a footer.
-    */
   /** Orders rows bucketed to the 8-bit (cb, db) grid — the shared input of
     * the z-order writer (q141) and the pruned-scan reader (q146). */
   private def zBucketedOrders(s: SparkSession, dir: String): DataFrame = {
@@ -748,6 +733,21 @@ object ScaleOps extends QueryModule {
     lakePath
   }
 
+  /** Z-order lake WRITER, scored on its actual output files — q138 proves
+    * the envelope win on paper; this query produces the layout for real.
+    * Orders rows (key, raw dims, 8-bit buckets) are routed through
+    * [[graft.sources.Lake.writeZOrdered]]: file id = Morton key div 256,
+    * hive-partitioned, one task (hence ONE parquet part) per z-bucket.
+    * The written lake is then read BACK and every physical file — grouped
+    * by `input_file_name()`, not by any logical column — is scored with
+    * q138's exact-integer envelope metric. The oracle computes what the
+    * layout SHOULD score from the same data; matching proves the writer
+    * realized it, and the in-frame boolean pins the one-file-per-bucket
+    * layout contract. Dual-dim coverage lands near q138's z-order number
+    * (~6.5% per dim) — versus 99.9% for the date-linear layout a naive
+    * writer produces — so a predicate on EITHER dim prunes ~15/16 of the
+    * files before opening a footer.
+    */
   def zorderWrite(s: SparkSession, dir: String): DataFrame = {
     tune(s)
     val lakePath = buildZLake(s, dir)
@@ -1297,10 +1297,6 @@ object ScaleOps extends QueryModule {
 
   private val mixtureRealizeSql = realizeSqlAt(waterfillCtes)
 
-  /** The greedy-prefix realization chain over a given allocation CTE
-    * chain — shared by the q250 oracle (19/20 budget) and the q252
-    * oracle (1/10 budget: the SAME single-window semantics the two-phase
-    * implementation must reproduce bit-for-bit). */
   /** The realization itself as CTEs (`d`/`p`/`k`/`realized` in scope,
     * expects an `alloc` chain) — shared by the q250/q252 oracles and the
     * q254 data-card oracle built over the realized mixture. */
@@ -1322,6 +1318,10 @@ object ScaleOps extends QueryModule {
        |  MIN(alloc) AS alloc
        |  FROM k GROUP BY source)""".stripMargin
 
+  /** The greedy-prefix realization chain over a given allocation CTE
+    * chain — shared by the q250 oracle (19/20 budget) and the q252
+    * oracle (1/10 budget: the SAME single-window semantics the two-phase
+    * implementation must reproduce bit-for-bit). */
   private def realizeSqlAt(ctes: String) =
     s"""WITH $ctes,
        |$realizeChainSql
@@ -2157,6 +2157,18 @@ object ScaleOps extends QueryModule {
           expr("substr(text, 11)").as("text")))
   }
 
+  /** The per-source ppm admission rates from survivor token counts —
+    * ONE definition for the frozen (q258) and feed-synced (q260) policy
+    * stores: the tight 1/10 waterfill re-solved over whatever counts the
+    * store currently carries, expressed as the order-independent lottery
+    * rate (alloc/c of the hash space, wide-integer exact). */
+  private def ratesFrom(cnts: DataFrame): DataFrame =
+    waterfillFromCounts(cnts, 1L, 10L)
+      .withColumn("rate_ppm",
+        when(col("tokens") === 0L, 0L).otherwise(
+          expr("CAST((CAST(alloc AS DECIMAL(38,0)) * 1000000) div CAST(tokens AS DECIMAL(38,0)) AS BIGINT)")))
+      .select(col("source"), col("rate_ppm"))
+
   /** The frozen mix-admission POLICY store (q258's substrate): the batch
     * dedup-aware solve (q256's chain — exact-dedup survivor counts of
     * the corpus, the tight 1/10 waterfill) realized as per-source ppm
@@ -2170,18 +2182,6 @@ object ScaleOps extends QueryModule {
     * stream only probes the frozen snapshot (the q134/q140/q204
     * convention: arrivals are screened against the policy of the last
     * batch solve, never a mid-stream mutation). */
-  /** The per-source ppm admission rates from survivor token counts —
-    * ONE definition for the frozen (q258) and feed-synced (q260) policy
-    * stores: the tight 1/10 waterfill re-solved over whatever counts the
-    * store currently carries, expressed as the order-independent lottery
-    * rate (alloc/c of the hash space, wide-integer exact). */
-  private def ratesFrom(cnts: DataFrame): DataFrame =
-    waterfillFromCounts(cnts, 1L, 10L)
-      .withColumn("rate_ppm",
-        when(col("tokens") === 0L, 0L).otherwise(
-          expr("CAST((CAST(alloc AS DECIMAL(38,0)) * 1000000) div CAST(tokens AS DECIMAL(38,0)) AS BIGINT)")))
-      .select(col("source"), col("rate_ppm"))
-
   private[graft] def mixAdmitStore(s: SparkSession, dir: String): String = {
     val path = "target/graft_index/mixadm_" + IndexStore.dirTag(dir)
     val stamp = "mixadm2|" +
@@ -2304,6 +2304,16 @@ object ScaleOps extends QueryModule {
       .select(col("dh"), col("k.doc_id").as("doc_id"),
         col("k.source").as("source"), col("k.tk").as("tk"))
 
+  /** The v1 policy state over a feed's `base`: the member keys (pinned),
+    * the NULL-free digest set and the per-source canonical counts — the
+    * seed of the q260/q265 sync stores and the q266 stream. */
+  private def mixAdmSeed(base: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    val keys = digestKeys(base).localCheckpoint()
+    (keys, keys.select(col("dh")).filter(col("dh").isNotNull).distinct(),
+      canonOf(keys).groupBy(col("source")).agg(sum(col("tk")).as("c"))
+        .filter(col("c") > 0L))
+  }
+
   /** One O(delta) feed application onto the synced policy store at
     * `path`: deletes remove holders (a digest is forgotten only when its
     * LAST holder goes — q228's group-survival rule — and a deleted
@@ -2334,36 +2344,14 @@ object ScaleOps extends QueryModule {
       inserts: DataFrame, delKeys: DataFrame): Unit = {
     IndexStore.writeStamp(s, path, "mixadmsync-applying")
     def rd(t: String) = IndexStore.read(s, path, t)
-    val del = broadcast(delKeys.select(col("doc_id")).localCheckpoint())
-    val insKeys = digestKeys(inserts).localCheckpoint()
-    val keysT = rd("keys")
-    val touched = broadcast(
-      keysT.join(del, Seq("doc_id")).select(col("dh"))
-        .unionByName(insKeys.select(col("dh")))
-        .distinct().localCheckpoint())
-    def restrict(k: DataFrame): DataFrame =
-      k.join(touched.withColumnRenamed("dh", "tdh"),
-        col("dh") <=> col("tdh")).drop("tdh")
-    val oldC = canonOf(restrict(keysT)).localCheckpoint()
-    val keys2 = keysT.join(del, Seq("doc_id"), "left_anti")
-      .unionByName(insKeys).localCheckpoint()
-    val newC = canonOf(restrict(keys2)).localCheckpoint()
-    // digest-set movement: gone = touched groups whose last holder left;
-    // added = touched groups that exist only post-apply (restored texts)
-    val goneD = broadcast(oldC.select(col("dh"))
-      .join(newC.select(col("dh").as("ndh")), col("dh") <=> col("ndh"), "left_anti")
-      .localCheckpoint())
-    val addD = newC.select(col("dh"))
-      .join(oldC.select(col("dh").as("odh")), col("dh") <=> col("odh"), "left_anti")
-      .filter(col("dh").isNotNull)
-    val dig2 = rd("digests").join(goneD, Seq("dh"), "left_anti")
-      .unionByName(addD).localCheckpoint()
-    // count deltas from canonical movement only (old out, new in), merged
-    // into the |sources|-row counts; a source whose canonicals all left
-    // drops out, exactly as the oracle's survivor grouping never forms it
-    val counts2 = rd("counts")
-      .unionByName(oldC.groupBy(col("source")).agg((-sum(col("tk"))).as("c")))
-      .unionByName(newC.groupBy(col("source")).agg(sum(col("tk")).as("c")))
+    val sd = survivalDelta(rd("keys"), delKeys.select(col("doc_id")).localCheckpoint(),
+      digestKeys(inserts).localCheckpoint())
+    val keys2 = sd.keysAfter.localCheckpoint()
+    val dig2 = rd("digests").join(broadcast(sd.gone), Seq("dh"), "left_anti")
+      .unionByName(sd.added).localCheckpoint()
+    // a source whose canonicals all left drops out, exactly as the
+    // oracle's survivor grouping never forms it
+    val counts2 = rd("counts").unionByName(sd.countDelta)
       .groupBy(col("source")).agg(sum(col("c")).as("c"))
       .filter(col("c") > 0L).localCheckpoint()
     val rates2 = ratesFrom(counts2).localCheckpoint()
@@ -2372,6 +2360,22 @@ object ScaleOps extends QueryModule {
       () => IndexStore.replaceTable(s, path, "digests", dig2),
       () => IndexStore.replaceTable(s, path, "counts", counts2),
       () => IndexStore.replaceTable(s, path, "rates", rates2)))
+  }
+
+  /** The documents lake's feed cycle ([[RoundTrip.feedCycle]]) behind
+    * the q260/q265 sync stores and the q266 stream: v2 equality-deletes
+    * the takedown ids (doc_id % 97 = 13); the arrivals re-ingest texts
+    * under fresh ids with their source. */
+  private def mixAdmFeedFixture(s: SparkSession, dir: String,
+      name: String): RoundTrip.Feed = {
+    val docs = table(s, dir, "documents")
+      .select(col("doc_id").cast("long").as("doc_id"), col("source"),
+        col("text"))
+    // the +100000/+200000 probe arrivals ([[mixArrivalBatch]]) must stay
+    // disjoint from the real id range too (ADVICE r19)
+    graft.Engine.assertIdHeadroom(docs, "doc_id", 100000L)
+    RoundTrip.feedCycle(s, name, dir, docs, "doc_id",
+      col("doc_id") % 97 === 13, col("source"), col("text"))
   }
 
   /** Build-if-stale the FEED-SYNCED mix-admission policy store (q260's
@@ -2385,43 +2389,6 @@ object ScaleOps extends QueryModule {
     * under fresh ids (+500000, same source); the v1->v3 feed is drained
     * once and applied via [[applyMixAdmFeed]]. Final stamp only AFTER
     * the apply (crash mid-sync rebuilds); feed counts in meta. */
-  /** One drained feed cycle over a documents lake, shared by the q260
-    * physical and q265 masked sync-store builders (the q228/q234
-    * shared-fixture convention — MaskFoldSpec's fold-equality contract
-    * assumes both stores saw the SAME feed): v1 commits the corpus; v2
-    * equality-deletes the takedown ids (doc_id % 97 = 13); v3 re-ingests
-    * the % 31 = 2 texts under fresh ids (+500000, same source); the
-    * v1->v3 feed is drained once. */
-  private case class MixFeed(base: DataFrame, inserts: DataFrame,
-      delKeys: DataFrame)
-
-  private def mixAdmFeedFixture(s: SparkSession, dir: String,
-      name: String): MixFeed = {
-    val lake = graft.sources.RoundTrip.freshLake(s, name, dir)
-    val docs = table(s, dir, "documents")
-      .select(col("doc_id").cast("long").as("doc_id"), col("source"),
-        col("text"))
-    // +100000 arrivals and +500000 re-ingests must stay disjoint
-    // from the real id range (ADVICE r19) — asserted per stamped build
-    graft.Engine.assertIdHeadroom(docs, "doc_id", 100000L)
-    val v1 = graft.sources.Snapshots.commit(docs, lake, append = false)
-    val base = graft.sources.Snapshots.read(s, lake, v1)
-    graft.sources.Snapshots.commitDelete(
-      docs.filter(col("doc_id") % 97 === 13).select("doc_id"), lake)
-    val v3 = graft.sources.Snapshots.commit(
-      docs.filter(col("doc_id") % 31 === 2)
-        .select((col("doc_id") + 500000L).as("doc_id"), col("source"),
-          col("text")),
-      lake, append = true)
-    val feed = graft.sources.Snapshots.changes(s, lake, v1, v3)
-      .localCheckpoint()
-    MixFeed(base,
-      feed.filter(col("_change_type") === "insert")
-        .select(col("doc_id"), col("source"), col("text")),
-      feed.filter(col("_change_type") === "delete")
-        .select(col("doc_id")))
-  }
-
   private[graft] def mixAdmitSyncStore(s: SparkSession, dir: String): String = {
     val path = IndexStore.workPath("target/tmp/mixadm_sync_" + IndexStore.dirTag(dir))
     val stamp = "mixadmsync1|" +
@@ -2430,20 +2397,12 @@ object ScaleOps extends QueryModule {
       val f = mixAdmFeedFixture(s, dir, "mixadmsync")
       // v1 store: member keys, NULL-free digest set, canonical counts,
       // rates — all from the lake state the feed windows against
-      val keys0 = digestKeys(f.base).localCheckpoint()
-      val counts0 = canonOf(keys0)
-        .groupBy(col("source")).agg(sum(col("tk")).as("c"))
-        .filter(col("c") > 0L)
+      val (keys0, dig0, counts0) = mixAdmSeed(f.base)
       IndexStore.write(s, path, "mixadmsync-building", Seq(
-        "keys" -> keys0,
-        "digests" -> keys0.select(col("dh"))
-          .filter(col("dh").isNotNull).distinct(),
-        "counts" -> counts0,
-        "rates" -> ratesFrom(counts0)))
-      applyMixAdmFeed(s, path, f.inserts, f.delKeys)
-      IndexStore.writeStamp(s, path, stamp, Map(
-        "n_feed_inserts" -> f.inserts.count().toString,
-        "n_feed_deletes" -> f.delKeys.count().toString))
+        "keys" -> keys0, "digests" -> dig0,
+        "counts" -> counts0, "rates" -> ratesFrom(counts0)))
+      applyMixAdmFeed(s, path, f.inserts, f.deletes)
+      IndexStore.writeStamp(s, path, stamp, f.counts)
     }
     path
   }
@@ -2479,8 +2438,7 @@ object ScaleOps extends QueryModule {
     // partial-count bytes instead of linear in index size
     val audit = IndexStore.read(s, store, "digests")
       .agg(count(lit(1)).as("n_digests"))
-      .withColumn("n_feed_inserts", lit(meta("n_feed_inserts").toLong))
-      .withColumn("n_feed_deletes", lit(meta("n_feed_deletes").toLong))
+      .transform(RoundTrip.withFeedCounts(meta))
     mixAdmitSummary(mixAdmitBatchAt(s, store, mixArrivalBatch(s, dir)))
       .crossJoin(broadcast(audit))
   }
@@ -2588,6 +2546,46 @@ object ScaleOps extends QueryModule {
     (s, path) => mixAdmLiveTables(s, path,
       IndexStore.readDeleteMaskOrEmpty(s, path, "doc_id").localCheckpoint()))
 
+  /** The O(delta) group-survival diff — ONE body behind the q260 apply,
+    * the q265 feed legs and the q266 micro-batch frames (their decision
+    * bit-equality contract depends on these staying in lockstep; a
+    * shared body makes divergence impossible). Restricts work to the
+    * TOUCHED digest groups (delete-id holders ∪ arrival digests), diffs
+    * the canonical sets before/after the batch, and returns the gone
+    * digests, the newly-present digests, the old/new touched-canon
+    * frames (all localCheckpointed, O(delta) rows) and the lazy
+    * post-batch member keys. */
+  private case class SurvivalDelta(gone: DataFrame, added: DataFrame,
+      oldCanon: DataFrame, newCanon: DataFrame, keysAfter: DataFrame) {
+    /** The per-source canonical count movement (old out, new in),
+      * unsummed: count deltas telescope across batches. */
+    def countDelta: DataFrame =
+      oldCanon.groupBy(col("source")).agg((-sum(col("tk"))).as("c"))
+        .unionByName(newCanon.groupBy(col("source")).agg(sum(col("tk")).as("c")))
+  }
+
+  private def survivalDelta(keysBefore: DataFrame, delIds: DataFrame,
+      insKeys: DataFrame): SurvivalDelta = {
+    val delB = broadcast(delIds)
+    val touched = broadcast(
+      keysBefore.join(delB, Seq("doc_id")).select(col("dh"))
+        .unionByName(insKeys.select(col("dh")))
+        .distinct().localCheckpoint())
+    def restrict(k: DataFrame): DataFrame =
+      k.join(touched.withColumnRenamed("dh", "tdh"),
+        col("dh") <=> col("tdh")).drop("tdh")
+    val oldC = canonOf(restrict(keysBefore)).localCheckpoint()
+    val keysAfter = keysBefore.join(delB, Seq("doc_id"), "left_anti")
+      .unionByName(insKeys)
+    val newC = canonOf(restrict(keysAfter)).localCheckpoint()
+    def minus(a: DataFrame, b: DataFrame): DataFrame =
+      a.select(col("dh"))
+        .join(b.select(col("dh").as("odh")),
+          col("dh") <=> col("odh"), "left_anti")
+        .filter(col("dh").isNotNull).localCheckpoint()
+    SurvivalDelta(minus(oldC, newC), minus(newC, oldC), oldC, newC, keysAfter)
+  }
+
   /** Build-if-stale the mask-synced mix-admission store:
     * [[mixAdmitSyncStore]]'s lake and feed, but the delete leg lands as
     * sidecar MASKS instead of the corpus-cardinality keys/digests
@@ -2614,58 +2612,19 @@ object ScaleOps extends QueryModule {
     * below the 0.1 default, so the masks stay — q234's posture). Stamp
     * invalidation contract as [[applyMixAdmFeed]]: building-stamp until
     * the apply completes. */
-  /** The O(delta) group-survival diff — ONE body behind the q265 feed
-    * legs and the q266 micro-batch frames (the two representations'
-    * decision bit-equality contract depends on these staying in
-    * lockstep; a shared body makes divergence impossible). Restricts
-    * work to the TOUCHED digest groups (delete-id holders ∪ arrival
-    * digests), diffs the canonical sets before/after the batch, and
-    * returns the gone digests, the newly-present digests, and the
-    * old/new touched-canon frames the callers' count-delta arithmetic
-    * telescopes over. All frames localCheckpointed (O(delta) rows). */
-  private case class SurvivalDelta(gone: DataFrame, added: DataFrame,
-      oldCanon: DataFrame, newCanon: DataFrame)
-
-  private def survivalDelta(keysBefore: DataFrame, delIds: DataFrame,
-      insKeys: DataFrame): SurvivalDelta = {
-    val delB = broadcast(delIds)
-    val touched = broadcast(
-      keysBefore.join(delB, Seq("doc_id")).select(col("dh"))
-        .unionByName(insKeys.select(col("dh")))
-        .distinct().localCheckpoint())
-    def restrict(k: DataFrame): DataFrame =
-      k.join(touched.withColumnRenamed("dh", "tdh"),
-        col("dh") <=> col("tdh")).drop("tdh")
-    val oldC = canonOf(restrict(keysBefore)).localCheckpoint()
-    val keysAfter = keysBefore.join(delB, Seq("doc_id"), "left_anti")
-      .unionByName(insKeys)
-    val newC = canonOf(restrict(keysAfter)).localCheckpoint()
-    def minus(a: DataFrame, b: DataFrame): DataFrame =
-      a.select(col("dh"))
-        .join(b.select(col("dh").as("odh")),
-          col("dh") <=> col("odh"), "left_anti")
-        .filter(col("dh").isNotNull).localCheckpoint()
-    SurvivalDelta(minus(oldC, newC), minus(newC, oldC), oldC, newC)
-  }
-
   private[graft] def mixAdmMaskSyncStore(s: SparkSession, dir: String): String = {
     val path = IndexStore.workPath("target/tmp/mixadm_msync_" + IndexStore.dirTag(dir))
     val stamp = "mixadmmasksync1|" +
       IndexStore.sourceStamp(s, Seq(s"$dir/documents.parquet"))
     IndexStore.stamped(s, path, stamp) {
       val f = mixAdmFeedFixture(s, dir, "mixadmmasksync")
-      val keys0 = digestKeys(f.base).localCheckpoint()
-      val counts0 = canonOf(keys0)
-        .groupBy(col("source")).agg(sum(col("tk")).as("c"))
-        .filter(col("c") > 0L).localCheckpoint()
+      val (keys0, dig0, c0) = mixAdmSeed(f.base)
+      val counts0 = c0.localCheckpoint()
       def seg0(df: DataFrame) = df.withColumn("seg", lit(0L))
       IndexStore.write(s, path, "mixadmmasksync-building", Seq(
-        "keys" -> seg0(keys0),
-        "digests" -> seg0(keys0.select(col("dh"))
-          .filter(col("dh").isNotNull).distinct()),
-        "counts" -> counts0,
-        "rates" -> ratesFrom(counts0)))
-      val del = broadcast(f.delKeys.localCheckpoint())
+        "keys" -> seg0(keys0), "digests" -> seg0(dig0),
+        "counts" -> counts0, "rates" -> ratesFrom(counts0)))
+      val del = broadcast(f.deletes.localCheckpoint())
       val insKeys = digestKeys(f.inserts).localCheckpoint()
       // ---- delete leg: the q260 group-survival decision, computed
       // once against v1 keys, stored as masks (survivalDelta with an
@@ -2683,11 +2642,7 @@ object ScaleOps extends QueryModule {
       val iLeg = survivalDelta(keys1, del.limit(0), insKeys)
       def seg1(df: DataFrame) = df.withColumn("seg", lit(1L))
       // count deltas telescope: (newCd - oldCd) + (newCi - oldCi)
-      val counts2 = counts0
-        .unionByName(dLeg.oldCanon.groupBy(col("source")).agg((-sum(col("tk"))).as("c")))
-        .unionByName(dLeg.newCanon.groupBy(col("source")).agg(sum(col("tk")).as("c")))
-        .unionByName(iLeg.oldCanon.groupBy(col("source")).agg((-sum(col("tk"))).as("c")))
-        .unionByName(iLeg.newCanon.groupBy(col("source")).agg(sum(col("tk")).as("c")))
+      val counts2 = counts0.unionByName(dLeg.countDelta).unionByName(iLeg.countDelta)
         .groupBy(col("source")).agg(sum(col("c")).as("c"))
         .filter(col("c") > 0L).localCheckpoint()
       IndexStore.inParallel(Seq(
@@ -2699,10 +2654,7 @@ object ScaleOps extends QueryModule {
       val folded = IndexStore.autoFoldIfNeeded(
         s, path, "keys", "doc_id")(
         IndexStore.foldMasks(s, path, MixAdmMaskFold))
-      IndexStore.writeStamp(s, path, stamp, Map(
-        "n_feed_inserts" -> insKeys.count().toString,
-        "n_feed_deletes" -> del.count().toString,
-        "auto_folded" -> folded.toString))
+      IndexStore.writeStamp(s, path, stamp, f.counts + ("auto_folded" -> folded.toString))
     }
     path
   }
@@ -2727,8 +2679,7 @@ object ScaleOps extends QueryModule {
     // absent from the post-delete view, masks only remove)
     val audit = dig.agg(count(lit(1)).as("n_digests"))
       .crossJoin(broadcast(del.agg(count(lit(1)).as("n_mask_rows"))))
-      .withColumn("n_feed_inserts", lit(meta("n_feed_inserts").toLong))
-      .withColumn("n_feed_deletes", lit(meta("n_feed_deletes").toLong))
+      .transform(RoundTrip.withFeedCounts(meta))
     mixAdmitSummary(mixAdmitBatchOn(dig, rates, mixArrivalBatch(s, dir)))
       .crossJoin(broadcast(audit))
   }
@@ -2778,22 +2729,19 @@ object ScaleOps extends QueryModule {
       : (String, Seq[(Int, DataFrame)]) = {
     val f = mixAdmFeedFixture(s, dir, "mixadmstream")
     val path = mixAdmStreamPath(dir)
-    val keys0 = digestKeys(f.base).localCheckpoint()
+    val (keys0, dig0, counts0) = mixAdmSeed(f.base)
     MixAdmStreamLedger.seed(s, path)(Seq(
-      "keys" -> keys0,
-      "digests" -> keys0.select(col("dh")).filter(col("dh").isNotNull).distinct(),
+      "keys" -> keys0, "digests" -> dig0,
       "deletes" -> keys0.select(col("doc_id")).limit(0),
       "dgone" -> keys0.select(col("dh")).limit(0),
-      "cdelta" -> canonOf(keys0)
-        .groupBy(col("source")).agg(sum(col("tk")).as("c"))
-        .filter(col("c") > 0L)))
+      "cdelta" -> counts0))
     IndexStore.writeStamp(s, path, "mixadmstream-seeded|" +
       IndexStore.sourceStamp(s, Seq(s"$dir/documents.parquet")))
     (path, mixAdmBatchesOf(f))
   }
 
-  private def mixAdmBatchesOf(f: MixFeed): Seq[(Int, DataFrame)] = Seq(
-    1 -> f.delKeys.select(col("doc_id"),
+  private def mixAdmBatchesOf(f: RoundTrip.Feed): Seq[(Int, DataFrame)] = Seq(
+    1 -> f.deletes.select(col("doc_id"),
       lit(null).cast("string").as("source"),
       lit(null).cast("string").as("text"),
       lit("delete").as("change")),
@@ -2841,9 +2789,7 @@ object ScaleOps extends QueryModule {
         MixAdmStreamLedger.visible(s, path).filter(_ < segId))("keys")
       val insKeys = digestKeys(ins).localCheckpoint()
       val sd = survivalDelta(keysV, del, insKeys)
-      val cd = sd.oldCanon.groupBy(col("source")).agg((-sum(col("tk"))).as("c"))
-        .unionByName(sd.newCanon.groupBy(col("source")).agg(sum(col("tk")).as("c")))
-        .groupBy(col("source")).agg(sum(col("c")).as("c"))
+      val cd = sd.countDelta.groupBy(col("source")).agg(sum(col("c")).as("c"))
         .filter(col("c") =!= 0L).localCheckpoint()
       (Seq("keys" -> insKeys, "digests" -> sd.added, "deletes" -> del,
           "dgone" -> sd.gone, "cdelta" -> cd),
@@ -2972,23 +2918,6 @@ object ScaleOps extends QueryModule {
         "\nCAST(1 AS BIGINT) AS n_data_segments,\nTRUE AS masks_folded")
   }
 
-  /** End-to-end mixing composition (q259): the family's pieces proven to
-    * COMPOSE, not just coexist — q79's pipeline-composition role for the
-    * mixing step (VERDICT r17 item 6). One oracled dataflow: exact dedup
-    * (q60's md5/min-doc_id canonical policy) → quality-first budget fill
-    * over the SURVIVORS at the tight 1/10 budget (q255's boundary-bucket
-    * prefilter + sharded exact window, through the SAME [[qualitySelect]]
-    * code path — only the input corpus differs) → temperature epoch
-    * mixing (q251's integer-exact sqrt-temperature scheme, driver-side
-    * BigInt over |sources|-row metadata) over the kept set, realized as
-    * a real explode. Per-source audit: survivors, kept docs/tokens,
-    * materialized instances/tokens. The oracle replays the ENTIRE chain —
-    * dedup, scoring, waterfill, selection window, epoch closed form — so
-    * a divergence anywhere in the composition hash-mismatches. Scale
-    * shape: the md5 dedup exchange, the scores join, the prefiltered
-    * sharded window, one explode bounded by the epoch cap, and |sources|-
-    * row driver math — every stage is a pinned shape from its parent
-    * query; the composition adds no new corpus-sized term. */
   /** The dedup -> fill -> mix chain's SHARED state (q259 and q261): the
     * checkpointed kept set, the |sources|-row epoch mixing table, and the
     * survivor counts — built once per (session, corpus) so the two
@@ -3020,6 +2949,23 @@ object ScaleOps extends QueryModule {
       MixChain(kept, mix, sel.nDocsM)
     }(mc => { mc.kept.unpersist(); () })
 
+  /** End-to-end mixing composition (q259): the family's pieces proven to
+    * COMPOSE, not just coexist — q79's pipeline-composition role for the
+    * mixing step (VERDICT r17 item 6). One oracled dataflow: exact dedup
+    * (q60's md5/min-doc_id canonical policy) → quality-first budget fill
+    * over the SURVIVORS at the tight 1/10 budget (q255's boundary-bucket
+    * prefilter + sharded exact window, through the SAME [[qualitySelect]]
+    * code path — only the input corpus differs) → temperature epoch
+    * mixing (q251's integer-exact sqrt-temperature scheme, driver-side
+    * BigInt over |sources|-row metadata) over the kept set, realized as
+    * a real explode. Per-source audit: survivors, kept docs/tokens,
+    * materialized instances/tokens. The oracle replays the ENTIRE chain —
+    * dedup, scoring, waterfill, selection window, epoch closed form — so
+    * a divergence anywhere in the composition hash-mismatches. Scale
+    * shape: the md5 dedup exchange, the scores join, the prefiltered
+    * sharded window, one explode bounded by the epoch cap, and |sources|-
+    * row driver math — every stage is a pinned shape from its parent
+    * query; the composition adds no new corpus-sized term. */
   def mixPipeline(s: SparkSession, dir: String): DataFrame = {
     tune(s)
     import s.implicits._
@@ -3176,7 +3122,7 @@ object ScaleOps extends QueryModule {
   def incrementalMixDatacard(s: SparkSession, dir: String): DataFrame = {
     tune(s)
     import s.implicits._
-    val lake = graft.sources.RoundTrip.freshLake(s, "mixdc", dir)
+    val lake = RoundTrip.freshLake(s, "mixdc", dir)
     val docs = table(s, dir, "documents")
       .select(col("doc_id").cast("long").as("doc_id"), col("source"),
         tkCol.as("tk"))

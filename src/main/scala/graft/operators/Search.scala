@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Engine._
 import graft.{GQuery, QueryModule}
-import graft.sources.IndexStore
+import graft.sources.{IndexStore, RoundTrip}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -181,8 +181,6 @@ object Search extends QueryModule {
        |  FROM dict)
        |WHERE rn <= 15""".stripMargin
 
-  /** Deterministic fixture query set: every doc with doc_id % 50 = 7 poses
-    * its first 3 distinct tokens as a query (qid = the posing doc_id). */
   /** Partition count for probe/query frames that feed broadcast-side
     * scoring joins. One row-group fixture scans arrive as a SINGLE
     * partition, which serializes the whole scoring pipeline onto one
@@ -204,6 +202,8 @@ object Search extends QueryModule {
     * 12.78 s; 8 is the new knee. */
   private val ProbeSlices = 8
 
+  /** Deterministic fixture query set: every doc with doc_id % 50 = 7 poses
+    * its first 3 distinct tokens as a query (qid = the posing doc_id). */
   private[graft] def querySet(d: DataFrame): DataFrame =
     // re-slice BEFORE tokenizing: the shuffle moves only the ~2%
     // filtered probe docs, and the regex/explode then run in parallel
@@ -352,16 +352,6 @@ object Search extends QueryModule {
        |SELECT p.qid, p.pos_rank, p.n_cands, n.neg1, n.neg2, n.neg3
        |FROM pos p JOIN negs n ON n.qid = p.qid""".stripMargin
 
-  /** q166: segment-based incremental refresh, audited end-to-end. Builds a
-    * base index over 3/4 of the corpus (segment 0), APPENDS the remaining
-    * quarter as segment 1 ([[IndexStore.append]] — existing
-    * segment files untouched), then answers the q163 dictionary audit from
-    * the merged per-segment rows. The oracle recomputes the stats from the
-    * FULL corpus: what is verified is that segment-merge reads (SUM over
-    * per-segment df/cf, MAX over max_tf) equal a fresh whole-corpus build
-    * — the additive-stats contract that makes append-only refresh sound.
-    * n_segments is observable in the output, so a collapsed (rebuilt
-    * rather than appended) index would fail the oracle too. */
   /** Branch the shared 3/4-corpus base index (built once per corpus stamp)
     * to a caller-private path and append the remaining quarter as segment 1
     * — the two-segment starting state of the refresh (q166) and compaction
@@ -499,6 +489,16 @@ object Search extends QueryModule {
        |  FROM scored_a)
        |WHERE rn <= 5""".stripMargin
 
+  /** q166: segment-based incremental refresh, audited end-to-end. Builds a
+    * base index over 3/4 of the corpus (segment 0), APPENDS the remaining
+    * quarter as segment 1 ([[IndexStore.append]] — existing
+    * segment files untouched), then answers the q163 dictionary audit from
+    * the merged per-segment rows. The oracle recomputes the stats from the
+    * FULL corpus: what is verified is that segment-merge reads (SUM over
+    * per-segment df/cf, MAX over max_tf) equal a fresh whole-corpus build
+    * — the additive-stats contract that makes append-only refresh sound.
+    * n_segments is observable in the output, so a collapsed (rebuilt
+    * rather than appended) index would fail the oracle too. */
   def segmentRefresh(s: SparkSession, dir: String): DataFrame = {
     tune(s)
     val path = refreshedBranch(s, dir, "loop")
@@ -805,26 +805,43 @@ object Search extends QueryModule {
     * dict row would shift every idf and hash-mismatch the oracle).
     * Process-unique branch path, reaped at JVM exit. */
   private[graft] def takedownBranch(s: SparkSession, dir: String): String = {
-    val idx = searchIndex(s, dir)
+    searchIndex(s, dir)
     val path = IndexStore.workPath(fixtureIndexPath(dir) + "_takedown")
     val stamp = "takedown1|" + fixtureStamp(s, dir)
     IndexStore.stamped(s, path, stamp) {
-      val post = idx.postings.filter(takedownKeep).localCheckpoint()
-      val dict = post.groupBy(col("tok"), col("segment"))
-        .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"),
-          max(col("tf")).as("max_tf"))
-        .select(col("tok"), col("df"), col("cf"), col("max_tf"), col("segment"))
-      IndexStore.write(s, path, stamp, Seq(
-        "postings" -> post.repartition(col("tok"))
-          .sortWithinPartitions(col("tok"), col("doc_id")),
-        "doclen" -> idx.doclen.filter(takedownKeep),
-        "dict" -> dict,
-        "positions" -> idx.positions.filter(takedownKeep)
-          .repartition(col("tok"))
-          .sortWithinPartitions(col("tok"), col("doc_id"), col("pos"))),
+      IndexStore.write(s, path, stamp,
+        erasedTables(s, fixtureIndexPath(dir), _.filter(takedownKeep)),
         meta = Map("takedown" -> "doc_id % 25 = 3"))
     }
     path
+  }
+
+  /** The erased tables of the flat search index at `path` under the row
+    * filter `keep`, applied to every doc-keyed table: postings (pinned),
+    * doclen, positions, docmeta when the store has one, and the
+    * per-segment dict REBUILT from the retained postings (dict is an
+    * aggregate over docs, so it cannot be filtered — a stale dict row
+    * would shift every idf). Postings and positions come in their
+    * tok-sorted layout. One body behind the q222 takedown branch (a
+    * predicate), [[applyFeedToIndex]]'s delete leg (an anti-join) and
+    * [[SearchMaskFold]] (a masked read); each keeps its own write. */
+  private def erasedTables(s: SparkSession, path: String,
+      keep: DataFrame => DataFrame): Seq[(String, DataFrame)] = {
+    def rd(t: String) = keep(IndexStore.read(s, path, t))
+    val post = rd("postings").localCheckpoint()
+    Seq(
+      "postings" -> post.repartition(col("tok"))
+        .sortWithinPartitions(col("tok"), col("doc_id")),
+      "dict" -> post.groupBy(col("tok"), col("segment"))
+        .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"),
+          max(col("tf")).as("max_tf"))
+        .select(col("tok"), col("df"), col("cf"), col("max_tf"), col("segment")),
+      "doclen" -> rd("doclen"),
+      "positions" -> rd("positions").repartition(col("tok"))
+        .sortWithinPartitions(col("tok"), col("doc_id"), col("pos"))) ++
+      (if (IndexStore.tableNames(s, path).contains("docmeta"))
+        Seq("docmeta" -> keep(readDocMeta(s, path)))
+      else Nil)
   }
 
   /** q222: the q164 probe answered from the post-takedown branch, plus
@@ -871,9 +888,9 @@ object Search extends QueryModule {
   // ---- q227: feed-driven index sync (the lake leads, the index follows) ----
 
   /** Apply one drained change-feed window to a stored flat search index,
-    * O(delta + index): the DELETE leg is q222's erasure generalized to an
-    * arbitrary broadcast id list (postings/doclen/positions anti-joined,
-    * dict rebuilt per segment from the retained postings), the INSERT leg
+    * O(delta + index): the DELETE leg is q222's erasure
+    * ([[erasedTables]]) under an arbitrary broadcast id list, swapped in
+    * through [[IndexStore.replaceTables]]; the INSERT leg
     * is the q166 refresh (the batch tokenized once, appended as the next
     * segment of all four tables, writes overlapped). Deletes first, so
     * the rewrite never touches the rows the append is about to add. The
@@ -902,32 +919,10 @@ object Search extends QueryModule {
         "must carry doc_id:bigint and text:string; a key or type change needs " +
         "an explicit index-layout version, not a silent cast")
     val extras = inserts.columns.filterNot(Set("doc_id", "text")).toSeq
-    def rd(t: String) = IndexStore.read(s, path, t)
-    def hasDocMeta = IndexStore.tableNames(s, path).contains("docmeta")
     if (!deleteIds.isEmpty) {
       val ids = broadcast(deleteIds.select(col("doc_id")).localCheckpoint())
-      val post = rd("postings").join(ids, Seq("doc_id"), "left_anti").localCheckpoint()
-      val dict = post.groupBy(col("tok"), col("segment"))
-        .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"),
-          max(col("tf")).as("max_tf"))
-        .select(col("tok"), col("df"), col("cf"), col("max_tf"), col("segment"))
-        .localCheckpoint()
-      val dl = rd("doclen").join(ids, Seq("doc_id"), "left_anti").localCheckpoint()
-      val pos = rd("positions").join(ids, Seq("doc_id"), "left_anti").localCheckpoint()
-      // the evolved side table (if any earlier window created it) is a
-      // doc-keyed table like doclen — the erasure applies there too
-      val dm = if (hasDocMeta)
-        Some(readDocMeta(s, path).join(ids, Seq("doc_id"), "left_anti").localCheckpoint())
-      else None
-      IndexStore.inParallel(Seq(
-        () => IndexStore.replaceTable(s, path, "postings",
-          post.repartition(col("tok")).sortWithinPartitions(col("tok"), col("doc_id"))),
-        () => IndexStore.replaceTable(s, path, "dict", dict),
-        () => IndexStore.replaceTable(s, path, "doclen", dl),
-        () => IndexStore.replaceTable(s, path, "positions",
-          pos.repartition(col("tok"))
-            .sortWithinPartitions(col("tok"), col("doc_id"), col("pos")))) ++
-        dm.map(d => () => IndexStore.replaceTable(s, path, "docmeta", d)))
+      IndexStore.replaceTables(s, path,
+        erasedTables(s, path, _.join(ids, Seq("doc_id"), "left_anti")))
     }
     if (!inserts.isEmpty) {
       val core = inserts.select(col("doc_id"), col("text"))
@@ -986,8 +981,7 @@ object Search extends QueryModule {
       .reduce(_ unionByName _).agg(sum(col("n")).as("removed_traces"))
     val audit = idx.doclen.agg(count(lit(1)).as("n_docs"))
       .crossJoin(traces)
-      .withColumn("n_feed_inserts", lit(meta("n_feed_inserts").toLong))
-      .withColumn("n_feed_deletes", lit(meta("n_feed_deletes").toLong))
+      .transform(RoundTrip.withFeedCounts(meta))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("qid")).orderBy(col("score").desc, col("doc_id"))
     bm25(idx, querySet(docs(s, dir)))
@@ -1011,45 +1005,20 @@ object Search extends QueryModule {
     IndexStore.stamped(s, idxPath, stamp) {
       val f = docFeedFixture(s, dir, "feedsync")
       persistIndex(s, idxPath, "feedsync-building", f.base)
-      applyFeedToIndex(s, idxPath, seg = 1, f.inserts, f.deleteIds)
-      IndexStore.writeStamp(s, idxPath, stamp, Map(
-        "n_feed_inserts" -> f.inserts.count().toString,
-        "n_feed_deletes" -> f.deleteIds.count().toString))
+      applyFeedToIndex(s, idxPath, seg = 1, f.inserts.select("doc_id", "text"),
+        f.deletes)
+      IndexStore.writeStamp(s, idxPath, stamp, f.counts)
     }
     idxPath
   }
 
-  /** One drained feed cycle over a documents lake, shared by the q227
-    * physical and q231 masked sync-store builders (MaskFoldSpec's
-    * fold-equality contract assumes both stores saw the SAME feed):
-    * v1 commits the corpus; v2 deletes the q225 works (doc_id % 97 =
-    * 13); v3 appends the % 31 = 2 arrivals under fresh ids; the v1→v3
-    * feed drained once. `base` is the v1 snapshot read — stable under
-    * the later commits. */
-  private case class DocFeed(base: DataFrame, inserts: DataFrame,
-      deleteIds: DataFrame, insertsEvolved: DataFrame)
-
-  private def docFeedFixture(s: SparkSession, dir: String, name: String): DocFeed = {
-    val lake = graft.sources.RoundTrip.freshLake(s, name, dir)
-    val d = docs(s, dir)
-    val v1 = graft.sources.Snapshots.commit(d, lake, append = false)
-    val base = graft.sources.Snapshots.read(s, lake, v1)
-    graft.sources.Snapshots.commitDelete(
-      d.filter(col("doc_id") % 97 === 13).select("doc_id"), lake)
-    val v3 = graft.sources.Snapshots.commit(
-      d.filter(col("doc_id") % 31 === 2)
-        .select((col("doc_id") + 500000L).as("doc_id"), col("text"), col("lang")),
-      lake, append = true)
-    val feed = graft.sources.Snapshots.changes(s, lake, v1, v3).localCheckpoint()
-    DocFeed(base,
-      feed.filter(col("_change_type") === "insert").select(col("doc_id"), col("text")),
-      feed.filter(col("_change_type") === "delete").select(col("doc_id")),
-      // the evolved view of the same insert window: the lake's rows carry
-      // `lang`, which the v1 index layout has no home for — the q238
-      // carry path consumes this; q227/q231 keep the projected view
-      feed.filter(col("_change_type") === "insert")
-        .select(col("doc_id"), col("text"), col("lang")))
-  }
+  /** The documents lake's feed cycle ([[RoundTrip.feedCycle]]) behind the q227/q231/q237/q238 sync stores: v2 deletes the q225
+    * works (doc_id % 97 = 13). The inserts carry `lang`, which the v1
+    * index layout has no home for: the q238 carry path consumes it, the
+    * other stores apply the `(doc_id, text)` view. */
+  private def docFeedFixture(s: SparkSession, dir: String, name: String) =
+    RoundTrip.feedCycle(s, name, dir, docs(s, dir), "doc_id",
+      col("doc_id") % 97 === 13, col("text"), col("lang"))
 
   /** q227's oracle: BM25 rebuilt from the lake's current logical state —
     * originals minus the deleted works, plus the appended arrivals under
@@ -1093,27 +1062,30 @@ object Search extends QueryModule {
     * only after both legs, so a crash mid-sync rebuilds. Takedown
     * (q222) deliberately does NOT use this path: erasure must remove
     * bytes, a mask only hides them. */
-  private[graft] def maskSyncStore(s: SparkSession, dir: String): String = {
-    val idxPath = IndexStore.workPath("target/tmp/search_msync_" + IndexStore.dirTag(dir))
-    val stamp = "masksync1|" + fixtureStamp(s, dir)
+  private[graft] def maskSyncStore(s: SparkSession, dir: String): String =
+    maskedFeedStore(s, dir, "msync", "masksync", threshold = None)
+
+  /** The masked feed-sync store body behind q231 and q237: the
+    * [[docFeedFixture]] feed with its delete leg landed as the mask
+    * (O(delta) bytes — the rewrite q227 pays is gone), then the insert
+    * leg exactly as q227's (deletes first, then the new segment), then
+    * the auto-fold policy check (VERDICT r15 item 2) at `threshold`
+    * (None = the engine default, which the fixture's ~1% deleted
+    * fraction stays below). Whether the fold fired lands in the meta. */
+  private def maskedFeedStore(s: SparkSession, dir: String, pathTag: String,
+      name: String, threshold: Option[Double]): String = {
+    val idxPath = IndexStore.workPath(s"target/tmp/search_${pathTag}_" + IndexStore.dirTag(dir))
+    val stamp = s"${name}1|" + fixtureStamp(s, dir)
     IndexStore.stamped(s, idxPath, stamp) {
-      val f = docFeedFixture(s, dir, "masksync")
-      persistIndex(s, idxPath, "masksync-building", f.base)
-      // MASKED delete leg: O(delta) bytes — the rewrite q227 pays is gone
+      val f = docFeedFixture(s, dir, name)
+      persistIndex(s, idxPath, s"$name-building", f.base)
       IndexStore.appendDeleteMask(s, idxPath,
-        f.deleteIds.withColumn("seq", lit(0L)))
-      // insert leg: identical to q227's (deletes first, then the new segment)
-      applyFeedToIndex(s, idxPath, seg = 1, f.inserts, f.deleteIds.limit(0))
-      // auto-fold policy check (VERDICT r15 item 2): the fixture's
-      // ~1% deleted fraction sits below the 0.1 default, so the mask
-      // STAYS here (q231's pre-fold semantics are the point); q237
-      // exercises the fired path under a deployment-tightened knob
+        f.deletes.withColumn("seq", lit(0L)))
+      applyFeedToIndex(s, idxPath, seg = 1, f.inserts.select("doc_id", "text"),
+        f.deletes.limit(0))
       val folded = IndexStore.autoFoldIfNeeded(
-        s, idxPath, "doclen", "doc_id")(foldDeleteMask(s, idxPath))
-      IndexStore.writeStamp(s, idxPath, stamp, Map(
-        "n_feed_inserts" -> f.inserts.count().toString,
-        "n_feed_deletes" -> f.deleteIds.count().toString,
-        "auto_folded" -> folded.toString))
+        s, idxPath, "doclen", "doc_id", threshold)(foldDeleteMask(s, idxPath))
+      IndexStore.writeStamp(s, idxPath, stamp, f.counts + ("auto_folded" -> folded.toString))
     }
     idxPath
   }
@@ -1132,23 +1104,8 @@ object Search extends QueryModule {
     Seq(IndexStore.DeleteMaskTable), { (s, path) =>
       val mask = IndexStore.readDeleteMaskOrEmpty(s, path, "doc_id")
         .localCheckpoint()
-      def masked(df: DataFrame) =
-        IndexStore.maskedRead(df, mask, "doc_id", "doc_id", "segment")
-      def rd(t: String) = masked(IndexStore.read(s, path, t))
-      val post = rd("postings").localCheckpoint()
-      Seq(
-        "postings" -> post.repartition(col("tok"))
-          .sortWithinPartitions(col("tok"), col("doc_id")),
-        "dict" -> post.groupBy(col("tok"), col("segment"))
-          .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"),
-            max(col("tf")).as("max_tf"))
-          .select(col("tok"), col("df"), col("cf"), col("max_tf"), col("segment")),
-        "doclen" -> rd("doclen"),
-        "positions" -> rd("positions").repartition(col("tok"))
-          .sortWithinPartitions(col("tok"), col("doc_id"), col("pos"))) ++
-        (if (IndexStore.tableNames(s, path).contains("docmeta"))
-          Seq("docmeta" -> masked(readDocMeta(s, path)))
-        else Nil)
+      erasedTables(s, path,
+        IndexStore.maskedRead(_, mask, "doc_id", "doc_id", "segment"))
     })
 
   /** Fold the delete mask into the physical layout and drop it (the lake
@@ -1183,8 +1140,7 @@ object Search extends QueryModule {
     val audit = idx.doclen.agg(count(lit(1)).as("n_docs_physical"))
       .crossJoin(live.agg(count(lit(1)).as("n_live")))
       .crossJoin(mask.agg(count(lit(1)).as("n_mask_rows")))
-      .withColumn("n_feed_inserts", lit(meta("n_feed_inserts").toLong))
-      .withColumn("n_feed_deletes", lit(meta("n_feed_deletes").toLong))
+      .transform(RoundTrip.withFeedCounts(meta))
     val mIdx = SearchIndex(masked(idx.postings), idx.doclen,
       idx.dict, () => masked(idx.positions))
     val w = org.apache.spark.sql.expressions.Window
@@ -1234,29 +1190,12 @@ object Search extends QueryModule {
     * (mask folded in, sidecar dropped); whether the policy fired is
     * recorded in the stamp meta so the probe audits it without
     * re-deriving the fraction. */
-  private[graft] def autoFoldSyncStore(s: SparkSession, dir: String): String = {
-    val idxPath = IndexStore.workPath("target/tmp/search_afold_" + IndexStore.dirTag(dir))
-    val stamp = "autofold1|" + fixtureStamp(s, dir)
-    IndexStore.stamped(s, idxPath, stamp) {
-      val f = docFeedFixture(s, dir, "autofold")
-      persistIndex(s, idxPath, "autofold-building", f.base)
-      IndexStore.appendDeleteMask(s, idxPath,
-        f.deleteIds.withColumn("seq", lit(0L)))
-      applyFeedToIndex(s, idxPath, seg = 1, f.inserts, f.deleteIds.limit(0))
-      // the tightened threshold is a parameter of THIS build, not a
-      // session mutation: a conf set/restore window would be observed
-      // by any concurrently-building masked store in the same session
-      // and spuriously fold its mask (ADVICE r16)
-      val folded = IndexStore.autoFoldIfNeeded(
-        s, idxPath, "doclen", "doc_id", threshold = Some(0.005))(
-        foldDeleteMask(s, idxPath))
-      IndexStore.writeStamp(s, idxPath, stamp, Map(
-        "n_feed_inserts" -> f.inserts.count().toString,
-        "n_feed_deletes" -> f.deleteIds.count().toString,
-        "auto_folded" -> folded.toString))
-    }
-    idxPath
-  }
+  private[graft] def autoFoldSyncStore(s: SparkSession, dir: String): String =
+    // the tightened threshold is a parameter of THIS build, not a
+    // session mutation: a conf set/restore window would be observed
+    // by any concurrently-building masked store in the same session
+    // and spuriously fold its mask (ADVICE r16)
+    maskedFeedStore(s, dir, "afold", "autofold", threshold = Some(0.005))
 
   /** q237: the q164 probe over the auto-folded store — the delete-mask
     * lifecycle COMPLETED by policy rather than by hand. The audit pins
@@ -1278,8 +1217,7 @@ object Search extends QueryModule {
     val audit = idx.doclen.agg(count(lit(1)).as("n_docs"))
       .crossJoin(broadcast(mask.agg(count(lit(1)).as("n_mask_rows"))))
       .withColumn("auto_folded", lit(meta("auto_folded").toBoolean))
-      .withColumn("n_feed_inserts", lit(meta("n_feed_inserts").toLong))
-      .withColumn("n_feed_deletes", lit(meta("n_feed_deletes").toLong))
+      .transform(RoundTrip.withFeedCounts(meta))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("qid")).orderBy(col("score").desc, col("doc_id"))
     bm25(idx, querySet(docs(s, dir)))
@@ -1332,10 +1270,8 @@ object Search extends QueryModule {
     IndexStore.stamped(s, idxPath, stamp) {
       val f = docFeedFixture(s, dir, "evolvedsync")
       persistIndex(s, idxPath, "evolvedsync-building", f.base)
-      applyFeedToIndex(s, idxPath, seg = 1, f.insertsEvolved, f.deleteIds)
-      IndexStore.writeStamp(s, idxPath, stamp, Map(
-        "n_feed_inserts" -> f.inserts.count().toString,
-        "n_feed_deletes" -> f.deleteIds.count().toString))
+      applyFeedToIndex(s, idxPath, seg = 1, f.inserts, f.deletes)
+      IndexStore.writeStamp(s, idxPath, stamp, f.counts)
     }
     idxPath
   }

@@ -2,10 +2,23 @@ package graft.operators
 
 import graft.Engine._
 import graft.{GQuery, QueryModule}
-import graft.sources.IndexStore
+import graft.sources.{IndexStore, RoundTrip}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+/** A frozen vector screening index: the corpus byte-digest set
+  * (`k1`, `k2`), rep vectors with norms (`vec_id`, `embedding`, `nrm`),
+  * sign-LSH band rows (`vec_id`, `band`, `bucket`), and the LSH bit
+  * width — an INDEX property (derived from corpus size at build time)
+  * that every probe must reuse verbatim, which is why it is stored
+  * rather than re-derived. Build with [[Similarity.buildVecIndex]],
+  * screen with [[Similarity.screenVecBatch]], persist/load/refresh via
+  * [[Similarity.persistVecIndex]] / [[Similarity.loadVecIndex]] /
+  * [[Similarity.refreshVecIndex]].
+  */
+final case class VecIndex(digests: DataFrame, reps: DataFrame,
+                          bands: DataFrame, bits: Int)
 
 /** Similarity search over the `embeddings` fixture (64-dim float vectors).
   *
@@ -26,19 +39,6 @@ import org.apache.spark.sql.functions._
   * above the fold error, far below any real similarity gap. Ties broken by
   * vec_id.
   */
-/** A frozen vector screening index: the corpus byte-digest set
-  * (`k1`, `k2`), rep vectors with norms (`vec_id`, `embedding`, `nrm`),
-  * sign-LSH band rows (`vec_id`, `band`, `bucket`), and the LSH bit
-  * width — an INDEX property (derived from corpus size at build time)
-  * that every probe must reuse verbatim, which is why it is stored
-  * rather than re-derived. Build with [[Similarity.buildVecIndex]],
-  * screen with [[Similarity.screenVecBatch]], persist/load/refresh via
-  * [[Similarity.persistVecIndex]] / [[Similarity.loadVecIndex]] /
-  * [[Similarity.refreshVecIndex]].
-  */
-final case class VecIndex(digests: DataFrame, reps: DataFrame,
-                          bands: DataFrame, bits: Int)
-
 object Similarity extends QueryModule {
 
   /** Per-row L2 norm via the native graft_dot expression (tight codegen
@@ -189,11 +189,6 @@ object Similarity extends QueryModule {
       .select(col("qid"), col("vid"), round(col("cosim0"), 9).as("cosim"), col("rn"))
   }
 
-  /** The IVF seed-assignment CTE block (cent → adots → acos → assign),
-    * shared by the q65/q184 probe oracle and the q185/q186 oracles that
-    * build on the same deterministic seeding. Expects `flat`/`norms` to
-    * be in scope.
-    */
   /** Same CTE block with the centroid modulus expression parameterized —
     * the fixed-K oracle (q197) swaps ceil(sqrt N) for ceil(N/K). */
   private def ivfAssignSqlWith(modExpr: String): String =
@@ -212,6 +207,11 @@ object Similarity extends QueryModule {
       |    FROM acos)
       |  WHERE rn = 1)""".stripMargin
 
+  /** The IVF seed-assignment CTE block (cent → adots → acos → assign),
+    * shared by the q65/q184 probe oracle and the q185/q186 oracles that
+    * build on the same deterministic seeding. Expects `flat`/`norms` to
+    * be in scope.
+    */
   private val ivfAssignSql = ivfAssignSqlWith("ceil(sqrt(COUNT(*)))")
 
   private val ivfAnnSql =
@@ -351,8 +351,7 @@ object Similarity extends QueryModule {
       IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
     IndexStore.stamped(s, path, stamp) {
       val m = IndexStore.readMeta(s, src)("m").toLong
-      val req = table(s, dir, "embeddings")
-        .filter(col("vec_id") % 89 === 17 && col("vec_id") % m =!= 0)
+      val req = table(s, dir, "embeddings").filter(vecErased(m))
         .select(col("vec_id")).localCheckpoint()
       val cents = IndexStore.read(s, src, "centroids")
       require(cents.join(req, cents("cid") === req("vec_id")).isEmpty,
@@ -382,9 +381,8 @@ object Similarity extends QueryModule {
     val m = IndexStore.readMeta(s, path)("m").toLong
     val assign = graft.SessionCache.cached(s, s"sim:tkda:$dir")(
       IndexStore.read(s, path, "assign"))
-    val erased = col("vec_id") % 89 === 17 && col("vec_id") % m =!= 0
     val audit = assign.agg(count(lit(1)).as("n_vecs"),
-      sum(when(erased, 1L).otherwise(0L)).as("removed_traces"))
+      sum(when(vecErased(m), 1L).otherwise(0L)).as("removed_traces"))
     clusterCoverProbe(assign).crossJoin(broadcast(audit))
   }
 
@@ -424,43 +422,28 @@ object Similarity extends QueryModule {
 
   // ---- the shared lake-feed fixture of the vector/PQ sync stores ----
 
-  /** One drained feed cycle over an embeddings lake, shared by all four
-    * vector/PQ sync-store builders (q229/q230/q232/q233 — hand-kept
-    * copies would let the registered slices silently drift apart, and
-    * MaskFoldSpec's fold-equality contracts assume the masked and
-    * physical stores saw the SAME feed): fresh lake; v1 commits the
-    * whole embeddings table; v2 deletes the takedown slice (% 89 = 17
-    * minus centroid seeds — the quantizer geometry survives by
-    * construction); v3 appends the % 31 = 2 arrivals under fresh ids
-    * with NEGATED embeddings (sign flips are IEEE-lossless: norms
-    * preserved, cosines decorrelated); the v1→v3 feed drained ONCE.
-    * `base` is the v1 snapshot read — stable under the later commits
-    * (snapshot isolation), so builders may train/build from it after
-    * the feed exists. */
-  private case class EmbFeed(base: DataFrame, inserts: DataFrame,
-      del: DataFrame, m: Long)
+  /** The embeddings family's takedown slice, the one erase rule of its
+    * takedown branches, feed cycle and audits: vec_id % 89 = 17 minus the
+    * centroid seeds (`% m = 0`, m = ceil(sqrt(N))), so the quantizer
+    * geometry survives by construction. */
+  private def vecErased(m: Long): Column =
+    col("vec_id") % 89 === 17 && col("vec_id") % m =!= 0
 
+  /** The embeddings lake's feed cycle
+    * ([[RoundTrip.feedCycle]]) behind every vector, PQ and
+    * kNN sync store (q229/q230/q232/q233, q244–q246 — hand-kept copies
+    * would let the registered slices silently drift apart): v2 deletes
+    * the takedown slice [[vecErased]]; the arrivals carry NEGATED
+    * embeddings (sign flips are IEEE-lossless: norms preserved, cosines
+    * decorrelated). Returns the feed, its inserts as
+    * `(vec_id, embedding)`, and m. */
   private def embeddingFeedFixture(s: SparkSession, dir: String,
-      name: String): EmbFeed = {
-    val lake = graft.sources.RoundTrip.freshLake(s, name, dir)
+      name: String): (RoundTrip.Feed, Long) = {
     val e = table(s, dir, "embeddings")
-    val v1 = graft.sources.Snapshots.commit(e, lake, append = false)
-    val base = graft.sources.Snapshots.read(s, lake, v1)
-    val m = math.ceil(math.sqrt(base.count().toDouble)).toLong.max(1L)
-    graft.sources.Snapshots.commitDelete(
-      e.filter(col("vec_id") % 89 === 17 && col("vec_id") % m =!= 0)
-        .select("vec_id"), lake)
-    val v3 = graft.sources.Snapshots.commit(
-      e.filter(col("vec_id") % 31 === 2)
-        .select((col("vec_id") + 500000L).as("vec_id"),
-          expr("transform(embedding, x -> -x)").as("embedding"), col("label")),
-      lake, append = true)
-    val feed = graft.sources.Snapshots.changes(s, lake, v1, v3).localCheckpoint()
-    EmbFeed(base,
-      feed.filter(col("_change_type") === "insert")
-        .select(col("vec_id"), col("embedding")),
-      feed.filter(col("_change_type") === "delete").select(col("vec_id")),
-      m)
+    val m = math.ceil(math.sqrt(e.count().toDouble)).toLong.max(1L)
+    val f = RoundTrip.feedCycle(s, name, dir, e, "vec_id",
+      vecErased(m), expr("transform(embedding, x -> -x)").as("embedding"), col("label"))
+    (f.copy(inserts = f.inserts.select(col("vec_id"), col("embedding"))), m)
   }
 
   /** Coarse-assign an arrival batch against a STORED centroid table —
@@ -504,12 +487,10 @@ object Similarity extends QueryModule {
     val m = meta("m").toLong
     // PROBE: the q184 cluster-cover top-3 over the synced membership
     val assign = IndexStore.read(s, path, "assign")
-    val erased = col("vec_id") % 89 === 17 &&
-      col("vec_id") % m =!= 0 && col("vec_id") < 500000L
+    val erased = vecErased(m) && col("vec_id") < RoundTrip.ArrivalOffset
     val audit = assign.agg(count(lit(1)).as("n_vecs"),
         sum(when(erased, 1L).otherwise(0L)).as("removed_traces"))
-      .withColumn("n_feed_inserts", lit(meta("n_feed_inserts").toLong))
-      .withColumn("n_feed_deletes", lit(meta("n_feed_deletes").toLong))
+      .transform(RoundTrip.withFeedCounts(meta))
     clusterCoverProbe(assign).crossJoin(broadcast(audit))
   }
 
@@ -524,7 +505,7 @@ object Similarity extends QueryModule {
     val stamp = "vecsync2|" +
       IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
     IndexStore.stamped(s, idxPath, stamp) {
-      val f = embeddingFeedFixture(s, dir, "vecsync")
+      val (f, _) = embeddingFeedFixture(s, dir, "vecsync")
       val (cents0, assign0, m) = buildIvfIndex(f.base)
       IndexStore.write(s, idxPath, "vecsync-building", Seq(
         "centroids" -> cents0,
@@ -532,17 +513,14 @@ object Similarity extends QueryModule {
           .sortWithinPartitions(col("cid"), col("vec_id"))))
       // DELETE leg: one anti-join over assign (q224), sort discipline kept
       val kept = IndexStore.read(s, idxPath, "assign")
-        .join(broadcast(f.del), Seq("vec_id"), "left_anti").localCheckpoint()
+        .join(broadcast(f.deletes), Seq("vec_id"), "left_anti").localCheckpoint()
       IndexStore.replaceTable(s, idxPath, "assign",
         kept.repartitionByRange(col("cid"), col("vec_id"))
           .sortWithinPartitions(col("cid"), col("vec_id")))
       // INSERT leg: coarse-assign the arrivals against the STORED centroids
       IndexStore.append(s, idxPath, "assign",
         coarseAssignArrivals(s, idxPath, f.inserts))
-      IndexStore.writeStamp(s, idxPath, stamp, Map(
-        "m" -> m.toString,
-        "n_feed_inserts" -> f.inserts.count().toString,
-        "n_feed_deletes" -> f.del.count().toString))
+      IndexStore.writeStamp(s, idxPath, stamp, f.counts + ("m" -> m.toString))
     }
     idxPath
   }
@@ -625,7 +603,7 @@ object Similarity extends QueryModule {
     val stamp = "vecmasksync1|" +
       IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
     IndexStore.stamped(s, idxPath, stamp) {
-      val f = embeddingFeedFixture(s, dir, "vecmasksync")
+      val (f, _) = embeddingFeedFixture(s, dir, "vecmasksync")
       val (cents0, assign0, m) = buildIvfIndex(f.base)
       IndexStore.write(s, idxPath, "vecmasksync-building", Seq(
         "centroids" -> cents0,
@@ -634,7 +612,7 @@ object Similarity extends QueryModule {
           .sortWithinPartitions(col("cid"), col("vec_id"))))
       // MASKED delete leg: O(delta) bytes — q229's rewrite is gone
       IndexStore.appendDeleteMask(s, idxPath,
-        f.del.withColumn("seq", lit(0L)))
+        f.deletes.withColumn("seq", lit(0L)))
       // INSERT leg: coarse-assign against the STORED centroids, seg 1
       IndexStore.append(s, idxPath, "assign",
         coarseAssignArrivals(s, idxPath, f.inserts).withColumn("seg", lit(1L)))
@@ -643,10 +621,8 @@ object Similarity extends QueryModule {
       val folded = IndexStore.autoFoldIfNeeded(
         s, idxPath, "assign", "vec_id")(IndexStore.foldMasks(
         s, idxPath, vecMaskFold("assign", Seq("cid", "vec_id"))))
-      IndexStore.writeStamp(s, idxPath, stamp, Map(
+      IndexStore.writeStamp(s, idxPath, stamp, f.counts ++ Map(
         "m" -> m.toString,
-        "n_feed_inserts" -> f.inserts.count().toString,
-        "n_feed_deletes" -> f.del.count().toString,
         "auto_folded" -> folded.toString))
     }
     idxPath
@@ -686,8 +662,7 @@ object Similarity extends QueryModule {
     val live = IndexStore.maskedRead(assign, mask, "vec_id", "vec_id", "seg")
     val audit = live.agg(count(lit(1)).as("n_vecs"))
       .crossJoin(broadcast(mask.agg(count(lit(1)).as("n_mask_rows"))))
-      .withColumn("n_feed_inserts", lit(meta("n_feed_inserts").toLong))
-      .withColumn("n_feed_deletes", lit(meta("n_feed_deletes").toLong))
+      .transform(RoundTrip.withFeedCounts(meta))
     clusterCoverProbe(live.drop("seg")).crossJoin(broadcast(audit))
   }
 
@@ -699,6 +674,22 @@ object Similarity extends QueryModule {
     feedSyncedAnnSql.replace(anchor,
       "(SELECT CAST(COUNT(*) AS BIGINT) FROM erased) AS n_mask_rows")
   }
+
+  /** Centroid-selection modulus for a corpus of `n` vectors. Default is
+    * the IVF balance point m = ceil(sqrt n) (K ~ sqrt N centroids —
+    * assignment N*K ~ N^1.5, the honest bound q185's doc records). A
+    * fixed-K deployment sets `spark.graft.kmeans.k`: m = ceil(n/K) picks
+    * ~K centroids regardless of corpus size, making assignment work N*K
+    * LINEAR in N — what a 100 TB run uses (VERDICT r10 item 6). Setting
+    * K changes the clustering geometry, so it departs from the
+    * sqrt-default the registered oracles pin; it is a deployment knob,
+    * spec-covered (SimilaritySpec), not an oracle path.
+    */
+  private[graft] def centroidModulus(s: SparkSession, n: Long): Long =
+    s.conf.getOption("spark.graft.kmeans.k") match {
+      case Some(k) => math.max(1L, math.ceil(n.toDouble / k.toLong.max(1L)).toLong)
+      case None => math.ceil(math.sqrt(n.toDouble)).toLong.max(1L)
+    }
 
   /** q185: one distributed Lloyd (k-means) refinement step over the IVF
     * seeding — the building block of embedding-space clustering for
@@ -723,22 +714,6 @@ object Similarity extends QueryModule {
     * scan + one K*64-row shuffle; the loop would checkpoint centroids
     * per step exactly like the screening loops checkpoint increments.
     */
-  /** Centroid-selection modulus for a corpus of `n` vectors. Default is
-    * the IVF balance point m = ceil(sqrt n) (K ~ sqrt N centroids —
-    * assignment N*K ~ N^1.5, the honest bound q185's doc records). A
-    * fixed-K deployment sets `spark.graft.kmeans.k`: m = ceil(n/K) picks
-    * ~K centroids regardless of corpus size, making assignment work N*K
-    * LINEAR in N — what a 100 TB run uses (VERDICT r10 item 6). Setting
-    * K changes the clustering geometry, so it departs from the
-    * sqrt-default the registered oracles pin; it is a deployment knob,
-    * spec-covered (SimilaritySpec), not an oracle path.
-    */
-  private[graft] def centroidModulus(s: SparkSession, n: Long): Long =
-    s.conf.getOption("spark.graft.kmeans.k") match {
-      case Some(k) => math.max(1L, math.ceil(n.toDouble / k.toLong.max(1L)).toLong)
-      case None => math.ceil(math.sqrt(n.toDouble)).toLong.max(1L)
-    }
-
   def kmeansRefine(s: SparkSession, dir: String): DataFrame = {
     tune(s)
     kmeansRefineWith(s, dir,
@@ -849,22 +824,6 @@ object Similarity extends QueryModule {
     */
   private val SemDedupEps = 0.25
 
-  /** q186: SemDeDup-style semantic pruning (Abbas et al. 2023, "SemDeDup:
-    * Data-efficient learning at web-scale through semantic deduplication")
-    * — compare vectors ONLY within their IVF cluster and drop any vector
-    * whose cosine to a lower-id cluster-mate exceeds [[SemDedupEps]].
-    * The cluster is the candidate bound: pairwise work is sum over
-    * clusters of size^2, never corpus^2, and the cluster id (from the
-    * PERSISTED q184 index — the corpus is not re-clustered per run) is the
-    * one shuffle key. This deterministic "keep the earliest member of any
-    * hot pair" policy is a non-iterative variant of the paper's
-    * keep-one-per-duplicate-group (which walks pairs greedily); it is
-    * SQL-expressible, order-stable under any partitioning, and
-    * over-drops only when near-dup chains span the threshold — the same
-    * trade the LSH text family documents. Output is the per-cluster
-    * members/kept/dropped ledger — the datacard-style artifact a curation
-    * run records.
-    */
   /** The in-cluster comparison pairs of [[semDedupOn]] BEFORE the cosine
     * gate — exposed so the capped-mode spec can assert pair VOLUME, not
     * just decisions. With `capOpt = Some(c)` the keeper (lo) side of each
@@ -891,9 +850,6 @@ object Similarity extends QueryModule {
     hi.join(lo, Seq("cid")).filter(col("uid") < col("vid"))
   }
 
-  /** q186's core over an arbitrary (cid, vec_id, embedding, nrm)
-    * assignment frame. `capOpt` is the per-cluster pair cap (see
-    * [[semDedupPairs]]); None = exact pairwise within clusters. */
   /** The distinct (cid, vid) drop set of SemDeDup — the vectors whose
     * cosine to a lower-id cluster-mate exceeds eps. Shared by the q186
     * ledger and the q207 composed curation pipeline (which needs the
@@ -908,6 +864,9 @@ object Similarity extends QueryModule {
       .filter(round(col("cosim0"), 9) > lit(SemDedupEps))
       .select(col("cid"), col("vid")).distinct()
 
+  /** q186's core over an arbitrary (cid, vec_id, embedding, nrm)
+    * assignment frame. `capOpt` is the per-cluster pair cap (see
+    * [[semDedupPairs]]); None = exact pairwise within clusters. */
   private[graft] def semDedupOn(assign: DataFrame,
                                 capOpt: Option[Int]): DataFrame = {
     val dropped = semDedupDrops(assign, capOpt)
@@ -921,6 +880,22 @@ object Similarity extends QueryModule {
       .select(col("cid"), col("members"), col("kept"), col("dropped"))
   }
 
+  /** q186: SemDeDup-style semantic pruning (Abbas et al. 2023, "SemDeDup:
+    * Data-efficient learning at web-scale through semantic deduplication")
+    * — compare vectors ONLY within their IVF cluster and drop any vector
+    * whose cosine to a lower-id cluster-mate exceeds [[SemDedupEps]].
+    * The cluster is the candidate bound: pairwise work is sum over
+    * clusters of size^2, never corpus^2, and the cluster id (from the
+    * PERSISTED q184 index — the corpus is not re-clustered per run) is the
+    * one shuffle key. This deterministic "keep the earliest member of any
+    * hot pair" policy is a non-iterative variant of the paper's
+    * keep-one-per-duplicate-group (which walks pairs greedily); it is
+    * SQL-expressible, order-stable under any partitioning, and
+    * over-drops only when near-dup chains span the threshold — the same
+    * trade the LSH text family documents. Output is the per-cluster
+    * members/kept/dropped ledger — the datacard-style artifact a curation
+    * run records.
+    */
   def semDedup(s: SparkSession, dir: String): DataFrame = {
     tune(s)
     val (_, assign) = corpusIvfIndex(s, dir)
@@ -1598,8 +1573,7 @@ object Similarity extends QueryModule {
     IndexStore.stamped(s, path, stamp) {
       val m = IndexStore
         .readMeta(s, fixtureIvfIndexPath(dir))("m").toLong
-      val req = table(s, dir, "embeddings")
-        .filter(col("vec_id") % 89 === 17 && col("vec_id") % m =!= 0)
+      val req = table(s, dir, "embeddings").filter(vecErased(m))
         .select(col("vec_id")).localCheckpoint()
       val codes2 = IndexStore.read(s, src, "codes")
         .join(broadcast(req), Seq("vec_id"), "left_anti")
@@ -1628,9 +1602,8 @@ object Similarity extends QueryModule {
       IndexStore.read(s, path, "codes"))
     val m = IndexStore
       .readMeta(s, fixtureIvfIndexPath(dir))("m").toLong
-    val erased = col("vec_id") % 89 === 17 && col("vec_id") % m =!= 0
     val audit = codes.agg(countDistinct(col("vec_id")).as("n_vecs"),
-      sum(when(erased, 1L).otherwise(0L)).as("removed_traces"))
+      sum(when(vecErased(m), 1L).otherwise(0L)).as("removed_traces"))
     adcTop3(s, dir, cb, codes).crossJoin(broadcast(audit))
   }
 
@@ -1696,7 +1669,7 @@ object Similarity extends QueryModule {
       // one takedown request provably leaves every serving structure,
       // and the IVF-centroid seed exclusion keeps the slice identical
       // across the families
-      val f = embeddingFeedFixture(s, dir, "pqsync")
+      val (f, m) = embeddingFeedFixture(s, dir, "pqsync")
       val (_, cb1, mq) = pqCodebooks(f.base)
       val cbm = cb1.localCheckpoint(true)
       // staging stamp: validates as CURRENT only after the feed apply
@@ -1707,7 +1680,7 @@ object Similarity extends QueryModule {
           .sortWithinPartitions(col("vec_id"), col("j"))))
       // DELETE leg: one broadcast anti-join over the codes (q226)
       val kept = IndexStore.read(s, idxPath, "codes")
-        .join(broadcast(f.del), Seq("vec_id"), "left_anti").localCheckpoint()
+        .join(broadcast(f.deletes), Seq("vec_id"), "left_anti").localCheckpoint()
       IndexStore.replaceTable(s, idxPath, "codes",
         kept.repartitionByRange(col("vec_id"))
           .sortWithinPartitions(col("vec_id"), col("j")))
@@ -1715,10 +1688,8 @@ object Similarity extends QueryModule {
       IndexStore.append(s, idxPath, "codes",
         pqEncodeAgainst(f.inserts,
           IndexStore.read(s, idxPath, "codebooks")))
-      IndexStore.writeStamp(s, idxPath, stamp, Map(
-        "mq" -> mq.toString, "m" -> f.m.toString,
-        "n_feed_inserts" -> f.inserts.count().toString,
-        "n_feed_deletes" -> f.del.count().toString))
+      IndexStore.writeStamp(s, idxPath, stamp, f.counts ++ Map(
+        "mq" -> mq.toString, "m" -> m.toString))
       cbm.unpersist(): Unit
     }
     idxPath
@@ -1742,12 +1713,10 @@ object Similarity extends QueryModule {
     val cb = graft.SessionCache.cached(s, s"sim:pqsynccb:$dir")(
       IndexStore.read(s, path, "codebooks"))
     val codes = IndexStore.read(s, path, "codes")
-    val erased = col("vec_id") % 89 === 17 &&
-      col("vec_id") % m =!= 0 && col("vec_id") < 500000L
+    val erased = vecErased(m) && col("vec_id") < RoundTrip.ArrivalOffset
     val audit = codes.agg(countDistinct(col("vec_id")).as("n_vecs"),
         sum(when(erased, 1L).otherwise(0L)).as("removed_traces"))
-      .withColumn("n_feed_inserts", lit(meta("n_feed_inserts").toLong))
-      .withColumn("n_feed_deletes", lit(meta("n_feed_deletes").toLong))
+      .transform(RoundTrip.withFeedCounts(meta))
     adcTop3(s, dir, cb, codes).crossJoin(broadcast(audit))
   }
 
@@ -1815,7 +1784,7 @@ object Similarity extends QueryModule {
     val stamp = s"pqmasksync1|lloyd$PqLloydSteps|" +
       IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
     IndexStore.stamped(s, idxPath, stamp) {
-      val f = embeddingFeedFixture(s, dir, "pqmasksync")
+      val (f, m) = embeddingFeedFixture(s, dir, "pqmasksync")
       val (_, cb1, mq) = pqCodebooks(f.base)
       val cbm = cb1.localCheckpoint(true)
       IndexStore.write(s, idxPath, "pqmasksync-building", Seq(
@@ -1825,7 +1794,7 @@ object Similarity extends QueryModule {
           .sortWithinPartitions(col("vec_id"), col("j"))))
       // MASKED delete leg: O(delta) bytes — q230's codes rewrite is gone
       IndexStore.appendDeleteMask(s, idxPath,
-        f.del.withColumn("seq", lit(0L)))
+        f.deletes.withColumn("seq", lit(0L)))
       // INSERT leg: encode against the STORED codebooks, seg 1
       IndexStore.append(s, idxPath, "codes",
         pqEncodeAgainst(f.inserts,
@@ -1836,10 +1805,8 @@ object Similarity extends QueryModule {
       val folded = IndexStore.autoFoldIfNeeded(
         s, idxPath, "codes", "vec_id")(IndexStore.foldMasks(
         s, idxPath, vecMaskFold("codes", Seq("vec_id", "j"))))
-      IndexStore.writeStamp(s, idxPath, stamp, Map(
-        "mq" -> mq.toString, "m" -> f.m.toString,
-        "n_feed_inserts" -> f.inserts.count().toString,
-        "n_feed_deletes" -> f.del.count().toString,
+      IndexStore.writeStamp(s, idxPath, stamp, f.counts ++ Map(
+        "mq" -> mq.toString, "m" -> m.toString,
         "auto_folded" -> folded.toString))
       cbm.unpersist(): Unit
     }
@@ -1866,8 +1833,7 @@ object Similarity extends QueryModule {
       IndexStore.read(s, path, "codes"), mask, "vec_id", "vec_id", "seg")
     val audit = codes.agg(countDistinct(col("vec_id")).as("n_vecs"))
       .crossJoin(broadcast(mask.agg(count(lit(1)).as("n_mask_rows"))))
-      .withColumn("n_feed_inserts", lit(meta("n_feed_inserts").toLong))
-      .withColumn("n_feed_deletes", lit(meta("n_feed_deletes").toLong))
+      .transform(RoundTrip.withFeedCounts(meta))
     adcTop3(s, dir, cb, codes.drop("seg")).crossJoin(broadcast(audit))
   }
 
@@ -1964,6 +1930,22 @@ object Similarity extends QueryModule {
     */
   private val PqScreenEps = 0.8
 
+  /** Coarse-assign a (vec_id, embedding) batch to its nearest STORED IVF
+    * centroid by cosine argmax (the metric the index was built with) —
+    * the shared first step of ADC screening (q204/q205) and the
+    * sequential PQ refresh (q208) — and of the q195 IVF segment
+    * appends, so the index-property-critical metric and tie-break live
+    * in exactly one place. Returns (vec_id, cid, vemb, nrm). */
+  private[graft] def coarseAssign(cents: DataFrame, batch: DataFrame): DataFrame = {
+    val b = withNorm(batch.select(col("vec_id"), col("embedding")))
+    val bc = b.select(col("vec_id"), col("embedding").as("vemb"), col("nrm"))
+      .join(broadcast(cents.select(col("cid"), col("embedding").as("qemb"), col("nc"))))
+      .withColumn("cosim0", dotExpr / (col("nc") * col("nrm")))
+    val wa = Window.partitionBy(col("vec_id")).orderBy(col("cosim0").desc, col("cid"))
+    bc.withColumn("rn", row_number().over(wa)).filter(col("rn") === 1)
+      .select(col("vec_id"), col("cid"), col("vemb"), col("nrm"))
+  }
+
   /** Screen one arriving vector batch against the persisted PQ index by
     * ADC — the PQ family's per-micro-batch ingest entry (the
     * [[screenVecBatch]] role, L2/code-space instead of sign-LSH):
@@ -1981,22 +1963,6 @@ object Similarity extends QueryModule {
     * streaming == batch by construction (q205 oracles against the same
     * SQL as the one-shot q204).
     */
-  /** Coarse-assign a (vec_id, embedding) batch to its nearest STORED IVF
-    * centroid by cosine argmax (the metric the index was built with) —
-    * the shared first step of ADC screening (q204/q205) and the
-    * sequential PQ refresh (q208) — and of the q195 IVF segment
-    * appends, so the index-property-critical metric and tie-break live
-    * in exactly one place. Returns (vec_id, cid, vemb, nrm). */
-  private[graft] def coarseAssign(cents: DataFrame, batch: DataFrame): DataFrame = {
-    val b = withNorm(batch.select(col("vec_id"), col("embedding")))
-    val bc = b.select(col("vec_id"), col("embedding").as("vemb"), col("nrm"))
-      .join(broadcast(cents.select(col("cid"), col("embedding").as("qemb"), col("nc"))))
-      .withColumn("cosim0", dotExpr / (col("nc") * col("nrm")))
-    val wa = Window.partitionBy(col("vec_id")).orderBy(col("cosim0").desc, col("cid"))
-    bc.withColumn("rn", row_number().over(wa)).filter(col("rn") === 1)
-      .select(col("vec_id"), col("cid"), col("vemb"), col("nrm"))
-  }
-
   private[graft] def pqScreenBatch(s: SparkSession, dir: String, batch: DataFrame): DataFrame = {
     val (cb, codes) = corpusPqIndex(s, dir)
     val (cents, _) = corpusIvfIndex(s, dir)
@@ -3132,27 +3098,6 @@ object Similarity extends QueryModule {
       .select(col("da"), col("db"), col("cosim"), (col("cosim") >= 0.8).as("is_dup"))
   }
 
-  /** Incremental embedding screening — q131's pattern for the vector side:
-    * new vectors arriving at ingest are classified against a FROZEN
-    * sign-LSH index as exact duplicates (byte-identical to a corpus
-    * vector), near duplicates (band collision with a corpus rep verified
-    * at cosine >= 0.8, q78's production threshold), or accepted. The
-    * index — corpus byte-digest set, rep norms, band rows — is PERSISTED
-    * as parquet signature tables ([[IndexStore]]) and
-    * loaded thereafter, so "corpus never re-bucketed" holds across
-    * process restarts, not just across queries; per-batch cost is the
-    * batch's own signatures plus two equi-joins.
-    *
-    * The synthetic batch exercises every tier DETERMINISTICALLY:
-    * byte-copies (+100000, exact), 2x-scaled copies (+200000 — scaling
-    * by a power of two is float-EXACT, preserves every sign-LSH bit and
-    * yields cosine exactly 1.0, so the near tier fires by construction),
-    * and negated vectors (+300000 — every hyperplane sign flips, so the
-    * copy never meets its own source; cosine to anything it does meet is
-    * the negated original, far below 0.8 on this fixture). The bit width
-    * comes from the CORPUS size (an index property), exactly as the
-    * oracle derives it.
-    */
   /** Build the frozen vector index from an ARBITRARY corpus frame
     * (columns `vec_id`, `embedding`). Public API, the vector twin of
     * [[Dedup.buildIndex]]: one corpus pass — byte-digest set, exact-dup
@@ -3308,12 +3253,6 @@ object Similarity extends QueryModule {
     VecIndex(digests, reps, bands, bits)
   }
 
-  /** The registered rig's frozen vector index, PERSISTED to
-    * target/graft_index (the twin of Dedup's corpusIndex): built once
-    * from the embeddings fixture, stamp-validated, loaded from parquet
-    * thereafter — across queries via the session cache, across process
-    * restarts via the store. Build-vs-load serialized under the object
-    * lock. */
   /** Compact a persisted vector index in place — [[Dedup.compactIndex]]'s
     * twin: duplicate digest/rep rows collapse, the band table is
     * recomputed from the deduplicated reps at the STORED bit width, each
@@ -3335,6 +3274,12 @@ object Similarity extends QueryModule {
   private[graft] def fixtureVecIndexPath(dir: String): String =
     "target/graft_index/vec_" + IndexStore.dirTag(dir)
 
+  /** The registered rig's frozen vector index, PERSISTED to
+    * target/graft_index (the twin of Dedup's corpusIndex): built once
+    * from the embeddings fixture, stamp-validated, loaded from parquet
+    * thereafter — across queries via the session cache, across process
+    * restarts via the store. Build-vs-load serialized under the object
+    * lock. */
   private def corpusVecIndex(s: SparkSession, dir: String): VecIndex = {
     val path = fixtureVecIndexPath(dir)
     val stamp = IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
@@ -3391,6 +3336,27 @@ object Similarity extends QueryModule {
         sum(when(col("decision") === "near", 1).otherwise(0)).as("n_near"),
         sum(when(col("decision") === "accept", 1).otherwise(0)).as("n_accept"))
 
+  /** Incremental embedding screening — q131's pattern for the vector side:
+    * new vectors arriving at ingest are classified against a FROZEN
+    * sign-LSH index as exact duplicates (byte-identical to a corpus
+    * vector), near duplicates (band collision with a corpus rep verified
+    * at cosine >= 0.8, q78's production threshold), or accepted. The
+    * index — corpus byte-digest set, rep norms, band rows — is PERSISTED
+    * as parquet signature tables ([[IndexStore]]) and
+    * loaded thereafter, so "corpus never re-bucketed" holds across
+    * process restarts, not just across queries; per-batch cost is the
+    * batch's own signatures plus two equi-joins.
+    *
+    * The synthetic batch exercises every tier DETERMINISTICALLY:
+    * byte-copies (+100000, exact), 2x-scaled copies (+200000 — scaling
+    * by a power of two is float-EXACT, preserves every sign-LSH bit and
+    * yields cosine exactly 1.0, so the near tier fires by construction),
+    * and negated vectors (+300000 — every hyperplane sign flips, so the
+    * copy never meets its own source; cosine to anything it does meet is
+    * the negated original, far below 0.8 on this fixture). The bit width
+    * comes from the CORPUS size (an index property), exactly as the
+    * oracle derives it.
+    */
   def embeddingScreen(s: SparkSession, dir: String): DataFrame = {
     tune(s)
     vecScreenSummary(screenVecBatch(s, dir, syntheticVecBatch(s, dir)))
@@ -4258,52 +4224,35 @@ object Similarity extends QueryModule {
     * contained a deleted id is still exactly the top-3 of the shrunken
     * set and carries through untouched (rows and ranks); only sources
     * whose list intersects the delete set recompute, each against its
-    * own IVF cell minus the deleted ids. The branch is therefore
-    * bit-equal to a from-scratch rebuild over the filtered corpus —
-    * which is exactly what the oracle pins. */
+    * own IVF cell minus the deleted ids ([[knnDeleteLeg]], the delete
+    * leg every kNN sync shares). The branch is therefore bit-equal to a
+    * from-scratch rebuild over the filtered corpus — which is exactly
+    * what the oracle pins. */
   private[graft] def knnTakedownBranch(s: SparkSession, dir: String): String = {
-    val src = knnGraphStore(s, dir)
-    val path = IndexStore.workPath(src + "_takedown")
     val np = s.conf.getOption("spark.graft.knn.nprobe").getOrElse("1")
     // the O(affected) repair recomputes against a source's own cell —
     // the default graph's candidate rule. A widened (nprobe>1) graph
     // needs the widened candidate set; refuse rather than under-repair
+    // (and before building a graph the repair cannot serve)
     require(np == "1", "knnTakedownBranch: the cell-scoped repair serves the " +
       "default graph; a widened (spark.graft.knn.nprobe>1) graph must be " +
       "rebuilt from the filtered corpus instead")
+    val src = knnGraphStore(s, dir)
+    val path = IndexStore.workPath(src + "_takedown")
     val stamp = s"knngtd1|np$np|" +
       IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
     IndexStore.stamped(s, path, stamp) {
       IndexStore.copy(s, src, path)
       val del = table(s, dir, "embeddings")
         .filter(col("vec_id") % 89 === 17).select(col("vec_id")).localCheckpoint()
-      val edges = IndexStore.read(s, path, "edges")
-      val delSrc = del.select(col("vec_id").as("src"))
-      val delNbr = del.select(col("vec_id").as("nbr"))
-      // rows whose SOURCE survives; of those, the sources that lost a
-      // neighbor are the repair set
-      val keepSrc = edges.join(broadcast(delSrc), Seq("src"), "left_anti")
-      val affected = keepSrc.join(broadcast(delNbr), Seq("nbr"), "left_semi")
-        .select(col("src")).distinct().localCheckpoint()
-      val keep = keepSrc.join(broadcast(affected), Seq("src"), "left_anti")
-      // recompute ONLY the affected sources, each against its cell
-      // minus the deleted ids (the stored assignment keeps its
-      // geometry — the q224 centroid trade)
+      // the stored assignment keeps its geometry (the q224 centroid trade)
       val (_, assign) = corpusIvfIndex(s, dir)
-      val live = assign.select(col("cid"), col("vec_id"), col("embedding"), col("nrm"))
-        .join(broadcast(del), Seq("vec_id"), "left_anti")
-      // only the affected sources re-rank, each against its cell minus
-      // the deleted ids — the salted scoped form (per-task pair bound)
-      val recomputed = cellGraphFor(live,
-        live.join(broadcast(affected.select(col("src").as("vec_id"))),
-          Seq("vec_id"), "left_semi"))
+      val d = knnDeleteLeg(assign, IndexStore.read(s, path, "edges"), del)
       // pin the repaired rows before the swap reads-vs-writes the table
-      val repaired = keep.select(col("src"), col("nbr"), col("cosim"), col("rn"))
-        .unionByName(recomputed).localCheckpoint()
-      IndexStore.replaceTable(s, path, "edges", repaired)
+      IndexStore.replaceTable(s, path, "edges", d.afterDel.localCheckpoint())
       IndexStore.writeStamp(s, path, stamp, Map(
         "n_del" -> del.count().toString,
-        "n_repaired" -> affected.count().toString))
+        "n_repaired" -> d.affected.count().toString))
     }
     path
   }
@@ -4322,14 +4271,8 @@ object Similarity extends QueryModule {
     val path = knnTakedownBranch(s, dir)
     val meta = IndexStore.readMeta(s, path)
     val edges = IndexStore.read(s, path, "edges")
-    val del = table(s, dir, "embeddings")
-      .filter(col("vec_id") % 89 === 17).select(col("vec_id")).localCheckpoint()
-    val traces = edges.join(broadcast(del.select(col("vec_id").as("src"))), Seq("src"))
-      .agg(count(lit(1)).as("n"))
-      .unionByName(edges.join(broadcast(del.select(col("vec_id").as("nbr"))), Seq("nbr"))
-        .agg(count(lit(1)).as("n")))
-      .agg(sum(col("n")).as("removed_traces"))
-    val audit = traces
+    val audit = knnTraces(edges, table(s, dir, "embeddings")
+        .filter(col("vec_id") % 89 === 17).select(col("vec_id")).localCheckpoint())
       .withColumn("n_del", lit(meta("n_del").toLong))
       .withColumn("n_repaired", lit(meta("n_repaired").toLong))
     edges.select(col("src").as("vec_id"), col("nbr"), col("cosim"), col("rn"))
@@ -4360,8 +4303,9 @@ object Similarity extends QueryModule {
   /** Build-if-stale the feed-synced kNN-graph store — the graph joins
     * the "every serving structure follows the lake" arc (q227–q230):
     * v1 commits the embeddings, the graph (plus its IVF substrate)
-    * builds FROM the lake, and the v1→v3 change feed applies O(delta +
-    * affected), never O(graph):
+    * builds FROM the lake, and the v1→v3 change feed applies through
+    * [[knnSyncLegs]] (shared with q245/q246) in O(delta + affected),
+    * never O(graph):
     *  - DELETE leg: the q243 repair — untouched lists carry through
     *    (removal only shrinks candidate sets); only sources whose top-3
     *    lost a member re-rank against their cell minus the deletes.
@@ -4389,65 +4333,30 @@ object Similarity extends QueryModule {
     val stamp = "knnsync1|" +
       IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
     IndexStore.stamped(s, idxPath, stamp) {
-      val f = embeddingFeedFixture(s, dir, "knnsync")
+      val (f, _) = embeddingFeedFixture(s, dir, "knnsync")
       val (cents0, assign0, m) = buildIvfIndex(f.base)
       IndexStore.write(s, idxPath, "knnsync-building", Seq(
         "edges" -> cellGraph(assign0),
         "centroids" -> cents0,
         "assign" -> assign0.repartitionByRange(col("cid"), col("vec_id"))
           .sortWithinPartitions(col("cid"), col("vec_id"))))
-      def rd(t: String) = IndexStore.read(s, idxPath, t)
-      // DELETE leg: membership anti-join + the q243 O(affected) repair
-      val del = f.del.localCheckpoint()
-      val kept = rd("assign")
-        .join(broadcast(del), Seq("vec_id"), "left_anti").localCheckpoint()
+      val del = f.deletes.localCheckpoint()
+      val legs = knnSyncLegs(s, idxPath, IndexStore.read(s, idxPath, "assign"),
+        IndexStore.read(s, idxPath, "edges"), del, f.inserts)
       IndexStore.replaceTable(s, idxPath, "assign",
-        kept.repartitionByRange(col("cid"), col("vec_id"))
+        legs.deleted.live.repartitionByRange(col("cid"), col("vec_id"))
           .sortWithinPartitions(col("cid"), col("vec_id")))
-      val edges0 = rd("edges")
-      val keepSrc = edges0.join(
-        broadcast(del.select(col("vec_id").as("src"))), Seq("src"), "left_anti")
-      val affected = keepSrc.join(
-          broadcast(del.select(col("vec_id").as("nbr"))), Seq("nbr"), "left_semi")
-        .select(col("src")).distinct().localCheckpoint()
-      val keep = keepSrc.join(broadcast(affected), Seq("src"), "left_anti")
-      val survivors = rd("assign")
-      val recomputed = cellGraphFor(survivors,
-        survivors.join(broadcast(affected.select(col("src").as("vec_id"))),
-          Seq("vec_id"), "left_semi"))
-      // the delete leg's result stays a FRAME (checkpointed, not
-      // written): both legs fold into ONE edges rewrite below, halving
-      // the sync's table-swap I/O (ADVICE r16 — the write cost per
-      // sync is one O(edges) rewrite; the O(affected) claim is about
-      // re-SCORING compute, which this does not change)
-      val afterDelete = keep.select(col("src"), col("nbr"), col("cosim"), col("rn"))
-        .unionByName(recomputed).localCheckpoint()
-      // INSERT leg: coarse-assign arrivals, then MERGE
-      val aa = coarseAssignArrivals(s, idxPath, f.inserts).localCheckpoint()
-      val cross = survivors.select(col("cid"), col("vec_id").as("src"),
-          col("embedding").as("qemb"), col("nrm").as("nq"))
-        .join(aa.select(col("cid"), col("vec_id").as("nbr"),
-          col("embedding").as("vemb"), col("nrm").as("nv")), Seq("cid"))
-        .withColumn("cosim0", dotExpr / (col("nq") * col("nv")))
-        .select(col("src"), col("nbr"), round(col("cosim0"), 9).as("cosim"))
-      val w = Window.partitionBy(col("src"))
-        .orderBy(col("cosim").desc, col("nbr"))
-      val merged = afterDelete.select(col("src"), col("nbr"), col("cosim"))
-        .unionByName(cross)
-        .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
-      val withArrivals = survivors.unionByName(aa)
-      val arrivalEdges = cellGraphFor(withArrivals,
-        withArrivals.join(broadcast(aa.select(col("vec_id"))),
-          Seq("vec_id"), "left_semi"))
+      // both legs fold into ONE edges rewrite (ADVICE r16 — the write
+      // cost per sync is one O(edges) rewrite; the O(affected) claim is
+      // about re-SCORING compute): a restated source's post-delete list
+      // is superseded by its `entering` restatement
       IndexStore.replaceTable(s, idxPath, "edges",
-        merged.select(col("src"), col("nbr"), col("cosim"), col("rn"))
-          .unionByName(arrivalEdges).localCheckpoint())
-      IndexStore.append(s, idxPath, "assign", aa)
-      IndexStore.writeStamp(s, idxPath, stamp, Map(
+        legs.deleted.afterDel.join(broadcast(legs.restated), Seq("src"), "left_anti")
+          .unionByName(legs.entering).localCheckpoint())
+      IndexStore.append(s, idxPath, "assign", legs.arrivals)
+      IndexStore.writeStamp(s, idxPath, stamp, f.counts ++ Map(
         "m" -> m.toString,
-        "n_feed_inserts" -> f.inserts.count().toString,
-        "n_feed_deletes" -> del.count().toString,
-        "n_repaired_del" -> affected.count().toString))
+        "n_repaired_del" -> legs.deleted.affected.count().toString))
     }
     idxPath
   }
@@ -4487,11 +4396,6 @@ object Similarity extends QueryModule {
       .crossJoin(broadcast(audit))
   }
 
-  /** q244's oracle: the whole graph recomputed from the lake's current
-    * logical state — survivors keep their v1 cells (centroids did not
-    * move), arrivals assign fresh against the v1 centroids (the q229
-    * chain), and the delete leg's repair count re-derives from the BASE
-    * graph (sources surviving whose top-3 touched the erased set). */
   /** The synced-state CTE chain (erased feed slice → negated arrivals →
     * current members → the whole-graph rebuild `g4`; expects the
     * [[knnGraphCtes]] names in scope) — split out so the q248 as-of
@@ -4546,6 +4450,11 @@ object Similarity extends QueryModule {
        |    FROM g4cos)
        |  WHERE rn <= 3)""".stripMargin
 
+  /** q244's oracle: the whole graph recomputed from the lake's current
+    * logical state — survivors keep their v1 cells (centroids did not
+    * move), arrivals assign fresh against the v1 centroids (the q229
+    * chain), and the delete leg's repair count re-derives from the BASE
+    * graph (sources surviving whose top-3 touched the erased set). */
   private val feedSyncedKnnSql =
     s"""WITH $knnGraphCtes,
        |$knnSyncedChainSql
@@ -4609,11 +4518,10 @@ object Similarity extends QueryModule {
 
   /** The two legs of one kNN feed apply over a visible graph state —
     * `members` (cid, vec_id, embedding, nrm) and their top-3 `lists`
-    * (src, nbr, cosim, rn) — shared by the masked batch sync (q245, which
-    * lands them as seg 1 and seg 2) and the stream (q246, one segment):
-    *  - DELETE leg (the q243 repair, O(affected)): `affected` = surviving
-    *    sources whose list lost a member to `del`; `repaired` = their
-    *    lists re-ranked against the surviving membership.
+    * (src, nbr, cosim, rn) — shared by the physical batch sync (q244,
+    * one rewrite), the masked one (q245, which lands them as seg 1 and
+    * seg 2) and the stream (q246, one segment):
+    *  - DELETE leg: [[knnDeleteLeg]].
     *  - INSERT leg (the q245 entering-edge restatement): `arrivals`
     *    coarse-assign against the centroids stored at `path`; survivors
     *    whose top-3 GAINS a cross-edge to an arrival (cosine ≥ their
@@ -4625,13 +4533,25 @@ object Similarity extends QueryModule {
     *    the updated top-3, and no survivor re-scores its cell.
     *    `entering` = those lists plus the arrivals' own (ranked against
     *    survivors ∪ co-arrivals).
-    * The state is pinned here, so a caller may grow the tables it was
-    * read from once this returns. */
-  private final case class KnnLegs(affected: DataFrame, repaired: DataFrame,
-      arrivals: DataFrame, restated: DataFrame, entering: DataFrame)
+    * The state is pinned here, so a caller may rewrite or grow the
+    * tables it was read from once this returns. */
+  private final case class KnnLegs(deleted: KnnDeleteLeg, arrivals: DataFrame,
+      restated: DataFrame, entering: DataFrame)
 
-  private def knnSyncLegs(s: SparkSession, path: String, members: DataFrame,
-      lists: DataFrame, del: DataFrame, ins: DataFrame): KnnLegs = {
+  /** The DELETE leg alone (the q243 O(affected) repair) over `members`
+    * (cid, vec_id, embedding, nrm) and their top-3 `lists` (src, nbr,
+    * cosim, rn): `live` = the surviving membership; `affected` =
+    * surviving sources whose list lost a member to `del`; `repaired` =
+    * their lists re-ranked against `live`, each within its own cell (the
+    * default graph's candidate rule); `afterDel` = the post-delete lists
+    * (untouched lists carry through, since removal only shrinks
+    * candidate sets, plus `repaired`). The state is pinned here, so a
+    * caller may rewrite the tables it was read from once this returns. */
+  private final case class KnnDeleteLeg(live: DataFrame, affected: DataFrame,
+      repaired: DataFrame, afterDel: DataFrame)
+
+  private def knnDeleteLeg(members: DataFrame, lists: DataFrame,
+      del: DataFrame): KnnDeleteLeg = {
     val vis = lists.select(col("src"), col("nbr"), col("cosim"), col("rn"))
       .localCheckpoint()
     val live = members.select(col("cid"), col("vec_id"), col("embedding"), col("nrm"))
@@ -4643,9 +4563,16 @@ object Similarity extends QueryModule {
     val repaired = cellGraphFor(live,
       live.join(broadcast(affected.select(col("src").as("vec_id"))),
         Seq("vec_id"), "left_semi"))
-    val afterDel = vis.join(delSrc, Seq("src"), "left_anti")
-      .join(broadcast(affected), Seq("src"), "left_anti")
-      .unionByName(repaired)
+    KnnDeleteLeg(live, affected, repaired,
+      vis.join(delSrc, Seq("src"), "left_anti")
+        .join(broadcast(affected), Seq("src"), "left_anti")
+        .unionByName(repaired))
+  }
+
+  private def knnSyncLegs(s: SparkSession, path: String, members: DataFrame,
+      lists: DataFrame, del: DataFrame, ins: DataFrame): KnnLegs = {
+    val d = knnDeleteLeg(members, lists, del)
+    val (live, afterDel) = (d.live, d.afterDel)
     val aa = coarseAssignArrivals(s, path, ins).localCheckpoint()
     val withArrivals = live.unionByName(aa)
     val arrivalEdges = cellGraphFor(withArrivals,
@@ -4674,27 +4601,29 @@ object Similarity extends QueryModule {
         .select(col("src"), col("nbr"), col("cosim")))
       .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
       .select(col("src"), col("nbr"), col("cosim"), col("rn"))
-    KnnLegs(affected, repaired, aa, restated, lists2.unionByName(arrivalEdges))
+    KnnLegs(d, aa, restated, lists2.unionByName(arrivalEdges))
   }
 
-  /** The erased-id audit every served kNN sync carries: edge rows of the
-    * feed's deleted ids on either side (`removed_traces`, must be 0). */
-  private def knnErasedTraces(s: SparkSession, dir: String, edges: DataFrame,
-      m: Long): DataFrame = {
-    val del = table(s, dir, "embeddings")
-      .filter(col("vec_id") % 89 === 17 && col("vec_id") % m =!= 0)
-      .select(col("vec_id")).localCheckpoint()
+  /** Edge rows of the deleted ids `del` on either side
+    * (`removed_traces`, must be 0 after any erasure). */
+  private def knnTraces(edges: DataFrame, del: DataFrame): DataFrame =
     edges.join(broadcast(del.select(col("vec_id").as("src"))), Seq("src"))
       .agg(count(lit(1)).as("n"))
       .unionByName(edges.join(broadcast(del.select(col("vec_id").as("nbr"))), Seq("nbr"))
         .agg(count(lit(1)).as("n")))
       .agg(sum(col("n")).as("removed_traces"))
-  }
+
+  /** The erased-id audit every served kNN sync carries: [[knnTraces]] of
+    * the feed's deleted ids. */
+  private def knnErasedTraces(s: SparkSession, dir: String, edges: DataFrame,
+      m: Long): DataFrame =
+    knnTraces(edges, table(s, dir, "embeddings").filter(vecErased(m))
+      .select(col("vec_id")).localCheckpoint())
 
   /** `audit` plus the sync's feed counts from store meta. */
   private def withKnnFeedCounts(audit: DataFrame, meta: Map[String, String]): DataFrame =
-    Seq("n_feed_inserts", "n_feed_deletes", "n_repaired_del")
-      .foldLeft(audit)((a, k) => a.withColumn(k, lit(meta(k).toLong)))
+    RoundTrip.withFeedCounts(meta)(audit)
+      .withColumn("n_repaired_del", lit(meta("n_repaired_del").toLong))
 
   /** Build-if-stale the mask-synced kNN-graph store: the same lake and
     * v1→v3 feed as q244, with every leg's WRITE delta-sized — the
@@ -4717,7 +4646,7 @@ object Similarity extends QueryModule {
     val stamp = "knnmasksync1|" +
       IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
     IndexStore.stamped(s, idxPath, stamp) {
-      val f = embeddingFeedFixture(s, dir, "knnmasksync")
+      val (f, _) = embeddingFeedFixture(s, dir, "knnmasksync")
       val (cents0, assign0, m) = buildIvfIndex(f.base)
       IndexStore.write(s, idxPath, "knnmasksync-building", Seq(
         "centroids" -> cents0,
@@ -4725,14 +4654,14 @@ object Similarity extends QueryModule {
           .repartitionByRange(col("cid"), col("vec_id"))
           .sortWithinPartitions(col("cid"), col("vec_id")),
         "edges" -> cellGraph(assign0).withColumn("seg", lit(0L))))
-      val del = f.del.localCheckpoint()
+      val del = f.deletes.localCheckpoint()
       val legs = knnSyncLegs(s, idxPath, IndexStore.read(s, idxPath, "assign"),
         IndexStore.read(s, idxPath, "edges"), del, f.inserts)
       // ---- DELETE leg: O(delta) mask bytes + O(affected) appended rows
       IndexStore.appendDeleteMask(s, idxPath, del.withColumn("seq", lit(0L)))
       IndexStore.append(s, idxPath, KnnStaleMaskTable,
-        legs.affected.withColumn("seq", lit(0L)))
-      IndexStore.append(s, idxPath, "edges", legs.repaired.withColumn("seg", lit(1L)))
+        legs.deleted.affected.withColumn("seq", lit(0L)))
+      IndexStore.append(s, idxPath, "edges", legs.deleted.repaired.withColumn("seg", lit(1L)))
       // ---- INSERT leg: appends + the entering-edge restatements
       IndexStore.append(s, idxPath, "assign", legs.arrivals.withColumn("seg", lit(2L)))
       IndexStore.append(s, idxPath, KnnStaleMaskTable,
@@ -4743,11 +4672,9 @@ object Similarity extends QueryModule {
       val folded = IndexStore.autoFoldIfNeeded(
         s, idxPath, "assign", "vec_id")(
         IndexStore.foldMasks(s, idxPath, KnnMaskFold))
-      IndexStore.writeStamp(s, idxPath, stamp, Map(
+      IndexStore.writeStamp(s, idxPath, stamp, f.counts ++ Map(
         "m" -> m.toString,
-        "n_feed_inserts" -> f.inserts.count().toString,
-        "n_feed_deletes" -> del.count().toString,
-        "n_repaired_del" -> legs.affected.count().toString,
+        "n_repaired_del" -> legs.deleted.affected.count().toString,
         "n_restated" -> legs.restated.count().toString,
         "auto_folded" -> folded.toString))
     }
@@ -4847,12 +4774,12 @@ object Similarity extends QueryModule {
       val v = KnnStreamLedger.view(s, path,
         KnnStreamLedger.visible(s, path).filter(_ < segId))
       val legs = knnSyncLegs(s, path, v("assign"), v("edges"), del, ins)
-      (Seq("edges" -> legs.repaired.unionByName(legs.entering),
+      (Seq("edges" -> legs.deleted.repaired.unionByName(legs.entering),
           "assign" -> legs.arrivals,
           "deletes" -> del,
-          "stale" -> legs.affected.unionByName(legs.restated)),
+          "stale" -> legs.deleted.affected.unionByName(legs.restated)),
         Map("n_feed_inserts" -> ins.count(), "n_feed_deletes" -> del.count(),
-          "n_repaired_del" -> legs.affected.count()))
+          "n_repaired_del" -> legs.deleted.affected.count()))
     }
 
   /** q246's answer frame: q244's rows served THROUGH the ledgered masks
@@ -4955,9 +4882,9 @@ object Similarity extends QueryModule {
     * stream consumes exactly what the batch sync consumed. */
   private[graft] def knnStreamFeedBatches(s: SparkSession, dir: String)
       : Seq[(Int, DataFrame)] = {
-    val f = embeddingFeedFixture(s, dir, "knnstream")
+    val (f, _) = embeddingFeedFixture(s, dir, "knnstream")
     Seq(
-      1 -> f.del.select(col("vec_id"),
+      1 -> f.deletes.select(col("vec_id"),
         lit(null).cast("array<float>").as("embedding"),
         lit("delete").as("change")),
       2 -> f.inserts.select(col("vec_id"), col("embedding"),

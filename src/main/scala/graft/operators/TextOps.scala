@@ -61,10 +61,6 @@ object TextOps extends QueryModule {
        |GROUP BY lang, predicted""".stripMargin
   }
 
-  /** Quality scoring: token count, mean word length, stopword ratio, folded
-    * into a bounded [0,1] score and bucketed into deciles. The double
-    * arithmetic is written in the same order in both engines.
-    */
   /** Per-doc quality score + decile bucket — the shared frame behind the
     * bucket profile (q67) and the curriculum interleave (q181). */
   private[graft] def qualityPerDoc(s: SparkSession, dir: String): DataFrame =
@@ -100,6 +96,10 @@ object TextOps extends QueryModule {
        |               ${wcountSql("a")} + ${wcountSql("the")} AS stop_cnt
        |        FROM (SELECT doc_id, text, ' ' || text || ' ' AS pt FROM documents)))))""".stripMargin
 
+  /** Quality scoring: token count, mean word length, stopword ratio, folded
+    * into a bounded [0,1] score and bucketed into deciles. The double
+    * arithmetic is written in the same order in both engines.
+    */
   def qualityScore(s: SparkSession, dir: String): DataFrame = {
     tune(s)
     qualityPerDoc(s, dir)
@@ -637,32 +637,6 @@ object TextOps extends QueryModule {
       |        '</bucket></cfg>' AS xml
       |      FROM nation)""".stripMargin
 
-  /** Deterministic pseudonymization that PRESERVES referential integrity —
-    * the privacy transform a training pipeline applies to identifier
-    * columns before the data leaves the trust boundary (the sibling of
-    * q46's free-text PII redaction). Every customer key, in BOTH the
-    * customer dim and the orders fact, is replaced by a salted keyed
-    * digest: equal keys map to equal pseudonyms (joins still work across
-    * tables) and distinct keys stay distinct. The pseudonym is the FULL
-    * 128-bit md5 hex — birthday collisions become likely only around
-    * 2⁶⁴ keys, far beyond any real key cardinality (the earlier 60-bit
-    * prefix form would have started colliding near 2³⁰ ≈ 1e9 keys, i.e.
-    * at exactly the 100 TB scale this engine targets). Runs as pure
-    * column expressions over both scans — no lookup table to build,
-    * distribute, or leak.
-    *
-    * Salt caveat: `pseud#` here is a PUBLIC fixture constant so the
-    * DuckDB oracle can recompute the digests; with a known salt,
-    * small-integer keys are trivially reversible by dictionary. A
-    * production deployment must inject a secret salt (config-plane,
-    * never logged) — the column expression is unchanged.
-    *
-    * The contract is machine-checked in-frame, not asserted: pseudonym
-    * cardinality equals key cardinality on each table (injectivity), and
-    * the orders→customer join count is IDENTICAL before and after the
-    * transform (referential integrity). The oracle recomputes everything
-    * exactly (md5 hex is identical in both engines).
-    */
   /** k-anonymity threshold for q206: a release cohort must contain at
     * least this many individuals. */
   private val AnonK = 5
@@ -733,6 +707,32 @@ object TextOps extends QueryModule {
        |JOIN l1 USING (c_nationkey, c_mktsegment)
        |JOIN l2 USING (c_nationkey)""".stripMargin
 
+  /** Deterministic pseudonymization that PRESERVES referential integrity —
+    * the privacy transform a training pipeline applies to identifier
+    * columns before the data leaves the trust boundary (the sibling of
+    * q46's free-text PII redaction). Every customer key, in BOTH the
+    * customer dim and the orders fact, is replaced by a salted keyed
+    * digest: equal keys map to equal pseudonyms (joins still work across
+    * tables) and distinct keys stay distinct. The pseudonym is the FULL
+    * 128-bit md5 hex — birthday collisions become likely only around
+    * 2⁶⁴ keys, far beyond any real key cardinality (the earlier 60-bit
+    * prefix form would have started colliding near 2³⁰ ≈ 1e9 keys, i.e.
+    * at exactly the 100 TB scale this engine targets). Runs as pure
+    * column expressions over both scans — no lookup table to build,
+    * distribute, or leak.
+    *
+    * Salt caveat: `pseud#` here is a PUBLIC fixture constant so the
+    * DuckDB oracle can recompute the digests; with a known salt,
+    * small-integer keys are trivially reversible by dictionary. A
+    * production deployment must inject a secret salt (config-plane,
+    * never logged) — the column expression is unchanged.
+    *
+    * The contract is machine-checked in-frame, not asserted: pseudonym
+    * cardinality equals key cardinality on each table (injectivity), and
+    * the orders→customer join count is IDENTICAL before and after the
+    * transform (referential integrity). The oracle recomputes everything
+    * exactly (md5 hex is identical in both engines).
+    */
   def pseudonymize(s: SparkSession, dir: String): DataFrame = {
     tune(s)
     def pseud(c: org.apache.spark.sql.Column) =
@@ -962,29 +962,6 @@ object TextOps extends QueryModule {
        |CAST(SUM(CASE WHEN doc_sp > 3000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_low
        |FROM scored GROUP BY lang""".stripMargin
 
-  /** Word-level BPE merge-rule learning (q171): the tokenizer-training
-    * loop every LLM data pipeline runs, as a distributed iteration. Each
-    * round counts ALL adjacent token pairs (one explode + one groupBy —
-    * map-side partial counts collapse before the shuffle, so the exchange
-    * carries |vocab|² rows max, not corpus size), picks the most frequent
-    * pair deterministically (count desc, pair asc), and applies the merge
-    * corpus-wide. The learned rules ARE the output; the oracle re-derives
-    * all five rounds from scratch in unrolled SQL, so rule selection AND
-    * merge application are both verified.
-    *
-    * Merge application is exact BPE semantics via literal `replace` on a
-    * DOUBLE-SPACE token encoding, applied twice: a left-to-right replace
-    * consumes the separator shared by back-to-back occurrences, so one
-    * pass merges every other occurrence of a run and a second pass
-    * catches the stranded ones (two passes suffice — after pass one,
-    * every unmerged occurrence is again fully delimited). Greedy
-    * left-to-right is exactly how BPE resolves overlaps like "x x x".
-    *
-    * The per-round best pair is a 1-row driver-side scalar (the loop's
-    * control decision, like the streaming watermark cutoff) — the corpus
-    * itself never leaves the cluster; each round's merged corpus is
-    * localCheckpointed so five rounds of lineage don't nest.
-    */
   /** One shared 5-round BPE training run per (session, dir): the learned
     * rules plus the round-5 encoded corpus. Memoized through
     * [[graft.SessionCache]]'s bounded session LRU (not a raw object map) so
@@ -1029,6 +1006,29 @@ object TextOps extends QueryModule {
       BpeRun(rules.toSeq, after, pt)
     })(run => { scala.util.Try(run.encoded.unpersist()); () })
 
+  /** Word-level BPE merge-rule learning (q171): the tokenizer-training
+    * loop every LLM data pipeline runs, as a distributed iteration. Each
+    * round counts ALL adjacent token pairs (one explode + one groupBy —
+    * map-side partial counts collapse before the shuffle, so the exchange
+    * carries |vocab|² rows max, not corpus size), picks the most frequent
+    * pair deterministically (count desc, pair asc), and applies the merge
+    * corpus-wide. The learned rules ARE the output; the oracle re-derives
+    * all five rounds from scratch in unrolled SQL, so rule selection AND
+    * merge application are both verified.
+    *
+    * Merge application is exact BPE semantics via literal `replace` on a
+    * DOUBLE-SPACE token encoding, applied twice: a left-to-right replace
+    * consumes the separator shared by back-to-back occurrences, so one
+    * pass merges every other occurrence of a run and a second pass
+    * catches the stranded ones (two passes suffice — after pass one,
+    * every unmerged occurrence is again fully delimited). Greedy
+    * left-to-right is exactly how BPE resolves overlaps like "x x x".
+    *
+    * The per-round best pair is a 1-row driver-side scalar (the loop's
+    * control decision, like the streaming watermark cutoff) — the corpus
+    * itself never leaves the cluster; each round's merged corpus is
+    * localCheckpointed so five rounds of lineage don't nest.
+    */
   def bpeTrain(s: SparkSession, dir: String): DataFrame = {
     tune(s)
     import s.implicits._

@@ -851,23 +851,30 @@ object IndexStore {
   /** Fold a masked store's masks into its physical layout and drop them
     * — the compaction step that ends a mask's life, shared by every
     * masked family. No-op when none of the mask tables exists (an
-    * already-folded store). Every live frame is pinned BEFORE any swap
-    * (the frames read the very tables the swaps replace), the swaps run
-    * as one parallel block of rename-aside [[replaceTable]]s, and the
-    * masks drop LAST. Crash model: a folded table keeps its segment
-    * column, and re-masking a live frame with the still-present masks
-    * hides nothing, so a fold killed between swaps serves the identical
-    * masked view and the next fold completes it (CrashRecoverySpec pins
-    * this for every family). */
+    * already-folded store). The live frames swap in through
+    * [[replaceTables]] and the masks drop LAST. Crash model: a folded
+    * table keeps its segment column, and re-masking a live frame with
+    * the still-present masks hides nothing, so a fold killed between
+    * swaps serves the identical masked view and the next fold completes
+    * it (CrashRecoverySpec pins this for every family). */
   def foldMasks(s: SparkSession, path: String, fold: MaskFold): Unit = {
     val present = tableNames(s, path).toSet
     if (fold.masks.exists(present)) {
-      val pinned = inParallel(fold.live(s, path).map { case (t, df) =>
-        () => t -> df.localCheckpoint()
-      })
-      inParallel(pinned.map { case (t, df) => () => replaceTable(s, path, t, df) })
+      replaceTables(s, path, fold.live(s, path))
       fold.masks.foreach(dropTable(s, path, _))
     }
+  }
+
+  /** Replace several tables of the store at `path` together: every frame
+    * is pinned BEFORE any swap (the frames may read the very tables the
+    * swaps replace), then the swaps run as one parallel block of
+    * rename-aside [[replaceTable]]s. */
+  def replaceTables(s: SparkSession, path: String,
+      tables: Seq[(String, DataFrame)]): Unit = {
+    val pinned = inParallel(tables.map { case (t, df) =>
+      () => t -> df.localCheckpoint()
+    })
+    inParallel(pinned.map { case (t, df) => () => replaceTable(s, path, t, df) })
   }
 
   /** One table of a [[Ledger]] and the file discipline its compaction

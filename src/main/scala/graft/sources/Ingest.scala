@@ -68,13 +68,6 @@ object Storage {
       .sum
   }
 
-  /** Small-file compaction: rewrite a parquet directory into
-    * ceil(totalBytes / targetBytes) files. The lake-maintenance job every
-    * streaming/incremental sink eventually needs — thousands of
-    * micro-batch files kill scan planning (one task + one open per file);
-    * compaction restores O(data/target) tasks. Write-then-swap so readers
-    * never observe a half-written directory.
-    */
   /** Recover stale swap dirs from a crashed prior run BEFORE touching
     * anything. Hadoop rename signals failure by returning false, so a
     * stale bak/tmp must be resolved explicitly or the swap renames fail
@@ -109,6 +102,13 @@ object Storage {
     fs.delete(bak, true): Unit
   }
 
+  /** Small-file compaction: rewrite a parquet directory into
+    * ceil(totalBytes / targetBytes) files. The lake-maintenance job every
+    * streaming/incremental sink eventually needs — thousands of
+    * micro-batch files kill scan planning (one task + one open per file);
+    * compaction restores O(data/target) tasks. Write-then-swap so readers
+    * never observe a half-written directory.
+    */
   def compact(spark: org.apache.spark.sql.SparkSession, dir: String,
               targetBytes: Long = 128L * 1024 * 1024): Int =
     compactSorted(spark, dir, targetBytes, Seq.empty)

@@ -2,7 +2,7 @@ package graft.sources
 
 import graft.Engine._
 import graft.{GQuery, QueryModule}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Source/sink coverage (S1/S2/S6/S9): CSV and JSON scans proven by a full
@@ -351,12 +351,56 @@ object RoundTrip extends QueryModule {
   /** A per-run snapshot table dir, wiped so version numbers are a pure
     * function of the input data. An [[IndexStore.workPath]], so two JVMs
     * sharing target/ (Verify beside Bench) never clobber each other's
-    * lake between a commit and its read-back. Shared by the feed-sync
-    * rigs of every family. */
+    * lake between a commit and its read-back. */
   private[graft] def freshLake(s: SparkSession, name: String, dir: String): String = {
     val lake = IndexStore.workPath(s"target/tmp/${name}_" + IndexStore.dirTag(dir))
     IndexStore.remove(s, lake)
     lake
+  }
+
+  /** The id offset a [[feedCycle]]'s arrivals land under. */
+  private[graft] val ArrivalOffset = 500000L
+
+  /** One drained feed cycle: `base` is the v1 snapshot read (stable
+    * under the later commits), `inserts` the feed's insert rows (the
+    * arrival columns) and `deletes` its delete keys. */
+  final case class Feed(base: DataFrame, inserts: DataFrame, deletes: DataFrame) {
+    /** The feed counts a sync store records in its meta. */
+    def counts: Map[String, String] = Map(
+      "n_feed_inserts" -> inserts.count().toString,
+      "n_feed_deletes" -> deletes.count().toString)
+  }
+
+  /** A served sync store's audit plus the [[Feed.counts]] its `meta`
+    * recorded, as `n_feed_inserts` / `n_feed_deletes` columns. */
+  private[graft] def withFeedCounts(meta: Map[String, String])(audit: DataFrame): DataFrame =
+    Seq("n_feed_inserts", "n_feed_deletes")
+      .foldLeft(audit)((a, k) => a.withColumn(k, lit(meta(k).toLong)))
+
+  /** The lake feed cycle every serving family's sync stores consume
+    * (MaskFoldSpec's fold-equality contract assumes a family's physical
+    * and masked stores saw the SAME feed): on a fresh lake `name`, v1
+    * commits `rows`; v2 `commitDelete`s the `key` of the rows matching
+    * `erase`; v3 appends the `key % 31 = 2` slice under fresh ids
+    * (`key + ArrivalOffset`) with the `arrive` columns; the v1→v3 feed
+    * drains once. The offset must clear every base key — an arrival
+    * sharing a real id would merge two rows under the families'
+    * min-id policies — so `rows` holding a key at or above it is
+    * refused before anything is written. */
+  private[graft] def feedCycle(s: SparkSession, name: String, dir: String,
+      rows: DataFrame, key: String, erase: Column, arrive: Column*): Feed = {
+    assertIdHeadroom(rows, key, ArrivalOffset)
+    val lake = freshLake(s, name, dir)
+    val v1 = Snapshots.commit(rows, lake, append = false)
+    val base = Snapshots.read(s, lake, v1)
+    Snapshots.commitDelete(rows.filter(erase).select(key), lake)
+    val v3 = Snapshots.commit(rows.filter(col(key) % 31 === 2)
+        .select((col(key) + ArrivalOffset).as(key) +: arrive: _*),
+      lake, append = true)
+    val feed = Snapshots.changes(s, lake, v1, v3).localCheckpoint()
+    Feed(base,
+      feed.filter(col("_change_type") === "insert").drop("_change_type"),
+      feed.filter(col("_change_type") === "delete").select(col(key)))
   }
 
   /** The `(okey, od)` projection of orders the snapshot queries commit. */

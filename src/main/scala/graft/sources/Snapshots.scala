@@ -193,6 +193,11 @@ object Snapshots {
       df.limit(0).coalesce(1).write.mode("append").parquet(seg.toString)
       files = listPartFiles(fs, seg).sorted
     }
+    // the sidecars re-read the segment just written from df, so a flat
+    // segment's schema is df's: seeded, the read-back starts no job (a
+    // routed one also carries the inferred `_route` column)
+    if (routeBy.isEmpty && (bloomCols.nonEmpty || statsCols.nonEmpty))
+      Engine.seedParquet(s, Seq(seg.toString), df.schema)
     // blooms first: their segment-root read must see only part files,
     // while the later stats read skips `_blooms` (underscore = hidden)
     if (bloomCols.nonEmpty) writeSegmentBlooms(s, seg, bloomCols, bloomFpp)

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** The doc-drift gate (VERDICT r13 item 8: registered queries missing
   * from the docs for two consecutive rounds — "make it the snapshot
@@ -36,6 +37,23 @@ class DocCoverageSpec extends AnyFunSuite {
     val n = SparkEntry.queries.size
     assert(m.get.group(1).toInt == n && m.get.group(2).toInt == n,
       s"README claims ${m.get.group(1)}/${m.get.group(2)} queries; registry has $n")
+  }
+
+  test("no scaladoc block in src/main is directly followed by another") {
+    // the first of two adjacent blocks documents nothing: scaladoc
+    // attaches only the last one to the definition below
+    val adjacent = """\*/\s*\n\s*/\*\*""".r
+    val files = {
+      val w = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      try w.iterator().asScala.map(_.toString).filter(_.endsWith(".scala")).toList
+      finally w.close()
+    }
+    assert(files.nonEmpty, "no src/main sources found (run from the project root)")
+    val orphans = files.sorted.flatMap { f =>
+      val text = slurp(f)
+      adjacent.findAllMatchIn(text).map(m => s"$f:${text.take(m.start).count(_ == '\n') + 1}")
+    }
+    assert(orphans.isEmpty, s"doc comments that document nothing: $orphans")
   }
 
   test("every registered query has an oracle") {

@@ -423,6 +423,24 @@ class IngestSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](Snapshots.changes(s, lake, v1, cv))
   }
 
+  test("feed cycle: deletes the erase slice, lands arrivals at the offset, refuses a base key at or above it") {
+    import graft.sources.RoundTrip
+    import s.implicits._
+    // 33 and 64 sit in the % 31 = 2 arrival slice
+    val rows = Seq((1L, "a"), (33L, "b"), (64L, "c")).toDF("k", "v")
+    val f = RoundTrip.feedCycle(s, "feedcycle_spec", "spec", rows, "k",
+      col("k") === 1L, col("v"))
+    assert(f.base.count() == 3L)
+    assert(f.deletes.as[Long].collect().toSeq == Seq(1L))
+    assert(f.inserts.select("k").as[Long].collect().sorted.toSeq ==
+      Seq(33L, 64L).map(_ + RoundTrip.ArrivalOffset))
+    val clash = rows.union(Seq((RoundTrip.ArrivalOffset, "d")).toDF("k", "v"))
+    val e = intercept[IllegalArgumentException](
+      RoundTrip.feedCycle(s, "feedcycle_clash", "spec", clash, "k",
+        col("k") === 1L, col("v")))
+    assert(e.getMessage.contains(s"+${RoundTrip.ArrivalOffset}"), e.getMessage)
+  }
+
   test("partition overwrite: replaces aligned files, inserts new partitions, refuses misaligned") {
     import s.implicits._
     import graft.sources.Snapshots

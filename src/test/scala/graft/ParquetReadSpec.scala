@@ -22,10 +22,13 @@ class ParquetReadSpec extends AnyFunSuite {
     d.getAbsolutePath
   }
 
-  /** Spark jobs started by `body`. Sentinel jobs bracket it, so the
-    * (asynchronous) listener bus has delivered every earlier job before
-    * counting starts and every job of `body` before counting stops. */
-  private def jobsDuring(ss: SparkSession)(body: => Unit): Int = {
+  /** Spark jobs started by `body` (those `only` selects). Sentinel jobs
+    * bracket it, so the (asynchronous) listener bus has delivered every
+    * earlier job before counting starts and every job of `body` before
+    * counting stops. */
+  private def jobsDuring(ss: SparkSession,
+      only: org.apache.spark.scheduler.SparkListenerJobStart => Boolean = _ => true)(
+      body: => Unit): Int = {
     val sentinel = "parquet-read-sentinel"
     val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
@@ -33,7 +36,7 @@ class ParquetReadSpec extends AnyFunSuite {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
         val desc = Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
         if (desc.exists(_.startsWith(sentinel))) seen.put(desc.get)
-        else jobs.incrementAndGet(): Unit
+        else if (only(e)) jobs.incrementAndGet(): Unit
       }
     }
     def flush(tag: String): Unit = {
@@ -203,5 +206,29 @@ class ParquetReadSpec extends AnyFunSuite {
     assert(fresh("ts").dataType == TimestampType && fresh("amt").dataType == DecimalType(12, 2))
     assert(jobsDuring(s)(Engine.parquet(s, files): Unit) == 0, "the seeded re-read must start no job")
     assert(Snapshots.read(s, dir).filter(col("tag") === "y").count() == 4L)
+  }
+
+  test("a commit with stats and bloom columns seeds its segment: the read-back infers nothing, the seed equals inference") {
+    val dir = s"$base/sidecarlake"
+    val df = s.range(6).select(
+      col("id").as("k"),
+      (col("id") * 1.25).cast(DecimalType(12, 2)).as("amt"),
+      lit("x").as("tag"))
+    // schema inference is the plain read inside Engine.parquet
+    val inferring = (e: org.apache.spark.scheduler.SparkListenerJobStart) =>
+      e.stageInfos.exists(_.name.startsWith("parquet at Engine.scala"))
+    val n = jobsDuring(s, inferring) {
+      Snapshots.commit(df, dir, append = false, statsCols = Seq("k", "amt"),
+        bloomCols = Seq("tag")): Unit
+    }
+    assert(n == 0, s"the sidecars' read-back of the staged segment ran $n inference jobs")
+    val segs = new java.io.File(s"$dir/data").list().filter(_.startsWith("seg_")).toSeq
+    assert(segs.size == 1, s"one staged data segment, got $segs")
+    val seg = new org.apache.hadoop.fs.Path(dir, s"data/${segs.head}").toString
+    // the predicate is not vacuous: an unseeded session's read infers
+    assert(jobsDuring(s, inferring)(Engine.parquet(s.newSession(), Seq(seg)): Unit) >= 1)
+    val seeded = Engine.knownSchema(s, Seq(seg))
+    assert(seeded.isDefined, s"no schema held for the staged segment $seg")
+    assert(seeded.get == s.read.parquet(seg).schema)
   }
 }

@@ -646,6 +646,20 @@ class SimilaritySpec extends AnyFunSuite {
     } finally s.conf.unset(knob)
   }
 
+  test("kNN takedown refuses a widened graph: nprobe=2 raises IllegalArgumentException") {
+    // the O(affected) repair re-ranks within a source's own cell, the
+    // default graph's candidate rule; under a widened session it must
+    // refuse rather than under-repair
+    val knob = "spark.graft.knn.nprobe"
+    val prev = s.conf.getOption(knob)
+    s.conf.set(knob, "2")
+    try {
+      val e = intercept[IllegalArgumentException](
+        Similarity.knnTakedownBranch(s, TestSpark.sf))
+      assert(e.getMessage.contains("nprobe"), e.getMessage)
+    } finally prev.fold(s.conf.unset(knob))(s.conf.set(knob, _))
+  }
+
   test("kNN cell join survives a 10k-copy mega-cell flood with a hard per-task pair cap") {
     // VERDICT r16 item 2: u.join(v, Seq("cid")) routes a whole cell's
     // pair volume through ONE task — a skewed mega-cell (the boilerplate
