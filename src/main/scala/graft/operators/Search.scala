@@ -1701,26 +1701,12 @@ object Search extends QueryModule {
       .filter(col("qid") < embCount && col("qid") < maxQid)
       .withColumn("r", row_number().over(wl)).filter(col("r") <= 10)
       .select(col("qid"), col("doc_id"), col("r").as("rlex"))
-    val (_, assign) = graft.operators.Similarity.corpusIvfIndex(s, dir)
-    val qa = assign.filter(col("vec_id") % 50 === 7 && col("vec_id") < maxQid)
-      .select(col("vec_id").as("qid"), col("cid"),
-        col("embedding").as("qemb"), col("nrm").as("nq"))
-    // driver-side cluster cover: <= probeBudget longs — the IN(cids)
-    // predicate parquet min/max pruning applies to the cid-sorted
-    // assign files, skipping every unprobed cluster's bytes
-    val probeCids = qa.select(col("cid")).distinct().collect().map(_.getLong(0)).sorted
-    val dotE = expr(
-      "aggregate(zip_with(qemb, vemb, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), " +
-        "CAST(0.0 AS DOUBLE), (acc, p) -> acc + p)")
-    val cosv = assign.filter(col("cid").isInCollection(probeCids.toSeq))
-      .select(col("vec_id").as("vid"), col("cid"),
-        col("embedding").as("vemb"), col("nrm").as("nv"))
-      .join(broadcast(qa), Seq("cid"))
-      .filter(col("qid") =!= col("vid"))
-      .withColumn("cosim0", dotE / (col("nq") * col("nv")))
-    val wv = w.partitionBy(col("qid")).orderBy(round(col("cosim0"), 9).desc, col("vid"))
-    val vec = cosv.withColumn("r", row_number().over(wv)).filter(col("r") <= 10)
-      .select(col("qid"), col("vid").as("doc_id"), col("r").as("rvec"))
+    val (_, assign) = Similarity.corpusIvfIndex(s, dir)
+    // the shared cid-pruned cell probe: a driver-side cover of <=
+    // probeBudget cids, so the scan skips every unprobed cluster's bytes
+    val vec = Similarity.cellProbe(assign,
+        col("vec_id") % 50 === 7 && col("vec_id") < maxQid, 10, Similarity.RoundedCos)
+      .select(col("qid"), col("vid").as("doc_id"), col("rn").as("rvec"))
     val fused = lex.join(vec, Seq("qid", "doc_id"), "outer")
       .withColumn("rrf_micro",
         (coalesce(expr("1000000000 div (60 + rlex)"), lit(0)) +

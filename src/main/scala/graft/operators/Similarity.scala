@@ -148,6 +148,84 @@ object Similarity extends QueryModule {
        |  FROM cos)
        |WHERE rn <= 4""".stripMargin
 
+  // ---- the vector-quantizer core: the cell assignment and the cell probe ----
+
+  /** The 16 BASE probe vectors of the IVF and PQ serving probes, bounded
+    * below too, so a corpus with negative ids (the sf1 rung's copies)
+    * keeps the probe set fixed — a `< 16` filter at the rung would sweep
+    * every copy id into the probe side and measure a probe storm instead
+    * of the serving shape. */
+  private val BaseProbes: Column = col("vec_id").between(0, 15)
+
+  /** The two cosine rank orders of the cell probes: the raw cosine, or
+    * its 9-digit rounding (the q191 pattern: exact-tier ties break by vid
+    * in both engines instead of by sub-ulp fold noise). Each probe ranks
+    * by whichever its oracle pins. */
+  private[graft] val RawCos: Column = col("cosim0")
+  private[graft] val RoundedCos: Column = round(col("cosim0"), 9)
+
+  /** The coarse cell assignment, written once: every vector of `vecs`
+    * (vec_id, embedding, nrm, ...) against the broadcast centroid table
+    * `cents` (cid, embedding, nc) by cosine `dotExpr / (nc * nrm)`,
+    * ranked by cosine descending then cid, keeping each vector's top
+    * `np` cells. With `np = 1` it is the stored IVF assignment, so the
+    * stored cells, every arrival's cell and a widened probe's first cell
+    * agree bit for bit. Returns (cid, vec_id, embedding, nrm) plus the
+    * other columns of `vecs`. */
+  private[graft] def topCells(vecs: DataFrame, cents: DataFrame, np: Int = 1): DataFrame = {
+    val w = Window.partitionBy(col("vec_id")).orderBy(col("cosim0").desc, col("cid"))
+    val rest = vecs.columns.filterNot(Set("vec_id", "embedding", "nrm")).map(col)
+    vecs.withColumnRenamed("embedding", "vemb")
+      .join(broadcast(cents.select(col("cid"), col("embedding").as("qemb"), col("nc"))))
+      .withColumn("cosim0", dotExpr / (col("nc") * col("nrm")))
+      .withColumn("rn", row_number().over(w)).filter(col("rn") <= np)
+      .select(Seq(col("cid"), col("vec_id"), col("vemb").as("embedding"), col("nrm")) ++ rest: _*)
+  }
+
+  /** The probe rows of an assign frame (cid, vec_id, embedding, nrm):
+    * those matching `probe`, as (qid, cid, qemb, nq). */
+  private def cellProbes(assign: DataFrame, probe: Column): DataFrame =
+    assign.filter(probe).select(col("vec_id").as("qid"), col("cid"),
+      col("embedding").as("qemb"), col("nrm").as("nq"))
+
+  /** The driver-side cell cover of `rows`: their distinct cids, sorted —
+    * metadata-scale (at most one per probe and probed cell), the IN(cids)
+    * predicate parquet min/max pruning applies to a cid-sorted store. */
+  private def cellCover(rows: DataFrame): Seq[Long] =
+    rows.select(col("cid")).distinct().collect().map(_.getLong(0)).sorted.toSeq
+
+  /** Each probe of `qa` (qid, cid, qemb, nq, broadcast) against its
+    * cell's candidates in `cand` (cid, vec_id, embedding, nrm, carry...),
+    * self excluded, cosine-ranked by `rank` descending then vid, top `k`:
+    * (qid, vid, carry..., cosim, rn), cosim rounded to 9 digits. */
+  private def cellTopK(cand: DataFrame, qa: DataFrame, k: Int, rank: Column,
+      carry: Seq[String] = Nil): DataFrame = {
+    val w = Window.partitionBy(col("qid")).orderBy(rank.desc, col("vid"))
+    cand.select(Seq(col("vec_id").as("vid"), col("cid"), col("embedding").as("vemb"),
+        col("nrm").as("nv")) ++ carry.map(col): _*)
+      .join(broadcast(qa), Seq("cid"))
+      .filter(col("qid") =!= col("vid"))
+      .withColumn("cosim0", dotExpr / (col("nq") * col("nv")))
+      .withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
+      .select((Seq(col("qid"), col("vid")) ++ carry.map(col)) ++
+        Seq(round(col("cosim0"), 9).as("cosim"), col("rn")): _*)
+  }
+
+  /** The cid-pruned cell probe, written once, over a STORED assign frame
+    * (cid, vec_id, embedding, nrm, carry...): the rows matching `probe`
+    * are the probes; their cids collapse driver-side ([[cellCover]]) into
+    * an IN(cids) predicate, so the scan reads only the probed cells'
+    * bytes of the cid-sorted files; each probe then takes its top `k`
+    * cell-mates by `rank` ([[cellTopK]]), carrying `carry` columns of the
+    * candidates. Every stored-IVF prober (q184/q224/q229/q232, q191,
+    * q195/q210/q211/q215–q218, the q193 vector leg) is a call, so they
+    * cannot drift apart as hand-kept copies once did. */
+  private[graft] def cellProbe(assign: DataFrame, probe: Column, k: Int, rank: Column,
+      carry: Seq[String] = Nil): DataFrame = {
+    val qa = cellProbes(assign, probe)
+    cellTopK(assign.filter(col("cid").isInCollection(cellCover(qa))), qa, k, rank, carry)
+  }
+
   /** IVF ANN: assign every vector to its nearest centroid (broadcast
     * cross + per-row folds), then each probe searches only its own cluster.
     *
@@ -162,31 +240,9 @@ object Similarity extends QueryModule {
     */
   def ivfAnn(s: SparkSession, dir: String): DataFrame = {
     tune(s)
-    val e = withNorm(table(s, dir, "embeddings").select(col("vec_id"), col("embedding")))
-    val m = math.ceil(math.sqrt(
-      table(s, dir, "embeddings").count().toDouble)).toLong.max(1L)
-    val cents = e.filter(col("vec_id") % m === 0)
-      .select(col("vec_id").as("cid"), col("embedding").as("qemb"), col("nrm").as("nc"))
-    // assignment: 8 broadcast centroids per vector, argmax cosine
-    val acos = e.withColumnRenamed("embedding", "vemb")
-      .join(broadcast(cents))
-      .withColumn("cosim0", dotExpr / (col("nc") * col("nrm")))
-    val wa = Window.partitionBy(col("vec_id")).orderBy(col("cosim0").desc, col("cid"))
-    val assign = acos.withColumn("rn", row_number().over(wa))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("cid"), col("vemb"), col("nrm"))
+    val (_, assign, _) = buildIvfIndex(table(s, dir, "embeddings"))
     // probe: same-cluster candidates only, broadcast probe side
-    val qa = assign.filter(col("vec_id").between(0, 15))
-      .select(col("vec_id").as("qid"), col("cid"), col("vemb").as("qemb"), col("nrm").as("nq"))
-    val pcos = assign
-      .select(col("vec_id").as("vid"), col("cid"), col("vemb"), col("nrm").as("nv"))
-      .join(broadcast(qa), Seq("cid"))
-      .filter(col("qid") =!= col("vid"))
-      .withColumn("cosim0", dotExpr / (col("nq") * col("nv")))
-    val wp = Window.partitionBy(col("qid")).orderBy(col("cosim0").desc, col("vid"))
-    pcos.withColumn("rn", row_number().over(wp))
-      .filter(col("rn") <= 3)
-      .select(col("qid"), col("vid"), round(col("cosim0"), 9).as("cosim"), col("rn"))
+    cellTopK(assign, cellProbes(assign, BaseProbes), 3, RawCos)
   }
 
   /** Same CTE block with the centroid modulus expression parameterized —
@@ -254,16 +310,49 @@ object Similarity extends QueryModule {
     val e = withNorm(corpus.select(col("vec_id"), col("embedding")))
     val m = math.ceil(math.sqrt(corpus.count().toDouble)).toLong.max(1L)
     val cents = e.filter(col("vec_id") % m === 0)
-      .select(col("vec_id").as("cid"), col("embedding").as("qemb"), col("nrm").as("nc"))
-    val acos = e.withColumnRenamed("embedding", "vemb")
-      .join(broadcast(cents))
-      .withColumn("cosim0", dotExpr / (col("nc") * col("nrm")))
-    val wa = Window.partitionBy(col("vec_id")).orderBy(col("cosim0").desc, col("cid"))
-    val assign = acos.withColumn("rn", row_number().over(wa))
-      .filter(col("rn") === 1)
-      .select(col("cid"), col("vec_id"), col("vemb").as("embedding"), col("nrm"))
-    (cents.select(col("cid"), col("qemb").as("embedding"), col("nc")), assign, m)
+      .select(col("vec_id").as("cid"), col("embedding"), col("nrm").as("nc"))
+    (cents, topCells(e, cents), m)
   }
+
+  /** A quantizer trained over a corpus: its model table, the corpus
+    * encoded against it, the store meta its probes reuse, and the release
+    * of a training frame pinned until the store is written. */
+  private[graft] final case class Trained(model: DataFrame, data: DataFrame,
+      meta: Map[String, String], release: () => Unit = () => ())
+
+  /** One vector quantizer as a serving store, the value every IVF and PQ
+    * store lifecycle ([[vecTakedownBranch]], [[vecSyncStore]],
+    * [[vecMaskSyncStore]], [[seqStore]]) is written over: the trained
+    * `model` table and the `data` table of encoded rows, the data's
+    * columns and its range/sort file layout, how a corpus trains it, how
+    * a (vec_id, embedding) batch encodes against a STORED model (the
+    * index-property contract: a refresh reuses the model verbatim), how
+    * its population counts (`nVecs`), and which model column, if any,
+    * holds raw seed vec_ids — a takedown hitting one needs a re-seed,
+    * so it is refused. */
+  private[graft] final case class VecQuantizer(model: String, data: String,
+      cols: Seq[String], range: Seq[String], sort: Seq[String],
+      train: DataFrame => Trained, encode: (DataFrame, DataFrame) => DataFrame,
+      nVecs: Column, seedKey: Option[String]) {
+    def laid(df: DataFrame): DataFrame =
+      df.repartitionByRange(range.map(col): _*).sortWithinPartitions(sort.map(col): _*)
+    def tables(m: DataFrame, d: DataFrame): Seq[(String, DataFrame)] =
+      Seq(model -> m, data -> laid(d))
+  }
+
+  /** The IVF quantizer: `centroids` (cid, embedding, nc) trained by
+    * [[buildIvfIndex]], `assign` (cid, vec_id, embedding, nrm) encoded by
+    * the cell assignment [[topCells]], RANGE-partitioned and sorted on
+    * (cid, vec_id) so a probe's IN(cids) predicate prunes to the probed
+    * cells' bytes. Centroids are seeded from raw vectors (vec_id % m = 0). */
+  private[graft] val IvfCells: VecQuantizer = VecQuantizer("centroids", "assign",
+    Seq("cid", "vec_id", "embedding", "nrm"), Seq("cid", "vec_id"), Seq("cid", "vec_id"),
+    corpus => {
+      val (cents, assign, m) = buildIvfIndex(corpus)
+      Trained(cents, assign, Map("m" -> m.toString))
+    },
+    (cents, vecs) => topCells(withNorm(vecs.select(col("vec_id"), col("embedding"))), cents),
+    count(lit(1)), Some("cid"))
 
   private[graft] def fixtureIvfIndexPath(dir: String): String =
     "target/graft_index/ivf_" + IndexStore.dirTag(dir)
@@ -274,12 +363,8 @@ object Similarity extends QueryModule {
     val path = fixtureIvfIndexPath(dir)
     val stamp = IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
     IndexStore.stamped(s, path, stamp) {
-      val (cents, assign, m) = buildIvfIndex(table(s, dir, "embeddings"))
-      IndexStore.write(s, path, stamp, Seq(
-        "centroids" -> cents,
-        "assign" -> assign.repartitionByRange(col("cid"), col("vec_id"))
-          .sortWithinPartitions(col("cid"), col("vec_id"))),
-        Map("m" -> m.toString))
+      val t = IvfCells.train(table(s, dir, "embeddings"))
+      IndexStore.write(s, path, stamp, IvfCells.tables(t.model, t.data), t.meta)
     }
     (graft.SessionCache.cached(s, s"sim:ivfc:$dir")(
         IndexStore.read(s, path, "centroids")),
@@ -297,75 +382,53 @@ object Similarity extends QueryModule {
   def ivfAnnIndexed(s: SparkSession, dir: String): DataFrame = {
     tune(s)
     val (_, assign) = corpusIvfIndex(s, dir)
-    clusterCoverProbe(assign)
-  }
-
-  /** The cluster-cover top-3 probe over a STORED assign table — one
-    * definition shared by every stored-IVF prober (q184/q224/q229, which
-    * had begun to diverge as hand-kept copies). Probes are the 16 BASE
-    * vectors, bounded below too, so a corpus with negative ids (the sf1
-    * rung's copies) keeps the probe set fixed — a `< 16` filter at the
-    * rung would sweep every copy id into the probe side and measure a
-    * probe storm instead of the serving shape. The <= 16 probes' cluster
-    * ids collapse driver-side (the z-order bucket-cover pattern) into an
-    * IN(cids) predicate that parquet min/max pruning applies to the
-    * cid-sorted files — the scan skips every unprobed cluster's bytes. */
-  private def clusterCoverProbe(assign: DataFrame): DataFrame = {
-    val qa = assign.filter(col("vec_id").between(0, 15))
-      .select(col("vec_id").as("qid"), col("cid"),
-        col("embedding").as("qemb"), col("nrm").as("nq"))
-    val probeCids = qa.select(col("cid")).distinct().collect().map(_.getLong(0)).sorted
-    val pcos = assign
-      .filter(col("cid").isInCollection(probeCids.toSeq))
-      .select(col("vec_id").as("vid"), col("cid"), col("embedding").as("vemb"),
-        col("nrm").as("nv"))
-      .join(broadcast(qa), Seq("cid"))
-      .filter(col("qid") =!= col("vid"))
-      .withColumn("cosim0", dotExpr / (col("nq") * col("nv")))
-    val wp = Window.partitionBy(col("qid")).orderBy(col("cosim0").desc, col("vid"))
-    pcos.withColumn("rn", row_number().over(wp))
-      .filter(col("rn") <= 3)
-      .select(col("qid"), col("vid"), round(col("cosim0"), 9).as("cosim"), col("rn"))
+    cellProbe(assign, BaseProbes, 3, RawCos)
   }
 
   // ---- q224: takedown (right-to-be-forgotten) over the persisted IVF index ----
 
-  /** Build-if-stale the post-takedown BRANCH of the persisted IVF index:
-    * the requested vectors vanish from the SERVING structure without a
-    * retrain — one broadcast anti-join over the assign table (O(index)),
-    * centroids untouched (the quantization geometry is an aggregate the
-    * probes still need; what must change is WHO can be returned). The
-    * boundary is made loud instead of silent: the fixture centroids are
-    * seeded from raw corpus vectors (vec_id % m = 0), so a request
-    * hitting a centroid seed would leave the erased RAW VECTOR in the
-    * centroids table — the builder REFUSES such requests (a centroid-
-    * seed takedown needs a cell re-seed, i.e. a maintenance rebuild,
-    * the same trade q211 names for horizons). The registered request
-    * slice (vec_id % 89 = 17, minus centroid seeds) excludes them by
-    * construction; the refusal guards arbitrary callers. */
+  /** Build-if-stale the post-takedown BRANCH at `path` of the vector
+    * store at `src` (q224 IVF, q226 PQ): the vectors of `req` vanish from
+    * the SERVING structure without a retrain — one broadcast anti-join
+    * over the encoded `data` table (O(index)); the model table and the
+    * store meta carry through untouched (the quantization geometry is an
+    * aggregate the probes still need; what must change is WHO can be
+    * returned). The boundary is made loud instead of silent: a model
+    * seeded from raw corpus vectors (IVF centroids, vec_id % m = 0) would
+    * keep an erased RAW VECTOR, so the builder REFUSES a request hitting
+    * a seed (a seed takedown needs a cell re-seed, i.e. a maintenance
+    * rebuild, the same trade q211 names for horizons). The registered
+    * request slice ([[vecErased]]) excludes seeds by construction; the
+    * refusal guards arbitrary callers. `req` is read only inside the
+    * gated build, so a warm call runs no job for it. */
+  private[graft] def vecTakedownBranch(s: SparkSession, q: VecQuantizer, src: String,
+      path: String, stamp: String)(req: => DataFrame): String = {
+    IndexStore.stamped(s, path, stamp) {
+      val ids = req.select(col("vec_id")).localCheckpoint()
+      val model = IndexStore.read(s, src, q.model)
+      q.seedKey.foreach { k =>
+        require(model.join(ids, model(k) === ids("vec_id")).isEmpty,
+          s"takedown request hits a ${q.model} seed: erasing it requires " +
+            s"a re-seed (index rebuild), not a ${q.data}-row erasure")
+      }
+      IndexStore.write(s, path, stamp, q.tables(model, IndexStore.read(s, src, q.data)
+        .join(broadcast(ids), Seq("vec_id"), "left_anti")), IndexStore.readMeta(s, src))
+    }
+    path
+  }
+
+  /** The registered takedown request of the fixture vector stores: the
+    * [[vecErased]] slice under the fixture IVF index's stored modulus. */
+  private def fixtureTakedownRequest(s: SparkSession, dir: String): DataFrame =
+    table(s, dir, "embeddings").filter(vecErased(
+      IndexStore.readMeta(s, fixtureIvfIndexPath(dir))("m").toLong))
+
   private[graft] def takedownIvfBranch(s: SparkSession, dir: String): String = {
     corpusIvfIndex(s, dir)
     val src = fixtureIvfIndexPath(dir)
-    val path = IndexStore.workPath(src + "_takedown")
-    val stamp = "takedown1|" +
-      IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
-    IndexStore.stamped(s, path, stamp) {
-      val m = IndexStore.readMeta(s, src)("m").toLong
-      val req = table(s, dir, "embeddings").filter(vecErased(m))
-        .select(col("vec_id")).localCheckpoint()
-      val cents = IndexStore.read(s, src, "centroids")
-      require(cents.join(req, cents("cid") === req("vec_id")).isEmpty,
-        "IVF takedown request hits a centroid seed: erasing it requires " +
-          "a cell re-seed (index rebuild), not an assign-row erasure")
-      val assign2 = IndexStore.read(s, src, "assign")
-        .join(broadcast(req), Seq("vec_id"), "left_anti")
-      IndexStore.write(s, path, stamp, Seq(
-        "centroids" -> cents,
-        "assign" -> assign2.repartitionByRange(col("cid"), col("vec_id"))
-          .sortWithinPartitions(col("cid"), col("vec_id"))),
-        Map("m" -> m.toString))
-    }
-    path
+    vecTakedownBranch(s, IvfCells, src, IndexStore.workPath(src + "_takedown"),
+      "takedown1|" + IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet")))(
+      fixtureTakedownRequest(s, dir))
   }
 
   /** q224: the q184 probe answered from the post-takedown IVF branch,
@@ -378,12 +441,10 @@ object Similarity extends QueryModule {
   def vectorTakedown(s: SparkSession, dir: String): DataFrame = {
     tune(s)
     val path = takedownIvfBranch(s, dir)
-    val m = IndexStore.readMeta(s, path)("m").toLong
     val assign = graft.SessionCache.cached(s, s"sim:tkda:$dir")(
       IndexStore.read(s, path, "assign"))
-    val audit = assign.agg(count(lit(1)).as("n_vecs"),
-      sum(when(vecErased(m), 1L).otherwise(0L)).as("removed_traces"))
-    clusterCoverProbe(assign).crossJoin(broadcast(audit))
+    eraseAudited(assign, IvfCells, vecErased(IndexStore.readMeta(s, path)("m").toLong))(
+      cellProbe(_, BaseProbes, 3, RawCos))
   }
 
   /** q224's oracle: the q65/q184 chain with the erased set removed from
@@ -446,19 +507,45 @@ object Similarity extends QueryModule {
     (f.copy(inserts = f.inserts.select(col("vec_id"), col("embedding"))), m)
   }
 
-  /** Coarse-assign an arrival batch against a STORED centroid table —
-    * the O(batch) insert leg shared by the q229/q232 sync stores (and
-    * the same shape as the q215 streaming refresh). */
-  private def coarseAssignArrivals(s: SparkSession, idxPath: String,
-      inserts: DataFrame): DataFrame = {
-    val cb = IndexStore.read(s, idxPath, "centroids")
-      .select(col("cid"), col("embedding").as("qemb"), col("nc"))
-    val acos = withNorm(inserts).withColumnRenamed("embedding", "vemb")
-      .join(broadcast(cb))
-      .withColumn("cosim0", dotExpr / (col("nc") * col("nrm")))
-    val wa = Window.partitionBy(col("vec_id")).orderBy(col("cosim0").desc, col("cid"))
-    acos.withColumn("rn", row_number().over(wa)).filter(col("rn") === 1)
-      .select(col("cid"), col("vec_id"), col("vemb").as("embedding"), col("nrm"))
+  /** `probe` over a vector store's encoded rows `data`, crossed with
+    * the erasure audit every takedown and feed-sync probe carries:
+    * `n_vecs` (the quantizer's population count) and `removed_traces`
+    * (rows matching `erased`, pinned 0, so one surviving row fails the
+    * gate even if it never ranks), extended by `more`. */
+  private def eraseAudited(data: DataFrame, q: VecQuantizer, erased: Column,
+      more: DataFrame => DataFrame = identity)(probe: DataFrame => DataFrame): DataFrame =
+    probe(data).crossJoin(broadcast(more(data.agg(q.nVecs.as("n_vecs"),
+      sum(when(erased, 1L).otherwise(0L)).as("removed_traces")))))
+
+  /** The feed-synced probe of a physically applied vector store
+    * (q229/q230): [[eraseAudited]] with the erased BASE ids (the arrivals
+    * live above [[RoundTrip.ArrivalOffset]]) and the feed counts of the
+    * store meta. */
+  private def feedSyncedProbe(s: SparkSession, path: String, q: VecQuantizer)(
+      probe: DataFrame => DataFrame): DataFrame = {
+    val meta = IndexStore.readMeta(s, path)
+    eraseAudited(IndexStore.read(s, path, q.data), q,
+      vecErased(meta("m").toLong) && col("vec_id") < RoundTrip.ArrivalOffset,
+      RoundTrip.withFeedCounts(meta))(probe)
+  }
+
+  /** The masked-synced probe of a vector store (q232/q233): `probe`
+    * over the live rows (the delete mask applied by the broadcast
+    * anti-join of [[IndexStore.maskedRead]]), audited with the live
+    * count, the mask size and the feed counts. A missing mask on a
+    * stamped store is the legal post-fold state (ADVICE r15): the empty
+    * mask makes the anti-join a no-op. */
+  private def maskedSyncedProbe(s: SparkSession, path: String, q: VecQuantizer)(
+      probe: DataFrame => DataFrame): DataFrame = {
+    val meta = IndexStore.readMeta(s, path)
+    val mask = IndexStore.readDeleteMaskOrEmpty(s, path, "vec_id")
+      .localCheckpoint()
+    val live = IndexStore.maskedRead(IndexStore.read(s, path, q.data), mask,
+      "vec_id", "vec_id", "seg")
+    val audit = live.agg(q.nVecs.as("n_vecs"))
+      .crossJoin(broadcast(mask.agg(count(lit(1)).as("n_mask_rows"))))
+      .transform(RoundTrip.withFeedCounts(meta))
+    probe(live.drop("seg")).crossJoin(broadcast(audit))
   }
 
   // ---- q229: feed-driven sync of the IVF index ----
@@ -482,48 +569,54 @@ object Similarity extends QueryModule {
     * deleted vector, or a mis-assigned arrival all hash-mismatch. */
   def feedSyncedAnn(s: SparkSession, dir: String): DataFrame = {
     tune(s)
-    val path = ivfSyncStore(s, dir)
-    val meta = IndexStore.readMeta(s, path)
-    val m = meta("m").toLong
     // PROBE: the q184 cluster-cover top-3 over the synced membership
-    val assign = IndexStore.read(s, path, "assign")
-    val erased = vecErased(m) && col("vec_id") < RoundTrip.ArrivalOffset
-    val audit = assign.agg(count(lit(1)).as("n_vecs"),
-        sum(when(erased, 1L).otherwise(0L)).as("removed_traces"))
-      .transform(RoundTrip.withFeedCounts(meta))
-    clusterCoverProbe(assign).crossJoin(broadcast(audit))
+    feedSyncedProbe(s, ivfSyncStore(s, dir), IvfCells)(cellProbe(_, BaseProbes, 3, RawCos))
   }
 
-  /** Build-if-stale the feed-synced IVF store q229 probes — the q222
-    * warm-substrate convention (VERDICT r14 item 3): lake commit +
-    * from-lake build + feed drain + apply land ONCE per (process,
-    * corpus) behind a stamp check; the recurring benched cost is the
-    * warm probe. Final stamp written only AFTER the feed apply; the
-    * feed counts land in the store meta. */
-  private[graft] def ivfSyncStore(s: SparkSession, dir: String): String = {
-    val idxPath = IndexStore.workPath("target/tmp/ivf_sync_" + IndexStore.dirTag(dir))
-    val stamp = "vecsync2|" +
-      IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
-    IndexStore.stamped(s, idxPath, stamp) {
-      val (f, _) = embeddingFeedFixture(s, dir, "vecsync")
-      val (cents0, assign0, m) = buildIvfIndex(f.base)
-      IndexStore.write(s, idxPath, "vecsync-building", Seq(
-        "centroids" -> cents0,
-        "assign" -> assign0.repartitionByRange(col("cid"), col("vec_id"))
-          .sortWithinPartitions(col("cid"), col("vec_id"))))
-      // DELETE leg: one anti-join over assign (q224), sort discipline kept
-      val kept = IndexStore.read(s, idxPath, "assign")
+  /** Build-if-stale the feed-synced store of quantizer `q` at
+    * `<kind><dir tag>` (q229 IVF, q230 PQ) — the q222 warm-substrate
+    * convention (VERDICT r14 item 3): lake commit + from-lake build + feed
+    * drain + apply land ONCE per (process, corpus) behind the stamp
+    * `stamp` + source stamp; the recurring benched cost is the warm
+    * probe. v1 commits the embeddings to the `feed` lake and the store
+    * trains + encodes FROM that snapshot; the v1→v3 change feed then
+    * applies O(delta), PHYSICALLY:
+    *  - D rows anti-join the `data` table (the q224/q226 erasure — one
+    *    broadcast anti-join; the model is untouched), re-laid in the
+    *    quantizer's layout;
+    *  - insert rows encode against the STORED model (retraining would
+    *    invalidate every stored row) and append.
+    * The final stamp is written only AFTER the feed apply, so a crash
+    * mid-sync can never serve a half-synced store (it fails the stamp
+    * check and rebuilds). The feed counts and the training meta land in
+    * the store meta — the probe audits them without re-draining the feed.
+    * MaskFoldSpec checks the masked twin [[vecMaskSyncStore]]'s fold
+    * against this store, so the two stay separate. */
+  private def vecSyncStore(s: SparkSession, dir: String, q: VecQuantizer, kind: String,
+      feed: String, stamp: String): String = {
+    val idxPath = IndexStore.workPath("target/tmp/" + kind + IndexStore.dirTag(dir))
+    val st = stamp + IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
+    IndexStore.stamped(s, idxPath, st) {
+      // the same erasure slice as q224/q226 (the shared fixture): one
+      // takedown request provably leaves every serving structure
+      val (f, m) = embeddingFeedFixture(s, dir, feed)
+      val t = q.train(f.base)
+      IndexStore.write(s, idxPath, s"$feed-building", q.tables(t.model, t.data))
+      // DELETE leg: one anti-join over the encoded rows, layout kept
+      val kept = IndexStore.read(s, idxPath, q.data)
         .join(broadcast(f.deletes), Seq("vec_id"), "left_anti").localCheckpoint()
-      IndexStore.replaceTable(s, idxPath, "assign",
-        kept.repartitionByRange(col("cid"), col("vec_id"))
-          .sortWithinPartitions(col("cid"), col("vec_id")))
-      // INSERT leg: coarse-assign the arrivals against the STORED centroids
-      IndexStore.append(s, idxPath, "assign",
-        coarseAssignArrivals(s, idxPath, f.inserts))
-      IndexStore.writeStamp(s, idxPath, stamp, f.counts + ("m" -> m.toString))
+      IndexStore.replaceTable(s, idxPath, q.data, q.laid(kept))
+      // INSERT leg: encode the arrivals against the STORED model
+      IndexStore.append(s, idxPath, q.data,
+        q.encode(IndexStore.read(s, idxPath, q.model), f.inserts))
+      IndexStore.writeStamp(s, idxPath, st, f.counts ++ t.meta + ("m" -> m.toString))
+      t.release()
     }
     idxPath
   }
+
+  private[graft] def ivfSyncStore(s: SparkSession, dir: String): String =
+    vecSyncStore(s, dir, IvfCells, "ivf_sync_", "vecsync", "vecsync2|")
 
   /** q229's oracle: membership recomputed from the lake's current
     * logical state with centroids held at their v1 values — retained
@@ -588,45 +681,47 @@ object Similarity extends QueryModule {
 
   // ---- q232: feed sync with O(delta) MASKED deletes for the IVF index ----
 
-  /** Build-if-stale the mask-synced IVF store: the same lake and the
-    * same v1→v3 feed as q229, but the delete leg lands as the
-    * sequence-scoped delete-mask sidecar (q231's pattern carried to the
-    * VECTOR family) — a kilobyte `(vec_id, seq)` row-set — instead of
-    * q229's assign-table rewrite. The assign rows carry a `seg` column
-    * (0 = base build, 1 = the feed's arrivals) so the mask's scoping
-    * rule holds here too: it hides only rows of segments ≤ its seq, and
-    * a re-inserted vec_id arriving later stays visible. Arrivals still
-    * coarse-assign against the STORED centroids (O(batch)); the final
-    * stamp lands only after both legs. */
-  private[graft] def ivfMaskSyncStore(s: SparkSession, dir: String): String = {
-    val idxPath = IndexStore.workPath("target/tmp/ivf_msync_" + IndexStore.dirTag(dir))
-    val stamp = "vecmasksync1|" +
-      IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
-    IndexStore.stamped(s, idxPath, stamp) {
-      val (f, _) = embeddingFeedFixture(s, dir, "vecmasksync")
-      val (cents0, assign0, m) = buildIvfIndex(f.base)
-      IndexStore.write(s, idxPath, "vecmasksync-building", Seq(
-        "centroids" -> cents0,
-        "assign" -> assign0.withColumn("seg", lit(0L))
-          .repartitionByRange(col("cid"), col("vec_id"))
-          .sortWithinPartitions(col("cid"), col("vec_id"))))
-      // MASKED delete leg: O(delta) bytes — q229's rewrite is gone
+  /** Build-if-stale the mask-synced store of quantizer `q` (q232 IVF,
+    * q233 PQ): the same lake and the same v1→v3 feed as
+    * [[vecSyncStore]], but the delete leg lands as the sequence-scoped
+    * delete-mask sidecar (q231's pattern carried to the vector families)
+    * — a kilobyte `(vec_id, seq)` row-set — instead of the data-table
+    * rewrite. The data rows carry a `seg` column (0 = base build, 1 =
+    * the feed's arrivals, encoded against the STORED model, O(batch)) so
+    * the mask's scoping rule holds here too: it hides only rows of
+    * segments ≤ its seq, and a re-inserted vec_id arriving later stays
+    * visible. The auto-fold policy (VERDICT r15 item 2) folds only past
+    * its threshold (a distinct-key fraction, so PQ's M rows per vector
+    * read the same ~1% deleted, below the 0.1 default: the mask stays —
+    * q232's point); the final stamp lands only after both legs. */
+  private def vecMaskSyncStore(s: SparkSession, dir: String, q: VecQuantizer, kind: String,
+      feed: String, stamp: String): String = {
+    val idxPath = IndexStore.workPath("target/tmp/" + kind + IndexStore.dirTag(dir))
+    val st = stamp + IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
+    IndexStore.stamped(s, idxPath, st) {
+      val (f, m) = embeddingFeedFixture(s, dir, feed)
+      val t = q.train(f.base)
+      IndexStore.write(s, idxPath, s"$feed-building",
+        q.tables(t.model, t.data.withColumn("seg", lit(0L))))
+      // MASKED delete leg: O(delta) bytes — the data rewrite is gone
       IndexStore.appendDeleteMask(s, idxPath,
         f.deletes.withColumn("seq", lit(0L)))
-      // INSERT leg: coarse-assign against the STORED centroids, seg 1
-      IndexStore.append(s, idxPath, "assign",
-        coarseAssignArrivals(s, idxPath, f.inserts).withColumn("seg", lit(1L)))
-      // auto-fold policy (VERDICT r15 item 2): ~1% deleted sits below
-      // the 0.1 default, so the mask stays — q232's point
+      // INSERT leg: encode against the STORED model, seg 1
+      IndexStore.append(s, idxPath, q.data,
+        q.encode(IndexStore.read(s, idxPath, q.model), f.inserts).withColumn("seg", lit(1L)))
       val folded = IndexStore.autoFoldIfNeeded(
-        s, idxPath, "assign", "vec_id")(IndexStore.foldMasks(
-        s, idxPath, vecMaskFold("assign", Seq("cid", "vec_id"))))
-      IndexStore.writeStamp(s, idxPath, stamp, f.counts ++ Map(
+        s, idxPath, q.data, "vec_id")(IndexStore.foldMasks(
+        s, idxPath, vecMaskFold(q.data, q.sort)))
+      IndexStore.writeStamp(s, idxPath, st, f.counts ++ t.meta ++ Map(
         "m" -> m.toString,
         "auto_folded" -> folded.toString))
+      t.release()
     }
     idxPath
   }
+
+  private[graft] def ivfMaskSyncStore(s: SparkSession, dir: String): String =
+    vecMaskSyncStore(s, dir, IvfCells, "ivf_msync_", "vecmasksync", "vecmasksync1|")
 
   /** The vector family's fold of one seg-tagged table (IVF `assign`, PQ
     * `codes`), re-laid range-sorted on `sortCols` — MaskFoldSpec pins the
@@ -652,18 +747,8 @@ object Similarity extends QueryModule {
     * size, and the feed counts. */
   def maskedFeedSyncedAnn(s: SparkSession, dir: String): DataFrame = {
     tune(s)
-    val path = ivfMaskSyncStore(s, dir)
-    val meta = IndexStore.readMeta(s, path)
-    val assign = IndexStore.read(s, path, "assign")
-    // missing mask on a stamped store = the legal post-fold state
-    // (ADVICE r15): the empty mask makes the anti-join a no-op
-    val mask = IndexStore.readDeleteMaskOrEmpty(s, path, "vec_id")
-      .localCheckpoint()
-    val live = IndexStore.maskedRead(assign, mask, "vec_id", "vec_id", "seg")
-    val audit = live.agg(count(lit(1)).as("n_vecs"))
-      .crossJoin(broadcast(mask.agg(count(lit(1)).as("n_mask_rows"))))
-      .transform(RoundTrip.withFeedCounts(meta))
-    clusterCoverProbe(live.drop("seg")).crossJoin(broadcast(audit))
+    maskedSyncedProbe(s, ivfMaskSyncStore(s, dir), IvfCells)(
+      cellProbe(_, BaseProbes, 3, RawCos))
   }
 
   /** q232's oracle: q229's chain verbatim (same logical state, same
@@ -744,37 +829,27 @@ object Similarity extends QueryModule {
 
   /** ONE Lloyd step over the modulus seeding — q185's math factored so
     * the refined-quantizer index (q267) and the q185/q197 refinement
-    * reports share it verbatim: returns (refined centroids (cid, qemb,
-    * nc), refined assignment (cid, vec_id, vemb, nrm, cid_seed)). */
+    * reports share it verbatim: returns (refined centroids (cid,
+    * embedding, nc), refined assignment (cid, vec_id, embedding, nrm,
+    * cid_seed)). Both assignments are the one cell assignment
+    * [[topCells]]. */
   private def lloydStep(e: DataFrame, m: Long): (DataFrame, DataFrame) = {
     val cents0 = e.filter(col("vec_id") % m === 0)
-      .select(col("vec_id").as("cid"), col("embedding").as("qemb"), col("nrm").as("nc"))
-    val acos0 = e.withColumnRenamed("embedding", "vemb")
-      .join(broadcast(cents0))
-      .withColumn("cosim0", dotExpr / (col("nc") * col("nrm")))
-    val wa = Window.partitionBy(col("vec_id")).orderBy(col("cosim0").desc, col("cid"))
-    val assign0 = acos0.withColumn("rn", row_number().over(wa))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("cid").as("cid_seed"), col("vemb"), col("nrm"))
+      .select(col("vec_id").as("cid"), col("embedding"), col("nrm").as("nc"))
+    val assign0 = topCells(e, cents0).withColumnRenamed("cid", "cid_seed")
     // Lloyd mean step: exact decimal component means, then reassemble the
     // centroid vector in pos order (array_sort on the (pos, cx) struct is
     // deterministic) and take its norm through the same decimal path.
     val comp = assign0
-      .select(col("cid_seed").as("cid"), posexplode(col("vemb")).as(Seq("pos", "x")))
+      .select(col("cid_seed").as("cid"), posexplode(col("embedding")).as(Seq("pos", "x")))
       .groupBy(col("cid"), col("pos"))
       .agg((dsum(col("x").cast("double"), 20) / count(col("x"))).as("cx"))
     val cents1 = comp.groupBy(col("cid"))
       .agg(
         transform(array_sort(collect_list(struct(col("pos"), col("cx")))),
-          t => t.getField("cx")).as("qemb"),
+          t => t.getField("cx")).as("embedding"),
         sqrt(dsum(col("cx") * col("cx"), 20)).as("nc"))
-    val acos1 = assign0.join(broadcast(cents1))
-      .withColumn("cosim1", dotExpr / (col("nc") * col("nrm")))
-    val w1 = Window.partitionBy(col("vec_id")).orderBy(col("cosim1").desc, col("cid"))
-    val assign1 = acos1.withColumn("rn", row_number().over(w1))
-      .filter(col("rn") === 1)
-      .select(col("cid"), col("vec_id"), col("vemb"), col("nrm"), col("cid_seed"))
-    (cents1, assign1)
+    (cents1, topCells(assign0, cents1))
   }
 
   /** The one-Lloyd-step CTE block (newc -> newnorm -> adots2 -> acos2 ->
@@ -1113,14 +1188,8 @@ object Similarity extends QueryModule {
       val e = withNorm(corpus.select(col("vec_id"), col("embedding")))
       val m = math.ceil(math.sqrt(corpus.count().toDouble)).toLong.max(1L)
       val (cents1, assign1) = lloydStep(e, m)
-      IndexStore.write(s, path, stamp, Seq(
-        "centroids" -> cents1
-          .select(col("cid"), col("qemb").as("embedding"), col("nc")),
-        "assign" -> assign1
-          .select(col("cid"), col("vec_id"), col("vemb").as("embedding"),
-            col("nrm"))
-          .repartitionByRange(col("cid"), col("vec_id"))
-          .sortWithinPartitions(col("cid"), col("vec_id"))),
+      IndexStore.write(s, path, stamp, IvfCells.tables(cents1,
+        assign1.select(IvfCells.cols.map(col): _*)),
         Map("m" -> m.toString, "lloyd_steps" -> "1"))
     }
     (graft.SessionCache.cached(s, s"sim:ivfrc:$dir")(
@@ -1153,20 +1222,11 @@ object Similarity extends QueryModule {
     val (_, sassign) = corpusIvfIndex(s, dir)
     val (_, rassign) = corpusRefinedIvfIndex(s, dir)
     val wq = Window.partitionBy(col("qid")).orderBy(col("cosim").desc, col("vid"))
-    def probes(assign: DataFrame): DataFrame =
-      assign.filter(col("vec_id") % 23 === 3)
-        .select(col("cid"), col("vec_id").as("qid"),
-          col("embedding").as("qemb"), col("nrm").as("nq"))
+    def probes(assign: DataFrame): DataFrame = cellProbes(assign, col("vec_id") % 23 === 3)
     // same-cluster candidates, true-cosine rescore, top-3 (the q253
     // rounding convention before the window)
     def cellTop3(assign: DataFrame): DataFrame =
-      assign.select(col("cid"), col("vec_id").as("vid"),
-          col("embedding").as("vemb"), col("nrm").as("nv"))
-        .join(broadcast(probes(assign)), Seq("cid"))
-        .filter(col("qid") =!= col("vid"))
-        .withColumn("cosim", round(dotExpr / (col("nq") * col("nv")), 9))
-        .withColumn("rn", row_number().over(wq)).filter(col("rn") <= 3)
-        .select(col("qid"), col("vid"))
+      cellTopK(assign, probes(assign), 3, RoundedCos).select(col("qid"), col("vid"))
     val exact = sassign.select(col("vec_id").as("vid"),
         col("embedding").as("vemb"), col("nrm").as("nv"))
       .join(broadcast(probes(sassign).drop("cid")), col("qid") =!= col("vid"))
@@ -1265,10 +1325,11 @@ object Similarity extends QueryModule {
   // rank candidates by ADC (asymmetric distance: raw query vs codes)
   // reading ONLY the code table. Codebooks: the deterministic seed pick
   // (the IVF modulus pattern, q65) refined by [[PqLloydSteps]]
-  // per-subspace Lloyd steps to the measured MSE plateau (PqTrainRig;
-  // see [[pqCodebooks]]) — the k-means training production PQ uses,
-  // decimal-exact and oracled. Encoding is flat (raw vectors, not IVF
-  // residuals — FAISS's by_residual=false flavor), which keeps the code
+  // per-subspace Lloyd steps to the measured MSE plateau (PLANS.md
+  // "PqTrainRig: Lloyd depth vs MSE/recall"; see [[pqCodebooks]]) — the
+  // k-means training production PQ uses, decimal-exact and oracled.
+  // Encoding is flat (raw vectors, not IVF residuals — FAISS's
+  // by_residual=false flavor), which keeps the code
   // of a vector independent of its coarse cluster; q200 combines the
   // codes with the persisted IVF clusters into the IVFADC probe.
   // Residual encoding was MEASURED before being rejected: on this
@@ -1291,8 +1352,8 @@ object Similarity extends QueryModule {
     * assign/mean rounds ([[pqCwSqlSteps]]), so the step count is part of
     * the cross-engine contract (an adaptive stop would need a loop the
     * oracle cannot express). The value is the measured MSE plateau of
-    * the fixture corpus — see PqTrainRig and the PLANS.md round-14
-    * steps-vs-MSE/recall table; past it, per-step MSE gain is under
+    * the fixture corpus — see the PLANS.md round-14 record "PqTrainRig:
+    * Lloyd depth vs MSE/recall"; past it, per-step MSE gain is under
     * 1e-3 and recall is flat. */
   private[graft] val PqLloydSteps = 4
 
@@ -1301,9 +1362,6 @@ object Similarity extends QueryModule {
     * `(pos-1) // 8`. */
   private def subVecsCol(emb: Column): Column =
     array((0 until PqM).map(j => slice(emb, j * PqSub + 1, PqSub)): _*)
-
-  /** [[subVecsCol]] for package-level diagnostics (PqTrainRig). */
-  private[graft] def subVecsColPub(emb: Column): Column = subVecsCol(emb)
 
   /** Encode a corpus against a codebook frame (code, j, csub): ONE corpus
     * scan — posexplode to (vec_id, j, subvec), broadcast-join the
@@ -1333,8 +1391,8 @@ object Similarity extends QueryModule {
     * 100 TB build would train on a sample — each refinement is one
     * corpus scan plus a map-side-collapsed M*k**`PqSub`-row mean shuffle
     * either way, the q185 shape per subspace). Depth is the measured MSE
-    * plateau (PqTrainRig; PLANS.md round-14 table): step 1 takes the
-    * bulk of the seed MSE drop, steps 2-4 keep improving, and past step
+    * plateau (PLANS.md "PqTrainRig: Lloyd depth vs MSE/recall"): step 1
+    * takes the bulk of the seed MSE drop, steps 2-4 keep improving, and past step
     * 4 the per-step gain falls under 1e-3 with recall flat — the
     * codewords have effectively stopped moving. Refined components go through the exact
     * DECIMAL mean and are then cast to FLOAT — codebooks store float32
@@ -1379,17 +1437,41 @@ object Similarity extends QueryModule {
     (cb0, cb, mq)
   }
 
+  /** The PQ quantizer: `codebooks` (code, j, csub) trained by
+    * [[pqCodebooks]] (pinned while the store is written: trained once,
+    * read by the encode and the queries), `codes` (vec_id, j, code, d2)
+    * encoded by [[pqEncodeAgainst]], range-partitioned on vec_id and
+    * sorted on (vec_id, j) — the feed-synced stores' layout. Codewords
+    * are trained means, so a takedown never hits a seed. */
+  private[graft] val PqCodes: VecQuantizer = VecQuantizer("codebooks", "codes",
+    Seq("vec_id", "j", "code", "d2"), Seq("vec_id"), Seq("vec_id", "j"),
+    corpus => {
+      val (_, cb1, mq) = pqCodebooks(corpus)
+      val cbm = cb1.localCheckpoint(true)
+      Trained(cbm, pqEncodeAgainst(corpus, cbm), Map("mq" -> mq.toString),
+        () => { cbm.unpersist(); () })
+    },
+    (cb, vecs) => pqEncodeAgainst(vecs, cb),
+    countDistinct(col("vec_id")), None)
+
+  /** [[PqCodes]] keyed by each vector's IVF cell under the centroids
+    * `cents`: codes (cid, vec_id, j, code, d2), RANGE-partitioned and
+    * sorted on cid, so the IVFADC probe (q200) reads only the probed
+    * clusters' bytes — the layout of the fixture, takedown and
+    * sequential code stores. */
+  private def pqCells(cents: => DataFrame): VecQuantizer = PqCodes.copy(
+    cols = "cid" +: PqCodes.cols, range = Seq("cid", "vec_id"),
+    sort = Seq("cid", "vec_id", "j"),
+    encode = (cb, vecs) => pqEncodeAgainst(vecs, cb)
+      .join(IvfCells.encode(cents, vecs).select(col("vec_id"), col("cid")), Seq("vec_id")))
+
   private[graft] def fixturePqIndexPath(dir: String): String =
     "target/graft_index/pq_" + IndexStore.dirTag(dir)
 
   /** Build-or-load the persisted fixture PQ index (stamped, atomic swap —
-    * the [[corpusIvfIndex]] pattern):
-    *  - `codebooks` (code, j, csub): M*k* rows, broadcast at query time;
-    *  - `codes` (cid, vec_id, j, code, d2): the corpus's compressed form
-    *    PLUS its coarse IVF cluster, RANGE-partitioned and sorted on cid
-    *    so the IVFADC probe (q200) reads only the probed clusters' bytes
-    *    — the same layout contract as the IVF assign table and the
-    *    term-sorted postings.
+    * the [[corpusIvfIndex]] pattern): `codebooks`, M*k* rows broadcast
+    * at query time, and `codes`, the corpus's compressed form PLUS its
+    * stored coarse IVF cluster in the [[pqCells]] layout.
     * The seed modulus is stored in the index meta (an index property a
     * probe must reuse, never re-derive).
     */
@@ -1400,18 +1482,11 @@ object Similarity extends QueryModule {
     val stamp = s"lloyd$PqLloydSteps|" +
       IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
     IndexStore.stamped(s, path, stamp) {
-      val (_, assign) = corpusIvfIndex(s, dir)
-      val corpus = table(s, dir, "embeddings")
-      val (_, cb1, mq) = pqCodebooks(corpus)
-      val cbm = cb1.localCheckpoint(true) // trained once, read by encode + queries
-      val codes = pqEncodeAgainst(corpus, cbm)
-      val withCid = codes.join(assign.select(col("vec_id"), col("cid")), Seq("vec_id"))
-      IndexStore.write(s, path, stamp, Seq(
-        "codebooks" -> cbm,
-        "codes" -> withCid.repartitionByRange(col("cid"), col("vec_id"))
-          .sortWithinPartitions(col("cid"), col("vec_id"), col("j"))),
-        Map("mq" -> mq.toString))
-      cbm.unpersist()
+      val (cents, assign) = corpusIvfIndex(s, dir)
+      val t = PqCodes.train(table(s, dir, "embeddings"))
+      IndexStore.write(s, path, stamp, pqCells(cents).tables(t.model,
+        t.data.join(assign.select(col("vec_id"), col("cid")), Seq("vec_id"))), t.meta)
+      t.release()
     }
     (graft.SessionCache.cached(s, s"sim:pqcb:$dir")(
         IndexStore.read(s, path, "codebooks")),
@@ -1503,35 +1578,57 @@ object Similarity extends QueryModule {
   def pqAdcTopk(s: SparkSession, dir: String): DataFrame = {
     tune(s)
     val (cb, codes) = corpusPqIndex(s, dir)
-    adcTop3(s, dir, cb, codes)
+    baseAdcTop3(s, dir, cb, codes)
   }
 
-  /** The full-scan ADC top-3 over an arbitrary (codebooks, codes) pair —
-    * one definition shared by every prober of a PQ code store
-    * (q199/q226/q230/q233), which had begun to accumulate hand-kept
-    * copies exactly the way the IVF cluster-cover probe once did (and
-    * q233's oracle PINS bit-equality between the masked and physical
-    * probes, so the two code paths must be the same code). Probes are
-    * the 16 BASE vectors — bounded below too, so a corpus with negative
-    * ids (the sf1 rung's copies) keeps the probe set fixed. */
-  private def adcTop3(s: SparkSession, dir: String,
-      cb: DataFrame, codes: DataFrame): DataFrame = {
-    val probes = table(s, dir, "embeddings").filter(col("vec_id").between(0, 15))
-      .select(col("vec_id").as("qid"),
-        posexplode(subVecsCol(col("embedding"))).as(Seq("j", "qsub")))
-    val dtable = probes.join(cb, Seq("j"))
-      .select(col("qid"), col("j"), col("code"),
-        expr("graft_sqdist(qsub, csub)").as("qd2"))
-    val adc = codes.select(col("vec_id").as("vid"), col("j"), col("code"))
-      .join(broadcast(dtable), Seq("j", "code"))
-      .filter(col("qid") =!= col("vid"))
-      .groupBy(col("qid"), col("vid"))
-      .agg(sum(col("qd2")).as("adc0"))
-    val w = Window.partitionBy(col("qid")).orderBy(round(col("adc0"), 9).asc, col("vid"))
-    adc.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3)
-      .select(col("qid"), col("vid"), round(col("adc0"), 9).as("adc"), col("rn"))
+  /** The ADC distance table, written once: each probe row (qid,
+    * embedding[, cid]) split into its M subvectors and scored against
+    * every codeword of the broadcast codebook `cb` (code, j, csub) by
+    * graft_sqdist — (qid[, cid], j, code, qd2). Probes that carry their
+    * cell keep it as a table key, so a cell-pruned code row meets only
+    * the probes of its own cell. */
+  private def adcTable(probes: DataFrame, cb: DataFrame): DataFrame = {
+    val keys = col("qid") +: probes.columns.toSeq.filter(_ == "cid").map(col)
+    probes.select(keys :+ posexplode(subVecsCol(col("embedding"))).as(Seq("j", "qsub")): _*)
+      .join(broadcast(cb), Seq("j"))
+      .select(keys ++ Seq(col("j"), col("code"),
+        expr("graft_sqdist(qsub, csub)").as("qd2")): _*)
   }
+
+  /** The ADC scorer, written once: the distance table `dt` summed over
+    * the codes frame (vec_id, j, code[, cid], carry...) — joined on the
+    * table's keys — into one score per (qid, vid, carry...), adc0. The
+    * (probe, vector) partial sums collapse map-side. Callers choose the
+    * table's broadcast, and rank or reduce the raw scores on top. */
+  private def adcScores(codes: DataFrame, dt: DataFrame, carry: Seq[String] = Nil): DataFrame = {
+    val key = Seq("cid", "j", "code").filter(dt.columns.contains)
+    val out = col("qid") +: col("vid") +: carry.map(col)
+    codes.select(key.map(col) ++ (col("vec_id").as("vid") +: carry.map(col)): _*)
+      .join(dt, key)
+      .groupBy(out: _*)
+      .agg(sum(col("qd2")).as("adc0"))
+  }
+
+  /** Each probe's ADC top-3 over its scores, self excluded, ranked by
+    * the ROUNDED distance then vid (the q191 cross-engine tie contract):
+    * (qid, vid, carry..., adc, rn). */
+  private def adcTop3(scores: DataFrame, carry: Seq[String] = Nil): DataFrame = {
+    val w = Window.partitionBy(col("qid")).orderBy(round(col("adc0"), 9).asc, col("vid"))
+    scores.filter(col("qid") =!= col("vid"))
+      .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
+      .select((col("qid") +: col("vid") +: carry.map(col)) ++
+        Seq(round(col("adc0"), 9).as("adc"), col("rn")): _*)
+  }
+
+  /** The full-scan ADC top-3 of the 16 [[BaseProbes]] over an arbitrary
+    * (codebooks, codes) pair — every prober of a PQ code store
+    * (q199/q226/q230/q233) is a call (q233's oracle PINS bit-equality
+    * between the masked and physical probes, so the two code paths must
+    * be the same code). */
+  private def baseAdcTop3(s: SparkSession, dir: String,
+      cb: DataFrame, codes: DataFrame): DataFrame =
+    adcTop3(adcScores(codes, broadcast(adcTable(table(s, dir, "embeddings")
+      .filter(BaseProbes).select(col("vec_id").as("qid"), col("embedding")), cb))))
 
   private val pqAdcSql =
     s"""WITH $flatSql,
@@ -1552,38 +1649,25 @@ object Similarity extends QueryModule {
 
   // ---- q226: takedown over the persisted PQ code store ----
 
-  /** Build-if-stale the post-takedown BRANCH of the PQ code store — the
-    * SAME request slice as q224 (vec_id % 89 = 17 minus IVF centroid
-    * seeds), so one erasure request provably leaves BOTH vector serving
-    * structures: one broadcast anti-join over the codes table, O(index).
-    * Codebooks are kept: after [[PqLloydSteps]] Lloyd rounds every
-    * codeword is a cluster MEAN over subvectors — a trained aggregate
-    * with no vec_id linkage — the same "the quantizer keeps its trained
-    * geometry" trade as q224's centroids (the residual caveat, stated
-    * rather than hidden: a codeword whose training cluster had exactly
-    * one member IS that member's subvector; retraining is the rebuild
-    * op). The `mq` meta and cid provenance carry through unchanged. */
+  /** The post-takedown BRANCH of the PQ code store ([[vecTakedownBranch]])
+    * — the SAME request slice as q224 (vec_id % 89 = 17 minus IVF
+    * centroid seeds), so one erasure request provably leaves BOTH vector
+    * serving structures. Codebooks are kept: after [[PqLloydSteps]] Lloyd
+    * rounds every codeword is a cluster MEAN over subvectors — a trained
+    * aggregate with no vec_id linkage — the same "the quantizer keeps its
+    * trained geometry" trade as q224's centroids (the residual caveat,
+    * stated rather than hidden: a codeword whose training cluster had
+    * exactly one member IS that member's subvector; retraining is the
+    * rebuild op). The `mq` meta and cid provenance carry through
+    * unchanged. */
   private[graft] def takedownPqBranch(s: SparkSession, dir: String): String = {
     corpusPqIndex(s, dir)
-    corpusIvfIndex(s, dir)
+    val (cents, _) = corpusIvfIndex(s, dir)
     val src = fixturePqIndexPath(dir)
-    val path = IndexStore.workPath(src + "_takedown")
-    val stamp = s"takedown1|lloyd$PqLloydSteps|" +
-      IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
-    IndexStore.stamped(s, path, stamp) {
-      val m = IndexStore
-        .readMeta(s, fixtureIvfIndexPath(dir))("m").toLong
-      val req = table(s, dir, "embeddings").filter(vecErased(m))
-        .select(col("vec_id")).localCheckpoint()
-      val codes2 = IndexStore.read(s, src, "codes")
-        .join(broadcast(req), Seq("vec_id"), "left_anti")
-      IndexStore.write(s, path, stamp, Seq(
-        "codebooks" -> IndexStore.read(s, src, "codebooks"),
-        "codes" -> codes2.repartitionByRange(col("cid"), col("vec_id"))
-          .sortWithinPartitions(col("cid"), col("vec_id"), col("j"))),
-        Map("mq" -> IndexStore.readMeta(s, src)("mq")))
-    }
-    path
+    vecTakedownBranch(s, pqCells(cents), src, IndexStore.workPath(src + "_takedown"),
+      s"takedown1|lloyd$PqLloydSteps|" +
+        IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet")))(
+      fixtureTakedownRequest(s, dir))
   }
 
   /** q226: the q199 ADC top-3 answered from the post-takedown code
@@ -1600,11 +1684,8 @@ object Similarity extends QueryModule {
       IndexStore.read(s, path, "codebooks"))
     val codes = graft.SessionCache.cached(s, s"sim:tkpqc:$dir")(
       IndexStore.read(s, path, "codes"))
-    val m = IndexStore
-      .readMeta(s, fixtureIvfIndexPath(dir))("m").toLong
-    val audit = codes.agg(countDistinct(col("vec_id")).as("n_vecs"),
-      sum(when(vecErased(m), 1L).otherwise(0L)).as("removed_traces"))
-    adcTop3(s, dir, cb, codes).crossJoin(broadcast(audit))
+    eraseAudited(codes, PqCodes, vecErased(IndexStore
+      .readMeta(s, fixtureIvfIndexPath(dir))("m").toLong))(baseAdcTop3(s, dir, cb, _))
   }
 
   /** q226's oracle: the q199 chain with erased ids removed from the CODE
@@ -1639,61 +1720,15 @@ object Similarity extends QueryModule {
 
   // ---- q230: feed-driven sync of the PQ code store ----
 
-  /** Build-if-stale the feed-synced PQ code store — the substrate of
-    * [[feedSyncedAdc]] (q230), completing the lake→index sync loop for
+  /** The feed-synced PQ code store ([[vecSyncStore]]) — the substrate
+    * of [[feedSyncedAdc]] (q230), completing the lake→index sync loop for
     * the FOURTH and last serving family (search q227, dedup q228, IVF
-    * q229; the PQ gap VERDICT r14 ranked first). One-time build per
-    * (process, corpus): v1 commits the embeddings to a fresh lake and
-    * the code store trains + encodes FROM that snapshot (the q198
-    * build); then the lake moves (the registered takedown slice is
-    * deleted, the % 31 = 2 arrivals append under fresh ids with negated
-    * embeddings — the q229 transform) and the v1→v3 change feed is
-    * drained ONCE and applied O(delta):
-    *  - D rows anti-join `codes` (the q226 erasure — one broadcast
-    *    anti-join, codebooks untouched: trained means, no id linkage);
-    *  - insert rows encode against the STORED codebooks
-    *    ([[pqEncodeAgainst]], the q208 refresh path — retraining would
-    *    invalidate every stored code) and append.
-    * The final stamp is written only AFTER the feed apply, so a crash
-    * mid-sync can never serve a half-synced store (it fails the stamp
-    * check and rebuilds). The feed's insert/delete counts land in the
-    * store meta — the probe audits them without re-draining the feed,
-    * which is what makes the recurring benched cost the WARM probe
-    * (the q222 convention VERDICT r14 item 3 prescribes). */
-  private[graft] def pqSyncStore(s: SparkSession, dir: String): String = {
-    val idxPath = IndexStore.workPath("target/tmp/pq_sync_" + IndexStore.dirTag(dir))
-    val stamp = s"pqsync1|lloyd$PqLloydSteps|" +
-      IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
-    IndexStore.stamped(s, idxPath, stamp) {
-      // the same erasure slice as q224/q226/q229 (the shared fixture):
-      // one takedown request provably leaves every serving structure,
-      // and the IVF-centroid seed exclusion keeps the slice identical
-      // across the families
-      val (f, m) = embeddingFeedFixture(s, dir, "pqsync")
-      val (_, cb1, mq) = pqCodebooks(f.base)
-      val cbm = cb1.localCheckpoint(true)
-      // staging stamp: validates as CURRENT only after the feed apply
-      IndexStore.write(s, idxPath, "pqsync-building", Seq(
-        "codebooks" -> cbm,
-        "codes" -> pqEncodeAgainst(f.base, cbm)
-          .repartitionByRange(col("vec_id"))
-          .sortWithinPartitions(col("vec_id"), col("j"))))
-      // DELETE leg: one broadcast anti-join over the codes (q226)
-      val kept = IndexStore.read(s, idxPath, "codes")
-        .join(broadcast(f.deletes), Seq("vec_id"), "left_anti").localCheckpoint()
-      IndexStore.replaceTable(s, idxPath, "codes",
-        kept.repartitionByRange(col("vec_id"))
-          .sortWithinPartitions(col("vec_id"), col("j")))
-      // INSERT leg: encode the arrivals against the STORED codebooks
-      IndexStore.append(s, idxPath, "codes",
-        pqEncodeAgainst(f.inserts,
-          IndexStore.read(s, idxPath, "codebooks")))
-      IndexStore.writeStamp(s, idxPath, stamp, f.counts ++ Map(
-        "mq" -> mq.toString, "m" -> m.toString))
-      cbm.unpersist(): Unit
-    }
-    idxPath
-  }
+    * q229; the PQ gap VERDICT r14 ranked first): codebooks trained from
+    * the v1 snapshot (the q198 build), deleted codes anti-joined
+    * (codebooks untouched: trained means, no id linkage), arrivals
+    * encoded against the STORED codebooks (the q208 refresh path). */
+  private[graft] def pqSyncStore(s: SparkSession, dir: String): String =
+    vecSyncStore(s, dir, PqCodes, "pq_sync_", "pqsync", s"pqsync1|lloyd$PqLloydSteps|")
 
   /** q230: the q199 full-scan ADC top-3 answered from the feed-synced PQ
     * code store, plus the audit columns of the q229 convention: `n_vecs`
@@ -1708,16 +1743,9 @@ object Similarity extends QueryModule {
   def feedSyncedAdc(s: SparkSession, dir: String): DataFrame = {
     tune(s)
     val path = pqSyncStore(s, dir)
-    val meta = IndexStore.readMeta(s, path)
-    val m = meta("m").toLong
     val cb = graft.SessionCache.cached(s, s"sim:pqsynccb:$dir")(
       IndexStore.read(s, path, "codebooks"))
-    val codes = IndexStore.read(s, path, "codes")
-    val erased = vecErased(m) && col("vec_id") < RoundTrip.ArrivalOffset
-    val audit = codes.agg(countDistinct(col("vec_id")).as("n_vecs"),
-        sum(when(erased, 1L).otherwise(0L)).as("removed_traces"))
-      .transform(RoundTrip.withFeedCounts(meta))
-    adcTop3(s, dir, cb, codes).crossJoin(broadcast(audit))
+    feedSyncedProbe(s, path, PqCodes)(baseAdcTop3(s, dir, cb, _))
   }
 
   /** q230's oracle: codes recomputed from the lake's current logical
@@ -1773,45 +1801,13 @@ object Similarity extends QueryModule {
 
   // ---- q233: feed sync with O(delta) MASKED deletes for the PQ codes ----
 
-  /** Build-if-stale the mask-synced PQ code store: [[pqSyncStore]] with
-    * the delete leg landed as the delete-mask sidecar instead of the
-    * codes rewrite — the q231/q232 pattern completing the sidecar for
-    * the THIRD index family. Codes carry a `seg` column (0 = base
-    * encode, 1 = arrivals encoded against the STORED codebooks) for the
-    * mask's sequence scoping. */
-  private[graft] def pqMaskSyncStore(s: SparkSession, dir: String): String = {
-    val idxPath = IndexStore.workPath("target/tmp/pq_msync_" + IndexStore.dirTag(dir))
-    val stamp = s"pqmasksync1|lloyd$PqLloydSteps|" +
-      IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
-    IndexStore.stamped(s, idxPath, stamp) {
-      val (f, m) = embeddingFeedFixture(s, dir, "pqmasksync")
-      val (_, cb1, mq) = pqCodebooks(f.base)
-      val cbm = cb1.localCheckpoint(true)
-      IndexStore.write(s, idxPath, "pqmasksync-building", Seq(
-        "codebooks" -> cbm,
-        "codes" -> pqEncodeAgainst(f.base, cbm).withColumn("seg", lit(0L))
-          .repartitionByRange(col("vec_id"))
-          .sortWithinPartitions(col("vec_id"), col("j"))))
-      // MASKED delete leg: O(delta) bytes — q230's codes rewrite is gone
-      IndexStore.appendDeleteMask(s, idxPath,
-        f.deletes.withColumn("seq", lit(0L)))
-      // INSERT leg: encode against the STORED codebooks, seg 1
-      IndexStore.append(s, idxPath, "codes",
-        pqEncodeAgainst(f.inserts,
-          IndexStore.read(s, idxPath, "codebooks"))
-          .withColumn("seg", lit(1L)))
-      // auto-fold policy (VERDICT r15 item 2); distinct-key fraction,
-      // so the M-rows-per-vector codes table reads the same ~1%
-      val folded = IndexStore.autoFoldIfNeeded(
-        s, idxPath, "codes", "vec_id")(IndexStore.foldMasks(
-        s, idxPath, vecMaskFold("codes", Seq("vec_id", "j"))))
-      IndexStore.writeStamp(s, idxPath, stamp, f.counts ++ Map(
-        "mq" -> mq.toString, "m" -> m.toString,
-        "auto_folded" -> folded.toString))
-      cbm.unpersist(): Unit
-    }
-    idxPath
-  }
+  /** The mask-synced PQ code store ([[vecMaskSyncStore]]): q230's store
+    * with the delete leg landed as the delete-mask sidecar instead of the
+    * codes rewrite — the q231/q232 pattern completing the sidecar for the
+    * THIRD index family. */
+  private[graft] def pqMaskSyncStore(s: SparkSession, dir: String): String =
+    vecMaskSyncStore(s, dir, PqCodes, "pq_msync_", "pqmasksync",
+      s"pqmasksync1|lloyd$PqLloydSteps|")
 
   /** q233: the q199 full-scan ADC top-3 over the mask-synced code store.
     * Masked vectors drop from CANDIDATES via the broadcast anti-join on
@@ -1823,18 +1819,9 @@ object Similarity extends QueryModule {
   def maskedFeedSyncedAdc(s: SparkSession, dir: String): DataFrame = {
     tune(s)
     val path = pqMaskSyncStore(s, dir)
-    val meta = IndexStore.readMeta(s, path)
     val cb = graft.SessionCache.cached(s, s"sim:pqmsynccb:$dir")(
       IndexStore.read(s, path, "codebooks"))
-    // missing mask on a stamped store = the legal post-fold state
-    val mask = IndexStore.readDeleteMaskOrEmpty(s, path, "vec_id")
-      .localCheckpoint()
-    val codes = IndexStore.maskedRead(
-      IndexStore.read(s, path, "codes"), mask, "vec_id", "vec_id", "seg")
-    val audit = codes.agg(countDistinct(col("vec_id")).as("n_vecs"))
-      .crossJoin(broadcast(mask.agg(count(lit(1)).as("n_mask_rows"))))
-      .transform(RoundTrip.withFeedCounts(meta))
-    adcTop3(s, dir, cb, codes.drop("seg")).crossJoin(broadcast(audit))
+    maskedSyncedProbe(s, path, PqCodes)(baseAdcTop3(s, dir, cb, _))
   }
 
   /** q233's oracle: q230's chain verbatim with the trace audit swapped
@@ -1867,31 +1854,12 @@ object Similarity extends QueryModule {
     // (spec-covered, the q196/q197 knob pattern) to buy back the
     // coarse-cluster recall loss q203 measures at P * the probe cost.
     val np = s.conf.getOption("spark.graft.ivfpq.nprobe").map(_.toInt).getOrElse(1)
-    val qa0 = assign.filter(col("vec_id").between(0, 15))
-      .select(col("vec_id").as("qid"), col("embedding").as("vemb"), col("nrm").as("nv"))
-    val qcos = qa0
-      .join(broadcast(cents.select(col("cid"), col("embedding").as("qemb"), col("nc"))))
-      .withColumn("cosim0", dotExpr / (col("nc") * col("nv")))
-    val wq = Window.partitionBy(col("qid")).orderBy(col("cosim0").desc, col("cid"))
-    val qa = qcos.withColumn("rnp", row_number().over(wq)).filter(col("rnp") <= np)
-      .select(col("qid"), col("cid"), col("vemb").as("qemb"))
+    val qa = topCells(assign.filter(BaseProbes)
+        .select(col("vec_id"), col("embedding"), col("nrm")), cents, np)
+      .select(col("vec_id").as("qid"), col("cid"), col("embedding"))
     // driver-side cluster cover: <= 16 * nprobe longs, the q184 pattern
-    val probeCids = qa.select(col("cid")).distinct().collect().map(_.getLong(0)).toSeq
-    val probes = qa.select(col("qid"), col("cid").as("qcid"),
-      posexplode(subVecsCol(col("qemb"))).as(Seq("j", "qsub")))
-    val dtable = probes.join(cb, Seq("j"))
-      .select(col("qid"), col("qcid").as("cid"), col("j"), col("code"),
-        expr("graft_sqdist(qsub, csub)").as("qd2"))
-    val adc = codes.filter(col("cid").isInCollection(probeCids))
-      .select(col("cid"), col("vec_id").as("vid"), col("j"), col("code"))
-      .join(broadcast(dtable), Seq("cid", "j", "code"))
-      .filter(col("qid") =!= col("vid"))
-      .groupBy(col("qid"), col("vid"))
-      .agg(sum(col("qd2")).as("adc0"))
-    val w = Window.partitionBy(col("qid")).orderBy(round(col("adc0"), 9).asc, col("vid"))
-    adc.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3)
-      .select(col("qid"), col("vid"), round(col("adc0"), 9).as("adc"), col("rn"))
+    adcTop3(adcScores(codes.filter(col("cid").isInCollection(cellCover(qa))),
+      broadcast(adcTable(qa, cb))))
   }
 
   // cluster-pruned ADC pairs (expects assign + pdist + pcodes in scope) —
@@ -1930,22 +1898,6 @@ object Similarity extends QueryModule {
     */
   private val PqScreenEps = 0.8
 
-  /** Coarse-assign a (vec_id, embedding) batch to its nearest STORED IVF
-    * centroid by cosine argmax (the metric the index was built with) —
-    * the shared first step of ADC screening (q204/q205) and the
-    * sequential PQ refresh (q208) — and of the q195 IVF segment
-    * appends, so the index-property-critical metric and tie-break live
-    * in exactly one place. Returns (vec_id, cid, vemb, nrm). */
-  private[graft] def coarseAssign(cents: DataFrame, batch: DataFrame): DataFrame = {
-    val b = withNorm(batch.select(col("vec_id"), col("embedding")))
-    val bc = b.select(col("vec_id"), col("embedding").as("vemb"), col("nrm"))
-      .join(broadcast(cents.select(col("cid"), col("embedding").as("qemb"), col("nc"))))
-      .withColumn("cosim0", dotExpr / (col("nc") * col("nrm")))
-    val wa = Window.partitionBy(col("vec_id")).orderBy(col("cosim0").desc, col("cid"))
-    bc.withColumn("rn", row_number().over(wa)).filter(col("rn") === 1)
-      .select(col("vec_id"), col("cid"), col("vemb"), col("nrm"))
-  }
-
   /** Screen one arriving vector batch against the persisted PQ index by
     * ADC — the PQ family's per-micro-batch ingest entry (the
     * [[screenVecBatch]] role, L2/code-space instead of sign-LSH):
@@ -1970,12 +1922,8 @@ object Similarity extends QueryModule {
     // products) — a staged micro-batch file is one scan task (guide §2,
     // the q214 re-slice); decisions are per-vector, the q204/q205
     // oracles pin partitioning-independence
-    val acid = coarseAssign(cents, graft.Engine.spread(batch))
-    val dtable = acid.select(col("vec_id").as("aid"), col("cid"),
-        posexplode(subVecsCol(col("vemb"))).as(Seq("j", "qsub")))
-      .join(broadcast(cb), Seq("j"))
-      .select(col("aid"), col("cid"), col("j"), col("code"),
-        expr("graft_sqdist(qsub, csub)").as("qd2"))
+    val acid = IvfCells.encode(cents, graft.Engine.spread(batch))
+    val dtable = adcTable(acid.select(col("vec_id").as("qid"), col("cid"), col("embedding")), cb)
     // driver-side cluster cover of the BATCH (metadata-scale, q184 style);
     // the same pass counts arrivals to size-gate the dtable broadcast
     val coverRows = acid.groupBy(col("cid")).agg(count(lit(1)).as("cnt")).collect()
@@ -1986,14 +1934,10 @@ object Similarity extends QueryModule {
     // falls back to a shuffle join rather than shipping a so-called
     // "broadcast" of hundreds of MB to every task
     val dt = if (nArrivals <= 2048) broadcast(dtable) else dtable
-    val adc = codes.filter(col("cid").isInCollection(cover))
-      .select(col("cid"), col("vec_id").as("vid"), col("j"), col("code"))
-      .join(dt, Seq("cid", "j", "code"))
-      .groupBy(col("aid"), col("vid"))
-      .agg(sum(col("qd2")).as("adc0"))
-    adc.groupBy(col("aid"))
+    adcScores(codes.filter(col("cid").isInCollection(cover)), dt)
+      .groupBy(col("qid"))
       .agg(min(round(col("adc0"), 9)).as("min_adc"))
-      .select(col("aid").as("vec_id"), col("min_adc"),
+      .select(col("qid").as("vec_id"), col("min_adc"),
         when(col("min_adc") < PqScreenEps, lit("near"))
           .otherwise(lit("accept")).as("decision"))
   }
@@ -2120,63 +2064,22 @@ object Similarity extends QueryModule {
     seqPqProbe(s, path, dir).crossJoin(broadcast(nseg))
   }
 
-  /** Build-if-absent the q208/q212 sequential PQ code store; returns its
-    * path. */
-  private def ensureSeqPq(s: SparkSession, dir: String): String = {
-    val path = seqPqPath(dir)
-    val stamp = s"pqseq1|lloyd$PqLloydSteps|" +
-      IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
-    IndexStore.stamped(s, path, stamp) {
-      val (cb, codes) = corpusPqIndex(s, dir)
-      val (cents, _) = corpusIvfIndex(s, dir)
-      IndexStore.write(s, path, stamp + "|building", Seq(
-        "codes" -> codes
-          .select(col("cid"), col("vec_id"), col("j"), col("code"), col("d2"),
-            lit(0).as("seg"))
-          .repartitionByRange(col("cid"), col("vec_id"))
-          .sortWithinPartitions(col("cid"), col("vec_id"), col("j"))))
-      seqArrivalBatches(s, dir).foreach { case (segId, b) =>
-        val acid = coarseAssign(cents, b).select(col("vec_id"), col("cid"))
-        val bcodes = pqEncodeAgainst(b, cb).join(acid, Seq("vec_id"))
-        IndexStore.append(s, path, "codes",
-          bcodes.select(col("cid"), col("vec_id"), col("j"), col("code"),
-              col("d2"), lit(segId).as("seg"))
-            .repartitionByRange(col("cid"), col("vec_id"))
-            .sortWithinPartitions(col("cid"), col("vec_id"), col("j")))
-      }
-      IndexStore.writeStamp(s, path, stamp)
-    }
-    path
-  }
+  /** Build-if-absent the q208/q212 sequential PQ code store
+    * ([[seqStore]], cell-keyed codes); returns its path. */
+  private def ensureSeqPq(s: SparkSession, dir: String): String =
+    seqStore(s, dir, pqCells(corpusIvfIndex(s, dir)._1), seqPqPath(dir),
+      s"pqseq1|lloyd$PqLloydSteps|")(corpusPqIndex(s, dir))
 
   /** The ADC cluster-cover probe over a sequential PQ code store (q208
-    * full store, q212 compacted branch): base multiples of 35 scored
+    * full store, q212 compacted branch): the [[SeqProbes]] scored
     * against the probed clusters' code bytes, top-3 with segment. */
   private def seqPqProbe(s: SparkSession, path: String, dir: String): DataFrame = {
-    val codes2 = IndexStore.read(s, path, "codes")
     val (cents, _) = corpusIvfIndex(s, dir)
     val (cb, _) = corpusPqIndex(s, dir)
-    val probes0 = table(s, dir, "embeddings")
-      .filter(col("vec_id") >= 0L && col("vec_id") < 560L && col("vec_id") % 35 === 0)
-      .select(col("vec_id"), col("embedding"))
-    val pAcid = coarseAssign(cents, probes0)
-    val dtable = pAcid.select(col("vec_id").as("qid"), col("cid"),
-        posexplode(subVecsCol(col("vemb"))).as(Seq("j", "qsub")))
-      .join(broadcast(cb), Seq("j"))
-      .select(col("qid"), col("cid"), col("j"), col("code"),
-        expr("graft_sqdist(qsub, csub)").as("qd2"))
-    val probeCids = pAcid.select(col("cid")).distinct().collect().map(_.getLong(0)).toSeq
-    val adc = codes2.filter(col("cid").isInCollection(probeCids))
-      .select(col("cid"), col("vec_id").as("vid"), col("j"), col("code"), col("seg"))
-      .join(broadcast(dtable), Seq("cid", "j", "code"))
-      .filter(col("qid") =!= col("vid"))
-      .groupBy(col("qid"), col("vid"), col("seg"))
-      .agg(sum(col("qd2")).as("adc0"))
-    val w = Window.partitionBy(col("qid")).orderBy(round(col("adc0"), 9).asc, col("vid"))
-    adc.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3)
-      .select(col("qid"), col("vid"), col("seg"),
-        round(col("adc0"), 9).as("adc"), col("rn"))
+    val qa = IvfCells.encode(cents, table(s, dir, "embeddings").filter(SeqProbes))
+      .select(col("vec_id").as("qid"), col("cid"), col("embedding"))
+    adcTop3(adcScores(IndexStore.read(s, path, "codes").filter(col("cid").isInCollection(
+      cellCover(qa))), broadcast(adcTable(qa, cb)), Seq("seg")), Seq("seg"))
   }
 
   private val pqRefreshSeqSql =
@@ -2445,37 +2348,12 @@ object Similarity extends QueryModule {
       IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
     IndexStore.stamped(s, path, stamp) {
       val (cents, assign) = corpusIvfIndex(s, dir)
-      val batch = withNorm(syntheticVecBatch(s, dir))
-      val acos = batch.withColumnRenamed("embedding", "vemb")
-        .join(broadcast(cents.select(col("cid"), col("embedding").as("qemb"), col("nc"))))
-        .withColumn("cosim0", dotExpr / (col("nc") * col("nrm")))
-      val wa = Window.partitionBy(col("vec_id")).orderBy(col("cosim0").desc, col("cid"))
-      val bAssign = acos.withColumn("rn", row_number().over(wa))
-        .filter(col("rn") === 1)
-        .select(col("cid"), col("vec_id"), col("vemb").as("embedding"), col("nrm"))
-      val merged = assign.select(col("cid"), col("vec_id"), col("embedding"), col("nrm"))
-        .unionByName(bAssign)
-      IndexStore.write(s, path, stamp, Seq(
-        "assign" -> merged.repartitionByRange(col("cid"), col("vec_id"))
-          .sortWithinPartitions(col("cid"), col("vec_id"))))
+      IndexStore.write(s, path, stamp, Seq("assign" -> IvfCells.laid(
+        assign.select(IvfCells.cols.map(col): _*)
+          .unionByName(IvfCells.encode(cents, syntheticVecBatch(s, dir))))))
     }
-    val assign2 = IndexStore.read(s, path, "assign")
-    val qa = assign2.filter(col("vec_id") >= 100000L && col("vec_id") < 100016L)
-      .select(col("vec_id").as("qid"), col("cid"),
-        col("embedding").as("qemb"), col("nrm").as("nq"))
-    // driver-side cluster cover (metadata-scale), the q184 pruning pattern
-    val probeCids = qa.select(col("cid")).distinct().collect().map(_.getLong(0)).sorted
-    val pcos = assign2.filter(col("cid").isInCollection(probeCids.toSeq))
-      .select(col("vec_id").as("vid"), col("cid"),
-        col("embedding").as("vemb"), col("nrm").as("nv"))
-      .join(broadcast(qa), Seq("cid"))
-      .filter(col("qid") =!= col("vid"))
-      .withColumn("cosim0", dotExpr / (col("nq") * col("nv")))
-    val wp = Window.partitionBy(col("qid"))
-      .orderBy(round(col("cosim0"), 9).desc, col("vid"))
-    pcos.withColumn("rn", row_number().over(wp))
-      .filter(col("rn") <= 3)
-      .select(col("qid"), col("vid"), round(col("cosim0"), 9).as("cosim"), col("rn"))
+    cellProbe(IndexStore.read(s, path, "assign"),
+      col("vec_id") >= 100000L && col("vec_id") < 100016L, 3, RoundedCos)
   }
 
   private val ivfRefreshSql =
@@ -2593,32 +2471,44 @@ object Similarity extends QueryModule {
             expr("transform(embedding, x -> CAST(-x AS FLOAT))").as("embedding"))))
   }
 
-  /** Build-if-absent the q195/q210 sequential IVF store; returns its
-    * path. */
-  private def ensureSeqIvf(s: SparkSession, dir: String): String = {
-    val path = seqIvfPath(dir)
-    val stamp = "seq2|" +
-      IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
-    IndexStore.stamped(s, path, stamp) {
-      val (cents, assign) = corpusIvfIndex(s, dir)
-      IndexStore.write(s, path, stamp + "|building", Seq(
-        "assign" -> assign
-          .select(col("cid"), col("vec_id"), col("embedding"), col("nrm"),
-            lit(0).as("seg"))
-          .repartitionByRange(col("cid"), col("vec_id"))
-          .sortWithinPartitions(col("cid"), col("vec_id"))))
+  /** The probe vectors of the sequential stores (q195/q208 and their
+    * as-of, compaction and streaming twins): base multiples of 35, so a
+    * segment-1 byte copy (35 % 5 = 0) and a segment-2 2x copy provably
+    * co-reside in each probe's cell; 16 probes. */
+  private val SeqProbes: Column =
+    col("vec_id") >= 0L && col("vec_id") < 560L && col("vec_id") % 35 === 0
+
+  /** Build-if-absent a sequential tagged-segment store of quantizer `q`
+    * at `path` (q195 IVF, q208 PQ): segment 0 is the fixture store's
+    * data (`fixture` = its (model, data)) branched whole; each
+    * [[seqArrivalBatches]] batch is encoded against the STORED model —
+    * the index-property contract twice over: re-deriving centroids or
+    * re-training codebooks on refresh would renumber cells or move
+    * codewords and silently invalidate every stored row — and appended
+    * with its segment id in the quantizer's layout, so parquet min/max
+    * pruning keeps working on the refreshed files. The stamp flips from
+    * "building" to `stamp` + source stamp only after every append lands
+    * (a crash mid-sequence is rebuilt, never served). */
+  private def seqStore(s: SparkSession, dir: String, q: VecQuantizer, path: String,
+      stamp: String)(fixture: => (DataFrame, DataFrame)): String = {
+    val st = stamp + IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
+    IndexStore.stamped(s, path, st) {
+      val (model, data) = fixture
+      def seg(rows: DataFrame, id: Int): DataFrame =
+        q.laid(rows.select(q.cols.map(col) :+ lit(id).as("seg"): _*))
+      IndexStore.write(s, path, st + "|building", Seq(q.data -> seg(data, 0)))
       seqArrivalBatches(s, dir).foreach { case (segId, b) =>
-        val bAssign = coarseAssign(cents, b)
-          .select(col("cid"), col("vec_id"), col("vemb").as("embedding"),
-            col("nrm"), lit(segId).as("seg"))
-        IndexStore.append(s, path, "assign",
-          bAssign.repartitionByRange(col("cid"), col("vec_id"))
-            .sortWithinPartitions(col("cid"), col("vec_id")))
+        IndexStore.append(s, path, q.data, seg(q.encode(model, b), segId))
       }
-      IndexStore.writeStamp(s, path, stamp)
+      IndexStore.writeStamp(s, path, st)
     }
     path
   }
+
+  /** Build-if-absent the q195/q210 sequential IVF store ([[seqStore]]);
+    * returns its path. */
+  private def ensureSeqIvf(s: SparkSession, dir: String): String =
+    seqStore(s, dir, IvfCells, seqIvfPath(dir), "seq2|")(corpusIvfIndex(s, dir))
 
   /** The q215 streaming store's path — process-unique (the rig rebuilds
     * it fresh per call, so two JVMs sharing target/ must not interleave
@@ -2643,9 +2533,7 @@ object Similarity extends QueryModule {
     val path = seqIvfStreamPath(dir)
     val (_, assign) = corpusIvfIndex(s, dir)
     SeqIvfLedger.seed(s, path)(Seq("assign" ->
-      assign.select(col("cid"), col("vec_id"), col("embedding"), col("nrm"))
-        .repartitionByRange(col("cid"), col("vec_id"))
-        .sortWithinPartitions(col("cid"), col("vec_id"))))
+      IvfCells.laid(assign.select(IvfCells.cols.map(col): _*))))
     IndexStore.writeStamp(s, path, "seqstream1|" +
       IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet")))
     path
@@ -2660,10 +2548,7 @@ object Similarity extends QueryModule {
       segId: Long, batch: DataFrame): ((Int, Int), Map[String, Long]) =
     SeqIvfLedger.commit(s, path, segId) {
       val (cents, _) = corpusIvfIndex(s, dir)
-      (Seq("assign" -> coarseAssign(cents, batch)
-        .select(col("cid"), col("vec_id"), col("vemb").as("embedding"), col("nrm"))
-        .repartitionByRange(col("cid"), col("vec_id"))
-        .sortWithinPartitions(col("cid"), col("vec_id"))), Map.empty)
+      (Seq("assign" -> IvfCells.laid(IvfCells.encode(cents, batch))), Map.empty)
     }
 
   /** q215's answer frame, read back over the committed segment set
@@ -2717,34 +2602,18 @@ object Similarity extends QueryModule {
     seqIvfProbeOn(IndexStore.read(s, path, "assign"), maxSeg)
 
   /** The same probe over an ALREADY-OPENED assign frame — the q215
-    * streaming store reads through [[IndexStore.readSegments]]
+    * streaming store reads through [[IndexStore.Ledger.read]]
     * (marker-gated partition dirs), the flat stores through a plain read;
-    * the probe math is one definition either way. Requires columns
-    * (cid, vec_id, embedding, nrm, seg); `seg` is normalized to INT (a
-    * partition-discovered column arrives as whatever type inference
-    * picked). */
+    * the probe is the one [[cellProbe]] either way, carrying `seg`.
+    * Requires columns (cid, vec_id, embedding, nrm, seg); `seg` is
+    * normalized to INT (a partition-discovered column arrives as whatever
+    * type inference picked). The horizon bounds the whole frame: the
+    * probes are base vectors of segment 0, so it bites on candidates
+    * only. */
   private[graft] def seqIvfProbeOn(assignIn: DataFrame, maxSeg: Int): DataFrame = {
-    val assign2 = assignIn.withColumn("seg", col("seg").cast("int"))
-    val qa = assign2.filter(col("vec_id") >= 0L && col("vec_id") < 560L &&
-        col("vec_id") % 35 === 0)
-      .select(col("vec_id").as("qid"), col("cid"),
-        col("embedding").as("qemb"), col("nrm").as("nq"))
-    // driver-side cluster cover (metadata-scale), the q184 pruning pattern
-    val probeCids = qa.select(col("cid")).distinct().collect().map(_.getLong(0)).sorted
-    val cand0 = assign2.filter(col("cid").isInCollection(probeCids.toSeq))
-    val cand = if (maxSeg >= 2) cand0 else cand0.filter(col("seg") <= maxSeg)
-    val pcos = cand
-      .select(col("vec_id").as("vid"), col("cid"), col("embedding").as("vemb"),
-        col("nrm").as("nv"), col("seg"))
-      .join(broadcast(qa), Seq("cid"))
-      .filter(col("qid") =!= col("vid"))
-      .withColumn("cosim0", dotExpr / (col("nq") * col("nv")))
-    val wp = Window.partitionBy(col("qid"))
-      .orderBy(round(col("cosim0"), 9).desc, col("vid"))
-    pcos.withColumn("rn", row_number().over(wp))
-      .filter(col("rn") <= 3)
-      .select(col("qid"), col("vid"), col("seg"),
-        round(col("cosim0"), 9).as("cosim"), col("rn"))
+    val assign = assignIn.withColumn("seg", col("seg").cast("int"))
+    cellProbe(if (maxSeg >= 2) assign else assign.filter(col("seg") <= maxSeg),
+      SeqProbes, 3, RoundedCos, Seq("seg"))
   }
 
   /** Derive an oracle by string surgery with a drift guard: the anchor
@@ -3956,15 +3825,9 @@ object Similarity extends QueryModule {
       // cell and each (src, nbr) meets once — the widened build is one
       // salted cell join with the source embedding carried along, the
       // cellGraphFor shape with probed (not home) cells on the left
-      val q = a.select(col("vec_id").as("src"),
-        col("embedding").as("qemb"), col("nrm").as("nq"))
-      val wq = Window.partitionBy(col("src")).orderBy(col("ccos").desc, col("cid"))
-      val srcCells = q
-        .join(broadcast(cents.select(col("cid"),
-          col("embedding").as("vemb"), col("nc"))))
-        .withColumn("ccos", dotExpr / (col("nq") * col("nc")))
-        .withColumn("rp", row_number().over(wq)).filter(col("rp") <= np)
-        .select(col("src"), col("cid"), col("qemb"), col("nq"))
+      val srcCells = topCells(a.select(col("vec_id"), col("embedding"), col("nrm")), cents, np)
+        .select(col("vec_id").as("src"), col("cid"), col("embedding").as("qemb"),
+          col("nrm").as("nq"))
       saltedCellJoin(srcCells,
           a.select(col("cid"), col("vec_id").as("nbr"),
             col("embedding").as("vemb"), col("nrm").as("nv")), "nbr")
@@ -4338,14 +4201,11 @@ object Similarity extends QueryModule {
       IndexStore.write(s, idxPath, "knnsync-building", Seq(
         "edges" -> cellGraph(assign0),
         "centroids" -> cents0,
-        "assign" -> assign0.repartitionByRange(col("cid"), col("vec_id"))
-          .sortWithinPartitions(col("cid"), col("vec_id"))))
+        "assign" -> IvfCells.laid(assign0)))
       val del = f.deletes.localCheckpoint()
       val legs = knnSyncLegs(s, idxPath, IndexStore.read(s, idxPath, "assign"),
         IndexStore.read(s, idxPath, "edges"), del, f.inserts)
-      IndexStore.replaceTable(s, idxPath, "assign",
-        legs.deleted.live.repartitionByRange(col("cid"), col("vec_id"))
-          .sortWithinPartitions(col("cid"), col("vec_id")))
+      IndexStore.replaceTable(s, idxPath, "assign", IvfCells.laid(legs.deleted.live))
       // both legs fold into ONE edges rewrite (ADVICE r16 — the write
       // cost per sync is one O(edges) rewrite; the O(affected) claim is
       // about re-SCORING compute): a restated source's post-delete list
@@ -4510,10 +4370,8 @@ object Similarity extends QueryModule {
       val del = IndexStore.readDeleteMaskOrEmpty(s, path, "vec_id")
         .localCheckpoint()
       Seq("edges" -> knnLiveEdges(s, path, del),
-        "assign" -> IndexStore.maskedRead(
-            IndexStore.read(s, path, "assign"), del, "vec_id", "vec_id", "seg")
-          .repartitionByRange(col("cid"), col("vec_id"))
-          .sortWithinPartitions(col("cid"), col("vec_id")))
+        "assign" -> IvfCells.laid(IndexStore.maskedRead(
+            IndexStore.read(s, path, "assign"), del, "vec_id", "vec_id", "seg")))
     })
 
   /** The two legs of one kNN feed apply over a visible graph state —
@@ -4573,7 +4431,7 @@ object Similarity extends QueryModule {
       lists: DataFrame, del: DataFrame, ins: DataFrame): KnnLegs = {
     val d = knnDeleteLeg(members, lists, del)
     val (live, afterDel) = (d.live, d.afterDel)
-    val aa = coarseAssignArrivals(s, path, ins).localCheckpoint()
+    val aa = IvfCells.encode(IndexStore.read(s, path, "centroids"), ins).localCheckpoint()
     val withArrivals = live.unionByName(aa)
     val arrivalEdges = cellGraphFor(withArrivals,
       withArrivals.join(broadcast(aa.select(col("vec_id"))),
@@ -4650,9 +4508,7 @@ object Similarity extends QueryModule {
       val (cents0, assign0, m) = buildIvfIndex(f.base)
       IndexStore.write(s, idxPath, "knnmasksync-building", Seq(
         "centroids" -> cents0,
-        "assign" -> assign0.withColumn("seg", lit(0L))
-          .repartitionByRange(col("cid"), col("vec_id"))
-          .sortWithinPartitions(col("cid"), col("vec_id")),
+        "assign" -> IvfCells.laid(assign0.withColumn("seg", lit(0L))),
         "edges" -> cellGraph(assign0).withColumn("seg", lit(0L))))
       val del = f.deletes.localCheckpoint()
       val legs = knnSyncLegs(s, idxPath, IndexStore.read(s, idxPath, "assign"),
@@ -4742,8 +4598,7 @@ object Similarity extends QueryModule {
     val assignSeed = assign0.localCheckpoint()
     KnnStreamLedger.seed(s, path)(Seq(
       "edges" -> cellGraph(assignSeed),
-      "assign" -> assignSeed.repartitionByRange(col("cid"), col("vec_id"))
-        .sortWithinPartitions(col("cid"), col("vec_id")),
+      "assign" -> IvfCells.laid(assignSeed),
       "deletes" -> assignSeed.select(col("vec_id")).limit(0),
       "stale" -> assignSeed.select(col("vec_id").as("src")).limit(0)))
     // the stored centroid table is the arrivals' coarse-assign target,

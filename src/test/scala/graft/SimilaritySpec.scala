@@ -215,8 +215,8 @@ class SimilaritySpec extends AnyFunSuite {
       .select(col("qid"), col("vid")).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = exact.intersect(adc).size.toDouble / exact.size
     // measured 0.333 on this fixture with the 4-step Lloyd codebooks
-    // (PqTrainRig; was 0.229 at 1 step). Near-random 64-dim data is PQ's
-    // hardest case: exact neighbor gaps (~0.03-0.16) sit an order of
+    // (PLANS.md "PqTrainRig: Lloyd depth vs MSE/recall"; was 0.229 at 1
+    // step). Near-random 64-dim data is PQ's hardest case: exact neighbor gaps (~0.03-0.16) sit an order of
     // magnitude below the quantization noise floor (~0.33), so ~1/3 IS
     // the fixture's ceiling. Gate at 0.25 — ~25% headroom below the
     // measured value (ADVICE r12: 0.30 left a one-to-two-hit margin on
@@ -763,5 +763,25 @@ class SimilaritySpec extends AnyFunSuite {
     Similarity.graphAnnServe(s, dir).collect()
     assert(stampF.lastModified() == mt0,
       "a restart/warm call must cost a stamp check, not a graph build")
+  }
+
+  test("IVF takedown refuses a request holding a centroid seed and leaves the branch unstamped") {
+    import graft.sources.IndexStore
+    val dir = TestSpark.sf
+    Similarity.corpusIvfIndex(s, dir)
+    val src = Similarity.fixtureIvfIndexPath(dir)
+    val m = IndexStore.readMeta(s, src)("m").toLong
+    // the registered slice plus the seeds: vec_id % m = 0 is a centroid
+    val req = Engine.table(s, dir, "embeddings")
+      .filter(col("vec_id") % 89 === 17 || col("vec_id") % m === 0)
+    assert(req.filter(col("vec_id") % m === 0).count() > 0L, "the request must hold a seed")
+    val path = IndexStore.workPath(src + "_seedtakedown")
+    val stamp = "seedtakedown|" +
+      IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
+    intercept[IllegalArgumentException] {
+      Similarity.vecTakedownBranch(s, Similarity.IvfCells, src, path, stamp)(req)
+    }
+    assert(!IndexStore.isCurrent(s, path, stamp), "a refused takedown must not stamp its branch")
+    assert(IndexStore.readStamp(s, path).isEmpty, "a refused takedown must write no branch")
   }
 }
