@@ -5,7 +5,7 @@ package graft
   * query whose time regressed by MORE than 30% AND more than 0.3 s — the
   * adjudication threshold PLANS.md uses, sized above this host's
   * documented ±20% contention band so a hit names a real mechanism, not
-  * noise. No Spark, no dependencies: `sbt "runMain graft.BenchDiff"`
+  * noise. No Spark session (Jackson parses the files): `sbt "runMain graft.BenchDiff"`
   * diffs the frozen baseline (BENCH_FULL_r20.json — re-frozen at r20
   * so the seven new rows (q264-q270) gate alongside the carried 261;
   * the r19-vs-r20 movement was self-gated at freeze time against
@@ -15,42 +15,19 @@ package graft
   * context but never gate.
   */
 object BenchDiff {
-  /** Extracts the `"queries"` map from a BENCH_FULL-format file. The
-    * values in that map are flat numbers by construction (Bench.scala
-    * writes `f"$v%.3f"`); this parser tolerates whitespace anywhere and
-    * tracks brace depth rather than slicing to the first `}` (ADVICE
-    * r11: the indexOf("}") slice silently truncated on any multi-line
-    * value). Scope (ADVICE r12): the entry split is comma/colon-based,
-    * so it parses FLAT NUMERIC values only — a baseline whose queries
-    * map gained nested objects or string values would need a real
-    * tokenizer, and Bench.scala never writes those.
-    */
+  /** The `"queries"` map of a BENCH_FULL-format file, parsed with
+    * Jackson. Refuses a file that is not JSON, has no `queries` object,
+    * or holds a non-numeric value in it. */
   private[graft] def perQuery(path: String): Map[String, Double] = {
-    val txt = new String(
-      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)), "UTF-8")
-    val at = txt.indexOf("\"queries\"")
-    require(at >= 0, s"$path: no \"queries\" map — not a BENCH_FULL-format file")
-    val open = txt.indexOf("{", at)
-    require(open > at, s"$path: \"queries\" key without an object value")
-    var i = open; var depth = 0
-    var end = -1
-    var inStr = false
-    while (end < 0 && i < txt.length) {
-      val c = txt.charAt(i)
-      if (inStr) { if (c == '\\') i += 1 else if (c == '"') inStr = false }
-      else if (c == '"') inStr = true
-      else if (c == '{') depth += 1
-      else if (c == '}') { depth -= 1; if (depth == 0) end = i }
-      i += 1
-    }
-    require(end > open, s"$path: unterminated queries map")
-    val body = txt.substring(open + 1, end).trim
-    if (body.isEmpty) Map.empty
-    else body.split(",").iterator
-      .map(_.split(":", 2))
-      .collect { case Array(k, v) =>
-        k.trim.stripPrefix("\"").stripSuffix("\"") -> v.trim.toDouble }
-      .toMap
+    val qs = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new java.io.File(path)).get("queries")
+    require(qs != null && qs.isObject,
+      s"$path: no \"queries\" object — not a BENCH_FULL-format file")
+    import scala.jdk.CollectionConverters._
+    qs.properties.asScala.map { e =>
+      require(e.getValue.isNumber, s"$path: queries.${e.getKey} is not a number: ${e.getValue}")
+      e.getKey -> e.getValue.asDouble
+    }.toMap
   }
 
   def main(args: Array[String]): Unit = {

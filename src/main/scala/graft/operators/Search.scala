@@ -531,7 +531,7 @@ object Search extends QueryModule {
        |WHERE rn <= 15""".stripMargin
 
   /** Public API: compact a persisted search index in place —
-    * [[Dedup.compactIndex]] / [[Similarity.compactVecIndex]]'s lexical
+    * [[LshScreen.compact]]'s lexical
     * twin, the maintenance op an append-forever segment refresh (q166)
     * eventually needs. All segments collapse into segment 0; the
     * dictionary is recomputed from the merged postings (per-term stats

@@ -12,13 +12,13 @@ import org.apache.spark.sql.functions._
   * sign-LSH band rows (`vec_id`, `band`, `bucket`), and the LSH bit
   * width — an INDEX property (derived from corpus size at build time)
   * that every probe must reuse verbatim, which is why it is stored
-  * rather than re-derived. Build with [[Similarity.buildVecIndex]],
-  * screen with [[Similarity.screenVecBatch]], persist/load/refresh via
-  * [[Similarity.persistVecIndex]] / [[Similarity.loadVecIndex]] /
-  * [[Similarity.refreshVecIndex]].
+  * rather than re-derived. Build, screen, persist, load and refresh it
+  * with [[Similarity.VecScreen]].
   */
 final case class VecIndex(digests: DataFrame, reps: DataFrame,
-                          bands: DataFrame, bits: Int)
+                          bands: DataFrame, bits: Int) extends LshIndex {
+  def meta: Map[String, String] = Map("bits" -> bits.toString)
+}
 
 /** Similarity search over the `embeddings` fixture (64-dim float vectors).
   *
@@ -53,9 +53,10 @@ object Similarity extends QueryModule {
     * so the readable spelling and the fast plan are the same thing
     * (asserted in FunctionsSpec).
     */
-  private val dotExpr = expr(
-    "aggregate(zip_with(qemb, vemb, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), " +
+  private def dotOf(a: String, b: String): Column = expr(
+    s"aggregate(zip_with($a, $b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), " +
       "CAST(0.0 AS DOUBLE), (acc, p) -> acc + p)")
+  private val dotExpr = dotOf("qemb", "vemb")
 
   private val flatSql =
     """flat AS (
@@ -358,7 +359,7 @@ object Similarity extends QueryModule {
     "target/graft_index/ivf_" + IndexStore.dirTag(dir)
 
   /** Build-or-load the fixture IVF index (stamped, session-cached) —
-    * the [[corpusVecIndex]] pattern. */
+    * the [[LshScreen.fixture]] pattern. */
   private[graft] def corpusIvfIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val path = fixtureIvfIndexPath(dir)
     val stamp = IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
@@ -711,7 +712,7 @@ object Similarity extends QueryModule {
         q.encode(IndexStore.read(s, idxPath, q.model), f.inserts).withColumn("seg", lit(1L)))
       val folded = IndexStore.autoFoldIfNeeded(
         s, idxPath, q.data, "vec_id")(IndexStore.foldMasks(
-        s, idxPath, vecMaskFold(q.data, q.sort)))
+        s, idxPath, vecMaskFold(q)))
       IndexStore.writeStamp(s, idxPath, st, f.counts ++ t.meta ++ Map(
         "m" -> m.toString,
         "auto_folded" -> folded.toString))
@@ -723,18 +724,18 @@ object Similarity extends QueryModule {
   private[graft] def ivfMaskSyncStore(s: SparkSession, dir: String): String =
     vecMaskSyncStore(s, dir, IvfCells, "ivf_msync_", "vecmasksync", "vecmasksync1|")
 
-  /** The vector family's fold of one seg-tagged table (IVF `assign`, PQ
-    * `codes`), re-laid range-sorted on `sortCols` — MaskFoldSpec pins the
-    * result bit-equal to q229's/q230's physically-rewritten stores. */
-  private[graft] def vecMaskFold(tbl: String, sortCols: Seq[String]) =
+  /** The vector family's fold of a quantizer's seg-tagged data table (IVF
+    * `assign`, PQ `codes`), re-laid by the quantizer's own layout
+    * ([[VecQuantizer.laid]]) — the layout every sync store of that
+    * quantizer writes. MaskFoldSpec pins the result bit-equal to
+    * q229's/q230's physically-rewritten stores. */
+  private[graft] def vecMaskFold(q: VecQuantizer) =
     IndexStore.MaskFold(Seq(IndexStore.DeleteMaskTable),
       (s, path) => {
         val mask = IndexStore.readDeleteMaskOrEmpty(s, path, "vec_id")
           .localCheckpoint()
-        Seq(tbl -> IndexStore.maskedRead(
-            IndexStore.read(s, path, tbl), mask, "vec_id", "vec_id", "seg")
-          .repartitionByRange(sortCols.map(col): _*)
-          .sortWithinPartitions(sortCols.map(col): _*))
+        Seq(q.data -> q.laid(IndexStore.maskedRead(
+          IndexStore.read(s, path, q.data), mask, "vec_id", "vec_id", "seg")))
       })
 
   /** q232: the q184 cluster-cover probe over the mask-synced IVF store.
@@ -1900,7 +1901,7 @@ object Similarity extends QueryModule {
 
   /** Screen one arriving vector batch against the persisted PQ index by
     * ADC — the PQ family's per-micro-batch ingest entry (the
-    * [[screenVecBatch]] role, L2/code-space instead of sign-LSH):
+    * [[LshScreen.screen]] role, L2/code-space instead of sign-LSH):
     *  1. coarse-assign each arrival to its stored IVF centroid (cosine
     *     argmax against the broadcast centroid table — the metric the
     *     index was built with, and the stored-centroid contract: nothing
@@ -2625,7 +2626,7 @@ object Similarity extends QueryModule {
   }
 
   /** Public API: compact a sequential tagged-segment store table in
-    * place — [[compactVecIndex]] / [[graft.operators.Search.compactSearchIndex]]'s
+    * place — [[LshScreen.compact]] / [[graft.operators.Search.compactSearchIndex]]'s
     * twin for the q195/q210 IVF store and the q208 PQ code store, the
     * maintenance op an append-forever segment refresh eventually needs
     * (VERDICT r11 item 2). All segments collapse into segment 0 and the
@@ -2900,16 +2901,13 @@ object Similarity extends QueryModule {
     * murmur3), not the 256-byte float array itself — collision odds
     * ~n^2/2^96 are immaterial, and the exchange sorts/compares 12-byte
     * keys. One representative embedding per unique key still crosses the
-    * wire (the `first` partial agg) — intrinsic, the LSH needs it.
-    * `keepKeys` retains the hash pair for digest-set joins (q140's exact
-    * tier probes the corpus digest set on exactly these columns).
+    * wire (the `first` partial agg) — intrinsic, the LSH needs it. The
+    * hash pair stays as (`k1`, `k2`): it is the screen's digest key.
     */
-  private[graft] def vecGroups(vecs: DataFrame, keepKeys: Boolean = false): DataFrame = {
-    val g = vecs.groupBy(xxhash64(col("embedding")).as("k1"), hash(col("embedding")).as("k2"))
+  private[graft] def vecGroups(vecs: DataFrame): DataFrame =
+    vecs.groupBy(xxhash64(col("embedding")).as("k1"), hash(col("embedding")).as("k2"))
       .agg(min(col("vec_id")).as("gid"), collect_list(col("vec_id")).as("ids"),
            first(col("embedding")).as("embedding"))
-    if (keepKeys) g else g.drop("k1", "k2")
-  }
 
   /** Banded sign-LSH rows for a (vec_id, embedding, nrm) rep frame: one row
     * per (rep, band) with the band's bucket id. Shared by the q78 pair
@@ -2940,7 +2938,8 @@ object Similarity extends QueryModule {
   private def buildEmbeddingNearDup(s: SparkSession, dir: String): DataFrame = {
     val base = table(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
     val bits = lshBits(base.count())
-    val groups = graft.SessionCache.cached(s, s"sim:grp:$dir")(vecGroups(base))
+    val groups = graft.SessionCache.cached(s, s"sim:grp:$dir")(
+      vecGroups(base).drop("k1", "k2"))
     val reps = withNorm(groups.select(col("gid").as("vec_id"), col("embedding")))
     val bands = signBands(reps, bits)
     val a = bands.select(col("vec_id").as("ga"), col("embedding").as("qemb"),
@@ -2967,207 +2966,39 @@ object Similarity extends QueryModule {
       .select(col("da"), col("db"), col("cosim"), (col("cosim") >= 0.8).as("is_dup"))
   }
 
-  /** Build the frozen vector index from an ARBITRARY corpus frame
-    * (columns `vec_id`, `embedding`). Public API, the vector twin of
-    * [[Dedup.buildIndex]]: one corpus pass — byte-digest set, exact-dup
-    * rep grouping, norms, sign-LSH bands — with the bit width derived
-    * from corpus size and RECORDED on the index (probes must reuse it).
-    */
-  def buildVecIndex(corpus: DataFrame): VecIndex = {
-    val bits = lshBits(corpus.count())
-    val reps = withNorm(vecGroups(corpus).select(col("gid").as("vec_id"), col("embedding")))
-    VecIndex(
-      corpus.select(xxhash64(col("embedding")).as("k1"), hash(col("embedding")).as("k2"))
-        .distinct(),
-      reps,
-      signBands(reps, bits).select(col("vec_id"), col("band"), col("bucket")),
-      bits)
-  }
+  /** The vector index's stored bit width — an index property every probe
+    * must reuse verbatim, never re-derived from a batch. */
+  private def bitsOf(meta: Map[String, String]): Int =
+    meta.getOrElse("bits", throw new IllegalStateException("vec index has no bits meta")).toInt
 
-  /** Classify each batch vector against a frozen index: `exact`
-    * (byte-identical to a corpus vector), `near` (band collision with a
-    * corpus rep verified at cosine >= 0.8), or `accept`. Per-batch cost
-    * is the batch's own signatures plus two equi-joins; the corpus is
-    * never re-bucketed. Decision sets are DISTINCT'd so the duplicate
-    * rows a refreshed index may carry cannot double-count members. */
-  def screenVecBatch(index: VecIndex, batch: DataFrame,
-      bloom: Option[org.apache.spark.broadcast.Broadcast[
-        org.apache.spark.util.sketch.BloomFilter]] = None): DataFrame = {
-    // spread the arriving batch BEFORE the expansion (guide §2, the q214
-    // re-slice): a staged micro-batch file is one scan task, and the
-    // grouped-probe subtree below is evaluated once per tier (exact /
-    // candidate / final explode), so the per-vector hash+norm map side
-    // would run 3x on that single task. The shuffle moves only the tiny
-    // batch; decisions are per-vector and partitioning-independent (the
-    // q140/q144 oracles pin this).
-    val bGroups = vecGroups(graft.Engine.spread(batch), keepKeys = true)
-    val keyed = bGroups.select(col("gid"), col("k1"), col("k2"))
-    // bloom negative fast path on the composite digest key — a (k1, k2)
-    // the sidecar never saw cannot be in the digest table, so it skips
-    // the exact-probe join; false positives ride the join and fall out,
-    // leaving decisions EXACTLY equal to the plain probe (q149 pins it)
-    val probed = bloom match {
-      case Some(bc) =>
-        val hit = udf((k1: Long, k2: Long) => bc.value.mightContainString(s"$k1#$k2"))
-        keyed.filter(hit(col("k1"), col("k2")))
-      case None => keyed
-    }
-    val exactG = probed
-      .join(index.digests, Seq("k1", "k2"))
-      .select(col("gid")).distinct().withColumn("ex", lit(1))
-    val bReps = withNorm(bGroups.select(col("gid").as("vec_id"), col("embedding")))
-    val cand = signBands(bReps, index.bits)
-      .select(col("vec_id").as("nid"), col("band"), col("bucket"))
-      .join(index.bands.select(col("vec_id").as("cid"), col("band"), col("bucket")),
-        Seq("band", "bucket"))
-      .select(col("nid"), col("cid")).distinct()
-    val nearG = cand
-      .join(bReps.select(col("vec_id").as("nid"), col("embedding").as("qemb"),
-        col("nrm").as("na")), "nid")
-      .join(index.reps.select(col("vec_id").as("cid"), col("embedding").as("vemb"),
-        col("nrm").as("nb")), "cid")
-      .filter(round(dotExpr / (col("na") * col("nb")), 9) >= 0.8)
-      .select(col("nid").as("gid")).distinct().withColumn("nr", lit(1))
-    bGroups.select(col("gid"), explode(col("ids")).as("vec_id"))
-      .join(exactG, Seq("gid"), "left")
-      .join(nearG, Seq("gid"), "left")
-      .select(col("vec_id"),
-        when(col("ex") === 1, "exact").when(col("nr") === 1, "near")
-          .otherwise("accept").as("decision"))
-  }
-
-  /** The sidecar's key form of the two-long vector digest: one string,
-    * identical on the build (column) and probe (Scala) sides. */
-  private def vecBloomKey = concat_ws("#", col("k1"), col("k2")).as("bk")
-
-  /** Bloom SIDECAR over a persisted vector index's digest table — the
-    * vector twin of [[Dedup.persistBloom]], same IndexStore blob layout
-    * and the same contract: no false negatives, so the exact tier's join
-    * input shrinks to bloom hits with decisions untouched. */
-  def persistVecBloom(s: SparkSession, path: String, fpp: Double = 0.01,
-                      headroom: Long = 4L): Long =
-    IndexStore.writeBloom(s, path,
-      IndexStore.read(s, path, "digests").select(vecBloomKey),
-      fpp, headroom)
-
-  /** Refresh the sidecar alongside [[refreshVecIndex]] with the accepted
-    * vectors' digests. */
-  def refreshVecBloom(s: SparkSession, path: String, accepted: DataFrame): Unit =
-    IndexStore.appendBloom(s, path,
-      accepted.select(xxhash64(col("embedding")).as("k1"), hash(col("embedding")).as("k2"))
-        .distinct().select(vecBloomKey))
-
-  /** Load the sidecar (all blobs OR-merged). */
-  def loadVecBloom(s: SparkSession, path: String): org.apache.spark.util.sketch.BloomFilter =
-    IndexStore.loadBloom(s, path)
-
-  /** [[screenVecBatch(index:graft\.operators\.VecIndex,batch:org\.apache\.spark\.sql\.DataFrame,bloom:Option[org\.apache\.spark\.broadcast\.Broadcast[org\.apache\.spark\.util\.sketch\.BloomFilter]])*]]
-    * with the sidecar's negative fast path on the exact tier. */
-  def screenVecBatchBloom(index: VecIndex,
-                          bloom: org.apache.spark.util.sketch.BloomFilter,
-                          batch: DataFrame): DataFrame = {
-    val bc = batch.sparkSession.sparkContext.broadcast(bloom)
-    screenVecBatch(index, batch, Some(bc))
-  }
-
-  /** Persist a vector index (tables `digests`/`reps`/`bands`, bit width
-    * in the store metadata) via [[IndexStore]]. */
-  def persistVecIndex(index: VecIndex, path: String, stamp: String = "manual"): Unit =
-    IndexStore.write(index.reps.sparkSession, path, stamp,
-      Seq("digests" -> index.digests, "reps" -> index.reps, "bands" -> index.bands),
-      Map("bits" -> index.bits.toString))
-
-  /** Load a persisted vector index — three parquet opens plus the stored
-    * bit width; the corpus itself is never touched. */
-  def loadVecIndex(s: SparkSession, path: String): VecIndex = {
-    val meta = IndexStore.readMeta(s, path)
-    VecIndex(
-      IndexStore.read(s, path, "digests"),
-      IndexStore.read(s, path, "reps"),
-      IndexStore.read(s, path, "bands"),
-      meta.getOrElse("bits",
-        throw new IllegalStateException(s"vec index at $path has no bits meta")).toInt)
-  }
-
-  /** Append accepted vectors' digests/reps/bands to a persisted index.
-    * The bit width is read from the STORE, never re-derived from the
-    * increment — it is an index property, and probing with a different
-    * width would silently miss every stored bucket. */
-  def refreshVecIndex(s: SparkSession, path: String, accepted: DataFrame): VecIndex = {
-    val bits = IndexStore.readMeta(s, path)
-      .getOrElse("bits",
-        throw new IllegalStateException(s"vec index at $path has no bits meta")).toInt
-    // checkpoint the increment once: the three appends would otherwise
-    // each re-execute the accepted batch's upstream plan (and bands derive
-    // from reps, so the grouping/norm pass ran twice). Batch-scale data.
-    val acc = accepted.localCheckpoint()
-    val reps = withNorm(vecGroups(acc).select(col("gid").as("vec_id"), col("embedding")))
-      .localCheckpoint()
-    // digests/bands stay lazy plans: both are cheap projections over the
-    // checkpointed acc/reps, so materializing them would only add jobs
-    val digests = acc
-      .select(xxhash64(col("embedding")).as("k1"), hash(col("embedding")).as("k2"))
-      .distinct()
-    val bands = signBands(reps, bits)
-      .select(col("vec_id"), col("band"), col("bucket"))
-    // independent appends (all off checkpointed frames) — overlap their
-    // fixed job costs
-    IndexStore.inParallel(Seq(
-      () => IndexStore.append(s, path, "digests", digests),
-      () => IndexStore.append(s, path, "reps", reps),
-      () => IndexStore.append(s, path, "bands", bands)))
-    // the increment, checkpointed: a loop that just refreshed can compose
-    // (already-cached base) ∪ (this increment) instead of re-opening the
-    // store — identical content to a post-refresh load
-    VecIndex(digests, reps, bands, bits)
-  }
-
-  /** Compact a persisted vector index in place — [[Dedup.compactIndex]]'s
-    * twin: duplicate digest/rep rows collapse, the band table is
-    * recomputed from the deduplicated reps at the STORED bit width, each
-    * table lands in fresh files, stamp and bits preserved. Input is only
-    * the stored tables; no corpus is touched. */
-  def compactVecIndex(s: SparkSession, path: String): Unit = {
-    val idx = loadVecIndex(s, path)
-    val digests = idx.digests.distinct().localCheckpoint()
-    val reps = idx.reps.dropDuplicates("vec_id").localCheckpoint()
-    val stamp = IndexStore.readStamp(s, path).getOrElse("manual")
-    IndexStore.write(s, path, stamp, Seq(
-      "digests" -> digests,
-      "reps" -> reps,
-      "bands" -> signBands(reps, idx.bits).select(col("vec_id"), col("band"), col("bucket"))),
-      Map("bits" -> idx.bits.toString))
-  }
-
-  /** On-disk location of the fixture vector index for `dir`. */
-  private[graft] def fixtureVecIndexPath(dir: String): String =
-    "target/graft_index/vec_" + IndexStore.dirTag(dir)
-
-  /** The registered rig's frozen vector index, PERSISTED to
-    * target/graft_index (the twin of Dedup's corpusIndex): built once
-    * from the embeddings fixture, stamp-validated, loaded from parquet
-    * thereafter — across queries via the session cache, across process
-    * restarts via the store. Build-vs-load serialized under the object
-    * lock. */
-  private def corpusVecIndex(s: SparkSession, dir: String): VecIndex = {
-    val path = fixtureVecIndexPath(dir)
-    val stamp = IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
-    IndexStore.stamped(s, path, stamp) {
-      persistVecIndex(
-        buildVecIndex(table(s, dir, "embeddings").select(col("vec_id"), col("embedding"))),
-        path, stamp)
-    }
-    VecIndex(
-      graft.SessionCache.cached(s, s"sim:idxdig:$dir")(
-        IndexStore.read(s, path, "digests")),
-      graft.SessionCache.cached(s, s"sim:idxreps:$dir")(
-        IndexStore.read(s, path, "reps")),
-      graft.SessionCache.cached(s, s"sim:idxbands:$dir")(
-        IndexStore.read(s, path, "bands")),
-      IndexStore.readMeta(s, path)
-        .getOrElse("bits",
-          throw new IllegalStateException(s"vec index at $path has no bits meta")).toInt)
-  }
+  /** The sign-LSH vector screen as an [[LshScreen]], the text screen's
+    * vector form: the two-long byte digest (`k1`, `k2`; the sidecar key
+    * `k1#k2`), rep vectors with norms (`reps`), [[LshBands]] sign-LSH
+    * bands at the bit width derived from corpus size at build and stored
+    * as `bits` meta, and near = band collision verified at rounded cosine
+    * >= 0.8 (q78's production threshold). Its fixture store is the
+    * embeddings corpus, stamped with the bare source stamp. */
+  val VecScreen: LshScreen[VecIndex] = LshScreen(
+    id = "vec_id",
+    groups = vecGroups,
+    keys = Seq("k1" -> xxhash64(col("embedding")), "k2" -> hash(col("embedding"))),
+    bloomKey = concat_ws("#", col("k1"), col("k2")),
+    repTable = "reps",
+    reps = g => withNorm(g.select(col("gid").as("vec_id"), col("embedding"))),
+    bands = (r, m) => signBands(r, bitsOf(m)).select(col("vec_id"), col("band"), col("bucket")),
+    bandCols = Seq("band", "bucket"),
+    cap = None,
+    near = round(dotOf("a_embedding", "b_embedding") / (col("a_nrm") * col("b_nrm")), 9) >= 0.8,
+    meta = c => Map("bits" -> lshBits(c.count()).toString),
+    index = (d, r, b, m) => VecIndex(d, r, b, bitsOf(m)),
+    store = "vec_",
+    source = "embeddings.parquet",
+    stampTag = "",
+    corpus = (s, dir) => table(s, dir, "embeddings").select(col("vec_id"), col("embedding")),
+    extra = _ => Nil,
+    loopStore = "vidx_loop_",
+    loopTag = "vecloop1|",
+    cachedLoop = false)
 
   /** The deterministic synthetic arrival batch of the q140/q144 rigs:
     * byte-copies (+100000, exact tier), 2x-scaled copies (+200000, near
@@ -3186,24 +3017,11 @@ object Similarity extends QueryModule {
           expr("transform(embedding, x -> CAST(-x AS FLOAT))").as("embedding")))
   }
 
-  /** Screen one arriving vector batch against the persisted fixture index —
-    * the per-micro-batch entry point of the streaming form (q144); q140 is
-    * its one-shot batch form. A vector's decision depends only on itself
-    * vs the index, so any batching yields identical per-vector decisions. */
-  def screenVecBatch(s: SparkSession, dir: String, batch: DataFrame): DataFrame = {
-    tune(s)
-    screenVecBatch(corpusVecIndex(s, dir), batch)
-  }
-
   /** Per-slice admission rollup shared by q140 and the streaming q144
     * (which MUST agree with it row-for-row). */
   private[graft] def vecScreenSummary(decisions: DataFrame): DataFrame =
-    decisions
-      .groupBy(expr("vec_id div 100000").as("slice"))
-      .agg(count(lit(1)).as("n"),
-        sum(when(col("decision") === "exact", 1).otherwise(0)).as("n_exact"),
-        sum(when(col("decision") === "near", 1).otherwise(0)).as("n_near"),
-        sum(when(col("decision") === "accept", 1).otherwise(0)).as("n_accept"))
+    LshScreen.tally(decisions.groupBy(expr("vec_id div 100000").as("slice")),
+      "n", "n_exact", "n_near", "n_accept")
 
   /** Incremental embedding screening — q131's pattern for the vector side:
     * new vectors arriving at ingest are classified against a FROZEN
@@ -3228,13 +3046,13 @@ object Similarity extends QueryModule {
     */
   def embeddingScreen(s: SparkSession, dir: String): DataFrame = {
     tune(s)
-    vecScreenSummary(screenVecBatch(s, dir, syntheticVecBatch(s, dir)))
+    vecScreenSummary(VecScreen.screenFixture(s, dir, syntheticVecBatch(s, dir)))
   }
 
   /** The vector family's full ingest LOOP, oracled end-to-end — q143's
     * twin: screen batch 1 against the persisted fixture index, BRANCH
     * the index (pure file copy), refresh the branch with the vectors
-    * batch 1 accepted ([[refreshVecIndex]] appends their digests, reps,
+    * batch 1 accepted ([[LshScreen.refresh]] appends their digests, reps,
     * and band rows), then screen batch 2 — byte-copies of batch 1,
     * vec_id + 400000 — against the refreshed branch. The sequencing is
     * observable: copies of ACCEPTED batch-1 vectors (the negated
@@ -3253,56 +3071,51 @@ object Similarity extends QueryModule {
     // branch copy + refresh land once per (process, corpus) behind a
     // stamp; the recurring benched cost is the two delta-sized screens,
     // with batch 2 served from the DURABLE refreshed branch.
-    val path = screenVecLoopBranch(s, dir)
-    val d1 = screenVecBatch(s, dir, b1).localCheckpoint()
-    val d2 = screenVecBatch(graft.SessionCache.cachedValue(s, s"sim:loopidx:$dir")(
-      loadVecIndex(s, path))(_ => ()), b2)
-    vecScreenSummary(d1).withColumn("batch", lit("b1"))
-      .unionByName(vecScreenSummary(d2).withColumn("batch", lit("b2")))
-      .select(col("batch"), col("slice"), col("n"),
-        col("n_exact"), col("n_near"), col("n_accept"))
+    VecScreen.loop(s, dir, b1, b2)((d, _) => vecScreenSummary(d))
   }
 
-  /** Build-if-stale the q145 loop's refreshed branch — batch 1 screened,
-    * the fixture vec index branched (pure file copy), the accepted
-    * vectors' digests/reps/bands appended. Stamp written LAST; decisions
-    * frozen before the branch mutates. */
-  private[graft] def screenVecLoopBranch(s: SparkSession, dir: String): String = {
-    corpusVecIndex(s, dir)
-    val path = IndexStore.workPath("target/tmp/vidx_loop_" + IndexStore.dirTag(dir))
-    val stamp = "vecloop1|" +
-      IndexStore.sourceStamp(s, Seq(s"$dir/embeddings.parquet"))
-    IndexStore.stamped(s, path, stamp) {
-      val b1 = syntheticVecBatch(s, dir)
-      val d1 = screenVecBatch(s, dir, b1).localCheckpoint()
-      IndexStore.copy(s, fixtureVecIndexPath(dir), path)
-      // the copied stamp carries the `bits` meta — an index property
-      // probes must reuse; carry it through the loop's own stamp
-      val meta = IndexStore.readMeta(s, path)
-      val accepted1 = b1.join(
-        d1.filter(col("decision") === "accept").select(col("vec_id")), "vec_id")
-      refreshVecIndex(s, path, accepted1)
-      IndexStore.writeStamp(s, path, stamp, meta)
-    }
-    path
-  }
+  /** Oracle CTEs shared by the vector screens (q140/q145/q149): the
+    * corpus `base`, the synthetic arrival batch ([[syntheticVecBatch]])
+    * as `batch`, the bit width `bits` from corpus size, the hyperplanes
+    * `H`, and the corpus side `c` of [[vecSideSql]]. */
+  private def vecScreenCtes(batch: String): String =
+    s"""WITH base AS (SELECT vec_id, embedding FROM embeddings),
+       |$batch AS (
+       |  SELECT vec_id + 100000 AS vec_id, embedding FROM base WHERE vec_id % 5 = 0
+       |  UNION ALL
+       |  SELECT vec_id + 200000, list_transform(embedding, x -> CAST(x * CAST(2.0 AS FLOAT) AS FLOAT))
+       |  FROM base WHERE vec_id % 7 = 0
+       |  UNION ALL
+       |  SELECT vec_id + 300000, list_transform(embedding, x -> CAST(-x AS FLOAT))
+       |  FROM base WHERE vec_id % 11 = 0),
+       |bits AS (SELECT CAST(least(24, greatest(8, ceil(log2(COUNT(*))))) AS INT) AS b
+       |         FROM base),
+       |H AS (SELECT j, pos,
+       |        (('0x' || substr(md5(CAST(j AS VARCHAR) || '_' || CAST(pos AS VARCHAR)), 1, 15))::BIGINT % 2001 - 1000) AS w
+       |      FROM range(96) t(j), range(1, 65) p(pos)
+       |      WHERE j < $LshBands * (SELECT b FROM bits)),
+       |${vecSideSql("c", "base")}""".stripMargin
+
+  /** The oracle's rep norms and sign-LSH bands of the vectors in `src`:
+    * `flat_<side>` elements, `norms_<side>`, hyperplane `dots_<side>` and
+    * band `buckets_<side>`. */
+  private def vecSideSql(side: String, src: String): String =
+    s"""flat_$side AS (
+       |  SELECT vec_id, i AS pos, CAST(embedding[i] AS DOUBLE) AS xd
+       |  FROM (SELECT vec_id, embedding, unnest(range(1, len(embedding)+1)) AS i
+       |        FROM $src)),
+       |norms_$side AS (
+       |  SELECT vec_id, sqrt(CAST(SUM(CAST(xd*xd AS DECIMAL(38,20))) AS DOUBLE)) AS nrm
+       |  FROM flat_$side GROUP BY vec_id),
+       |dots_$side AS (SELECT f.vec_id, h.j,
+       |    CAST(SUM(CAST(f.xd * (CAST(h.w AS DOUBLE) / 1000.0) AS DECIMAL(38,20))) AS DOUBLE) AS d
+       |  FROM flat_$side f JOIN H h ON f.pos = h.pos
+       |  GROUP BY f.vec_id, h.j),
+       |buckets_$side AS (SELECT vec_id, j // (SELECT b FROM bits) AS band,
+       |    CAST(SUM(CASE WHEN d >= 0 THEN (1::BIGINT << (j % (SELECT b FROM bits))) ELSE 0 END) AS BIGINT) AS bucket
+       |  FROM dots_$side GROUP BY vec_id, j // (SELECT b FROM bits))""".stripMargin
 
   private val screenVecLoopSql = {
-    def flatOf(side: String, src: String) =
-      s"""flat_$side AS (
-         |  SELECT vec_id, i AS pos, CAST(embedding[i] AS DOUBLE) AS xd
-         |  FROM (SELECT vec_id, embedding, unnest(range(1, len(embedding)+1)) AS i
-         |        FROM $src)),
-         |norms_$side AS (
-         |  SELECT vec_id, sqrt(CAST(SUM(CAST(xd*xd AS DECIMAL(38,20))) AS DOUBLE)) AS nrm
-         |  FROM flat_$side GROUP BY vec_id),
-         |dots_$side AS (SELECT f.vec_id, h.j,
-         |    CAST(SUM(CAST(f.xd * (CAST(h.w AS DOUBLE) / 1000.0) AS DECIMAL(38,20))) AS DOUBLE) AS d
-         |  FROM flat_$side f JOIN H h ON f.pos = h.pos
-         |  GROUP BY f.vec_id, h.j),
-         |buckets_$side AS (SELECT vec_id, j // (SELECT b FROM bits) AS band,
-         |    CAST(SUM(CASE WHEN d >= 0 THEN (1::BIGINT << (j % (SELECT b FROM bits))) ELSE 0 END) AS BIGINT) AS bucket
-         |  FROM dots_$side GROUP BY vec_id, j // (SELECT b FROM bits))""".stripMargin
     def summaryOf(name: String, tag: String, newb: String, exact: String, near: String) =
       s"""$name AS (
          |  SELECT '$tag' AS batch, n.vec_id // 100000 AS slice, COUNT(*) AS n,
@@ -3313,25 +3126,10 @@ object Similarity extends QueryModule {
          |  LEFT JOIN $exact e ON e.nid = n.vec_id
          |  LEFT JOIN $near nr ON nr.nid = n.vec_id
          |  GROUP BY 2)""".stripMargin
-    s"""WITH base AS (SELECT vec_id, embedding FROM embeddings),
-       |newb1 AS (
-       |  SELECT vec_id + 100000 AS vec_id, embedding FROM base WHERE vec_id % 5 = 0
-       |  UNION ALL
-       |  SELECT vec_id + 200000, list_transform(embedding, x -> CAST(x * CAST(2.0 AS FLOAT) AS FLOAT))
-       |  FROM base WHERE vec_id % 7 = 0
-       |  UNION ALL
-       |  SELECT vec_id + 300000, list_transform(embedding, x -> CAST(-x AS FLOAT))
-       |  FROM base WHERE vec_id % 11 = 0),
+    s"""${vecScreenCtes("newb1")},
        |newb2 AS (SELECT vec_id + 400000 AS vec_id, embedding FROM newb1),
-       |bits AS (SELECT CAST(least(24, greatest(8, ceil(log2(COUNT(*))))) AS INT) AS b
-       |         FROM base),
-       |H AS (SELECT j, pos,
-       |        (('0x' || substr(md5(CAST(j AS VARCHAR) || '_' || CAST(pos AS VARCHAR)), 1, 15))::BIGINT % 2001 - 1000) AS w
-       |      FROM range(96) t(j), range(1, 65) p(pos)
-       |      WHERE j < $LshBands * (SELECT b FROM bits)),
-       |${flatOf("c", "base")},
-       |${flatOf("n1", "newb1")},
-       |${flatOf("n2", "newb2")},
+       |${vecSideSql("n1", "newb1")},
+       |${vecSideSql("n2", "newb2")},
        |exact1 AS (SELECT DISTINCT n.vec_id AS nid
        |           FROM newb1 n JOIN base c ON n.embedding = c.embedding),
        |cand1 AS (SELECT DISTINCT n.vec_id AS nid, c.vec_id AS cid
@@ -3385,38 +3183,8 @@ object Similarity extends QueryModule {
   }
 
   private[graft] val embeddingScreenSql = {
-    def flatOf(side: String, src: String) =
-      s"""flat_$side AS (
-         |  SELECT vec_id, i AS pos, CAST(embedding[i] AS DOUBLE) AS xd
-         |  FROM (SELECT vec_id, embedding, unnest(range(1, len(embedding)+1)) AS i
-         |        FROM $src)),
-         |norms_$side AS (
-         |  SELECT vec_id, sqrt(CAST(SUM(CAST(xd*xd AS DECIMAL(38,20))) AS DOUBLE)) AS nrm
-         |  FROM flat_$side GROUP BY vec_id),
-         |dots_$side AS (SELECT f.vec_id, h.j,
-         |    CAST(SUM(CAST(f.xd * (CAST(h.w AS DOUBLE) / 1000.0) AS DECIMAL(38,20))) AS DOUBLE) AS d
-         |  FROM flat_$side f JOIN H h ON f.pos = h.pos
-         |  GROUP BY f.vec_id, h.j),
-         |buckets_$side AS (SELECT vec_id, j // (SELECT b FROM bits) AS band,
-         |    CAST(SUM(CASE WHEN d >= 0 THEN (1::BIGINT << (j % (SELECT b FROM bits))) ELSE 0 END) AS BIGINT) AS bucket
-         |  FROM dots_$side GROUP BY vec_id, j // (SELECT b FROM bits))""".stripMargin
-    s"""WITH base AS (SELECT vec_id, embedding FROM embeddings),
-       |newb AS (
-       |  SELECT vec_id + 100000 AS vec_id, embedding FROM base WHERE vec_id % 5 = 0
-       |  UNION ALL
-       |  SELECT vec_id + 200000, list_transform(embedding, x -> CAST(x * CAST(2.0 AS FLOAT) AS FLOAT))
-       |  FROM base WHERE vec_id % 7 = 0
-       |  UNION ALL
-       |  SELECT vec_id + 300000, list_transform(embedding, x -> CAST(-x AS FLOAT))
-       |  FROM base WHERE vec_id % 11 = 0),
-       |bits AS (SELECT CAST(least(24, greatest(8, ceil(log2(COUNT(*))))) AS INT) AS b
-       |         FROM base),
-       |H AS (SELECT j, pos,
-       |        (('0x' || substr(md5(CAST(j AS VARCHAR) || '_' || CAST(pos AS VARCHAR)), 1, 15))::BIGINT % 2001 - 1000) AS w
-       |      FROM range(96) t(j), range(1, 65) p(pos)
-       |      WHERE j < $LshBands * (SELECT b FROM bits)),
-       |${flatOf("c", "base")},
-       |${flatOf("n", "newb")},
+    s"""${vecScreenCtes("newb")},
+       |${vecSideSql("n", "newb")},
        |exact_g AS (SELECT DISTINCT n.vec_id AS nid
        |            FROM newb n JOIN base c ON n.embedding = c.embedding),
        |cand AS (SELECT DISTINCT n.vec_id AS nid, c.vec_id AS cid
@@ -3449,20 +3217,7 @@ object Similarity extends QueryModule {
     * holds symmetrically for both screening families. */
   def vecBloomScreen(s: SparkSession, dir: String): DataFrame = {
     tune(s)
-    val idx = corpusVecIndex(s, dir)
-    val path = fixtureVecIndexPath(dir)
-    IndexStore.withPathLock(path) {
-      if (!IndexStore.tableNames(s, path).contains("bloom")) persistVecBloom(s, path)
-    }
-    val batch = syntheticVecBatch(s, dir)
-    val fast = screenVecBatchBloom(idx, loadVecBloom(s, path), batch)
-    val plain = screenVecBatch(idx, batch)
-    val dis = fast.join(plain.withColumnRenamed("decision", "d2"), "vec_id")
-      .agg(coalesce(sum(when(col("decision") =!= col("d2"), 1).otherwise(0)), lit(0))
-        .as("n_disagree"))
-    vecScreenSummary(fast).crossJoin(dis)
-      .withColumn("bloom_equals_plain", col("n_disagree") === 0)
-      .drop("n_disagree")
+    VecScreen.bloomAudit(s, dir, syntheticVecBatch(s, dir))(vecScreenSummary)
   }
 
   private val vecBloomScreenSql =

@@ -35,35 +35,80 @@ object StreamOps extends QueryModule {
   private val ckBase = s"/dev/shm/graft-ck/${java.util.UUID.randomUUID()}"
 
   /** Staged-source cache: the multi-batch harnesses slice a fixture into
-    * ordered files (name + mtime pinned). The slices are pure functions of
-    * the fixture, so stage once per (key, fixture) and reuse across runs —
+    * ordered files. The slices are pure functions of the fixture, so
+    * [[staged]] stages once per (key, fixture) and reuses across runs —
     * the staging is input setup, not the operator under test. Checkpoints
     * are NOT cached (each run must re-process the batches from scratch).
     */
   private val stagedDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def stagedOnce(key: String)(build: String => Unit): String =
+
+  /** Stage ordered slices once per `key`, each as a single parquet file
+    * `<name>.parquet` with pinned name AND mtime (ascending in slice
+    * order) — file-source batch order must be deterministic whichever the
+    * source sorts by. */
+  private def staged(s: SparkSession, key: String, slices: Seq[(String, DataFrame)]): String =
     stagedDirs.computeIfAbsent(key, { _ =>
-      val d = s"$ckBase/staged_${counter.incrementAndGet()}"
-      build(d)
-      d
+      val sd = s"$ckBase/staged_${counter.incrementAndGet()}"
+      val fs = org.apache.hadoop.fs.FileSystem.get(
+        new java.net.URI("file:///"), s.sparkContext.hadoopConfiguration)
+      slices.zipWithIndex.foreach { case ((name, df), i) =>
+        val tmp = s"$sd/.stage_$name"
+        df.coalesce(1).write.mode("overwrite").parquet(tmp)
+        val parts = fs.globStatus(new org.apache.hadoop.fs.Path(s"$tmp/part-*.parquet"))
+        require(parts != null && parts.nonEmpty, s"no part file staged for $name")
+        val dest = new org.apache.hadoop.fs.Path(s"$sd/$name.parquet")
+        fs.rename(parts(0).getPath, dest)
+        fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
+        fs.setTimes(dest, 1000000000000L + i * 600000L, -1)
+      }
+      sd
     })
-  /** Stage one micro-batch slice as a single parquet file with pinned name
-    * AND mtime — file-source batch order must be deterministic whichever
-    * the source sorts by (shared by every multi-batch harness below). */
-  private def stageFile(s: SparkSession, sd: String, df: DataFrame,
-                        name: String, mtime: Long): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI("file:///"), s.sparkContext.hadoopConfiguration)
-    val tmp = s"$sd/.stage_$name"
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    val parts = fs.globStatus(new org.apache.hadoop.fs.Path(s"$tmp/part-*.parquet"))
-    require(parts != null && parts.nonEmpty, s"no part file staged for $name")
-    val part = parts(0).getPath
-    val dest = new org.apache.hadoop.fs.Path(s"$sd/$name.parquet")
-    fs.rename(part, dest)
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    fs.setTimes(dest, mtime, -1)
+
+  /** The module's one micro-batch harness: stage `slices`
+    * ([[staged]]), stream them one file per trigger under AvailableNow,
+    * call `each(batch, batchId)` for every micro-batch, require exactly
+    * one non-empty micro-batch per slice, and drop the checkpoint.
+    * Returns the non-empty batch count. The only `foreachBatch` in
+    * src/main (StreamHarnessGuardSpec fails on another). */
+  private def microBatches(s: SparkSession, key: String, slices: Seq[(String, DataFrame)])(
+      each: (DataFrame, Long) => Unit): Int = {
+    val qname = s"graft_stream_${counter.incrementAndGet()}"
+    val q = s.readStream
+      .schema(slices.head._2.schema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(staged(s, key, slices))
+      .writeStream
+      .foreachBatch { (batch: DataFrame, batchId: Long) => each(batch, batchId) }
+      .option("checkpointLocation", s"$ckBase/$qname")
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    val n = q.recentProgress.count(_.numInputRows > 0)
+    require(n == slices.size,
+      s"$key harness needs ${slices.size} non-empty micro-batches, got $n")
+    dropCheckpoint(s"$ckBase/$qname")
+    n
   }
+
+  /** [[microBatches]] writing each micro-batch's `decide` rows to a
+    * batchId-scoped decision log, read back whole. Each batch OVERWRITES
+    * `out/batch=<batchId>` (not a blind append): a micro-batch Structured
+    * Streaming retries after a sink failure re-runs with the SAME batchId,
+    * so the rewrite replaces the partial write instead of duplicating
+    * decision rows — the log stays idempotent under replay, like the
+    * guarded mergeUpsert sink (q116). */
+  private def decisionLog(s: SparkSession, key: String, slices: Seq[(String, DataFrame)])(
+      decide: DataFrame => DataFrame): DataFrame = {
+    val out = s"$ckBase/log_${counter.incrementAndGet()}"
+    microBatches(s, key, slices) { (batch, batchId) =>
+      decide(batch).write.mode("overwrite").parquet(s"$out/batch=$batchId")
+    }
+    parquet(s, Seq(out))
+  }
+
+  /** Two slices of `df` by the parity of `c`. */
+  private def byParity(df: DataFrame, c: String): Seq[(String, DataFrame)] =
+    Seq("b0_even" -> df.filter(col(c) % 2 === 0), "b1_odd" -> df.filter(col(c) % 2 === 1))
 
   private def dropCheckpoint(dir: String): Unit = {
     def rm(f: java.io.File): Unit = {
@@ -297,15 +342,12 @@ object StreamOps extends QueryModule {
       val ev = raw.withColumn("__hr", tsMicros(raw)).withColumn("__hr", expr("__hr div 3600000000"))
       val hmax = ev.agg(max(col("__hr"))).collect()(0).getLong(0)
       val cut = hmax - 6
-      val srcDir = stagedOnce(s"late:$dir") { sd =>
-        // The tip goes first so the late-event watermark has advanced by
-        // the time the late batch runs.
-        val t0 = 1000000000000L
-        stageFile(s, sd, ev.filter(col("__hr") === hmax).drop("__hr"), "b0_tip", t0)
-        stageFile(s, sd, ev.filter(col("__hr") > cut && col("__hr") < hmax).drop("__hr"),
-          "b1_rest", t0 + 600000L)
-        stageFile(s, sd, ev.filter(col("__hr") <= cut).drop("__hr"), "b2_late", t0 + 1200000L)
-      }
+      // The tip goes first so the late-event watermark has advanced by
+      // the time the late batch runs.
+      val srcDir = staged(s, s"late:$dir", Seq(
+        "b0_tip" -> ev.filter(col("__hr") === hmax).drop("__hr"),
+        "b1_rest" -> ev.filter(col("__hr") > cut && col("__hr") < hmax).drop("__hr"),
+        "b2_late" -> ev.filter(col("__hr") <= cut).drop("__hr")))
       val src = s.readStream
         .schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -363,37 +405,17 @@ object StreamOps extends QueryModule {
     withStatePartitions(s, 8) {
       val ev = table(s, dir, "events")
         .select(col("event_id"), col("ts"), col("user_id"), col("value"))
-      val schema = ev.schema
       val lake = s"$ckBase/merge_lake_${counter.incrementAndGet()}"
-      val srcDir = stagedOnce(s"merge:$dir") { sd =>
-        val t0 = 1000000000000L
-        stageFile(s, sd, ev.filter(col("event_id") % 2 === 0), "b0_even", t0)
-        stageFile(s, sd, ev.filter(col("event_id") % 2 === 1), "b1_odd", t0 + 600000L)
+      microBatches(s, s"merge:$dir", byParity(ev, "event_id")) { (batch, _) =>
+        // per-batch CDC reduction: one row per user (latest by ts then
+        // event_id), then a partition-scoped durable upsert
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("user_id")).orderBy(col("ts").desc, col("event_id").desc)
+        val latest = batch
+          .withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
+          .withColumn("shard", pmod(col("user_id"), lit(4)))
+        graft.sources.Lake.mergeUpsert(batch.sparkSession, lake, latest, "user_id", "shard")
       }
-      val src = s.readStream
-        .schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(srcDir)
-      val qname = s"graft_stream_merge_${counter.incrementAndGet()}"
-      val q = src.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // per-batch CDC reduction: one row per user (latest by ts then
-          // event_id), then a partition-scoped durable upsert
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("user_id")).orderBy(col("ts").desc, col("event_id").desc)
-          val latest = batch
-            .withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
-            .withColumn("shard", pmod(col("user_id"), lit(4)))
-          graft.sources.Lake.mergeUpsert(batch.sparkSession, lake, latest, "user_id", "shard")
-          ()
-        }
-        .option("checkpointLocation", s"$ckBase/$qname")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val batches = q.recentProgress.count(_.numInputRows > 0)
-      require(batches >= 2, s"merge harness needs >= 2 non-empty micro-batches, got $batches")
-      dropCheckpoint(s"$ckBase/$qname")
       // the staged source is cached across runs; the lake stays on tmpfs
       // until process exit — the returned frame reads it lazily
       parquet(s, Seq(lake))
@@ -457,7 +479,7 @@ object StreamOps extends QueryModule {
 
   /** Streaming incremental dedup screening: the production ingest loop.
     * New documents arrive as files; each micro-batch is screened against
-    * the FROZEN corpus signature index ([[graft.operators.Dedup.screenBatch]])
+    * the FROZEN corpus signature index ([[graft.operators.LshScreen.screenFixture]])
     * and its per-doc decisions are appended to the admission log. Because
     * a doc's decision depends only on its own text vs the index, any
     * micro-batch partitioning yields identical decisions — so the rollup
@@ -474,44 +496,16 @@ object StreamOps extends QueryModule {
     withStatePartitions(s, 8) {
       val newB = graft.operators.Dedup.augmentedDocs(s, dir)
         .filter(col("doc_id") >= 100000L)
-      val schema = newB.schema
-      val srcDir = stagedOnce(s"screen:$dir") { sd =>
-        val t0 = 1000000000000L
-        stageFile(s, sd, newB.filter(col("doc_id") % 2 === 0), "b0_even", t0)
-        stageFile(s, sd, newB.filter(col("doc_id") % 2 === 1), "b1_odd", t0 + 600000L)
-      }
-      val out = s"$ckBase/screen_out_${counter.incrementAndGet()}"
-      val src = s.readStream
-        .schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(srcDir)
-      val qname = s"graft_stream_screen_${counter.incrementAndGet()}"
-      // batchId-scoped overwrite (not a blind append): a micro-batch that
-      // Structured Streaming retries after a sink failure re-runs foreachBatch
-      // with the SAME batchId, so overwriting batch=<id> replaces the partial
-      // write instead of duplicating decision rows — the admission log stays
-      // idempotent under replay, matching the guarded mergeUpsert sink (q116).
-      val q = src.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          graft.operators.Dedup.screenBatch(batch.sparkSession, dir, batch)
-            .write.mode("overwrite").parquet(s"$out/batch=$batchId")
-          ()
-        }
-        .option("checkpointLocation", s"$ckBase/$qname")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val batches = q.recentProgress.count(_.numInputRows > 0)
-      require(batches >= 2, s"screen harness needs >= 2 non-empty micro-batches, got $batches")
-      dropCheckpoint(s"$ckBase/$qname")
-      graft.operators.Dedup.screenSummary(parquet(s, Seq(out)), newB)
+      val log = decisionLog(s, s"screen:$dir", byParity(newB, "doc_id"))(
+        b => graft.operators.Dedup.TextScreen.screenFixture(b.sparkSession, dir, b))
+      graft.operators.Dedup.screenSummary(log, newB)
     }
   }
 
   /** Streaming incremental VECTOR screening — q134's pattern for the
     * embedding side, completing the symmetry: new vectors arrive as
     * files, each micro-batch is screened against the persisted frozen
-    * sign-LSH index ([[graft.operators.Similarity.screenVecBatch]]), and
+    * sign-LSH index ([[graft.operators.LshScreen.screenFixture]]), and
     * the per-vector decisions land in a batchId-scoped admission log
     * (replay-idempotent, as q134). A vector's decision depends only on
     * itself vs the index, so any micro-batch partitioning yields
@@ -523,33 +517,9 @@ object StreamOps extends QueryModule {
     tune(s)
     withStatePartitions(s, 8) {
       val newB = graft.operators.Similarity.syntheticVecBatch(s, dir)
-      val schema = newB.schema
-      val srcDir = stagedOnce(s"vscreen:$dir") { sd =>
-        val t0 = 1000000000000L
-        stageFile(s, sd, newB.filter(col("vec_id") % 2 === 0), "b0_even", t0)
-        stageFile(s, sd, newB.filter(col("vec_id") % 2 === 1), "b1_odd", t0 + 600000L)
-      }
-      val out = s"$ckBase/vscreen_out_${counter.incrementAndGet()}"
-      val src = s.readStream
-        .schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(srcDir)
-      val qname = s"graft_stream_vscreen_${counter.incrementAndGet()}"
-      val q = src.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          graft.operators.Similarity.screenVecBatch(batch.sparkSession, dir, batch)
-            .write.mode("overwrite").parquet(s"$out/batch=$batchId")
-          ()
-        }
-        .option("checkpointLocation", s"$ckBase/$qname")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val batches = q.recentProgress.count(_.numInputRows > 0)
-      require(batches >= 2, s"vector screen harness needs >= 2 non-empty micro-batches, got $batches")
-      dropCheckpoint(s"$ckBase/$qname")
-      graft.operators.Similarity.vecScreenSummary(
-        parquet(s, Seq(out)).select(col("vec_id"), col("decision")))
+      val log = decisionLog(s, s"vscreen:$dir", byParity(newB, "vec_id"))(
+        b => graft.operators.Similarity.VecScreen.screenFixture(b.sparkSession, dir, b))
+      graft.operators.Similarity.vecScreenSummary(log.select(col("vec_id"), col("decision")))
     }
   }
 
@@ -566,33 +536,9 @@ object StreamOps extends QueryModule {
     tune(s)
     withStatePartitions(s, 8) {
       val newB = graft.operators.Similarity.syntheticVecBatch(s, dir)
-      val schema = newB.schema
-      val srcDir = stagedOnce(s"pqscreen:$dir") { sd =>
-        val t0 = 1000000000000L
-        stageFile(s, sd, newB.filter(col("vec_id") % 2 === 0), "b0_even", t0)
-        stageFile(s, sd, newB.filter(col("vec_id") % 2 === 1), "b1_odd", t0 + 600000L)
-      }
-      val out = s"$ckBase/pqscreen_out_${counter.incrementAndGet()}"
-      val src = s.readStream
-        .schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(srcDir)
-      val qname = s"graft_stream_pqscreen_${counter.incrementAndGet()}"
-      val q = src.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          graft.operators.Similarity.pqScreenBatch(batch.sparkSession, dir, batch)
-            .write.mode("overwrite").parquet(s"$out/batch=$batchId")
-          ()
-        }
-        .option("checkpointLocation", s"$ckBase/$qname")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val batches = q.recentProgress.count(_.numInputRows > 0)
-      require(batches >= 2, s"PQ screen harness needs >= 2 non-empty micro-batches, got $batches")
-      dropCheckpoint(s"$ckBase/$qname")
-      graft.operators.Similarity.pqScreenSummary(
-        parquet(s, Seq(out)).select(col("vec_id"), col("decision")))
+      val log = decisionLog(s, s"pqscreen:$dir", byParity(newB, "vec_id"))(
+        b => graft.operators.Similarity.pqScreenBatch(b.sparkSession, dir, b))
+      graft.operators.Similarity.pqScreenSummary(log.select(col("vec_id"), col("decision")))
     }
   }
 
@@ -617,41 +563,19 @@ object StreamOps extends QueryModule {
       val posers = table(s, dir, "documents")
         .filter(col("doc_id") % 50 === 7)
         .select(col("doc_id"), col("text"))
-      val schema = posers.schema
-      val srcDir = stagedOnce(s"search:$dir") { sd =>
-        val t0 = 1000000000000L
-        stageFile(s, sd, posers.filter(col("doc_id") % 100 === 7), "b0_lo", t0)
-        stageFile(s, sd, posers.filter(col("doc_id") % 100 === 57), "b1_hi", t0 + 600000L)
-      }
       // build-or-validate the index BEFORE the stream starts: triggers only
       // probe a frozen snapshot, exactly like the dedup/vector screens
       graft.operators.Search.searchIndex(s, dir)
-      val out = s"$ckBase/search_out_${counter.incrementAndGet()}"
-      val src = s.readStream
-        .schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(srcDir)
-      val qname = s"graft_stream_search_${counter.incrementAndGet()}"
-      val q = src.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val bs = batch.sparkSession
-          val idx = graft.operators.Search.searchIndex(bs, dir)
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("qid")).orderBy(col("score").desc, col("doc_id"))
-          graft.operators.Search.bm25(idx, graft.operators.Search.querySet(batch))
-            .withColumn("rn", row_number().over(w))
-            .filter(col("rn") <= 5)
-            .write.mode("overwrite").parquet(s"$out/batch=$batchId")
-          ()
-        }
-        .option("checkpointLocation", s"$ckBase/$qname")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val batches = q.recentProgress.count(_.numInputRows > 0)
-      require(batches >= 2, s"search harness needs >= 2 non-empty micro-batches, got $batches")
-      dropCheckpoint(s"$ckBase/$qname")
-      parquet(s, Seq(out)).select(col("qid"), col("doc_id"), col("score"), col("rn"))
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("qid")).orderBy(col("score").desc, col("doc_id"))
+      decisionLog(s, s"search:$dir", Seq(
+          "b0_lo" -> posers.filter(col("doc_id") % 100 === 7),
+          "b1_hi" -> posers.filter(col("doc_id") % 100 === 57))) { batch =>
+        val idx = graft.operators.Search.searchIndex(batch.sparkSession, dir)
+        graft.operators.Search.bm25(idx, graft.operators.Search.querySet(batch))
+          .withColumn("rn", row_number().over(w))
+          .filter(col("rn") <= 5)
+      }.select(col("qid"), col("doc_id"), col("score"), col("rn"))
     }
   }
 
@@ -674,35 +598,13 @@ object StreamOps extends QueryModule {
     tune(s)
     withStatePartitions(s, 8) {
       val arrivals = graft.operators.ScaleOps.mixArrivalBatch(s, dir)
-      val schema = arrivals.schema
-      val srcDir = stagedOnce(s"mixadm:$dir") { sd =>
-        val t0 = 1000000000000L
-        stageFile(s, sd, arrivals.filter(col("doc_id") % 2 === 0), "b0_even", t0)
-        stageFile(s, sd, arrivals.filter(col("doc_id") % 2 === 1), "b1_odd", t0 + 600000L)
-      }
       // build-or-validate the policy store BEFORE the stream starts:
       // triggers only probe a frozen snapshot (the q134/q177 convention)
       graft.operators.ScaleOps.mixAdmitStore(s, dir)
-      val out = s"$ckBase/mixadm_out_${counter.incrementAndGet()}"
-      val src = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      val qname = s"graft_stream_mixadm_${counter.incrementAndGet()}"
-      val q = src.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          graft.operators.ScaleOps.mixAdmitBatch(batch.sparkSession, dir, batch)
-            .write.mode("overwrite").parquet(s"$out/batch=$batchId")
-          ()
-        }
-        .option("checkpointLocation", s"$ckBase/$qname")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val batches = q.recentProgress.count(_.numInputRows > 0)
-      require(batches >= 2,
-        s"mix-admission harness needs >= 2 non-empty micro-batches, got $batches")
-      dropCheckpoint(s"$ckBase/$qname")
+      val log = decisionLog(s, s"mixadm:$dir", byParity(arrivals, "doc_id"))(
+        b => graft.operators.ScaleOps.mixAdmitBatch(b.sparkSession, dir, b))
       graft.operators.ScaleOps.mixAdmitSummary(
-        parquet(s, Seq(out)).select(col("doc_id"), col("source"), col("tk"), col("decision")))
+        log.select(col("doc_id"), col("source"), col("tk"), col("decision")))
     }
   }
 
@@ -726,31 +628,10 @@ object StreamOps extends QueryModule {
       val arrivals = table(s, dir, "documents")
         .filter(col("doc_id") % 20 === 3)
         .select(col("doc_id"), col("text"), col("lang"))
-      val schema = arrivals.schema
-      val srcDir = stagedOnce(s"clsf:$dir") { sd =>
-        val t0 = 1000000000000L
-        stageFile(s, sd, arrivals.filter(col("doc_id") % 40 === 3), "b0_lo", t0)
-        stageFile(s, sd, arrivals.filter(col("doc_id") % 40 === 23), "b1_hi", t0 + 600000L)
-      }
-      val out = s"$ckBase/clsf_out_${counter.incrementAndGet()}"
-      val src = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      val qname = s"graft_stream_clsf_${counter.incrementAndGet()}"
-      val q = src.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          graft.operators.Search.classifyDocs(batch)
-            .write.mode("overwrite").parquet(s"$out/batch=$batchId")
-          ()
-        }
-        .option("checkpointLocation", s"$ckBase/$qname")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val batches = q.recentProgress.count(_.numInputRows > 0)
-      require(batches >= 2,
-        s"classifier harness needs >= 2 non-empty micro-batches, got $batches")
-      dropCheckpoint(s"$ckBase/$qname")
-      parquet(s, Seq(out))
+      decisionLog(s, s"clsf:$dir", Seq(
+          "b0_lo" -> arrivals.filter(col("doc_id") % 40 === 3),
+          "b1_hi" -> arrivals.filter(col("doc_id") % 40 === 23)))(
+          graft.operators.Search.classifyDocs)
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n_docs"),
           sum(when(col("logit_micro") > 0, 1L).otherwise(0L)).as("n_keep"),
@@ -776,6 +657,19 @@ object StreamOps extends QueryModule {
       |WHERE d.doc_id % 20 = 3
       |GROUP BY d.lang""".stripMargin
 
+  /** Commit one micro-batch as a batchId-tagged logical append, then
+    * deliberately REPLAY the commit — the retry a recovering stream
+    * performs after a crash between sink write and checkpoint advance —
+    * and require the replay to be a manifest-ledger no-op. */
+  private def commitOnce(batch: DataFrame, lake: String, batchId: Long): Unit = {
+    def commit() = graft.sources.Snapshots.commitIfAbsent(
+      batch, lake, append = true, "batchId", batchId.toString)
+    val first = commit()
+    val replay = commit()
+    require(first.nonEmpty && replay.isEmpty,
+      s"commit ledger: first=$first replay=$replay for batch $batchId")
+  }
+
   /** q150: exactly-once streaming commits into the snapshot table.
     * Micro-batches land as logical-append snapshot commits tagged with
     * their batchId ([[graft.sources.Snapshots.commitIfAbsent]]), and
@@ -793,35 +687,10 @@ object StreamOps extends QueryModule {
     withStatePartitions(s, 8) {
       val rows = table(s, dir, "orders")
         .select(col("o_orderkey").cast("long").as("okey"))
-      val schema = rows.schema
-      val srcDir = stagedOnce(s"snap:$dir") { sd =>
-        val t0 = 1000000000000L
-        stageFile(s, sd, rows.filter(col("okey") % 2 === 0), "b0_even", t0)
-        stageFile(s, sd, rows.filter(col("okey") % 2 === 1), "b1_odd", t0 + 600000L)
-      }
       val lake = s"$ckBase/snaplake_${counter.incrementAndGet()}"
-      val src = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      val qname = s"graft_stream_snap_${counter.incrementAndGet()}"
-      val q = src.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          if (!batch.isEmpty) {
-            val first = graft.sources.Snapshots.commitIfAbsent(
-              batch, lake, append = true, "batchId", batchId.toString)
-            val replay = graft.sources.Snapshots.commitIfAbsent(
-              batch, lake, append = true, "batchId", batchId.toString)
-            require(first.nonEmpty && replay.isEmpty,
-              s"commit ledger: first=$first replay=$replay for batch $batchId")
-          }
-          ()
-        }
-        .option("checkpointLocation", s"$ckBase/$qname")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val batches = q.recentProgress.count(_.numInputRows > 0)
-      require(batches >= 2, s"snapshot harness needs >= 2 non-empty micro-batches, got $batches")
-      dropCheckpoint(s"$ckBase/$qname")
+      val batches = microBatches(s, s"snap:$dir", byParity(rows, "okey")) { (batch, batchId) =>
+        if (!batch.isEmpty) commitOnce(batch, lake, batchId)
+      }
       val versions = graft.sources.Snapshots.latestVersion(s, lake)
       graft.sources.Snapshots.read(s, lake)
         .agg(count(lit(1)).as("n_rows"), sum("okey").as("sum_key"))
@@ -859,58 +728,39 @@ object StreamOps extends QueryModule {
         .select(col("o_orderkey").cast("long").as("okey"),
           col("o_orderdate").cast("date").as("od"))
         .withColumn("val", col("okey") % 97)
-      val schema = rows.schema
-      val srcDir = stagedOnce(s"ivm:$dir") { sd =>
-        val t0 = 1000000000000L
-        stageFile(s, sd, rows.filter(col("okey") % 3 === 0), "b0", t0)
-        stageFile(s, sd, rows.filter(col("okey") % 3 === 1), "b1", t0 + 600000L)
-        stageFile(s, sd, rows.filter(col("okey") % 3 === 2), "b2", t0 + 1200000L)
-      }
       val lake = s"$ckBase/ivmlake_${counter.incrementAndGet()}"
       def monthAgg(df: DataFrame): DataFrame =
         df.groupBy(date_format(col("od"), "yyyy-MM").as("ym"))
           .agg(count(lit(1)).as("n_rows"), sum("val").as("sum_val"))
       var prevV = 0L
       var state: DataFrame = null
-      val src = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      val qname = s"graft_stream_ivm_${counter.incrementAndGet()}"
-      val q = src.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          if (!batch.isEmpty) {
-            import graft.sources.Snapshots
-            val first = Snapshots.commitIfAbsent(
-              batch, lake, append = true, "batchId", batchId.toString)
-            val replay = Snapshots.commitIfAbsent(
-              batch, lake, append = true, "batchId", batchId.toString)
-            require(first.nonEmpty && replay.isEmpty,
-              s"commit ledger: first=$first replay=$replay for batch $batchId")
-            if (batchId == 1L) // mid-stream takedown: lands inside this refresh window
-              Snapshots.commitDelete(rows.filter(col("okey") % 50 === 0)
-                .select("okey"), lake)
-            val v = Snapshots.latestVersion(s, lake)
-            state =
-              if (prevV == 0L) monthAgg(Snapshots.read(s, lake, v)).coalesce(1).localCheckpoint(true)
-              else {
-                val ch = Snapshots.changes(s, lake, prevV, v)
-                val ins = monthAgg(ch.filter(col("_change_type") === "insert"))
-                val delKeys = ch.filter(col("_change_type") === "delete").select("okey")
-                val del = monthAgg(Snapshots.read(s, lake, prevV)
-                    .join(broadcast(delKeys), Seq("okey")))
-                  .select(col("ym"), (-col("n_rows")).as("n_rows"),
-                    (-col("sum_val")).as("sum_val"))
-                Snapshots.mergeAggDeltas(state, Seq(ins, del), Seq("ym"), "n_rows")
-                  .coalesce(1).localCheckpoint(true)
-              }
-            prevV = v
-          }
-          ()
+      microBatches(s, s"ivm:$dir", Seq(
+          "b0" -> rows.filter(col("okey") % 3 === 0),
+          "b1" -> rows.filter(col("okey") % 3 === 1),
+          "b2" -> rows.filter(col("okey") % 3 === 2))) { (batch, batchId) =>
+        if (!batch.isEmpty) {
+          import graft.sources.Snapshots
+          commitOnce(batch, lake, batchId)
+          if (batchId == 1L) // mid-stream takedown: lands inside this refresh window
+            Snapshots.commitDelete(rows.filter(col("okey") % 50 === 0)
+              .select("okey"), lake)
+          val v = Snapshots.latestVersion(s, lake)
+          state =
+            if (prevV == 0L) monthAgg(Snapshots.read(s, lake, v)).coalesce(1).localCheckpoint(true)
+            else {
+              val ch = Snapshots.changes(s, lake, prevV, v)
+              val ins = monthAgg(ch.filter(col("_change_type") === "insert"))
+              val delKeys = ch.filter(col("_change_type") === "delete").select("okey")
+              val del = monthAgg(Snapshots.read(s, lake, prevV)
+                  .join(broadcast(delKeys), Seq("okey")))
+                .select(col("ym"), (-col("n_rows")).as("n_rows"),
+                  (-col("sum_val")).as("sum_val"))
+              Snapshots.mergeAggDeltas(state, Seq(ins, del), Seq("ym"), "n_rows")
+                .coalesce(1).localCheckpoint(true)
+            }
+          prevV = v
         }
-        .option("checkpointLocation", s"$ckBase/$qname")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      dropCheckpoint(s"$ckBase/$qname")
+      }
       require(state != null, "streaming IVM harness saw no non-empty batch")
       state.withColumn("n_versions",
         lit(graft.sources.Snapshots.latestVersion(s, lake)))
@@ -1054,36 +904,17 @@ object StreamOps extends QueryModule {
         (path, IndexStore.readMeta(s, path)("replay_noop").toBoolean)
       else {
         val batches = f.batches(s, dir)
-        // the key must not collide with the screening streams' own
-        // staged sources ("search:", "mixadm:" hold other slices)
-        val srcDir = stagedOnce(s"${f.name}stream:$dir") { sd =>
-          batches.foreach { case (segId, b) =>
-            stageFile(s, sd, b, f"b${segId}%02d_feed", 1000000000000L + segId * 600000L)
-          }
-        }
         val seedMeta = f.seed(s, dir)
         val flags = new java.util.concurrent.ConcurrentHashMap[Long,
           ((Int, Int), Map[String, Long])]()
-        val qname = s"graft_stream_${f.name}_${counter.incrementAndGet()}"
-        val q = s.readStream
-          .schema(batches.head._2.schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(srcDir)
-          .writeStream
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            // mtime-pinned file order: micro-batch N carries feed slice
-            // N+1 and commits as segment N+1 (seed = segment 0)
-            flags.put(batchId + 1, f.commit(batch.sparkSession, dir, path, batchId + 1, batch))
-            ()
-          }
-          .option("checkpointLocation", s"$ckBase/$qname")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        val nb = q.recentProgress.count(_.numInputRows > 0)
-        require(nb == batches.size, s"${f.name} stream harness needs exactly " +
-          s"${batches.size} non-empty micro-batches, got $nb")
-        dropCheckpoint(s"$ckBase/$qname")
+        // the key must not collide with the screening streams' own
+        // staged sources ("search:", "mixadm:" hold other slices)
+        microBatches(s, s"${f.name}stream:$dir",
+            batches.map { case (segId, b) => f"b${segId}%02d_feed" -> b }) { (batch, batchId) =>
+          // mtime-pinned file order: micro-batch N carries feed slice
+          // N+1 and commits as segment N+1 (seed = segment 0)
+          flags.put(batchId + 1, f.commit(batch.sparkSession, dir, path, batchId + 1, batch))
+        }
         import scala.jdk.CollectionConverters._
         val got = flags.asScala.values.toSeq
         val clean = got.sizeIs == batches.size &&

@@ -883,9 +883,9 @@ class CrashRecoverySpec extends AnyFunSuite {
     Map(
       "search" -> ("q231_masked_feed_sync", Search.maskSyncStore _, Search.SearchMaskFold),
       "vector" -> ("q232_masked_feed_sync_ann", Similarity.ivfMaskSyncStore _,
-        Similarity.vecMaskFold("assign", Seq("cid", "vec_id"))),
+        Similarity.vecMaskFold(Similarity.IvfCells)),
       "pq" -> ("q233_masked_feed_sync_adc", Similarity.pqMaskSyncStore _,
-        Similarity.vecMaskFold("codes", Seq("vec_id", "j"))),
+        Similarity.vecMaskFold(Similarity.PqCodes)),
       "knn" -> ("q245_masked_feed_sync_knn", Similarity.knnMaskSyncStore _,
         Similarity.KnnMaskFold),
       "dedup" -> ("q234_masked_feed_sync_screen", Dedup.dedupMaskSyncStore _,
@@ -1053,7 +1053,7 @@ class CrashRecoverySpec extends AnyFunSuite {
       .map(_.getModificationTime)
     assert(bloomTimes.nonEmpty && bloomTimes.forall(_ <= stampTime),
       "the stamp must be written after the bloom")
-    val bloom = Dedup.loadBloom(s, path)
+    val bloom = graft.sources.IndexStore.loadBloom(s, path)
     val digests = IndexStore.read(s, path, "digests").select("tkey").collect().map(_.getString(0))
     assert(digests.nonEmpty && digests.forall(bloom.mightContainString),
       "the rebuilt bloom must cover every retained digest")

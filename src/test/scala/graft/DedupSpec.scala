@@ -293,7 +293,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("public API: screen a literal batch against a literal corpus index") {
-    val got = Dedup.screenBatch(Dedup.buildIndex(literalCorpus(s)), literalBatch(s))
+    val got = Dedup.TextScreen.screen(Dedup.buildIndex(literalCorpus(s)), literalBatch(s))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(got == Map(200L -> "exact", 201L -> "near", 202L -> "accept"), got.toString)
   }
@@ -312,7 +312,7 @@ class DedupSpec extends AnyFunSuite {
     // process runs at startup)
     val s2 = s.newSession()
     Engine.tune(s2)
-    val decisions = Dedup.screenBatch(Dedup.loadIndex(s2, idxPath), literalBatch(s2))
+    val decisions = Dedup.TextScreen.screen(Dedup.loadIndex(s2, idxPath), literalBatch(s2))
     // plan-level proof: every file source in the screen reads the INDEX
     val scanned = decisions.queryExecution.optimizedPlan.collect {
       case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
@@ -338,15 +338,15 @@ class DedupSpec extends AnyFunSuite {
     Dedup.persistIndex(Dedup.buildIndex(literalCorpus(s)), idxPath)
     val novel = "a completely novel document about spark physical plans " * 4 + "x"
     // first batch: the novel doc is accepted
-    val first = Dedup.screenBatch(Dedup.loadIndex(s, idxPath),
+    val first = Dedup.TextScreen.screen(Dedup.loadIndex(s, idxPath),
         Seq((300L, novel)).toDF("doc_id", "text"))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(first == Map(300L -> "accept"))
     // ingest loop appends the accepted doc's signatures — twice, to prove
     // the probe tolerates the duplicate rows a double-refresh leaves
-    Dedup.refreshIndex(s, idxPath, Seq((300L, novel)).toDF("doc_id", "text"))
-    Dedup.refreshIndex(s, idxPath, Seq((300L, novel)).toDF("doc_id", "text"))
-    val second = Dedup.screenBatch(Dedup.loadIndex(s, idxPath),
+    Dedup.TextScreen.refresh(s, idxPath, Seq((300L, novel)).toDF("doc_id", "text"))
+    Dedup.TextScreen.refresh(s, idxPath, Seq((300L, novel)).toDF("doc_id", "text"))
+    val second = Dedup.TextScreen.screen(Dedup.loadIndex(s, idxPath),
         Seq((301L, novel), (302L, novel + " tail"),
             (303L, "still entirely different content " * 6 + "y"))
           .toDF("doc_id", "text"))
@@ -360,13 +360,13 @@ class DedupSpec extends AnyFunSuite {
     val pre = Dedup.loadIndex(s, idxPath)
     assert(pre.sigs.groupBy("doc_id").count().filter(col("count") > 1).count() > 0,
       "double-refresh must have left duplicate signature rows (test premise)")
-    Dedup.compactIndex(s, idxPath)
+    Dedup.TextScreen.compact(s, idxPath)
     val post = Dedup.loadIndex(s, idxPath)
     assert(post.sigs.count() == post.sigs.select("doc_id").distinct().count(),
       "compacted signatures must be unique per doc")
     assert(post.digests.count() == post.digests.distinct().count(),
       "compacted digests must be unique")
-    val third = Dedup.screenBatch(post,
+    val third = Dedup.TextScreen.screen(post,
         Seq((301L, novel), (302L, novel + " tail"),
             (303L, "still entirely different content " * 6 + "y"))
           .toDF("doc_id", "text"))
@@ -379,15 +379,15 @@ class DedupSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("graft_store").toString
     val idxPath = s"$tmp/idx"
     Dedup.persistIndex(Dedup.buildIndex(literalCorpus(s)), idxPath)
-    Dedup.persistBloom(s, idxPath)
+    Dedup.TextScreen.persistBloom(s, idxPath)
     val idx = Dedup.loadIndex(s, idxPath)
-    val bf = Dedup.loadBloom(s, idxPath)
+    val bf = graft.sources.IndexStore.loadBloom(s, idxPath)
     // no false negatives: every indexed digest hits the bloom
     val misses = idx.digests.collect().map(_.getString(0))
       .count(k => !bf.mightContainString(k))
     assert(misses == 0, s"$misses indexed digests missed the bloom")
     // decision-identical to the plain probe on the standard literal batch
-    val fast = Dedup.screenBatchBloom(idx, bf, literalBatch(s))
+    val fast = Dedup.TextScreen.screenBloom(idx, bf, literalBatch(s))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(fast == Map(200L -> "exact", 201L -> "near", 202L -> "accept"), fast.toString)
     // the point of the sidecar: a flood of novel digests mostly fails the
@@ -399,9 +399,9 @@ class DedupSpec extends AnyFunSuite {
     assert(passed < novelKeys.length / 10,
       s"bloom should reject most novel digests, passed $passed of ${novelKeys.length}")
     // refresh keeps the sidecar truthful: accepted digests hit the merged bloom
-    Dedup.refreshIndex(s, idxPath, novel)
-    Dedup.refreshBloom(s, idxPath, novel)
-    val bf2 = Dedup.loadBloom(s, idxPath)
+    Dedup.TextScreen.refresh(s, idxPath, novel)
+    Dedup.TextScreen.refreshBloom(s, idxPath, novel)
+    val bf2 = graft.sources.IndexStore.loadBloom(s, idxPath)
     assert(novelKeys.forall(bf2.mightContainString),
       "refreshed digests must hit the merged bloom")
   }
@@ -456,7 +456,7 @@ class DedupSpec extends AnyFunSuite {
     import graft.sources.IndexStore
     val dir = TestSpark.sf
     val path = Dedup.takedownDedupBranch(s, dir)
-    val src = Dedup.fixtureIndexPath(dir)
+    val src = Dedup.TextScreen.fixturePath(dir)
     def rd(p: String, t: String) = IndexStore.read(s, p, t)
     // the request, recomputed: the erased works' content keys and the
     // rep ids that carried their sigs/bands in the SOURCE index
@@ -484,7 +484,7 @@ class DedupSpec extends AnyFunSuite {
     assert(rd(path, "bands").join(erased, "doc_id").isEmpty, "band trace survived")
     // the rebuilt bloom keeps its no-false-negatives contract for every
     // RETAINED digest (a rebuild that missed one would break screening)
-    val bloom = Dedup.loadBloom(s, path)
+    val bloom = graft.sources.IndexStore.loadBloom(s, path)
     val misses = rd(path, "digests").collect()
       .count(r => !bloom.mightContainString(r.getString(0)))
     assert(misses == 0, s"rebuilt bloom missed $misses retained digests")

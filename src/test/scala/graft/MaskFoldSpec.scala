@@ -70,14 +70,30 @@ class MaskFoldSpec extends AnyFunSuite {
         "vector family: folding the mask reproduces q229's physically-rewritten assign",
         "q232_masked_feed_sync_ann", "q229_feed_synced_ann",
         Similarity.ivfMaskSyncStore, Similarity.ivfSyncStore,
-        Similarity.vecMaskFold("assign", Seq("cid", "vec_id")),
+        Similarity.vecMaskFold(Similarity.IvfCells),
         Seq("assign" -> Some(Seq("cid", "vec_id", "embedding", "nrm")))),
       FoldCase("pq",
         "pq family: folding the mask reproduces q230's physically-rewritten codes",
         "q233_masked_feed_sync_adc", "q230_feed_synced_adc",
         Similarity.pqMaskSyncStore, Similarity.pqSyncStore,
-        Similarity.vecMaskFold("codes", Seq("vec_id", "j")),
-        Seq("codes" -> Some(Seq("vec_id", "j", "code", "d2")))),
+        Similarity.vecMaskFold(Similarity.PqCodes),
+        Seq("codes" -> Some(Seq("vec_id", "j", "code", "d2"))),
+        // the fold re-lays codes as every PQ store does: range on vec_id
+        // alone, so no vector's codes are split across two files
+        (fold, _) => {
+          val split = IndexStore.read(s, fold, "codes")
+            .select(col("vec_id"), input_file_name().as("file"))
+            .groupBy(col("vec_id")).agg(countDistinct(col("file")).as("files"))
+            .filter(col("files") > 1).count()
+          assert(split == 0, s"pq: $split vectors' folded codes span two files")
+          val rangeKeys = Similarity.vecMaskFold(Similarity.PqCodes).live(s, fold).head._2
+            .queryExecution.analyzed.collect {
+              case r: org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression =>
+                r.partitionExpressions.flatMap(_.references.map(_.name))
+            }
+          assert(rangeKeys == Seq(Seq("vec_id")),
+            s"pq: the fold must range-partition codes on vec_id alone, got $rangeKeys")
+        }),
       // seg is provenance on the fold side only — the physical store
       // collapses legs in place
       FoldCase("knn",
@@ -186,10 +202,10 @@ class MaskFoldSpec extends AnyFunSuite {
           "positions" -> rows("doc_id", "segment")("tok" -> lit("t"), "pos" -> lit(0))),
         Seq("postings", "doclen", "positions").map(t => (t, "doc_id", del, "doc_id")),
         Seq(del -> mask("doc_id"))),
-      "vector" -> Tiny(Similarity.vecMaskFold("assign", Seq("cid", "vec_id")), "seg",
+      "vector" -> Tiny(Similarity.vecMaskFold(Similarity.IvfCells), "seg",
         Seq("assign" -> rows("vec_id", "seg")("cid" -> lit(0L))),
         Seq(("assign", "vec_id", del, "vec_id")), Seq(del -> mask("vec_id"))),
-      "pq" -> Tiny(Similarity.vecMaskFold("codes", Seq("vec_id", "j")), "seg",
+      "pq" -> Tiny(Similarity.vecMaskFold(Similarity.PqCodes), "seg",
         Seq("codes" -> rows("vec_id", "seg")("j" -> lit(0))),
         Seq(("codes", "vec_id", del, "vec_id")), Seq(del -> mask("vec_id"))),
       "knn" -> Tiny(Similarity.KnnMaskFold, "seg", graph,
