@@ -210,16 +210,17 @@ final case class LshScreen[I <: LshIndex](
     * build's invariants from the stored tables alone: duplicate digest
     * and rep rows collapse, bands are recomputed from the unique reps with
     * the global cap re-applied, and each table lands in fresh files
-    * (many small refresh appends -> O(data/target) files). Stamp and meta
-    * are preserved; the swap is [[IndexStore.write]]'s, so readers see old
-    * or new, never a mix. */
+    * (many small refresh appends -> O(data/target) files). Through
+    * [[IndexStore.rewrite]]: stamp and meta are preserved, every other
+    * stored table (the `keys` of a takedown-ready store, the bloom
+    * sidecar, whose digest set is unchanged) rides along, and readers
+    * see old or new, never a mix. */
   def compact(s: SparkSession, path: String): Unit = {
     val idx = load(s, path)
     // localCheckpoint: the rewrite READS the very files it will replace
     val digests = idx.digests.distinct().localCheckpoint()
     val r = idx.reps.dropDuplicates(id).localCheckpoint()
-    persist(index(digests, r, capped(bands(r, idx.meta)), idx.meta), path,
-      IndexStore.readStamp(s, path).getOrElse("manual"))
+    IndexStore.rewrite(s, path, tables(index(digests, r, capped(bands(r, idx.meta)), idx.meta)))
   }
 
   /** Build the bloom-filter SIDECAR over a persisted index's digest table

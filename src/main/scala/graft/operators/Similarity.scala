@@ -2664,22 +2664,13 @@ object Similarity extends QueryModule {
           "(streaming tagged-segment store); flat rewrite would drop its " +
           "partition dirs and _COMMITTED markers")
     }
-    val stamp = IndexStore.readStamp(s, path).getOrElse("manual")
-    val meta = IndexStore.readMeta(s, path)
-    // localCheckpoint first: the rewrite reads the very files it replaces
+    // localCheckpoint first: the rewrite reads the very files it replaces;
+    // every OTHER table rides along through IndexStore.rewrite (ADVICE r12)
     val rows = IndexStore.read(s, path, tbl)
       .withColumn("seg", lit(0)).localCheckpoint()
-    // IndexStore.write replaces the WHOLE store directory, so every OTHER
-    // table must ride along byte-equivalent or compaction would silently
-    // drop it (ADVICE r12) — enumerate the stored tables and pass the
-    // untouched ones through (localCheckpointed: the rewrite deletes the
-    // very files they'd otherwise lazily read)
-    val others = IndexStore.tableNames(s, path)
-      .filterNot(_ == tbl)
-      .map(t => t -> IndexStore.read(s, path, t).localCheckpoint())
-    IndexStore.write(s, path, stamp, (
+    IndexStore.rewrite(s, path, Seq(
       tbl -> rows.repartitionByRange(rangeCols.map(col): _*)
-        .sortWithinPartitions(sortCols.map(col): _*)) +: others, meta)
+        .sortWithinPartitions(sortCols.map(col): _*)))
   }
 
   /** The process-unique compaction-branch path for the sequential store

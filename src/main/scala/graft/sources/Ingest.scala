@@ -46,7 +46,8 @@ object ChunkedIngest {
 
 /** Landing-zone maintenance (S10/C6/P5): list a directory, skip dotfiles,
   * delete the rest in bounded batches — the reference's removeexistingfiles
-  * (/root/reference/data_pipeline.py:305-336) over any Hadoop filesystem.
+  * (/root/reference/data_pipeline.py:305-336) over any Hadoop filesystem —
+  * and the engine's one crash-safe directory replace, [[swap]] + [[heal]].
   */
 object Storage {
 
@@ -68,38 +69,49 @@ object Storage {
       .sum
   }
 
-  /** Recover stale swap dirs from a crashed prior run BEFORE touching
-    * anything. Hadoop rename signals failure by returning false, so a
-    * stale bak/tmp must be resolved explicitly or the swap renames fail
-    * and could strand (or worse, delete) the only live copy.
-    */
-  private[sources] def recoverStaleSwap(fs: FileSystem, path: Path, tmp: Path, bak: Path): Unit = {
-    if (fs.exists(bak)) {
-      if (!fs.exists(path)) {
-        // prior run died between the two swap renames: bak IS the live data
-        if (!fs.rename(bak, path))
-          throw new java.io.IOException(s"swap recovery: cannot restore $bak -> $path")
-      } else fs.delete(bak, true) // prior run died after the swap: bak is garbage
+  /** A [[swap]] lost to another writer, whose copy holds the live name;
+    * callers whose semantics allow it catch this. */
+  final class SwapRaced(msg: String) extends java.io.IOException(msg)
+
+  /** The one directory replace in the engine, rename-aside: with `live`
+    * absent (`present` false) rename `staged` to it; otherwise rename
+    * `live` to `bak`, `staged` to `live`, then drop `bak`. Every rename is
+    * checked; a failed staged rename puts `bak` back ([[heal]]) before
+    * any delete. A failure drops `staged` and raises, naming the paths. */
+  def swap(fs: FileSystem, live: Path, staged: Path, bak: Path, present: Boolean): Unit = {
+    def fail(e: java.io.IOException): Nothing = { fs.delete(staged, true); throw e }
+    if (present && !fs.rename(live, bak))
+      fail(new java.io.IOException(s"swap: cannot rename $live -> $bak; live untouched"))
+    if (!fs.rename(staged, live)) {
+      val raced = fs.exists(live)
+      if (present) heal(fs, live, bak)
+      fail(if (raced) new SwapRaced(s"swap: another writer's copy took $live first")
+        else new java.io.IOException(s"swap: cannot rename $staged -> $live; old copy kept"))
     }
-    if (fs.exists(tmp)) fs.delete(tmp, true): Unit
+    if (present) fs.delete(bak, true): Unit
   }
 
-  /** Atomic-as-available directory swap: path -> bak, tmp -> path, drop
-    * bak; every rename return value checked, rollback before any delete.
-    */
-  private[sources] def guardedSwap(fs: FileSystem, path: Path, tmp: Path, bak: Path): Unit = {
-    if (!fs.rename(path, bak)) {
-      fs.delete(tmp, true)
-      throw new java.io.IOException(s"swap: rename $path -> $bak failed; original untouched")
+  /** Heal a [[swap]] killed between or after its renames: `bak` without
+    * `live` is the only copy and is restored; `bak` beside `live` is
+    * dropped. The restore is skipped while a sibling named with an
+    * `inFlight` staging prefix is younger than [[IndexStore.SwapInFlightMs]]
+    * (a writer mid-swap, whose rename it would fail). `leftover`, a
+    * crashed fixed-name stage, is swept. Metadata-only when clean. */
+  def heal(fs: FileSystem, live: Path, bak: Path, inFlight: Seq[String] = Nil,
+           leftover: Option[Path] = None): Unit = {
+    def writerInFlight: Boolean = inFlight.nonEmpty && {
+      val parent = live.getParent
+      val now = System.currentTimeMillis()
+      parent != null && fs.exists(parent) && fs.listStatus(parent).exists(st =>
+        inFlight.exists(st.getPath.getName.startsWith) &&
+          now - st.getModificationTime < IndexStore.SwapInFlightMs)
     }
-    if (!fs.rename(tmp, path)) {
-      // bak is now the ONLY live copy — roll it back before any delete
-      if (!fs.rename(bak, path))
-        throw new java.io.IOException(s"swap failed AND rollback failed; live data is at $bak")
-      fs.delete(tmp, true)
-      throw new java.io.IOException(s"swap: rename $tmp -> $path failed; original restored")
+    if (fs.exists(bak)) {
+      if (fs.exists(live)) fs.delete(bak, true)
+      else if (!writerInFlight && !fs.rename(bak, live))
+        throw new java.io.IOException(s"swap heal: cannot restore $bak -> $live")
     }
-    fs.delete(bak, true): Unit
+    leftover.foreach(t => if (fs.exists(t)) fs.delete(t, true))
   }
 
   /** Small-file compaction: rewrite a parquet directory into
@@ -133,7 +145,7 @@ object Storage {
     val fs = FileSystem.get(path.toUri, spark.sparkContext.hadoopConfiguration)
     val tmp = new Path(path.getParent, s".${path.getName}_compacting")
     val bak = new Path(path.getParent, s".${path.getName}_old")
-    recoverStaleSwap(fs, path, tmp, bak)
+    heal(fs, path, bak, leftover = Some(tmp))
     val total = fs.listStatus(path).filter(_.isFile)
       .filterNot(_.getPath.getName.startsWith(".")).map(_.getLen).sum
     val n = math.max(1, math.ceil(total.toDouble / targetBytes).toInt)
@@ -143,7 +155,7 @@ object Storage {
       else df.repartitionByRange(n, sortCols.map(col): _*)
         .sortWithinPartitions(sortCols.map(col): _*)
     out.write.mode("overwrite").parquet(tmp.toString)
-    guardedSwap(fs, path, tmp, bak)
+    swap(fs, path, tmp, bak, present = true)
     n
   }
 }
@@ -152,8 +164,8 @@ object Storage {
   * reference's upsert sink (/root/reference/data_pipeline.py:501-535) as an
   * actual lake operation, not just q14's pure-query semantics. Delta or
   * Iceberg would be the idiomatic transactional answer; the offline build
-  * carries no such dependency, so the guarded write-then-swap protocol
-  * from [[Storage.compact]] is the available equivalent.
+  * carries no such dependency, so the staged rename-aside
+  * [[Storage.swap]] is the available equivalent.
   */
 object Lake {
 
@@ -164,7 +176,7 @@ object Lake {
   /** Upsert `updates` into the lake at `dir` (layout `dir/part=value/`):
     * per affected partition, rows are resolved by `keyCol` (update wins,
     * new keys insert) and the partition directory is rewritten through a
-    * temp dir + guarded swap, so readers never observe a half-written
+    * temp dir + [[Storage.swap]], so readers never observe a half-written
     * partition and a crashed run is recovered on the next apply.
     *
     * Scale contract: the unit of work is O(affected partitions) — only
@@ -201,7 +213,7 @@ object Lake {
       val live = new Path(base, s"$partCol=$p")
       val tmp = new Path(base, s".$partCol=$p.merging")
       val bak = new Path(base, s".$partCol=$p.old")
-      Storage.recoverStaleSwap(fs, live, tmp, bak)
+      Storage.heal(fs, live, bak, leftover = Some(tmp))
       val upd = updates.filter(col(partCol) === p).drop(partCol)
       val merged =
         if (fs.exists(live)) {
@@ -210,9 +222,8 @@ object Lake {
             old.join(upd.select(col(keyCol)), Seq(keyCol), "left_anti"))
         } else upd
       merged.write.mode("overwrite").parquet(tmp.toString)
-      if (fs.exists(live)) Storage.guardedSwap(fs, live, tmp, bak)
-      else if (!fs.rename(tmp, live))
-        throw new java.io.IOException(s"mergeUpsert: cannot create partition $live")
+      // no race is benign here: another writer's partition would lose this merge
+      Storage.swap(fs, live, tmp, bak, fs.exists(live))
     }
     // Partition merges are independent (disjoint directories, disjoint
     // update slices), so run them concurrently from driver threads: the

@@ -168,16 +168,15 @@ object Snapshots {
     commitFileList(s, dir, files, appendBase = append, meta = meta)
   }
 
-  /** Stage `df` as a data segment (optionally value-routed, with file
-    * stats and/or bloom sidecars) and return the part-file paths. */
+  /** Stage `df` as an immutable segment under `data/<prefix>_<tag>`
+    * (optionally value-routed, with file stats and/or bloom sidecars) and
+    * return the part-file paths. Invisible until a manifest names them. */
   private def stageData(df: DataFrame, dir: String, statsCols: Seq[String],
                         routeBy: Option[String],
                         bloomCols: Seq[String] = Seq.empty,
-                        bloomFpp: Double = 0.01): Seq[String] = {
+                        bloomFpp: Double = 0.01, prefix: String = "seg"): Seq[String] = {
     val s = df.sparkSession
-    val tag = java.lang.management.ManagementFactory.getRuntimeMXBean.getName
-      .replaceAll("[^A-Za-z0-9]", "") + "_" + System.nanoTime()
-    val seg = new Path(dir, s"data/seg_$tag")
+    val seg = new Path(dir, s"data/${prefix}_${IndexStore.stagingTag}")
     val fs = fsOf(s, seg)
     routeBy match {
       case Some(c) =>
@@ -338,18 +337,9 @@ object Snapshots {
       }.reduce(_.unionByName(_, allowMissingColumns = mergeSchema))
   }
 
-  /** Stage a frame as an immutable segment under `data/<prefix>_<tag>` and
-    * return its part-file paths. Invisible until a manifest names them. */
-  private def stageSegment(df: DataFrame, dir: String, prefix: String): Seq[String] = {
-    val s = df.sparkSession
-    val tag = java.lang.management.ManagementFactory.getRuntimeMXBean.getName
-      .replaceAll("[^A-Za-z0-9]", "") + "_" + System.nanoTime()
-    val seg = new Path(dir, s"data/${prefix}_$tag")
-    df.write.parquet(seg.toString)
-    fsOf(s, seg).listStatus(seg)
-      .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
-      .map(_.getPath.toString).sorted.toSeq
-  }
+  /** A plain flat segment: [[stageData]] without routing or sidecars. */
+  private def stageSegment(df: DataFrame, dir: String, prefix: String): Seq[String] =
+    stageData(df, dir, Nil, None, prefix = prefix)
 
   /** Commit an equality-delete: rows whose values on ALL of `keys`'
     * columns match any key row disappear from reads at the returned

@@ -57,7 +57,8 @@ object StreamOps extends QueryModule {
         val parts = fs.globStatus(new org.apache.hadoop.fs.Path(s"$tmp/part-*.parquet"))
         require(parts != null && parts.nonEmpty, s"no part file staged for $name")
         val dest = new org.apache.hadoop.fs.Path(s"$sd/$name.parquet")
-        fs.rename(parts(0).getPath, dest)
+        if (!fs.rename(parts(0).getPath, dest))
+          throw new java.io.IOException(s"cannot stage ${parts(0).getPath} as $dest")
         fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
         fs.setTimes(dest, 1000000000000L + i * 600000L, -1)
       }

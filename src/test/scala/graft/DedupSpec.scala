@@ -357,10 +357,24 @@ class DedupSpec extends AnyFunSuite {
     // compaction restores fresh-build invariants: the double-refresh left
     // duplicate digest/sig rows; after compactIndex each table is unique
     // again, bands are globally re-capped, and decisions are unchanged
+    // a takedown-ready store also holds `keys` and a bloom sidecar beside
+    // the screen's own tables: compaction must carry both through
+    val store = graft.sources.IndexStore
+    store.replaceTable(s, idxPath, "keys",
+      literalCorpus(s).select(md5(col("text")).as("tkey"), col("doc_id")))
+    Dedup.TextScreen.persistBloom(s, idxPath)
+    def keyRows() = store.read(s, idxPath, "keys").collect().map(_.toString).sorted.toSeq
+    val (namesBefore, keysBefore) = (store.tableNames(s, idxPath), keyRows())
+    assert(namesBefore == Seq("bands", "bloom", "digests", "keys", "sigs"), namesBefore.toString)
     val pre = Dedup.loadIndex(s, idxPath)
     assert(pre.sigs.groupBy("doc_id").count().filter(col("count") > 1).count() > 0,
       "double-refresh must have left duplicate signature rows (test premise)")
     Dedup.TextScreen.compact(s, idxPath)
+    assert(store.tableNames(s, idxPath) == namesBefore, "compaction must keep every stored table")
+    assert(keyRows() == keysBefore, "compaction must carry the keys rows through unchanged")
+    val bf = store.loadBloom(s, idxPath)
+    assert(store.read(s, idxPath, "digests").collect().forall(r => bf.mightContainString(r.getString(0))),
+      "the carried bloom must still cover every compacted digest")
     val post = Dedup.loadIndex(s, idxPath)
     assert(post.sigs.count() == post.sigs.select("doc_id").distinct().count(),
       "compacted signatures must be unique per doc")

@@ -192,6 +192,23 @@ class IngestSpec extends AnyFunSuite {
     // idempotence: applying the same batch again changes nothing
     Lake.mergeUpsert(s, lake, upd, "k", "part")
     assert(snapshot() == once)
+    // crash windows of the partition swap (aside copy `.part=p0.old`).
+    // Mid-swap: only the aside copy exists — the next call restores it
+    // and lands the old data plus the update
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI("file:///"), s.sparkContext.hadoopConfiguration)
+    val p0 = new org.apache.hadoop.fs.Path(s"$lake/part=p0")
+    val p0bak = new org.apache.hadoop.fs.Path(s"$lake/.part=p0.old")
+    assert(fs.rename(p0, p0bak), "test setup: open the mid-swap window")
+    val upd2 = Seq((1004L, 4.0, "p0")).toDF("k", "v", "part")
+    assert(Lake.mergeUpsert(s, lake, upd2, "k", "part") == 1)
+    val twice = snapshot()
+    assert(twice == once + ((1004L, 4.0, "p0")), "mid-swap: old p0 rows plus the update")
+    assert(!fs.exists(p0bak), "the heal must consume the aside copy")
+    // post-swap: a stale aside copy beside live is dropped, live wins
+    Seq((9999L, 0.0)).toDF("k", "v").write.parquet(p0bak.toString)
+    Lake.mergeUpsert(s, lake, upd2, "k", "part")
+    assert(snapshot() == twice && !fs.exists(p0bak), "post-swap: stale aside dropped, live wins")
   }
 
   test("notification gate: action runs only if start notification succeeds (C5)") {
@@ -739,5 +756,42 @@ class IngestSpec extends AnyFunSuite {
     val roll2 = graft.sources.SketchStore.rollup(s, store)
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getBoolean(3))).toMap
     assert(roll2 == roll)
+    // crash windows of the scope swap (aside copy `.scope=B.old`) and of
+    // the staged build (whole-store aside copy `.store_old`)
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI("file:///"), s.sparkContext.hadoopConfiguration)
+    def rolled() = graft.sources.SketchStore.rollup(s, store)
+      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getBoolean(3))).toMap
+    val b = new org.apache.hadoop.fs.Path(s"$store/scope=B")
+    val bBak = new org.apache.hadoop.fs.Path(s"$store/.scope=B.old")
+    val bSlice = (10 to 18).map(k => ("B", k.toLong)).toDF("scope", "k")
+    // mid-swap: only the aside copy of B exists — the next refresh heals
+    // it first and lands the update; A and C are untouched
+    assert(fs.rename(b, bBak), "test setup: open the scope mid-swap window")
+    graft.sources.SketchStore.refresh(bSlice, store, "scope", "k")
+    val roll3 = rolled()
+    assert(roll3("B") == ((9L, 9L, true)) && roll3("A") == roll("A") && roll3("C") == roll("C"))
+    assert(scopeState("A") == a0 && scopeState("C") == c0, "unchanged scopes stay untouched")
+    assert(!fs.exists(bBak), "the heal must consume the aside copy")
+    // post-swap: a stale aside copy beside live B is dropped, live wins
+    Seq(1L).toDF("k").write.parquet(bBak.toString)
+    graft.sources.SketchStore.refresh(bSlice, store, "scope", "k")
+    assert(rolled() == roll3 && !fs.exists(bBak), "post-swap: stale aside dropped, live wins")
+    // the build stages and swaps the whole store. Mid-swap: only the
+    // aside store exists — the stamp gate heals it and the old blobs serve
+    val live = new org.apache.hadoop.fs.Path(store)
+    val storeBak = new org.apache.hadoop.fs.Path(s"$base/.store_old")
+    assert(fs.rename(live, storeBak), "test setup: open the build mid-swap window")
+    assert(graft.sources.IndexStore.isCurrent(s, store, "manual"), "mid-swap: the old store heals")
+    assert(rolled() == roll3 && !fs.exists(storeBak))
+    // a rebuild lands whole and leaves no aside copy; a stale aside copy
+    // beside it (post-swap) is dropped at the gate, live wins
+    graft.sources.SketchStore.build(fact, store, "scope", "k", "v2")
+    val roll4 = rolled()
+    assert(roll4("B") == ((4L, 4L, true)) && roll4("global") == ((5L, 11L, true)))
+    assert(!fs.exists(storeBak))
+    Seq(1L).toDF("k").write.parquet(storeBak.toString)
+    assert(graft.sources.IndexStore.isCurrent(s, store, "v2"), "post-swap: live wins")
+    assert(rolled() == roll4 && !fs.exists(storeBak), "post-swap: stale aside dropped")
   }
 }
