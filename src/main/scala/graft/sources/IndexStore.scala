@@ -77,7 +77,8 @@ object IndexStore {
 
   /** The whole-store swap's names, beside the store: the aside copy
     * `.<name>_old`, and the tag-unique staging dirs of [[write]]
-    * (`_building_`) and [[copy]] (`_copying_`). A FRESH staging dir marks
+    * (`_building_`, as [[replaceTable]] stages a table inside the store)
+    * and [[copy]] (`_copying_`). A FRESH staging dir marks
     * a writer in flight, so the heal leaves the aside copy alone until it
     * ages past [[SwapInFlightMs]] (ADVICE r16): the bounded-staleness
     * trade of recognizing liveness from the filesystem alone. Beyond it
@@ -88,7 +89,7 @@ object IndexStore {
   private val Building = "_building_"
   private val Copying = "_copying_"
   private def storeBak(live: Path): Path = new Path(live.getParent, s".${live.getName}_old")
-  private def storeStaging(live: Path, kind: String): Path =
+  private def staging(live: Path, kind: String): Path =
     new Path(live.getParent, s".${live.getName}$kind$stagingTag")
   private def healStore(s: SparkSession, path: String): Unit = {
     val live = new Path(path)
@@ -258,7 +259,7 @@ object IndexStore {
     val live = new Path(path)
     val fs = fsOf(s, live)
     healStore(s, path)
-    val tmp = storeStaging(live, Building)
+    val tmp = staging(live, Building)
     stage(tmp)
     writeStamp(s, tmp.toString, stamp, meta)
     try Storage.swap(fs, live, tmp, storeBak(live), fs.exists(live))
@@ -287,7 +288,7 @@ object IndexStore {
     val dst = new Path(to)
     val fs = fsOf(s, src)
     healStore(s, to)
-    val tmp = storeStaging(dst, Copying)
+    val tmp = staging(dst, Copying)
     if (!org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, tmp, false,
         s.sparkContext.hadoopConfiguration)) {
       fs.delete(tmp, true)
@@ -975,7 +976,7 @@ object IndexStore {
     val live = new Path(new Path(path), table)
     val fs = fsOf(s, live)
     healTable(s, path, table)
-    val tmp = new Path(new Path(path), s".$table$Building$stagingTag")
+    val tmp = staging(live, Building)
     df.write.mode("overwrite").parquet(tmp.toString)
     val present = fs.exists(live)
     try Storage.swap(fs, live, tmp, tableBak(live), present)

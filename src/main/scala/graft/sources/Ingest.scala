@@ -215,15 +215,16 @@ object Lake {
       val bak = new Path(base, s".$partCol=$p.old")
       Storage.heal(fs, live, bak, leftover = Some(tmp))
       val upd = updates.filter(col(partCol) === p).drop(partCol)
+      val present = fs.exists(live)
       val merged =
-        if (fs.exists(live)) {
+        if (present) {
           val old = graft.Engine.parquet(spark, Seq(live.toString))
           upd.unionByName(
             old.join(upd.select(col(keyCol)), Seq(keyCol), "left_anti"))
         } else upd
       merged.write.mode("overwrite").parquet(tmp.toString)
       // no race is benign here: another writer's partition would lose this merge
-      Storage.swap(fs, live, tmp, bak, fs.exists(live))
+      Storage.swap(fs, live, tmp, bak, present)
     }
     // Partition merges are independent (disjoint directories, disjoint
     // update slices), so run them concurrently from driver threads: the
